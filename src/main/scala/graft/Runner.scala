@@ -15,12 +15,13 @@ import graft.sinks.{CopyEndpoint, CopySink}
   * session-setup statements and must apply them on every connection they
   * open (the reference applies its GUC list when opening each pgconn).
   *
-  * @param executeDdl  target DDL hook, (sql, sessionSetup) (JDBC in
-  *   production: `JdbcSource.ddlExecutor(url, props)`; a recorder in
-  *   tests)
-  * @param endpointFactory COPY endpoint per partition, given
-  *   (targetTable, sessionSetup) (PgCopyEndpoint / JdbcInsertEndpoint /
-  *   test doubles)
+  * @param executeDdl  target DDL hook, (sql, sessionSetup) (the CLI
+  *   passes a pooled wire-protocol [[graft.sinks.PgWireDdlExecutor]];
+  *   a recorder in tests)
+  * @param endpointFactory COPY endpoint per partition, given (COPY
+  *   target — the quoted table plus any column list — and
+  *   sessionSetup) ([[graft.sinks.PgWireCopyEndpoint]] in the CLI,
+  *   [[graft.sinks.JdbcInsertEndpoint]], or test doubles)
   * @param rejectRoot when set, each table's rejected rows land under
   *   `<root>/<table>.dat/` (the reference's root-dir/<table>.dat) and
   *   CSV parse rejects are counted into the stats — the parse-reject
@@ -173,14 +174,12 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
               case (Some(s), Some(tn)) => s"$s.$tn"
               case (_, tn) => tn.getOrElse("data")
             }
-            load(table, df, copySessionSql,
-              // the SUB-command's own lists decide the COPY column
-              // list (census-places: quoted "LocationName" must reach
-              // the server as written)
-              nameColumns = sc.fields.nonEmpty || sc.targetColumns.nonEmpty,
-              exactlyOnce = cmd.boolOption("exactly once"),
-              onErrorStop = cmd.boolOption("on error stop"),
-              batchRows = batchRowsOf(cmd), batchBytes = batchBytesOf(cmd))
+            // the SUB-command's own lists decide the COPY column list
+            // (census-places: quoted "LocationName" must reach the
+            // server as written), and its own WITH clause the sink
+            // options — the outer archive command parses none
+            load(table, df, copySessionSql, sc,
+              nameColumns = sc.fields.nonEmpty || sc.targetColumns.nonEmpty)
         }
       case "database" => runDatabase(sparkF, cmd)
       case _ =>
@@ -251,17 +250,13 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
               !cmd.boolOption("drop no indexes"))
             dropTargetIndexes(table, gucSql)
           else Nil
-        val stats = Seq(load(table, df, copySessionSql, parseRejects,
+        val stats = Seq(load(table, df, copySessionSql, cmd, parseRejects,
           nameColumns = cmd.fields.nonEmpty ||
             cmd.targetColumns.nonEmpty,
-          exactlyOnce = cmd.boolOption("exactly once"),
-          binary = cmd.option("copy binary"),
           fileNameCase = idModeOf(cmd),
           rawFileNames =
             try fileRawNames(spark, cmd, baseDir)
-            catch { case scala.util.control.NonFatal(_) => None },
-          onErrorStop = cmd.boolOption("on error stop"),
-          batchRows = batchRowsOf(cmd), batchBytes = batchBytesOf(cmd)))
+            catch { case scala.util.control.NonFatal(_) => None }))
         rebuildIndexesAsync(table, droppedIdx, gucSql,
           cmd.intOption("max parallel create index").getOrElse(0))
         stats
@@ -490,26 +485,6 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
     }
   }
 
-  /** `WITH copy binary`: resolve each frame column's target type from
-    * the TARGET catalog and map it to a binary encoder
-    * ([[graft.sinks.PgBinary.kindOf]]). None → the load falls back to
-    * COPY TEXT, with a stderr note naming the first unsupported
-    * column — the option is a performance hint, not a new failure
-    * mode. `named` loads map frame columns to attributes under the
-    * SAME folding the COPY column list is rendered with
-    * (`PgWire.copyTarget`): user-written names (`preserveCase`) match
-    * the attribute exactly, file-schema names match lowercased — a
-    * mixed lookup could resolve kinds from a DIFFERENT column than the
-    * COPY list targets. Positional loads require the frame to cover
-    * the table's full column list in attnum order, exactly like a
-    * list-less COPY statement. */
-  /** Target column names COPY may write (generated ones recompute
-    * server-side) and whether any column IS generated. */
-  private def copyColsOf(t: graft.catalog.Table): (Seq[String], Boolean) = {
-    val ng = t.columns.filter(_.generated.isEmpty).map(_.name)
-    (ng, ng.length != t.columns.length)
-  }
-
   /** `WITH copy binary` cannot positional-match a table with generated
     * columns (the COPY needs an explicit column list) — note the
     * documented text fallback once per table. */
@@ -527,10 +502,19 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
         (graft.sinks.PgWire.quoteIdent(f.name), f.name))
     else Nil
 
-  private def binaryKinds(table: String, cols: Seq[String],
-                          named: Boolean,
-                          preserveCase: Boolean,
-                          mode: Option[String])
+  /** `WITH copy binary`: resolve each frame column's target type from
+    * the TARGET catalog and map it to a binary encoder
+    * ([[graft.sinks.PgBinary.kindOf]]). None → the load falls back to
+    * COPY TEXT, with a stderr note naming the first unsupported
+    * column — the option is a performance hint, not a new failure
+    * mode. A COPY column list maps frame columns to attributes by the
+    * exact spelling `PgWire.copyTarget` sends — any other folding
+    * could resolve kinds from a DIFFERENT column than the COPY list
+    * targets. Positional loads (no list) require the frame's `width`
+    * columns to cover the table's full column list in attnum order,
+    * exactly like a list-less COPY statement. */
+  private def binaryKinds(table: String, copyCols: Seq[String],
+                          width: Int, mode: Option[String])
       : Option[Seq[graft.sinks.PgBinKind]] = {
     if (mode.isEmpty) return None
     require(queryTarget != null,
@@ -559,17 +543,13 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
     if (attrs.isEmpty) return note("target table not found in catalog")
     val byName = attrs.map(r => r(0) -> r).toMap
     val typnames: Seq[Option[(String, Array[String])]] =
-      if (named)
-        cols.map { c =>
-          val key = if (preserveCase) c else c.toLowerCase
-          byName.get(key).map(t => (c, t))
-        }
-      else if (attrs.length == cols.length)
+      if (copyCols.nonEmpty) copyCols.map(c => byName.get(c).map(t => (c, t)))
+      else if (attrs.length == width)
         attrs.toSeq.map(r => Some((r(0), r)))
-      else return note(s"positional load of ${cols.length} columns " +
+      else return note(s"positional load of $width columns " +
         s"into a ${attrs.length}-column table")
     if (typnames.exists(_.isEmpty)) {
-      val missing = cols(typnames.indexWhere(_.isEmpty))
+      val missing = copyCols(typnames.indexWhere(_.isEmpty))
       return note(s"column $missing not found on target")
     }
     // enum columns encode as TEXT payloads (enum_recv reads the label
@@ -1263,162 +1243,32 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
       val migrator = new graft.orchestration.Migrator(
         executeDdl = executeDdl,
         loadTable = (t, setup) => {
-          // small-table fast path: stream the table driver-side through
-          // the same batch/reject/endpoint machinery (LocalCopy) —
-          // skips the per-table Spark job entirely. Backfilled tables
-          // need the join dataflow, views have no relpages signal, and
-          // exactly-once keeps the staged task-attempt machinery: all
-          // three stay on the distributed path.
-          val local =
-            if (backfill.contains(t.sourceName.toLowerCase) ||
-                viewKeys((t.sourceSchemaName, t.sourceName)) ||
-                cmd.boolOption("exactly once")) None
-            else localScan(t)
-          if (local.isDefined) {
-            val (cols, rows, close) = local.get()
-            try {
-              val qualified = graft.sinks.PgWire.joinQualified(t.schema, t.name)
-              val (genCols, hasGen) = copyColsOf(t)
-              val kinds =
-                if (hasGen) {
-                  binaryGeneratedFallback(qualified,
-                    cmd.option("copy binary"))
-                  None
-                } else binaryKinds(qualified, cols,
-                  named = false, preserveCase = false,
-                  mode = cmd.option("copy binary"))
-              val ef = kinds match {
-                case Some(_) => binaryEndpointFactory
-                case None => endpointFactory
-              }
-              val copyTgt =
-                if (hasGen)
-                  graft.sinks.PgWire.copyTarget(
-                    graft.sinks.PgWire.quoteQualified(qualified), genCols)
-                else qualified
-              graft.sinks.LocalCopy.write(rows,
-                endpointFactory = ef(copyTgt, setup),
-                render = kinds.map(graft.sinks.LocalCopy.binaryRender)
-                  .getOrElse(graft.sinks.LocalCopy.textRender),
-                rejectDir = rejectRoot.map(r => s"$r/${t.name}.dat"),
-                rejectRender = kinds.map(k =>
-                  graft.sinks.PgBinary.frameToTextLine(_: Array[Byte], k))
-                  .orNull,
-                maxRows = batchRowsOf(cmd),
-                maxBytes = batchBytesOf(cmd),
-                onErrorStop = cmd.boolOption("on error stop"))
-            } finally close()
-          } else {
-          val df = backfill.get(t.sourceName.toLowerCase) match {
-            case Some(rule) =>
-              val chain = rule.table +: rule.from
-              val frames = chain.map { n =>
-                val ct = tables.find(_.name.equalsIgnoreCase(n)).getOrElse(
-                  throw new IllegalArgumentException(
-                    s"DISTRIBUTE rule references unknown table $n"))
-                n -> readTable(ct, viewKeys((ct.sourceSchemaName, ct.sourceName)))
-              }.toMap
-              graft.operators.Citus.backfillJoin(sourceCat, rule, frames)
-            case None => readTable(t, viewKeys((t.sourceSchemaName, t.sourceName)))
-          }
-          if (cmd.boolOption("exactly once")) {
-            // staged publish per table — same wrapper as file loads;
-            // the migrated table is positional (created in frame
-            // order). Locals only in endpointFor (see load()).
-            // Generated columns: the stage (LIKE target) carries them
-            // as PLAIN columns (LIKE copies no generation exprs), the
-            // COPY and the publish INSERT both list only the real
-            // columns, and the target recomputes at publish time.
-            val (genCols, hasGen) = copyColsOf(t)
-            val kinds =
-              if (hasGen) {
-                binaryGeneratedFallback(
-                  graft.sinks.PgWire.joinQualified(t.schema, t.name),
-                  cmd.option("copy binary"))
-                None
-              } else binaryKinds(
-                graft.sinks.PgWire.joinQualified(t.schema, t.name),
-                df.columns.toSeq, named = false, preserveCase = false,
-                mode = cmd.option("copy binary"))
-            val ef = kinds match {
-              case Some(_) => binaryEndpointFactory
-              case None => endpointFactory
-            }
-            val colList =
-              genCols.map(graft.sinks.PgWire.quoteIdent).mkString(", ")
-            graft.sinks.ExactlyOnce.write(df,
-              graft.sinks.PgWire.joinQualified(t.schema, t.name),
-              exec = sql => executeDdl(sql, setup),
-              endpointFor = (stage, stageSetup, pid) => ef(
-                if (hasGen) graft.sinks.PgWire.copyTarget(
-                  graft.sinks.PgWire.quoteQualified(stage), genCols)
-                else graft.sinks.PgWire.quoteQualified(stage),
-                setup ++ stageSetup)(pid),
-              publishSql =
-                if (!hasGen) null
-                else (stage, target) =>
-                  s"INSERT INTO ${graft.sinks.PgWire.quoteQualified(target)} " +
-                    s"($colList) SELECT $colList FROM " +
-                    s"${graft.sinks.PgWire.quoteQualified(stage)};",
-              // the default stage (LIKE target) copies NOT NULL but not
-              // generation expressions: a NOT NULL generated column
-              // would reject the stage COPY's implicit NULL. Stage only
-              // the real columns instead — the publish recomputes.
-              createStageSql =
-                if (!hasGen) null
-                else (stage, target) =>
-                  s"CREATE TABLE IF NOT EXISTS " +
-                    s"${graft.sinks.PgWire.quoteQualified(stage)} AS " +
-                    s"SELECT $colList FROM " +
-                    s"${graft.sinks.PgWire.quoteQualified(target)} " +
-                    "WITH NO DATA;",
-              quote = graft.sinks.PgWire.quoteQualified,
-              renderer = kinds.map(graft.sinks.PgBinary.renderer)
-                .getOrElse(graft.sinks.CopySink.textRenderer),
-              maxRows = batchRowsOf(cmd), maxBytes = batchBytesOf(cmd),
-              onErrorStop = cmd.boolOption("on error stop"),
-              rejectDir = rejectRoot.map(r => s"$r/${t.name}.dat"),
-              rejectRender = kinds.map(k =>
-                graft.sinks.PgBinary.frameToTextLine(_: Array[Byte], k))
-                .orNull)
-          } else {
-            // `WITH copy binary` on database loads: positional frames
-            // in created-column order, types resolved per table from
-            // the TARGET catalog (the Migrator's DDL ran already) —
-            // unsupported types fall back to COPY TEXT table-by-table
-            val qualified = graft.sinks.PgWire.joinQualified(t.schema, t.name)
-            val (genCols, hasGen) = copyColsOf(t)
-            val copyTgt =
-              if (hasGen)
-                graft.sinks.PgWire.copyTarget(
-                  graft.sinks.PgWire.quoteQualified(qualified), genCols)
-              else qualified
-            val sink = (if (hasGen) {
-              binaryGeneratedFallback(qualified,
-                cmd.option("copy binary"))
-              None
-            } else binaryKinds(qualified, df.columns.toSeq,
-              named = false, preserveCase = false,
-              mode = cmd.option("copy binary"))) match {
-              case Some(kinds) => new CopySink(
-                endpointFactory = binaryEndpointFactory(qualified, setup),
-                maxRows = batchRowsOf(cmd),
-                maxBytes = batchBytesOf(cmd),
-                onErrorStop = cmd.boolOption("on error stop"),
-                rejectDir = rejectRoot.map(r => s"$r/${t.name}.dat"),
-                renderer = graft.sinks.PgBinary.renderer(kinds),
-                rejectRender =
-                  graft.sinks.PgBinary.frameToTextLine(_, kinds))
-              case None => new CopySink(
-                endpointFactory = endpointFactory(copyTgt, setup),
-                maxRows = batchRowsOf(cmd),
-                maxBytes = batchBytesOf(cmd),
-                onErrorStop = cmd.boolOption("on error stop"),
-                rejectDir = rejectRoot.map(r => s"$r/${t.name}.dat"))
-            }
-            sink.write(df)
-          }
-          }
+          val isView = viewKeys((t.sourceSchemaName, t.sourceName))
+          val rule = backfill.get(t.sourceName.toLowerCase)
+          // generated columns recompute server-side: COPY lists the
+          // others (the migrated table is otherwise positional,
+          // created in frame order)
+          val hasGen = t.columns.exists(_.generated.isDefined)
+          writeTable(graft.sinks.PgWire.joinQualified(t.schema, t.name),
+            if (hasGen) t.columns.filter(_.generated.isEmpty).map(_.name)
+            else Nil,
+            generated = hasGen,
+            // backfilled tables need the join dataflow and views have
+            // no relpages signal: both stay on the distributed read
+            local = if (rule.isDefined || isView) None else localScan(t),
+            df = rule match {
+              case Some(rule) =>
+                val chain = rule.table +: rule.from
+                val frames = chain.map { n =>
+                  val ct = tables.find(_.name.equalsIgnoreCase(n)).getOrElse(
+                    throw new IllegalArgumentException(
+                      s"DISTRIBUTE rule references unknown table $n"))
+                  n -> readTable(ct, viewKeys((ct.sourceSchemaName, ct.sourceName)))
+                }.toMap
+                graft.operators.Citus.backfillJoin(sourceCat, rule, frames)
+              case None => readTable(t, isView)
+            },
+            sessionSql = setup, rejectName = t.name, cmd = cmd)
         },
         workers = cmd.intOption("workers")
           .orElse(cmd.intOption("concurrency")).getOrElse(4),
@@ -1476,10 +1326,12 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
 
   private def load(table: String, df: org.apache.spark.sql.DataFrame,
                    sessionSql: Seq[String],
+                   /** the command whose WITH clause sets the sink
+                     * options (an archive's sub-command, not the
+                     * archive itself) */
+                   cmd: Ast.LoadCommand,
                    parseRejects: Long = 0L,
                    nameColumns: Boolean = false,
-                   exactlyOnce: Boolean = false,
-                   binary: Option[String] = None,
                    /** casing for FILE-DERIVED column names (DBF/IXF
                      * descriptors) — user-written names stay as
                      * written; Downcase = the historical fold. */
@@ -1487,15 +1339,7 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
                      graft.catalog.Identifiers.Case.Downcase,
                    /** RAW descriptor spellings (DBF/IXF) — the casing
                      * basis; None = case the frame's column names. */
-                   rawFileNames: Option[Seq[String]] = None,
-                   /** `WITH on error stop` (params.lisp:83
-                     * *on-error-stop*, default off = resume next):
-                     * the first erroneous row aborts the load instead
-                     * of filing a reject. */
-                   onErrorStop: Boolean = false,
-                   /** `WITH batch rows / batch size` sink caps. */
-                   batchRows: Int = 25000,
-                   batchBytes: Long = 20L << 20): TableStats = {
+                   rawFileNames: Option[Seq[String]] = None): TableStats = {
     val t0 = System.nanoTime()
     // loads with REAL column names — an explicit field/column list, or
     // csv-header-derived names — send a COPY column list: the user's
@@ -1512,80 +1356,14 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
     // header): quoted as-written. File-schema names (DBF/IXF) case by
     // the command's identifier mode, matching the DDL that created
     // the table (fileSchemaDdl uses the same function).
-    val casedCols: Seq[String] =
+    val copyCols: Seq[String] =
       if (nameColumns) df.columns.toSeq
+      else if (synthetic) Nil
       else rawFileNames.getOrElse(df.columns.toSeq)
         .map(graft.catalog.Identifiers(_, fileNameCase))
-    val target =
-      if (nameColumns || !synthetic)
-        graft.sinks.PgWire.copyTarget(table, casedCols,
-          preserveCase = true)
-      else graft.sinks.PgWire.quoteQualified(table)
-    // `WITH copy binary`: resolve the target's column encoders once;
-    // both the direct and the exactly-once staged path use them (the
-    // stage clones the target's layout)
-    val binKinds = binaryKinds(table, casedCols,
-      named = nameColumns || !synthetic, preserveCase = true,
-      mode = binary)
-    val (sent, rejected, bytes) =
-      if (exactlyOnce) {
-        // `WITH exactly once`: route through the staged-publish wrapper
-        // (per-attempt stage tables + one atomic publish). The stage
-        // clones the target's layout, so a named-column load COPYies
-        // into the stage with the SAME column list; rejected rows get
-        // the same replayable reject files as the direct path (they
-        // never reach a stage, so nothing can double-publish).
-        // the endpointFor closure ships to executors inside the
-        // sink's endpoint factory: capture LOCALS only (field access
-        // would drag the non-serializable Runner; df.columns would
-        // drag the DataFrame)
-        val ef = binKinds match {
-          case Some(_) => binaryEndpointFactory
-          case None => endpointFactory
-        }
-        val ss = sessionSql
-        // the stage clones the TARGET's layout (LIKE), so its COPY
-        // column list must carry the same CASED spellings the target
-        // DDL used — raw df.columns would miss quote-mode names
-        val cols = casedCols
-        val nc = nameColumns
-        val synth = synthetic
-        val stageTargetFor = (stage: String) =>
-          if (nc || !synth)
-            graft.sinks.PgWire.copyTarget(stage, cols,
-              preserveCase = true)
-          else graft.sinks.PgWire.quoteQualified(stage)
-        // stage cleanup: ExactlyOnce's default drop is schema-aware
-        // (filters pg_tables.schemaname, matches the BARE relname,
-        // drops schema-qualified) for both bare and qualified targets
-        graft.sinks.ExactlyOnce.write(df, table,
-          exec = sql => executeDdl(sql, sessionSql),
-          endpointFor = (stage, setup, pid) =>
-            ef(stageTargetFor(stage), ss ++ setup)(pid),
-          quote = graft.sinks.PgWire.quoteQualified,
-          renderer = binKinds.map(graft.sinks.PgBinary.renderer)
-            .getOrElse(graft.sinks.CopySink.textRenderer),
-          maxRows = batchRows, maxBytes = batchBytes,
-          onErrorStop = onErrorStop,
-          rejectDir = rejectRoot.map(r => s"$r/$table.dat"),
-          rejectRender = binKinds.map(k =>
-            graft.sinks.PgBinary.frameToTextLine(_: Array[Byte], k))
-            .orNull)
-      } else binKinds match {
-        case Some(kinds) => new CopySink(
-          endpointFactory = binaryEndpointFactory(target, sessionSql),
-          maxRows = batchRows, maxBytes = batchBytes,
-          onErrorStop = onErrorStop,
-          rejectDir = rejectRoot.map(r => s"$r/$table.dat"),
-          renderer = graft.sinks.PgBinary.renderer(kinds),
-          rejectRender =
-            graft.sinks.PgBinary.frameToTextLine(_, kinds)).write(df)
-        case None => new CopySink(
-          endpointFactory = endpointFactory(target, sessionSql),
-          maxRows = batchRows, maxBytes = batchBytes,
-          onErrorStop = onErrorStop,
-          rejectDir = rejectRoot.map(r => s"$r/$table.dat")).write(df)
-      }
+    val (sent, rejected, bytes) = writeTable(table, copyCols,
+      generated = false, local = None, df = df, sessionSql,
+      rejectName = table, cmd)
     // summary label: a qualified TARGET TABLE already carries its
     // schema — don't prefix "public." on top (public.public.t)
     val (statSchema, statTable) = table.indexOf('.') match {
@@ -1594,6 +1372,106 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
     }
     TableStats(statSchema, statTable, sent, rejected + parseRejects,
       (System.nanoTime() - t0) / 1000000, bytes = bytes)
+  }
+
+  /** Copy one table's rows into PostgreSQL — the one place a table's
+    * sink is chosen, from the command's `copy binary`, `exactly once`,
+    * `on error stop` and `batch rows / batch size` options: the
+    * driver-local [[graft.sinks.LocalCopy]] for a small table's local
+    * scan, the staged [[graft.sinks.ExactlyOnce]] publish, or the
+    * distributed [[CopySink]].
+    *
+    * @param table qualified target: binary type lookup, stage names
+    * @param copyCols COPY column list, user-cased; empty = positional
+    *   (every target column, in attnum order)
+    * @param generated the target has generated columns, which
+    *   `copyCols` leaves out: COPY TEXT only, and exactly-once stages
+    *   and publishes carry `copyCols` only
+    * @param local opens a small table's driver-side scan (columns,
+    *   rows, close); evaluated only when exactly once is off — its
+    *   stages need Spark's task attempts
+    * @param df the distributed rows, built only when no local scan
+    *   applies
+    * @param rejectName rejects land under `<root>/<rejectName>.dat`
+    * @return (sent, rejected, bytes) */
+  private def writeTable(
+      table: String, copyCols: Seq[String], generated: Boolean,
+      local: => Option[() => (Seq[String], Iterator[Array[String]],
+        () => Unit)],
+      df: => org.apache.spark.sql.DataFrame,
+      sessionSql: Seq[String], rejectName: String,
+      cmd: Ast.LoadCommand): (Long, Long, Long) = {
+    import graft.sinks.{ExactlyOnce, LocalCopy, PgBinary, PgWire}
+    val exactlyOnce = cmd.boolOption("exactly once")
+    val onErrorStop = cmd.boolOption("on error stop")
+    val maxRows = batchRowsOf(cmd); val maxBytes = batchBytesOf(cmd)
+    val rejectDir = rejectRoot.map(r => s"$r/$rejectName.dat")
+    val binaryMode = cmd.option("copy binary")
+    // small-table fast path: a local scan streams driver-side through
+    // the sink's own partition loop — no Spark job at all
+    val opened = (if (exactlyOnce) None else local).map(_())
+    try {
+      lazy val frame = df
+      // `WITH copy binary`: the target's column encoders, resolved once
+      // (a positional load's frame must cover the whole table)
+      val kinds =
+        if (generated) { binaryGeneratedFallback(table, binaryMode); None }
+        else binaryKinds(table, copyCols,
+          opened.fold(frame.columns.length)(_._1.length), binaryMode)
+      // closures below ship to executors inside the sink's endpoint
+      // factory: they capture LOCALS only (a field would drag the
+      // non-serializable Runner, df.columns the DataFrame)
+      val ef = if (kinds.isDefined) binaryEndpointFactory else endpointFactory
+      def direct = ef(PgWire.copyTarget(table, copyCols), sessionSql)
+      val rejectRender =
+        kinds.map(k => PgBinary.frameToTextLine(_: Array[Byte], k)).orNull
+      def renderer =
+        kinds.map(PgBinary.renderer).getOrElse(CopySink.textRenderer)
+      opened match {
+        case Some((_, rows, _)) =>
+          LocalCopy.write(rows, direct,
+            render = kinds.map(LocalCopy.binaryRender)
+              .getOrElse(LocalCopy.textRender),
+            rejectDir = rejectDir, rejectRender = rejectRender,
+            maxRows = maxRows, maxBytes = maxBytes,
+            onErrorStop = onErrorStop)
+        case None if exactlyOnce =>
+          // per-attempt stage tables + one atomic publish. The stage
+          // clones the target's layout (LIKE), so it takes the SAME
+          // COPY column list and binary frames; rejected rows get the
+          // same reject files (they never reach a stage, so nothing
+          // can double-publish). With generated columns, LIKE would
+          // copy their NOT NULL but not their expressions: stage and
+          // publish the real columns only — the target recomputes.
+          val colList = copyCols.map(PgWire.quoteIdent).mkString(", ")
+          ExactlyOnce.write(frame, table,
+            exec = sql => executeDdl(sql, sessionSql),
+            endpointFor = (stage, stageSetup, pid) =>
+              ef(PgWire.copyTarget(stage, copyCols),
+                sessionSql ++ stageSetup)(pid),
+            quote = PgWire.quoteQualified,
+            createStageSql =
+              if (!generated) null
+              else (stage, target) =>
+                s"CREATE TABLE IF NOT EXISTS " +
+                  s"${PgWire.quoteQualified(stage)} AS " +
+                  s"SELECT $colList FROM ${PgWire.quoteQualified(target)} " +
+                  "WITH NO DATA;",
+            publishSql =
+              if (!generated) null
+              else (stage, target) =>
+                s"INSERT INTO ${PgWire.quoteQualified(target)} " +
+                  s"($colList) SELECT $colList FROM " +
+                  s"${PgWire.quoteQualified(stage)};",
+            maxRows = maxRows, maxBytes = maxBytes,
+            onErrorStop = onErrorStop, renderer = renderer,
+            rejectDir = rejectDir, rejectRender = rejectRender)
+        case None =>
+          new CopySink(direct, maxRows = maxRows, maxBytes = maxBytes,
+            onErrorStop = onErrorStop, rejectDir = rejectDir,
+            renderer = renderer, rejectRender = rejectRender).write(frame)
+      }
+    } finally opened.foreach(_._3())
   }
 }
 

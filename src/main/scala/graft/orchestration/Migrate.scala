@@ -90,12 +90,11 @@ final case class Summary(preDdl: Seq[String], tables: Seq[TableStats],
   * (pgsql/connection.lisp set-session-gucs; core.clj:818-825).
   *
   * @param executeDdl runs one DDL statement on the target, after applying
-  *   the given session-setup statements on the same connection (JDBC in
-  *   production: [[graft.sources.JdbcSource.ddlExecutor]]; a recorder in
-  *   tests)
+  *   the given session-setup statements on the same connection (the
+  *   CLI passes [[graft.sinks.PgWireDdlExecutor]]; a recorder in tests)
   * @param loadTable runs the data copy for one table; the session-setup
   *   statements must reach every endpoint connection the load opens;
-  *   returns (rowsSent, rowsRejected)
+  *   returns (rowsSent, rowsRejected, bytesSent)
   */
 /** @param maxParallelIndexes `WITH max parallel create index = n`;
   *   0 = auto-size the pool to the catalog's max-indexes-per-table

@@ -458,11 +458,7 @@ object Dedup {
     // holds exactly `bands` rows per doc.
     val verifyRows = {
       val filtered =
-        // GRAFT_MINHASH_NO_ENDPOINT_FILTER: measurement control (the
-        // COVERAGE A/B's same-code baseline) and production escape
-        // valve — the gate itself needs no tuning knob
-        if (candArr == null ||
-            sys.env.contains("GRAFT_MINHASH_NO_ENDPOINT_FILTER")) None
+        if (candArr == null) None
         else {
           // gate evaluation must stay cheap in the DENSE (reject) case:
           // a boxed HashSet over the ~2×cap endpoint ids measured

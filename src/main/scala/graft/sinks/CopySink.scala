@@ -14,8 +14,9 @@ final case class CopyError(lineInBatch: Option[Int], message: String)
   extends Exception(message)
 
 /** Where formatted COPY rows go. One endpoint per task/partition.
-  * Implementations: PG `CopyManager` (reflective, [[PgCopyEndpoint]]),
-  * plain JDBC batched INSERT, or in-memory test doubles. `send` is
+  * Implementations: the driver-free wire client ([[PgWireCopyEndpoint]],
+  * what the CLI uses), plain JDBC batched INSERT
+  * ([[JdbcInsertEndpoint]]), or in-memory test doubles. `send` is
   * transactional: on [[CopyError]] NONE of the rows were kept. */
 trait CopyEndpoint extends AutoCloseable {
   def send(rows: Seq[Array[Byte]]): Unit
@@ -107,7 +108,7 @@ object BatchRetry {
   *   serializable closure); e.g. opens one PG connection per task.
   * @param onErrorStop fail-fast streaming mode (copy-from-queue.lisp:53-59)
   * @param onPartitionSuccess executor-side hook run after a partition's
-  *   final flush succeeds (before the endpoint closes) — a serializable
+  *   final flush succeeds and its reject files are closed — a serializable
   *   closure, typically adding to an accumulator so the driver learns
   *   which task attempt completed each partition ([[ExactlyOnce]]'s
   *   winner tracking). Result-stage accumulator semantics apply: only
@@ -148,7 +149,7 @@ final class CopySink(
     val bytesSent = spark.sparkContext.longAccumulator("bytesSent")
     val mr = maxRows; val mb = maxBytes; val stop = onErrorStop
     val rDir = rejectDir; val factory = endpointFactory
-    val successHook = onPartitionSuccess
+    val successHook = onPartitionSuccess; val rr = rejectRender
     // rows are rendered by a codegen'd projection to (value, reject):
     // COPY TEXT lines by default (typed PG literals + escaping,
     // newline-terminated, cast to BINARY inside codegen so the task
@@ -161,84 +162,104 @@ final class CopySink(
     val lines = renderer(df)
     lines.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
       val pid = org.apache.spark.TaskContext.getPartitionId()
-      val endpoint = factory(pid)
-      // a plain Writer, NOT PrintWriter: PrintWriter swallows
-      // IOExceptions behind an internal flag, so a disk-full reject
-      // directory would silently lose the replay file while the job
-      // reported N rejected rows as safely captured
-      val rejectWriter = rDir.map { d =>
-        val dir = new java.io.File(d); dir.mkdirs()
-        // explicit UTF-8: rows were decoded from UTF-8 bytes, and the
-        // platform-default charset would silently mangle them ('?')
-        // on a non-UTF-8 host
-        new java.io.BufferedWriter(new java.io.FileWriter(
-          new java.io.File(dir, f"part-$pid%05d.dat"),
-          java.nio.charset.StandardCharsets.UTF_8))
-      }
-      // the reference pairs each reject data file with a .log of the
-      // per-row error messages (state.lisp:55-95 reject-log-file;
-      // reject.clj:33-58 writes msg per rejected row) — replay needs
-      // the .dat, diagnosis needs WHY each row bounced
-      val rejectLogWriter = rDir.map { d =>
-        val dir = new java.io.File(CopySink.logDirFor(d)); dir.mkdirs()
-        new java.io.BufferedWriter(new java.io.FileWriter(
-          new java.io.File(dir, f"part-$pid%05d.log"),
-          java.nio.charset.StandardCharsets.UTF_8))
-      }
-      val rejectFn: (Array[Byte], String) => Unit = (row, msg) => {
-        if (stop) throw CopyError(None, msg)
-        rejectWriter.foreach(w => w.write(new String(row, "UTF-8")))
-        rejectLogWriter.foreach { w =>
-          // one line per rejected row — multi-line server messages
-          // fold so the Nth .log line explains the Nth .dat row
-          w.write(Option(msg).getOrElse("").replace('\n', ' '))
-          w.write("\n")
-        }
-        rejected.add(1)
-      }
-      try {
-        var batch = new Batch(mr, mb, seed = pid)
-        // SERVER-rejected rows reach BatchRetry as the bytes we SENT —
-        // binary tuple frames under the binary renderer. The reject
-        // file must hold replayable COPY TEXT, so those frames pass
-        // through rejectRender (PgBinary.frameToTextLine) first;
-        // encode-failure rejects below already carry text.
-        val rr = rejectRender
-        val sendReject: (Array[Byte], String) => Unit =
-          if (rr == null) rejectFn
-          else (row, msg) => rejectFn(rr(row), msg)
-        def flush(): Unit = if (batch.nonEmpty) {
-          val (s, _) = BatchRetry.sendWithRecovery(
-            endpoint, batch.rows.toIndexedSeq, sendReject)
-          sent.add(s)
-          batch = new Batch(mr, mb, seed = pid)
-        }
-        it.foreach { row =>
-          val line = row.getAs[Array[Byte]](0)
-          if (line == null)
-            // binary-encode failure: the row text is in the reject
-            // column; reject it exactly like a server-refused row
-            rejectFn(row.getAs[Array[Byte]](1),
-              "value does not parse as its target type (COPY BINARY)")
-          else {
-            batch.add(line)
-            bytesSent.add(line.length)
-            if (batch.isFull) flush()
-          }
-        }
-        flush()
-        if (successHook != null) successHook(pid)
-      } finally {
-        rejectWriter.foreach(_.close())
-        rejectLogWriter.foreach(_.close())
-        endpoint.close()
-      }
+      val (s, r, b) = CopySink.writePartition[org.apache.spark.sql.Row](
+        pid, it, _.getAs[Array[Byte]](0), _.getAs[Array[Byte]](1),
+        factory, mr, mb, stop, rDir, rr)
+      sent.add(s); rejected.add(r); bytesSent.add(b)
+      if (successHook != null) successHook(pid)
     }
     (sent.value, rejected.value, bytesSent.value)
   }
 }
 
 object CopySink {
+  /** One partition's COPY — the loop both the distributed sink (per
+    * Spark partition) and [[LocalCopy]] (on the driver, pid 0) run:
+    * rendered rows fill a [[Batch]], each full batch goes through
+    * [[BatchRetry.sendWithRecovery]], and every rejected row lands in
+    * `<rejectDir>/part-<pid>.dat` (replayable COPY TEXT) with its
+    * error message on the same line of `<logDir>/part-<pid>.log`.
+    *
+    * @param value the row's rendered bytes, or null when the renderer
+    *   could not encode it (binary path only) — the row is then
+    *   rejected with its `rejectText` rendering, exactly like a
+    *   server-refused row
+    * @param rejectRender server-rejected SENT bytes → replayable COPY
+    *   TEXT (binary frames need [[PgBinary.frameToTextLine]]; null =
+    *   the sent bytes are already text)
+    * @return (rowsSent, rowsRejected, bytesSent) — bytes = rendered
+    *   payload handed to the endpoint in the active format */
+  private[sinks] def writePartition[R](
+      pid: Int, rows: Iterator[R],
+      value: R => Array[Byte], rejectText: R => Array[Byte],
+      endpointFactory: Int => CopyEndpoint,
+      maxRows: Int, maxBytes: Long, onErrorStop: Boolean,
+      rejectDir: Option[String],
+      rejectRender: Array[Byte] => Array[Byte]): (Long, Long, Long) = {
+    var sent = 0L; var rejected = 0L; var bytes = 0L
+    val endpoint = endpointFactory(pid)
+    // a plain Writer, NOT PrintWriter: PrintWriter swallows
+    // IOExceptions behind an internal flag, so a disk-full reject
+    // directory would silently lose the replay file while the job
+    // reported N rejected rows as safely captured. Explicit UTF-8:
+    // rows were decoded from UTF-8 bytes, and the platform-default
+    // charset would silently mangle them ('?') on a non-UTF-8 host.
+    // The reference pairs each reject data file with a .log of the
+    // per-row error messages (state.lisp:55-95 reject-log-file;
+    // reject.clj:33-58 writes msg per rejected row) — replay needs
+    // the .dat, diagnosis needs WHY each row bounced.
+    def rejectFile(dir: String, ext: String) = {
+      val d = new java.io.File(dir); d.mkdirs()
+      new java.io.BufferedWriter(new java.io.FileWriter(
+        new java.io.File(d, f"part-$pid%05d.$ext"),
+        java.nio.charset.StandardCharsets.UTF_8))
+    }
+    val rejectWriter = rejectDir.map(rejectFile(_, "dat"))
+    val rejectLogWriter = rejectDir.map(d => rejectFile(logDirFor(d), "log"))
+    val rejectFn: (Array[Byte], String) => Unit = (row, msg) => {
+      if (onErrorStop) throw CopyError(None, msg)
+      rejectWriter.foreach(w => w.write(new String(row, "UTF-8")))
+      rejectLogWriter.foreach { w =>
+        // one line per rejected row — multi-line server messages
+        // fold so the Nth .log line explains the Nth .dat row
+        w.write(Option(msg).getOrElse("").replace('\n', ' '))
+        w.write("\n")
+      }
+      rejected += 1
+    }
+    // SERVER-rejected rows reach BatchRetry as the bytes we SENT —
+    // binary tuple frames under the binary renderer; encode-failure
+    // rejects below already carry text
+    val sendReject: (Array[Byte], String) => Unit =
+      if (rejectRender == null) rejectFn
+      else (row, msg) => rejectFn(rejectRender(row), msg)
+    try {
+      var batch = new Batch(maxRows, maxBytes, seed = pid)
+      def flush(): Unit = if (batch.nonEmpty) {
+        sent += BatchRetry.sendWithRecovery(
+          endpoint, batch.rows.toIndexedSeq, sendReject)._1
+        batch = new Batch(maxRows, maxBytes, seed = pid)
+      }
+      rows.foreach { row =>
+        val line = value(row)
+        if (line == null)
+          rejectFn(rejectText(row),
+            "value does not parse as its target type (COPY BINARY)")
+        else {
+          batch.add(line)
+          bytes += line.length
+          if (batch.isFull) flush()
+        }
+      }
+      flush()
+    } finally {
+      rejectWriter.foreach(_.close())
+      rejectLogWriter.foreach(_.close())
+      endpoint.close()
+    }
+    (sent, rejected, bytes)
+  }
+
   /** The .log sibling of a reject data dir — `<root>/<table>.dat` →
     * `<root>/<table>.log` (the reference's reject-log-file naming);
     * a dir without the .dat suffix appends .log. */
@@ -317,52 +338,4 @@ final class JdbcInsertEndpoint(url: String, props: java.util.Properties,
   }
 
   override def close(): Unit = { ps.close(); conn.close() }
-}
-
-/** PostgreSQL COPY endpoint via pgjdbc's CopyManager, loaded reflectively so
-  * the library has no hard dependency on the driver jar
-  * (clojure/src/pgloader/batch.clj:43-70 send-rows! equivalent).
-  */
-final class PgCopyEndpoint(url: String, props: java.util.Properties,
-                           copySql: String,
-                           sessionSetup: Seq[String] = Nil)
-    extends CopyEndpoint {
-  private val conn = java.sql.DriverManager.getConnection(url, props)
-  CopyEndpoint.applySessionSetup(conn, sessionSetup)
-  conn.setAutoCommit(false)
-  private val mgrCls = Class.forName("org.postgresql.copy.CopyManager")
-  private val pgConn = conn.unwrap(
-    Class.forName("org.postgresql.core.BaseConnection")
-      .asInstanceOf[Class[java.sql.Connection]])
-  private val mgr = mgrCls
-    .getConstructor(Class.forName("org.postgresql.core.BaseConnection"))
-    .newInstance(pgConn).asInstanceOf[AnyRef]
-  private val copyIn = mgrCls.getMethod("copyIn", classOf[String],
-    classOf[java.io.InputStream])
-
-  // Anchored to the COPY context line and first-match: the CONTEXT line
-  // quotes the failing row's data, so data containing "line 42" must not
-  // win over PG's own "COPY tbl, line N" position report.
-  private val lineRe = "COPY [^,]+, line (\\d+)".r
-
-  override def send(rows: Seq[Array[Byte]]): Unit = {
-    val bytes = rows.toArray.flatten
-    try {
-      copyIn.invoke(mgr, copySql, new java.io.ByteArrayInputStream(bytes))
-      conn.commit()
-    } catch {
-      case e: Exception =>
-        conn.rollback()
-        val msg = Option(e.getCause).getOrElse(e).getMessage
-        // LAST match: pgjdbc puts the primary error (which may QUOTE
-        // row data containing "COPY t, line N") before the CONTEXT
-        // line — a first-match would blame whatever line number the
-        // bad row's own data happened to mention
-        val line = lineRe.findAllMatchIn(msg).toSeq.lastOption
-          .map(_.group(1).toInt)
-        throw CopyError(line, msg)
-    }
-  }
-
-  override def close(): Unit = conn.close()
 }

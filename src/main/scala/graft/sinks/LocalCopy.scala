@@ -13,17 +13,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * A table whose `pg_class.relpages` is below the single-chunk
   * threshold would run as ONE Spark task anyway — zero parallelism is
   * lost by reading its wire stream on the driver (the Migrator's copy
-  * pool thread, so `workers` small tables still load concurrently) and
-  * feeding the SAME batch machinery the distributed sink uses:
-  * [[Batch]] (row/byte-capped, 0.7–1.3× desync), [[BatchRetry]]
-  * (context-line prefix resend + bisect), the same reject-file
-  * contract (`part-00000.dat`, replayable COPY TEXT), the same
-  * endpoint factories (text or COPY BINARY).
+  * pool thread, so `workers` small tables still load concurrently).
+  * The rows then run through the distributed sink's own partition
+  * loop, [[CopySink.writePartition]], as partition 0: the same
+  * batching, per-row recovery, reject files (`part-00000.dat` and
+  * `.log`) and endpoint factories (text or COPY BINARY).
   *
-  * Rendering is the scalar twin of the sink's codegen renderers and is
-  * kept equal by LocalCopySpec: [[CopyText.formatRow]] is the scalar
-  * spec the codegen `lineColumn` is pinned to (PgLiteralParitySpec),
-  * and the binary path composes the very same
+  * What stays here is rendering, the scalar twin of the sink's codegen
+  * renderers, kept equal by LocalCopySpec: [[CopyText.formatRow]] is
+  * the scalar spec the codegen `lineColumn` is pinned to
+  * (PgLiteralParitySpec), and the binary path composes the very same
   * [[PgBinary.encodeField]] the codegen expression calls.
   */
 object LocalCopy {
@@ -81,16 +80,15 @@ object LocalCopy {
   }
 
   /** Load `rows` through one endpoint on the calling thread — the
-    * driver-side twin of [[CopySink.write]]'s partition body with
-    * partition id 0 (so reject files land as `part-00000.dat`, exactly
-    * where the distributed path would put a single partition's).
+    * sink's partition loop with partition id 0, so reject files land
+    * as `part-00000.dat`, exactly where the distributed path would put
+    * a single partition's.
     *
     * @param rejectRender server-rejected SENT bytes → replayable COPY
     *   TEXT (binary frames need [[PgBinary.frameToTextLine]]; null =
     *   the sent bytes are already text)
     * @return (rowsSent, rowsRejected, bytesSent) — same accounting as
-    *   the distributed sink (bytes = rendered payload handed to the
-    *   endpoint in the active format) */
+    *   the distributed sink */
   def write(rows: Iterator[Array[String]],
             endpointFactory: Int => CopyEndpoint,
             render: Render = textRender,
@@ -99,61 +97,10 @@ object LocalCopy {
             maxRows: Int = 25000,
             maxBytes: Long = 20L << 20,
             onErrorStop: Boolean = false): (Long, Long, Long) = {
-    var sent = 0L; var rejected = 0L; var bytes = 0L
-    val endpoint = endpointFactory(0)
-    val rejectWriter = rejectDir.map { d =>
-      val dir = new java.io.File(d); dir.mkdirs()
-      new java.io.BufferedWriter(new java.io.FileWriter(
-        new java.io.File(dir, "part-00000.dat"),
-        java.nio.charset.StandardCharsets.UTF_8))
-    }
-    // .log sibling with one error message per rejected row — the same
-    // .dat/.log pair the distributed sink writes (reference
-    // state.lisp:55-95; reject.clj:33-58)
-    val rejectLogWriter = rejectDir.map { d =>
-      val dir = new java.io.File(CopySink.logDirFor(d)); dir.mkdirs()
-      new java.io.BufferedWriter(new java.io.FileWriter(
-        new java.io.File(dir, "part-00000.log"),
-        java.nio.charset.StandardCharsets.UTF_8))
-    }
-    val rejectFn: (Array[Byte], String) => Unit = (row, msg) => {
-      if (onErrorStop) throw CopyError(None, msg)
-      rejectWriter.foreach(_.write(new String(row, "UTF-8")))
-      rejectLogWriter.foreach { w =>
-        w.write(Option(msg).getOrElse("").replace('\n', ' '))
-        w.write("\n")
-      }
-      rejected += 1
-    }
-    val sendReject: (Array[Byte], String) => Unit =
-      if (rejectRender == null) rejectFn
-      else (row, msg) => rejectFn(rejectRender(row), msg)
-    try {
-      var batch = new Batch(maxRows, maxBytes, seed = 0)
-      def flush(): Unit = if (batch.nonEmpty) {
-        val (s, _) = BatchRetry.sendWithRecovery(
-          endpoint, batch.rows.toIndexedSeq, sendReject)
-        sent += s
-        batch = new Batch(maxRows, maxBytes, seed = 0)
-      }
-      rows.foreach { values =>
-        val (line, rejectText) = render(values)
-        if (line == null)
-          rejectFn(rejectText,
-            "value does not parse as its target type (COPY BINARY)")
-        else {
-          batch.add(line)
-          bytes += line.length
-          if (batch.isFull) flush()
-        }
-      }
-      flush()
-      loads.incrementAndGet()
-    } finally {
-      rejectWriter.foreach(_.close())
-      rejectLogWriter.foreach(_.close())
-      endpoint.close()
-    }
-    (sent, rejected, bytes)
+    val result = CopySink.writePartition[(Array[Byte], Array[Byte])](
+      0, rows.map(render), _._1, _._2, endpointFactory,
+      maxRows, maxBytes, onErrorStop, rejectDir, rejectRender)
+    loads.incrementAndGet()
+    result
   }
 }

@@ -3,6 +3,12 @@ package graft
 import java.io.{File, FileOutputStream}
 import java.util.zip.{ZipEntry, ZipOutputStream}
 import graft.dsl.{Parser, PlanBuilder}
+import graft.sinks.{CopyEndpoint, CopyError}
+
+object ArchiveInlineSpec {
+  // static: the endpoint runs inside serialized executor closures
+  val batchSizes = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+}
 
 /** LOAD ARCHIVE (zip expansion + ordered sub-commands) and FROM inline
   * (data embedded after the command). */
@@ -41,6 +47,36 @@ class ArchiveInlineSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getString(1))).sortBy(_._1)
     assert(regions.toSeq == Seq(("1", "east"), ("2", "west")))
     assert(results(1)._2.count() == 2)
+  }
+
+  test("archive sub-loads take their sink options from their own " +
+    "WITH clause") {
+    val zip = mkZip("n.csv" -> (1 to 10).map(i => s"$i,v$i").mkString("\n"))
+    def text(withs: String) =
+      s"""LOAD ARCHIVE FROM '$zip' INTO postgresql:///t
+          LOAD CSV FROM FILENAME MATCHING ~/n[.]csv/
+            HAVING FIELDS (k, v)
+            INTO postgresql:///t TARGET TABLE n
+            WITH fields terminated by ',', $withs;
+          ;"""
+    ArchiveInlineSpec.batchSizes.clear()
+    // the server refuses row k=3 and reports its line, like PG's
+    // `CONTEXT: COPY n, line N`
+    val runner = new Runner((_, _) => (),
+      (_, _) => _ => new CopyEndpoint {
+        def send(rows: Seq[Array[Byte]]): Unit = {
+          val bad = rows.indexWhere(new String(_, "UTF-8").startsWith("3\t"))
+          if (bad >= 0) throw CopyError(Some(bad + 1), "bad row 3")
+          ArchiveInlineSpec.batchSizes.add(rows.size)
+        }
+      })
+    val stats = runner.runFile(spark, text("batch rows = 3"))
+    assert(stats.map(s => (s.rows, s.rejected)) == Seq((9L, 1L)))
+    val sizes = ArchiveInlineSpec.batchSizes.toArray.map(_.asInstanceOf[Int])
+    assert(sizes.sum == 9 && sizes.max <= 4, sizes.mkString(","))
+    val e = intercept[Exception](runner.runFile(spark, text("on error stop")))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("bad row 3")), e)
   }
 
   test("zip-slip entries are rejected") {
