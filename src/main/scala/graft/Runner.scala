@@ -23,10 +23,13 @@ import graft.sinks.{CopyEndpoint, CopySink}
   *   sessionSetup) ([[graft.sinks.PgWireCopyEndpoint]] in the CLI,
   *   [[graft.sinks.JdbcInsertEndpoint]], or test doubles)
   * @param rejectRoot when set, each table's rejected rows land under
-  *   `<root>/<table>.dat/` (the reference's root-dir/<table>.dat) and
-  *   CSV parse rejects are counted into the stats — the parse-reject
-  *   pass is a second source scan, so it is opt-in (the sink-side
-  *   rejects from the COPY endpoint are always counted)
+  *   `<root>/<table>.dat/` (the reference's root-dir/<table>.dat): rows
+  *   the server refused as replayable COPY TEXT in `part-*.dat`, source
+  *   lines that did not decode or parse as read in `part-*.txt`, and
+  *   one message per reject in `<root>/<table>.log/part-*.log`. Both
+  *   directories are cleared when the table's load starts. Rejects of
+  *   either kind are counted into the stats with or without a root —
+  *   the COPY job's own scan finds them
   * @param queryTarget read-only SQL against the target, rows as string
   *   arrays (used by `WITH drop indexes` to list the target table's
   *   index definitions and by `WITH copy binary` to resolve the
@@ -178,13 +181,16 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
             // (census-places: quoted "LocationName" must reach the
             // server as written), and its own WITH clause the sink
             // options — the outer archive command parses none
+            stopOnMalformed(df, sc)
             load(table, df, copySessionSql, sc,
               nameColumns = sc.fields.nonEmpty || sc.targetColumns.nonEmpty)
         }
       case "database" => runDatabase(sparkF, cmd)
       case _ =>
         val spark = sparkF()
-        val df = PlanBuilder.build(spark, cmd, baseDir, inline)
+        // the tagged frame: parse rejects ride the COPY job's own scan
+        // and are counted and filed by the sink
+        val df = PlanBuilder.buildTagged(spark, cmd, baseDir, inline)
         // schema-qualified targets (INTO pg:///db?schema.table / TARGET
         // TABLE schema.table) must keep their schema — an unqualified
         // COPY lands in the wrong relation (live golden csv.partial)
@@ -211,32 +217,7 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
             !cmd.boolOption("no truncate"))
           ddl("TRUNCATE " +
             s"${graft.sinks.PgWire.quoteQualified(table)};", gucSql)
-        // parse rejects: written to the table's reject dir and counted
-        // (the reference's cl-csv error path); runs BEFORE the load so
-        // the sink's own per-partition reject parts land alongside
-        // counted whenever a reject root is set (files land there) OR
-        // `on error stop` is on — the stop check needs the count even
-        // with no reject directory configured
-        val stopEarly = cmd.boolOption("on error stop")
-        val parseRejects =
-          if (rejectRoot.isEmpty && !stopEarly) 0L
-          else PlanBuilder.buildRejects(spark, cmd, baseDir, inline)
-            .map { rej =>
-              rejectRoot match {
-                case Some(root) =>
-                  val dir = s"$root/$table.dat"
-                  rej.write.mode("overwrite").text(dir)
-                  spark.read.textFile(dir).count()
-                case None => rej.count()
-              }
-            }.getOrElse(0L)
-        // `WITH on error stop` covers PARSE errors too (the reference's
-        // *on-error-stop* quits on any bad row, process-bad-row path) —
-        // a malformed source line aborts before any data moves
-        if (stopEarly && parseRejects > 0)
-          throw new IllegalStateException(
-            s"$parseRejects malformed row(s) in the source " +
-              "(on error stop)")
+        stopOnMalformed(df, cmd)
         // `WITH drop indexes` (csv.lisp option; copy-format drops the
         // target's indexes before COPY and recreates them after — index
         // maintenance during bulk load costs more than one rebuild):
@@ -250,7 +231,7 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
               !cmd.boolOption("drop no indexes"))
             dropTargetIndexes(table, gucSql)
           else Nil
-        val stats = Seq(load(table, df, copySessionSql, cmd, parseRejects,
+        val stats = Seq(load(table, df, copySessionSql, cmd,
           nameColumns = cmd.fields.nonEmpty ||
             cmd.targetColumns.nonEmpty,
           fileNameCase = idModeOf(cmd),
@@ -267,6 +248,18 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
     }
     results
   }
+
+  /** `WITH on error stop` covers PARSE errors too (the reference's
+    * *on-error-stop* quits on any bad row, process-bad-row path): a
+    * malformed source line aborts before any data moves. The probe
+    * stops at the first tagged row. */
+  private def stopOnMalformed(df: org.apache.spark.sql.DataFrame,
+                              cmd: Ast.LoadCommand): Unit =
+    if (cmd.boolOption("on error stop") &&
+        df.columns.contains(graft.sources.TaggedLines.Col) &&
+        !graft.sources.TaggedLines.rejects(df).isEmpty)
+      throw new IllegalStateException(
+        "malformed row in the source (on error stop)")
 
   /** Run a DO-block statement list through [[ddl]] and record one
     * [[graft.orchestration.PhaseEntry]] for it (rows = statements).
@@ -1330,7 +1323,6 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
                      * options (an archive's sub-command, not the
                      * archive itself) */
                    cmd: Ast.LoadCommand,
-                   parseRejects: Long = 0L,
                    nameColumns: Boolean = false,
                    /** casing for FILE-DERIVED column names (DBF/IXF
                      * descriptors) — user-written names stay as
@@ -1351,15 +1343,16 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
     // a list-less load) keep positional COPY — the target's DDL
     // provides the real names server-side. The DATABASE path stays
     // positional too: it creates the table in the frame's own order.
-    val synthetic = df.columns.forall(_.matches("c(ol)?\\d+"))
+    val cols = graft.sources.TaggedLines.untagged(df).columns.toSeq
+    val synthetic = cols.forall(_.matches("c(ol)?\\d+"))
     // nameColumns ⇔ the names were written by the user (or a csv
     // header): quoted as-written. File-schema names (DBF/IXF) case by
     // the command's identifier mode, matching the DDL that created
     // the table (fileSchemaDdl uses the same function).
     val copyCols: Seq[String] =
-      if (nameColumns) df.columns.toSeq
+      if (nameColumns) cols
       else if (synthetic) Nil
-      else rawFileNames.getOrElse(df.columns.toSeq)
+      else rawFileNames.getOrElse(cols)
         .map(graft.catalog.Identifiers(_, fileNameCase))
     val (sent, rejected, bytes) = writeTable(table, copyCols,
       generated = false, local = None, df = df, sessionSql,
@@ -1370,7 +1363,7 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
       case -1 => ("public", table)
       case i  => (table.substring(0, i), table.substring(i + 1))
     }
-    TableStats(statSchema, statTable, sent, rejected + parseRejects,
+    TableStats(statSchema, statTable, sent, rejected,
       (System.nanoTime() - t0) / 1000000, bytes = bytes)
   }
 
@@ -1391,8 +1384,10 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
     *   rows, close); evaluated only when exactly once is off — its
     *   stages need Spark's task attempts
     * @param df the distributed rows, built only when no local scan
-    *   applies
+    *   applies; a line reader's [[graft.sources.TaggedLines]] frame
+    *   has its parse rejects filed and counted by the sink
     * @param rejectName rejects land under `<root>/<rejectName>.dat`
+    *   and `.log`, both cleared first so no earlier run's parts stay
     * @return (sent, rejected, bytes) */
   private def writeTable(
       table: String, copyCols: Seq[String], generated: Boolean,
@@ -1406,6 +1401,9 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
     val onErrorStop = cmd.boolOption("on error stop")
     val maxRows = batchRowsOf(cmd); val maxBytes = batchBytesOf(cmd)
     val rejectDir = rejectRoot.map(r => s"$r/$rejectName.dat")
+    rejectDir.foreach { d =>
+      Seq(d, CopySink.logDirFor(d)).foreach(Runner.deleteTree)
+    }
     val binaryMode = cmd.option("copy binary")
     // small-table fast path: a local scan streams driver-side through
     // the sink's own partition loop — no Spark job at all
@@ -1417,7 +1415,8 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
       val kinds =
         if (generated) { binaryGeneratedFallback(table, binaryMode); None }
         else binaryKinds(table, copyCols,
-          opened.fold(frame.columns.length)(_._1.length), binaryMode)
+          opened.fold(graft.sources.TaggedLines.untagged(frame).columns.length)(
+            _._1.length), binaryMode)
       // closures below ship to executors inside the sink's endpoint
       // factory: they capture LOCALS only (a field would drag the
       // non-serializable Runner, df.columns the DataFrame)
@@ -1485,6 +1484,17 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
   * glue only.
   */
 object Runner {
+
+  /** Delete `path` and everything under it; a missing path is fine. */
+  private def deleteTree(path: String): Unit = {
+    val root = java.nio.file.Paths.get(path)
+    if (java.nio.file.Files.exists(root)) {
+      val all = java.nio.file.Files.walk(root)
+      try all.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => java.nio.file.Files.delete(p))
+      finally all.close()
+    }
+  }
 
   /** The kinds whose server-side TEXT input routine is expensive
     * enough for COPY BINARY to pay (CopyBinAb A/B: −13–25% server CPU

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.dsl.Ast._
 import graft.operators.ProjectFields
 import graft.operators.ProjectFields.{FieldSpec, NullIf, TargetColumn, TrimMode}
-import graft.sources.{CopyText, CsvDialect, CsvSource, FixedWidth, SkipLines}
+import graft.sources.{CopyText, CsvDialect, CsvSource, FixedWidth, SkipLines,
+  TaggedLines}
 import graft.functions.Transforms
 
 /** LoadCommand → lazy DataFrame plan. The v3 reference compiles each
@@ -60,7 +61,8 @@ object PlanBuilder {
 
   /** Expand an archive and run its ordered sub-commands against the
     * extracted files (archive.lisp; core.clj:328-399).
-    * @return (targetTable, dataflow) per sub-command, in order */
+    * @return (sub-command, [[buildTagged]] dataflow) per sub-command,
+    *   in order */
   def buildArchive(spark: SparkSession, cmd: LoadCommand,
                    baseDir: String = "."): Seq[(LoadCommand, DataFrame)] = {
     require(cmd.loadType == "archive", "not an archive command")
@@ -70,15 +72,25 @@ object PlanBuilder {
     // lists (COPY column list with the user's exact case —
     // census-places' "LocationName") and its schema/table, not just a
     // bare table name
-    cmd.subCommands.map(sc => (sc, build(spark, sc, dir)))
+    cmd.subCommands.map(sc => (sc, buildTagged(spark, sc, dir)))
   }
 
-  /** Build the dataflow for a file-based load command. `inlineData` is
-    * the payload following the command text for `FROM inline`
-    * (Parser.parseWithInline). */
+  /** Build the dataflow for a file-based load command: the good rows
+    * of [[buildTagged]]. `inlineData` is the payload following the
+    * command text for `FROM inline` (Parser.parseWithInline). */
   def build(spark: SparkSession, cmd: LoadCommand,
             baseDir: String = ".",
-            inlineData: Option[String] = None): DataFrame = {
+            inlineData: Option[String] = None): DataFrame =
+    TaggedLines.clean(buildTagged(spark, cmd, baseDir, inlineData))
+
+  /** [[build]] before the clean filter: line formats (CSV, COPY,
+    * fixed-width) yield a [[TaggedLines]] frame whose raw-line column
+    * carries each line that failed to decode or parse, so the loader
+    * counts and files parse rejects during the load's own scan. DBF
+    * and IXF decode per field with charset fallback and carry no tag. */
+  def buildTagged(spark: SparkSession, cmd: LoadCommand,
+                  baseDir: String = ".",
+                  inlineData: Option[String] = None): DataFrame = {
     val src = cmd.source.getOrElse(
       throw new IllegalArgumentException("command has no source"))
     val path = src match {
@@ -160,55 +172,6 @@ object PlanBuilder {
     project(raw, cmd)
   }
 
-  /** The parse-reject companion of [[build]] for line-oriented file
-    * loads: the raw lines the reader drops, so the loader counts them
-    * and lands them in the table's .dat reject file instead of losing
-    * the signal (the reference logs each parse/decode error, counts it
-    * in stats and routes the row to table.dat). For CSV that is parse
-    * errors (stray quote, unterminated quote) plus undecodable-byte
-    * rows; for COPY and fixed-width it is undecodable-byte rows (their
-    * line structure can't otherwise fail: COPY lines always split,
-    * fixed-width pads ragged lines). None for non-line formats
-    * (DBF/IXF decode per-field with charset fallback), for stdin (not
-    * re-readable — the rejects pass is a second scan), and for the
-    * rare no-fields guessed-dialect CSV path. */
-  def buildRejects(spark: SparkSession, cmd: LoadCommand,
-                   baseDir: String = ".",
-                   inlineData: Option[String] = None): Option[DataFrame] = {
-    def rejectsAt(path: String): Option[DataFrame] = cmd.loadType match {
-      case "csv" =>
-        val names = fieldNames(cmd)
-        if (names.isEmpty) None
-        else Some(encodingGroups(cmd, path, "UTF-8").map { case (enc, ps) =>
-          graft.sources.CsvSource.rejects(spark, ps.mkString(","),
-            csvDialect(cmd, enc), names)
-        }.reduce(_ unionAll _))
-      case "copy" =>
-        Some(graft.sources.CopyText.rejects(spark, path,
-          splitHint = cmd.intOption("workers").getOrElse(4)))
-      case "fixed" =>
-        Some(graft.sources.FixedWidth.rejects(spark, path,
-          skipLines = cmd.intOption("skip header").getOrElse(0),
-          splitHint = cmd.intOption("workers").getOrElse(4),
-          encoding = cmd.encoding.getOrElse("UTF-8")))
-      case _ => None
-    }
-    if (!Set("csv", "copy", "fixed").contains(cmd.loadType)) None
-    else cmd.source.flatMap {
-      case Stdin => None
-      case InlineData =>
-        inlineData.flatMap { data =>
-          val f = java.nio.file.Files.createTempFile("graft-inline", ".dat")
-          // the DataFrame reads the file lazily during this run only —
-          // deletion at JVM exit can't race the scan
-          f.toFile.deleteOnExit()
-          java.nio.file.Files.writeString(f, data)
-          rejectsAt(f.toAbsolutePath.toString)
-        }
-      case other => rejectsAt(resolvePath(spark, other, baseDir))
-    }
-  }
-
   /** `DECODING TABLE NAMES MATCHING ~/re/ AS charset` (Parser:792;
     * reference src/sources/mysql/mysql.lisp:219-237 applies per-name
     * charsets where names/files arrive in a non-default encoding): the
@@ -288,7 +251,7 @@ object PlanBuilder {
     val names = fieldNames(cmd)
     if (names.nonEmpty)
       encodingGroups(cmd, path, "UTF-8").map { case (enc, ps) =>
-        CsvSource.read(spark, ps.mkString(","), dialect(enc), names)
+        CsvSource.tagged(spark, ps.mkString(","), dialect(enc), names)
       }.reduce(_ unionAll _)
     else {
       // no HAVING FIELDS and no target columns: the column count comes
@@ -330,7 +293,7 @@ object PlanBuilder {
         else None
       val cols = headerNames.filter(_.length == nCols)
         .getOrElse((1 to nCols).map(i => s"col$i"))
-      CsvSource.read(spark, path, d0, cols)
+      CsvSource.tagged(spark, path, d0, cols)
     }
   }
 
@@ -352,7 +315,7 @@ object PlanBuilder {
           s"fixed header: $path has no header line"))
       val specs = FixedWidth.guessSpecs(header)
         .map(s => s.copy(name = s.name.toLowerCase))
-      val df = FixedWidth.read(spark, path, specs, skipLines = 1,
+      val df = FixedWidth.tagged(spark, path, specs, skipLines = 1,
         splitHint = cmd.intOption("workers").getOrElse(4),
         encoding = enc)
       return specs.foldLeft(df)((d, s) =>
@@ -365,7 +328,7 @@ object PlanBuilder {
         f.length.getOrElse(throw new IllegalArgumentException(
           s"fixed field ${f.name} lacks 'for'")))
     }
-    FixedWidth.read(spark, path, specs,
+    FixedWidth.tagged(spark, path, specs,
       skipLines = cmd.intOption("skip header").getOrElse(0),
       splitHint = cmd.intOption("workers").getOrElse(4),
       encoding = cmd.encoding.getOrElse("UTF-8"))
@@ -388,7 +351,7 @@ object PlanBuilder {
           .map(l => CopyText.parseLine(l, delim).length).getOrElse(1)
         (1 to n).map(i => s"c$i")
     }
-    CopyText.read(spark, path, names, delimiter = delim,
+    CopyText.tagged(spark, path, names, delimiter = delim,
       nullAs = cmd.option("null").getOrElse("\\N"),
       splitHint = cmd.intOption("workers").getOrElse(4))
   }
@@ -506,8 +469,13 @@ object PlanBuilder {
       if (cmd.targetColumns.nonEmpty)
         cmd.targetColumns.map(toTarget(_, fieldSet))
       else specs.map(s => TargetColumn(s.name))
+    // a line reader's raw-line tag rides through the projection
+    val tag =
+      if (df.columns.contains(TaggedLines.Col))
+        Seq(TargetColumn(TaggedLines.Col))
+      else Nil
     if (specs.isEmpty && cmd.targetColumns.isEmpty) df
-    else ProjectFields(df, specs, targets)
+    else ProjectFields(df, specs, targets ++ tag)
   }
 
   private def toTarget(td: TargetColDef,

@@ -2,7 +2,7 @@ package graft.sinks
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.util.LongAccumulator
-import graft.sources.CopyText
+import graft.sources.{CopyText, TaggedLines}
 import scala.collection.mutable.ArrayBuffer
 
 /** Failure reported by a COPY endpoint. `lineInBatch` is the 1-based row
@@ -150,21 +150,23 @@ final class CopySink(
     val mr = maxRows; val mb = maxBytes; val stop = onErrorStop
     val rDir = rejectDir; val factory = endpointFactory
     val successHook = onPartitionSuccess; val rr = rejectRender
-    // rows are rendered by a codegen'd projection to (value, reject):
-    // COPY TEXT lines by default (typed PG literals + escaping,
+    // rows are rendered by a codegen'd projection to (value, reject,
+    // raw): COPY TEXT lines by default (typed PG literals + escaping,
     // newline-terminated, cast to BINARY inside codegen so the task
     // receives UTF-8 bytes without a UTF8String→String round-trip —
     // profiled as a top-5 sink cost at reference-bench scale), or
     // COPY BINARY tuple frames ([[PgBinary.renderer]]). A null value
     // = the renderer could not encode the row (binary path only) —
     // routed to rejects with the `reject` column's text rendering,
-    // matching what the server itself would do to that row.
+    // matching what the server itself would do to that row. A non-null
+    // raw = a line reader's parse reject ([[TaggedLines]]), filed as
+    // its source line.
     val lines = renderer(df)
     lines.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
       val pid = org.apache.spark.TaskContext.getPartitionId()
       val (s, r, b) = CopySink.writePartition[org.apache.spark.sql.Row](
         pid, it, _.getAs[Array[Byte]](0), _.getAs[Array[Byte]](1),
-        factory, mr, mb, stop, rDir, rr)
+        _.getString(2), factory, mr, mb, stop, rDir, rr)
       sent.add(s); rejected.add(r); bytesSent.add(b)
       if (successHook != null) successHook(pid)
     }
@@ -177,13 +179,17 @@ object CopySink {
     * Spark partition) and [[LocalCopy]] (on the driver, pid 0) run:
     * rendered rows fill a [[Batch]], each full batch goes through
     * [[BatchRetry.sendWithRecovery]], and every rejected row lands in
-    * `<rejectDir>/part-<pid>.dat` (replayable COPY TEXT) with its
-    * error message on the same line of `<logDir>/part-<pid>.log`.
+    * `<rejectDir>/part-<pid>.dat` (replayable COPY TEXT) — or, for a
+    * source line that did not decode or parse, in
+    * `<rejectDir>/part-<pid>.txt` as it was read — with one error
+    * message per reject, in reject order, in `<logDir>/part-<pid>.log`.
     *
     * @param value the row's rendered bytes, or null when the renderer
     *   could not encode it (binary path only) — the row is then
     *   rejected with its `rejectText` rendering, exactly like a
     *   server-refused row
+    * @param raw the row's source line when the reader could not decode
+    *   or parse it (the row is then rejected unsent), else null
     * @param rejectRender server-rejected SENT bytes → replayable COPY
     *   TEXT (binary frames need [[PgBinary.frameToTextLine]]; null =
     *   the sent bytes are already text)
@@ -192,6 +198,7 @@ object CopySink {
   private[sinks] def writePartition[R](
       pid: Int, rows: Iterator[R],
       value: R => Array[Byte], rejectText: R => Array[Byte],
+      raw: R => String,
       endpointFactory: Int => CopyEndpoint,
       maxRows: Int, maxBytes: Long, onErrorStop: Boolean,
       rejectDir: Option[String],
@@ -216,17 +223,27 @@ object CopySink {
     }
     val rejectWriter = rejectDir.map(rejectFile(_, "dat"))
     val rejectLogWriter = rejectDir.map(d => rejectFile(logDirFor(d), "log"))
-    val rejectFn: (Array[Byte], String) => Unit = (row, msg) => {
+    // raw source lines are rare: their file opens on the first one
+    var rawWriter: Option[java.io.Writer] = None
+    def fileReject(msg: String)(write: => Unit): Unit = {
       if (onErrorStop) throw CopyError(None, msg)
-      rejectWriter.foreach(w => w.write(new String(row, "UTF-8")))
+      if (rejectDir.nonEmpty) write
       rejectLogWriter.foreach { w =>
         // one line per rejected row — multi-line server messages
-        // fold so the Nth .log line explains the Nth .dat row
+        // fold so the Nth .log line explains the Nth reject
         w.write(Option(msg).getOrElse("").replace('\n', ' '))
         w.write("\n")
       }
       rejected += 1
     }
+    val rejectFn: (Array[Byte], String) => Unit = (row, msg) =>
+      fileReject(msg)(rejectWriter.get.write(new String(row, "UTF-8")))
+    val rawReject: String => Unit = line =>
+      fileReject(RawRejectMessage) {
+        if (rawWriter.isEmpty) rawWriter = Some(rejectFile(rejectDir.get, "txt"))
+        rawWriter.get.write(line)
+        rawWriter.get.write("\n")
+      }
     // SERVER-rejected rows reach BatchRetry as the bytes we SENT —
     // binary tuple frames under the binary renderer; encode-failure
     // rejects below already carry text
@@ -242,7 +259,9 @@ object CopySink {
       }
       rows.foreach { row =>
         val line = value(row)
-        if (line == null)
+        val source = raw(row)
+        if (source != null) rawReject(source)
+        else if (line == null)
           rejectFn(rejectText(row),
             "value does not parse as its target type (COPY BINARY)")
         else {
@@ -254,6 +273,7 @@ object CopySink {
       flush()
     } finally {
       rejectWriter.foreach(_.close())
+      rawWriter.foreach(_.close())
       rejectLogWriter.foreach(_.close())
       endpoint.close()
     }
@@ -268,16 +288,30 @@ object CopySink {
       rejectDir.stripSuffix(".dat") + ".log"
     else rejectDir + ".log"
 
-  /** Default renderer: (value = COPY TEXT line bytes, reject = null).
-    * `value` is never null here — text rendering cannot fail; the
-    * reject column exists so both renderers share one row shape. */
+  /** The `.log` line of a source line the reader could not use. */
+  val RawRejectMessage = "source line does not decode or parse"
+
+  /** Default renderer: (value = COPY TEXT line bytes, reject = null,
+    * raw = [[rawSlot]]). `value` is never null here — text rendering
+    * cannot fail; the reject column exists so both renderers share one
+    * row shape. */
   def textRenderer: DataFrame => DataFrame = { df =>
     import org.apache.spark.sql.functions.{concat, lit}
     df.select(
-      concat(CopyText.lineColumn(df), lit("\n"))
+      concat(CopyText.lineColumn(TaggedLines.untagged(df)), lit("\n"))
         .cast(org.apache.spark.sql.types.BinaryType).as("value"),
       lit(null).cast(org.apache.spark.sql.types.BinaryType)
-        .as("reject"))
+        .as("reject"),
+      rawSlot(df))
+  }
+
+  /** A rendered row's raw slot: the source line of a row the reader
+    * could not decode or parse ([[TaggedLines]]), NULL for a good row
+    * or a frame with no tag. */
+  private[sinks] def rawSlot(df: DataFrame): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.{col, lit}
+    (if (df.columns.contains(TaggedLines.Col)) col(TaggedLines.Col)
+     else lit(null).cast(org.apache.spark.sql.types.StringType)).as("raw")
   }
 }
 

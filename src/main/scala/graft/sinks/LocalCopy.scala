@@ -32,8 +32,9 @@ object LocalCopy {
     * path actually ran; it is not part of any user-facing contract). */
   val loads = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** (value bytes, reject-text bytes) — the same two-column row shape
-    * the DataFrame renderers produce: exactly one side is null. */
+  /** (value bytes, reject-text bytes) — the DataFrame renderers' row
+    * shape without its raw-line slot, which a database scan never
+    * fills: exactly one side is null. */
   type Render = Array[String] => (Array[Byte], Array[Byte])
 
   private def textLineBytes(values: Array[String]): Array[Byte] =
@@ -98,7 +99,7 @@ object LocalCopy {
             maxBytes: Long = 20L << 20,
             onErrorStop: Boolean = false): (Long, Long, Long) = {
     val result = CopySink.writePartition[(Array[Byte], Array[Byte])](
-      0, rows.map(render), _._1, _._2, endpointFactory,
+      0, rows.map(render), _._1, _._2, _ => null, endpointFactory,
       maxRows, maxBytes, onErrorStop, rejectDir, rejectRender)
     loads.incrementAndGet()
     result

@@ -1723,16 +1723,19 @@ object PgBinary {
 
   /** [[CopySink]] renderer for the binary path: `value` = the tuple
     * frame, `reject` = the row's COPY TEXT line (only materialized for
-    * rows whose encode failed — the `when` keeps it off the hot path).
+    * rows whose encode failed — the `when` keeps it off the hot path),
+    * `raw` = [[CopySink.rawSlot]].
     */
   def renderer(kinds: Seq[PgBinKind]): DataFrame => DataFrame = { df =>
     import org.apache.spark.sql.functions.{concat, lit, when}
-    val v = rowColumn(df, kinds)
+    val data = graft.sources.TaggedLines.untagged(df)
+    val v = rowColumn(data, kinds)
     df.select(v.as("value"),
       when(v.isNull,
-        concat(graft.sources.CopyText.lineColumn(df), lit("\n"))
+        concat(graft.sources.CopyText.lineColumn(data), lit("\n"))
           .cast(BinaryType))
-        .otherwise(lit(null).cast(BinaryType)).as("reject"))
+        .otherwise(lit(null).cast(BinaryType)).as("reject"),
+      CopySink.rawSlot(df))
   }
 }
 

@@ -214,20 +214,21 @@ object CopyText {
     concat_ws(delimiter.toString, cols.toIndexedSeq: _*)
   }
 
-  /** Distributed read of a COPY TEXT file → all-string DataFrame; the
-    * split/unescape runs as Column expressions (codegen), and the text
-    * source splits large files by line, so this scales with input size.
-    * Decoding is the STRICT per-line path ([[SkipLines.linesDF]]) —
-    * same reject contract as the CSV source (a lenient textFile would
-    * load U+FFFD mojibake for bytes UTF-8 cannot decode; PG's own COPY
-    * errors on them). Undecodable rows are excluded here and surfaced
-    * by [[rejects]], so a loader counts them and lands them in the
-    * table's reject file instead of losing the signal. `splitHint`
+  /** Distributed read of a COPY TEXT file → all-string
+    * [[TaggedLines]] frame; the split/unescape runs as Column
+    * expressions (codegen), and the text source splits large files by
+    * line, so this scales with input size. Decoding is the STRICT
+    * per-line path ([[SkipLines.linesDF]]) — same reject contract as
+    * the CSV source (a lenient textFile would load U+FFFD mojibake for
+    * bytes UTF-8 cannot decode; PG's own COPY errors on them), so an
+    * undecodable line is tagged with its (replacement-decoded) text,
+    * and a loader counts it and lands it in the table's reject file.
+    * A COPY line always splits, so nothing else is tagged. `splitHint`
     * maps the DSL `workers` option to input splits (>=4 MB each), one
     * COPY connection per split. */
-  def read(spark: SparkSession, path: String, fieldNames: Seq[String],
-           delimiter: Char = '\t', nullAs: String = "\\N",
-           splitHint: Int = 1): DataFrame = {
+  def tagged(spark: SparkSession, path: String, fieldNames: Seq[String],
+             delimiter: Char = '\t', nullAs: String = "\\N",
+             splitHint: Int = 1): DataFrame = {
     val parts = split(col("value"),
       java.util.regex.Pattern.quote(delimiter.toString), -1)
     val fields = fieldNames.zipWithIndex.map { case (n, i) =>
@@ -236,19 +237,21 @@ object CopyText {
         .otherwise(unescapeColumn(raw)).as(n)
     }
     SkipLines.linesDF(spark, path, 0, "UTF-8", splitHint)
-      .filter(!col("__bad"))
-      .select(fields: _*)
+      .select(fields :+ TaggedLines.tag(col("__bad"), col("value")): _*)
   }
 
-  /** The rows [[read]] drops: lines whose bytes UTF-8 cannot decode
-    * strictly. Same scan lineage as [[read]]; the reject file carries
-    * the replacement-decoded row text (the same value/`__bad` contract
-    * as [[CsvSource.rejects]]). */
+  /** The good rows of [[tagged]]. */
+  def read(spark: SparkSession, path: String, fieldNames: Seq[String],
+           delimiter: Char = '\t', nullAs: String = "\\N",
+           splitHint: Int = 1): DataFrame =
+    TaggedLines.clean(
+      tagged(spark, path, fieldNames, delimiter, nullAs, splitHint))
+
+  /** The lines [[read]] drops: those whose bytes UTF-8 cannot decode
+    * strictly, as their replacement-decoded text. */
   def rejects(spark: SparkSession, path: String,
               splitHint: Int = 1): DataFrame =
-    SkipLines.linesDF(spark, path, 0, "UTF-8", splitHint)
-      .filter(col("__bad"))
-      .select(col("value"))
+    TaggedLines.rejects(tagged(spark, path, Nil, splitHint = splitHint))
 
   /** Distributed write: one codegen'd projection to the line column, then
     * the text writer (the reject-file / golden-file format). */

@@ -66,17 +66,22 @@ object CsvSource {
       case other => other
     }
 
-  /** Read a CSV with an explicit dialect into an all-string DataFrame —
-    * fidelity mode: types are applied later by the cast layer, never by the
-    * reader (SURVEY §1.2: transforms run on strings).
+  /** Read a CSV with an explicit dialect into an all-string
+    * [[TaggedLines]] frame — fidelity mode: types are applied later by
+    * the cast layer, never by the reader (SURVEY §1.2: transforms run
+    * on strings). A row is tagged with its source line when its bytes
+    * do not decode (`__bad` from the strict decode) or it does not
+    * parse (stray quote in an unquoted field, unterminated quote);
+    * with `requireFullArity`, short rows are tagged too. Blank lines
+    * are skipped, never tagged (the reference skips them silently).
     *
     * `skipLines`/`header` are PER-FILE head-line drops (csv.lisp:84-127
     * semantics): implemented via [[SkipLines.lines]] — Spark's CSV reader
     * has no preamble-skip option, and monotonically_increasing_id tricks
     * are wrong for multi-file/multi-split reads. */
-  def read(spark: SparkSession, path: String, dialect: CsvDialect,
-           fieldNames: Seq[String],
-           requireFullArity: Boolean = false): DataFrame = {
+  def tagged(spark: SparkSession, path: String, dialect: CsvDialect,
+             fieldNames: Seq[String],
+             requireFullArity: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions._
     // a header line is just one more per-file line to drop — field names
     // come from the declared list, matching the reference's HAVING FIELDS
@@ -98,49 +103,34 @@ object CsvSource {
     // last expected column" can never fire through this path.
     val parsed = lines
       .filter(octet_length(col("value")) > 0) // blank lines skipped (octet_length: O(1), no char scan)
-      // undecodable-byte rows (__bad from the strict decode) are
-      // malformed — the rejects() companion surfaces them
-      .filter(!col("__bad"))
-      .select(graft.functions.StringExpressions
+      .select(col("value"), col("__bad"), graft.functions.StringExpressions
         .csvParseLine(col("value"), dialect).as("__fields"))
-    parsed
-      .filter(col("__fields").isNotNull) // malformed rows are rejected
-      .filter(if (requireFullArity)
-        size(col("__fields")) >= fieldNames.length else lit(true))
-      .select(fieldNames.zipWithIndex.map { case (nm, i) =>
-        get(col("__fields"), lit(i)).as(nm)
-      }: _*)
+    val malformed = col("__bad") || col("__fields").isNull ||
+      (if (requireFullArity) size(col("__fields")) < fieldNames.length
+       else lit(false))
+    // the reject file carries the (replacement-decoded) row text
+    parsed.select(fieldNames.zipWithIndex.map { case (nm, i) =>
+      get(col("__fields"), lit(i)).as(nm)
+    } :+ TaggedLines.tag(malformed, col("value")): _*)
   }
 
-  /** The rows [[read]] drops: raw malformed lines (stray quote in an
-    * unquoted field, unterminated quote) — the companion a loader needs
-    * to count parse errors and land them in a reject file instead of
-    * losing the signal entirely (the reference logs each cl-csv parse
-    * error and routes the row to table.dat; [[graft.operators.Validate]]
-    * has the same rejects/valid split shape). Same scan lineage as
-    * [[read]]; blank lines are NOT rejects (the reference skips them
-    * silently). With `requireFullArity`, short rows are rejects too. */
+  /** The good rows of [[tagged]]. */
+  def read(spark: SparkSession, path: String, dialect: CsvDialect,
+           fieldNames: Seq[String],
+           requireFullArity: Boolean = false): DataFrame =
+    TaggedLines.clean(
+      tagged(spark, path, dialect, fieldNames, requireFullArity))
+
+  /** The rows [[read]] drops, as their raw source lines — what a loader
+    * counts and lands in the reject file instead of losing the signal
+    * (the reference logs each cl-csv parse error and routes the row to
+    * table.dat; [[graft.operators.Validate]] has the same rejects/valid
+    * split shape). */
   def rejects(spark: SparkSession, path: String, dialect: CsvDialect,
               fieldNames: Seq[String] = Nil,
-              requireFullArity: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val skip = dialect.skipLines + (if (dialect.header) 1 else 0)
-    val lines = SkipLines.linesDF(spark, path, skip,
-      canonicalEncoding(dialect.encoding), dialect.splitHint,
-      if (dialect.lineTerminator.isEmpty) stitchRecords(dialect)
-      else null,
-      delimiter = dialect.lineTerminator)
-    lines
-      .filter(octet_length(col("value")) > 0)
-      .withColumn("__fields", graft.functions.StringExpressions
-        .csvParseLine(col("value"), dialect))
-      .filter(col("__bad") ||
-        col("__fields").isNull ||
-        (if (requireFullArity)
-          size(col("__fields")) < fieldNames.length else lit(false)))
-      // the reject file carries the (replacement-decoded) row text
-      .select(col("value"))
-  }
+              requireFullArity: Boolean = false): DataFrame =
+    TaggedLines.rejects(
+      tagged(spark, path, dialect, fieldNames, requireFullArity))
 
   /** [[read]] plus a `__serial` column numbering rows 1..N in LOAD
     * ORDER — the reference's implicit serial-column assignment, made
@@ -269,8 +259,8 @@ object CsvSource {
     * keeps the FIRST line's offset, so [[readWithSerial]] ordering and
     * the skip-lines cut are unaffected. Plugged into
     * [[SkipLines.linesWithPosition]] per partition by every CSV entry
-    * point (read / rejects / readWithSerial use the same function, so
-    * data and reject scans see identical records). */
+    * point ([[tagged]] and [[readWithSerial]] use the same function, so
+    * every scan sees identical records). */
   private[sources] def stitchRecords(d: CsvDialect)
       : Iterator[(String, Long, Array[Byte], Boolean)] =>
         Iterator[(String, Long, Array[Byte], Boolean)] = {
@@ -710,37 +700,37 @@ object CsvSource {
 object FixedWidth {
   final case class FieldPos(name: String, start: Int, length: Int)
 
-  def read(spark: SparkSession, path: String, specs: Seq[FieldPos],
-           skipLines: Int = 0, splitHint: Int = 1,
-           encoding: String = "UTF-8"): DataFrame = {
-    // always the strict decode path — skip<=0 used to take a lenient
-    // textFile shortcut, giving the format a DIFFERENT reject contract
-    // depending on whether `skip header` was configured (the CSV
-    // source's round-13 ADVICE finding, fixed here the same way).
-    // Undecodable rows are excluded here and surfaced by [[rejects]].
-    // `encoding` honors the command's WITH ENCODING (census-places is
-    // latin1 — its 52 accented rows must decode, not reject).
+  /** Read fixed-width lines into a [[TaggedLines]] frame: a row is
+    * tagged with its line when its bytes do not decode strictly with
+    * `encoding` (the command's WITH ENCODING — census-places is latin1,
+    * its 52 accented rows must decode, not reject). Ragged lines are
+    * never tagged: they pad with NULLs. Always the strict decode path,
+    * so the reject contract does not depend on `skip header` (the CSV
+    * source's round-13 ADVICE finding, fixed here the same way). */
+  def tagged(spark: SparkSession, path: String, specs: Seq[FieldPos],
+             skipLines: Int = 0, splitHint: Int = 1,
+             encoding: String = "UTF-8"): DataFrame = {
     import org.apache.spark.sql.functions.col
     val text = SkipLines.linesDF(spark, path, skipLines,
         CsvSource.canonicalEncoding(encoding), splitHint)
-      .filter(!col("__bad"))
       .withColumnRenamed("value", "__line")
-    project(text, "__line", specs).drop("__line", "__bad")
+    project(text, "__line", specs).select(specs.map(s => col(s.name)) :+
+      TaggedLines.tag(col("__bad"), col("__line")): _*)
   }
 
-  /** The rows [[read]] drops: lines whose bytes UTF-8 cannot decode
-    * strictly — the loader counts these and lands them in the reject
-    * file (same contract as [[CsvSource.rejects]]; ragged lines are
-    * NOT rejects, they pad with NULLs). */
+  /** The good rows of [[tagged]]. */
+  def read(spark: SparkSession, path: String, specs: Seq[FieldPos],
+           skipLines: Int = 0, splitHint: Int = 1,
+           encoding: String = "UTF-8"): DataFrame =
+    TaggedLines.clean(
+      tagged(spark, path, specs, skipLines, splitHint, encoding))
+
+  /** The lines [[read]] drops: those whose bytes do not decode. */
   def rejects(spark: SparkSession, path: String, skipLines: Int = 0,
               splitHint: Int = 1,
-              encoding: String = "UTF-8"): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    SkipLines.linesDF(spark, path, skipLines,
-        CsvSource.canonicalEncoding(encoding), splitHint)
-      .filter(col("__bad"))
-      .select(col("value"))
-  }
+              encoding: String = "UTF-8"): DataFrame =
+    TaggedLines.rejects(
+      tagged(spark, path, Nil, skipLines, splitHint, encoding))
 
   /** Columnize an existing single-string column (used by both the file
     * reader and tests). */

@@ -322,3 +322,36 @@ object SkipLines {
       .select("value").as[String]
   }
 }
+
+/** The tagged frame every line reader ([[CsvSource]], [[CopyText]],
+  * [[FixedWidth]]) builds once: its projected columns plus [[Col]],
+  * NULL for a good row and the source line for a row that failed to
+  * decode or parse. One scan feeds both the load and its reject file
+  * (the reference counts a bad line and routes it to `<table>.dat`
+  * during the same read); [[clean]] and [[rejects]] are filter views. */
+object TaggedLines {
+  import org.apache.spark.sql.{Column, DataFrame}
+  import org.apache.spark.sql.functions.{coalesce, col, lit, when}
+
+  /** The raw-line column's name. */
+  val Col = "__raw_line"
+
+  /** The raw-line column: `line` where `malformed` holds, else NULL.
+    * Source lines are never NULL; the coalesce tells the optimizer so,
+    * and `tag IS NULL` then folds to `NOT malformed` — a clean view
+    * plans exactly like a reader that filtered before projecting. */
+  def tag(malformed: Column, line: Column): Column =
+    when(malformed, coalesce(line, lit(""))).as(Col)
+
+  /** The good rows, without the tag; a frame with no tag as it is. */
+  def clean(df: DataFrame): DataFrame =
+    if (!df.columns.contains(Col)) df
+    else df.filter(col(Col).isNull).drop(Col)
+
+  /** The malformed rows as their source lines, one `value` column. */
+  def rejects(df: DataFrame): DataFrame =
+    df.filter(col(Col).isNotNull).select(col(Col).as("value"))
+
+  /** The frame without the tag: the columns a load sends. */
+  def untagged(df: DataFrame): DataFrame = df.drop(Col)
+}

@@ -152,8 +152,13 @@ final class FakeMySqlServer(
       if (tls.isDefined && first.length == 32 &&
           (((first(1) & 0xFF) << 8) & MySqlWire.ClientSsl) != 0) {
         tlsConnections.incrementAndGet()
+        // the client's ClientHello may already sit in the plain
+        // stream's buffer; the TLS server must read it from there or
+        // both sides wait for each other forever
+        val early = new Array[Byte](in.available())
+        in.readFully(early)
         val ssl = tls.get.getSocketFactory
-          .createSocket(sock, null, sock.getPort, true)
+          .createSocket(sock, new java.io.ByteArrayInputStream(early), true)
           .asInstanceOf[javax.net.ssl.SSLSocket]
         ssl.setUseClientMode(false)
         sock = ssl

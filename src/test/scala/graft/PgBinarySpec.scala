@@ -660,4 +660,26 @@ class PgBinarySpec extends SparkSpec {
     assert(hex(v2) == "0003" + "ffffffff" + // NULL field
       "00000004" + "00000001" + "00000003" + "6e756c" && r2 == null)
   }
+
+  test("both renderers carry a tagged frame's source line in the raw " +
+    "slot and keep the tag out of the COPY row") {
+    val f = java.nio.file.Files.createTempFile("tagged", ".csv")
+    java.nio.file.Files.writeString(f, "1,ok\n2,o\"no\n")
+    val tagged = graft.sources.CsvSource.tagged(spark, f.toString,
+      graft.sources.CsvDialect(), Seq("i", "s"))
+    type Renderer = org.apache.spark.sql.DataFrame =>
+      org.apache.spark.sql.DataFrame
+    // (value, raw) per row, the good row first
+    def render(r: Renderer) =
+      r(tagged).collect().map(row => (Option(row.getAs[Array[Byte]](0)),
+        row.getString(2))).sortBy(_._2 != null).toSeq
+    val text = render(graft.sinks.CopySink.textRenderer)
+    assert(text.map(t => (t._1.map(new String(_, "UTF-8")), t._2)).head ==
+      (Some("1\tok\n"), null))
+    assert(text(1)._2 == "2,o\"no")
+    val bin = render(PgBinary.renderer(Seq(PgBinKind.I4, PgBinKind.Text)))
+    assert(hex(bin.head._1.orNull) == "0002" + "00000004" + "00000001" +
+      "00000002" + "6f6b" && bin.head._2 == null)
+    assert(bin(1)._2 == "2,o\"no")
+  }
 }

@@ -25,6 +25,22 @@ object RunnerSpec {
           (label, new String(b, "UTF-8").stripSuffix("\n"))))
     }
   }
+
+  /** [[endpoint]] refusing every batch with a `BAD` row in it, the way
+    * the server does: nothing kept, the bad row's line number reported. */
+  def rejectingEndpoint(table: String,
+                        sessionSetup: Seq[String]): Int => CopyEndpoint =
+    pid => {
+      val inner = endpoint(table, sessionSetup)(pid)
+      new CopyEndpoint {
+        def send(rows: Seq[Array[Byte]]): Unit = {
+          val bad = rows.indexWhere(b => new String(b, "UTF-8").contains("BAD"))
+          if (bad >= 0)
+            throw graft.sinks.CopyError(Some(bad + 1), "invalid input syntax")
+          inner.send(rows)
+        }
+      }
+    }
 }
 
 /** End-to-end: `.load` text → Runner → DDL hooks + sink, like running
@@ -245,6 +261,111 @@ class RunnerSpec extends SparkSpec {
     assert(rejLines == Seq("2|o\"no|x"))
   }
 
+  test("parse rejects count without a reject root, inline loads too") {
+    val dir = Files.createTempDirectory("runner-norej").toFile
+    Files.writeString(new java.io.File(dir, "kv.csv").toPath,
+      "1|one\n2|o\"no|x\n3|three\n")
+    val runner = new Runner((_, _) => (), RunnerSpec.endpoint)
+    val stats = runner.runFile(spark,
+      s"""LOAD CSV FROM '${dir.getAbsolutePath}/kv.csv'
+          HAVING FIELDS (k, v)
+          INTO postgresql:///t TARGET TABLE kv
+          WITH fields terminated by '|';""")
+    assert(stats.map(s => (s.table, s.rows, s.rejected)) ==
+      Seq(("kv", 2L, 1L)))
+    val inline = runner.runFile(spark,
+      """LOAD CSV FROM inline
+          HAVING FIELDS (a, b)
+          INTO postgresql:///t TARGET TABLE inl
+          WITH fields terminated by ',';
+1,x
+2,y"z""")
+    assert(inline.map(s => (s.table, s.rows, s.rejected)) ==
+      Seq(("inl", 1L, 1L)))
+  }
+
+  test("a re-run clears the table's reject parts before it loads") {
+    val dir = Files.createTempDirectory("runner-rerun").toFile
+    Files.writeString(new java.io.File(dir, "kv.csv").toPath,
+      "1|one\n2|o\"no|x\n3|three\n")
+    val root = Files.createTempDirectory("runner-rerun-root").toFile
+    val text =
+      s"""LOAD CSV FROM '${dir.getAbsolutePath}/kv.csv'
+          HAVING FIELDS (k, v)
+          INTO postgresql:///t TARGET TABLE kv
+          WITH fields terminated by '|';"""
+    val runner = new Runner((_, _) => (), RunnerSpec.endpoint,
+      rejectRoot = Some(root.getAbsolutePath))
+    runner.runFile(spark, text)
+    // the parts an earlier run with more partitions would leave behind
+    val datDir = new java.io.File(root, "kv.dat")
+    val logDir = new java.io.File(root, "kv.log")
+    logDir.mkdirs()
+    Seq(new java.io.File(datDir, "part-00003.dat") -> "9\tstale\n",
+      new java.io.File(datDir, "part-00003.txt") -> "9|stale\n",
+      new java.io.File(logDir, "part-00003.log") -> "stale\n").foreach {
+      case (f, body) => Files.writeString(f.toPath, body)
+    }
+    val stats = runner.runFile(spark, text)
+    assert(stats.map(_.rejected) == Seq(1L))
+    def lines(d: java.io.File): Seq[String] =
+      Option(d.listFiles()).toSeq.flatten.filter(_.getName.startsWith("part-"))
+        .sortBy(_.getName)
+        .flatMap(f => Files.readAllLines(f.toPath).asScala)
+    assert(lines(datDir) == Seq("2|o\"no|x"))
+    assert(lines(logDir) == Seq(graft.sinks.CopySink.RawRejectMessage))
+  }
+
+  test("a csv load runs one Spark job and files parse and server " +
+    "rejects apart") {
+    val dir = Files.createTempDirectory("runner-onejob").toFile
+    // row 2 does not parse (stray quote); row 3 parses and the server
+    // refuses it
+    Files.writeString(new java.io.File(dir, "kv.csv").toPath,
+      "1|one\n2|o\"no|x\n3|BAD\n4|four\n")
+    val root = Files.createTempDirectory("runner-onejob-root").toFile
+    val runner = new Runner((_, _) => (), RunnerSpec.rejectingEndpoint,
+      rejectRoot = Some(root.getAbsolutePath))
+    val sc = spark.sparkContext
+    val group = "runner-onejob"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    RunnerSpec.received.clear()
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "one scan per file load")
+    val stats =
+      try runner.runFile(spark,
+        s"""LOAD CSV FROM '${dir.getAbsolutePath}/kv.csv'
+            HAVING FIELDS (k, v)
+            INTO postgresql:///t TARGET TABLE kv
+            WITH fields terminated by '|';""")
+      finally {
+        sc.clearJobGroup()
+        org.apache.spark.graft.BusDrain(sc)
+        sc.removeSparkListener(listener)
+      }
+    assert(stats.map(s => (s.table, s.rows, s.rejected)) ==
+      Seq(("kv", 2L, 2L)))
+    assert(jobs.get == 1, s"${jobs.get} Spark jobs")
+    assert(RunnerSpec.received.asScala.toSeq.sorted ==
+      Seq(("kv", "1\tone"), ("kv", "4\tfour")))
+    def read(d: String, ext: String): Seq[String] =
+      Option(new java.io.File(root, d).listFiles()).toSeq.flatten
+        .filter(f => f.getName.startsWith("part-") &&
+          f.getName.endsWith(ext))
+        .flatMap(f => Files.readAllLines(f.toPath).asScala)
+    assert(read("kv.dat", ".txt") == Seq("2|o\"no|x"))
+    assert(read("kv.dat", ".dat") == Seq("3\tBAD"))
+    assert(read("kv.log", ".log").sorted ==
+      Seq("invalid input syntax", graft.sinks.CopySink.RawRejectMessage))
+  }
+
   test("COPY loads count undecodable rows as rejects, not silent drops") {
     val dir = Files.createTempDirectory("runner-copyrej").toFile
     val f = new java.io.File(dir, "cp.dat")
@@ -405,7 +526,7 @@ class RunnerSpec extends SparkSpec {
     RunnerSpec.received.clear()
     val runner = new Runner((_, _) => (), RunnerSpec.endpoint)
     // default = resume next: good rows load, the bad row is dropped
-    // (rejected counts need a reject root; none is set here)
+    // and counted rejected
     val stats = runner.runFile(spark, text(""))
     assert(stats.map(_.rows) == Seq(3L), stats.mkString("; "))
     // on error stop: aborts before any data moves
@@ -416,6 +537,17 @@ class RunnerSpec extends SparkSpec {
     assert(e.getMessage.contains("on error stop"), e.getMessage)
     assert(RunnerSpec.received.isEmpty,
       "no rows may reach the sink after the stop")
+    // a bad line after the first one-row batch stops the load before
+    // that batch is sent
+    Files.writeString(new java.io.File(dir, "bad.csv").toPath,
+      "1|one\n2|two\n4|four\n5|five\n3|\"unc\n")
+    RunnerSpec.received.clear()
+    val late = intercept[Exception] {
+      runner.runFile(spark, text(", batch rows = 1, on error stop"))
+    }
+    assert(late.getMessage.contains("on error stop"), late.getMessage)
+    assert(RunnerSpec.received.isEmpty,
+      "no batch may reach the sink before a later malformed line")
   }
 
   test("WITH batch rows bounds the sink's COPY batches") {
