@@ -1,8 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Benchmark main: runs every SparkEntry query against
-  * SPARK_GRAFT_SF_DIR, prints ONE JSON line with per-query seconds.
+/** Benchmark main: runs every registered query ([[SparkEntry.all]],
+  * read through `SparkEntry.queries`) against SPARK_GRAFT_SF_DIR,
+  * prints ONE JSON line with per-query seconds.
   *
   * - A warmup query (q1_agg) runs untimed first so the first measured
   *   query doesn't absorb session/codegen warmup.
@@ -89,38 +89,20 @@ object Bench {
   /** Scratch directory for shuffle blocks and streaming temp
     * checkpoints: SPARK_GRAFT_LOCAL_DIR if set (production: point at
     * the fastest ephemeral storage the node has — local NVMe, not a
-    * network mount), else RAM-backed /dev/shm when the host provides
-    * a writable one WITH real capacity (guide §2.1/§6: local disk
-    * bandwidth for shuffle files can be the tighter limit — on this
-    * sandbox /tmp is ext4 and the streaming suite measured ~17% faster
-    * on tmpfs), else Spark's default. The capacity gate (round 22,
-    * ADVICE r21): containers commonly mount /dev/shm at 64 MB, where
-    * shuffle spill + streaming checkpoints would ENOSPC mid-run, and a
-    * tmpfs near its fill line competes with the heap for host RAM —
-    * require 4 GiB usable (≫ the suite's peak scratch footprint)
-    * before defaulting to it. Scratch only — nothing read across runs
-    * lives here. */
+    * network mount), else RAM-backed /dev/shm when
+    * [[Sessions.shmDir]] admits it (local disk bandwidth for shuffle
+    * files can be the tighter limit — on an ext4 /tmp the streaming
+    * queries measured ~17% faster on tmpfs), else Spark's default.
+    * Scratch only — nothing read across runs lives here. */
   private def scratchLocalDir: Option[String] =
-    sys.env.get("SPARK_GRAFT_LOCAL_DIR").orElse {
-      val shm = new java.io.File("/dev/shm")
-      if (shm.isDirectory && shm.canWrite &&
-          shm.getUsableSpace >= 4L * 1024 * 1024 * 1024)
-        Some("/dev/shm/graft-spark-local")
-      else None
-    }
+    sys.env.get("SPARK_GRAFT_LOCAL_DIR")
+      .orElse(Sessions.shmDir("graft-spark-local"))
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.driver.memory", "8g")
-      // older events.parquet carries TIMESTAMP(NANOS): read as long
-      // nanos (micros files are unaffected; SparkEntry normalizes both)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // driver heap: -Xmx from SPARK_DRIVER_MEM in build.sbt (a
+    // spark.driver.memory setting cannot reach the running JVM)
+    val builder0 = Sessions.builder("graft-bench", Sessions.cpus)
     val builder = scratchLocalDir.fold(builder0) { d =>
       new java.io.File(d).mkdirs()
       // java.io.tmpdir additionally routes the ResolveWriteToStream

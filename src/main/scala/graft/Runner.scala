@@ -1728,22 +1728,10 @@ object Runner {
     // custom-type closure + pre-DDL phase (its first ~second) overlaps
     // the 2–3 s Spark boot instead of waiting behind it
     val sparkFut = java.util.concurrent.CompletableFuture.supplyAsync(
-      () => SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-        .appName("graft-load")
-        .config("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-        // a loader CLI has no use for the web UI; skipping it shaves
-        // ~0.5 s off every invocation (the reference's CLI starts no
-        // server either)
-        .config("spark.ui.enabled", "false")
-        // pin UTC like every other graft session: timestamp RENDERING
-        // (from_unixtime, timestamptz literals) follows the session
-        // zone, and the reference renders timestamptz in UTC — an
-        // unpinned session would load different wall-clock strings
-        // per host TZ
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate())
+      () => {
+        val b = Sessions.builder("graft-load", Sessions.cpus)
+        sys.env.get("SPARK_MASTER").fold(b)(b.master).getOrCreate()
+      })
     val t0 = System.nanoTime()
     // driver-free by default: DDL and COPY both speak the wire protocol
     // directly (no pgjdbc jar needed anywhere on the cluster). DDL

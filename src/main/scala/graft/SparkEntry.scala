@@ -1,20 +1,14 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.functions.Transforms
-import graft.operators.{DateFormat, Funnel, ProjectFields}
-import graft.operators.ProjectFields.{FieldSpec, NullIf, TargetColumn, TrimMode}
-import graft.sources.{CopyText, CsvDialect, CsvSource, FixedWidth}
-import graft.sinks.{BatchRetry, CopyEndpoint, CopyError}
-import graft.functions.StringExpressions
-import graft.pipeline.{Classifier, Cluster, Curation, Dedup, Multimodal, Retrieval, Similarity, Terms, TextAnalysis}
+import graft.queries._
 
-/** Driver contract — one `queries` entry per implemented operator from
-  * SURVEY.md §2 (+ the training-data-pipeline extensions), each with a
-  * DuckDB oracle in `oracleSql` where SQL can express it.
+/** Driver contract — one [[Query]] per implemented operator from
+  * SURVEY.md §2 (+ the training-data-pipeline extensions), each carrying
+  * its DuckDB oracle. The queries live in one file per family under
+  * `graft.queries`; `queries` and `oracleSql` are the by-name views the
+  * mains, the specs and the benchmark harness read.
   *
   * Conventions shared by query and oracle: deterministic ORDER BY on every
   * result; double aggregates computed exactly via DECIMAL then cast back to
@@ -23,4369 +17,24 @@ import graft.pipeline.{Classifier, Cluster, Curation, Dedup, Multimodal, Retriev
   */
 object SparkEntry {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    val df = s.read.parquet(s"$dir/$name.parquet")
-    if (name == "events") normalizeEventTs(df) else df
+  /** Every query, family by family. Names are unique. */
+  val all: Seq[Query] = {
+    val qs = LoadPathQueries.all ++ TextQueries.all ++ DedupQueries.all ++
+      SimilarityQueries.all ++ DriftQueries.all ++ StreamingQueries.all ++
+      MiscQueries.all
+    val dups = qs.groupBy(_.name).collect { case (n, v) if v.size > 1 => n }
+    require(dups.isEmpty, s"duplicate query names: ${dups.mkString(", ")}")
+    qs
   }
 
-  /** events.ts has shipped as both parquet TIMESTAMP(NANOS) — read as
-    * long nanos via spark.sql.legacy.parquet.nanosAsLong (set in the
-    * Verify/Bench sessions) — and TIMESTAMP(MICROS, isAdjustedToUTC =
-    * false), which Spark reads as TIMESTAMP_NTZ. Normalize either to a
-    * session-UTC timestamp losslessly so every events query (and its
-    * DuckDB oracle, which sees the same naive micros) agrees. */
-  private def normalizeEventTs(df: DataFrame): DataFrame =
-    df.schema("ts").dataType match {
-      case LongType =>
-        df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case TimestampNTZType =>
-        df.withColumn("ts", col("ts").cast("timestamp"))
-      case _ => df
-    }
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    all.map(q => q.name -> q.build).toMap
 
-  /** Exact double aggregation: sum in decimal, return double. */
-  private def dsum(c: Column): Column =
-    sum(c.cast(DecimalType(18, 6))).cast("double")
-
-  /** Scratch dir for round-trip queries. Location is
-    * SPARK_GRAFT_SCRATCH if set, else RAM-backed /dev/shm when the
-    * host provides a writable one with ≥ 4 GiB usable (round 22 gate,
-    * ADVICE r21 — small container /dev/shm mounts would ENOSPC and a
-    * full tmpfs competes with the heap for RAM), else target/qtmp in
-    * the repo tree (round 21; same rule as Bench's shuffle scratch —
-    * the round-trip operators exercise file FORMATS, not a particular
-    * disk, and ~15 queries funnel their sink+re-read bytes through
-    * here). */
-  private lazy val scratchRoot: String =
-    sys.env.get("SPARK_GRAFT_SCRATCH").getOrElse {
-      val shm = new java.io.File("/dev/shm")
-      if (shm.isDirectory && shm.canWrite &&
-          shm.getUsableSpace >= 4L * 1024 * 1024 * 1024) "/dev/shm/graft-qtmp"
-      else "target/qtmp"
-    }
-
-  private def scratch(name: String): String = {
-    val p = s"$scratchRoot/$name"
-    val f = new java.io.File(p)
-    def rm(x: java.io.File): Unit = {
-      if (x.isDirectory) x.listFiles().foreach(rm)
-      x.delete()
-    }
-    if (f.exists()) rm(f)
-    f.getParentFile.mkdirs()
-    p
-  }
-
-  /** Shared harness for UPDATE-mode streaming queries that land through
-    * the distributed COPY sink: run `agg` to completion, one batch dir
-    * per micro-batch emission, then merge-on-read — the LATEST emission
-    * per `keyCols` wins (update mode re-emits a key's cumulative value
-    * each time it changes, so later batch ids carry the newer
-    * aggregate). `flatten` projects each batch to the flat `fields`
-    * layout before COPY rendering. Returns STRING columns named
-    * `fields` (COPY text round-trip — callers cast); zero fired
-    * micro-batches (empty/missing source) merge to an empty frame
-    * instead of NPE-ing on a never-created sink root. Part files are
-    * opened with append=false so a retried sink task REWRITES its
-    * partition file — append mode would fuse a failed attempt's
-    * partial line with the retry's bytes into a torn COPY row. */
-  private def updateStreamViaCopySink(s: SparkSession,
-      agg: DataFrame, scratchName: String,
-      flatten: DataFrame => DataFrame, fields: Seq[String],
-      keyCols: Seq[String]): DataFrame = {
-    val outRoot = new java.io.File(scratch(scratchName)).getAbsolutePath
-    val q = agg.writeStream.outputMode("update")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val dirB = new java.io.File(outRoot, s"batch-$batchId")
-        dirB.mkdirs()
-        val abs = dirB.getAbsolutePath
-        val sink = new graft.sinks.CopySink(endpointFactory = pid =>
-          new CopyEndpoint {
-            private val out = new java.io.BufferedOutputStream(
-              new java.io.FileOutputStream(
-                new java.io.File(abs, f"part-$pid%05d.dat"), false),
-              1 << 16)
-            def send(rows: Seq[Array[Byte]]): Unit = rows.foreach(out.write)
-            override def close(): Unit = out.close()
-          })
-        sink.write(flatten(batch))
-        ()
-      }
-      .start()
-    q.processAllAvailable(); q.stop()
-    val batchDirs = Option(new java.io.File(outRoot).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(d => d.getName.startsWith("batch-") &&
-        Option(d.listFiles()).exists(_.nonEmpty))
-    if (batchDirs.isEmpty) {
-      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(fields.map(f =>
-          org.apache.spark.sql.types.StructField(f,
-            org.apache.spark.sql.types.StringType))))
-    } else if (batchDirs.length == 1) {
-      // single emission → nothing to merge, skip the dedupe shuffle
-      CopyText.read(s, batchDirs.head.getAbsolutePath, fields)
-    } else {
-      val emissions = batchDirs.map { d =>
-        CopyText.read(s, d.getAbsolutePath, fields)
-          .withColumn("__batch",
-            lit(d.getName.stripPrefix("batch-").toLong))
-      }.reduce(_ unionAll _)
-      val latest = org.apache.spark.sql.expressions.Window
-        .partitionBy(keyCols.map(col): _*)
-        .orderBy(col("__batch").desc)
-      emissions
-        .withColumn("__rn", row_number().over(latest))
-        .filter(col("__rn") === 1)
-        .drop("__batch", "__rn")
-    }
-  }
+  /** DuckDB oracle per query, over the same parquet tables. */
+  lazy val oracleSql: Map[String, String] =
+    all.map(q => q.name -> q.oracle).toMap
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q1_agg")(spark, "/root/testdata/sf0.001")
-
-  // ---------------------------------------------------------------- queries
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // §2.5 aggregations — pricing-summary rollup (stats aggregation shape)
-    "q1_agg" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          dsum(col("l_quantity")).as("sum_qty"),
-          dsum(col("l_extendedprice")).as("sum_base_price"),
-          dsum(col("l_extendedprice") * (lit(1) - col("l_discount")))
-            .as("sum_disc_price"),
-          (sum(col("l_quantity").cast(DecimalType(18, 6))).cast("double") /
-            count(lit(1))).as("avg_qty"),
-          count(lit(1)).as("count_order"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))
-    }),
-
-    // §2.3 field→column projection: subset/reorder/duplicate/constant/using
-    "project_fields" -> ((s, dir) => {
-      val fields = Seq("p_partkey", "p_name", "p_brand", "p_type", "p_size")
-        .map(FieldSpec(_))
-      val targets = Seq(
-        TargetColumn("p_partkey"),
-        TargetColumn("brand", fromField = Some("p_brand")),
-        TargetColumn("brand_again", fromField = Some("p_brand")),
-        TargetColumn("label",
-          usingExpr = Some("concat(p_brand, ':', p_type)")),
-        TargetColumn("origin", constant = Some("graft")))
-      ProjectFields(
-        t(s, dir, "part").select(
-          col("p_partkey").cast("string"), col("p_name"), col("p_brand"),
-          col("p_type"), col("p_size").cast("string")),
-        fields, targets)
-        .withColumn("p_partkey", col("p_partkey").cast("long"))
-        .orderBy(col("p_partkey"))
-    }),
-
-    // §2.3 null-if (blanks + literal value)
-    "null_if" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val fields = Seq(
-        FieldSpec("o_orderkey"),
-        FieldSpec("o_orderpriority", nullIfs = Seq(NullIf.Value("1-URGENT"))),
-        FieldSpec("o_status_b", nullIfs = Seq(NullIf.Blanks)))
-      val targets = Seq(
-        TargetColumn("o_orderkey"),
-        TargetColumn("o_orderpriority"),
-        TargetColumn("o_status_b"))
-      ProjectFields(
-        o.select(col("o_orderkey").cast("string"), col("o_orderpriority"),
-          // blank-pad some statuses to exercise [null if blanks]
-          when(col("o_orderkey") % 5 === 0, lit("   "))
-            .otherwise(col("o_orderstatus")).as("o_status_b")),
-        fields, targets)
-        .withColumn("o_orderkey", col("o_orderkey").cast("long"))
-        .orderBy(col("o_orderkey"))
-    }),
-
-    // §2.3 trim modes — all three modes through the ProjectFields stage
-    "trim_fields" -> ((s, dir) => {
-      val pad = (c: Column) => concat(lit("  "), c, lit("  "))
-      val padded = t(s, dir, "part").select(
-        col("p_partkey"),
-        pad(col("p_brand")).as("b_ltrim"),
-        pad(col("p_brand")).as("b_rtrim"),
-        pad(col("p_brand")).as("b_trim"))
-      val fields = Seq(
-        FieldSpec("b_ltrim", trim = TrimMode.Left),
-        FieldSpec("b_rtrim", trim = TrimMode.Right),
-        FieldSpec("b_trim", trim = TrimMode.Both))
-      val targets = Seq(
-        TargetColumn("p_partkey"), TargetColumn("b_ltrim"),
-        TargetColumn("b_rtrim"), TargetColumn("b_trim"))
-      ProjectFields(padded, fields, targets).orderBy(col("p_partkey"))
-    }),
-
-    // §2.3 per-field date format (PG to_char tokens → parser). The input
-    // literal is assembled from extracted date components — NOT via
-    // date_format with the same pattern — so the parse is tested against
-    // an independent rendering.
-    "date_format_parse" -> ((s, dir) => {
-      val sd = col("l_shipdate")
-      val p2 = (c: Column) => lpad(c.cast("string"), 2, "0")
-      val rendered = t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"),
-          concat(p2(dayofmonth(sd)), lit("/"), p2(month(sd)), lit("/"),
-            year(sd).cast("string"), lit(" "), p2(hour(sd)), lit(":"),
-            p2(minute(sd)), lit(":"), p2(second(sd))).as("d"))
-      val fields = Seq(FieldSpec("d",
-        dateFormat = Some("DD/MM/YYYY HH24:MI:SS")))
-      rendered.select(col("l_orderkey"), col("l_linenumber"),
-          ProjectFields.prepareField(col("d"), fields.head)
-            .cast("timestamp").as("l_shipdate"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
-
-    // §2.7 zero-dates-to-null + timestamp cast (MySQL datetime semantics)
-    "transform_zero_dates" -> ((s, dir) => {
-      val o = t(s, dir, "orders").select(col("o_orderkey"),
-        when(col("o_orderkey") % 97 === 0, lit("0000-00-00 00:00:00"))
-          .otherwise(date_format(col("o_orderdate"), "yyyy-MM-dd HH:mm:ss"))
-          .as("d_raw"))
-      o.select(col("o_orderkey"),
-          Transforms.zeroDatesToNull(col("d_raw")).cast("timestamp")
-            .as("o_orderdate"))
-        .orderBy(col("o_orderkey"))
-    }),
-
-    // §2.7 date-with-no-separator (compact 14-digit timestamps)
-    "transform_date_no_sep" -> ((s, dir) => {
-      val e = t(s, dir, "events").select(col("event_id"),
-        date_format(col("ts"), "yyyyMMddHHmmss").as("compact"))
-      e.select(col("event_id"),
-          Transforms.dateWithNoSeparator(col("compact")).cast("timestamp")
-            .as("ts"))
-        .orderBy(col("event_id"))
-    }),
-
-    // §2.7 time-with-no-separator
-    "transform_time_no_sep" -> ((s, dir) => {
-      val e = t(s, dir, "events").select(col("event_id"),
-        concat(date_format(col("ts"), "HHmmss"),
-          lpad((col("event_id") % 100).cast("string"), 2, "0")).as("compact"))
-      e.select(col("event_id"),
-          Transforms.timeWithNoSeparator(col("compact")).as("t"))
-        .orderBy(col("event_id"))
-    }),
-
-    // §2.7 tinyint-to-boolean
-    "transform_tinyint_bool" -> ((s, dir) => {
-      val o = t(s, dir, "orders").select(col("o_orderkey"),
-        (col("o_orderkey") % 2).cast("string").as("flag"))
-      o.select(col("o_orderkey"),
-          Transforms.tinyintToBoolean(col("flag")).as("b"))
-        .orderBy(col("o_orderkey"))
-    }),
-
-    // §2.7 int-to-ip
-    "transform_int_to_ip" -> ((s, dir) => {
-      val c = t(s, dir, "customer").select(col("c_custkey"),
-        ((col("c_custkey") * 9973) % 4294967296L).as("addr"))
-      c.select(col("c_custkey"),
-          Transforms.intToIp(col("addr")).as("ip"))
-        .orderBy(col("c_custkey"))
-    }),
-
-    // §2.7 set-to-enum-array + empty-string-to-null
-    "transform_set_enum" -> ((s, dir) => {
-      val c = t(s, dir, "customer").select(col("c_custkey"),
-        when(col("c_custkey") % 11 === 0, lit(""))
-          .otherwise(lower(col("c_mktsegment"))).as("tags"))
-      c.select(col("c_custkey"),
-          Transforms.setToEnumArray(
-            Transforms.emptyStringToNull(col("tags"))).as("enum_arr"))
-        .orderBy(col("c_custkey"))
-    }),
-
-    // §2.7 hex-to-dec + byte-vector-to-hexstring + bytea literal
-    "transform_hex" -> ((s, dir) => {
-      val p = t(s, dir, "part").select(col("p_partkey"),
-        lower(hex(col("p_partkey"))).as("hexa"),
-        col("p_brand"))
-      p.select(col("p_partkey"),
-          Transforms.hexToDec(col("hexa")).as("dec_str"),
-          Transforms.byteVectorToHexstring(col("p_brand").cast("binary"))
-            .as("brand_hex"),
-          Transforms.byteVectorToBytea(col("p_brand").cast("binary"))
-            .as("brand_bytea"))
-        .orderBy(col("p_partkey"))
-    }),
-
-    // §2.7 unix-timestamp-to-timestamptz
-    "transform_unix_ts" -> ((s, dir) => {
-      val o = t(s, dir, "orders").select(col("o_orderkey"),
-        unix_timestamp(col("o_orderdate")).cast("string").as("epoch"))
-      o.select(col("o_orderkey"),
-          Transforms.unixTimestampToTimestamptz(col("epoch")).as("ts_text"))
-        .orderBy(col("o_orderkey"))
-    }),
-
-    // §2.6 cast-rule engine: MySQL-shaped source columns through the
-    // default rule set (typed output, zero-dates nulled before cast)
-    "cast_engine_mysql" -> ((s, dir) => {
-      import graft.casting._
-      val raw = t(s, dir, "orders").select(
-        col("o_orderkey").cast("string").as("o_orderkey"),
-        col("o_custkey").cast("string").as("o_custkey"),
-        (col("o_orderkey") % 2).cast("string").as("is_priority"),
-        when(col("o_orderkey") % 97 === 0, lit("0000-00-00 00:00:00"))
-          .otherwise(date_format(col("o_orderdate"), "yyyy-MM-dd HH:mm:ss"))
-          .as("created_at"),
-        col("o_orderpriority").as("note"),
-        format_number(col("o_totalprice"), 2).as("price_str"))
-        .withColumn("price_str", regexp_replace(col("price_str"), ",", ""))
-      val cols = Seq(
-        SourceColumn("orders", "o_orderkey", "bigint(20)"),
-        SourceColumn("orders", "o_custkey", "int(10)"),
-        SourceColumn("orders", "is_priority", "tinyint(1)"),
-        SourceColumn("orders", "created_at", "datetime",
-          default = Some("0000-00-00 00:00:00")),
-        SourceColumn("orders", "note", "varchar(15)"),
-        SourceColumn("orders", "price_str", "decimal(12,2)"))
-      val outCols = cols.map { sc =>
-        val r = CastEngine.cast(sc, Nil, DefaultCastRules.mysql)
-        val base = col(sc.name)
-        val transformed = r.transform.map(f => f(base)).getOrElse(base)
-        // PG boolean text → Spark boolean needs explicit mapping
-        val typed = r.sparkType match {
-          case BooleanType => (transformed === "t").as(sc.name)
-          case dt => transformed.cast(dt).as(sc.name)
-        }
-        typed
-      }
-      raw.select(outCols: _*)
-        // decimal → double at the boundary so the oracle compare is
-        // type-stable (DuckDB decimals surface as float64)
-        .withColumn("price_str", col("price_str").cast("double"))
-        .orderBy(col("o_orderkey"))
-    }),
-
-    // §2.4 Citus backfill join — distribution key backfilled through the
-    // FK chain lineitem→orders→customer; dims broadcast (small side)
-    // the DISTRIBUTE rule is parsed from DSL text and applied by walking
-    // the catalog's fkey chain (citus.lisp:305-371) — not a hand-built
-    // join; pivot tables broadcast.
-    "citus_backfill_join" -> ((s, dir) => {
-      import graft.catalog.{Catalog => GC, Schema => GS, Table => GT, FKey}
-      import graft.casting.SourceColumn
-      val cmd = graft.dsl.Parser.parse(
-        """LOAD DATABASE FROM postgresql:///src INTO postgresql:///dst
-           DISTRIBUTE lineitem USING c_custkey FROM orders, customer;""")
-      val rule = cmd.distribute.head
-        .asInstanceOf[graft.dsl.Ast.DistributeUsing]
-      val cat = GC("sf", Seq(GS("public", tables = Seq(
-        GT(name = "lineitem",
-          fields = Seq(
-            SourceColumn("lineitem", "l_orderkey", "bigint"),
-            SourceColumn("lineitem", "l_linenumber", "int"),
-            SourceColumn("lineitem", "l_quantity", "double")),
-          fkeys = Seq(FKey("li_ord_fk", "lineitem", Seq("l_orderkey"),
-            "orders", Seq("o_orderkey")))),
-        GT(name = "orders",
-          fields = Seq(SourceColumn("orders", "o_orderkey", "bigint"),
-            SourceColumn("orders", "o_custkey", "bigint")),
-          fkeys = Seq(FKey("ord_cust_fk", "orders", Seq("o_custkey"),
-            "customer", Seq("c_custkey")))),
-        GT(name = "customer",
-          fields = Seq(SourceColumn("customer", "c_custkey", "bigint")))))))
-      val frames = Map(
-        "lineitem" -> t(s, dir, "lineitem"),
-        "orders" -> t(s, dir, "orders")
-          .select(col("o_orderkey"), col("o_custkey")),
-        "customer" -> t(s, dir, "customer").select(col("c_custkey")))
-      graft.operators.Citus.backfillJoin(cat, rule, frames)
-        .select(col(rule.column).as("dist_key"), col("l_orderkey"),
-          col("l_linenumber"), col("l_quantity"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
-
-    // §2.4/§2.5 regression EXCEPT — expected.exceptAll(actual)
-    "except_regress" -> ((s, dir) => {
-      val all = t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_orderstatus"))
-      val actual = all.filter(col("o_orderkey") % 10 =!= 0)
-      all.exceptAll(actual).orderBy(col("o_orderkey"))
-    }),
-
-    // §2.5 min/max partition-bound aggregation
-    "agg_minmax" -> ((s, dir) => {
-      t(s, dir, "orders").agg(
-        min(col("o_orderkey")).as("lo"),
-        (max(col("o_orderkey")) + 1).as("hi"))
-    }),
-
-    // §2.5 per-table row counts → copy-order scheduling (size desc)
-    "agg_rowcounts" -> ((s, dir) => {
-      val names = Seq("region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem")
-      names.map(n => t(s, dir, n).select(lit(n).as("table_name"))
-          .groupBy(col("table_name")).agg(count(lit(1)).as("n_rows")))
-        .reduce(_ unionAll _)
-        .orderBy(col("n_rows").desc, col("table_name"))
-    }),
-
-    // §2.5 extension: ANALYZE-style column profile — one
-    // partial-aggregated scan, exact decimal means, exact distincts
-    // (approx_count_distinct is the 100 TB swap-in; see Profile)
-    "profile_stats" -> ((s, dir) => {
-      graft.operators.Profile.numeric(t(s, dir, "lineitem"),
-        cols = Seq("l_quantity", "l_extendedprice", "l_discount"),
-        distinctCols = Seq("l_partkey", "l_returnflag"))
-    }),
-
-    // §2.5 extension: exact discrete quantiles (SQL-standard
-    // percentile_disc — always an actual element, so engine-exact with
-    // no float interpolation; oracle spells out the same definition
-    // via cume_dist). approx_percentile is the 100 TB swap-in.
-    "profile_quantiles" -> ((s, dir) => {
-      graft.operators.Profile.quantiles(t(s, dir, "lineitem"),
-        cols = Seq("l_quantity", "l_extendedprice", "l_discount"),
-        probs = Seq(0.25, 0.5, 0.75, 0.95))
-    }),
-
-    // §4 partitioned parallel read — split-range bookkeeping
-    // (rows-per-range semantics of mysql.lisp:44-62)
-    "partition_ranges" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val bounds = o.agg(min(col("o_orderkey")).as("lo")).collect()(0)
-      val lo = bounds.getLong(0)
-      o.select(floor((col("o_orderkey") - lit(lo)) / 10000L).as("range_id"))
-        .groupBy(col("range_id")).agg(count(lit(1)).as("n_rows"))
-        .orderBy(col("range_id"))
-    }),
-
-    // §2.2 COPY TEXT round-trip: escapes, \N nulls, tab separation
-    "copy_roundtrip" -> ((s, dir) => {
-      val o = t(s, dir, "orders").select(
-        col("o_orderkey"),
-        when(col("o_orderkey") % 7 === 0, lit(null: String))
-          .otherwise(concat(lit("tab\there\nnl\\bs|"),
-            col("o_orderpriority"))).as("note"))
-      val path = scratch("copy_roundtrip")
-      CopyText.write(o, path)
-      CopyText.read(s, path, Seq("o_orderkey", "note"))
-        .select(col("o_orderkey").cast("long").as("o_orderkey"), col("note"))
-        .orderBy(col("o_orderkey"))
-    }),
-
-    // §2.2 batch error recovery: line-numbered errors → prefix resend;
-    // position-less errors → bisect. Bad rows rejected, good rows kept.
-    "sink_bisect" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_orderstatus"))
-      val schema = o.schema
-      val recovered = o.repartition(8, col("o_orderkey"))
-        .mapPartitions { it =>
-          val rows = it.toIndexedSeq
-          val lines = rows.map(r =>
-            (r.getLong(0).toString + "\t" + r.getString(1)).getBytes("UTF-8"))
-          val accepted = scala.collection.mutable.ArrayBuffer.empty[Int]
-          // Mock PG: parse-style errors carry a line number, constraint
-          // (FK-like) errors don't — exercising both recovery paths.
-          val ep = new CopyEndpoint {
-            def send(batch: Seq[Array[Byte]]): Unit = {
-              val keys = batch.map(b =>
-                new String(b, "UTF-8").split("\t")(0).toLong)
-              keys.zipWithIndex.foreach { case (k, i) =>
-                if (k % 1000 == 7)
-                  throw CopyError(Some(i + 1), s"parse error line ${i + 1}")
-                if (k % 1000 == 13)
-                  throw CopyError(None, "fk violation")
-              }
-              batch.foreach { b =>
-                accepted += new String(b, "UTF-8").split("\t")(0).toInt
-              }
-            }
-          }
-          // batches of 100 rows, like the sink's batch cap
-          lines.grouped(100).foreach { g =>
-            BatchRetry.sendWithRecovery(ep, g.toIndexedSeq, (_, _) => ())
-          }
-          accepted.iterator.map(k => org.apache.spark.sql.Row(k.toLong))
-        }(org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(
-          StructType(Seq(StructField("o_orderkey", LongType)))))
-      recovered.orderBy(col("o_orderkey"))
-    }),
-
-    // §2.2 typed sink rendering: binary → \x hex, boolean → t/f,
-    // timestamp/date → PG literals, decimal → plain string — through the
-    // REAL CopySink path (schema-resolved formatters), then read back.
-    "sink_typed_roundtrip" -> ((s, dir) => {
-      val o = t(s, dir, "orders").select(
-        col("o_orderkey"),
-        (col("o_orderkey") % 2 === 0).as("flag"),
-        col("o_orderpriority").cast("binary").as("bin"),
-        expr("timestampadd(MILLISECOND, CAST(o_orderkey % 1000 AS INT), o_orderdate)")
-          .as("ts"),
-        col("o_orderdate").cast("date").as("d"),
-        expr("CAST(CAST(o_orderkey % 10000 AS DECIMAL(10,0)) / 100 AS DECIMAL(12,2))")
-          .as("price"))
-      val abs = new java.io.File(scratch("sink_typed_roundtrip"))
-        .getAbsolutePath
-      new java.io.File(abs).mkdirs()
-      val sink = new graft.sinks.CopySink(
-        endpointFactory = pid => new CopyEndpoint {
-          private val out = new java.io.BufferedOutputStream(
-            new java.io.FileOutputStream(
-              new java.io.File(abs, f"part-$pid%05d.dat"), true), 1 << 16)
-          def send(rows: Seq[Array[Byte]]): Unit = rows.foreach(out.write)
-          override def close(): Unit = out.close()
-        })
-      sink.write(o.repartition(4))
-      CopyText.read(s, abs,
-          Seq("o_orderkey", "flag", "bin", "ts", "d", "price"))
-        .select(col("o_orderkey").cast("long").as("o_orderkey"),
-          col("flag"), col("bin"), col("ts"), col("d"), col("price"))
-        .orderBy(col("o_orderkey"))
-    }),
-
-    // §2.1 CSV scan round-trip with explicit dialect (quotes in data)
-    "csv_roundtrip" -> ((s, dir) => {
-      val c = t(s, dir, "customer").select(
-        col("c_custkey"),
-        concat(col("c_name"), lit(",\"quoted\"|x")).as("c_name"),
-        col("c_mktsegment"))
-      val path = scratch("csv_roundtrip")
-      c.coalesce(2).write.option("sep", "|").option("quote", "\"")
-        .option("escape", "\"").mode("overwrite").csv(path)
-      CsvSource.read(s, path,
-          CsvDialect(separator = '|', doubledQuote = true),
-          Seq("c_custkey", "c_name", "c_mktsegment"))
-        .select(col("c_custkey").cast("long").as("c_custkey"),
-          col("c_name"), col("c_mktsegment"))
-        .orderBy(col("c_custkey"))
-    }),
-
-    // §2.1 CSV dialect guesser: separator/escape inferred from a sample
-    "csv_guess" -> ((s, dir) => {
-      val n = t(s, dir, "nation").select(
-        col("n_nationkey"), col("n_name"), col("n_regionkey"))
-      val path = scratch("csv_guess")
-      n.coalesce(1).write.option("sep", ";").mode("overwrite").csv(path)
-      val dialect = CsvSource.guessDialect(CsvSource.sample(s, path))
-        .getOrElse(CsvDialect(separator = ';'))
-      CsvSource.read(s, path, dialect,
-          Seq("n_nationkey", "n_name", "n_regionkey"))
-        .select(col("n_nationkey").cast("int").as("n_nationkey"),
-          col("n_name"),
-          col("n_regionkey").cast("int").as("n_regionkey"))
-        .orderBy(col("n_nationkey"))
-    }),
-
-    // §2.1 per-file preamble skip: skip lines = 2 plus a header line, over
-    // a multi-file glob — every file must drop ITS OWN head lines.
-    "csv_skip_header" -> ((s, dir) => {
-      val r = t(s, dir, "region").select(col("r_regionkey"), col("r_name"))
-      val path = scratch("csv_skip_header")
-      r.repartition(3).write.option("sep", "|").mode("overwrite").csv(path)
-      // prepend 2 junk preamble lines + 1 header line to every part file
-      new java.io.File(path).listFiles()
-        .filter(f => f.isFile && f.getName.startsWith("part-"))
-        .foreach { f =>
-          val body = java.nio.file.Files.readAllBytes(f.toPath)
-          val pre = ("# preamble junk line 1|with|separators\n" +
-            "# preamble junk line 2\nr_regionkey|r_name\n").getBytes("UTF-8")
-          java.nio.file.Files.write(f.toPath, pre ++ body)
-        }
-      // the in-place edit invalidates the local-FS checksum sidecars
-      new java.io.File(path).listFiles()
-        .filter(_.getName.endsWith(".crc")).foreach(_.delete())
-      CsvSource.read(s, path,
-          CsvDialect(separator = '|', skipLines = 2, header = true),
-          Seq("r_regionkey", "r_name"))
-        .select(col("r_regionkey").cast("int").as("r_regionkey"),
-          col("r_name"))
-        .orderBy(col("r_regionkey"))
-    }),
-
-    // §2.1 DBF scan: dBase III records, deleted-row skip, db3 transform
-    // family; file written by the fixture writer, read distributed.
-    "dbf_roundtrip" -> ((s, dir) => {
-      import graft.sources.DbfSource
-      import graft.sources.DbfSource.DbfField
-      val base = java.time.LocalDate.of(1992, 1, 1)
-      val rows = t(s, dir, "nation")
-        .select(col("n_nationkey"), col("n_name")).collect().toSeq
-        .sortBy(_.getAs[Number](0).longValue)
-        .map { r =>
-          val k = r.getAs[Number](0).longValue
-          Seq(k.toString, r.getString(1), s"$k.25",
-            base.plusDays(k).format(
-              java.time.format.DateTimeFormatter.BASIC_ISO_DATE),
-            if (k % 2 == 0) "T" else "F")
-        }
-      val deleted = rows.map(_.head.toLong % 7 == 3)
-      val fields = Seq(DbfField("n_key", 'N', 6, 0),
-        DbfField("n_name", 'C', 25, 0), DbfField("n_budget", 'N', 12, 2),
-        DbfField("n_date", 'D', 8, 0), DbfField("n_flag", 'L', 1, 0))
-      val dirF = new java.io.File(scratch("dbf_roundtrip"))
-      dirF.mkdirs()
-      DbfSource.write(new java.io.File(dirF, "nation.dbf"), fields, rows,
-        deleted)
-      val df = DbfSource.read(s, dirF.getAbsolutePath + "/nation.dbf")
-      df.select(
-          DbfSource.defaultTransform(fields(0))(col("n_key"))
-            .cast("long").as("n_nationkey"),
-          DbfSource.defaultTransform(fields(1))(col("n_name")).as("n_name"),
-          DbfSource.defaultTransform(fields(2))(col("n_budget"))
-            .as("n_budget"),
-          DbfSource.defaultTransform(fields(3))(col("n_date")).as("n_date"),
-          DbfSource.defaultTransform(fields(4))(col("n_flag")).as("n_flag"))
-        .orderBy(col("n_nationkey"))
-    }),
-
-    // §2.8 orchestration + §2.5 stats rollup: the Migrator runs 3 real
-    // tables through CopySink (supplier rows with s_suppkey%7=3 rejected
-    // by the endpoint), then the summary's per-table and total stats are
-    // the query result.
-    "migrate_stats" -> ((s, dir) => {
-      import graft.catalog.{Catalog => GCatalog, Schema => GSchema, Table => GTable}
-      val names = Seq("region", "nation", "supplier")
-      val cat = GCatalog("sf", Seq(GSchema("public",
-        tables = names.map(n => GTable(name = n, schema = "public",
-          rowCountEstimate = t(s, dir, n).count())))))
-      val migrator = new graft.orchestration.Migrator(
-        executeDdl = (_, _) => (),
-        loadTable = (tbl, _) => {
-          val df = t(s, dir, tbl.name)
-          val keyed = df.select(df.columns.map(c => col(c).cast("string")): _*)
-          val reject = tbl.name == "supplier"
-          val sink = new graft.sinks.CopySink(endpointFactory = _ =>
-            new CopyEndpoint {
-              def send(rows: Seq[Array[Byte]]): Unit =
-                if (reject) rows.zipWithIndex.foreach { case (b, i) =>
-                  val k = new String(b, "UTF-8").split("\t")(0).toLong
-                  if (k % 7 == 3)
-                    throw CopyError(Some(i + 1), s"rejected $k")
-                }
-            })
-          sink.write(keyed.repartition(4))
-        },
-        workers = 3)
-      val summary = migrator.migrate(cat, createTables = false,
-        withIndexes = false, withFKeys = false, resetSequences = false)
-      val rows = summary.tables.map(st =>
-        (st.table, st.rows, st.rejected)) :+
-        ("total", summary.totalRows, summary.totalRejected)
-      import s.implicits._
-      rows.toDF("table_name", "rows_sent", "rows_rejected")
-        .orderBy(col("table_name"))
-    }),
-
-    // §2.1 database source end-to-end against a REAL embedded database
-    // (Derby): load through the batched-INSERT sink endpoint, introspect
-    // the catalog over JDBC metadata, cast it, read back with a
-    // range-partitioned Spark JDBC scan (mysql.lisp:10-62 shape).
-    "jdbc_migrate" -> ((s, dir) => {
-      // every 5th order: the fixture DB stays small while the partitioned
-      // read still splits into multiple JDBC ranges
-      val o = t(s, dir, "orders").filter(col("o_orderkey") % 5 === 0)
-        .select(
-          col("o_orderkey").cast("int").as("k"),
-          col("o_orderstatus").as("st"),
-          col("o_totalprice").as("p"))
-      // in-memory Derby subname (round 21): the fixture DB is rebuilt
-      // from parquet on every invocation, so the disk store bought
-      // nothing but page-file creation + write-ahead-log fsyncs on
-      // every INSERT batch (~1.9 s of driver-side wall at sf0.1, by
-      // far the query's largest cost). Same real Derby engine, same
-      // JDBC surface, same introspection/cast/partitioned-read path.
-      // ONE db per query name, table dropped + recreated per invocation
-      // (round 22, ADVICE r21): memory DBs live for the JVM, so the
-      // old nanoTime-unique subnames leaked one full fixture per run in
-      // repeated-run harnesses; a fixed subname bounds driver heap at
-      // one fixture regardless of repetitions.
-      val url = "jdbc:derby:memory:jdbc_derby_fixture;create=true"
-      val props = new java.util.Properties
-      val conn = java.sql.DriverManager.getConnection(url, props)
-      try {
-        val st = conn.createStatement()
-        try st.executeUpdate("DROP TABLE ORDERS_SRC")
-        catch { case _: java.sql.SQLException => () } // first run: absent
-        st.executeUpdate(
-          """CREATE TABLE ORDERS_SRC (
-               O_ORDERKEY INT NOT NULL PRIMARY KEY,
-               O_ORDERSTATUS VARCHAR(4),
-               O_TOTALPRICE DOUBLE)""")
-        st.close()
-      } finally conn.close()
-      val sink = new graft.sinks.CopySink(endpointFactory = _ =>
-        new graft.sinks.JdbcInsertEndpoint(url, new java.util.Properties,
-          "INSERT INTO ORDERS_SRC (O_ORDERKEY, O_ORDERSTATUS, O_TOTALPRICE)" +
-            " VALUES (?, ?, ?)", 3))
-      sink.write(o.repartition(4))
-      val cat = graft.sources.JdbcSource.introspect(url, props, Some("APP"))
-        .cast(Nil, graft.casting.DefaultCastRules.ansi)
-      val tbl = cat.allTables.find(_.name == "ORDERS_SRC").get
-      // introspected + cast catalog drives the read: 15k rows over 4k-row
-      // ranges → 4 JDBC partitions
-      val df = graft.sources.JdbcSource.read(s, url, props, tbl,
-        partitionColumn = Some("O_ORDERKEY"), rowsPerRange = 1000)
-      df.select(col("O_ORDERKEY").cast("long").as("o_orderkey"),
-          col("O_ORDERSTATUS").as("o_orderstatus"),
-          col("O_TOTALPRICE").as("o_totalprice"))
-        .orderBy(col("o_orderkey"))
-    }),
-
-    // §2.1 PG ctid-style predicate-partitioned scan: the reference splits
-    // a PG heap into ctid block ranges (pgsql.clj:206-208, 313-345) and
-    // runs one COPY per range; Spark's execution path for that is
-    // spark.read.jdbc(url, table, predicates, props) — one partition per
-    // WHERE clause (JdbcSource.readWithPredicates). No live PG in this
-    // container, so the SAME API is exercised against embedded Derby with
-    // key-range predicates shaped exactly like pgsqlCtidPredicates
-    // (half-open ranges, unbounded last) — disjoint + covering, so the
-    // union of partitions is the table.
-    "jdbc_predicates_read" -> ((s, dir) => {
-      val c = t(s, dir, "customer").filter(col("c_custkey") % 10 === 0)
-        .select(col("c_custkey").cast("int").as("k"),
-          col("c_name").as("nm"),
-          col("c_acctbal").cast("double").as("bal"))
-      // in-memory Derby, same rationale (and round-22 one-db-per-query
-      // heap bound) as jdbc_migrate above
-      val url = "jdbc:derby:memory:jdbc_pred_derby_fixture;create=true"
-      val props = new java.util.Properties
-      val conn = java.sql.DriverManager.getConnection(url, props)
-      try {
-        val st = conn.createStatement()
-        try st.executeUpdate("DROP TABLE CUST_SRC")
-        catch { case _: java.sql.SQLException => () } // first run: absent
-        st.executeUpdate(
-          """CREATE TABLE CUST_SRC (
-               K INT NOT NULL PRIMARY KEY,
-               NM VARCHAR(40),
-               BAL DOUBLE)""")
-        st.close()
-      } finally conn.close()
-      val sink = new graft.sinks.CopySink(endpointFactory = _ =>
-        new graft.sinks.JdbcInsertEndpoint(url, new java.util.Properties,
-          "INSERT INTO CUST_SRC (K, NM, BAL) VALUES (?, ?, ?)", 3))
-      sink.write(c.repartition(4))
-      val preds = Seq( // ctid-range shape: '(0,0)'≤ … <'(500,0)', etc.
-        "K < 500", "K >= 500 AND K < 1000", "K >= 1000")
-      val df = graft.sources.JdbcSource.readWithPredicates(
-        s, url, props, "CUST_SRC", preds)
-      require(df.rdd.getNumPartitions == preds.length,
-        s"predicate read must give one partition per range, got " +
-          s"${df.rdd.getNumPartitions}")
-      df.select(col("K").cast("long").as("k"), col("NM").as("nm"),
-          col("BAL").as("bal"))
-        .orderBy(col("k"))
-    }),
-
-    // §2.1 IXF scan: the reference's own nsitra.test1.ixf fixture read
-    // by the PC/IXF binary reader; the oracle is the reference's
-    // regress/expected/ixf.out golden as a VALUES literal.
-    "ixf_roundtrip" -> ((s, dir) => {
-      graft.sources.IxfSource
-        .read(s, "/root/reference/test/data/nsitra.test1.ixf")
-        .select(col("test1_id").cast("int").as("test1_id"),
-          col("intcol").cast("int").as("intcol"),
-          col("intcal_notnull").cast("int").as("intcal_notnull"),
-          col("charcol15"), col("charcol15_notnull"),
-          col("varcharcol16"), col("varcharcol16_notnull"))
-        .orderBy(col("test1_id"))
-    }),
-
-    // §3.1 the DSL entry point: .load text → Parser → LoadCommand →
-    // PlanBuilder → DataFrame, over a generated tab-separated file —
-    // glob source, skip header, null-if, point USING sexp, upcase sexp.
-    "dsl_csv_districts" -> ((s, dir) => {
-      val n = t(s, dir, "nation").select(
-        col("n_nationkey"), col("n_name"), col("n_regionkey"),
-        when(col("n_nationkey") % 5 === 0, lit("N/A"))
-          .otherwise(col("n_name")).as("maybe_null"))
-      val path = scratch("dsl_csv_districts")
-      n.coalesce(1).write.option("sep", "\t").option("header", "true")
-        .mode("overwrite").csv(path)
-      val abs = new java.io.File(path).getAbsolutePath
-      val loadText =
-        """LOAD CSV
-           FROM all filenames matching ~/part.*csv$/ in directory '""" +
-          abs + """'
-           HAVING FIELDS (
-              n_nationkey,
-              n_name,
-              n_regionkey,
-              maybe_null [null if 'N/A']
-           )
-           INTO postgresql:///graft
-           TARGET TABLE nations
-           TARGET COLUMNS (
-              n_nationkey,
-              n_name,
-              maybe_null,
-              location point using (format nil "(~a,~a)" n_regionkey n_nationkey),
-              upper_name using (string-upcase n_name)
-           )
-           WITH skip header = 1,
-                fields terminated by '\t',
-                batch rows = 200
-           BEFORE LOAD DO """ + "$$ drop table if exists nations; $$;"
-      val cmd = graft.dsl.Parser.parse(loadText)
-      graft.dsl.PlanBuilder.build(s, cmd, baseDir = abs)
-        .select(col("n_nationkey").cast("int").as("n_nationkey"),
-          col("n_name"), col("maybe_null"), col("location"),
-          col("upper_name"))
-        .orderBy(col("n_nationkey"))
-    }),
-
-    // §2.1 fixed-width scan: substring extraction + ragged right lines
-    "fixed_width" -> ((s, dir) => {
-      val n = t(s, dir, "nation")
-      val lines = n.select(concat(
-        rpad(col("n_nationkey").cast("string"), 4, " "),
-        rpad(col("n_name"), 20, " "),
-        // ragged: every 3rd line omits the last field
-        when(col("n_nationkey") % 3 === 0, lit(""))
-          .otherwise(col("n_regionkey").cast("string"))).as("line"))
-      FixedWidth.project(lines, "line", Seq(
-          FixedWidth.FieldPos("n_nationkey", 0, 4),
-          FixedWidth.FieldPos("n_name", 4, 20),
-          FixedWidth.FieldPos("n_regionkey", 24, 4)))
-        .select(
-          trim(col("n_nationkey")).cast("int").as("n_nationkey"),
-          rtrim(col("n_name")).as("n_name"),
-          trim(col("n_regionkey")).cast("int").as("n_regionkey"))
-        .orderBy(col("n_nationkey"))
-    }),
-
-    // §2.1 multi-file glob: several part files read as one source
-    "multi_file_glob" -> ((s, dir) => {
-      val r = t(s, dir, "region")
-      val path = scratch("multi_file_glob")
-      r.repartition(3).write.mode("overwrite").option("sep", "\t").csv(path)
-      CsvSource.read(s, path, CsvDialect(separator = '\t'),
-          Seq("r_regionkey", "r_name"))
-        .select(col("r_regionkey").cast("int").as("r_regionkey"),
-          col("r_name"))
-        .orderBy(col("r_regionkey"))
-    }),
-
-    // §2.9 extension: Structured Streaming windowed agg over events
-    // (watermark + 5-min tumbling window → foreachBatch COPY sink)
-    "events_stream_agg" -> ((s0, dir) => {
-      // dedicated session: streaming state-store partition count follows
-      // shuffle.partitions; 8 is plenty for the window/type key space and
-      // cuts per-microbatch state overhead
-      val s = s0.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      // update mode emits on CHANGE during data batches; the extra
-      // no-data micro-batch Spark schedules after a watermark advance
-      // only matters for append finalization / state eviction, and on
-      // this finite source it costs a full state-store round for zero
-      // emitted rows
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
-      // streaming file source wants a directory: glob-filter the table
-      val stream = s.readStream.schema(rawSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(dir)
-        .transform(normalizeEventTs)
-      val agg = stream
-        .withWatermark("ts", "10 minutes")
-        .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast(DecimalType(18, 6))).cast("double")
-            .as("total_value"))
-      // foreachBatch → CopySink (SURVEY §7.10): every micro-batch writes
-      // through the distributed COPY sink — nothing accumulates on the
-      // driver (the memory sink is test scaffolding only). UPDATE mode:
-      // each batch emits only the windows that CHANGED in that batch, so
-      // per-batch sink I/O is proportional to the batch, not to the
-      // ever-growing window keyspace (complete mode rewrites the whole
-      // snapshot every micro-batch — unbounded at 100× with a growing
-      // window range). The sink is merge-on-read: batch dirs are keyed
-      // by batchId, and the read takes the LATEST emission per
-      // (window, event_type) — the standard upsert-sink contract for
-      // update-mode streams.
-      val merged = updateStreamViaCopySink(s, agg, "events_stream_sink",
-        b => b.select(col("window.start").as("w_start"),
-          col("event_type"), col("n"), col("total_value")),
-        Seq("w_start", "event_type", "n", "total_value"),
-        Seq("w_start", "event_type"))
-      merged
-        .select(col("w_start").cast("timestamp").as("w_start"),
-          col("event_type"), col("n").cast("long").as("n"),
-          col("total_value").cast("double").as("total_value"))
-        .orderBy(col("w_start"), col("event_type"))
-    }),
-
-    // §2.9 extension: streaming exact dedup — dropDuplicates state
-    // across micro-batches, append mode emits each key once. On an
-    // unbounded stream you'd bound the state with
-    // dropDuplicatesWithinWatermark (see SessionizeSpec's streaming
-    // variant); this finite source wants the exact global contract.
-    "events_stream_dedup" -> ((s0, dir) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
-      val stream = s.readStream.schema(rawSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(dir)
-      val keys = stream.select(col("user_id"), col("event_type"))
-        .dropDuplicates("user_id", "event_type")
-      val outRoot = new java.io.File(scratch("events_stream_dedup_sink"))
-        .getAbsolutePath
-      val q = keys.writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.write.mode("append").parquet(outRoot)
-          ()
-        }
-        .start()
-      q.processAllAvailable(); q.stop()
-      s.read.parquet(outRoot).orderBy(col("user_id"), col("event_type"))
-    }),
-
-    // MOSS winnowing fingerprints (k=3-gram hashes, w=4 windows,
-    // rightmost-minimal rule): md5 variant so the oracle reproduces the
-    // SELECTION, not just the grouping
-    "winnow_fingerprint" -> ((s, dir) => {
-      graft.pipeline.TextAnalysis.winnow(t(s, dir, "documents"),
-          "doc_id", "text", k = 3, w = 4, hash = md5(_))
-        .select(col("id").as("doc_id"),
-          col("fp_pos").cast("long").as("fp_pos"), col("fp_hash"))
-        .orderBy(col("doc_id"), col("fp_pos"))
-    }),
-
-    // per-type z-score outliers over event values: exact-decimal
-    // moments broadcast back onto the rows, z emitted as integer micros
-    "value_outliers" -> ((s, dir) => {
-      graft.operators.Profile.outliers(
-          t(s, dir, "events")
-            .select(col("event_id"), col("event_type"), col("value")),
-          "event_type", "value", zThreshold = 2.5)
-        .select(col("event_id"), col("event_type"), col("value"),
-          col("z_micro"))
-        .orderBy(col("event_id"))
-    }),
-
-    // streaming ordered-step funnel: per-user stateful chain over a
-    // watermarked stream, emitted when the user goes quiet; sentinel
-    // rows advance the watermark in two phases so every user's timeout
-    // fires deterministically. Must equal the BATCH funnel exactly.
-    "events_stream_funnel" -> ((s0, dir) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      // round 22: same setting every other streaming query here uses —
-      // the funnel was paying a no-data micro-batch (a full state-store
-      // round for zero rows) after EACH of its two phases. The
-      // two-phase sentinel design never relied on them: phase 2's DATA
-      // batch runs with the watermark phase 1 advanced (sent1 − 1s,
-      // margin 3h past every user's quiet window), so every user
-      // timeout fires there deterministically either way.
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      val e = t(s, dir, "events")
-        .select(col("user_id"), col("ts"), col("event_type"))
-      val maxUs = e.agg(max(unix_micros(col("ts")))).head().getLong(0)
-      val sent1 = maxUs + 3L * 3600L * 1000000L // quiet 60 min + margin
-      val srcRoot = new java.io.File(scratch("events_stream_funnel_src"))
-        .getAbsolutePath
-      // one explicit slice: bare range(1) defaults to defaultParallelism
-      // slices — 32 tasks and 32 part files (31 empty) per sentinel
-      // append, all of which the phase-2 micro-batch then lists + reads
-      def sentinel(uid: Long, us: Long) =
-        s.range(0, 1, 1, 1).select(lit(uid).as("user_id"),
-          timestamp_micros(lit(us)).as("ts"),
-          lit("noop").as("event_type"))
-      e.unionAll(sentinel(-1L, sent1)).coalesce(1)
-        .write.mode("overwrite").parquet(srcRoot)
-      import s.implicits._
-      val stream = s.readStream
-        .schema(s.read.parquet(srcRoot).schema).parquet(srcRoot)
-        .withWatermark("ts", "1 second")
-        .select(col("user_id").cast("long"), col("ts"), col("event_type"))
-        .as[(Long, java.sql.Timestamp, String)]
-      val out = graft.streaming.FunnelStream.streaming(stream,
-        Seq("signup", "click", "purchase"), quietMinutes = 60)
-      val outRoot = new java.io.File(scratch("events_stream_funnel_sink"))
-        .getAbsolutePath
-      val q = out.toDF("user_id", "chain").writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(outRoot)
-          ()
-        }
-        .start()
-      // phase 1: all real events + sentinel1 process; watermark advances
-      q.processAllAvailable()
-      // phase 2: sentinel2 triggers a DATA batch in which every user's
-      // timeout (< the now-advanced watermark) fires
-      sentinel(-2L, sent1 + 3600L * 1000000L)
-        .write.mode("append").parquet(srcRoot)
-      q.processAllAvailable()
-      q.stop()
-      def step(i: Int) = {
-        val c = col("chain").getItem(i)
-        when(c === -1L, lit(null).cast("long")).otherwise(c)
-      }
-      s.read.parquet(outRoot)
-        .filter(col("user_id") >= 0 && col("chain").getItem(0) =!= -1L)
-        .select(col("user_id"), step(0).as("t1_us"), step(1).as("t2_us"),
-          step(2).as("t3_us"))
-        .orderBy(col("user_id"))
-    }),
-
-    // CDC latest-wins merge: the change-log → current-state collapse.
-    // Version key = micros-truncated ts (both engines see the same
-    // deterministic ns→us truncation of the parquet TIMESTAMP(NANOS);
-    // DuckDB's reader truncates to its us-native TIMESTAMP on read),
-    // sub-microsecond ties broken by event_id.
-    "upsert_latest" -> ((s, dir) => {
-      val e = t(s, dir, "events")
-      graft.operators.Upsert
-        .latestByKey(e, Seq("user_id"), Seq(col("ts"), col("event_id")))
-        .select(col("user_id"), col("event_id").as("last_event_id"),
-          unix_micros(col("ts")).as("ts_us"),
-          col("event_type").as("last_type"),
-          col("value").as("last_value"))
-        .orderBy(col("user_id"))
-    }),
-
-    // rolling per-user 1h/24h activity features (range frames over
-    // epoch-micros; sums over integer cents — float window sums are
-    // order-dependent, so doubles never enter a rolling sum)
-    "rolling_features" -> ((s, dir) => {
-      val e = t(s, dir, "events").select(col("event_id"), col("user_id"),
-        unix_micros(col("ts")).as("us"),
-        floor(col("value") * 100).cast("long").as("cents"))
-      graft.operators.RollingFeatures.withActivity(e, Seq("user_id"),
-          "us", lookbacks = Seq("1h" -> 3600000000L,
-            "24h" -> 86400000000L), sumCols = Seq("cents"))
-        .select(col("event_id"), col("user_id"), col("us"),
-          col("n_1h"), col("sum_cents_1h"),
-          col("n_24h"), col("sum_cents_24h"))
-        .orderBy(col("event_id"))
-    }),
-
-    // deterministic per-source mixture sampling: rare sources kept
-    // whole, dominant ones thinned — md5-fraction Bernoulli, so
-    // reruns/oracles keep identical rows (no rand())
-    "weighted_sample" -> ((s, dir) => {
-      val rates = Map("src0" -> 1.0, "src1" -> 0.5, "src2" -> 0.25)
-      Curation.weightedSample(t(s, dir, "documents"), "source",
-          "doc_id", rates, defaultRate = 0.75)
-        .select(col("doc_id"), col("source"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // salted skew join: every event joined to its user's first signup.
-    // The salt routes rows and cancels out — oracle is the PLAIN join,
-    // which must match row for row (see SaltedJoin).
-    "salted_join" -> ((s, dir) => {
-      val e = t(s, dir, "events")
-      val dims = e.filter(col("event_type") === "signup")
-        .groupBy("user_id")
-        .agg(min("event_id").as("first_signup_id"))
-      graft.operators.SaltedJoin.join(
-          e.select(col("event_id"), col("user_id"), col("event_type")),
-          dims, Seq("user_id"), factor = 8)
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          col("first_signup_id"))
-        .orderBy(col("event_id"))
-    }),
-
-    // range join: orders against overlapping price bands (width 35k,
-    // stride 20k — most orders match 2 bands). Grid-bucketed equi-join
-    // (see RangeJoin); oracle is the plain BETWEEN join.
-    "range_join" -> ((s, dir) => {
-      val bands = s.range(0, 30, 1, 1).select(col("id").as("band_id"),
-        (col("id") * 20000.0).as("lo"),
-        (col("id") * 20000.0 + 34999.0).as("hi"))
-      val pts = t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_totalprice"))
-      graft.operators.RangeJoin.pointInInterval(pts, "o_totalprice",
-          bands, "lo", "hi", cellSize = 5000L)
-        .select(col("o_orderkey"), col("band_id"),
-          col("o_totalprice"))
-        .orderBy(col("o_orderkey"), col("band_id"))
-    }),
-
-    // as-of join: every click gets the user's newest at-or-before
-    // purchase. Tagged-union shape — ONE shuffle on user_id, no pair
-    // blow-up (see AsOfJoin); oracle finds the same row by LATERAL
-    // keep-1, a deliberately different algorithm with identical
-    // semantics. Sub-microsecond ties resolve by event_id.
-    "asof_join" -> ((s, dir) => {
-      val e = t(s, dir, "events")
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("pts"),
-          col("event_id").as("last_purchase_id"),
-          col("value").as("last_purchase_value"))
-      graft.operators.AsOfJoin.asOf(clicks, purchases, Seq("user_id"),
-          "ts", "pts", Seq("last_purchase_id", "last_purchase_value"),
-          tieBreak = Seq("last_purchase_id"))
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("ts_us"),
-          col("last_purchase_id"), col("last_purchase_value"))
-        .orderBy(col("event_id"))
-    }),
-
-    // §2.9 extension: gap-based sessionization (30-min gap). The batch
-    // variant shares its session fold with the flatMapGroupsWithState
-    // streaming variant (unit-tested with MemoryStream + watermark).
-    "events_sessionize" -> ((s, dir) => {
-      graft.streaming.Sessionize
-        .batch(t(s, dir, "events"), "user_id", "ts", gapMinutes = 30)
-        .orderBy(col("user_id"), col("session_start_us"))
-    }),
-
-    // ---- training-data pipeline extensions ----
-
-    // exact dedup (hash-groupBy) over an inflated corpus with known dups
-    "dedup_exact" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val inflated = d.select(col("doc_id"), col("text")).unionAll(
-        d.filter(col("doc_id") % 10 === 0)
-          .select((col("doc_id") + 10000).as("doc_id"), col("text")))
-      Dedup.exact(inflated, "doc_id", "text")
-        .orderBy(col("keep_id"))
-    }),
-
-    // incremental dedup: a new batch (odd docs + re-submitted evens +
-    // an intra-batch duplicate wave) against the already-kept corpus
-    // (even docs). Re-submitted corpus content drops; intra-batch dups
-    // group to the lowest id.
-    "dedup_incremental" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val corpus = d.filter(col("doc_id") % 2 === 0)
-      val batch = d.filter(col("doc_id") % 2 === 1)
-        .unionAll(d.filter(col("doc_id") % 10 === 0)
-          .select((col("doc_id") + 20000).as("doc_id"), col("text")))
-        .unionAll(d.filter(col("doc_id") % 10 === 1)
-          .select((col("doc_id") + 30000).as("doc_id"), col("text")))
-      Dedup.incrementalExact(batch, corpus, "doc_id", "text")
-        .orderBy(col("keep_id"))
-    }),
-
-    // hashed-linear classifier inference (fastText-style quality gate):
-    // integer milli-unit margins so the fold is engine-exact, md5
-    // bucketing so the oracle reproduces the hash table
-    "quality_classifier" -> ((s, dir) => {
-      Classifier.scoreHashed(t(s, dir, "documents"), "doc_id", "text",
-          Classifier.scrambledWeightsMilli(1024), biasMilli = 250L)
-        .orderBy(col("doc_id"))
-    }),
-
-    // preflight constraint validation: target-table type + NOT NULL
-    // checks as one projection, rejects classified with reasons before
-    // any server sees the rows (the scale inversion of PG-error-driven
-    // batch bisect)
-    "preflight_validate" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      // staged all-string rows with planted defects: every 7th id is
-      // unparseable, every 11th clerk is NULL
-      val staged = o.select(col("o_orderkey"),
-        when(col("o_orderkey") % 7 === 0,
-          concat(lit("x"), col("o_orderkey")))
-          .otherwise(col("o_orderkey").cast("string")).as("id_str"),
-        when(col("o_orderkey") % 11 === 0, lit(null: String))
-          .otherwise(col("o_orderstatus")).as("clerk"))
-      graft.operators.Validate.preflight(staged, Seq(
-          graft.operators.Validate.Rule("id_str", "int"),
-          graft.operators.Validate.Rule("clerk", "string", notNull = true)))
-        .select(col("o_orderkey"), col("valid"),
-          array_join(col("reasons"), ";").as("why"))
-        .orderBy(col("o_orderkey"))
-    }),
-
-    // classifier evaluation: ROC-AUC of the hashed-linear margin
-    // against the lang=='en' weak label — exact Mann–Whitney with tie
-    // pairs over distinct-margin groups, one double division at the end
-    "classifier_auc" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val scored = Classifier.scoreHashed(docs, "doc_id", "text",
-          Classifier.scrambledWeightsMilli(1024), biasMilli = 250L)
-        .join(docs.select(col("doc_id"),
-          (col("lang") === "en").as("y")), "doc_id")
-      Classifier.aucByLabel(scored, "margin_milli", "y")
-        .select(col("n_pos"), col("n_neg"), col("wins"),
-          col("tie_pairs"), col("auc_micro"))
-    }),
-
-    // corpus-relative quality gate: keep the top half by classifier
-    // margin (exact percentile threshold over integer margins)
-    "quality_filter" -> ((s, dir) => {
-      val scored = Classifier.scoreHashed(t(s, dir, "documents"),
-        "doc_id", "text", Classifier.scrambledWeightsMilli(1024),
-        biasMilli = 250L)
-      // materialize the narrow (id, margin) frame once: the threshold
-      // and filter passes otherwise re-run md5-per-token scoring twice
-      // (2.3× warm at sf0.1, 2.7× at 10× — ProfileScale round 10)
-      Classifier.filterByMarginPercentile(scored, "margin_milli", 0.5,
-          checkpointScored = true)
-        .select(col("doc_id"), col("margin_milli"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // connected components over a pair graph + survivor selection: turns
-    // pairwise near-dup matches into dedup GROUPS and picks the keeper
-    // (longest text, ties → smallest id) per group. The edge list is
-    // built deterministically from doc ids — chains of 3 every 5 ids,
-    // bridged into 6-node components every 50 — so components are
-    // multi-hop and the oracle (DuckDB recursive CTE) walks the same
-    // graph to its transitive closure.
-    "dedup_components" -> ((s0, dir) => {
-      // dedicated session: the pair graph is FAR smaller than the corpus
-      // (candidate pairs, not documents), so the iterative joins want
-      // few shuffle partitions — DERIVED from the edge count (one cheap
-      // count of the already-narrow edge frame), not pinned: target
-      // ~1M edges per partition, floor 4, so the same rule that gives
-      // this fixture 4 gives a 10^10-edge production graph ~10^4
-      val s = s0.newSession()
-      val d0 = t(s0, dir, "documents")
-      val nDocs = d0.select(col("doc_id")).count()
-      // the synthetic graph below emits ~(2/5 + 1/50)·n edges
-      val edgeEstimate = nDocs * 2L / 5L + nDocs / 50L
-      val parts = math.max(4L, edgeEstimate / 1000000L).toString
-      s.conf.set("spark.sql.shuffle.partitions", parts)
-      val d = t(s, dir, "documents")
-      val ids = d.select(col("doc_id").cast("long").as("id"))
-      val five = ids.filter(col("id") % 5 === 0)
-      val edges = five.select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
-        .unionAll(five.select((col("id") + 1).as("id_a"),
-          (col("id") + 2).as("id_b")))
-        .unionAll(ids.filter(col("id") % 50 === 0)
-          .select(col("id").as("id_a"), (col("id") + 11).as("id_b")))
-      val comp = Dedup.connectedComponents(edges)
-      val scores = d.select(col("doc_id").cast("long").as("id"),
-        length(col("text")).cast("long").as("score"))
-      val keep = Dedup.survivors(comp, scores)
-      comp.join(keep, "component")
-        .select(col("id"), col("component"), col("keep_id"))
-        .orderBy(col("id"))
-    }),
-
-    // MinHash + LSH near-dup pairs (exact dups collide in every band)
-    "dedup_minhash" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val inflated = d.select(col("doc_id"), col("text")).unionAll(
-        d.filter(col("doc_id") % 10 === 0)
-          .select((col("doc_id") + 10000).as("doc_id"), col("text")))
-      // 64 perms / 16 bands of 4: detection prob at jaccard 0.9 is
-      // 1-(1-0.9^4)^16 ≈ 1-5e-8, and every candidate is verified by
-      // exact jaccard — half the signature compute of 128/32 for free
-      Dedup.minhashLsh(inflated, "doc_id", "text",
-          numPerms = 64, bands = 16, k = 3, threshold = 0.9)
-        .select(col("id_a"), col("id_b"))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // SimHash candidate generation (64-bit signature collision) + exact
-    // text-equality verification — recall 1 on exact dups, oracle-checkable
-    "dedup_simhash" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val inflated = d.select(col("doc_id"), col("text")).unionAll(
-        d.filter(col("doc_id") % 10 === 0)
-          .select((col("doc_id") + 10000).as("doc_id"), col("text")))
-      Dedup.simhashExactPairs(inflated, "doc_id", "text")
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // n-gram Jaccard near-dup pairs
-    "dedup_ngram" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val inflated = d.select(col("doc_id"), col("text")).unionAll(
-        d.filter(col("doc_id") % 10 === 0)
-          .select((col("doc_id") + 10000).as("doc_id"), col("text")))
-      Dedup.ngramJaccard(inflated, "doc_id", "text", n = 3, threshold = 0.95)
-        .select(col("id_a"), col("id_b"), col("jaccard"))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // embedding cosine near-dup via BANDED hyperplane LSH: exact copies
-    // (cosine 1) AND genuinely-near perturbed copies (first element
-    // ×1.1, cosine >= 0.9993 on this data; natural pairs top out at
-    // 0.601) must all surface at threshold 0.99 — the recall the
-    // single-bucket shape couldn't deliver
-    "dedup_embedding" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val vecD = transform(col("embedding"), x => x.cast("double"))
-      val perturbed = concat(
-        array(element_at(col("embedding"), 1).cast("double") * 1.1),
-        slice(vecD, 2, 63))
-      val inflated = e.select(col("vec_id"), vecD.as("embedding"))
-        .unionAll(e.filter(col("vec_id") % 10 === 0)
-          .select((col("vec_id") + 10000).as("vec_id"),
-            vecD.as("embedding")))
-        .unionAll(e.filter(col("vec_id") % 7 === 0)
-          .select((col("vec_id") + 20000).as("vec_id"),
-            perturbed.as("embedding")))
-      // bitsPerBand 16 per the operator's own sizing guidance — the
-      // 8-bit keys this query previously passed put the 10x corpus in
-      // 256 buckets/band, the measured-quadratic shape the comment in
-      // Dedup.embeddingNearDup warns against
-      Dedup.embeddingNearDup(inflated, "vec_id", "embedding",
-          dim = 64, bands = 8, bitsPerBand = 16, threshold = 0.99)
-        .select(col("id_a"), col("id_b"))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // brute-force cosine top-k (exact integer-quantized scoring so the
-    // ranking is engine-independent)
-    "similarity_bruteforce" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val qe = (c: Column) =>
-        transform(c, x => round(x.cast("double") * 1000).cast("long"))
-      val queries = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), qe(col("embedding")).as("q_vec"))
-      val corpus = e.filter(col("vec_id") >= 5)
-        .select(col("vec_id").as("c_id"), qe(col("embedding")).as("c_vec"))
-      val scored = corpus.crossJoin(broadcast(queries))
-        .select(col("q_id"), col("c_id"),
-          aggregate(zip_with(col("q_vec"), col("c_vec"), (x, y) => x * y),
-            lit(0L), (acc, v) => acc + v).as("score"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("q_id"))
-        .orderBy(col("score").desc, col("c_id").asc)
-      scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 3)
-        .select(col("q_id"), col("c_id"), col("rank"), col("score"))
-        .orderBy(col("q_id"), col("rank"))
-    }),
-
-    // hard-pair mining for contrastive training: per anchor, top-3
-    // most-similar DIFFERENT-label vectors (hard negatives) and top-3
-    // least-similar SAME-label vectors (hard positives); milli-quantized
-    // integer dot products keep ranking engine-exact
-    "hard_negatives" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val qe = (c: Column) =>
-        transform(c, x => round(x.cast("double") * 1000).cast("long"))
-      val anchors = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("a_id"), qe(col("embedding")).as("a_vec"),
-          col("label").as("a_label"))
-      val corpus = e.filter(col("vec_id") >= 5)
-        .select(col("vec_id").as("c_id"), qe(col("embedding")).as("c_vec"),
-          col("label").as("c_label"))
-      graft.pipeline.Similarity.hardPairs(anchors, corpus, k = 3,
-          checkpointScored = true)
-        .select(col("a_id"), col("kind"), col("rank"), col("c_id"),
-          col("score").cast("long").as("score"))
-        .orderBy(col("a_id"), col("kind"), col("rank"))
-    }),
-
-    // LSH-bucketed ANN (scale path). Oracle = recall gate: the LSH top-k
-    // must recover >= 2/3 of the exact brute-force top-k per query.
-    // Random hyperplane LSH only has signal for STRONG neighbors (random
-    // corpus vectors at cos≈0.4 collide with negligible probability — by
-    // design), so the corpus is salted with deterministic near-copies of
-    // each query (cos≈0.9999): exactly the planted-near-dup shape the
-    // operator exists to find.
-    "similarity_lsh" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"))
-      val queries = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      val natural = e.filter(col("vec_id") >= 5)
-        .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
-      val planted = (0 until 3).map { j =>
-        queries.select((col("q_id") * 100 + 100000 + j).as("c_id"),
-          transform(col("q_vec"), (x, i) =>
-            x.cast("double") +
-              (pmod(i * 31 + lit(j * 17), lit(7)) - 3).cast("double") * 0.002)
-            .as("c_vec"))
-      }.reduce(_ unionAll _)
-      val corpus = natural.select(col("c_id"),
-        transform(col("c_vec"), x => x.cast("double")).as("c_vec"))
-        .unionAll(planted)
-      val lsh = Similarity.lshTopK(queries, corpus, k = 3, dim = 64,
-        planes = 12, probes = 12)
-      val bf = Similarity.bruteForceTopK(queries, corpus, k = 3)
-      val overlap = lsh.select(col("q_id"), col("c_id"))
-        .join(bf.select(col("q_id"), col("c_id")), Seq("q_id", "c_id"))
-        .groupBy(col("q_id")).agg(count(lit(1)).as("n_common"))
-      queries.select(col("q_id")).join(overlap, Seq("q_id"), "left")
-        .select(col("q_id"),
-          (coalesce(col("n_common"), lit(0L)) >= 2).cast("int")
-            .as("recall_ok"))
-        .orderBy(col("q_id"))
-    }),
-
-    // Product-quantization ANN: sample-trained per-subspace codebooks,
-    // corpus stored as m=4 codes, ADC table-lookup scoring. Integer-
-    // quantized domain end to end (floor-division centroids, integer
-    // distances) so the ranking is engine-exact. Oracle = recall gate:
-    // the PQ top-3 must recover >= 2 of the exact brute-force top-3
-    // (the planted near-duplicates).
-    "similarity_pq" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"))
-      val qe = (c: Column) =>
-        transform(c, x => round(x.cast("double") * 1000).cast("long"))
-      val queries = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), qe(col("embedding")).as("q_vec"))
-      val natural = e.filter(col("vec_id") >= 5)
-        .select(col("vec_id").as("c_id"), qe(col("embedding")).as("c_vec"))
-      // 3 planted near-duplicates per query: ±6 quantized units of
-      // deterministic per-position noise
-      val planted = (0 until 3).map { j =>
-        queries.select((col("q_id") * 100 + 100000 + j).as("c_id"),
-          transform(col("q_vec"), (x, i) =>
-            x + (pmod(i * 31 + lit(j * 17), lit(7)) - 3) * 2L)
-            .as("c_vec"))
-      }.reduce(_ unionAll _)
-      val corpus = natural.unionAll(planted)
-      // codebooks are sample-trained (every 3rd natural vector)
-      val sample = natural.filter(col("c_id") % 3 === 0)
-      val codebook = Similarity.pqTrain(sample, "c_id", "c_vec",
-        dim = 64, m = 4, ksub = 16, iters = 1)
-      val codes = Similarity.pqEncode(corpus, "c_id", "c_vec",
-        codebook, dim = 64, m = 4)
-      val pq = Similarity.pqTopK(queries, codes, codebook,
-        dim = 64, m = 4, k = 3)
-      val bf = Similarity.bruteForceTopK(queries, corpus, k = 3)
-      val overlap = pq.select(col("q_id"), col("c_id"))
-        .join(bf.select(col("q_id"), col("c_id")), Seq("q_id", "c_id"))
-        .groupBy(col("q_id")).agg(count(lit(1)).as("n_common"))
-      queries.select(col("q_id")).join(overlap, Seq("q_id"), "left")
-        .select(col("q_id"),
-          (coalesce(col("n_common"), lit(0L)) >= 2).cast("int")
-            .as("recall_ok"))
-        .orderBy(col("q_id"))
-    }),
-
-    // IVF-bucketed ANN: corpus in nearest-centroid cells, queries probe
-    // nprobe cells. Oracle = recall gate vs exact brute force (>= 9/10).
-    // Ground truth is CONSTRUCTED: 10 near-copies of each query vector
-    // planted in the corpus (cosine ≈ 1 ≫ the ~0.5 random background),
-    // because that is IVF's actual contract — high-recall retrieval of
-    // genuinely-near neighbors. The synthetic base embeddings are
-    // near-uniform random, where top-10 "neighbors" are arbitrary
-    // points spread across all cells and NO sublinear probe can reach
-    // recall 0.9 (measured: nprobe=16 of 23 cells still missed) — a
-    // gate on that would force nprobe ≈ nlist and quietly turn the
-    // query into brute force.
-    "similarity_ivf" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"))
-      val queries = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      // plant 10 perturbed copies per query (one dimension nudged — a
-      // pure scale change would leave cosine at exactly 1)
-      val planted = queries
-        .select(col("q_id"), explode(sequence(lit(0), lit(9))).as("j"),
-          col("q_vec"))
-        .select((lit(90000000L) + col("q_id") * 100 + col("j")).as("c_id"),
-          transform(col("q_vec"), (x, i) =>
-            when(i === col("j"), x + lit(0.02f)).otherwise(x))
-            .as("c_vec"))
-      val corpus = e.filter(col("vec_id") >= 5)
-        .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
-        .unionAll(planted)
-      // deterministic centroid seeds drawn from the corpus itself, with
-      // the deployment sizing rule nlist ∝ √n (one cheap count — the
-      // earlier fixed 1%-of-corpus rule made assignment cost n×nlist
-      // grow quadratically in corpus size, charging the scale curve
-      // for the fixture instead of the operator)
-      val nCorpus = corpus.count()
-      val mod = math.max(1L, math.round(math.sqrt(nCorpus.toDouble)))
-      val centroids = e.filter(col("vec_id") >= 5 && col("vec_id") % mod === 7 % mod)
-        .select(col("vec_id").as("ct_id"), col("embedding").as("ct_vec"))
-      val ivf = Similarity.ivfTopK(queries, corpus, centroids,
-        k = 10, nprobe = 6)
-      val bf = Similarity.bruteForceTopK(queries, corpus, k = 10)
-      val overlap = ivf.select(col("q_id"), col("c_id"))
-        .join(bf.select(col("q_id"), col("c_id")), Seq("q_id", "c_id"))
-        .groupBy(col("q_id")).agg(count(lit(1)).as("n_common"))
-      queries.select(col("q_id")).join(overlap, Seq("q_id"), "left")
-        .select(col("q_id"),
-          (coalesce(col("n_common"), lit(0L)) >= 9).cast("int")
-            .as("recall_ok"))
-        .orderBy(col("q_id"))
-    }),
-
-    // text quality features + score
-    "text_quality" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val f = TextAnalysis.qualityFeatures(col("text"))
-      d.select(col("doc_id"),
-          f.getField("n_chars").as("n_chars"),
-          f.getField("n_tokens").as("n_tokens"),
-          f.getField("mean_token_len").as("mean_token_len"),
-          f.getField("punct_ratio").as("punct_ratio"),
-          f.getField("digit_ratio").as("digit_ratio"),
-          TextAnalysis.qualityScore(col("text")).as("quality"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // language identification (n-gram/stopword heuristic + CJK detection)
-    "text_langid" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"), TextAnalysis.langId(col("text")).as("lang_pred"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // token counting: whitespace + BPE-ish subword estimate
-    "text_token_count" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          TextAnalysis.tokenCount(col("text")).as("n_ws_tokens"),
-          TextAnalysis.bpeishTokenCount(col("text")).as("n_bpeish_tokens"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // rolling-hash document fingerprint. The hash value itself is
-    // engine-specific, but its equivalence classes are oracle-checkable:
-    // on this corpus, fp equality must coincide exactly with text
-    // equality (equal texts ⇒ equal fp; no collisions among distinct).
-    "text_fingerprint" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val inflated = d.select(col("doc_id"), col("text")).unionAll(
-        d.filter(col("doc_id") % 10 === 0)
-          .select((col("doc_id") + 10000).as("doc_id"), col("text")))
-      val fp = inflated.select(col("doc_id"),
-        TextAnalysis.fingerprint(col("text")).as("fp"))
-      fp.as("x").join(fp.as("y"),
-          col("x.fp") === col("y.fp") && col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // Gopher-style repetition quality features; both fractions follow
-    // the exact IEEE op order of the oracle SQL, so doubles hash-match
-    "text_repetition" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      Curation.repetitionFeatures(d, "doc_id", "text")
-        .select(col("id").as("doc_id"), col("dup_word_frac"),
-          col("top_bigram_frac"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // benchmark decontamination: docs sharing a word 3-gram with the
-    // held-out slice (doc_id % 97). n=3 because the synthetic corpus's
-    // small vocabulary has no longer overlaps; production default is 13
-    "decontaminate" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val bench = d.filter(col("doc_id") % 97 === 0)
-      val corpus = d.filter(col("doc_id") % 97 =!= 0)
-      Curation.decontaminate(corpus, bench, "doc_id", "text", n = 3)
-        .select(col("id").as("doc_id"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // streaming near-dup: the same contract as dedup_minhash, but
-    // candidates come from the streaming per-bucket-state operator
-    // consuming the corpus as a file stream (continuous ingest shape);
-    // verification is the shared batch exact-jaccard. Output must equal
-    // the batch pipeline's — the state op is batching-invariant.
-    "stream_neardup" -> ((s0, dir) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      val d = t(s, dir, "documents")
-      val inflated = d.select(col("doc_id"), col("text")).unionAll(
-        d.filter(col("doc_id") % 10 === 0)
-          .select((col("doc_id") + 10000).as("doc_id"), col("text")))
-      val srcRoot = new java.io.File(scratch("stream_neardup_src"))
-        .getAbsolutePath
-      inflated.write.mode("overwrite").parquet(srcRoot)
-      val stream = s.readStream.schema(inflated.schema).parquet(srcRoot)
-      val cands = graft.streaming.NearDup.candidatePairs(stream,
-        "doc_id", "text", numPerms = 64, bands = 16, k = 3)
-      val outRoot = new java.io.File(scratch("stream_neardup_sink"))
-        .getAbsolutePath
-      val q = cands.toDF("id_a", "id_b").writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(outRoot)
-          ()
-        }
-        .start()
-      q.processAllAvailable(); q.stop()
-      val pairs = s.read.parquet(outRoot).distinct()
-      Dedup.verifyPairs(pairs, inflated, "doc_id", "text",
-          k = 3, threshold = 0.9)
-        .select(col("id_a"), col("id_b"))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // fuzzy decontamination: corpus docs that NEARLY duplicate a
-    // benchmark doc (paraphrase-level overlap the exact n-gram semi-join
-    // misses). Bench rows are derived near-copies — two appended words —
-    // so the expected jaccard is exactly computable from gram sets.
-    "decontaminate_fuzzy" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val bench = d.filter(col("doc_id") % 40 === 0)
-        .select((col("doc_id") + 200000).as("doc_id"),
-          concat(col("text"), lit(" zq xq")).as("text"))
-      Dedup.minhashLshBipartite(d, bench, "doc_id", "text",
-          numPerms = 64, bands = 16, k = 3, threshold = 0.9)
-        .select(col("id_a").as("doc_id"), col("id_b").as("bench_id"),
-          col("jaccard"))
-        .orderBy(col("doc_id"), col("bench_id"))
-    }),
-
-    // asymmetric containment decontamination: bench items are TRUNCATED
-    // doc prefixes, so Jaccard vs the full doc dilutes but containment
-    // stays 1.0 — the contamination shape symmetric gating misses
-    "decontaminate_containment" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val bench = d.filter(col("doc_id") % 37 === 0)
-        .select((col("doc_id") + 500000).as("doc_id"),
-          array_join(slice(split(col("text"), "\\s+"), 1, 20), " ")
-            .as("text"))
-      Curation.benchContainment(d, bench, "doc_id", "text", n = 5,
-          threshold = 0.6)
-        .select(col("id").as("doc_id"), col("bench_id"), col("inter_n"),
-          col("bench_n"), col("containment"))
-        .orderBy(col("doc_id"), col("bench_id"))
-    }),
-
-    // deterministic md5-keyed stratified sample, 20 docs per language
-    "stratified_sample" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      Curation.stratifiedSample(d, "lang", 20, "doc_id")
-        .select(col("doc_id"), col("lang"))
-        .orderBy(col("lang"), col("doc_id"))
-    }),
-
-    // mixture rebalancing: largest subcorpus with sources in 3:2:1:…
-    // proportion, rows chosen deterministically by md5-of-id
-    "domain_mix" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      Curation.mixtureResample(d, "source", "doc_id",
-          Map("src0" -> 3.0, "src1" -> 2.0))
-        .select(col("doc_id"), col("source"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // cross-source 3-gram Jaccard overlap matrix (contamination audit)
-    "source_overlap" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      Curation.sourceOverlap(d, "source", "doc_id", "text", n = 3,
-          checkpointGrams = true)
-        .orderBy(col("src_a"), col("src_b"))
-    }),
-
-    // unigram-LM rarity scoring: docs scored by corpus frequencies of
-    // their own tokens, exact integer arithmetic + one division
-    "token_rarity" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      Terms.tokenRarity(d, "doc_id", "text", checkpointTf = true)
-        .select(col("id").as("doc_id"), col("n_toks"), col("freq_sum"),
-          col("min_freq"), col("mean_freq"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // REAL audio decode: synthetic PCM WAVs (every property an
-    // arithmetic function of the id) round-trip through the RIFF/WAV
-    // parser; integer-exact features the oracle recomputes by formula
-    "audio_features" -> ((s, dir) => {
-      val media = Multimodal.syntheticAudioTable(
-        t(s, dir, "documents"), "doc_id")
-      Multimodal.audioFeatures(media).orderBy(col("media_id"))
-    }),
-
-    // decode -> decimate-by-2 -> re-encode -> decode again: features of
-    // the resampled audio prove the re-encoded bytes parse; the oracle
-    // recomputes from the generator formula over kept frames
-    "audio_resample" -> ((s, dir) => {
-      val media = Multimodal.syntheticAudioTable(
-        t(s, dir, "documents"), "doc_id")
-      Multimodal.audioFeatures(
-          Multimodal.resampleAudio(media, 2)
-            .select(col("media_id"), col("content")))
-        .orderBy(col("media_id"))
-    }),
-
-    // packing-QA report: per (bucket, shard) doc count, tokens and fill
-    // fraction vs budget over the first-fit packed corpus
-    "pack_efficiency" -> ((s, dir) => {
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        TextAnalysis.tokenCount(col("text")).as("n_tok"))
-      val packed = Curation.packSequences(toks, "doc_id", "n_tok",
-        budgetTokens = 2048L, bucketCol = pmod(col("doc_id"), lit(8L)))
-      Curation.packEfficiency(packed, 2048L)
-        .orderBy(col("bucket"), col("shard"))
-    }),
-
-    // eval-hygiene audit: exact-duplicate groups straddling the
-    // train/val/test boundary (dup waves injected so leaks exist)
-    "split_leakage" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val inflated = d.unionAll(
-        d.filter(col("doc_id") % 10 === 0)
-          .select((col("doc_id") + 40000).as("doc_id"), col("text")))
-        .unionAll(d.filter(col("doc_id") % 15 === 0)
-          .select((col("doc_id") + 80000).as("doc_id"), col("text")))
-      Curation.splitLeakage(inflated, "doc_id", "text",
-          Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .orderBy(col("keep_id"))
-    }),
-
-    // deterministic 80/10/10 train/val/test split: md5-banded, stable
-    // under corpus growth — a doc keeps its split across versions
-    "split_assign" -> ((s, dir) => {
-      Curation.hashSplit(t(s, dir, "documents"), "doc_id",
-          Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .select(col("doc_id"), col("split"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // markup stripping (crawl boilerplate removal): synthetic HTML with
-    // script/style subtrees and entities wraps each doc, then strips
-    // back — both engines run byte-identical regex chains
-    "html_strip" -> ((s, dir) => {
-      val injected = concat(
-        lit("<html><head><script type=\"text/js\">if (1 < 2) { x(); }" +
-          "</script><style>p { color: red; }</style></head>" +
-          "<body class=\"d\"><p>"),
-        col("text"),
-        lit("</p><br/>&nbsp;<a href=\"/x?a=1&amp;b=2\">link</a> " +
-          "tail &lt;kept&gt; &#39;q&#39;</body></html>"))
-      t(s, dir, "documents").select(col("doc_id"),
-          graft.pipeline.TextAnalysis.stripMarkup(injected).as("clean"))
-        .withColumn("clean_len", length(col("clean")).cast("long"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // the published Gopher quality rule set: docs stretched to varying
-    // word counts (some clear the 50-word floor), bullet/ellipsis line
-    // structure and '#' symbols injected by deterministic replaces both
-    // engines reproduce byte-for-byte; all ratios integer micros
-    "gopher_rules" -> ((s, dir) => {
-      val n = (lit(1) + col("doc_id") % 6).cast("int")
-      val stretched = array_join(
-        array_repeat(concat(col("text"), lit(" ")), n), "")
-      val injected = replace(replace(replace(
-        replace(stretched, lit(" scan "), lit("\n- scan ")),
-        lit(" window "), lit(" window...\n")),
-        lit(" hash "), lit(" # hash ")),
-        lit(" join "), lit(" and of join "))
-      Curation.gopherRules(
-          t(s, dir, "documents").select(col("doc_id"),
-            injected.as("text")),
-          "doc_id", "text")
-        .select(col("id").as("doc_id"), col("n_words"), col("n_lines"),
-          col("mean_word_len_micro"), col("hash_ratio_micro"),
-          col("ellipsis_sym_ratio_micro"),
-          col("bullet_frac_micro"), col("ellipsis_frac_micro"),
-          col("alpha_frac_micro"), col("stop_hits"), col("pass"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Unicode-script composition (pre-langid crawl step): Cyrillic/CJK/
-    // Greek glyphs injected into thirds of the ASCII corpus by
-    // deterministic replaces; per-script fractions in integer micros,
-    // dominant picked by fixed priority on those integers
-    "text_scripts" -> ((s, dir) => {
-      // half-alphabet replacements make dominance a per-document coin
-      // flip between latin and the injected script — the priority/tie
-      // logic is actually exercised, not just the fractions
-      val injected = when(col("doc_id") % 4 === 1,
-          regexp_replace(col("text"), "[a-m]", "д"))
-        .when(col("doc_id") % 4 === 2,
-          regexp_replace(col("text"), "[a-m]", "中"))
-        .when(col("doc_id") % 4 === 3,
-          regexp_replace(col("text"), "[n-z]", "ω"))
-        .otherwise(col("text"))
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          graft.pipeline.TextAnalysis.scriptProfile(injected).as("p"))
-        .select(col("doc_id"), col("p.n_glyphs"), col("p.latin_micro"),
-          col("p.digit_micro"), col("p.cjk_micro"),
-          col("p.cyrillic_micro"), col("p.greek_micro"),
-          col("p.arabic_micro"), col("p.dominant"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // high-entropy token scan (detect-secrets heuristic): every third
-    // doc gets a Tok<md5> credential-shaped suffix whose hex diversity
-    // straddles the 0.5 gate — some flag, some don't, both engines
-    // agree because the gate compares integer micros
-    "secret_scan" -> ((s, dir) => {
-      val injected = when(col("doc_id") % 3 === 0,
-          concat(col("text"), lit(" Tok"),
-            md5(col("doc_id").cast("string"))))
-        .otherwise(col("text"))
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          graft.pipeline.TextAnalysis.secretCandidates(injected).as("p"))
-        .select(col("doc_id"),
-          col("p.n_candidates").as("n_candidates"),
-          array_join(col("p.candidates"), ",").as("candidates"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // corpus snapshot diff (data-versioning audit): v2 derived
-    // deterministically — every 7th doc dropped, every 5th rewritten,
-    // a shifted-id tail appended — and reconciled against v1 on
-    // 128-bit content hashes in one full-outer join
-    "snapshot_diff" -> ((s, dir) => {
-      val v1 = t(s, dir, "documents")
-      val v2 = v1.filter(col("doc_id") % 7 =!= 0)
-        .select(col("doc_id"),
-          when(col("doc_id") % 5 === 0,
-            concat(col("text"), lit(" v2-edit")))
-            .otherwise(col("text")).as("text"))
-        .unionByName(v1.filter(col("doc_id") % 3 === 0)
-          .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-      Curation.snapshotDiff(v1.select(col("doc_id"), col("text")), v2,
-          "doc_id", "text")
-        .select(col("id").as("doc_id"), col("status"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // the published C4 cleaning rules: sentence breaks, a javascript
-    // line and curly braces injected by deterministic replaces; lines
-    // are filtered (terminal punctuation, ≥5 words, no javascript) and
-    // docs voted on surviving-line count and brace/lorem content
-    "c4_rules" -> ((s, dir) => {
-      val injected = replace(replace(replace(replace(
-        col("text"), lit(" data "), lit(" data.\n")),
-        lit(" fast "), lit(" fast!\n")),
-        lit(" slow "), lit(" javascript slow ")),
-        lit(" batch "), lit(" { batch "))
-      Curation.c4Rules(
-          t(s, dir, "documents").select(col("doc_id"),
-            injected.as("text")),
-          "doc_id", "text")
-        .select(col("id").as("doc_id"), col("n_lines"), col("n_kept"),
-          col("keep"), col("clean"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // unigram-LM surprisal scoring (CCNet-shaped perplexity filter):
-    // per-token -ln p rounds to integer micros, docs sum longs
-    "unigram_surprisal" -> ((s, dir) => {
-      Terms.unigramSurprisal(t(s, dir, "documents"), "doc_id", "text",
-          checkpointTf = true)
-        .select(col("id").as("doc_id"), col("n_toks"),
-          col("sum_nats_micro"), col("mean_nats_micro"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // interpolated bigram-LM surprisal (the KenLM-style perplexity
-    // filter conditioned on context): per-bigram -ln p in integer
-    // micros, doc-level long sums; counts aggregate-compressed first
-    "bigram_surprisal" -> ((s, dir) => {
-      Terms.bigramSurprisal(t(s, dir, "documents"), "doc_id", "text",
-          checkpointGrams = true)
-        .select(col("id").as("doc_id"), col("n_bigrams"),
-          col("sum_nats_micro"), col("mean_nats_micro"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // PSI drift between two value cohorts (production-ML drift alarm):
-    // cohort b's values deterministically shifted+scaled, pooled
-    // equal-width bins, Laplace-smoothed shares, per-bin terms in
-    // integer micros before the sum
-    "psi_drift" -> ((s, dir) => {
-      val e = t(s, dir, "events")
-      val a = e.filter(col("user_id") % 2 === 0).select(col("value"))
-      val b = e.filter(col("user_id") % 2 === 1)
-        .select((col("value") * 1.15 + 10).as("value"))
-      graft.pipeline.Drift.valuePsi(a, b, "value", bins = 10)
-    }),
-
-    // STREAMING drift monitor: per-hour-window PSI of event values
-    // against the whole-corpus reference distribution. Bin edges are
-    // fixed up front (the contract any incremental monitor needs — a
-    // 2-double driver collect), per-(window, bin) counts accumulate as
-    // an update-mode streaming aggregation with state bounded at
-    // windows × bins, and the merged counts score through the same
-    // Laplace-smoothed micro-term arithmetic as batch PSI
-    "events_stream_psi" -> ((s0, dir) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      val batch = t(s, dir, "events").filter(col("value").isNotNull)
-        .select(col("ts"), col("value").cast("double").as("v"))
-        .filter(!isnan(col("v")))
-      val edges = batch.agg(min(col("v")), max(col("v"))).head()
-      if (edges.isNullAt(0)) {
-        // no non-null values → no windows to monitor: empty result
-        // (matches the oracle, which yields zero window groups)
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("w_start",
-              org.apache.spark.sql.types.TimestampType),
-            org.apache.spark.sql.types.StructField("n",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("psi_micro",
-              org.apache.spark.sql.types.LongType))))
-      } else {
-      val (lo, hi) = (edges.getDouble(0), edges.getDouble(1))
-      def binE(v: Column): Column =
-        graft.pipeline.Drift.binIndex(v, lit(lo), lit(hi), 10)
-      val ref = batch.groupBy(binE(col("v")).as("bin"))
-        .agg(count(lit(1)).as("cr"))
-      val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
-      val stream = s.readStream.schema(rawSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(dir)
-        .transform(normalizeEventTs)
-        .filter(col("value").isNotNull)
-        .select(col("ts"), col("value").cast("double").as("v"))
-        .filter(!isnan(col("v")))
-      val agg = stream
-        .groupBy(window(col("ts"), "1 hour"), binE(col("v")).as("bin"))
-        .agg(count(lit(1)).as("c"))
-      val merged = updateStreamViaCopySink(s, agg, "events_stream_psi",
-        b => b.select(col("window.start").as("w_start"), col("bin"),
-          col("c")),
-        Seq("w_start", "bin", "c"), Seq("w_start", "bin"))
-      graft.pipeline.Drift.psiFromBinCounts(
-          merged.select(col("w_start").cast("timestamp").as("w_start"),
-            col("bin").cast("int").as("bin"),
-            col("c").cast("long").as("c")),
-          "w_start", "bin", "c", ref, "bin", "cr", bins = 10)
-        .select(col("w_start"), col("n"), col("psi_micro"))
-        .orderBy(col("w_start"))
-      }
-    }),
-
-    // exact two-sample KS statistic (bin-free drift companion): same
-    // shifted cohorts as psi_drift; CDF gaps over distinct values in
-    // integer micros, max taken after rounding
-    "ks_drift" -> ((s, dir) => {
-      val e = t(s, dir, "events")
-      val a = e.filter(col("user_id") % 2 === 0).select(col("value"))
-      val b = e.filter(col("user_id") % 2 === 1)
-        .select((col("value") * 1.15 + 10).as("value"))
-      graft.pipeline.Drift.valueKs(a, b, "value")
-    }),
-
-    // per-source Jensen–Shannon divergence from the corpus unigram
-    // blend (domain-mix diagnostic): one tokenize pass, vocab×strata
-    // scoring grid, per-term contributions in integer micros
-    "source_divergence" -> ((s, dir) => {
-      Terms.sourceDivergence(t(s, dir, "documents"), "source", "text")
-        .select(col("stratum").as("source"), col("n_toks"),
-          col("js_micro"))
-        .orderBy(col("source"))
-    }),
-
-    // PMI collocations (phrase mining): top adjacent word pairs by
-    // pointwise mutual information with a min-count floor; exact
-    // integer counts, one double PMI expression, micro-rounded
-    "collocations_pmi" -> ((s, dir) => {
-      Terms.collocations(t(s, dir, "documents"), "text",
-          topN = 20, minCount = 5L)
-        .select(col("v"), col("w"), col("pair_count"),
-          col("pmi_micro"), col("rank"))
-        .orderBy(col("rank"))
-    }),
-
-    // Count-Min sketch heavy hitters: one-pass mergeable (d, idx, cnt)
-    // sketch over token occurrences, then distinct-token point queries.
-    // The exact-count oracle is valid because CMS never undercounts and
-    // at width 8192 over this vocabulary no token collides in all 4
-    // depth rows (verified deterministic), so est == exact count
-    "cms_heavy_hitters" -> ((s, dir) => {
-      val toks = t(s, dir, "documents")
-        .select(explode(split(lower(col("text")), Terms.SeparatorClass))
-          .as("w"))
-        .filter(col("w") =!= "")
-      graft.pipeline.Sketches.heavyHitters(toks, "w", minCount = 500L,
-          width = 8192, depth = 4)
-        .select(col("w"), col("est"))
-        .orderBy(col("w"))
-    }),
-
-    // STREAMING Count-Min maintenance: the same sketch cells as a
-    // streaming aggregation — CMS is a linear sketch, so update-mode
-    // cumulative cell counts ARE the merged sketch, and state is
-    // bounded at depth×width cells no matter how long the stream runs
-    // (no watermark needed). Micro-batch emissions land through the
-    // distributed COPY sink; merge-on-read keeps the latest value per
-    // cell; the final sketch answers the same heavy-hitter probe as
-    // the batch path, against the same exact-count oracle.
-    "stream_cms_topk" -> ((s0, dir) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      val rawSchema = s.read.parquet(s"$dir/documents.parquet").schema
-      val stream = s.readStream.schema(rawSchema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(dir)
-      val toks = stream
-        .select(explode(split(lower(col("text")), Terms.SeparatorClass))
-          .as("w"))
-        .filter(col("w") =!= "")
-      val cells = graft.pipeline.Sketches.cmsSketch(toks, "w",
-        width = 8192, depth = 4)
-      val merged = updateStreamViaCopySink(s, cells, "stream_cms_sink",
-        identity, Seq("d", "idx", "cnt"), Seq("d", "idx"))
-      val sketch = merged.select(col("d").cast("int").as("d"),
-        col("idx").cast("long").as("idx"), col("cnt").cast("long").as("cnt"))
-      val probes = t(s, dir, "documents")
-        .select(explode(split(lower(col("text")), Terms.SeparatorClass))
-          .as("w"))
-        .filter(col("w") =!= "").distinct()
-      graft.pipeline.Sketches.cmsEstimate(sketch, probes, "w",
-          width = 8192, depth = 4)
-        .filter(col("est") >= 500L)
-        .select(col("w"), col("est"))
-        .orderBy(col("w"))
-    }),
-
-    // BM25 lexical retrieval: top-5 docs per probe query, broadcast
-    // query-term filter keeps the corpus pipeline narrow; scores as
-    // order-independent integer micros
-    "bm25_topk" -> ((s, dir) => {
-      import s.implicits._
-      val probes = Seq(
-        (1, "spark window agg stream"),
-        (2, "customer order join merge"),
-        (3, "hash table scan fast")).toDF("qid", "qtext")
-      Retrieval.bm25TopK(t(s, dir, "documents"), "doc_id", "text",
-          probes, "qid", "qtext", k = 5, checkpointTf = true)
-        .select(col("qid"), col("id").as("doc_id"), col("score_micro"),
-          col("rank"))
-        .orderBy(col("qid"), col("rank"))
-    }),
-
-    // corpus-wide paragraph dedup (C4/CCNet step): documents re-chunked
-    // into 10-word paragraphs (the synthetic corpus is single-line), the
-    // globally-first occurrence of each repeated paragraph survives,
-    // docs reassembled in order
-    "paragraph_dedup" -> ((s, dir) => {
-      val ws = filter(split(col("text"), " "), w => w =!= "")
-      val np = ceil(size(ws).cast("double") / lit(10.0)).cast("int")
-      val paras = transform(
-        sequence(lit(0), greatest(np, lit(1)) - 1),
-        g => array_join(slice(ws, g * 10 + 1, lit(10)), " "))
-      val d2 = t(s, dir, "documents")
-        .select(col("doc_id"),
-          array_join(paras, "\n\n").as("text"))
-      Curation.paragraphDedup(d2, "doc_id", "text", "\n\n", minChars = 1)
-        .select(col("id").as("doc_id"), col("text"), col("n_paras"),
-          col("n_kept"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // pair-capped MinHash dedup (round 14): LSH candidates routed to
-    // components + survivors WITHOUT materializing intra-group pairs —
-    // O(members) spanning edges per bucket, exact-jaccard verified,
-    // plus the zero-verified-edge escalation pass. The oracle computes
-    // components over the TRUE jaccard>=0.9 pair set (recursive CTE)
-    // and picks survivors, so this row proves the capped mode lands
-    // the all-pairs answer
-    "dedup_minhash_components" -> ((s0, dir) => {
-      // derived-partitions session, same rule as dedup_components: the
-      // verified spanning graph is CHAIN-deep (star edges to the group
-      // min can fail verification near the threshold), so pointer
-      // jumping runs ~log2(chain) rounds — each round's fixed cost
-      // scales with shuffle partitions, and the spanning edge set is
-      // bounded by docs × bands, far below one partition's worth here
-      val s = s0.newSession()
-      val nDocs = t(s0, dir, "documents").count()
-      val edgeEstimate = nDocs * 17L // ≤ bands chain + star per doc
-      s.conf.set("spark.sql.shuffle.partitions",
-        math.max(4L, edgeEstimate / 1000000L).toString)
-      val d = t(s, dir, "documents")
-      val inflated = d.select(col("doc_id"), col("text")).unionAll(
-        d.filter(col("doc_id") % 10 === 0)
-          .select((col("doc_id") + 10000).as("doc_id"), col("text")))
-      val comp = Dedup.minhashComponents(inflated, "doc_id", "text",
-        numPerms = 64, bands = 16, k = 3, threshold = 0.9)
-      val scores = inflated.select(col("doc_id").cast("long").as("id"),
-        length(col("text")).cast("long").as("score"))
-      val keep = Dedup.survivors(comp, scores)
-      comp.join(keep, "component")
-        .select(col("id"), col("component"), col("keep_id"))
-        .orderBy(col("id"))
-    }),
-
-    // cross-document exact-substring dedup (Lee et al. ExactSubstr):
-    // every duplicated token span >= 8 tokens keeps its global first
-    // occurrence only; k-gram keep-first removal + token reassembly
-    "substr_dedup" -> ((s, dir) => {
-      Dedup.substrDedup(t(s, dir, "documents"), "doc_id", "text", k = 8)
-        .select(col("id").as("doc_id"), col("text"), col("n_tokens"),
-          col("n_removed"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Unicode NFC normalization (native codegen expression): combining
-    // sequences injected deterministically (the corpus is ASCII), then
-    // folded to precomposed forms; char counts prove real composition
-    "text_normalize" -> ((s, dir) => {
-      val injected = regexp_replace(col("text"), "a", "a\u0301")
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          length(injected).cast("long").as("len_raw"),
-          StringExpressions.unicodeNormalize(injected, "NFC")
-            .as("text_nfc"))
-        .withColumn("len_nfc", length(col("text_nfc")).cast("long"))
-        .select(col("doc_id"), col("text_nfc"), col("len_raw"),
-          col("len_nfc"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // BPE first-merge table: top-50 adjacent char pairs weighted by
-    // corpus word frequency — vocabulary-compressed before the pair
-    // explosion, integer-only
-    "bpe_pairs" -> ((s, dir) => {
-      Terms.bpePairs(t(s, dir, "documents"), "doc_id", "text", topN = 50)
-        .orderBy(col("rank"))
-    }),
-
-    // PII scrub: detection counts + masked text. Deterministic PII is
-    // injected per doc_id (the synthetic corpus has none), then counted
-    // and redacted with the shared Java/RE2 regex subset — both engines
-    // run the exact same patterns.
-    "pii_scrub" -> ((s, dir) => {
-      val withPii = t(s, dir, "documents").select(col("doc_id"), concat(
-        col("text"),
-        when(col("doc_id") % 3 === 0,
-          concat(lit(" contact u"), col("doc_id").cast("string"),
-            lit("@example.com"))).otherwise(lit("")),
-        when(col("doc_id") % 5 === 0,
-          concat(lit(" from 10.0."), (col("doc_id") % 256).cast("string"),
-            lit(".7"))).otherwise(lit("")),
-        when(col("doc_id") % 7 === 0, lit(" call 555-867-5309"))
-          .otherwise(lit("")),
-        when(col("doc_id") % 11 === 0, lit(" ssn 123-45-6789"))
-          .otherwise(lit(""))).as("text"))
-      withPii.select(
-          (col("doc_id") +:
-            graft.pipeline.Scrub.piiRules.map(r =>
-              graft.pipeline.Scrub.piiCount(col("text"), r).cast("long")
-                .as(s"n_${r.name}")) :+
-            graft.pipeline.Scrub.redact(col("text")).as("redacted")): _*)
-        .orderBy(col("doc_id"))
-    }),
-
-    // training-shard sequence packing: greedy first-fit by start offset
-    // within hash-bucket packing streams (window cumsum per bucket — no
-    // global sort; parallel across buckets)
-    "token_pack" -> ((s, dir) => {
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        TextAnalysis.tokenCount(col("text")).as("n_tok"))
-      Curation.packSequences(toks, "doc_id", "n_tok",
-          budgetTokens = 2048L, bucketCol = pmod(col("doc_id"), lit(8L)))
-        .select(col("id").as("doc_id"), col("bucket"), col("shard"),
-          col("n_tokens"), col("start_offset"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // nearest-centroid assignment (the k-means E-step / IVF cell
-    // assignment), integer-quantized so the argmin is engine-exact;
-    // centroids = the 8 lowest-id vectors
-    "semantic_cluster" -> ((s, dir) => {
-      val qe = (c: Column) =>
-        transform(c, x => round(x.cast("double") * 1000).cast("long"))
-      val e = t(s, dir, "embeddings")
-        .select(col("vec_id"), qe(col("embedding")).as("v"))
-      val cents = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cluster_id"), col("v").as("centroid"))
-      Cluster.assign(e, "vec_id", "v", cents)
-        .select(col("vec_id"), col("cluster").cast("long").as("cluster"),
-          col("dist2").cast("long").as("dist2"))
-        .orderBy(col("vec_id"))
-    }),
-
-    // full Lloyd k-means, 2 iterations, k=4 — integer-quantized vectors
-    // with floor-division centroid updates make the whole fit
-    // bit-reproducible on any engine (see Cluster.kmeansExact), so even
-    // the ITERATIVE model is oracle-checkable, not just one assignment
-    "kmeans_fit" -> ((s, dir) => {
-      val qe = (c: Column) =>
-        transform(c, x => round(x.cast("double") * 1000).cast("long"))
-      val e = t(s, dir, "embeddings")
-        .select(col("vec_id"), qe(col("embedding")).as("v"))
-      val (_, assigned) = Cluster.kmeansExact(s, e, "vec_id", "v",
-        k = 4, iters = 2)
-      assigned.select(col("vec_id"),
-          col("cluster").cast("long").as("cluster"),
-          col("dist2").cast("long").as("dist2"))
-        .orderBy(col("vec_id"))
-    }),
-
-    // SemDeDup: cluster assign + within-cluster near-identical drop.
-    // Corpus salted with exact copies (vec_id+10000 of every %10==0
-    // vector): copies land in the original's cluster at cosine 1 and are
-    // dropped; max natural pairwise cosine in this corpus is 0.52, so
-    // the 0.95 threshold is engine-independent with a wide margin.
-    "semantic_dedup" -> ((s, dir) => {
-      val qe = (c: Column) =>
-        transform(c, x => round(x.cast("double") * 1000).cast("long"))
-      val e = t(s, dir, "embeddings")
-        .select(col("vec_id"), qe(col("embedding")).as("v"))
-      val inflated = e.unionAll(
-        e.filter(col("vec_id") % 10 === 0)
-          .select((col("vec_id") + 10000).as("vec_id"), col("v")))
-      val cents = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cluster_id"), col("v").as("centroid"))
-      Cluster.semanticDedup(inflated, "vec_id", "v", cents,
-          threshold = 0.95, checkpointAssigned = true)
-        .select(col("vec_id"), col("cluster").cast("long").as("cluster"))
-        .orderBy(col("vec_id"))
-    }),
-
-    // multimodal decode through the REAL JDK codec (javax.imageio):
-    // synthetic per-id PNG fixtures whose geometry is an arithmetic
-    // function of the id, so the oracle verifies actual decoded
-    // dimensions, not plumbing shape.
-    "multimodal_decode" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      // REAL codec round-trip: per-id synthetic PNGs (dimensions an
-      // arithmetic function of the id) encoded and decoded through
-      // javax.imageio — the oracle predicts the decoded geometry exactly
-      val media = Multimodal.syntheticImageTable(d, "doc_id")
-      Multimodal.decodeImages(media)
-        .select(col("media_id"), col("width"), col("height"),
-          col("channels"))
-        .orderBy(col("media_id"))
-    }),
-
-    // multimodal feature-extract + resize on REAL decoded pixels: the
-    // solid-color PNG fixtures make the channel means an arithmetic
-    // function of the id, and the nearest-neighbor resize of a solid
-    // image stays solid — every output column oracle-exact.
-    "multimodal_features" -> ((s, dir) => {
-      val d = t(s, dir, "documents").filter(col("doc_id") % 10 === 0)
-      val media = Multimodal.syntheticImageTable(d, "doc_id")
-      val feats = Multimodal.extractFeatures(media)
-      val resized = Multimodal.resize(media, 64, 64)
-        .select(col("media_id"), col("n_bytes_out"))
-      feats.join(resized, Seq("media_id"))
-        .select(col("media_id"), col("n_dims").cast("long"),
-          round(get(col("features"), lit(0)) * 255)
-            .cast("long").as("mean_r"),
-          round(get(col("features"), lit(1)) * 255)
-            .cast("long").as("mean_g"),
-          round(get(col("features"), lit(2)) * 255)
-            .cast("long").as("mean_b"),
-          col("n_bytes_out"))
-        .orderBy(col("media_id"))
-    }),
-
-    // multimodal frame sampling shape (explode semantics)
-    "multimodal_frames" -> ((s, dir) => {
-      val media = Multimodal.fromBinary(
-        t(s, dir, "documents").select(col("doc_id"),
-          repeat(col("text"), 20).as("text")),
-        "doc_id", "text", "video")
-      Multimodal.sampleFrames(media, everyN = 3)
-        .orderBy(col("media_id"), col("frame_idx"))
-    }),
-
-    // top-3 distinctive terms per doc, ranked (tf desc, df asc, term) —
-    // the tf-idf idea with an integer-only, engine-exact comparator
-    "top_terms" -> ((s, dir) => {
-      // checkpointTf: tf feeds both the output and the doc-frequency
-      // branch — materializing it saves the second tokenize pass over
-      // the corpus (1.4× warm at sf0.1, 1.6× at 10× — ProfileScale r10)
-      Terms.topTerms(t(s, dir, "documents"), "doc_id", "text", k = 3,
-          checkpointTf = true)
-        .select(col("id").as("doc_id"), col("term"), col("tf"), col("df"),
-          col("rank"))
-        .orderBy(col("doc_id"), col("rank"))
-    }),
-
-    // corpus vocabulary head: top-40 terms with doc frequency and
-    // cumulative token-occurrence coverage (stopword extraction / Zipf)
-    "vocab_coverage" -> ((s, dir) => {
-      Terms.vocabCoverage(t(s, dir, "documents"), "doc_id", "text",
-          topN = 40)
-        .orderBy(col("rank"))
-    }),
-
-    // per-label class prototypes via 2^20 fixed-point integer sums —
-    // float means made addition-order-independent and engine-exact
-    "embedding_centroids" -> ((s, dir) => {
-      graft.pipeline.Drift.labelCentroids(t(s, dir, "embeddings"),
-          "embedding", "label")
-        .orderBy(col("label"), col("pos"))
-    }),
-
-    // centroid drift between the even/odd vec_id cohorts: the
-    // distribution-shift check per label, exact integer cross products
-    "embedding_drift" -> ((s, dir) => {
-      graft.pipeline.Drift.centroidDrift(t(s, dir, "embeddings"),
-          "embedding", "label", col("vec_id") % 2 === 0)
-        .orderBy(col("label"))
-    }),
-
-    // symmetric int8 embedding quantization, exploded to scalar rows so
-    // the oracle compares exact integers plus the per-vector scale
-    "embed_quantize" -> ((s, dir) => {
-      // scale lands in its OWN projection first: inlining the
-      // int8Scale expression (itself an O(dim) array fold) into
-      // quantizeInt8's per-element lambda evaluates it once PER
-      // ELEMENT — O(dim²) interpreted work per row (HOF lambdas run
-      // outside codegen). The alias is referenced three times, so
-      // CollapseProject keeps the boundary. Same math, same rows.
-      t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"),
-          Similarity.int8Scale(col("embedding")).as("scale"))
-        .select(col("vec_id"), col("scale"),
-          posexplode(Similarity.quantizeInt8(col("embedding"),
-            col("scale"))).as(Seq("pos", "q")))
-        .select(col("vec_id"), col("pos").cast("long").as("pos"),
-          col("q"), col("scale"))
-        .orderBy(col("vec_id"), col("pos"))
-    }),
-
-    // ordered-step conversion funnel signup → click → purchase: earliest
-    // completion of each step strictly after the previous one, NULL from
-    // the drop-off step onward; timestamps as epoch micros
-    "event_funnel" -> ((s, dir) => {
-      Funnel.funnel(t(s, dir, "events"), "user_id", "ts", "event_type",
-          Seq("signup", "click", "purchase"))
-        .select(col("user").as("user_id"),
-          unix_micros(col("ts_1")).as("t1_us"),
-          unix_micros(col("ts_2")).as("t2_us"),
-          unix_micros(col("ts_3")).as("t3_us"))
-        .orderBy(col("user_id"))
-    }),
-
-    // deterministic md5-keyed global shuffle into 8 writer shards with
-    // in-shard positions (no rand(): reruns and oracles keep the order)
-    "global_shuffle" -> ((s, dir) => {
-      Curation.globalShuffle(t(s, dir, "documents"), "doc_id",
-          numShards = 8)
-        .select(col("doc_id"), col("shard"), col("pos"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // exact-substring dedup signal: fraction of each doc's tokens
-    // covered by a word 4-gram occurring >1 time in the corpus (4 — not
-    // the production-scale 13 — because the synthetic corpus's small
-    // vocabulary has no long repeats); integer interval-union, so the
-    // doubles divide exactly alike on both engines
-    "dup_spans" -> ((s, dir) => {
-      Curation.dupSpans(t(s, dir, "documents"), "doc_id", "text", n = 4)
-        .select(col("id").as("doc_id"), col("n_tokens"),
-          col("covered_tokens"), col("dup_span_frac"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // sliding token-window chunking (32-token chunks, 8-token overlap):
-    // the RAG / training-prep splitter, pure per-doc explode
-    "text_chunks" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          explode(TextAnalysis.chunkTokens(col("text"), 32, 8)).as("c"))
-        .select(col("doc_id"),
-          col("c.chunk_idx").cast("long").as("chunk_idx"),
-          col("c.n_tokens").cast("long").as("n_tokens"),
-          col("c.chunk"))
-        .orderBy(col("doc_id"), col("chunk_idx"))
-    }),
-
-    // §2.9 extension: watermarked stream-stream interval join —
-    // click→purchase attribution within 4 hours per user. Both sides
-    // watermarked + both-direction time bounds, so stream state is
-    // O(rate × horizon) and evicts as the watermark advances (the shape
-    // that survives an unbounded stream); append mode emits each pair
-    // exactly once.
-    "events_stream_join" -> ((s0, dir) => {
-      val s = s0.newSession()
-      // stream-stream join keeps 4 state stores per partition (left/
-      // right × keyed/keyWithIndex): fewer partitions = materially less
-      // per-microbatch store open/commit overhead, and the join keyspace
-      // here is small. Production sizing follows key cardinality.
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
-      def stream = s.readStream.schema(rawSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(dir)
-        .transform(normalizeEventTs)
-      val clicks = stream.filter(col("event_type") === "click")
-        .select(col("user_id"), col("event_id").as("click_id"),
-          col("ts").as("c_ts"))
-        .withWatermark("c_ts", "10 minutes")
-      val purchases = stream.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("purchase_id"),
-          col("ts").as("p_ts"))
-        .withWatermark("p_ts", "10 minutes")
-      val joined = graft.streaming.IntervalJoin.join(
-          clicks, purchases, "user_id", "c_ts", "p_ts", "4 hours")
-        .select(col("l.user_id"), col("click_id"), col("purchase_id"),
-          unix_micros(col("c_ts")).as("c_us"),
-          unix_micros(col("p_ts")).as("p_us"))
-      val outRoot = new java.io.File(scratch("events_stream_join_sink"))
-        .getAbsolutePath
-      val q = joined.writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.write.mode("append").parquet(outRoot)
-          ()
-        }
-        .start()
-      q.processAllAvailable(); q.stop()
-      s.read.parquet(outRoot)
-        .orderBy(col("user_id"), col("click_id"), col("purchase_id"))
-    }),
-
-    // JSON property extraction (events.props) + per-type rollup
-    "json_extract_agg" -> ((s, dir) => {
-      t(s, dir, "events")
-        .select(col("event_type"),
-          get_json_object(col("props"), "$.k").cast("long").as("k"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"),
-          min(col("k")).as("min_k"), max(col("k")).as("max_k"))
-        .orderBy(col("event_type"))
-    })
-  )
-
-  // ------------------------------------------------------------- oracleSql
-
-  /** DuckDB oracle per query (same parquet tables). Omitted for operators
-    * whose internals SQL cannot replicate (engine-specific hashes / LSH
-    * plane signatures) — those get the driver's rows-only check. */
-  def oracleSql: Map[String, String] = Map(
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-         CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS sum_qty,
-         CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS sum_base_price,
-         CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS sum_disc_price,
-         CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) AS avg_qty,
-         COUNT(*) AS count_order
-         FROM lineitem GROUP BY l_returnflag, l_linestatus
-         ORDER BY l_returnflag, l_linestatus""",
-
-    "project_fields" ->
-      """SELECT p_partkey, p_brand AS brand, p_brand AS brand_again,
-         p_brand || ':' || p_type AS label, 'graft' AS origin
-         FROM part ORDER BY p_partkey""",
-
-    "null_if" ->
-      """SELECT o_orderkey,
-         NULLIF(o_orderpriority, '1-URGENT') AS o_orderpriority,
-         CASE WHEN o_orderkey % 5 = 0 THEN NULL ELSE o_orderstatus END AS o_status_b
-         FROM orders ORDER BY o_orderkey""",
-
-    "trim_fields" ->
-      """SELECT p_partkey,
-         ltrim('  ' || p_brand || '  ') AS b_ltrim,
-         rtrim('  ' || p_brand || '  ') AS b_rtrim,
-         trim('  ' || p_brand || '  ') AS b_trim
-         FROM part ORDER BY p_partkey""",
-
-    "date_format_parse" ->
-      """SELECT l_orderkey, l_linenumber, l_shipdate
-         FROM lineitem ORDER BY l_orderkey, l_linenumber""",
-
-    "transform_zero_dates" ->
-      """SELECT o_orderkey,
-         CASE WHEN o_orderkey % 97 = 0 THEN NULL ELSE o_orderdate END AS o_orderdate
-         FROM orders ORDER BY o_orderkey""",
-
-    "transform_date_no_sep" ->
-      """SELECT event_id, date_trunc('second', ts) AS ts
-         FROM events ORDER BY event_id""",
-
-    "transform_time_no_sep" ->
-      """SELECT event_id,
-         strftime(ts, '%H:%M:%S') || '.' || lpad(CAST(event_id % 100 AS VARCHAR), 2, '0') AS t
-         FROM events ORDER BY event_id""",
-
-    "transform_tinyint_bool" ->
-      """SELECT o_orderkey,
-         CASE WHEN o_orderkey % 2 = 0 THEN 'f' ELSE 't' END AS b
-         FROM orders ORDER BY o_orderkey""",
-
-    "transform_int_to_ip" ->
-      """SELECT c_custkey,
-         CAST((a >> 24) & 255 AS VARCHAR) || '.' ||
-         CAST((a >> 16) & 255 AS VARCHAR) || '.' ||
-         CAST((a >> 8) & 255 AS VARCHAR) || '.' ||
-         CAST(a & 255 AS VARCHAR) AS ip
-         FROM (SELECT c_custkey, (c_custkey * 9973) % 4294967296 AS a FROM customer)
-         ORDER BY c_custkey""",
-
-    "transform_set_enum" ->
-      """SELECT c_custkey,
-         CASE WHEN c_custkey % 11 = 0 THEN NULL
-              ELSE '{' || lower(c_mktsegment) || '}' END AS enum_arr
-         FROM customer ORDER BY c_custkey""",
-
-    "transform_hex" ->
-      """SELECT p_partkey,
-         CAST(p_partkey AS VARCHAR) AS dec_str,
-         lower(hex(encode(p_brand))) AS brand_hex,
-         '\x' || lower(hex(encode(p_brand))) AS brand_bytea
-         FROM part ORDER BY p_partkey""",
-
-    "transform_unix_ts" ->
-      """SELECT o_orderkey,
-         strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS ts_text
-         FROM orders ORDER BY o_orderkey""",
-
-    "cast_engine_mysql" ->
-      """SELECT o_orderkey, o_custkey,
-         CASE WHEN o_orderkey % 2 = 0 THEN FALSE ELSE TRUE END AS is_priority,
-         CASE WHEN o_orderkey % 97 = 0 THEN NULL ELSE o_orderdate END AS created_at,
-         o_orderpriority AS note,
-         CAST(printf('%.2f', o_totalprice) AS DECIMAL(12,2)) AS price_str
-         FROM orders ORDER BY o_orderkey""",
-
-    "citus_backfill_join" ->
-      """SELECT c.c_custkey AS dist_key, l.l_orderkey, l.l_linenumber, l.l_quantity
-         FROM lineitem l
-         JOIN orders o ON l.l_orderkey = o.o_orderkey
-         JOIN customer c ON o.o_custkey = c.c_custkey
-         ORDER BY l.l_orderkey, l.l_linenumber""",
-
-    "except_regress" ->
-      """SELECT o_orderkey, o_orderstatus FROM orders
-         EXCEPT ALL
-         SELECT o_orderkey, o_orderstatus FROM orders WHERE o_orderkey % 10 <> 0
-         ORDER BY o_orderkey""",
-
-    "agg_minmax" ->
-      """SELECT min(o_orderkey) AS lo, max(o_orderkey) + 1 AS hi FROM orders""",
-
-    "agg_rowcounts" ->
-      """SELECT table_name, n_rows FROM (
-           SELECT 'region' AS table_name, count(*) AS n_rows FROM region
-           UNION ALL SELECT 'nation', count(*) FROM nation
-           UNION ALL SELECT 'customer', count(*) FROM customer
-           UNION ALL SELECT 'supplier', count(*) FROM supplier
-           UNION ALL SELECT 'part', count(*) FROM part
-           UNION ALL SELECT 'orders', count(*) FROM orders
-           UNION ALL SELECT 'lineitem', count(*) FROM lineitem)
-         ORDER BY n_rows DESC, table_name""",
-
-    "partition_ranges" ->
-      """SELECT CAST(floor((o_orderkey - (SELECT min(o_orderkey) FROM orders)) / 10000) AS BIGINT) AS range_id,
-         count(*) AS n_rows FROM orders GROUP BY 1 ORDER BY range_id""",
-
-    "profile_stats" ->
-      """SELECT count(*) AS n_rows,
-           min(l_quantity) AS l_quantity_min,
-           max(l_quantity) AS l_quantity_max,
-           CAST(sum(CAST(l_quantity AS DECIMAL(28,6))) AS DOUBLE) / CAST(count(l_quantity) AS DOUBLE) AS l_quantity_mean,
-           CAST(sum(CASE WHEN l_quantity IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS l_quantity_nulls,
-           min(l_extendedprice) AS l_extendedprice_min,
-           max(l_extendedprice) AS l_extendedprice_max,
-           CAST(sum(CAST(l_extendedprice AS DECIMAL(28,6))) AS DOUBLE) / CAST(count(l_extendedprice) AS DOUBLE) AS l_extendedprice_mean,
-           CAST(sum(CASE WHEN l_extendedprice IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS l_extendedprice_nulls,
-           min(l_discount) AS l_discount_min,
-           max(l_discount) AS l_discount_max,
-           CAST(sum(CAST(l_discount AS DECIMAL(28,6))) AS DOUBLE) / CAST(count(l_discount) AS DOUBLE) AS l_discount_mean,
-           CAST(sum(CASE WHEN l_discount IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS l_discount_nulls,
-           count(DISTINCT l_partkey) AS l_partkey_distinct,
-           count(DISTINCT l_returnflag) AS l_returnflag_distinct
-         FROM lineitem""",
-
-    "events_stream_dedup" ->
-      """SELECT DISTINCT user_id, event_type FROM events
-         ORDER BY user_id, event_type""",
-
-    // SQL-standard percentile_disc spelled out: smallest value whose
-    // cume_dist reaches p (identical definition on both engines)
-    "profile_quantiles" -> {
-      val cell = (c: String, p: Double) =>
-        s"""(SELECT min(v) FROM
-           (SELECT $c AS v, cume_dist() OVER (ORDER BY $c) AS cd
-            FROM lineitem) WHERE cd >= $p)
-           AS ${c}_p${math.round(p * 100)}"""
-      "SELECT " + (for {
-        c <- Seq("l_quantity", "l_extendedprice", "l_discount")
-        p <- Seq(0.25, 0.5, 0.75, 0.95)
-      } yield cell(c, p)).mkString(",\n         ")
-    },
-
-    "upsert_latest" ->
-      """SELECT user_id, event_id AS last_event_id,
-           CAST(epoch_us(ts) AS BIGINT) AS ts_us,
-           event_type AS last_type, value AS last_value
-         FROM (SELECT *, row_number() OVER (
-             PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-           FROM events)
-         WHERE rn = 1 ORDER BY user_id""",
-
-    "rolling_features" ->
-      """WITH e AS (SELECT event_id, user_id,
-             CAST(epoch_us(ts) AS BIGINT) AS us,
-             CAST(floor(value * 100) AS BIGINT) AS cents FROM events)
-         SELECT event_id, user_id, us,
-           count(*) OVER w1 AS n_1h,
-           CAST(sum(cents) OVER w1 AS BIGINT) AS sum_cents_1h,
-           count(*) OVER w2 AS n_24h,
-           CAST(sum(cents) OVER w2 AS BIGINT) AS sum_cents_24h
-         FROM e
-         WINDOW w1 AS (PARTITION BY user_id ORDER BY us
-             RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW),
-           w2 AS (PARTITION BY user_id ORDER BY us
-             RANGE BETWEEN 86400000000 PRECEDING AND CURRENT ROW)
-         ORDER BY event_id""",
-
-    "weighted_sample" ->
-      """WITH d AS (SELECT doc_id, source,
-           CASE source WHEN 'src0' THEN 1.0 WHEN 'src1' THEN 0.5
-             WHEN 'src2' THEN 0.25 ELSE 0.75 END AS rate
-           FROM documents)
-         SELECT doc_id, source FROM d
-         WHERE rate >= 1.0
-            OR substring(md5('graft-wsamp-' || CAST(doc_id AS VARCHAR)), 1, 8)
-               < printf('%08x', CAST(floor(rate * 4294967296.0) AS BIGINT))
-         ORDER BY doc_id""",
-
-    "salted_join" ->
-      """SELECT e.event_id, e.user_id, e.event_type, d.first_signup_id
-         FROM events e
-         JOIN (SELECT user_id, min(event_id) AS first_signup_id
-               FROM events WHERE event_type = 'signup'
-               GROUP BY user_id) d USING (user_id)
-         ORDER BY e.event_id""",
-
-    "range_join" ->
-      """WITH bands AS (
-           SELECT b AS band_id, b * 20000.0 AS lo,
-                  b * 20000.0 + 34999.0 AS hi
-           FROM generate_series(0, 29) AS t(b))
-         SELECT o_orderkey, CAST(band_id AS BIGINT) AS band_id,
-                o_totalprice
-         FROM orders JOIN bands
-           ON o_totalprice >= lo AND o_totalprice <= hi
-         ORDER BY o_orderkey, band_id""",
-
-    "asof_join" ->
-      """SELECT l.event_id, l.user_id,
-           CAST(epoch_us(l.ts) AS BIGINT) AS ts_us,
-           p.last_purchase_id, p.last_purchase_value
-         FROM events l
-         LEFT JOIN LATERAL (
-           SELECT r.event_id AS last_purchase_id,
-                  r.value AS last_purchase_value
-           FROM events r
-           WHERE r.user_id = l.user_id AND r.event_type = 'purchase'
-             AND r.ts <= l.ts
-           ORDER BY r.ts DESC, r.event_id DESC LIMIT 1) p ON true
-         WHERE l.event_type = 'click'
-         ORDER BY l.event_id""",
-
-    "copy_roundtrip" ->
-      """SELECT o_orderkey,
-         CASE WHEN o_orderkey % 7 = 0 THEN NULL
-              ELSE 'tab' || chr(9) || 'here' || chr(10) || 'nl\bs|' || o_orderpriority
-         END AS note
-         FROM orders ORDER BY o_orderkey""",
-
-    "sink_bisect" ->
-      """SELECT o_orderkey FROM orders
-         WHERE o_orderkey % 1000 <> 7 AND o_orderkey % 1000 <> 13
-         ORDER BY o_orderkey""",
-
-    "sink_typed_roundtrip" ->
-      """SELECT o_orderkey,
-         CASE WHEN o_orderkey % 2 = 0 THEN 't' ELSE 'f' END AS flag,
-         '\x' || lower(hex(encode(o_orderpriority))) AS bin,
-         CASE WHEN o_orderkey % 1000 = 0
-              THEN strftime(o_orderdate + to_milliseconds(o_orderkey % 1000), '%Y-%m-%d %H:%M:%S')
-              ELSE strftime(o_orderdate + to_milliseconds(o_orderkey % 1000), '%Y-%m-%d %H:%M:%S.%f')
-         END AS ts,
-         strftime(o_orderdate, '%Y-%m-%d') AS d,
-         CAST(CAST(CAST(o_orderkey % 10000 AS DECIMAL(10,0)) / 100 AS DECIMAL(12,2)) AS VARCHAR) AS price
-         FROM orders ORDER BY o_orderkey""",
-
-    "csv_roundtrip" ->
-      """SELECT c_custkey, c_name || ',"quoted"|x' AS c_name, c_mktsegment
-         FROM customer ORDER BY c_custkey""",
-
-    "csv_guess" ->
-      """SELECT n_nationkey, n_name, n_regionkey FROM nation ORDER BY n_nationkey""",
-
-    "csv_skip_header" ->
-      """SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey""",
-
-    "jdbc_migrate" ->
-      """SELECT o_orderkey, o_orderstatus, o_totalprice
-         FROM orders WHERE o_orderkey % 5 = 0 ORDER BY o_orderkey""",
-
-    "jdbc_predicates_read" ->
-      """SELECT c_custkey AS k, c_name AS nm,
-         CAST(c_acctbal AS DOUBLE) AS bal
-         FROM customer WHERE c_custkey % 10 = 0 ORDER BY k""",
-
-    // constants = the reference's regress/expected/ixf.out golden
-    "ixf_roundtrip" ->
-      """SELECT * FROM (VALUES
-           (1, 77, 77, 'foobar         ', 'foobar         ', 'baz', 'baz'),
-           (2, NULL, 88, NULL, 'abcdef         ', NULL, 'ghijkl'),
-           (3, 179, 179, 'FOOBAR         ', 'FOOBAR         ', 'BAZ', 'BAZ'),
-           (4, NULL, 179, NULL, 'FOOBAR         ', NULL, 'BAZ'))
-         AS t(test1_id, intcol, intcal_notnull, charcol15,
-              charcol15_notnull, varcharcol16, varcharcol16_notnull)
-         ORDER BY test1_id""",
-
-    "dbf_roundtrip" ->
-      """SELECT n_nationkey, n_name,
-         CAST(n_nationkey AS VARCHAR) || '.25' AS n_budget,
-         strftime(DATE '1992-01-01' + INTERVAL (n_nationkey) DAY, '%Y-%m-%d') AS n_date,
-         CASE WHEN n_nationkey % 2 = 0 THEN 't' ELSE 'f' END AS n_flag
-         FROM nation WHERE n_nationkey % 7 <> 3
-         ORDER BY n_nationkey""",
-
-    "migrate_stats" ->
-      """SELECT table_name, rows_sent, rows_rejected FROM (
-           SELECT 'region' AS table_name,
-                  (SELECT count(*) FROM region) AS rows_sent,
-                  CAST(0 AS BIGINT) AS rows_rejected
-           UNION ALL SELECT 'nation', (SELECT count(*) FROM nation), 0
-           UNION ALL SELECT 'supplier',
-                  (SELECT count(*) FROM supplier WHERE s_suppkey % 7 <> 3),
-                  (SELECT count(*) FROM supplier WHERE s_suppkey % 7 = 3)
-           UNION ALL SELECT 'total',
-                  (SELECT count(*) FROM region) + (SELECT count(*) FROM nation)
-                    + (SELECT count(*) FROM supplier WHERE s_suppkey % 7 <> 3),
-                  (SELECT count(*) FROM supplier WHERE s_suppkey % 7 = 3))
-         ORDER BY table_name""",
-
-    "dsl_csv_districts" ->
-      """SELECT n_nationkey, n_name,
-         CASE WHEN n_nationkey % 5 = 0 THEN NULL ELSE n_name END AS maybe_null,
-         '(' || CAST(n_regionkey AS VARCHAR) || ',' || CAST(n_nationkey AS VARCHAR) || ')' AS location,
-         upper(n_name) AS upper_name
-         FROM nation ORDER BY n_nationkey""",
-
-    "fixed_width" ->
-      """SELECT n_nationkey, n_name,
-         CASE WHEN n_nationkey % 3 = 0 THEN NULL ELSE n_regionkey END AS n_regionkey
-         FROM nation ORDER BY n_nationkey""",
-
-    "multi_file_glob" ->
-      """SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey""",
-
-    "events_stream_agg" ->
-      """SELECT time_bucket(INTERVAL 5 MINUTE, ts) AS w_start, event_type,
-         count(*) AS n,
-         CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value
-         FROM events GROUP BY 1, 2 ORDER BY w_start, event_type""",
-
-    // gaps-and-islands over per-user event times, at microsecond
-    // precision (epoch_us) to match the engine's timestamp resolution
-    "events_sessionize" ->
-      """WITH e AS (
-           SELECT user_id, epoch_us(ts) AS us,
-             CASE WHEN epoch_us(ts) - lag(epoch_us(ts))
-                    OVER (PARTITION BY user_id ORDER BY epoch_us(ts))
-                    > 30 * 60 * 1000000 OR
-                  lag(epoch_us(ts))
-                    OVER (PARTITION BY user_id ORDER BY epoch_us(ts))
-                    IS NULL
-             THEN 1 ELSE 0 END AS new_s
-           FROM events),
-         s AS (
-           SELECT user_id, us,
-             SUM(new_s) OVER (PARTITION BY user_id ORDER BY us
-               ROWS UNBOUNDED PRECEDING) AS sid
-           FROM e)
-         SELECT user_id, min(us) AS session_start_us,
-           max(us) AS session_end_us, count(*) AS n_events
-         FROM s GROUP BY user_id, sid
-         ORDER BY user_id, session_start_us""",
-
-    "dedup_exact" ->
-      """WITH inflated AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 10000, text FROM documents WHERE doc_id % 10 = 0)
-         SELECT min(doc_id) AS keep_id, count(*) AS dup_count
-         FROM inflated GROUP BY text ORDER BY keep_id""",
-
-    "dedup_incremental" ->
-      """WITH corpus AS (
-           SELECT text FROM documents WHERE doc_id % 2 = 0),
-         batch AS (
-           SELECT doc_id, text FROM documents WHERE doc_id % 2 = 1
-           UNION ALL
-           SELECT doc_id + 20000, text FROM documents WHERE doc_id % 10 = 0
-           UNION ALL
-           SELECT doc_id + 30000, text FROM documents WHERE doc_id % 10 = 1)
-         SELECT min(doc_id) AS keep_id, count(*) AS batch_dup_count
-         FROM batch WHERE text NOT IN (SELECT text FROM corpus)
-         GROUP BY text ORDER BY keep_id""",
-
-    "quality_classifier" ->
-      """WITH toks AS (
-           SELECT doc_id,
-             unnest(string_split_regex(lower(text), '[^a-z0-9'']+')) AS w
-           FROM documents),
-         tw AS (SELECT doc_id,
-             CAST(('0x' || substr(md5(w), 1, 8)) AS BIGINT) % 1024 AS b
-           FROM toks WHERE w <> ''),
-         s AS (SELECT doc_id,
-             sum((b * 2654435761) % 2000 - 1000) AS tok_margin
-           FROM tw GROUP BY doc_id)
-         SELECT d.doc_id,
-           CAST(250 + COALESCE(s.tok_margin, 0) AS BIGINT) AS margin_milli,
-           CAST(250 + COALESCE(s.tok_margin, 0) AS BIGINT) / 1000.0
-             AS score,
-           (250 + COALESCE(s.tok_margin, 0)) > 0 AS label
-         FROM documents d LEFT JOIN s USING (doc_id)
-         ORDER BY d.doc_id""",
-
-    "classifier_auc" ->
-      """WITH toks AS (
-           SELECT doc_id,
-             unnest(string_split_regex(lower(text), '[^a-z0-9'']+')) AS w
-           FROM documents),
-         tw AS (SELECT doc_id,
-             CAST(('0x' || substr(md5(w), 1, 8)) AS BIGINT) % 1024 AS b
-           FROM toks WHERE w <> ''),
-         s AS (SELECT doc_id,
-             sum((b * 2654435761) % 2000 - 1000) AS tok_margin
-           FROM tw GROUP BY doc_id),
-         mm AS (SELECT d.doc_id,
-             CAST(250 + COALESCE(s.tok_margin, 0) AS BIGINT) AS m,
-             (d.lang = 'en') AS y
-           FROM documents d LEFT JOIN s USING (doc_id)),
-         g AS (SELECT m,
-             CAST(sum(CASE WHEN y THEN 1 ELSE 0 END) AS BIGINT) AS p,
-             CAST(sum(CASE WHEN y THEN 0 ELSE 1 END) AS BIGINT) AS q
-           FROM mm GROUP BY m),
-         c AS (SELECT p, q, COALESCE(sum(q) OVER (ORDER BY m
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-             AS neg_below FROM g),
-         a AS (SELECT CAST(sum(p) AS BIGINT) AS n_pos,
-             CAST(sum(q) AS BIGINT) AS n_neg,
-             CAST(sum(p * neg_below) AS BIGINT) AS wins,
-             CAST(sum(p * q) AS BIGINT) AS tie_pairs FROM c)
-         SELECT n_pos, n_neg, wins, tie_pairs,
-           CASE WHEN n_pos > 0 AND n_neg > 0 THEN
-             CAST(floor(CAST(2 * wins + tie_pairs AS DOUBLE)
-               / CAST(2 * n_pos * n_neg AS DOUBLE)
-               * 1000000.0 + 0.5) AS BIGINT) END AS auc_micro
-         FROM a""",
-
-    "preflight_validate" ->
-      """WITH staged AS (
-           SELECT o_orderkey,
-             CASE WHEN o_orderkey % 7 = 0
-               THEN 'x' || CAST(o_orderkey AS VARCHAR)
-               ELSE CAST(o_orderkey AS VARCHAR) END AS id_str,
-             CASE WHEN o_orderkey % 11 = 0 THEN NULL
-               ELSE o_orderstatus END AS clerk
-           FROM orders),
-         checked AS (SELECT o_orderkey,
-             CASE WHEN id_str IS NOT NULL
-                   AND TRY_CAST(id_str AS INTEGER) IS NULL
-               THEN 'id_str: invalid input for type int' END AS r1,
-             CASE WHEN clerk IS NULL
-               THEN 'clerk: null value in NOT NULL column' END AS r2
-           FROM staged)
-         SELECT o_orderkey,
-           (r1 IS NULL AND r2 IS NULL) AS valid,
-           concat_ws(';', r1, r2) AS why
-         FROM checked ORDER BY o_orderkey""",
-
-    "quality_filter" ->
-      """WITH toks AS (
-           SELECT doc_id,
-             unnest(string_split_regex(lower(text), '[^a-z0-9'']+')) AS w
-           FROM documents),
-         tw AS (SELECT doc_id,
-             CAST(('0x' || substr(md5(w), 1, 8)) AS BIGINT) % 1024 AS b
-           FROM toks WHERE w <> ''),
-         s AS (SELECT doc_id,
-             sum((b * 2654435761) % 2000 - 1000) AS tok_margin
-           FROM tw GROUP BY doc_id),
-         m AS (SELECT d.doc_id,
-             CAST(250 + COALESCE(s.tok_margin, 0) AS BIGINT)
-               AS margin_milli
-           FROM documents d LEFT JOIN s USING (doc_id)),
-         cd AS (SELECT margin_milli,
-             cume_dist() OVER (ORDER BY margin_milli) AS c FROM m),
-         thr AS (SELECT min(margin_milli) AS t FROM cd WHERE c >= 0.5)
-         SELECT m.doc_id, m.margin_milli FROM m, thr
-         WHERE m.margin_milli >= thr.t
-         ORDER BY m.doc_id""",
-
-    "dedup_components" ->
-      """WITH RECURSIVE pairs AS (
-           SELECT doc_id AS id_a, doc_id + 1 AS id_b FROM documents
-           WHERE doc_id % 5 = 0
-           UNION ALL
-           SELECT doc_id + 1, doc_id + 2 FROM documents WHERE doc_id % 5 = 0
-           UNION ALL
-           SELECT doc_id, doc_id + 11 FROM documents WHERE doc_id % 50 = 0),
-         edges AS (
-           SELECT id_a AS src, id_b AS dst FROM pairs
-           UNION SELECT id_b, id_a FROM pairs),
-         reach(src, dst) AS (
-           SELECT src, dst FROM edges
-           UNION
-           SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-         comp AS (
-           SELECT src AS id, LEAST(src, MIN(dst)) AS component
-           FROM reach GROUP BY src),
-         keep AS (
-           SELECT component, id AS keep_id FROM (
-             SELECT c.component, c.id,
-                    row_number() OVER (PARTITION BY c.component
-                      ORDER BY length(d.text) DESC, c.id) AS rk
-             FROM comp c JOIN documents d ON d.doc_id = c.id)
-           WHERE rk = 1)
-         SELECT CAST(c.id AS BIGINT) AS id,
-                CAST(c.component AS BIGINT) AS component,
-                CAST(k.keep_id AS BIGINT) AS keep_id
-         FROM comp c JOIN keep k USING (component) ORDER BY id""",
-
-    // true-jaccard pairwise join (the corpus contains generated near-dups;
-    // 128-perm/32-band LSH finds jaccard>=0.9 pairs w.p. ~1-3e-15)
-    "dedup_minhash" ->
-      """WITH inflated AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 10000, text FROM documents WHERE doc_id % 10 = 0),
-         toks AS (
-           SELECT doc_id, regexp_split_to_array(text, '\s+') AS tk FROM inflated),
-         sets AS (
-           SELECT doc_id, list_distinct(CASE WHEN len(tk) < 3 THEN [array_to_string(tk, ' ')]
-             ELSE list_transform(generate_series(1, len(tk)-2), i -> array_to_string(tk[i:i+2], ' ')) END) AS sh
-           FROM toks),
-         sz AS (SELECT doc_id, len(sh) AS sz FROM sets),
-         ex AS (SELECT doc_id, unnest(sh) AS s FROM sets),
-         shared AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
-           FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-           GROUP BY 1, 2)
-         SELECT id_a, id_b
-         FROM shared
-         JOIN sz za ON za.doc_id = id_a
-         JOIN sz zb ON zb.doc_id = id_b
-         WHERE CAST(c AS DOUBLE) / (za.sz + zb.sz - c) >= 0.9
-         ORDER BY id_a, id_b""",
-
-    // simhash collision candidates verified by exact text equality ⇒ the
-    // result is precisely the exact-duplicate pair set (recall 1: equal
-    // texts always collide; precision 1: the verify removes hash flukes)
-    "dedup_simhash" ->
-      """WITH inflated AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 10000, text FROM documents WHERE doc_id % 10 = 0)
-         SELECT a.doc_id AS id_a, b.doc_id AS id_b
-         FROM inflated a JOIN inflated b
-           ON a.doc_id < b.doc_id AND a.text = b.text
-         ORDER BY id_a, id_b""",
-
-    "dedup_ngram" ->
-      """WITH inflated AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 10000, text FROM documents WHERE doc_id % 10 = 0),
-         toks AS (
-           SELECT doc_id, regexp_split_to_array(text, '\s+') AS tk FROM inflated),
-         sets AS (
-           SELECT doc_id, list_distinct(CASE WHEN len(tk) < 3 THEN [array_to_string(tk, ' ')]
-             ELSE list_transform(generate_series(1, len(tk)-2), i -> array_to_string(tk[i:i+2], ' ')) END) AS sh
-           FROM toks),
-         sz AS (SELECT doc_id, len(sh) AS sz FROM sets),
-         ex AS (SELECT doc_id, unnest(sh) AS s FROM sets),
-         shared AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
-           FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-           GROUP BY 1, 2)
-         SELECT id_a, id_b,
-           CAST(c AS DOUBLE) / (za.sz + zb.sz - c) AS jaccard
-         FROM shared
-         JOIN sz za ON za.doc_id = id_a
-         JOIN sz zb ON zb.doc_id = id_b
-         WHERE CAST(c AS DOUBLE) / (za.sz + zb.sz - c) >= 0.95
-         ORDER BY id_a, id_b""",
-
-    "dedup_embedding" ->
-      """SELECT id_a, id_b FROM (
-           SELECT vec_id AS id_a, vec_id + 10000 AS id_b
-           FROM embeddings WHERE vec_id % 10 = 0
-           UNION ALL
-           SELECT vec_id, vec_id + 20000 FROM embeddings WHERE vec_id % 7 = 0
-           UNION ALL
-           SELECT vec_id + 10000, vec_id + 20000
-           FROM embeddings WHERE vec_id % 70 = 0)
-         ORDER BY id_a, id_b""",
-
-    "similarity_bruteforce" ->
-      """WITH q AS (SELECT vec_id AS q_id,
-              list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS q_vec
-            FROM embeddings WHERE vec_id < 5),
-         c AS (SELECT vec_id AS c_id,
-              list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS c_vec
-            FROM embeddings WHERE vec_id >= 5),
-         s AS (SELECT q_id, c_id,
-              (SELECT sum(x.qe * x.ce)
-               FROM (SELECT unnest(q_vec) AS qe, unnest(c_vec) AS ce) x) AS score
-            FROM q CROSS JOIN c),
-         r AS (SELECT q_id, c_id, score,
-              row_number() OVER (PARTITION BY q_id ORDER BY score DESC, c_id ASC) AS rank
-            FROM s)
-         SELECT q_id, c_id, rank, CAST(score AS BIGINT) AS score FROM r WHERE rank <= 3
-         ORDER BY q_id, rank""",
-
-    "hard_negatives" ->
-      """WITH a AS (SELECT vec_id AS a_id, label AS a_label,
-              list_transform(embedding,
-                x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT))
-                AS a_vec
-            FROM embeddings WHERE vec_id < 5),
-         c AS (SELECT vec_id AS c_id, label AS c_label,
-              list_transform(embedding,
-                x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT))
-                AS c_vec
-            FROM embeddings WHERE vec_id >= 5),
-         s AS (SELECT a_id, c_id, a_label, c_label,
-              (SELECT sum(x.qe * x.ce)
-               FROM (SELECT unnest(a_vec) AS qe, unnest(c_vec) AS ce) x)
-                AS score
-            FROM a CROSS JOIN c),
-         neg AS (SELECT a_id, 'neg' AS kind,
-              row_number() OVER (PARTITION BY a_id
-                ORDER BY score DESC, c_id ASC) AS rank,
-              c_id, score
-            FROM s WHERE a_label <> c_label QUALIFY rank <= 3),
-         pos AS (SELECT a_id, 'pos' AS kind,
-              row_number() OVER (PARTITION BY a_id
-                ORDER BY score ASC, c_id ASC) AS rank,
-              c_id, score
-            FROM s WHERE a_label = c_label AND a_id <> c_id
-            QUALIFY rank <= 3),
-         u AS (SELECT * FROM neg UNION ALL SELECT * FROM pos)
-         SELECT a_id, kind, CAST(rank AS BIGINT) AS rank, c_id,
-           CAST(score AS BIGINT) AS score
-         FROM u ORDER BY a_id, kind, rank""",
-
-    // recall gates: the approximate indexes must recover the exact top-k
-    // (thresholds verified in-query; the oracle pins the verdict per query)
-    "similarity_lsh" ->
-      """SELECT vec_id AS q_id, 1 AS recall_ok FROM embeddings
-         WHERE vec_id < 5 ORDER BY q_id""",
-
-    "similarity_ivf" ->
-      """SELECT vec_id AS q_id, 1 AS recall_ok FROM embeddings
-         WHERE vec_id < 5 ORDER BY q_id""",
-
-    "similarity_pq" ->
-      """SELECT vec_id AS q_id, 1 AS recall_ok FROM embeddings
-         WHERE vec_id < 5 ORDER BY q_id""",
-
-    // fp equivalence classes == text equivalence classes on this corpus
-    "text_fingerprint" ->
-      """WITH inflated AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 10000, text FROM documents WHERE doc_id % 10 = 0)
-         SELECT a.doc_id AS id_a, b.doc_id AS id_b
-         FROM inflated a JOIN inflated b
-           ON a.doc_id < b.doc_id AND a.text = b.text
-         ORDER BY id_a, id_b""",
-
-    "text_repetition" ->
-      """WITH w AS (SELECT doc_id, regexp_split_to_array(text, '\s+') AS ws
-                    FROM documents),
-         b AS (SELECT doc_id, ws[i] || ' ' || ws[i+1] AS gram
-               FROM w, UNNEST(generate_series(1, len(ws)-1)) AS t(i)),
-         c AS (SELECT doc_id, gram, count(*) AS n FROM b GROUP BY 1, 2),
-         m AS (SELECT doc_id, CAST(max(n) AS DOUBLE) / sum(n) AS tbf
-               FROM c GROUP BY 1)
-         SELECT d.doc_id,
-           1.0 - CAST(len(list_distinct(regexp_split_to_array(d.text, '\s+'))) AS DOUBLE)
-               / len(regexp_split_to_array(d.text, '\s+')) AS dup_word_frac,
-           coalesce(m.tbf, 0.0) AS top_bigram_frac
-         FROM documents d LEFT JOIN m USING (doc_id)
-         ORDER BY doc_id""",
-
-    "decontaminate" ->
-      """WITH w AS (SELECT doc_id, regexp_split_to_array(text, '\s+') AS ws
-                    FROM documents),
-         g AS (SELECT doc_id, array_to_string(ws[i:i+2], ' ') AS gram
-               FROM w, UNNEST(generate_series(1, len(ws)-2)) AS t(i)),
-         bench AS (SELECT DISTINCT gram FROM g WHERE doc_id % 97 = 0)
-         SELECT DISTINCT doc_id FROM g
-         WHERE doc_id % 97 <> 0 AND gram IN (SELECT gram FROM bench)
-         ORDER BY doc_id""",
-
-    // identical contract to dedup_minhash — the streaming candidate op
-    // must reach the same verified pair set as the batch pipeline
-    "stream_neardup" ->
-      """WITH inflated AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 10000, text FROM documents WHERE doc_id % 10 = 0),
-         toks AS (
-           SELECT doc_id, regexp_split_to_array(text, '\s+') AS tk FROM inflated),
-         sets AS (
-           SELECT doc_id, list_distinct(CASE WHEN len(tk) < 3 THEN [array_to_string(tk, ' ')]
-             ELSE list_transform(generate_series(1, len(tk)-2), i -> array_to_string(tk[i:i+2], ' ')) END) AS sh
-           FROM toks),
-         sz AS (SELECT doc_id, len(sh) AS sz FROM sets),
-         ex AS (SELECT doc_id, unnest(sh) AS s FROM sets),
-         shared AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
-           FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-           GROUP BY 1, 2)
-         SELECT id_a, id_b
-         FROM shared
-         JOIN sz za ON za.doc_id = id_a
-         JOIN sz zb ON zb.doc_id = id_b
-         WHERE CAST(c AS DOUBLE) / (za.sz + zb.sz - c) >= 0.9
-         ORDER BY id_a, id_b""",
-
-    "decontaminate_fuzzy" ->
-      """WITH bench AS (SELECT doc_id + 200000 AS bid,
-             text || ' zq xq' AS text
-           FROM documents WHERE doc_id % 40 = 0),
-         wa AS (SELECT doc_id, regexp_split_to_array(text, '\s+') AS ws
-                FROM documents),
-         wb AS (SELECT bid, regexp_split_to_array(text, '\s+') AS ws
-                FROM bench),
-         ga AS (SELECT DISTINCT doc_id,
-                  array_to_string(ws[i:i+2], ' ') AS gram
-                FROM wa, UNNEST(generate_series(1, len(ws)-2)) AS t(i)),
-         gb AS (SELECT DISTINCT bid,
-                  array_to_string(ws[i:i+2], ' ') AS gram
-                FROM wb, UNNEST(generate_series(1, len(ws)-2)) AS t(i)),
-         na AS (SELECT doc_id, count(*) AS n FROM ga GROUP BY doc_id),
-         nb AS (SELECT bid, count(*) AS n FROM gb GROUP BY bid),
-         i AS (SELECT ga.doc_id, gb.bid, count(*) AS inter_n
-               FROM ga JOIN gb USING (gram) GROUP BY 1, 2)
-         SELECT i.doc_id, i.bid AS bench_id,
-           CAST(i.inter_n AS DOUBLE) /
-             CAST(na.n + nb.n - i.inter_n AS DOUBLE) AS jaccard
-         FROM i JOIN na ON na.doc_id = i.doc_id
-                JOIN nb ON nb.bid = i.bid
-         WHERE CAST(i.inter_n AS DOUBLE) /
-             CAST(na.n + nb.n - i.inter_n AS DOUBLE) >= 0.9
-         ORDER BY i.doc_id, bench_id""",
-
-    "decontaminate_containment" ->
-      """WITH bench AS (SELECT doc_id + 500000 AS bid,
-             array_to_string((regexp_split_to_array(text, '\s+'))[1:20],
-               ' ') AS text
-           FROM documents WHERE doc_id % 37 = 0),
-         wa AS (SELECT doc_id, regexp_split_to_array(text, '\s+') AS ws
-                FROM documents),
-         wb AS (SELECT bid, regexp_split_to_array(text, '\s+') AS ws
-                FROM bench),
-         ga AS (SELECT DISTINCT doc_id,
-                  array_to_string(ws[i:i+4], ' ') AS gram
-                FROM wa, UNNEST(generate_series(1, len(ws)-4)) AS t(i)),
-         gb AS (SELECT DISTINCT bid,
-                  array_to_string(ws[i:i+4], ' ') AS gram
-                FROM wb, UNNEST(generate_series(1, len(ws)-4)) AS t(i)),
-         nb AS (SELECT bid, count(*) AS bench_n FROM gb GROUP BY bid),
-         iv AS (SELECT ga.doc_id, gb.bid, count(*) AS inter_n
-               FROM ga JOIN gb USING (gram) GROUP BY 1, 2)
-         SELECT iv.doc_id, iv.bid AS bench_id, iv.inter_n, nb.bench_n,
-           CAST(iv.inter_n AS DOUBLE) / CAST(nb.bench_n AS DOUBLE)
-             AS containment
-         FROM iv JOIN nb USING (bid)
-         WHERE CAST(iv.inter_n AS DOUBLE) / CAST(nb.bench_n AS DOUBLE)
-           >= 0.6
-         ORDER BY iv.doc_id, bench_id""",
-
-    "stratified_sample" ->
-      """SELECT doc_id, lang FROM (
-           SELECT doc_id, lang, row_number() OVER (
-             PARTITION BY lang
-             ORDER BY md5('graft-strat-' || CAST(doc_id AS VARCHAR)),
-               doc_id) AS rn
-           FROM documents) WHERE rn <= 20
-         ORDER BY lang, doc_id""",
-
-    "domain_mix" ->
-      """WITH cw AS (SELECT CAST(source AS VARCHAR) AS stratum,
-             count(*) AS cnt,
-             CASE CAST(source AS VARCHAR) WHEN 'src0' THEN 3.0
-               WHEN 'src1' THEN 2.0 ELSE 1.0 END AS w
-           FROM documents GROUP BY source),
-         r AS (SELECT min(CAST(cnt AS DOUBLE) / w) AS ratio FROM cw),
-         t AS (SELECT stratum,
-             CAST(floor(w * (SELECT ratio FROM r)) AS BIGINT) AS tgt
-           FROM cw),
-         rn AS (SELECT doc_id, source, row_number() OVER (
-             PARTITION BY source
-             ORDER BY md5('graft-mix-' || CAST(doc_id AS VARCHAR)),
-               doc_id) AS rn
-           FROM documents)
-         SELECT rn.doc_id, rn.source FROM rn
-         JOIN t ON CAST(rn.source AS VARCHAR) = t.stratum
-         WHERE rn.rn <= t.tgt ORDER BY rn.doc_id""",
-
-    "source_overlap" ->
-      """WITH w AS (SELECT doc_id, source,
-             regexp_split_to_array(text, '\s+') AS ws
-           FROM documents),
-         g AS (SELECT DISTINCT source,
-             array_to_string(ws[i:i+2], ' ') AS gram
-           FROM w, UNNEST(generate_series(1, len(ws)-2)) AS t(i)),
-         n AS (SELECT source, count(*) AS ng FROM g GROUP BY source),
-         i AS (SELECT a.source AS src_a, b.source AS src_b,
-             count(*) AS inter_n
-           FROM g a JOIN g b ON a.gram = b.gram AND a.source < b.source
-           GROUP BY 1, 2)
-         SELECT i.src_a, i.src_b,
-           CAST(na.ng AS BIGINT) AS n_a, CAST(nb.ng AS BIGINT) AS n_b,
-           CAST(i.inter_n AS BIGINT) AS inter_n,
-           CAST(i.inter_n AS DOUBLE) /
-             CAST(na.ng + nb.ng - i.inter_n AS DOUBLE) AS jaccard
-         FROM i JOIN n na ON na.source = i.src_a
-                JOIN n nb ON nb.source = i.src_b
-         ORDER BY src_a, src_b""",
-
-    "token_rarity" ->
-      """WITH toks AS (SELECT doc_id,
-             unnest(string_split_regex(lower(text), '[^a-z0-9'']+')) AS w
-           FROM documents),
-         tf AS (SELECT doc_id, w, count(*) AS tf FROM toks
-           WHERE w <> '' GROUP BY doc_id, w),
-         c AS (SELECT w, CAST(sum(tf) AS BIGINT) AS c FROM tf
-           GROUP BY w)
-         SELECT tf.doc_id, CAST(sum(tf.tf) AS BIGINT) AS n_toks,
-           CAST(sum(tf.tf * c.c) AS BIGINT) AS freq_sum,
-           CAST(min(c.c) AS BIGINT) AS min_freq,
-           CAST(sum(tf.tf * c.c) AS DOUBLE) /
-             CAST(sum(tf.tf) AS DOUBLE) AS mean_freq
-         FROM tf JOIN c USING (w) GROUP BY tf.doc_id
-         ORDER BY tf.doc_id""",
-
-    "audio_features" ->
-      """WITH p AS (SELECT doc_id AS media_id,
-             1 + doc_id % 2 AS ch,
-             8000 + (doc_id % 3) * 4000 AS rate,
-             200 + doc_id % 100 AS n
-           FROM documents)
-         SELECT media_id,
-           CAST(ch AS INT) AS channels,
-           CAST(rate AS INT) AS sample_rate,
-           CAST(n AS BIGINT) AS n_frames,
-           CAST(n AS BIGINT) * 1000000 // rate AS duration_us,
-           (SELECT CAST(sum(v*v) AS BIGINT) FROM
-              (SELECT ((media_id*31 + g*7) % 65536) - 32768 AS v
-               FROM generate_series(0, 597) t(g)
-               WHERE g < n*ch) q) AS sum_sq,
-           (SELECT CAST(max(abs(v)) AS BIGINT) FROM
-              (SELECT ((media_id*31 + g*7) % 65536) - 32768 AS v
-               FROM generate_series(0, 597) t(g)
-               WHERE g < n*ch) q) AS peak_abs,
-           (SELECT CAST(count(*) AS BIGINT)
-            FROM generate_series(0, 597) t(g)
-            WHERE g < n*ch - ch
-              AND (((media_id*31 + g*7) % 65536) - 32768) *
-                  (((media_id*31 + (g+ch)*7) % 65536) - 32768) < 0)
-             AS zero_crossings
-         FROM p ORDER BY media_id""",
-
-    "audio_resample" ->
-      """WITH p AS (SELECT doc_id AS media_id,
-             1 + doc_id % 2 AS ch,
-             8000 + (doc_id % 3) * 4000 AS rate,
-             200 + doc_id % 100 AS n
-           FROM documents),
-         r AS (SELECT media_id, ch, rate // 2 AS rate2,
-             (n + 1) // 2 AS np FROM p)
-         SELECT media_id,
-           CAST(ch AS INT) AS channels,
-           CAST(rate2 AS INT) AS sample_rate,
-           CAST(np AS BIGINT) AS n_frames,
-           CAST(np AS BIGINT) * 1000000 // rate2 AS duration_us,
-           (SELECT CAST(sum(v*v) AS BIGINT) FROM
-              (SELECT ((media_id*31 +
-                  ((2*(gp//ch))*ch + gp%ch)*7) % 65536) - 32768 AS v
-               FROM generate_series(0, 299) t(gp)
-               WHERE gp < np*ch) q) AS sum_sq,
-           (SELECT CAST(max(abs(v)) AS BIGINT) FROM
-              (SELECT ((media_id*31 +
-                  ((2*(gp//ch))*ch + gp%ch)*7) % 65536) - 32768 AS v
-               FROM generate_series(0, 299) t(gp)
-               WHERE gp < np*ch) q) AS peak_abs,
-           (SELECT CAST(count(*) AS BIGINT)
-            FROM generate_series(0, 299) t(gp)
-            WHERE gp < (np-1)*ch
-              AND (((media_id*31 +
-                    ((2*(gp//ch))*ch + gp%ch)*7) % 65536) - 32768) *
-                  (((media_id*31 +
-                    ((2*(gp//ch)+2)*ch + gp%ch)*7) % 65536) - 32768) < 0)
-             AS zero_crossings
-         FROM r ORDER BY media_id""",
-
-    "pack_efficiency" ->
-      """WITH tk AS (SELECT doc_id, doc_id % 8 AS bucket,
-             CAST(len(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) AS BIGINT)
-               AS n_tokens
-           FROM documents),
-         o AS (SELECT doc_id, bucket, n_tokens,
-             CAST(sum(n_tokens) OVER (PARTITION BY bucket ORDER BY doc_id
-               ROWS UNBOUNDED PRECEDING) - n_tokens AS BIGINT)
-               AS start_offset
-           FROM tk),
-         p AS (SELECT bucket,
-             CAST(floor(CAST(start_offset AS DOUBLE) / 2048) AS BIGINT)
-               AS shard,
-             n_tokens
-           FROM o)
-         SELECT bucket, shard, count(*) AS n_docs,
-           CAST(sum(n_tokens) AS BIGINT) AS tokens,
-           CAST(sum(n_tokens) AS DOUBLE) / 2048.0 AS fill
-         FROM p GROUP BY bucket, shard ORDER BY bucket, shard""",
-
-    "split_leakage" ->
-      """WITH inflated AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 40000 AS doc_id, text FROM documents
-           WHERE doc_id % 10 = 0
-           UNION ALL
-           SELECT doc_id + 80000 AS doc_id, text FROM documents
-           WHERE doc_id % 15 = 0),
-         a AS (SELECT doc_id, text,
-             CASE WHEN md5('graft-split-' || CAST(doc_id AS VARCHAR)) <
-                    'cccccccccccccccccccccccccccccccc' THEN 'train'
-                  WHEN md5('graft-split-' || CAST(doc_id AS VARCHAR)) <
-                    'e6666666666666666666666666666666' THEN 'val'
-                  ELSE 'test' END AS split
-           FROM inflated),
-         g AS (SELECT text, CAST(min(doc_id) AS BIGINT) AS keep_id,
-             count(*) AS n_docs,
-             list_sort(list_distinct(list(split))) AS sl
-           FROM a GROUP BY text)
-         SELECT keep_id, n_docs,
-           CAST(len(sl) AS BIGINT) AS n_splits,
-           array_to_string(sl, ',') AS splits
-         FROM g WHERE len(sl) > 1 ORDER BY keep_id""",
-
-    "split_assign" ->
-      """SELECT doc_id,
-           CASE WHEN md5('graft-split-' || CAST(doc_id AS VARCHAR)) <
-                  'cccccccccccccccccccccccccccccccc' THEN 'train'
-                WHEN md5('graft-split-' || CAST(doc_id AS VARCHAR)) <
-                  'e6666666666666666666666666666666' THEN 'val'
-                ELSE 'test' END AS split
-         FROM documents ORDER BY doc_id""",
-
-    "html_strip" ->
-      """WITH inj AS (SELECT doc_id,
-           '<html><head><script type="text/js">if (1 < 2) { x(); }' ||
-           '</script><style>p { color: red; }</style></head>' ||
-           '<body class="d"><p>' || text ||
-           '</p><br/>&nbsp;<a href="/x?a=1&amp;b=2">link</a> ' ||
-           'tail &lt;kept&gt; &#39;q&#39;</body></html>' AS t
-           FROM documents),
-         s1 AS (SELECT doc_id, regexp_replace(t,
-           '(?is)<script\b[^>]*>.*?</script\s*>', ' ', 'g') AS t FROM inj),
-         s2 AS (SELECT doc_id, regexp_replace(t,
-           '(?is)<style\b[^>]*>.*?</style\s*>', ' ', 'g') AS t FROM s1),
-         s3 AS (SELECT doc_id, regexp_replace(t, '<[^>]*>', ' ', 'g')
-           AS t FROM s2),
-         s4 AS (SELECT doc_id, replace(replace(replace(replace(replace(
-           replace(t, '&lt;', '<'), '&gt;', '>'), '&quot;', '"'),
-           '&#39;', ''''), '&nbsp;', ' '), '&amp;', '&') AS t FROM s3),
-         s5 AS (SELECT doc_id, trim(regexp_replace(t, '\s+', ' ', 'g'))
-           AS clean FROM s4)
-         SELECT doc_id, clean, CAST(length(clean) AS BIGINT) AS clean_len
-         FROM s5 ORDER BY doc_id""",
-
-    "gopher_rules" ->
-      """WITH s AS (SELECT doc_id, replace(replace(replace(replace(
-             repeat(text || ' ', CAST(1 + doc_id % 6 AS INT)),
-             ' scan ', chr(10) || '- scan '),
-             ' window ', ' window...' || chr(10)),
-             ' hash ', ' # hash '),
-             ' join ', ' and of join ') AS text FROM documents),
-         f AS (SELECT doc_id, lower(text) AS t,
-             list_filter(string_split_regex(lower(text), '\s+'),
-               w -> w <> '') AS words,
-             string_split(lower(text), chr(10)) AS lines
-           FROM s),
-         g AS (SELECT doc_id,
-             CAST(len(words) AS BIGINT) AS n_words,
-             CAST(len(lines) AS BIGINT) AS n_lines,
-             CAST(floor(CAST(list_sum(list_transform(words,
-                 w -> length(w))) AS DOUBLE)
-               / greatest(CAST(len(words) AS BIGINT), 1)
-               * 1000000.0 + 0.5) AS BIGINT) AS mean_word_len_micro,
-             CAST(floor(
-               CAST(length(t) - length(replace(t, '#', '')) AS DOUBLE)
-               / greatest(CAST(len(words) AS BIGINT), 1)
-               * 1000000.0 + 0.5) AS BIGINT) AS hash_ratio_micro,
-             CAST(floor(
-               ((length(t) - length(replace(t, '...', ''))) / 3)
-               / greatest(CAST(len(words) AS BIGINT), 1)
-               * 1000000.0 + 0.5) AS BIGINT) AS ellipsis_sym_ratio_micro,
-             CAST(floor(CAST(len(list_filter(lines,
-                 l -> regexp_matches(l, '^\s*[-•*]'))) AS DOUBLE)
-               / greatest(CAST(len(lines) AS BIGINT), 1)
-               * 1000000.0 + 0.5) AS BIGINT) AS bullet_frac_micro,
-             CAST(floor(CAST(len(list_filter(lines,
-                 l -> regexp_matches(l, '\.\.\.\s*$'))) AS DOUBLE)
-               / greatest(CAST(len(lines) AS BIGINT), 1)
-               * 1000000.0 + 0.5) AS BIGINT) AS ellipsis_frac_micro,
-             CAST(floor(CAST(len(list_filter(words,
-                 w -> regexp_matches(w, '[a-z]'))) AS DOUBLE)
-               / greatest(CAST(len(words) AS BIGINT), 1)
-               * 1000000.0 + 0.5) AS BIGINT) AS alpha_frac_micro,
-             CAST((CASE WHEN list_contains(words, 'the') THEN 1 ELSE 0 END)
-               + (CASE WHEN list_contains(words, 'be') THEN 1 ELSE 0 END)
-               + (CASE WHEN list_contains(words, 'to') THEN 1 ELSE 0 END)
-               + (CASE WHEN list_contains(words, 'of') THEN 1 ELSE 0 END)
-               + (CASE WHEN list_contains(words, 'and') THEN 1 ELSE 0 END)
-               + (CASE WHEN list_contains(words, 'that') THEN 1 ELSE 0 END)
-               + (CASE WHEN list_contains(words, 'have') THEN 1 ELSE 0 END)
-               + (CASE WHEN list_contains(words, 'with') THEN 1 ELSE 0 END)
-               AS BIGINT) AS stop_hits
-           FROM f)
-         SELECT doc_id, n_words, n_lines, mean_word_len_micro,
-           hash_ratio_micro, ellipsis_sym_ratio_micro,
-           bullet_frac_micro, ellipsis_frac_micro,
-           alpha_frac_micro, stop_hits,
-           (n_words BETWEEN 50 AND 100000
-            AND mean_word_len_micro BETWEEN 3000000 AND 10000000
-            AND hash_ratio_micro <= 100000
-            AND ellipsis_sym_ratio_micro <= 100000
-            AND bullet_frac_micro <= 900000
-            AND ellipsis_frac_micro <= 300000
-            AND alpha_frac_micro >= 800000
-            AND stop_hits >= 2) AS pass
-         FROM g ORDER BY doc_id""",
-
-    "text_scripts" ->
-      """WITH s AS (SELECT doc_id,
-             CASE WHEN doc_id % 4 = 1
-                    THEN regexp_replace(text, '[a-m]', 'д', 'g')
-                  WHEN doc_id % 4 = 2
-                    THEN regexp_replace(text, '[a-m]', '中', 'g')
-                  WHEN doc_id % 4 = 3
-                    THEN regexp_replace(text, '[n-z]', 'ω', 'g')
-                  ELSE text END AS t FROM documents),
-         f AS (SELECT doc_id,
-             regexp_replace(t, '\s+', '', 'g') AS nw FROM s),
-         g AS (SELECT doc_id,
-             CAST(length(nw) AS BIGINT) AS n_glyphs,
-             CAST(floor(CAST(length(regexp_replace(nw,
-                 '[^a-zA-Z]', '', 'g')) AS DOUBLE)
-               / CAST(greatest(length(nw), 1) AS DOUBLE)
-               * 1000000.0 + 0.5) AS BIGINT) AS latin_micro,
-             CAST(floor(CAST(length(regexp_replace(nw,
-                 '[^0-9]', '', 'g')) AS DOUBLE)
-               / CAST(greatest(length(nw), 1) AS DOUBLE)
-               * 1000000.0 + 0.5) AS BIGINT) AS digit_micro,
-             CAST(floor(CAST(length(regexp_replace(nw,
-                 '[^\x{4e00}-\x{9fff}]', '', 'g')) AS DOUBLE)
-               / CAST(greatest(length(nw), 1) AS DOUBLE)
-               * 1000000.0 + 0.5) AS BIGINT) AS cjk_micro,
-             CAST(floor(CAST(length(regexp_replace(nw,
-                 '[^\x{0400}-\x{04ff}]', '', 'g')) AS DOUBLE)
-               / CAST(greatest(length(nw), 1) AS DOUBLE)
-               * 1000000.0 + 0.5) AS BIGINT) AS cyrillic_micro,
-             CAST(floor(CAST(length(regexp_replace(nw,
-                 '[^\x{0370}-\x{03ff}]', '', 'g')) AS DOUBLE)
-               / CAST(greatest(length(nw), 1) AS DOUBLE)
-               * 1000000.0 + 0.5) AS BIGINT) AS greek_micro,
-             CAST(floor(CAST(length(regexp_replace(nw,
-                 '[^\x{0600}-\x{06ff}]', '', 'g')) AS DOUBLE)
-               / CAST(greatest(length(nw), 1) AS DOUBLE)
-               * 1000000.0 + 0.5) AS BIGINT) AS arabic_micro
-           FROM f),
-         h AS (SELECT *, greatest(latin_micro, digit_micro, cjk_micro,
-             cyrillic_micro, greek_micro, arabic_micro) AS m FROM g)
-         SELECT doc_id, n_glyphs, latin_micro, digit_micro, cjk_micro,
-           cyrillic_micro, greek_micro, arabic_micro,
-           CASE WHEN m = 0 THEN 'other'
-                WHEN latin_micro = m THEN 'latin'
-                WHEN digit_micro = m THEN 'digit'
-                WHEN cjk_micro = m THEN 'cjk'
-                WHEN cyrillic_micro = m THEN 'cyrillic'
-                WHEN greek_micro = m THEN 'greek'
-                ELSE 'arabic' END AS dominant
-         FROM h ORDER BY doc_id""",
-
-    "secret_scan" ->
-      """WITH s AS (SELECT doc_id,
-             CASE WHEN doc_id % 3 = 0
-               THEN text || ' Tok' || md5(CAST(doc_id AS VARCHAR))
-               ELSE text END AS t FROM documents),
-         tk AS (SELECT doc_id,
-             list_filter(string_split_regex(t, '\s+'), x -> x <> '')
-               AS toks FROM s),
-         c AS (SELECT doc_id, list_filter(toks, x ->
-             length(x) >= 20
-             AND regexp_matches(x, '^[A-Za-z0-9+/=_-]+$')
-             AND CAST(floor(
-               CAST(len(list_distinct(string_split(x, ''))) AS DOUBLE)
-               / CAST(greatest(len(string_split(x, '')), 1) AS DOUBLE)
-               * 1000000.0 + 0.5) AS BIGINT) >= 500000) AS cands
-           FROM tk)
-         SELECT doc_id, CAST(len(cands) AS BIGINT) AS n_candidates,
-           COALESCE(array_to_string(cands, ','), '') AS candidates
-         FROM c ORDER BY doc_id""",
-
-    "snapshot_diff" ->
-      """WITH v1 AS (SELECT doc_id, text FROM documents),
-         v2 AS (SELECT doc_id,
-             CASE WHEN doc_id % 5 = 0 THEN text || ' v2-edit'
-               ELSE text END AS text
-           FROM documents WHERE doc_id % 7 <> 0
-           UNION ALL
-           SELECT doc_id + 1000000, text FROM documents
-           WHERE doc_id % 3 = 0),
-         j AS (SELECT COALESCE(v1.doc_id, v2.doc_id) AS doc_id,
-             v1.text AS t1, v2.text AS t2,
-             v1.doc_id IS NOT NULL AS ino,
-             v2.doc_id IS NOT NULL AS inn
-           FROM v1 FULL OUTER JOIN v2 ON v1.doc_id = v2.doc_id)
-         SELECT doc_id,
-           CASE WHEN NOT ino THEN 'added'
-                WHEN NOT inn THEN 'removed'
-                WHEN t1 <> t2 THEN 'changed'
-                ELSE 'unchanged' END AS status
-         FROM j WHERE NOT (ino AND inn AND t1 = t2)
-         ORDER BY doc_id""",
-
-    "c4_rules" ->
-      """WITH s AS (SELECT doc_id, replace(replace(replace(replace(text,
-             ' data ', ' data.' || chr(10)),
-             ' fast ', ' fast!' || chr(10)),
-             ' slow ', ' javascript slow '),
-             ' batch ', ' { batch ') AS text FROM documents),
-         f AS (SELECT doc_id, text,
-             string_split(text, chr(10)) AS lines FROM s),
-         g AS (SELECT doc_id, text,
-             CAST(len(lines) AS BIGINT) AS n_lines,
-             list_filter(lines, l ->
-               regexp_matches(rtrim(l), '[.!?"]$')
-               AND len(list_filter(string_split_regex(l, '\s+'),
-                 w -> w <> '')) >= 5
-               AND NOT contains(lower(l), 'javascript')) AS kept
-           FROM f)
-         SELECT doc_id, n_lines, CAST(len(kept) AS BIGINT) AS n_kept,
-           (len(kept) >= 3 AND NOT contains(lower(text), 'lorem ipsum')
-            AND NOT contains(text, '{')) AS keep,
-           COALESCE(array_to_string(kept, chr(10)), '') AS clean
-         FROM g ORDER BY doc_id""",
-
-    "unigram_surprisal" ->
-      """WITH toks AS (SELECT doc_id,
-             unnest(string_split_regex(lower(text), '[^a-z0-9'']+')) AS w
-           FROM documents),
-         tf AS (SELECT doc_id, w, count(*) AS tf FROM toks
-           WHERE w <> '' GROUP BY doc_id, w),
-         c AS (SELECT w, CAST(sum(tf) AS BIGINT) AS c FROM tf
-           GROUP BY w),
-         tot AS (SELECT CAST(sum(c) AS BIGINT) AS total FROM c),
-         scored AS (SELECT tf.doc_id, tf.tf,
-             tf.tf * CAST(floor(-ln(CAST(c.c AS DOUBLE) /
-               CAST(tot.total AS DOUBLE)) * 1000000.0 + 0.5) AS BIGINT)
-               AS nm
-           FROM tf JOIN c USING (w), tot)
-         SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_toks,
-           CAST(sum(nm) AS BIGINT) AS sum_nats_micro,
-           CAST(sum(nm) AS DOUBLE) / CAST(sum(tf) AS DOUBLE)
-             AS mean_nats_micro
-         FROM scored GROUP BY doc_id ORDER BY doc_id""",
-
-    "bigram_surprisal" ->
-      """WITH w AS (SELECT doc_id, list_filter(
-             string_split_regex(lower(text), '[^a-z0-9'']+'),
-             x -> x <> '') AS ws FROM documents),
-         toks AS (SELECT doc_id, unnest(ws) AS w FROM w),
-         c1 AS (SELECT w, CAST(count(*) AS BIGINT) AS c1 FROM toks
-           GROUP BY w),
-         tot AS (SELECT CAST(count(*) AS BIGINT) AS total FROM toks),
-         bg AS (SELECT doc_id, ws[i] AS v, ws[i + 1] AS w
-           FROM w, unnest(range(1, len(ws))) t(i)),
-         c2 AS (SELECT v, w, CAST(count(*) AS BIGINT) AS c2 FROM bg
-           GROUP BY v, w),
-         sc AS (SELECT bg.doc_id,
-             CAST(floor(-ln(
-               0.9 * (CAST(c2.c2 AS DOUBLE) / CAST(u1.c1 AS DOUBLE))
-               + (CAST(1.0 AS DOUBLE) - CAST(0.9 AS DOUBLE))
-                 * (CAST(u2.c1 AS DOUBLE)
-                                / CAST(tot.total AS DOUBLE)))
-               * 1000000.0 + 0.5) AS BIGINT) AS nm
-           FROM bg JOIN c2 USING (v, w)
-             JOIN c1 u1 ON u1.w = bg.v
-             JOIN c1 u2 ON u2.w = bg.w, tot)
-         SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-           CAST(sum(nm) AS BIGINT) AS sum_nats_micro,
-           CAST(sum(nm) AS DOUBLE) / CAST(count(*) AS DOUBLE)
-             AS mean_nats_micro
-         FROM sc GROUP BY doc_id ORDER BY doc_id""",
-
-    "stream_cms_topk" ->
-      """WITH toks AS (SELECT
-             unnest(string_split_regex(lower(text), '[^a-z0-9'']+')) AS w
-           FROM documents),
-         c AS (SELECT w, CAST(count(*) AS BIGINT) AS est FROM toks
-           WHERE w <> '' GROUP BY w)
-         SELECT w, est FROM c WHERE est >= 500 ORDER BY w""",
-
-    "psi_drift" ->
-      """WITH a AS (SELECT CAST(value AS DOUBLE) AS v FROM events
-           WHERE user_id % 2 = 0 AND value IS NOT NULL),
-         b AS (SELECT CAST(value * 1.15 + 10 AS DOUBLE) AS v FROM events
-           WHERE user_id % 2 = 1 AND value IS NOT NULL),
-         pool AS (SELECT min(v) AS lo, max(v) AS hi FROM
-           (SELECT v FROM a UNION ALL SELECT v FROM b)),
-         ba AS (SELECT least(CAST(floor((v - lo) / (hi - lo) * 10)
-             AS INT), 9) AS bin, CAST(count(*) AS BIGINT) AS c
-           FROM a, pool GROUP BY 1),
-         bb AS (SELECT least(CAST(floor((v - lo) / (hi - lo) * 10)
-             AS INT), 9) AS bin, CAST(count(*) AS BIGINT) AS c
-           FROM b, pool GROUP BY 1),
-         na AS (SELECT CAST(count(*) AS BIGINT) AS na FROM a),
-         nb AS (SELECT CAST(count(*) AS BIGINT) AS nb FROM b),
-         bins AS (SELECT CAST(range AS INT) AS bin FROM range(10)),
-         sa AS (SELECT bin, COALESCE(c, 0) AS ca
-           FROM bins LEFT JOIN ba USING (bin)),
-         sb AS (SELECT bin, COALESCE(c, 0) AS cb
-           FROM bins LEFT JOIN bb USING (bin)),
-         terms AS (SELECT CAST(floor(
-             (CAST(ca + 1 AS DOUBLE) / CAST(na + 10 AS DOUBLE)
-              - CAST(cb + 1 AS DOUBLE) / CAST(nb + 10 AS DOUBLE))
-             * ln((CAST(ca + 1 AS DOUBLE) / CAST(na + 10 AS DOUBLE))
-                  / (CAST(cb + 1 AS DOUBLE) / CAST(nb + 10 AS DOUBLE)))
-             * 1000000.0 + 0.5) AS BIGINT) AS tm
-           FROM sa JOIN sb USING (bin), na, nb)
-         SELECT na.na AS n_a, nb.nb AS n_b,
-           CASE WHEN na.na > 0 AND nb.nb > 0
-             AND NOT (pool.lo IS NULL OR pool.lo = pool.hi)
-             THEN (SELECT CAST(sum(tm) AS BIGINT) FROM terms) END
-             AS psi_micro
-         FROM na, nb, pool""",
-
-    "events_stream_psi" ->
-      """WITH v AS (SELECT ts, CAST(value AS DOUBLE) AS v FROM events
-           WHERE value IS NOT NULL),
-         r AS (SELECT min(v) AS lo, max(v) AS hi FROM v),
-         ref AS (SELECT CASE WHEN hi = lo THEN 0 ELSE
-             least(CAST(floor((v - lo) / (hi - lo) * 10)
-             AS INT), 9) END AS bin, CAST(count(*) AS BIGINT) AS cr
-           FROM v, r GROUP BY 1),
-         nr AS (SELECT CAST(sum(cr) AS BIGINT) AS n_r FROM ref),
-         wb AS (SELECT time_bucket(INTERVAL 1 HOUR, ts) AS w_start,
-             CASE WHEN hi = lo THEN 0 ELSE
-               least(CAST(floor((v - lo) / (hi - lo) * 10) AS INT), 9)
-               END AS bin, CAST(count(*) AS BIGINT) AS c
-           FROM v, r GROUP BY 1, 2),
-         ng AS (SELECT w_start, CAST(sum(c) AS BIGINT) AS n_g FROM wb
-           GROUP BY w_start),
-         grid AS (SELECT ng.w_start, ng.n_g, b.bin, wb.c, ref.cr
-           FROM ng CROSS JOIN
-             (SELECT CAST(range AS INT) AS bin FROM range(10)) b
-           LEFT JOIN wb ON wb.w_start = ng.w_start AND wb.bin = b.bin
-           LEFT JOIN ref ON ref.bin = b.bin),
-         terms AS (SELECT w_start, n_g, CAST(floor((
-             (CAST(COALESCE(c, 0) + 1 AS DOUBLE)
-                / CAST(n_g + 10 AS DOUBLE)
-              - CAST(COALESCE(cr, 0) + 1 AS DOUBLE)
-                / CAST(n_r + 10 AS DOUBLE))
-             * ln((CAST(COALESCE(c, 0) + 1 AS DOUBLE)
-                     / CAST(n_g + 10 AS DOUBLE))
-                  / (CAST(COALESCE(cr, 0) + 1 AS DOUBLE)
-                     / CAST(n_r + 10 AS DOUBLE))))
-             * 1000000.0 + 0.5) AS BIGINT) AS tm
-           FROM grid, nr)
-         SELECT w_start, n_g AS n, CAST(sum(tm) AS BIGINT) AS psi_micro
-         FROM terms GROUP BY w_start, n_g ORDER BY w_start""",
-
-    "ks_drift" ->
-      """WITH a AS (SELECT CAST(value AS DOUBLE) AS v FROM events
-           WHERE user_id % 2 = 0 AND value IS NOT NULL),
-         b AS (SELECT CAST(value * 1.15 + 10 AS DOUBLE) AS v FROM events
-           WHERE user_id % 2 = 1 AND value IS NOT NULL),
-         ca AS (SELECT v, CAST(count(*) AS BIGINT) AS c FROM a
-           GROUP BY v),
-         cb AS (SELECT v, CAST(count(*) AS BIGINT) AS c FROM b
-           GROUP BY v),
-         g AS (SELECT COALESCE(ca.v, cb.v) AS v,
-             COALESCE(ca.c, 0) AS ca, COALESCE(cb.c, 0) AS cb
-           FROM ca FULL OUTER JOIN cb ON ca.v = cb.v),
-         t AS (SELECT CAST(COALESCE(sum(ca), 0) AS BIGINT) AS na,
-             CAST(COALESCE(sum(cb), 0) AS BIGINT) AS nb FROM g),
-         c AS (SELECT
-             sum(ca) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
-               AND CURRENT ROW) AS fa,
-             sum(cb) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
-               AND CURRENT ROW) AS fb
-           FROM g),
-         gaps AS (SELECT CAST(floor(abs(
-             CAST(fa AS DOUBLE) / CAST(greatest(na, 1) AS DOUBLE)
-             - CAST(fb AS DOUBLE) / CAST(greatest(nb, 1) AS DOUBLE))
-             * 1000000.0 + 0.5) AS BIGINT) AS gap FROM c, t)
-         SELECT na AS n_a, nb AS n_b,
-           CASE WHEN na > 0 AND nb > 0
-             THEN (SELECT max(gap) FROM gaps) END AS ks_micro
-         FROM t""",
-
-    "source_divergence" ->
-      """WITH toks AS (SELECT source, unnest(list_filter(
-             string_split_regex(lower(text), '[^a-z0-9'']+'),
-             x -> x <> '')) AS w FROM documents),
-         cs AS (SELECT source, w, CAST(count(*) AS BIGINT) AS c_sw
-           FROM toks GROUP BY source, w),
-         cw AS (SELECT w, CAST(sum(c_sw) AS BIGINT) AS c_w FROM cs
-           GROUP BY w),
-         ns AS (SELECT source, CAST(sum(c_sw) AS BIGINT) AS n_s FROM cs
-           GROUP BY source),
-         tt AS (SELECT CAST(sum(c_w) AS BIGINT) AS n_tot FROM cw),
-         grid AS (SELECT ns.source, cw.w, ns.n_s, cw.c_w, cs.c_sw
-           FROM cw CROSS JOIN ns
-           LEFT JOIN cs ON cs.source = ns.source AND cs.w = cw.w),
-         pq AS (SELECT source, n_s,
-             CAST(COALESCE(c_sw, 0) AS DOUBLE) / CAST(n_s AS DOUBLE)
-               AS p,
-             CAST(c_w AS DOUBLE) / CAST(n_tot AS DOUBLE) AS q,
-             0.5 * (CAST(COALESCE(c_sw, 0) AS DOUBLE)
-                      / CAST(n_s AS DOUBLE)
-                    + CAST(c_w AS DOUBLE) / CAST(n_tot AS DOUBLE)) AS m
-           FROM grid, tt),
-         terms AS (SELECT source, n_s, CAST(floor((
-             0.5 * (CASE WHEN p > 0 THEN p * ln(p / m) ELSE 0 END)
-             + 0.5 * (q * ln(q / m)))
-             * 1000000.0 + 0.5) AS BIGINT) AS tm FROM pq)
-         SELECT source, n_s AS n_toks,
-           CAST(sum(tm) AS BIGINT) AS js_micro
-         FROM terms GROUP BY source, n_s ORDER BY source""",
-
-    "collocations_pmi" ->
-      """WITH w AS (SELECT doc_id, list_filter(
-             string_split_regex(lower(text), '[^a-z0-9'']+'),
-             x -> x <> '') AS ws FROM documents),
-         toks AS (SELECT unnest(ws) AS w FROM w),
-         c1 AS (SELECT w, CAST(count(*) AS BIGINT) AS c1 FROM toks
-           GROUP BY w),
-         nt AS (SELECT CAST(count(*) AS BIGINT) AS n_tok FROM toks),
-         bg AS (SELECT ws[i] AS v, ws[i + 1] AS w
-           FROM w, unnest(range(1, len(ws))) t(i)),
-         c2 AS (SELECT v, w, CAST(count(*) AS BIGINT) AS pair_count
-           FROM bg GROUP BY v, w HAVING count(*) >= 5),
-         nbg AS (SELECT CAST(sum(greatest(len(ws) - 1, 0)) AS BIGINT)
-           AS n_bg FROM w),
-         p AS (SELECT c2.v, c2.w, pair_count,
-             CAST(floor(ln(
-               (CAST(pair_count AS DOUBLE) / CAST(n_bg AS DOUBLE))
-               / ((CAST(u1.c1 AS DOUBLE) / CAST(n_tok AS DOUBLE))
-                  * (CAST(u2.c1 AS DOUBLE) / CAST(n_tok AS DOUBLE))))
-               * 1000000.0 + 0.5) AS BIGINT) AS pmi_micro
-           FROM c2 JOIN c1 u1 ON u1.w = c2.v
-             JOIN c1 u2 ON u2.w = c2.w, nt, nbg),
-         r AS (SELECT *, row_number() OVER (ORDER BY pmi_micro DESC,
-             v ASC, w ASC) AS rank FROM p)
-         SELECT v, w, pair_count, pmi_micro, rank FROM r
-         WHERE rank <= 20 ORDER BY rank""",
-
-    "cms_heavy_hitters" ->
-      """WITH toks AS (SELECT
-             unnest(string_split_regex(lower(text), '[^a-z0-9'']+')) AS w
-           FROM documents),
-         c AS (SELECT w, CAST(count(*) AS BIGINT) AS est FROM toks
-           WHERE w <> '' GROUP BY w)
-         SELECT w, est FROM c WHERE est >= 500 ORDER BY w""",
-
-    "bm25_topk" ->
-      """WITH q(qid, qtext) AS (VALUES
-           (1, 'spark window agg stream'),
-           (2, 'customer order join merge'),
-           (3, 'hash table scan fast')),
-         qt AS (SELECT DISTINCT qid,
-             unnest(string_split_regex(lower(qtext), '[^a-z0-9'']+')) AS w
-           FROM q),
-         dl AS (SELECT doc_id, CAST(len(list_filter(
-             string_split_regex(lower(text), '[^a-z0-9'']+'),
-             x -> x <> '')) AS BIGINT) AS dl FROM documents),
-         c AS (SELECT count(*) AS n_docs,
-             CAST(sum(dl) AS BIGINT) AS total FROM dl),
-         toks AS (SELECT doc_id,
-             unnest(string_split_regex(lower(text), '[^a-z0-9'']+')) AS w
-           FROM documents),
-         tf AS (SELECT doc_id, w, count(*) AS tf FROM toks
-           WHERE w IN (SELECT w FROM qt WHERE w <> '')
-           GROUP BY doc_id, w),
-         dfq AS (SELECT w, count(*) AS df FROM tf GROUP BY w),
-         part AS (SELECT qt.qid, tf.doc_id,
-             CAST(floor(
-               ln(1.0 + (CAST(c.n_docs AS DOUBLE) - CAST(dfq.df AS DOUBLE)
-                           + 0.5) / (CAST(dfq.df AS DOUBLE) + 0.5))
-               * CAST(tf.tf AS DOUBLE) * 2.2
-               / (CAST(tf.tf AS DOUBLE) + 1.2 *
-                  (0.25 + 0.75 * CAST(dl.dl AS DOUBLE) /
-                   (CAST(c.total AS DOUBLE) / CAST(c.n_docs AS DOUBLE))))
-               * 1000000.0 + 0.5) AS BIGINT) AS sm
-           FROM tf JOIN dfq USING (w) JOIN qt USING (w)
-                JOIN dl USING (doc_id), c),
-         sc AS (SELECT qid, doc_id, CAST(sum(sm) AS BIGINT) AS score_micro
-           FROM part GROUP BY qid, doc_id),
-         r AS (SELECT qid, doc_id, score_micro, row_number() OVER (
-             PARTITION BY qid ORDER BY score_micro DESC, doc_id) AS rank
-           FROM sc)
-         SELECT qid, doc_id, score_micro, CAST(rank AS INT) AS rank
-         FROM r WHERE rank <= 5 ORDER BY qid, rank""",
-
-    "paragraph_dedup" ->
-      """WITH ws AS (SELECT doc_id,
-             list_filter(string_split(text, ' '), x -> x <> '') AS ws
-           FROM documents),
-         d2 AS (SELECT doc_id, array_to_string(list_transform(
-             range(greatest(CAST(ceil(len(ws) / 10.0) AS BIGINT), 1)),
-             g -> array_to_string(list_slice(ws, g*10+1, g*10+10), ' ')),
-             chr(10)||chr(10)) AS text FROM ws),
-         paras AS (SELECT doc_id,
-             unnest(string_split(text, chr(10)||chr(10))) AS para,
-             generate_subscripts(string_split(text, chr(10)||chr(10)), 1)
-               AS idx
-           FROM d2),
-         k AS (SELECT doc_id, idx, para, row_number() OVER (
-             PARTITION BY para ORDER BY doc_id, idx) AS rn FROM paras),
-         kept AS (SELECT doc_id, idx, para FROM k
-           WHERE length(para) < 1 OR rn = 1),
-         reb AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
-             string_agg(para, chr(10)||chr(10) ORDER BY idx) AS text
-           FROM kept GROUP BY doc_id),
-         np AS (SELECT doc_id, CAST(len(string_split(text,
-             chr(10)||chr(10))) AS BIGINT) AS n_paras FROM d2)
-         SELECT np.doc_id, coalesce(reb.text, '') AS text, np.n_paras,
-           coalesce(reb.n_kept, CAST(0 AS BIGINT)) AS n_kept
-         FROM np LEFT JOIN reb USING (doc_id) ORDER BY np.doc_id""",
-
-    // components + survivors over the TRUE jaccard>=0.9 pair set —
-    // the all-pairs answer the pair-capped Spark mode must reproduce
-    "dedup_minhash_components" ->
-      """WITH RECURSIVE inflated AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 10000, text FROM documents WHERE doc_id % 10 = 0),
-         tk AS (
-           SELECT doc_id, regexp_split_to_array(text, '\s+') AS tk FROM inflated),
-         sets AS (
-           SELECT doc_id, list_distinct(CASE WHEN len(tk) < 3 THEN [array_to_string(tk, ' ')]
-             ELSE list_transform(generate_series(1, len(tk)-2), i -> array_to_string(tk[i:i+2], ' ')) END) AS sh
-           FROM tk),
-         sz AS (SELECT doc_id, len(sh) AS sz FROM sets),
-         ex AS (SELECT doc_id, unnest(sh) AS s FROM sets),
-         shared AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
-           FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),
-         pairs AS (
-           SELECT id_a, id_b
-           FROM shared
-           JOIN sz za ON za.doc_id = id_a
-           JOIN sz zb ON zb.doc_id = id_b
-           WHERE CAST(c AS DOUBLE) / (za.sz + zb.sz - c) >= 0.9),
-         edges AS (
-           SELECT id_a AS src, id_b AS dst FROM pairs
-           UNION SELECT id_b, id_a FROM pairs),
-         reach(src, dst) AS (
-           SELECT src, dst FROM edges
-           UNION
-           SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-         comp AS (
-           SELECT src AS id, LEAST(src, MIN(dst)) AS component
-           FROM reach GROUP BY src),
-         keep AS (
-           SELECT component, id AS keep_id FROM (
-             SELECT c.component, c.id,
-                    row_number() OVER (PARTITION BY c.component
-                      ORDER BY length(d.text) DESC, c.id) AS rk
-             FROM comp c JOIN inflated d ON d.doc_id = c.id)
-           WHERE rk = 1)
-         SELECT CAST(c.id AS BIGINT) AS id,
-                CAST(c.component AS BIGINT) AS component,
-                CAST(k.keep_id AS BIGINT) AS keep_id
-         FROM comp c JOIN keep k USING (component) ORDER BY id""",
-
-    "substr_dedup" ->
-      """WITH toks AS (SELECT doc_id,
-             regexp_split_to_array(text, '\s+') AS ws,
-             len(regexp_split_to_array(text, '\s+')) AS nt
-           FROM documents),
-         grams AS (SELECT doc_id, s - 1 AS pos,
-             array_to_string(ws[s:s+7], ' ') AS g
-           FROM toks, unnest(range(1, greatest(nt - 8 + 2, 1))) t(s)),
-         occ AS (SELECT doc_id, pos, g,
-             row_number() OVER (PARTITION BY g ORDER BY doc_id, pos)
-               AS rn,
-             count(*) OVER (PARTITION BY g) AS c
-           FROM grams),
-         removed AS (SELECT DISTINCT doc_id, pos + j AS tokidx
-           FROM occ, unnest(range(0, 8)) u(j)
-           WHERE c > 1 AND rn > 1),
-         tokens AS (SELECT doc_id,
-             unnest(ws) AS tok, generate_subscripts(ws, 1) - 1 AS tokidx
-           FROM toks),
-         kept AS (SELECT t.doc_id, t.tokidx, t.tok FROM tokens t
-           LEFT JOIN removed r
-             ON t.doc_id = r.doc_id AND t.tokidx = r.tokidx
-           WHERE r.doc_id IS NULL),
-         reb AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
-             string_agg(tok, ' ' ORDER BY tokidx) AS text
-           FROM kept GROUP BY doc_id)
-         SELECT toks.doc_id, coalesce(reb.text, '') AS text,
-           CAST(toks.nt AS BIGINT) AS n_tokens,
-           CAST(toks.nt - coalesce(reb.n_kept, 0) AS BIGINT) AS n_removed
-         FROM toks LEFT JOIN reb USING (doc_id) ORDER BY toks.doc_id""",
-
-    "text_normalize" ->
-      """WITH inj AS (SELECT doc_id,
-             regexp_replace(text, 'a', 'a' || chr(769), 'g') AS t
-           FROM documents)
-         SELECT doc_id, nfc_normalize(t) AS text_nfc,
-           CAST(length(t) AS BIGINT) AS len_raw,
-           CAST(length(nfc_normalize(t)) AS BIGINT) AS len_nfc
-         FROM inj ORDER BY doc_id""",
-
-    "bpe_pairs" ->
-      """WITH toks AS (SELECT
-             unnest(string_split_regex(lower(text), '[^a-z0-9'']+')) AS w
-           FROM documents),
-         words AS (SELECT w, count(*) AS c FROM toks WHERE w <> ''
-           GROUP BY w HAVING length(w) >= 2),
-         pairs AS (SELECT substring(w, CAST(i AS INT), 1) AS l,
-             substring(w, CAST(i AS INT) + 1, 1) AS r, c
-           FROM words, UNNEST(range(1, length(w))) AS t(i)),
-         agg AS (SELECT l, r, CAST(sum(c) AS BIGINT) AS pair_count
-           FROM pairs GROUP BY l, r),
-         head AS (SELECT * FROM agg
-           ORDER BY pair_count DESC, l ASC, r ASC LIMIT 50)
-         SELECT l AS "left", r AS "right", pair_count,
-           CAST(row_number() OVER (
-             ORDER BY pair_count DESC, l ASC, r ASC) AS INT) AS rank
-         FROM head ORDER BY rank""",
-
-    "pii_scrub" ->
-      """WITH d AS (SELECT doc_id, text ||
-           CASE WHEN doc_id % 3 = 0 THEN ' contact u' || doc_id || '@example.com' ELSE '' END ||
-           CASE WHEN doc_id % 5 = 0 THEN ' from 10.0.' || (doc_id % 256) || '.7' ELSE '' END ||
-           CASE WHEN doc_id % 7 = 0 THEN ' call 555-867-5309' ELSE '' END ||
-           CASE WHEN doc_id % 11 = 0 THEN ' ssn 123-45-6789' ELSE '' END AS text
-           FROM documents)
-         SELECT doc_id,
-           CAST(len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_email,
-           CAST(len(regexp_extract_all(text, '\b\d{3}-\d{2}-\d{4}\b')) AS BIGINT) AS n_ssn,
-           CAST(len(regexp_extract_all(text, '\b\d{3}[-.]\d{3}[-.]\d{4}\b')) AS BIGINT) AS n_phone,
-           CAST(len(regexp_extract_all(text, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS BIGINT) AS n_ipv4,
-           regexp_replace(regexp_replace(regexp_replace(regexp_replace(text,
-             '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-             '\b\d{3}-\d{2}-\d{4}\b', '<SSN>', 'g'),
-             '\b\d{3}[-.]\d{3}[-.]\d{4}\b', '<PHONE>', 'g'),
-             '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g') AS redacted
-         FROM d ORDER BY doc_id""",
-
-    "token_pack" ->
-      """WITH tk AS (SELECT doc_id, doc_id % 8 AS bucket,
-             CAST(len(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) AS BIGINT) AS n_tokens
-           FROM documents),
-         o AS (SELECT doc_id, bucket, n_tokens,
-             CAST(sum(n_tokens) OVER (PARTITION BY bucket ORDER BY doc_id
-               ROWS UNBOUNDED PRECEDING) - n_tokens AS BIGINT) AS start_offset
-           FROM tk)
-         SELECT doc_id, bucket,
-           CAST(floor(CAST(start_offset AS DOUBLE) / 2048) AS BIGINT) AS shard,
-           n_tokens, start_offset
-         FROM o ORDER BY doc_id""",
-
-    "semantic_cluster" ->
-      """WITH q AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS v
-           FROM embeddings),
-         c AS (SELECT vec_id AS cid, v AS cv FROM q WHERE vec_id < 8),
-         d AS (SELECT q.vec_id, c.cid,
-             (SELECT sum((x.a - x.b) * (x.a - x.b))
-              FROM (SELECT unnest(q.v) AS a, unnest(c.cv) AS b) x) AS d2
-           FROM q CROSS JOIN c),
-         r AS (SELECT vec_id, cid, d2, row_number() OVER (
-             PARTITION BY vec_id ORDER BY d2 ASC, cid ASC) AS rn FROM d)
-         SELECT vec_id, CAST(cid AS BIGINT) AS cluster,
-           CAST(d2 AS BIGINT) AS dist2
-         FROM r WHERE rn = 1 ORDER BY vec_id""",
-
-    // the same 2-iteration integer-exact Lloyd fit, spelled out: seeds =
-    // 4 lowest-id vectors relabeled 0..3; per-iteration argmin assign
-    // (ties to lowest cid) then per-dim floor(sum/count) centroids with
-    // empty clusters keeping their previous centroid (dim fixed at 64)
-    "kmeans_fit" -> {
-      val d2 = (vs: String, cs: String) =>
-        s"""(SELECT sum((p.a - p.b) * (p.a - p.b))
-            FROM (SELECT unnest($vs) AS a, unnest($cs) AS b) p)"""
-      s"""WITH q AS (SELECT vec_id,
-             list_transform(embedding,
-               x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS v
-           FROM embeddings),
-         seeds AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid,
-             v AS cv FROM q ORDER BY vec_id LIMIT 4),
-         d1 AS (SELECT q.vec_id, s.cid, ${d2("q.v", "s.cv")} AS d2
-           FROM q CROSS JOIN seeds s),
-         a1 AS (SELECT vec_id, cid FROM (SELECT vec_id, cid, row_number()
-             OVER (PARTITION BY vec_id ORDER BY d2 ASC, cid ASC) AS rn
-           FROM d1) WHERE rn = 1),
-         m1 AS (SELECT a1.cid, g.pos,
-             CAST(floor(CAST(sum(q.v[g.pos]) AS DOUBLE) / count(*))
-               AS BIGINT) AS m
-           FROM a1 JOIN q USING (vec_id),
-             generate_series(1, 64) AS g(pos)
-           GROUP BY a1.cid, g.pos),
-         c1 AS (SELECT s.cid, COALESCE(n.cv, s.cv) AS cv
-           FROM seeds s LEFT JOIN (SELECT cid, list(m ORDER BY pos) AS cv
-             FROM m1 GROUP BY cid) n USING (cid)),
-         d2_ AS (SELECT q.vec_id, c.cid, ${d2("q.v", "c.cv")} AS d2
-           FROM q CROSS JOIN c1 c),
-         a2 AS (SELECT vec_id, cid FROM (SELECT vec_id, cid, row_number()
-             OVER (PARTITION BY vec_id ORDER BY d2 ASC, cid ASC) AS rn
-           FROM d2_) WHERE rn = 1),
-         m2 AS (SELECT a2.cid, g.pos,
-             CAST(floor(CAST(sum(q.v[g.pos]) AS DOUBLE) / count(*))
-               AS BIGINT) AS m
-           FROM a2 JOIN q USING (vec_id),
-             generate_series(1, 64) AS g(pos)
-           GROUP BY a2.cid, g.pos),
-         c2 AS (SELECT c1.cid, COALESCE(n.cv, c1.cv) AS cv
-           FROM c1 LEFT JOIN (SELECT cid, list(m ORDER BY pos) AS cv
-             FROM m2 GROUP BY cid) n USING (cid)),
-         df_ AS (SELECT q.vec_id, c.cid, ${d2("q.v", "c.cv")} AS d2
-           FROM q CROSS JOIN c2 c)
-         SELECT vec_id, CAST(cid AS BIGINT) AS cluster,
-           CAST(d2 AS BIGINT) AS dist2
-         FROM (SELECT vec_id, cid, d2, row_number()
-             OVER (PARTITION BY vec_id ORDER BY d2 ASC, cid ASC) AS rn
-           FROM df_) WHERE rn = 1 ORDER BY vec_id"""
-    },
-
-    // the kept set is the naturals (planted +10000 copies all drop: they
-    // sit in their original's cluster at cosine 1); cluster = the same
-    // integer-exact nearest-centroid argmin as semantic_cluster
-    "semantic_dedup" ->
-      """WITH q AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS v
-           FROM embeddings),
-         c AS (SELECT vec_id AS cid, v AS cv FROM q WHERE vec_id < 8),
-         d AS (SELECT q.vec_id, c.cid,
-             (SELECT sum((x.a - x.b) * (x.a - x.b))
-              FROM (SELECT unnest(q.v) AS a, unnest(c.cv) AS b) x) AS d2
-           FROM q CROSS JOIN c),
-         r AS (SELECT vec_id, cid, d2, row_number() OVER (
-             PARTITION BY vec_id ORDER BY d2 ASC, cid ASC) AS rn FROM d)
-         SELECT vec_id, CAST(cid AS BIGINT) AS cluster
-         FROM r WHERE rn = 1 ORDER BY vec_id""",
-
-    "multimodal_decode" ->
-      """SELECT doc_id AS media_id,
-         CAST(16 + doc_id % 32 AS BIGINT) AS width,
-         CAST(16 + (doc_id // 32) % 32 AS BIGINT) AS height,
-         CAST(3 AS BIGINT) AS channels
-         FROM documents ORDER BY media_id""",
-
-    "text_quality" ->
-      """SELECT doc_id,
-         length(text) AS n_chars,
-         len(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) AS n_tokens,
-         CAST(length(text) AS DOUBLE) / greatest(len(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')), 1) AS mean_token_len,
-         CAST(length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS DOUBLE) / greatest(length(text), 1) AS punct_ratio,
-         CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE) / greatest(length(text), 1) AS digit_ratio,
-         round((CASE WHEN len(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) < 5 THEN 0.2
-               WHEN len(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) > 10000 THEN 0.5 ELSE 1.0 END) *
-         (CASE WHEN CAST(length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS DOUBLE) / greatest(length(text), 1) > 0.2 THEN 0.3 ELSE 1.0 END) *
-         (CASE WHEN CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE) / greatest(length(text), 1) > 0.3 THEN 0.3 ELSE 1.0 END), 4) AS quality
-         FROM documents ORDER BY doc_id""",
-
-    "text_token_count" ->
-      """SELECT doc_id,
-         len(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) AS n_ws_tokens,
-         len(regexp_extract_all(text, '[A-Za-z]{1,4}|[0-9]{1,3}|[^A-Za-z0-9\s]+|\s+')) AS n_bpeish_tokens
-         FROM documents ORDER BY doc_id""",
-
-    "multimodal_features" ->
-      """SELECT doc_id AS media_id, CAST(8 AS BIGINT) AS n_dims,
-         doc_id % 256 AS mean_r,
-         (doc_id * 7) % 256 AS mean_g,
-         (doc_id * 13) % 256 AS mean_b,
-         CAST(64*64*3 AS BIGINT) AS n_bytes_out
-         FROM documents WHERE doc_id % 10 = 0 ORDER BY media_id""",
-
-    "multimodal_frames" ->
-      """SELECT doc_id AS media_id,
-         unnest(generate_series(0,
-           greatest(CAST(floor(octet_length(encode(repeat(text, 20))) / 1024.0) AS INT), 1) - 1, 3)) AS frame_idx
-         FROM documents ORDER BY media_id, frame_idx""",
-
-    // langid: replicate the stopword-ratio argmax with the same tie-break
-    // (greatest over (score, lang) structs picks the max lang string on
-    // ties; langs ordered 'fr' > 'es' > 'en' > 'de')
-    "text_langid" -> {
-      def ratio(l: String, words: Seq[String]): String = {
-        val arr = words.map(w => s"'$w'").mkString("[", ", ", "]")
-        s"""CAST(len(list_filter(regexp_split_to_array(lower(text), '\\s+'),
-            t -> list_contains($arr, t))) AS DOUBLE) /
-            greatest(len(list_filter(regexp_split_to_array(lower(text), '\\s+'), t2 -> t2 <> '')), 1)"""
-      }
-      val en = ratio("en", Seq("the", "a", "of", "and", "to", "in", "is",
-        "that", "it", "for", "on", "with", "as", "at", "by"))
-      val de = ratio("de", Seq("der", "die", "das", "und", "ist", "von",
-        "mit", "für", "auf", "ein", "eine", "zu", "den", "im", "nicht"))
-      val fr = ratio("fr", Seq("le", "la", "les", "et", "est", "de", "des",
-        "un", "une", "dans", "pour", "sur", "avec", "au", "pas"))
-      val es = ratio("es", Seq("el", "la", "los", "las", "y", "es", "de",
-        "un", "una", "en", "por", "para", "con", "del", "no"))
-      s"""WITH scored AS (
-            SELECT doc_id, text, $en AS re, $de AS rd, $fr AS rf, $es AS rs
-            FROM documents)
-          SELECT doc_id,
-            CASE WHEN regexp_matches(text, '[\\x{4e00}-\\x{9fff}]') THEN 'zh'
-                 WHEN greatest(re, rd, rf, rs) = 0 THEN 'und'
-                 WHEN rf = greatest(re, rd, rf, rs) THEN 'fr'
-                 WHEN rs = greatest(re, rd, rf, rs) THEN 'es'
-                 WHEN re = greatest(re, rd, rf, rs) THEN 'en'
-                 ELSE 'de' END AS lang_pred
-          FROM scored ORDER BY doc_id"""
-    },
-
-    "top_terms" ->
-      """WITH toks AS (
-           SELECT doc_id,
-             unnest(string_split_regex(lower(text), '[^a-z0-9'']+')) AS w
-           FROM documents),
-         tf AS (SELECT doc_id, w, count(*) AS tf
-           FROM toks WHERE w <> '' GROUP BY doc_id, w),
-         df_ AS (SELECT w, count(*) AS df FROM tf GROUP BY w),
-         r AS (SELECT tf.doc_id, tf.w, tf.tf, df_.df,
-             row_number() OVER (PARTITION BY tf.doc_id
-               ORDER BY tf.tf DESC, df_.df ASC, tf.w ASC) AS rank
-           FROM tf JOIN df_ USING (w))
-         SELECT doc_id, w AS term, tf, df, CAST(rank AS INT) AS rank
-         FROM r WHERE rank <= 3 ORDER BY doc_id, rank""",
-
-    "vocab_coverage" ->
-      """WITH toks AS (
-           SELECT doc_id,
-             unnest(string_split_regex(lower(text), '[^a-z0-9'']+')) AS w
-           FROM documents),
-         tf AS (SELECT doc_id, w, count(*) AS tf
-           FROM toks WHERE w <> '' GROUP BY doc_id, w),
-         byterm AS (SELECT w, CAST(sum(tf) AS BIGINT) AS tf,
-             count(*) AS df
-           FROM tf GROUP BY w),
-         tot AS (SELECT CAST(sum(tf) AS BIGINT) AS total FROM byterm),
-         head AS (SELECT * FROM byterm ORDER BY tf DESC, w ASC LIMIT 40)
-         SELECT w AS term, tf, df,
-           CAST(row_number() OVER (ORDER BY tf DESC, w ASC) AS INT)
-             AS rank,
-           CAST(sum(tf) OVER (ORDER BY tf DESC, w ASC
-               ROWS UNBOUNDED PRECEDING) AS DOUBLE) /
-             CAST(total AS DOUBLE) AS cum_frac
-         FROM head, tot ORDER BY rank""",
-
-    "embedding_centroids" ->
-      """WITH base AS (SELECT label, unnest(embedding) AS e,
-             unnest(generate_series(0, len(embedding) - 1)) AS pos
-           FROM embeddings),
-         q AS (SELECT label, pos,
-             CAST(floor(CAST(e AS DOUBLE) * 1048576.0) AS BIGINT) AS q
-           FROM base),
-         g AS (SELECT label, pos, count(*) AS n,
-             CAST(sum(q) AS BIGINT) AS sum_q
-           FROM q GROUP BY label, pos)
-         SELECT label, CAST(pos AS BIGINT) AS pos, n, sum_q,
-           (CAST(sum_q AS DOUBLE) / 1048576.0) / CAST(n AS DOUBLE)
-             AS centroid
-         FROM g ORDER BY label, pos""",
-
-    "embedding_drift" ->
-      """WITH base AS (SELECT vec_id, label, unnest(embedding) AS e,
-             unnest(generate_series(0, len(embedding) - 1)) AS pos
-           FROM embeddings),
-         q AS (SELECT label, pos, vec_id % 2 = 0 AS is_ref,
-             CAST(floor(CAST(e AS DOUBLE) * 1048576.0) AS BIGINT) AS q
-           FROM base),
-         g AS (SELECT label, pos, is_ref, count(*) AS n,
-             CAST(sum(q) AS BIGINT) AS s
-           FROM q GROUP BY label, pos, is_ref),
-         p AS (SELECT r.label, r.pos, r.s AS sa, r.n AS na,
-             c.s AS sb, c.n AS nb
-           FROM (SELECT * FROM g WHERE is_ref) r
-           JOIN (SELECT * FROM g WHERE NOT is_ref) c
-             USING (label, pos)),
-         t AS (SELECT label, na, nb,
-             CAST((CAST(sa AS DOUBLE)/CAST(na AS DOUBLE)/1048576.0 -
-                   CAST(sb AS DOUBLE)/CAST(nb AS DOUBLE)/1048576.0) *
-                  (CAST(sa AS DOUBLE)/CAST(na AS DOUBLE)/1048576.0 -
-                   CAST(sb AS DOUBLE)/CAST(nb AS DOUBLE)/1048576.0)
-               AS DECIMAL(38,18)) AS t2
-           FROM p),
-         d AS (SELECT label, CAST(min(na) AS BIGINT) AS n_ref,
-             CAST(min(nb) AS BIGINT) AS n_cur, sum(t2) AS num
-           FROM t GROUP BY label)
-         SELECT label, n_ref, n_cur,
-           CAST(floor(sqrt(CAST(num AS DOUBLE))
-             * 1000000000.0 + 0.5) AS BIGINT) AS drift_nano
-         FROM d ORDER BY label""",
-
-    "embed_quantize" ->
-      """WITH base AS (
-           SELECT vec_id,
-             list_aggregate(list_transform(embedding,
-               x -> abs(CAST(x AS DOUBLE))), 'max') AS scale,
-             unnest(embedding) AS e,
-             unnest(generate_series(0, len(embedding) - 1)) AS pos
-           FROM embeddings)
-         SELECT vec_id, CAST(pos AS BIGINT) AS pos,
-           CASE WHEN scale = 0 THEN 0
-                ELSE CAST(floor(CAST(e AS DOUBLE) * 127.0 / scale + 0.5)
-                  AS BIGINT) END AS q,
-           scale
-         FROM base ORDER BY vec_id, pos""",
-
-    // the same join+min-aggregate chain: step i = earliest matching
-    // event strictly after step i-1, NULL propagating from drop-off
-    "event_funnel" ->
-      """WITH s1 AS (SELECT user_id, min(epoch_us(ts)) AS t1_us
-           FROM events WHERE event_type = 'signup' GROUP BY user_id),
-         s2 AS (SELECT s1.user_id, s1.t1_us,
-             min(CASE WHEN epoch_us(e.ts) > s1.t1_us
-                 THEN epoch_us(e.ts) END) AS t2_us
-           FROM s1 LEFT JOIN events e
-             ON e.user_id = s1.user_id AND e.event_type = 'click'
-           GROUP BY s1.user_id, s1.t1_us),
-         s3 AS (SELECT s2.user_id, s2.t1_us, s2.t2_us,
-             min(CASE WHEN epoch_us(e.ts) > s2.t2_us
-                 THEN epoch_us(e.ts) END) AS t3_us
-           FROM s2 LEFT JOIN events e
-             ON e.user_id = s2.user_id AND e.event_type = 'purchase'
-           GROUP BY s2.user_id, s2.t1_us, s2.t2_us)
-         SELECT user_id, t1_us, t2_us, t3_us FROM s3 ORDER BY user_id""",
-
-    "winnow_fingerprint" ->
-      """WITH wsrc AS (SELECT doc_id,
-             regexp_split_to_array(text, '\s+') AS ws
-           FROM documents),
-         g AS (SELECT doc_id, i - 1 AS pos,
-             md5(array_to_string(ws[i:i+2], ' ')) AS h
-           FROM wsrc, UNNEST(generate_series(1, len(ws) - 2)) AS t(i)),
-         m AS (SELECT doc_id, pos, h,
-             min(struct_pack(h := h, np := -pos)) OVER (
-               PARTITION BY doc_id ORDER BY pos
-               ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS sel,
-             max(pos) OVER (PARTITION BY doc_id) AS maxp
-           FROM g)
-         SELECT DISTINCT doc_id, -(sel.np) AS fp_pos, sel.h AS fp_hash
-         FROM m WHERE pos <= maxp - 3
-         ORDER BY doc_id, fp_pos""",
-
-    "value_outliers" ->
-      """WITH g AS (SELECT event_type, count(value) AS n,
-             CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS s,
-             CAST(sum(CAST(value AS DECIMAL(18,6)) *
-                      CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS s2
-           FROM events GROUP BY event_type),
-         g2 AS (SELECT event_type, n, s, s2,
-             CASE WHEN s2/n - (s/n)*(s/n) <= (s2/n) * 1e-14 THEN 0.0
-                  ELSE s2/n - (s/n)*(s/n) END AS vr
-           FROM g)
-         SELECT e.event_id, e.event_type, e.value,
-           CAST(floor((e.value - s/n) /
-               sqrt(greatest(vr, 0.0))
-               * 1000000.0 + 0.5) AS BIGINT) AS z_micro
-         FROM events e JOIN g2 USING (event_type)
-         WHERE n > 1
-           AND sqrt(greatest(vr, 0.0)) > 0
-           AND abs((e.value - s/n) /
-               sqrt(greatest(vr, 0.0))) >= 2.5
-         ORDER BY e.event_id""",
-
-    // identical semantics to the batch funnel — the streaming path must
-    // converge to the same table once every user's quiet window closes
-    "events_stream_funnel" ->
-      """WITH s1 AS (SELECT user_id, min(epoch_us(ts)) AS t1_us
-           FROM events WHERE event_type = 'signup' GROUP BY user_id),
-         s2 AS (SELECT s1.user_id, s1.t1_us,
-             min(CASE WHEN epoch_us(e.ts) > s1.t1_us
-                 THEN epoch_us(e.ts) END) AS t2_us
-           FROM s1 LEFT JOIN events e
-             ON e.user_id = s1.user_id AND e.event_type = 'click'
-           GROUP BY s1.user_id, s1.t1_us),
-         s3 AS (SELECT s2.user_id, s2.t1_us, s2.t2_us,
-             min(CASE WHEN epoch_us(e.ts) > s2.t2_us
-                 THEN epoch_us(e.ts) END) AS t3_us
-           FROM s2 LEFT JOIN events e
-             ON e.user_id = s2.user_id AND e.event_type = 'purchase'
-           GROUP BY s2.user_id, s2.t1_us, s2.t2_us)
-         SELECT user_id, t1_us, t2_us, t3_us FROM s3 ORDER BY user_id""",
-
-    "global_shuffle" ->
-      """WITH h AS (SELECT doc_id,
-           md5('graft-shuf-' || CAST(doc_id AS VARCHAR)) AS hex
-           FROM documents),
-         s AS (SELECT doc_id, hex,
-             CAST('0x' || substr(hex, 1, 8) AS BIGINT) % 8 AS shard
-           FROM h)
-         SELECT doc_id, shard,
-           CAST(row_number() OVER (PARTITION BY shard
-             ORDER BY hex, doc_id) AS INT) AS pos
-         FROM s ORDER BY doc_id""",
-
-    // grams grouped by their word text (the hash-free spelling of the
-    // same computation); interval union via the identical running-max
-    "dup_spans" ->
-      """WITH base AS (
-           SELECT doc_id, regexp_split_to_array(text, '\s+') AS parts,
-             len(regexp_split_to_array(text, '\s+')) AS nt
-           FROM documents),
-         g AS (SELECT doc_id, nt, s - 1 AS pos,
-             parts[s] || ' ' || parts[s+1] || ' ' || parts[s+2] || ' ' ||
-               parts[s+3] AS gram
-           FROM base, unnest(range(1, nt - 4 + 2)) t(s)),
-         f AS (SELECT gram FROM g GROUP BY gram HAVING count(*) > 1),
-         d AS (SELECT g.doc_id, g.pos FROM g JOIN f USING (gram)),
-         c AS (SELECT doc_id, pos,
-             max(pos + 4) OVER (PARTITION BY doc_id ORDER BY pos
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-               AS prev_end
-           FROM d),
-         sm AS (SELECT doc_id,
-             sum(greatest(0, pos + 4 -
-               greatest(pos, coalesce(prev_end, 0)))) AS covered
-           FROM c GROUP BY doc_id)
-         SELECT b.doc_id, CAST(b.nt AS BIGINT) AS n_tokens,
-           CAST(coalesce(sm.covered, 0) AS BIGINT) AS covered_tokens,
-           CAST(coalesce(sm.covered, 0) AS DOUBLE) /
-             CAST(b.nt AS DOUBLE) AS dup_span_frac
-         FROM base b LEFT JOIN sm USING (doc_id) ORDER BY doc_id""",
-
-    "text_chunks" ->
-      """WITH base AS (
-           SELECT doc_id,
-             list_filter(regexp_split_to_array(text, '\s+'),
-               x -> x <> '') AS parts,
-             len(list_filter(regexp_split_to_array(text, '\s+'),
-               x -> x <> '')) AS n
-           FROM documents),
-         st AS (
-           SELECT doc_id, parts, n,
-             unnest(range(0, greatest(n - 1, 0) + 1, 24)) AS s
-           FROM base),
-         f AS (SELECT * FROM st WHERE s = 0 OR s + 8 < n)
-         SELECT doc_id,
-           CAST(row_number() OVER (PARTITION BY doc_id ORDER BY s) - 1
-             AS BIGINT) AS chunk_idx,
-           CAST(least(n - s, 32) AS BIGINT) AS n_tokens,
-           array_to_string(parts[s + 1 : s + 32], ' ') AS chunk
-         FROM f ORDER BY doc_id, chunk_idx""",
-
-    // batch spelling of the same interval join: every (click, purchase)
-    // pair per user with purchase in [click, click + 4h]
-    "events_stream_join" ->
-      """SELECT c.user_id, c.event_id AS click_id,
-           p.event_id AS purchase_id,
-           epoch_us(c.ts) AS c_us, epoch_us(p.ts) AS p_us
-         FROM events c JOIN events p ON p.user_id = c.user_id
-           AND c.event_type = 'click' AND p.event_type = 'purchase'
-           AND epoch_us(p.ts) >= epoch_us(c.ts)
-           AND epoch_us(p.ts) <= epoch_us(c.ts) + CAST(14400000000 AS BIGINT)
-         ORDER BY c.user_id, click_id, purchase_id""",
-
-    "json_extract_agg" ->
-      """SELECT event_type, count(*) AS n,
-         CAST(sum(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT)
-           AS sum_k,
-         min(CAST(json_extract(props, '$.k') AS BIGINT)) AS min_k,
-         max(CAST(json_extract(props, '$.k') AS BIGINT)) AS max_k
-         FROM events GROUP BY event_type ORDER BY event_type"""
-  )
 }

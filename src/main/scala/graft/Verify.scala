@@ -1,23 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each registered query's result (the
+  * [[SparkEntry.all]] registry, read through `SparkEntry.queries`) →
+  * one parquet dir per query, plus every query's DuckDB oracle in
+  * oracle_sql.json, for the DuckDB compare (`tools/compare_oracle.py`).
+  *
+  * Usage: Verify <sfDir> <outDir> [name1,name2,...]
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query subset (local iteration)
     val only = args.drop(2).headOption.map(_.split(',').toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // older events.parquet carries TIMESTAMP(NANOS): read as long
-      // nanos (micros files are unaffected; SparkEntry normalizes both)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Sessions.builder("graft-verify", Sessions.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -34,6 +34,20 @@ object CopyEndpoint {
       try sessionSetup.foreach(s => st.execute(s.stripSuffix(";")))
       finally st.close()
     }
+
+  /** Endpoint writing partition `pid`'s COPY rows to
+    * `<dir>/part-<pid>.dat` (`CopyText.read` reads the directory back).
+    * The file is truncated on open, so a retried sink task REWRITES
+    * its partition file — append mode would fuse a failed attempt's
+    * partial line with the retry's bytes into a torn COPY row. */
+  def file(dir: String, pid: Int): CopyEndpoint = new CopyEndpoint {
+    private val out = new java.io.BufferedOutputStream(
+      new java.io.FileOutputStream(
+        new java.io.File(dir, f"part-$pid%05d.dat"), false),
+      1 << 16)
+    def send(rows: Seq[Array[Byte]]): Unit = rows.foreach(out.write)
+    override def close(): Unit = out.close()
+  }
 }
 
 /** Batch of pre-formatted rows — format-once-retry-many, exactly the

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** A/B harness for the `WITH copy binary` sink: loads a generated
   * corpus of the PG types whose text input routines are expensive
   * server-side (numeric, timestamptz, float8, uuid) through BOTH sink
@@ -27,12 +25,8 @@ object CopyBinAb {
     val rows = if (args.length > 1) args(1).toLong else 3000000L
     val mode = if (args.length > 2) args(2) else "both"
     val corpus = if (args.length > 3) args(3) else "num"
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("copy-bin-ab").getOrCreate()
+    val b = graft.Sessions.builder("copy-bin-ab", graft.Sessions.cpus)
+    val spark = sys.env.get("SPARK_MASTER").fold(b)(b.master).getOrCreate()
     import org.apache.spark.sql.functions._
 
     val decode = (s: String) => graft.Runner.pctDecode(s)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit helper: print the formatted physical plan of one or more
   * [[graft.SparkEntry]] queries without executing them — the loop behind
   * "iterate until it's the plan you'd want" (broadcasts where expected,
@@ -14,12 +12,7 @@ object ExplainQuery {
     require(args.length >= 2,
       "usage: ExplainQuery <sfDir> <queryName>[,<queryName>...]")
     val (dir, names) = (args(0), args(1).split(',').toSeq)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = graft.Sessions.builder("explain-query", graft.Sessions.cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>

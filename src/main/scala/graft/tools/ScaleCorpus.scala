@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Generate an N× scaled copy of a testdata directory's `documents`,
@@ -39,14 +38,9 @@ object ScaleCorpus {
     val tables: Set[String] =
       if (args.length > 3) args(3).split(',').map(_.trim).toSet
       else Set("documents", "embeddings", "events")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      // older events.parquet carries TIMESTAMP(NANOS): read as long
-      // nanos (SparkEntry.normalizeEventTs handles either layout)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // events.parquet may carry TIMESTAMP(NANOS): the preset reads it as
+    // long nanos (QuerySupport.normalizeEventTs handles either layout)
+    val spark = graft.Sessions.builder("scale-corpus", graft.Sessions.cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -114,11 +108,7 @@ object ScaleCorpus {
     val out = args(1)
     val n = if (args.length > 2) args(2).toLong else 500000L
     val dupEvery = if (args.length > 3) args(3).toInt else 100
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
+    val spark = graft.Sessions.builder("scale-corpus", graft.Sessions.cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // id ≡ 1 (mod dupEvery) is a near-copy of id−1; everything else is

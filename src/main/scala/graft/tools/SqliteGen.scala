@@ -293,11 +293,8 @@ object SqliteGen {
       .toString
     writeTrackDb(s"$dir/track_1x.db", 15607)
     writeTrackDb(s"$dir/track_10x.db", 156070)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .appName("sqlite-scale").getOrCreate()
+    val spark = graft.Sessions.builder("sqlite-scale", graft.Sessions.cpus)
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def time(label: String)(f: => Long): Unit = {
       val t0 = System.nanoTime()

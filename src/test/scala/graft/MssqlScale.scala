@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.sources.{MssqlWireSource, TdsWire}
 
 /** Scale-curve measurement for the range-partitioned TDS read
@@ -23,12 +21,7 @@ object MssqlScale {
     }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("mssql-scale")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder("mssql-scale", Sessions.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {
       Seq(("1x", 15607), ("10x", 156070)).foreach { case (label, n) =>

@@ -111,6 +111,23 @@ class SinkModesSpec extends SparkSpec {
       s"every rejected row needs its message line: $logMsgs")
   }
 
+  test("a file endpoint reopened for a retried partition holds only " +
+    "the retry's rows") {
+    val dir = Files.createTempDirectory("file-endpoint").toFile
+    val rows = Seq("1\ta\n", "2\tb\n", "3\tc\n")
+      .map(_.getBytes("UTF-8"))
+    val failed = CopyEndpoint.file(dir.getAbsolutePath, 0)
+    failed.send(Seq(rows.head, "2\tb".getBytes("UTF-8"))) // torn batch
+    failed.close()
+    val retry = CopyEndpoint.file(dir.getAbsolutePath, 0)
+    retry.send(rows)
+    retry.close()
+    assert(dir.list().toSeq == Seq("part-00000.dat"))
+    assert(new String(Files.readAllBytes(
+      new java.io.File(dir, "part-00000.dat").toPath), "UTF-8") ==
+      "1\ta\n2\tb\n3\tc\n")
+  }
+
   test("on-error-stop fails the write instead of recovering") {
     val df = (1L to 50L).toDF("k").repartition(2)
     val sink = new CopySink(endpointFactory = _ => rejectingEndpoint(),

@@ -6,13 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** One shared local session for every suite (Spark startup is ~5 s;
   * per-suite sessions would dominate test wall-clock). */
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .appName("graft-test")
-    .getOrCreate()
+  lazy val session: SparkSession =
+    Sessions.builder("graft-test", 4).getOrCreate()
 }
 
 trait SparkSpec extends AnyFunSuite {

@@ -268,5 +268,9 @@ class OperatorReferenceSpec extends SparkSpec {
     val o = graft.SparkEntry.oracleSql.keySet
     assert((q -- o).isEmpty, s"queries without oracle: ${q -- o}")
     assert((o -- q).isEmpty, s"oracles without query: ${o -- q}")
+    val names = graft.SparkEntry.all.map(_.name)
+    assert(names.distinct.size == names.size,
+      s"duplicate query names: ${names.diff(names.distinct)}")
+    assert(graft.SparkEntry.all.size == graft.SparkEntry.queries.size)
   }
 }
