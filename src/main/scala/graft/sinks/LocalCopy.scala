@@ -10,10 +10,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * pays ~0.1 s uncontended and whole seconds when the scheduler is
   * saturated by a big table's partitions).
   *
-  * A table whose `pg_class.relpages` is below the single-chunk
-  * threshold would run as ONE Spark task anyway — zero parallelism is
-  * lost by reading its wire stream on the driver (the Migrator's copy
-  * pool thread, so `workers` small tables still load concurrently).
+  * A table its source's `scan` plans as a single split
+  * ([[graft.sources.ScanPlan]]`.local`: one ctid chunk, below the
+  * key-range guard, one B-tree subtree) would run as ONE Spark task
+  * anyway — zero parallelism is lost by reading its stream on the
+  * driver (the Migrator's copy pool thread, so `workers` small tables
+  * still load concurrently), opened by the same opener a Spark task
+  * would use.
   * The rows then run through the distributed sink's own partition
   * loop, [[CopySink.writePartition]], as partition 0: the same
   * batching, per-row recovery, reject files (`part-00000.dat` and
@@ -32,14 +35,15 @@ object LocalCopy {
     * path actually ran; it is not part of any user-facing contract). */
   val loads = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** (value bytes, reject-text bytes) — the DataFrame renderers' row
+  /** A scan row in catalyst form (one `UTF8String` or null per column)
+    * → (value bytes, reject-text bytes) — the DataFrame renderers' row
     * shape without its raw-line slot, which a database scan never
     * fills: exactly one side is null. */
-  type Render = Array[String] => (Array[Byte], Array[Byte])
+  type Render = Array[Any] => (Array[Byte], Array[Byte])
 
-  private def textLineBytes(values: Array[String]): Array[Byte] =
-    (CopyText.formatRow(values) + "\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+  private def textLineBytes(values: Array[Any]): Array[Byte] =
+    (CopyText.formatRow(values.map(v => if (v == null) null else v.toString)) +
+      "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)
 
   /** COPY TEXT line renderer (never fails — text rendering is total). */
   val textRender: Render = values => (textLineBytes(values), null)
@@ -62,7 +66,7 @@ object LocalCopy {
       while (i < n && !failed) {
         val f =
           if (values(i) == null) PgBinary.NullField
-          else PgBinary.encodeField(UTF8String.fromString(values(i)), ks(i))
+          else PgBinary.encodeField(values(i).asInstanceOf[UTF8String], ks(i))
         if (f == null) failed = true
         else { fields(i) = f; total += f.length; i += 1 }
       }
@@ -90,7 +94,7 @@ object LocalCopy {
     *   the sent bytes are already text)
     * @return (rowsSent, rowsRejected, bytesSent) — same accounting as
     *   the distributed sink */
-  def write(rows: Iterator[Array[String]],
+  def write(rows: Iterator[Array[Any]],
             endpointFactory: Int => CopyEndpoint,
             render: Render = textRender,
             rejectDir: Option[String] = None,

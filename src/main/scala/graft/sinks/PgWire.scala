@@ -33,9 +33,10 @@ object PgWire {
     require(PgWire.SslModes(sslMode), s"unknown sslmode: $sslMode")
   }
 
-  /** Parse a postgresql:// / pgsql:// URI into wire params (same
-    * libpq-style defaulting as [[graft.Runner.pgJdbcUrl]]); honours a
-    * `?sslmode=` query parameter. */
+  /** Parse a postgresql:// / pgsql:// URI into wire params with
+    * libpq-style defaults (host localhost, port 5432, database = user;
+    * connection.lisp parse-postgresql-uri); honours a `?sslmode=` query
+    * parameter. */
   def connParams(uri: String, pctDecode: String => String): ConnParams = {
     val normalized = uri.replaceFirst("^(pgsql|postgres)://", "postgresql://")
     val u = java.net.URI.create(normalized)

@@ -138,43 +138,14 @@ object JdbcSource {
       fkeys = fkeys)
   }
 
-  /** Arbitrary-query read — the MATERIALIZE VIEWS load path
-    * (`spark.read.jdbc(query)`, matviews.lisp; core.clj:267-324) and the
-    * per-type SELECT-expression pushdown the reference uses for sources
-    * whose values need server-side rendering (pgsql.lisp:42-46). */
-  def readQuery(spark: SparkSession, url: String, props: Properties,
-                query: String): org.apache.spark.sql.DataFrame = {
-    val reader = spark.read.format("jdbc")
-      .option("url", url)
-      .option("query", query)
-    props.stringPropertyNames().forEach { k =>
-      reader.option(k, props.getProperty(k))
-    }
-    reader.load()
+  /** Execute one statement on a JDBC target on a fresh connection. */
+  def executeDdl(url: String, props: Properties)(sql: String): Unit = {
+    val conn = DriverManager.getConnection(url, props)
+    try {
+      val st = conn.createStatement()
+      try st.execute(sql.stripSuffix(";")) finally st.close()
+    } finally conn.close()
   }
-
-  /** Execute DDL on a JDBC target — the production `executeDdl` hook for
-    * [[graft.orchestration.Migrator]]. Session-setup statements (GUCs,
-    * replica role) run FIRST on the same fresh connection, because they
-    * are per-connection state in PostgreSQL — a separate connection-per-
-    * statement would silently drop them (the reference applies its GUC
-    * list when opening every pgconn). */
-  def ddlExecutor(url: String,
-                  props: Properties): (String, Seq[String]) => Unit =
-    (sql, sessionSetup) => {
-      val conn = DriverManager.getConnection(url, props)
-      try {
-        val st = conn.createStatement()
-        try {
-          sessionSetup.foreach(s => st.execute(s.stripSuffix(";")))
-          st.execute(sql.stripSuffix(";"))
-        } finally st.close()
-      } finally conn.close()
-    }
-
-  /** [[ddlExecutor]] without session setup, for one-off statements. */
-  def executeDdl(url: String, props: Properties)(sql: String): Unit =
-    ddlExecutor(url, props)(sql, Nil)
 
   /** min/max of an integer partition key (mysql.lisp:35-43). */
   def integerBounds(url: String, props: Properties, schema: String,
@@ -226,28 +197,19 @@ object JdbcSource {
   def readWithPredicates(spark: SparkSession, url: String, props: Properties,
                          table: String, predicates: Seq[String]): DataFrame =
     spark.read.jdbc(url, table, predicates.toArray, props)
-
-  /** PG heap read split by ctid block ranges; `relpages` comes from
-    * `pg_class.relpages` (pgsql.clj:206-208). */
-  def readPgByCtid(spark: SparkSession, url: String, props: Properties,
-                   table: String, relpages: Long,
-                   pagesPerChunk: Long = 10000L): DataFrame =
-    readWithPredicates(spark, url, props, table,
-      IntrospectionSql.pgsqlCtidPredicates(relpages, pagesPerChunk))
 }
 
 /** Per-type SELECT expressions for the source query — some types must be
   * rendered server-side (mysql-schema.lisp:268-286 st_astext for
   * geometry; mssql-schema.lisp:200-224 convert() for date/time, PG
-  * `CAST(col AS text)` pushdown pgsql.lisp:42-46). Compose the SELECT
-  * list and hand it to [[JdbcSource.readQuery]]. */
+  * `CAST(col AS text)` pushdown pgsql.lisp:42-46), as (expression,
+  * output name) pairs the wire sources' `selectCols` take. */
 object ColumnSqlExpressions {
 
   /** (server-side expression, output column name) — the STRUCTURED form
     * the wire sources take. Carrying the alias separately means an
     * expression containing the text " as " inside a string literal or
-    * function argument can never mis-parse the output name (the string
-    * forms below exist only for the JDBC query-composition path). */
+    * function argument can never mis-parse the output name. */
   def mysqlPair(name: String, typeName: String): (String, String) =
     typeName.toLowerCase match {
       case "geometry" | "point" | "linestring" =>
@@ -290,29 +252,6 @@ object ColumnSqlExpressions {
       case "pgsql" => cols.map { case (n, t) => pgsqlPair(n, t) }
       case _ => cols.map { case (n, _) => (s""""$n"""", n) }
     }
-
-  def mysql(name: String, typeName: String): String = {
-    val (e, a) = mysqlPair(name, typeName)
-    if (e == s"`$a`") e else s"$e as `$a`"
-  }
-
-  def mssql(name: String, typeName: String): String = {
-    val (e, a) = mssqlPair(name, typeName)
-    if (e == s"[$a]") e else s"$e as [$a]"
-  }
-
-  def pgsql(name: String, typeName: String): String = {
-    val (e, a) = pgsqlPair(name, typeName)
-    s"""$e AS "$a""""
-  }
-
-  def selectList(kind: String,
-                 cols: Seq[(String, String)]): Seq[String] = kind match {
-    case "mysql" => cols.map { case (n, t) => mysql(n, t) }
-    case "mssql" => cols.map { case (n, t) => mssql(n, t) }
-    case "pgsql" => cols.map { case (n, t) => pgsql(n, t) }
-    case _ => cols.map { case (n, _) => s""""$n"""" }
-  }
 }
 
 /** The per-engine catalog SQL the reference issues, re-expressed. These are

@@ -1,8 +1,5 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
-
 /** Driver-free MS SQL Server read over the native TDS client — closes
   * the last driver gap (PG/MySQL speak their wire protocols, SQLite
   * reads the file format). Follows the reference's MSSQL source shape
@@ -10,7 +7,7 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * SELECTs (range-partitioned where an integer identity/PK exists —
   * beyond the reference's single FreeTDS stream) with per-type
   * server-side rendering
-  * ([[ColumnSqlExpressions.mssql]] — datetimes via convert(), bigints
+  * ([[ColumnSqlExpressions.mssqlPair]] — datetimes via convert(), bigints
   * via cast) so every value crosses the wire in a text-stable form. */
 object MssqlWireSource {
   import TdsWire.quoteIdent
@@ -164,128 +161,54 @@ object MssqlWireSource {
       case _ => (quoteIdent(ci.name), ci.name)
     }
 
-  /** Driver-local scan for tables [[read]] would load as ONE
-    * full-scan partition anyway (no identity partition key, or below
-    * the `2 * rowsPerRange` split guard) — the per-table Spark-job
-    * floor amortization ([[graft.sinks.LocalCopy]]). `selectCols`
-    * must be the SAME per-type server-side rendering pairs the
-    * distributed read uses, so datetime/geometry columns arrive in
-    * identical text either way. Returns None when the read would
-    * actually split. */
-  def localScanIfSmall(params: TdsWire.ConnParams, schema: String,
-                       table: String, partitionKey: Option[String],
-                       rowsPerRange: Long,
-                       selectCols: Seq[(String, String)])
-      : Option[() => (Seq[String], Iterator[Array[String]], () => Unit)] = {
-    // keyless tables are single-partition regardless of size — skip
-    // the row-count probe connection entirely
-    if (partitionKey.isDefined &&
-        rowCountOf(params, schema, table) >= 2 * rowsPerRange) None
-    else Some(() => {
-      val qtable = s"${quoteIdent(schema)}.${quoteIdent(table)}"
-      val resolved: Seq[(String, String)] =
-        if (selectCols.nonEmpty) selectCols
-        else {
-          // separate probe connection, like read(): the data stream
-          // below must start on a fresh single-use batch
-          val pc = new TdsWireConnection(params)
-          try pc.queryMeta(s"SELECT TOP 0 * FROM $qtable")
-            .map(discoveredPair)
-          finally pc.close()
-        }
-      val conn = new TdsWireConnection(params)
-      val cols = resolved.map { case (e, a) =>
-        if (e == quoteIdent(a)) e else s"$e AS ${quoteIdent(a)}"
-      }
-      val (_, it) = conn.queryStream(
-        s"SELECT ${cols.mkString(", ")} FROM $qtable")
-      (resolved.map(_._2), it, () => conn.close())
-    })
-  }
-
-  /** Read `schema.table` over TDS. With an integer `partitionKey`
-    * (identity / clustered integer PK from introspection) and enough
-    * rows (the `2 * rowsPerRange` guard) the read splits into one
-    * WHERE-range per Spark partition — BEYOND the reference, whose
-    * FreeTDS path is single-stream (src/sources/mssql/mssql.lisp): at
-    * 100× the biggest table this is the difference between one stream
-    * and N. Range count capped via [[RangeSplit.predicates]]; otherwise
-    * a single full-scan partition. `selectCols` is (server-side
-    * expression, output name) pairs — [[ColumnSqlExpressions.mssqlPair]]
-    * output for type-stable rendering; when empty, columns and their
-    * wire types are discovered via a TOP-0 probe and routed through the
-    * same rendering ([[discoveredPair]]). */
-  def read(spark: SparkSession, params: TdsWire.ConnParams,
-           schema: String, table: String,
+  /** Plan the read of `schema.table` over TDS. With an integer
+    * `partitionKey` (identity / clustered integer PK from
+    * introspection) and at least `2 * rowsPerRange` rows it splits into
+    * one [[RangeSplit.predicates]] WHERE-range per Spark partition —
+    * BEYOND the reference, whose FreeTDS path is single-stream
+    * (src/sources/mssql/mssql.lisp): at 100× the biggest table this is
+    * the difference between one stream and N. Otherwise it is one full
+    * scan, which a `local` caller streams on the driver. `selectCols`
+    * is (server-side expression, output name) pairs —
+    * [[ColumnSqlExpressions.mssqlPair]] output for type-stable
+    * rendering; when empty, columns and their wire types are discovered
+    * via a TOP-0 probe and routed through the same rendering
+    * ([[discoveredPair]]), so both venues and both column sources read
+    * identical text. TDS values arrive UTF-16 and transcode to
+    * catalyst form per value. */
+  def scan(params: TdsWire.ConnParams, schema: String, table: String,
            partitionKey: Option[String] = None,
            rowCountEstimate: Long = 0L,
            rowsPerRange: Long = 10000L,
-           selectCols: Seq[(String, String)] = Nil): DataFrame = {
+           selectCols: Seq[(String, String)] = Nil,
+           local: Boolean = false): ScanPlan[String] = {
     val qtable = s"${quoteIdent(schema)}.${quoteIdent(table)}"
     val resolved: Seq[(String, String)] =
       if (selectCols.nonEmpty) selectCols
       else {
-        // TOP 0 probe: COLMETADATA tokens carry each column's wire type,
-        // so the discovered read composes the SAME per-type server-side
-        // rendering as an introspection-driven read — datetimes arrive
-        // ISO-8601, not in the server's locale default
+        // TOP 0 probe on its own connection: COLMETADATA tokens carry
+        // each column's wire type, and the data stream must start on a
+        // fresh single-use batch
         val conn = new TdsWireConnection(params)
         try conn.queryMeta(s"SELECT TOP 0 * FROM $qtable").map(discoveredPair)
         finally conn.close()
       }
-    val cols = resolved.map { case (e, a) =>
+    require(resolved.nonEmpty, s"no columns resolved for $schema.$table")
+    val select = resolved.map { case (e, a) =>
       if (e == quoteIdent(a)) e else s"$e AS ${quoteIdent(a)}"
-    }
-    require(cols.nonEmpty, s"no columns resolved for $schema.$table")
-    val names = resolved.map(_._2)
-    val preds = partitionKey match {
-      case Some(pk) if rowCountEstimate >= 2 * rowsPerRange =>
-        val (lo, hi) = integerBounds(params, schema, table, pk)
-        RangeSplit.predicates(quoteIdent(pk), lo, hi, rowsPerRange,
-          rowCountEstimate)
-      case _ => Seq("1 = 1")
-    }
-    val select = cols.mkString(", ")
-    val p = params
-    val rdd = spark.sparkContext
-      .parallelize(preds, preds.length)
-      .mapPartitions { it =>
-        it.flatMap { pred =>
-          val conn = new TdsWireConnection(p)
-          val tc = org.apache.spark.TaskContext.get()
-          if (tc != null)
-            tc.addTaskCompletionListener[Unit](_ => conn.close())
-          val (_, rows) = conn.queryStream(
-            s"SELECT $select FROM $qtable WHERE $pred")
-          // TDS values arrive UTF-16 and must transcode anyway; the
-          // internal-row wrap still skips the Row +
-          // ExpressionEncoder pass per row
-          new Iterator[org.apache.spark.sql.catalyst.InternalRow] {
-            private var closed = false
-            override def hasNext: Boolean = {
-              val h = rows.hasNext
-              if (!h && !closed) { closed = true; conn.close() }
-              h
-            }
-            override def next(): org.apache.spark.sql.catalyst.InternalRow = {
-              val vs = rows.next()
-              val out = new Array[Any](vs.length)
-              var i = 0
-              while (i < vs.length) {
-                if (vs(i) != null)
-                  out(i) = org.apache.spark.unsafe.types.UTF8String
-                    .fromString(vs(i))
-                i += 1
-              }
-              new org.apache.spark.sql.catalyst.expressions
-                .GenericInternalRow(out)
-            }
-          }
-        }
+    }.mkString(", ")
+    val open = (sql: String) =>
+      ScanPlan.opened(new TdsWireConnection(params)) { conn =>
+        val (cols, rows) = conn.queryStream(sql)
+        (cols, rows.map(ScanPlan.utf8))
       }
-    val sparkSchema = StructType(names.map(n =>
-      StructField(n, StringType, nullable = true)))
-    org.apache.spark.sql.graft.FunctionInstaller
-      .internalDataFrame(spark, rdd, sparkSchema)
+    if (local && !RangeSplit.splits(partitionKey, rowCountEstimate, rowsPerRange))
+      ScanPlan(resolved.map(_._2), Seq(s"SELECT $select FROM $qtable"),
+        local = true, open)
+    else
+      ScanPlan(resolved.map(_._2), RangeSplit.wheres(partitionKey,
+        rowCountEstimate, rowsPerRange, quoteIdent)(
+        integerBounds(params, schema, table, _)).map(pred =>
+        s"SELECT $select FROM $qtable WHERE $pred"), local = false, open)
   }
 }

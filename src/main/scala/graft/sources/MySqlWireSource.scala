@@ -1,8 +1,5 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
-
 /** Driver-free distributed MySQL read over the native wire-protocol
   * client — the MySQL twin of [[PgWireSource]], closing the reference's
   * #1 use case (mysql→pg migration, src/sources/mysql/mysql.lisp) with
@@ -133,108 +130,38 @@ object MySqlWireSource {
     } finally conn.close()
   }
 
-  /** WHERE ranges for the split — [[RangeSplit.predicates]] with
-    * back-quoted MySQL identifiers (count capped by the row estimate so
-    * sparse snowflake-style keys cannot explode the driver-side
-    * predicate list). */
-  private[graft] def rangePredicates(col: String, lo: Long, hi: Long,
-                                     rowsPerRange: Long,
-                                     rowCountEstimate: Long): Seq[String] =
-    RangeSplit.predicates(quoteIdent(col), lo, hi, rowsPerRange,
-      rowCountEstimate)
-
-  /** Driver-local scan for tables [[read]] would load as ONE
-    * full-scan partition anyway (no integer partition key, or below
-    * the reference's `2 * rowsPerRange` split guard) — the per-table
-    * Spark-job floor amortization ([[graft.sinks.LocalCopy]], same
-    * contract as [[PgWireSource.localScanIfSmall]]). The stream
-    * decodes with the SAME per-table charset override the distributed
-    * read applies. Returns None when the read would actually split. */
-  def localScanIfSmall(params: MySqlWire.ConnParams, schema: String,
-                       table: String, partitionKey: Option[String],
-                       rowsPerRange: Long,
-                       charsetName: String = "UTF-8")
-      : Option[() => (Seq[String], Iterator[Array[String]], () => Unit)] = {
-    // keyless tables are single-partition REGARDLESS of size — skip
-    // the row-count probe connection entirely
-    if (partitionKey.isDefined &&
-        rowCountOf(params, schema, table) >= 2 * rowsPerRange) None
-    else Some(() => {
-      val conn = new MySqlWireConnection(params)
-      val (cols, it) = conn.queryStream(
-        s"SELECT * FROM ${quoteIdent(schema)}.${quoteIdent(table)}",
-        java.nio.charset.Charset.forName(charsetName))
-      (cols, it, () => conn.close())
-    })
-  }
-
-  /** Read `schema.table` over the wire. With an integer `partitionKey`
-    * and enough rows (the reference's `2 * rowsPerRange` guard) the read
-    * splits into one range predicate per Spark partition; otherwise it
-    * is a single full-scan partition. `selectCols` is (server-side
-    * expression, output name) pairs — [[ColumnSqlExpressions.mysqlPair]]
-    * output for per-type rendering (st_astext for geometry); defaults to
-    * the discovered columns back-quoted. */
-  def read(spark: SparkSession, params: MySqlWire.ConnParams,
-           schema: String, table: String,
+  /** Plan the read of `schema.table`. With an integer `partitionKey`
+    * and at least `2 * rowsPerRange` rows (the reference's guard,
+    * mysql.lisp:44-47) it splits into [[RangeSplit.predicates]] key
+    * ranges, one Spark partition each; otherwise it is one full scan,
+    * which a `local` caller streams on the driver as `SELECT *` (no
+    * column probe). Distributed splits name the columns a `LIMIT 0`
+    * probe discovered. Every split decodes with `charsetName` (DECODING
+    * TABLE NAMES MATCHING), straight to catalyst form. */
+  def scan(params: MySqlWire.ConnParams, schema: String, table: String,
            partitionKey: Option[String] = None,
            rowCountEstimate: Long = 0L,
            rowsPerRange: Long = 10000L,
-           selectCols: Seq[(String, String)] = Nil,
-           charsetName: String = "UTF-8"): DataFrame = {
+           charsetName: String = "UTF-8",
+           local: Boolean = false): ScanPlan[String] = {
     val qtable = s"${quoteIdent(schema)}.${quoteIdent(table)}"
-    val discovered =
-      if (selectCols.nonEmpty) Nil
-      else {
+    val open = (sql: String) =>
+      ScanPlan.opened(new MySqlWireConnection(params))(
+        _.queryStreamData(sql, java.nio.charset.Charset.forName(charsetName)))
+    if (local && !RangeSplit.splits(partitionKey, rowCountEstimate, rowsPerRange))
+      ScanPlan(Nil, Seq(s"SELECT * FROM $qtable"), local = true, open)
+    else {
+      val names = {
         val conn = new MySqlWireConnection(params)
         try conn.query(s"SELECT * FROM $qtable LIMIT 0")._1
         finally conn.close()
       }
-    val cols =
-      if (selectCols.nonEmpty) selectCols.map { case (e, a) =>
-        if (e == quoteIdent(a)) e else s"$e AS ${quoteIdent(a)}"
-      } else discovered.map(quoteIdent)
-    require(cols.nonEmpty, s"no columns resolved for $schema.$table")
-    val names =
-      if (selectCols.nonEmpty) selectCols.map(_._2) else discovered
-    val preds = partitionKey match {
-      case Some(pk) if rowCountEstimate >= 2 * rowsPerRange =>
-        val (lo, hi) = integerBounds(params, schema, table, pk)
-        rangePredicates(pk, lo, hi, rowsPerRange, rowCountEstimate)
-      case _ => Seq("1 = 1")
+      require(names.nonEmpty, s"no columns resolved for $schema.$table")
+      val preds = RangeSplit.wheres(partitionKey, rowCountEstimate,
+        rowsPerRange, quoteIdent)(integerBounds(params, schema, table, _))
+      val select = names.map(quoteIdent).mkString(", ")
+      ScanPlan(names, preds.map(pred =>
+        s"SELECT $select FROM $qtable WHERE $pred"), local = false, open)
     }
-    val select = cols.mkString(", ")
-    val p = params // capture the case class, not this object
-    val rdd = spark.sparkContext
-      .parallelize(preds, preds.length)
-      .mapPartitions { it =>
-        it.flatMap { pred =>
-          val conn = new MySqlWireConnection(p)
-          val tc = org.apache.spark.TaskContext.get()
-          if (tc != null)
-            tc.addTaskCompletionListener[Unit](_ => conn.close())
-          // catalyst-form rows (UTF8String packet slices for UTF-8
-          // connections) through the internal-row scan — same
-          // String-free path as PgWireSource.readWithPredicates
-          val (_, rows) = conn.queryStreamData(
-            s"SELECT $select FROM $qtable WHERE $pred",
-            java.nio.charset.Charset.forName(charsetName))
-          new Iterator[org.apache.spark.sql.catalyst.InternalRow] {
-            private var closed = false
-            override def hasNext: Boolean = {
-              val h = rows.hasNext
-              if (!h && !closed) { closed = true; conn.close() }
-              h
-            }
-            override def next(): org.apache.spark.sql.catalyst.InternalRow =
-              new org.apache.spark.sql.catalyst.expressions
-                .GenericInternalRow(rows.next())
-          }
-        }
-      }
-    val sparkSchema = StructType(names.map(n =>
-      StructField(n, StringType, nullable = true)))
-    org.apache.spark.sql.graft.FunctionInstaller
-      .internalDataFrame(spark, rdd, sparkSchema)
   }
 }

@@ -1,7 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.sinks.{PgWire, PgWireConnection}
 
 /** Driver-free distributed PostgreSQL read over the native wire-protocol
@@ -158,39 +157,53 @@ object PgWireSource {
     } finally conn.close()
   }
 
-  /** Driver-local scan for tables below the single-ctid-chunk
-    * threshold — the per-table Spark-job floor amortization
-    * ([[graft.sinks.LocalCopy]]). A table whose relpages fit in ONE
-    * [[IntrospectionSql.pgsqlCtidPredicates]] chunk would run as a
-    * single Spark task anyway, so reading its wire stream on the
-    * calling thread loses no parallelism and skips the job-submit
-    * floor (and, in a mixed migration, the scheduler queueing behind
-    * a big table's partitions — measured at whole seconds for 9-row
-    * tables). Returns None for bigger tables; Some(open) hands back
-    * (column names, streaming row iterator, close).
+  /** Plan the read of `table` (schema-qualified names accepted).
     *
-    * Two relpages=0 liars would otherwise stream an arbitrarily large
-    * table through one driver thread; both are capacity-probed with a
-    * `LIMIT 1 OFFSET maxRowsPerChunk` scalar subquery (bounded
+    * - A view (MATERIALIZE VIEWS) has no ctid to split on: one
+    *   predicate-free stream (`WHERE true`, no ONLY — views reject it).
+    * - A `local` caller's table that fits ONE
+    *   [[IntrospectionSql.pgsqlCtidPredicates]] chunk streams on the
+    *   driver ([[graft.sinks.LocalCopy]]): it would run as a single
+    *   Spark task anyway, so reading its wire stream on the calling
+    *   thread loses no parallelism and skips the job-submit floor (and,
+    *   in a mixed migration, the scheduler queueing behind a big
+    *   table's partitions — measured at whole seconds for 9-row
+    *   tables).
+    * - A partitioned parent reads per leaf ([[partitionedPlan]]).
+    * - Any other heap splits into ctid page ranges, `pagesPerChunk`
+    *   blocks each, sized by its relpages.
+    *
+    * A `local` caller's table pays ONE pg_class round trip for all of
+    * this. Two relpages=0 liars would otherwise stream an arbitrarily
+    * large table through one driver thread; both are capacity-probed
+    * with a `LIMIT 1 OFFSET maxRowsPerChunk` scalar subquery (bounded
     * server-side scan, at most one row on the wire, CASE-guarded so it
-    * rides the relpages lookup as a lazily-executed SubPlan — ONE
-    * round-trip per table, the manytables fixture pins that cost):
+    * rides the relpages lookup as a lazily-executed SubPlan — the
+    * manytables fixture pins that cost):
     * - relkind 'p' partitioned parents, whose relpages is 0 by
     *   construction (parents own no storage): probed over the WHOLE
     *   tree (plain FROM expands every partition) — a genuinely small
-    *   parent keeps the ORM-scale fast path, a big one routes to
-    *   [[readPartitioned]];
+    *   parent keeps the ORM-scale fast path, a big one reads per leaf;
     * - never-ANALYZEd heaps, whose relpages lags VACUUM/ANALYZE:
     *   probed over the table's OWN rows (FROM ONLY) against what
     *   `pagesPerChunk` 8 KiB pages can physically hold (~290 28-byte
-    *   rows/page). */
-  def localScanIfSmall(params: PgWire.ConnParams, table: String,
-                       pagesPerChunk: Long = 1000L,
-                       selectCols: Seq[(String, String)] = Nil)
-      : Option[() => (Seq[String], Iterator[Array[String]], () => Unit)] = {
-    val conn = new PgWireConnection(params)
+    *   rows/page).
+    * The same row carries the relpages a big heap splits by.
+    *
+    * `selectCols` is (server-side expression, output name) pairs —
+    * [[ColumnSqlExpressions.pgsqlPair]] output for per-type source
+    * rewrites, or the non-generated columns (expressions used
+    * verbatim; quote identifiers yourself inside them); empty = every
+    * column (`*` on the driver, a LIMIT 0 discovery for a split read). */
+  def scan(params: PgWire.ConnParams, table: String,
+           partitioned: Boolean = false, view: Boolean = false,
+           selectCols: Seq[(String, String)] = Nil,
+           pagesPerChunk: Long = 1000L,
+           local: Boolean = false): ScanPlan[String] = {
     val qtable = PgWire.quoteQualified(table)
-    val smallKind: Option[String] =
+    // (relpages, relkind of a table small enough to stream)
+    lazy val probed: (Long, Option[String]) = {
+      val conn = new PgWireConnection(params)
       try {
         val regclass = PgWire.quoteLiteral(qtable)
         val cap = pagesPerChunk * 300L
@@ -202,26 +215,33 @@ object PgWireSource {
                   THEN (SELECT 1 FROM $qtable LIMIT 1 OFFSET $cap)
              END
              FROM pg_class WHERE oid = $regclass::regclass""")
-        rows.headOption.collect {
-          case r if r(2) == null &&
-            (r(1) == "p" ||
-              (r(1) == "r" && r(0).toLong < pagesPerChunk)) => r(1)
+        rows.headOption.fold((0L, Option.empty[String])) { r =>
+          (r(0).toLong, Some(r(1)).filter(kind => r(2) == null &&
+            (kind == "p" || (kind == "r" && r(0).toLong < pagesPerChunk))))
         }
       } finally conn.close()
-    smallKind.map { kind => () => {
-      val c = new PgWireConnection(params)
-      // heaps read ONLY their own rows (an INHERITS parent's plain
-      // FROM would also stream every child's rows — children migrate
-      // as their own tables; see readByCtid); partitioned parents
-      // NEED the plain FROM's whole-tree expansion
-      val from = if (kind == "p") qtable else s"ONLY $qtable"
+    }
+    if (view)
+      distributed(params, table, Seq((qtable, "true")), selectCols,
+        only = false)
+    else if (local && probed._2.isDefined) {
+      // heaps read ONLY their own rows (an INHERITS parent's plain FROM
+      // would also stream every child's rows — children migrate as
+      // their own tables; see ctidPlan); partitioned parents NEED the
+      // plain FROM's whole-tree expansion
+      val from = if (probed._2.contains("p")) qtable else s"ONLY $qtable"
       val sel =
         if (selectCols.isEmpty) "*"
         else selectCols.map { case (e, n) =>
           s"$e AS ${PgWire.quoteIdent(n)}" }.mkString(", ")
-      val (cols, rows) = c.queryStream(s"SELECT $sel FROM $from")
-      (cols, rows, () => c.close())
-    }}
+      ScanPlan(selectCols.map(_._2), Seq(s"SELECT $sel FROM $from"),
+        local = true, opener(params))
+    } else if (partitioned)
+      partitionedPlan(params, table, pagesPerChunk, selectCols)
+    else
+      ctidPlan(params, table,
+        if (local) probed._1 else relpagesOf(params, table),
+        pagesPerChunk, selectCols)
   }
 
   /** Column names of `table`, discovered driver-side from a LIMIT 0
@@ -235,23 +255,29 @@ object PgWireSource {
 
   /** Read `table` split into ctid page ranges, `pagesPerChunk` blocks
     * per partition (relpages from pg_class, as the JDBC path does).
-    * `selectCols` is (server-side expression, output name) pairs —
-    * [[ColumnSqlExpressions.pgsqlPair]] output for per-type source
-    * rewrites (expressions used verbatim; quote identifiers yourself
-    * inside them); defaults to the discovered column list (quoted). */
+    * `selectCols` as in [[scan]]; defaults to the discovered column
+    * list (quoted). */
   def readByCtid(spark: SparkSession, params: PgWire.ConnParams,
                  table: String, relpages: Long,
                  pagesPerChunk: Long = 1000L,
                  selectCols: Seq[(String, String)] = Nil): DataFrame =
-    // FROM ONLY: every heap migrates as its own table, so each read
-    // must take the table's OWN rows — a plain FROM on an old-style
-    // INHERITS parent also returns every descendant's rows, loading
-    // the children's data twice (the reference has this blind spot:
-    // its read-rows SELECT has no ONLY, pgsql.clj:204-210, while its
-    // relkind='r' table list includes the children as tables)
-    readWithPredicates(spark, params, table,
-      IntrospectionSql.pgsqlCtidPredicates(relpages, pagesPerChunk),
-      selectCols, only = true)
+    ctidPlan(params, table, relpages, pagesPerChunk, selectCols)
+      .frame(spark)
+
+  // FROM ONLY: every heap migrates as its own table, so each read
+  // must take the table's OWN rows — a plain FROM on an old-style
+  // INHERITS parent also returns every descendant's rows, loading
+  // the children's data twice (the reference has this blind spot:
+  // its read-rows SELECT has no ONLY, pgsql.clj:204-210, while its
+  // relkind='r' table list includes the children as tables)
+  private def ctidPlan(params: PgWire.ConnParams, table: String,
+                       relpages: Long, pagesPerChunk: Long,
+                       selectCols: Seq[(String, String)]): ScanPlan[String] = {
+    val q = PgWire.quoteQualified(table)
+    distributed(params, table,
+      IntrospectionSql.pgsqlCtidPredicates(relpages, pagesPerChunk)
+        .map(pred => (q, pred)), selectCols, only = true)
+  }
 
   /** Leaf relations under a partitioned parent — the recursive
     * pg_inherits closure (multi-level partitioning walks through
@@ -287,23 +313,22 @@ object PgWireSource {
     * and relpages-driven planning would read terabytes through one
     * stream). Column list and output names come from the PARENT (leaf
     * attnum order can differ after ATTACH PARTITION of an older table;
-    * selecting parent columns by name per leaf is order-safe). A leaf
-    * that is not a plain heap (e.g. a foreign-table partition, relkind
-    * 'f' — no ctid there either) demotes the WHOLE read to the
-    * predicate-free single-stream parent scan, which PG routes through
-    * every partition correctly. The reference reads parents through
-    * the same relpages machinery as heaps (pgsql.clj:206-208) and so
-    * single-streams them — this path beats it instead of matching it. */
-  def readPartitioned(spark: SparkSession, params: PgWire.ConnParams,
-                      table: String,
-                      pagesPerChunk: Long = 1000L,
-                      selectCols: Seq[(String, String)] = Nil): DataFrame = {
+    * selecting parent columns by name per leaf is order-safe). The
+    * reference reads parents through the same relpages machinery as
+    * heaps (pgsql.clj:206-208) and so single-streams them — this path
+    * beats it instead of matching it. */
+  private def partitionedPlan(params: PgWire.ConnParams, table: String,
+                              pagesPerChunk: Long,
+                              selectCols: Seq[(String, String)])
+      : ScanPlan[String] = {
     val leaves = leafPartitionsOf(params, table)
+    val q = PgWire.quoteQualified(table)
     if (leaves.isEmpty)
       // no leaves yet (empty parent): one predicate-free stream over
       // the parent is trivially correct
-      readView(spark, params, table, selectCols)
-    else {
+      distributed(params, table, Seq((q, "true")), selectCols,
+        only = false)
+    else
       // heap leaves ctid-split by their own relpages; a non-heap leaf
       // (e.g. a postgres_fdw foreign-table partition — no ctid there)
       // gets ONE predicate-free target of its own, so a single archive
@@ -311,96 +336,40 @@ object PgWireSource {
       // single stream. ONLY is safe: partitions cannot take part in
       // old-style inheritance (PG rejects INHERITS from/into partition
       // trees), so a leaf's ONLY rows ARE all its rows.
-      val targets = leaves.flatMap { case (leaf, relpages, kind) =>
-        val q = PgWire.quoteQualified(leaf)
+      distributed(params, table, leaves.flatMap { case (leaf, relpages, kind) =>
+        val lq = PgWire.quoteQualified(leaf)
         if (kind == "r")
           IntrospectionSql.pgsqlCtidPredicates(relpages, pagesPerChunk)
-            .map(pred => (q, pred))
-        else Seq((q, "true"))
-      }
-      readTargets(spark, params, table, targets, selectCols, only = true)
-    }
+            .map(pred => (lq, pred))
+        else Seq((lq, "true"))
+      }, selectCols, only = true)
   }
 
-  /** Single-stream read WITHOUT ctid predicates — views (MATERIALIZE
-    * VIEWS) have no ctid to split on, so the load is one streaming wire
-    * connection. */
-  def readView(spark: SparkSession, params: PgWire.ConnParams,
-               table: String,
-               selectCols: Seq[(String, String)] = Nil): DataFrame =
-    // no ONLY: views reject it, and the partitioned-parent demotion
-    // path NEEDS the whole-tree expansion
-    readWithPredicates(spark, params, table, Seq("true"), selectCols,
-      only = false)
-
-  private def readWithPredicates(spark: SparkSession,
-                                 params: PgWire.ConnParams,
-                                 table: String, preds: Seq[String],
-                                 selectCols: Seq[(String, String)],
-                                 only: Boolean)
-      : DataFrame =
-    readTargets(spark, params, table,
-      preds.map(p => (PgWire.quoteQualified(table), p)), selectCols,
-      only)
-
-  /** The shared distributed-read core: one Spark partition per
-    * (quoted relation, predicate) target — identical relation for the
-    * ctid/view reads, per-leaf relations for [[readPartitioned]].
-    * `columnsTable` names the relation whose LIMIT 0 row description
-    * defines the column list and output schema. */
-  private def readTargets(spark: SparkSession,
-                          params: PgWire.ConnParams,
-                          columnsTable: String,
+  /** A split read: one Spark partition per (quoted relation,
+    * predicate) target — identical relation for the ctid/view reads,
+    * per-leaf relations for [[partitionedPlan]]. `columnsTable` names
+    * the relation whose LIMIT 0 row description defines the column list
+    * and output schema when `selectCols` is empty. Rows decode straight
+    * to catalyst form (UTF8String slices of the wire payload) — no
+    * per-field java-String round-trip. */
+  private def distributed(params: PgWire.ConnParams, columnsTable: String,
                           targets: Seq[(String, String)],
                           selectCols: Seq[(String, String)],
-                          only: Boolean)
-      : DataFrame = {
-    val discovered =
-      if (selectCols.nonEmpty) Nil else columnsOf(params, columnsTable)
-    val cols =
+                          only: Boolean): ScanPlan[String] = {
+    val names =
+      if (selectCols.nonEmpty) selectCols.map(_._2)
+      else columnsOf(params, columnsTable)
+    require(names.nonEmpty, s"no columns resolved for $columnsTable")
+    val select =
       if (selectCols.nonEmpty) selectCols.map { case (e, a) =>
         if (e == PgWire.quoteIdent(a)) e else s"$e AS ${PgWire.quoteIdent(a)}"
-      } else discovered.map(PgWire.quoteIdent)
-    require(cols.nonEmpty, s"no columns resolved for $columnsTable")
-    val names =
-      if (selectCols.nonEmpty) selectCols.map(_._2) else discovered
-    val select = cols.mkString(", ")
-    val p = params // capture the case class, not this object
-    // rows decode straight to catalyst form (UTF8String slices of the
-    // wire payload, wrapped in GenericInternalRow) and enter the plan
-    // via the internal-row scan — no per-field java-String round-trip
-    // and no ExpressionEncoder pass. RDDScanExec's UnsafeProjection
-    // copies each row out before anything downstream retains it.
-    val rdd = spark.sparkContext
-      .parallelize(targets, targets.length)
-      .mapPartitions { it =>
-        it.flatMap { case (qtable, pred) =>
-          val conn = new PgWireConnection(p)
-          // backstop for early task termination (limit, failure): the
-          // task-completion listener closes the socket regardless of
-          // how much of the stream Spark consumed
-          val tc = org.apache.spark.TaskContext.get()
-          if (tc != null)
-            tc.addTaskCompletionListener[Unit](_ => conn.close())
-          val (_, rows) = conn.queryStreamData(
-            s"SELECT $select FROM ${if (only) "ONLY " else ""}$qtable " +
-              s"WHERE $pred")
-          new Iterator[org.apache.spark.sql.catalyst.InternalRow] {
-            private var closed = false
-            override def hasNext: Boolean = {
-              val h = rows.hasNext
-              if (!h && !closed) { closed = true; conn.close() }
-              h
-            }
-            override def next(): org.apache.spark.sql.catalyst.InternalRow =
-              new org.apache.spark.sql.catalyst.expressions
-                .GenericInternalRow(rows.next())
-          }
-        }
-      }
-    val schema = StructType(names.map(n =>
-      StructField(n, StringType, nullable = true)))
-    org.apache.spark.sql.graft.FunctionInstaller
-      .internalDataFrame(spark, rdd, schema)
+      }.mkString(", ")
+      else names.map(PgWire.quoteIdent).mkString(", ")
+    ScanPlan(names, targets.map { case (qtable, pred) =>
+      s"SELECT $select FROM ${if (only) "ONLY " else ""}$qtable WHERE $pred"
+    }, local = false, opener(params))
   }
+
+  private def opener(params: PgWire.ConnParams): String => ScanPlan.Stream =
+    sql => ScanPlan.opened(new PgWireConnection(params))(_.queryStreamData(sql))
 }

@@ -13,7 +13,7 @@ private[graft] object RangeSplit {
     * ~(hi-lo)/rowsPerRange predicate strings on the driver before the
     * first task launches. Capped, each range's stride widens — the same
     * `numPartitions = ceil(rows / rowsPerRange)` sizing the JDBC path
-    * uses (JdbcSource.readPartitioned).
+    * uses (JdbcSource.read).
     *
     * @param quotedCol the partition column ALREADY quoted for the
     *   target dialect (back-quotes for MySQL, brackets for MSSQL)
@@ -34,4 +34,22 @@ private[graft] object RangeSplit {
       else s"$quotedCol >= $a AND $quotedCol < ${a + stride}"
     }
   }
+
+  /** The reference's big-enough guard (mysql.lisp:44-47): a read splits
+    * only on an integer key and with at least `2 * rowsPerRange` rows. */
+  def splits(partitionKey: Option[String], rowCount: Long,
+             rowsPerRange: Long): Boolean =
+    partitionKey.isDefined && rowCount >= 2 * rowsPerRange
+
+  /** The WHERE clauses of a key-range read: [[predicates]] over the
+    * key's `bounds` (min, max) when the read [[splits]], else one full
+    * scan. */
+  def wheres(partitionKey: Option[String], rowCount: Long,
+             rowsPerRange: Long, quote: String => String)(
+      bounds: String => (Long, Long)): Seq[String] =
+    if (!splits(partitionKey, rowCount, rowsPerRange)) Seq("1 = 1")
+    else {
+      val (lo, hi) = bounds(partitionKey.get)
+      predicates(quote(partitionKey.get), lo, hi, rowsPerRange, rowCount)
+    }
 }

@@ -1,0 +1,104 @@
+package graft.sources
+
+import scala.reflect.ClassTag
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+
+/** How one database table is read, decided once by its source's `scan`
+  * (the ctid or leaf ranges of [[PgWireSource]], the key ranges of
+  * [[MySqlWireSource]] and [[MssqlWireSource]], the B-tree subtrees of
+  * [[SqliteSource]]). Each split is opened by `open` into a stream of
+  * catalyst-form rows: one `UTF8String` or null per column (fidelity
+  * mode: the cast engine types the values downstream).
+  *
+  * `open` ships to executors, so it must capture only serializable
+  * values (connection parameters, paths), never a source object.
+  *
+  * @param columns the frame's column names; a `local` plan may leave
+  *   them empty, its stream reports them
+  * @param splits one Spark partition each; the wire sources' split is
+  *   the full SELECT statement of its range
+  * @param local the table fits one split and may stream on the driver
+  *   ([[graft.sinks.LocalCopy]]) instead of running a Spark job
+  */
+final case class ScanPlan[S](
+    columns: Seq[String],
+    splits: Seq[S],
+    local: Boolean,
+    open: S => ScanPlan.Stream)(implicit tag: ClassTag[S]) {
+  require(!local || splits.length == 1,
+    s"a driver-local plan has one split, not ${splits.length}")
+
+  /** Opens the single split of a `local` plan on the calling thread. */
+  def stream(): ScanPlan.Stream = {
+    require(local, "only a driver-local plan streams on the driver")
+    open(splits.head)
+  }
+
+  /** The distributed read: one Spark partition per split, each opened
+    * executor-side and consumed as a stream, its rows entering the plan
+    * through the internal-row scan (no `Row` or encoder pass per row).
+    * The source closes when its stream drains and, as a backstop for a
+    * task that stops early (limit, failure), when the task completes. */
+  def frame(spark: SparkSession): DataFrame = {
+    require(columns.nonEmpty, "no columns resolved for the read")
+    val open = this.open // capture the function, not the plan
+    val rdd = spark.sparkContext
+      .parallelize(splits, splits.length)
+      .mapPartitions { it =>
+        it.flatMap { split =>
+          val s = open(split)
+          val tc = org.apache.spark.TaskContext.get()
+          if (tc != null) tc.addTaskCompletionListener[Unit](_ => s.close())
+          new Iterator[InternalRow] {
+            private var closed = false
+            override def hasNext: Boolean = {
+              val h = s.rows.hasNext
+              if (!h && !closed) { closed = true; s.close() }
+              h
+            }
+            override def next(): InternalRow =
+              new GenericInternalRow(s.rows.next())
+          }
+        }
+      }
+    val schema = StructType(columns.map(n =>
+      StructField(n, StringType, nullable = true)))
+    org.apache.spark.sql.graft.FunctionInstaller
+      .internalDataFrame(spark, rdd, schema)
+  }
+}
+
+object ScanPlan {
+
+  /** One opened split: the column names its source reported, the rows
+    * in catalyst form, and the close (safe to call twice). */
+  final case class Stream(columns: Seq[String], rows: Iterator[Array[Any]],
+                          close: () => Unit)
+
+  /** Starts a stream on a freshly opened `resource` (a connection or a
+    * file); a failing start closes the resource before rethrowing. */
+  def opened[C <: AutoCloseable](resource: C)(
+      start: C => (Seq[String], Iterator[Array[Any]])): Stream =
+    try {
+      val (cols, rows) = start(resource)
+      Stream(cols, rows, () => resource.close())
+    } catch {
+      case e: Throwable => resource.close(); throw e
+    }
+
+  /** Java-String row → catalyst form. */
+  def utf8(values: Array[String]): Array[Any] = {
+    val out = new Array[Any](values.length)
+    var i = 0
+    while (i < values.length) {
+      if (values(i) != null)
+        out(i) = org.apache.spark.unsafe.types.UTF8String.fromString(values(i))
+      i += 1
+    }
+    out
+  }
+}

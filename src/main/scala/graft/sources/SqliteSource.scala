@@ -1,8 +1,5 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
-
 /** Spark face of the driver-free SQLite reader ([[SqliteFile]]):
   * introspection into the catalog/cast chain and a distributed scan
   * partitioned by table B-tree SUBTREES — each root child holds a
@@ -278,12 +275,14 @@ object SqliteSource {
         c.ctype.trim.toLowerCase == "integer")
     else -1
 
-  /** Driver-local scan for tables whose B-tree is a SINGLE subtree —
-    * [[read]] would give them one Spark partition anyway, so the
-    * per-table job floor buys nothing ([[graft.sinks.LocalCopy]]).
-    * Returns None when the table splits into multiple subtrees. */
-  def localScanIfSmall(path: String, table: String)
-      : Option[() => (Seq[String], Iterator[Array[String]], () => Unit)] = {
+  /** Plan the read of one table, one split per root subtree (each
+    * holds a disjoint rowid range). WITHOUT ROWID tables scan their
+    * index b-tree whole (interior keys are entries, so page subtrees
+    * don't partition cleanly) — one split, like the reference's single
+    * COPY stream. A single-subtree table streams on the driver for a
+    * `local` caller: a Spark job would give it one partition anyway. */
+  def scan(path: String, table: String,
+           local: Boolean = false): ScanPlan[Int] = {
     val db = SqliteFile.open(path)
     val (rootPage, sql, cols) =
       try {
@@ -291,60 +290,16 @@ object SqliteSource {
           throw new IllegalArgumentException(s"no such table $table in $path"))
         (m.rootPage, m.sql, SqliteFile.parseCreateTable(m.sql))
       } finally db.close()
-    val wor = SqliteFile.isWithoutRowid(sql)
     val roots =
-      if (wor) Seq(rootPage) // index b-tree: single in-order walk
+      if (SqliteFile.isWithoutRowid(sql)) Seq(rootPage)
       else {
         val d = SqliteFile.open(path)
         try d.subtreeRoots(rootPage) finally d.close()
       }
-    if (roots.length > 1) None
-    else Some(() => {
-      val names = cols.map(_.name)
-      val d = SqliteFile.open(path)
-      val it = tableScan(d, rootPage, sql, cols)
-      (names, it, () => d.close())
-    })
-  }
-
-  /** Read one table as an all-string DataFrame (fidelity mode), one
-    * Spark partition per root subtree. */
-  def read(spark: SparkSession, path: String, table: String): DataFrame = {
-    val db = SqliteFile.open(path)
-    val (rootPage, sql, cols) =
-      try {
-        val m = userTables(db).find(_.name == table).getOrElse(
-          throw new IllegalArgumentException(s"no such table $table in $path"))
-        (m.rootPage, m.sql, SqliteFile.parseCreateTable(m.sql))
-      } finally db.close()
     val names = cols.map(_.name)
-    val wor = SqliteFile.isWithoutRowid(sql)
-    // WITHOUT ROWID tables scan their index b-tree whole (interior
-    // keys are entries, so page subtrees don't partition cleanly) —
-    // one partition, like the reference's single COPY stream
-    val roots =
-      if (wor) Seq(rootPage)
-      else {
-        val d = SqliteFile.open(path)
-        try d.subtreeRoots(rootPage) finally d.close()
-      }
-    val p = path
-    val colsB = cols
-    val sqlB = sql
-    val rdd = spark.sparkContext
-      .parallelize(roots, roots.length)
-      .mapPartitions { it =>
-        it.flatMap { subtree =>
-          val d = SqliteFile.open(p)
-          val tc = org.apache.spark.TaskContext.get()
-          if (tc != null)
-            tc.addTaskCompletionListener[Unit](_ => d.close())
-          tableScan(d, subtree, sqlB, colsB)
-            .map(vals => Row.fromSeq(vals.toSeq))
-        }
-      }
-    val schema = StructType(names.map(n =>
-      StructField(n, StringType, nullable = true)))
-    spark.createDataFrame(rdd, schema)
+    val open = (subtree: Int) =>
+      ScanPlan.opened(SqliteFile.open(path))(d =>
+        (names, tableScan(d, subtree, sql, cols).map(ScanPlan.utf8)))
+    ScanPlan(names, roots, local = local && roots.length == 1, open)
   }
 }

@@ -533,7 +533,7 @@ final class TdsWireConnection(params: TdsWire.ConnParams)
           } else c.usVarchar
         case other => throw new IllegalArgumentException(
           f"unsupported column type 0x$other%02X (cast it server-side " +
-            "via ColumnSqlExpressions.mssql)")
+            "via ColumnSqlExpressions.mssqlPair)")
       }
       ColInfo(c.bVarchar, tpe, maxLen, scale)
     }

@@ -305,8 +305,8 @@ object SqliteGen {
       println(s"=== round $round ===")
       Seq("1x" -> 15607L, "10x" -> 156070L).foreach { case (tag, expect) =>
         time(s"read $tag") {
-          val df = graft.sources.SqliteSource.read(
-            spark, s"$dir/track_${tag}.db", "Track")
+          val df = graft.sources.SqliteSource.scan(
+            s"$dir/track_${tag}.db", "Track").frame(spark)
           if (round == 1)
             println(s"[sqlite-scale] $tag partitions: " +
               df.rdd.getNumPartitions)

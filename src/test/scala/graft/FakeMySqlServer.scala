@@ -53,6 +53,7 @@ final class FakeMySqlServer(
     extends AutoCloseable {
 
   val executed = new ArrayBuffer[String]() // row-less statements
+  val received = new ArrayBuffer[String]() // every COM_QUERY, in order
   val connections = new java.util.concurrent.atomic.AtomicInteger(0)
   val tlsConnections = new java.util.concurrent.atomic.AtomicInteger(0)
   @volatile private var running = true
@@ -292,6 +293,7 @@ final class FakeMySqlServer(
           case 0x0E => ok() // COM_PING
           case 0x03 =>
             val sql = new String(p, 1, p.length - 1, UTF_8)
+            received.synchronized(received += sql)
             onError(sql) match {
               case Some((code, state, msg)) => err(code, state, msg)
               case None =>

@@ -48,6 +48,7 @@ final class FakeTdsServer(
     maxCols: Set[String] = Set.empty) extends AutoCloseable {
 
   val executed = new ArrayBuffer[String]()
+  val received = new ArrayBuffer[String]() // every SQL batch, in order
   val connections = new java.util.concurrent.atomic.AtomicInteger(0)
   val tlsConnections = new java.util.concurrent.atomic.AtomicInteger(0)
   @volatile private var running = true
@@ -225,6 +226,7 @@ final class FakeTdsServer(
             java.util.Arrays.copyOfRange(body0, hl, body0.length)
           } else body0
         val sql = new String(body, UTF_16LE)
+        received.synchronized(received += sql)
         val b = new java.io.ByteArrayOutputStream()
         // the streaming SELECT branch sends its own frames; only the
         // buffered branches emit `b` afterwards

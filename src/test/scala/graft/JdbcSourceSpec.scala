@@ -112,10 +112,6 @@ class JdbcSourceSpec extends AnyFunSuite {
     val withViews = JdbcSource.introspect(url, schemaPattern = Some("APP"),
       rowCounts = false, tableTypes = Array("TABLE", "VIEW"))
     assert(withViews.allTables.exists(_.name == "RICH_NATIONS"))
-    val spark = SparkSpec.session
-    val df = JdbcSource.readQuery(spark, url, new java.util.Properties,
-      "SELECT N_ID, N_NAME FROM APP.RICH_NATIONS")
-    assert(df.collect().map(_.getInt(0)).toSeq == Seq(2))
   }
 
   test("executeDdl hook runs against the target") {
@@ -133,15 +129,15 @@ class JdbcSourceSpec extends AnyFunSuite {
 
   test("per-type SELECT expressions match the reference's renderings") {
     import graft.sources.ColumnSqlExpressions._
-    assert(mysql("loc", "point") == "st_astext(`loc`) as `loc`")
-    assert(mysql("name", "varchar") == "`name`")
-    assert(mssql("t", "datetime") ==
-      "convert(varchar(30), [t], 126) as [t]")
-    assert(mssql("n", "bigint") == "cast([n] as numeric(20)) as [n]")
-    assert(pgsql("c", "jsonb") == """CAST("c" AS text) AS "c"""")
-    assert(selectList("mysql",
+    assert(mysqlPair("loc", "point") == (("st_astext(`loc`)", "loc")))
+    assert(mysqlPair("name", "varchar") == (("`name`", "name")))
+    assert(mssqlPair("t", "datetime") ==
+      (("convert(varchar(30), [t], 126)", "t")))
+    assert(mssqlPair("n", "bigint") == (("cast([n] as numeric(20))", "n")))
+    assert(pgsqlPair("c", "jsonb") == (("""CAST("c" AS text)""", "c")))
+    assert(selectPairs("mysql",
       Seq(("a", "int"), ("g", "geometry"))) ==
-      Seq("`a`", "st_astext(`g`) as `g`"))
+      Seq(("`a`", "a"), ("st_astext(`g`)", "g")))
     // the structured form the wire sources consume: alias carried
     // separately, never re-parsed out of the expression string
     assert(selectPairs("mssql", Seq(("t", "datetime"), ("n", "int"))) ==

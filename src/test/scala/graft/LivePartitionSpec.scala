@@ -9,7 +9,7 @@ import graft.sinks.{PgWire, PgWireCopyEndpoint, PgWireConnection}
   * forces the distributed route) ERRORED outright on
   * `WHERE ctid >= '(0,0)'`. The scale path enumerates pg_inherits
   * leaves and ctid-splits EACH leaf by its own relpages
-  * ([[graft.sources.PgWireSource.readPartitioned]]); the reference
+  * ([[graft.sources.PgWireSource.scan]]); the reference
   * reads parents through the same relpages machinery as plain heaps
   * (pgsql.clj:206-208) and single-streams them — this beats it.
   *
@@ -71,18 +71,19 @@ class LivePartitionSpec extends SparkSpec {
     // the gate no longer trusts it: a parent qualifies only through
     // the whole-tree capacity probe. At pagesPerChunk=1 (cap 300) the
     // 4000-row tree is refused...
-    assert(graft.sources.PgWireSource.localScanIfSmall(sp, "public.m",
-      pagesPerChunk = 1L).isEmpty,
+    assert(!graft.sources.PgWireSource.scan(sp, "public.m",
+      partitioned = true, pagesPerChunk = 1L, local = true).local,
       "a beyond-capacity partitioned parent must not stream driver-local")
     // ...while a genuinely small parent keeps the ORM-scale fast path
     // and streams the WHOLE tree (plain FROM, all partitions)
-    val local = graft.sources.PgWireSource.localScanIfSmall(sp, "public.m")
-    assert(local.isDefined, "small partitioned parent keeps LocalCopy")
-    val (cols, it, close) = local.get()
+    val local = graft.sources.PgWireSource.scan(sp, "public.m",
+      partitioned = true, local = true)
+    assert(local.local, "small partitioned parent keeps LocalCopy")
+    val stream = local.stream()
     try {
-      assert(cols == Seq("id", "bucket", "payload"))
-      assert(it.size == 4000)
-    } finally close()
+      assert(stream.columns == Seq("id", "bucket", "payload"))
+      assert(stream.rows.size == 4000)
+    } finally stream.close()
 
     // leaf enumeration carries each leaf's OWN relpages
     val leaves = graft.sources.PgWireSource.leafPartitionsOf(sp, "public.m")
@@ -93,8 +94,8 @@ class LivePartitionSpec extends SparkSpec {
 
     // the distributed read: one Spark partition per (leaf, ctid range),
     // more than one range per leaf at pagesPerChunk=1
-    val df = graft.sources.PgWireSource.readPartitioned(spark, sp,
-      "public.m", pagesPerChunk = 1L)
+    val df = graft.sources.PgWireSource.scan(sp, "public.m",
+      partitioned = true, pagesPerChunk = 1L).frame(spark)
     val expectParts = leaves.map(_._2).sum
     assert(df.rdd.getNumPartitions == expectParts &&
       expectParts > leaves.length,
@@ -149,8 +150,8 @@ class LivePartitionSpec extends SparkSpec {
       .filter(l => l._3 == "r" && l._1.startsWith("public.mx_hot"))
       .map(_._2).sum
     assert(heapChunks > 2, s"ANALYZEd heap leaves must split: $leaves")
-    val df = graft.sources.PgWireSource.readPartitioned(spark, sp,
-      "public.mx", pagesPerChunk = 1L)
+    val df = graft.sources.PgWireSource.scan(sp, "public.mx",
+      partitioned = true, pagesPerChunk = 1L).frame(spark)
     // heap leaves ctid-split per their relpages; the FDW leaf adds ONE
     // predicate-free target — the whole read is NOT demoted
     assert(df.rdd.getNumPartitions > 3,
@@ -274,17 +275,18 @@ class LivePartitionSpec extends SparkSpec {
       "fixture must lie: relpages expected 0 pre-ANALYZE")
     // pagesPerChunk=1 → capacity cap 300 rows; the 400-row liar is
     // caught by the OFFSET probe and routed to the distributed read
-    assert(graft.sources.PgWireSource.localScanIfSmall(p, "public.liar",
-      pagesPerChunk = 1L).isEmpty, "stale relpages must not buy LocalCopy")
+    assert(!graft.sources.PgWireSource.scan(p, "public.liar",
+      pagesPerChunk = 1L, local = true).local,
+      "stale relpages must not buy LocalCopy")
     // the honest small table still gets the fast path, and it works
-    val local = graft.sources.PgWireSource.localScanIfSmall(p,
-      "public.honest_small", pagesPerChunk = 1L)
-    assert(local.isDefined)
-    val (cols, rows, close) = local.get()
+    val local = graft.sources.PgWireSource.scan(p,
+      "public.honest_small", pagesPerChunk = 1L, local = true)
+    assert(local.local)
+    val stream = local.stream()
     try {
-      assert(cols == Seq("id"))
-      assert(rows.map(_(0).toInt).toSeq.sorted == (1 to 9))
-    } finally close()
+      assert(stream.columns == Seq("id"))
+      assert(stream.rows.map(_(0).toString.toInt).toSeq.sorted == (1 to 9))
+    } finally stream.close()
   }
 
   test("old-style INHERITS hierarchy: reads take each table's OWN " +

@@ -1056,8 +1056,8 @@ class LiveServerSpec extends SparkSpec {
     val pk = t.fields.find(_.autoIncrement).map(_.name)
     val rows = graft.sources.MySqlWireSource.rowCountOf(
       mp, mp.database, t.sourceName)
-    val df = graft.sources.MySqlWireSource.read(spark, mp, mp.database,
-      t.sourceName, partitionKey = pk, rowCountEstimate = rows)
+    val df = graft.sources.MySqlWireSource.scan(mp, mp.database,
+      t.sourceName, partitionKey = pk, rowCountEstimate = rows).frame(spark)
     assert(df.count() >= 0L)
     info(s"live MySQL: read ${df.count()} rows from ${t.sourceName} " +
       s"(estimate $rows, ${df.rdd.getNumPartitions} partitions)")
@@ -1075,10 +1075,10 @@ class LiveServerSpec extends SparkSpec {
     val pk = t.fields.find(_.autoIncrement).map(_.name)
     val rows = graft.sources.MssqlWireSource.rowCountOf(
       tp, t.schema, t.sourceName)
-    val df = graft.sources.MssqlWireSource.read(spark, tp, t.schema,
+    val df = graft.sources.MssqlWireSource.scan(tp, t.schema,
       t.sourceName, partitionKey = pk, rowCountEstimate = rows,
       selectCols = graft.sources.ColumnSqlExpressions.selectPairs(
-        "mssql", t.fields.map(f => (f.name, f.typeName))))
+        "mssql", t.fields.map(f => (f.name, f.typeName)))).frame(spark)
     assert(df.count() >= 0L)
     info(s"live MSSQL: read ${df.count()} rows from ${t.sourceName}")
   }

@@ -40,10 +40,13 @@ class LocalCopySpec extends SparkSpec {
       schema)
   }
 
+  // scan rows arrive in catalyst form
+  private def utf8(r: Array[String]): Array[Any] = graft.sources.ScanPlan.utf8(r)
+
   test("textRender matches the codegen textRenderer byte-for-byte") {
     val codegen = CopySink.textRenderer(stringDf(rows3)).collect()
       .map(_.getAs[Array[Byte]](0).toSeq)
-    val local = rows3.map(r => LocalCopy.textRender(r)._1.toSeq)
+    val local = rows3.map(r => LocalCopy.textRender(utf8(r))._1.toSeq)
     assert(codegen.length == local.length)
     // a local relation of this size collects in input order
     codegen.zip(local).zipWithIndex.foreach { case ((c, l), i) =>
@@ -68,7 +71,7 @@ class LocalCopySpec extends SparkSpec {
       }
     val render = LocalCopy.binaryRender(kinds)
     val local = rows.map { r =>
-      val (v, j) = render(r)
+      val (v, j) = render(utf8(r))
       (Option(v).map(_.toSeq), Option(j).map(_.toSeq))
     }
     codegen.zip(local).zipWithIndex.foreach { case ((c, l), i) =>
@@ -90,7 +93,7 @@ class LocalCopySpec extends SparkSpec {
     }
     val dir = Files.createTempDirectory("localcopy").toString
     val rows = Iterator(Array[String]("1", "a"), Array("2", "BAD"),
-      Array("3", "c"), Array[String](null, "d"))
+      Array("3", "c"), Array[String](null, "d")).map(utf8)
     val (sent, rejected, bytes) = LocalCopy.write(rows, _ => endpoint,
       rejectDir = Some(dir))
     assert(sent == 3 && rejected == 1)
@@ -111,7 +114,7 @@ class LocalCopySpec extends SparkSpec {
     }
     val dir = Files.createTempDirectory("localcopybin").toString
     val (sent, rejected, _) = LocalCopy.write(
-      Iterator(Array("41"), Array("nope"), Array("42")),
+      Iterator(Array("41"), Array("nope"), Array("42")).map(utf8),
       _ => endpoint, render = LocalCopy.binaryRender(kinds),
       rejectDir = Some(dir))
     assert(sent == 2 && rejected == 1)
@@ -126,7 +129,7 @@ class LocalCopySpec extends SparkSpec {
         throw CopyError(Some(1), "constraint")
     }
     intercept[CopyError] {
-      LocalCopy.write(Iterator(Array("x")), _ => endpoint,
+      LocalCopy.write(Iterator(Array("x")).map(utf8), _ => endpoint,
         onErrorStop = true)
     }
   }

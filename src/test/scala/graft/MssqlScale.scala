@@ -35,9 +35,9 @@ object MssqlScale {
         try {
           val p = TdsWire.ConnParams("127.0.0.1", srv.port, "corpus",
             "graft", "secret")
-          val df = MssqlWireSource.read(spark, p, "dbo", "track",
+          val df = MssqlWireSource.scan(p, "dbo", "track",
             partitionKey = Some("id"), rowCountEstimate = n.toLong,
-            rowsPerRange = 5000L)
+            rowsPerRange = 5000L).frame(spark)
           val parts = df.rdd.getNumPartitions
           val walls = (1 to 3).map { _ =>
             val t0 = System.nanoTime()

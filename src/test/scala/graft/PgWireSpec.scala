@@ -222,8 +222,8 @@ class PgWireSpec extends SparkSpec {
       assert(vs.map(_.name) == Seq("v1"))
       assert(seen.synchronized(
         seen.exists(_.contains("c.relname IN ('v1')"))))
-      val df = graft.sources.PgWireSource.readView(spark,
-        params(srv.port), "public.v1")
+      val df = graft.sources.PgWireSource.scan(params(srv.port),
+        "public.v1", view = true).frame(spark)
       assert(df.collect().map(_.getString(0)).sorted.toSeq == Seq("1", "2"))
       val readSql = seen.synchronized(
         seen.filter(s => s.contains(""""public"."v1"""") &&

@@ -46,7 +46,7 @@ class SqliteFileSpec extends SparkSpec {
   test("reads rows: rowid aliases, ints, floats, NULLs, empty tables") {
     val p = fixture("sqlite.db")
     def rows(t: String): Seq[Seq[String]] =
-      SqliteSource.read(spark, p, t).collect()
+      SqliteSource.scan(p, t).frame(spark).collect()
         .map(_.toSeq.map(v => v.asInstanceOf[String])).toSeq
 
     assert(rows("user").sortBy(_(0).toInt) == Seq(
@@ -65,7 +65,7 @@ class SqliteFileSpec extends SparkSpec {
   }
 
   test("a 28,972-byte blob reassembles across its overflow chain") {
-    val rows = SqliteSource.read(spark, fixture("sqlite.db"), "blobs")
+    val rows = SqliteSource.scan(fixture("sqlite.db"), "blobs").frame(spark)
       .collect()
     assert(rows.length == 1)
     val Array(id, data) = Array(rows(0).getString(0), rows(0).getString(1))
@@ -76,8 +76,8 @@ class SqliteFileSpec extends SparkSpec {
   }
 
   test("type-affinity mismatch rows surface the stored value as-is") {
-    val rows = SqliteSource.read(spark, fixture("type-mismatch.db"),
-      "products").collect().map(_.toSeq).toSeq
+    val rows = SqliteSource.scan(fixture("type-mismatch.db"),
+      "products").frame(spark).collect().map(_.toSeq).toSeq
     assert(rows.sortBy(_(0).asInstanceOf[String].toInt) == Seq(
       Seq("1", "apple", "10"),
       Seq("2", "banana", "lots-of-it"), // TEXT in an INTEGER column
@@ -87,13 +87,13 @@ class SqliteFileSpec extends SparkSpec {
   test("Chinook: interior b-tree levels, subtree partitioning, " +
     "table-level CONSTRAINT PKs") {
     val p = fixture("Chinook_Sqlite.sqlite")
-    val artists = SqliteSource.read(spark, p, "Artist")
+    val artists = SqliteSource.scan(p, "Artist").frame(spark)
     val a = artists.collect().map(r => (r.getString(0), r.getString(1)))
     assert(a.length == 275)
     assert(a.sortBy(_._1.toInt).take(3).toSeq ==
       Seq(("1", "AC/DC"), ("2", "Accept"), ("3", "Aerosmith")))
 
-    val tracks = SqliteSource.read(spark, p, "Track")
+    val tracks = SqliteSource.scan(p, "Track").frame(spark)
     assert(tracks.rdd.getNumPartitions > 1,
       "a 3503-row table at 1024-byte pages must split into subtrees")
     val t = tracks.collect()
@@ -105,7 +105,7 @@ class SqliteFileSpec extends SparkSpec {
     assert(first.getString(8) == "0.99") // NUMERIC stored as float
 
     // composite table-level PK: both columns stored, no rowid alias
-    val pt = SqliteSource.read(spark, p, "PlaylistTrack").collect()
+    val pt = SqliteSource.scan(p, "PlaylistTrack").frame(spark).collect()
     assert(pt.length == 8715)
     assert(pt.forall(r => r.getString(0) != null && r.getString(1) != null))
     val cat = SqliteSource.introspect(p)
@@ -177,7 +177,7 @@ class SqliteFileSpec extends SparkSpec {
     // TEXT affinity). cl-sqlite raised a decoding error here; this
     // reader is serial-type-faithful, so the value surfaces as bytea hex
     // with ZERO byte loss — no decode, no error, no replacement chars
-    val rows = SqliteSource.read(spark, fixture("bad-utf8.db"), "files")
+    val rows = SqliteSource.scan(fixture("bad-utf8.db"), "files").frame(spark)
       .collect().map(r => (r.getString(0), r.getString(1)))
       .sortBy(_._1.toInt)
     assert(rows.toSeq == Seq(
@@ -219,11 +219,11 @@ class SqliteFileSpec extends SparkSpec {
     val p = fixture("storage.sqlite")
     val cat = SqliteSource.introspect(p)
     assert(cat.length == 9) // 10 tables minus sqlite_sequence (internal)
-    val users = SqliteSource.read(spark, p, "auth_user").collect()
+    val users = SqliteSource.scan(p, "auth_user").frame(spark).collect()
     assert(users.length == 3)
     val first = users.minBy(_.getString(0).toInt)
     assert(first.getString(1) == "Peter" && first.getString(2) == "Govers")
-    assert(SqliteSource.read(spark, p, "auth_event").count() == 15)
+    assert(SqliteSource.scan(p, "auth_event").frame(spark).count() == 15)
   }
 
   test("Chinook migrates whole: 11 tables, 15,607 rows, LOAD DATABASE " +
@@ -428,7 +428,7 @@ class SqliteFileSpec extends SparkSpec {
       """CREATE TABLE t (id INTEGER PRIMARY KEY, i INTEGER, r REAL,
         | s TEXT, b BLOB)""".stripMargin, rows.iterator)
     w.save(p)
-    val got = SqliteSource.read(spark, p, "t").collect()
+    val got = SqliteSource.scan(p, "t").frame(spark).collect()
       .map(r => (0 until 5).map(r.getString)).sortBy(_(0).toLong)
     def hex(b: Array[Byte]): String =
       "\\x" + b.map(x => f"${x & 0xFF}%02x").mkString
@@ -454,7 +454,7 @@ class SqliteFileSpec extends SparkSpec {
     "the distributed read partitions by root subtree") {
     val p = tmpDb("multilevel")
     SqliteGen.writeTrackDb(p, 60000)
-    val df = SqliteSource.read(spark, p, "Track")
+    val df = SqliteSource.scan(p, "Track").frame(spark)
     assert(df.rdd.getNumPartitions > 1,
       s"expected a subtree split, got ${df.rdd.getNumPartitions}")
     import org.apache.spark.sql.functions._
@@ -486,7 +486,7 @@ class SqliteFileSpec extends SparkSpec {
     w.save(p)
     assert(new java.io.File(p).length() > n.toLong,
       "chain pages must be on disk")
-    val rows = SqliteSource.read(spark, p, "blobs").collect()
+    val rows = SqliteSource.scan(p, "blobs").frame(spark).collect()
     assert(rows.length == 1)
     val hexStr = rows(0).getString(1)
     assert(hexStr.length == 2 + 2 * n)
@@ -526,7 +526,7 @@ class SqliteFileSpec extends SparkSpec {
       groups.reverse.foreach(raf.write)
     } finally raf.close()
     val ex = intercept[Exception] {
-      SqliteSource.read(spark, p, "t").collect()
+      SqliteSource.scan(p, "t").frame(spark).collect()
     }
     def rootCause(t: Throwable): Throwable =
       if (t.getCause == null || t.getCause == t) t else rootCause(t.getCause)
@@ -543,7 +543,7 @@ class SqliteFileSpec extends SparkSpec {
     // (k2, k1) declared mid-table so the record order differs from
     // the declared order)
     val path = getClass.getResource("/wor.db").getPath
-    val df = graft.sources.SqliteSource.read(spark, path, "wor")
+    val df = graft.sources.SqliteSource.scan(path, "wor").frame(spark)
     assert(df.columns.toSeq == Seq("val", "k1", "note", "k2", "score"))
     val rows = df.collect()
     assert(rows.length == 500, s"got ${rows.length} rows")
@@ -559,15 +559,15 @@ class SqliteFileSpec extends SparkSpec {
     assert(big != null && big.length == 1502 && big.endsWith("50"),
       s"overflowing index payload: ${Option(big).map(_.length)}")
     // the local fast path agrees with the distributed read
-    val local = graft.sources.SqliteSource.localScanIfSmall(path, "wor")
-    assert(local.isDefined)
-    val (names, it, close) = local.get()
+    val local = graft.sources.SqliteSource.scan(path, "wor", local = true)
+    assert(local.local)
+    val stream = local.stream()
     try {
-      assert(names == Seq("val", "k1", "note", "k2", "score"))
-      val l = it.toVector
+      assert(stream.columns == Seq("val", "k1", "note", "k2", "score"))
+      val l = stream.rows.toVector
       assert(l.length == 500)
-      assert(l.map(_(1).toLong).toSet == (1L to 500L).toSet)
-    } finally close()
+      assert(l.map(_(1).toString.toLong).toSet == (1L to 500L).toSet)
+    } finally stream.close()
     // introspection: the composite PK comes through for target DDL
     val tbl = graft.sources.SqliteSource.introspect(path,
       rowCounts = true).find(_.name == "wor").get

@@ -189,7 +189,7 @@ class SqliteWorFuzzSpec extends SparkSpec {
     assert(query1(bin, db, "SELECT count(*) FROM fz")
       == ledger.size.toString, s"seed $seed: script did not apply")
 
-    val df = graft.sources.SqliteSource.read(spark, db.toString, "fz")
+    val df = graft.sources.SqliteSource.scan(db.toString, "fz").frame(spark)
     assert(df.columns.toSeq == (0 until ncols).map(c => s"c$c"),
       s"seed $seed")
     val got = df.collect()
