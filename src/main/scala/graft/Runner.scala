@@ -95,13 +95,14 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
               baseDir: String = "."): Seq[TableStats] =
     runFileWith(() => spark, text, baseDir)
 
-  /** [[runFile]] with the SparkSession supplied lazily: database
-    * migrations touch Spark only at their first table read, so a
-    * caller can start session creation on a background thread (the
-    * CLI main does) and overlap the 2–3 s boot with source
-    * introspection, the custom-type closure and the whole pre-DDL
-    * phase. `sparkF` must be thread-safe and idempotent (a join on a
-    * completed future / a lazy val). */
+  /** [[runFile]] with the SparkSession supplied lazily. File loads call
+    * `sparkF` at once. A database load calls it only for reads that
+    * need Spark — views, DISTRIBUTE backfills, `exactly once`, or a
+    * cluster master's multi-split tables — and then calls it first
+    * from a background thread before introspection, so a lazy boot
+    * overlaps the catalog and DDL phases; under a local master a load
+    * of plain tables never calls it. `sparkF` must be thread-safe and
+    * idempotent (a join on a future or a lazy val). */
   def runFileWith(sparkF: () => SparkSession, text: String,
                   baseDir: String = "."): Seq[TableStats] = {
     // baseDir also resolves EXECUTE 'file.sql' references at parse time
@@ -783,9 +784,10 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
     * headline command, end-to-end with no driver jars: the URI's
     * [[graft.sources.DbSource]] introspects the source catalog, which
     * runs through the cast engine and [[graft.orchestration.Migrator]];
-    * each table is read as its source's scan plans it (driver-local
-    * when it fits one split, else distributed) and COPYed through this
-    * Runner's endpoint factory. WITH options map to the Migrator's
+    * each table is read as its source's scan plans it — on driver
+    * threads, or as a Spark job for views, backfills, `exactly once`
+    * and a cluster master's multi-split tables — and COPYed through
+    * this Runner's endpoint factory. WITH options map to the Migrator's
     * surface; BEFORE LOAD DO ran already (runCommand), AFTER LOAD DO /
     * FINALLY run after this returns, AFTER CREATE SCHEMA DO is placed
     * by the Migrator between DDL and data. Here live only the Migrator
@@ -804,6 +806,31 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
         s"LOAD DATABASE needs a URI source, got $other")
     }
     val wantViews = cmd.materializeAllViews || cmd.materializeViews.nonEmpty
+    // DISTRIBUTE (citus.lisp:250-340): rules with an FK chain BACKFILL
+    // the distribution key — the target table gains the key column and
+    // its data is the chain join ([[graft.operators.Citus]]); the
+    // create_distributed_table / create_reference_table DDL runs
+    // between schema creation and the data phase (afterSchema slot)
+    val backfill: Map[String, Ast.DistributeUsing] =
+      cmd.distribute.collect {
+        case r: Ast.DistributeUsing if r.from.nonEmpty =>
+          r.table.toLowerCase -> r
+      }.toMap
+    val exactlyOnce = cmd.boolOption("exactly once")
+    // under a local master every plain table streams on driver threads
+    // (a Spark task would be a thread of this JVM too); views, backfill
+    // joins and exactly-once stages need Spark, and so may a cluster
+    // master's tables — start that boot now, behind introspection and
+    // the DDL phase, instead of at the first read
+    val localMaster = Sessions.localMaster
+    if (!dryRun && !cmd.boolOption("schema only") &&
+        (!localMaster || exactlyOnce || wantViews || backfill.nonEmpty)) {
+      val boot = new Thread(() =>
+        try sparkF() catch { case scala.util.control.NonFatal(_) => () },
+        "graft-spark-boot")
+      boot.setDaemon(true)
+      boot.start()
+    }
     // reference "fetch meta data" pre entry (core.clj:513-514): the
     // source-catalog introspection wall, rows = tables discovered
     val fetchT0 = System.nanoTime()
@@ -846,16 +873,6 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
       src.preflight(tables.filter(t => graft.catalog.CatalogRewrite
         .kept(t.schema, t.name, cmd.includingOnly, cmd.excludingOnly)))
 
-      // DISTRIBUTE (citus.lisp:250-340): rules with an FK chain BACKFILL
-      // the distribution key — the target table gains the key column and
-      // its data is the chain join ([[graft.operators.Citus]]); the
-      // create_distributed_table / create_reference_table DDL runs
-      // between schema creation and the data phase (afterSchema slot)
-      val backfill: Map[String, Ast.DistributeUsing] =
-        cmd.distribute.collect {
-          case r: Ast.DistributeUsing if r.from.nonEmpty =>
-            r.table.toLowerCase -> r
-        }.toMap
       // catalog as INTROSPECTED (no prepended key) — the backfill
       // dataflow resolves fkeys and source fields from it
       val sourceCat = Catalog(uri,
@@ -895,7 +912,6 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
         customTypes = src.customTypes,
         searchPath = src.searchPath,
         pgNativeDefaults = src.pgNativeDefaults)
-      val exactlyOnce = cmd.boolOption("exactly once")
       val migrator = new graft.orchestration.Migrator(
         executeDdl = executeDdl,
         loadTable = (t, setup) => {
@@ -903,8 +919,10 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
           val rule = backfill.get(t.sourceName.toLowerCase)
           // views, DISTRIBUTE backfills (the join dataflow) and
           // exactly-once loads (their stages need Spark's task
-          // attempts) always read distributed; any other table's scan
-          // decides whether it streams on the driver
+          // attempts) always read distributed; any other table streams
+          // its splits on driver threads under a local master, and
+          // under a cluster master when it has one split (a single
+          // Spark task would gain nothing)
           val plan =
             if (isView || rule.isDefined || exactlyOnce) None
             else Some(src.scan(t, isView = false, local = true))
@@ -916,7 +934,7 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
             if (hasGen) t.columns.filter(_.generated.isEmpty).map(_.name)
             else Nil,
             generated = hasGen,
-            local = plan.filter(_.local),
+            driver = plan.filter(p => localMaster || p.splits.length == 1),
             df = rule match {
               case Some(rule) =>
                 val chain = rule.table +: rule.from
@@ -1023,7 +1041,7 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
       else rawFileNames.getOrElse(cols)
         .map(graft.catalog.Identifiers(_, fileNameCase))
     val (sent, rejected, bytes) = writeTable(table, copyCols,
-      generated = false, local = None, df = df, sessionSql,
+      generated = false, driver = None, df = df, sessionSql,
       rejectName = table, cmd)
     // summary label: a qualified TARGET TABLE already carries its
     // schema — don't prefix "public." on top (public.public.t)
@@ -1038,8 +1056,8 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
   /** Copy one table's rows into PostgreSQL — the one place a table's
     * sink is chosen, from the command's `copy binary`, `exactly once`,
     * `on error stop` and `batch rows / batch size` options: the
-    * driver-local [[graft.sinks.LocalCopy]] for a small table's local
-    * scan, the staged [[graft.sinks.ExactlyOnce]] publish, or the
+    * driver route [[graft.sinks.LocalCopy]] for a database table's
+    * scan plan, the staged [[graft.sinks.ExactlyOnce]] publish, or the
     * distributed [[CopySink]].
     *
     * @param table qualified target: binary type lookup, stage names
@@ -1048,11 +1066,10 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
     * @param generated the target has generated columns, which
     *   `copyCols` leaves out: COPY TEXT only, and exactly-once stages
     *   and publishes carry `copyCols` only
-    * @param local a small table's driver-local
-    *   [[graft.sources.ScanPlan]], streamed on the calling thread;
-    *   never given with exactly once, whose stages need Spark's task
-    *   attempts
-    * @param df the distributed rows, built only when no local scan
+    * @param driver a database table's [[graft.sources.ScanPlan]], its
+    *   splits streamed on driver threads; never given with exactly
+    *   once, whose stages need Spark's task attempts
+    * @param df the distributed rows, built only when no driver plan
     *   applies; a line reader's [[graft.sources.TaggedLines]] frame
     *   has its parse rejects filed and counted by the sink
     * @param rejectName rejects land under `<root>/<rejectName>.dat`
@@ -1060,11 +1077,11 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
     * @return (sent, rejected, bytes) */
   private def writeTable(
       table: String, copyCols: Seq[String], generated: Boolean,
-      local: Option[graft.sources.ScanPlan[_]],
+      driver: Option[graft.sources.ScanPlan[_]],
       df: => org.apache.spark.sql.DataFrame,
       sessionSql: Seq[String], rejectName: String,
       cmd: Ast.LoadCommand): (Long, Long, Long) = {
-    import graft.sinks.{ExactlyOnce, LocalCopy, PgBinary, PgWire}
+    import graft.sinks.{ExactlyOnce, LocalCopy, PgBinKind, PgBinary, PgWire}
     val exactlyOnce = cmd.boolOption("exactly once")
     val onErrorStop = cmd.boolOption("on error stop")
     val maxRows = batchRowsOf(cmd); val maxBytes = batchBytesOf(cmd)
@@ -1073,36 +1090,36 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
       Seq(d, CopySink.logDirFor(d)).foreach(Runner.deleteTree)
     }
     val binaryMode = cmd.option("copy binary")
-    // small-table fast path: a local scan streams driver-side through
-    // the sink's own partition loop — no Spark job at all
-    val opened = local.map(_.stream())
-    try {
-      lazy val frame = df
-      // `WITH copy binary`: the target's column encoders, resolved once
-      // (a positional load's frame must cover the whole table)
-      val kinds =
-        if (generated) { binaryGeneratedFallback(table, binaryMode); None }
-        else binaryKinds(table, copyCols,
-          opened.fold(graft.sources.TaggedLines.untagged(frame).columns.length)(
-            _.columns.length), binaryMode)
-      // closures below ship to executors inside the sink's endpoint
-      // factory: they capture LOCALS only (a field would drag the
-      // non-serializable Runner, df.columns the DataFrame)
-      val ef = if (kinds.isDefined) binaryEndpointFactory else endpointFactory
-      def direct = ef(PgWire.copyTarget(table, copyCols), sessionSql)
-      val rejectRender =
-        kinds.map(k => PgBinary.frameToTextLine(_: Array[Byte], k)).orNull
-      def renderer =
-        kinds.map(PgBinary.renderer).getOrElse(CopySink.textRenderer)
-      opened match {
-        case Some(stream) =>
-          LocalCopy.write(stream.rows, direct,
-            render = kinds.map(LocalCopy.binaryRender)
-              .getOrElse(LocalCopy.textRender),
-            rejectDir = rejectDir, rejectRender = rejectRender,
-            maxRows = maxRows, maxBytes = maxBytes,
-            onErrorStop = onErrorStop)
-        case None if exactlyOnce =>
+    // `WITH copy binary`: the target's column encoders, resolved once
+    // from the row width (a positional load must cover the whole table)
+    def kindsFor(width: Int) =
+      if (generated) { binaryGeneratedFallback(table, binaryMode); None }
+      else binaryKinds(table, copyCols, width, binaryMode)
+    // closures below ship to executors inside the sink's endpoint
+    // factory: they capture LOCALS only (a field would drag the
+    // non-serializable Runner, df.columns the DataFrame)
+    def endpoints(kinds: Option[Seq[PgBinKind]]) =
+      (if (kinds.isDefined) binaryEndpointFactory else endpointFactory)(
+        PgWire.copyTarget(table, copyCols), sessionSql)
+    def rejectRenderOf(kinds: Option[Seq[PgBinKind]]) =
+      kinds.map(k => PgBinary.frameToTextLine(_: Array[Byte], k)).orNull
+    driver match {
+      case Some(plan) =>
+        LocalCopy.write(plan, width => {
+          val kinds = kindsFor(width)
+          LocalCopy.Sink(endpoints(kinds),
+            kinds.map(LocalCopy.binaryRender).getOrElse(LocalCopy.textRender),
+            rejectRenderOf(kinds))
+        }, rejectDir = rejectDir, maxRows = maxRows, maxBytes = maxBytes,
+          onErrorStop = onErrorStop)
+      case None =>
+        val frame = df
+        val kinds =
+          kindsFor(graft.sources.TaggedLines.untagged(frame).columns.length)
+        val rejectRender = rejectRenderOf(kinds)
+        val renderer =
+          kinds.map(PgBinary.renderer).getOrElse(CopySink.textRenderer)
+        if (exactlyOnce) {
           // per-attempt stage tables + one atomic publish. The stage
           // clones the target's layout (LIKE), so it takes the SAME
           // COPY column list and binary frames; rejected rows get the
@@ -1110,6 +1127,8 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
           // can double-publish). With generated columns, LIKE would
           // copy their NOT NULL but not their expressions: stage and
           // publish the real columns only — the target recomputes.
+          val ef =
+            if (kinds.isDefined) binaryEndpointFactory else endpointFactory
           val colList = copyCols.map(PgWire.quoteIdent).mkString(", ")
           ExactlyOnce.write(frame, table,
             exec = sql => executeDdl(sql, sessionSql),
@@ -1133,12 +1152,12 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
             maxRows = maxRows, maxBytes = maxBytes,
             onErrorStop = onErrorStop, renderer = renderer,
             rejectDir = rejectDir, rejectRender = rejectRender)
-        case None =>
-          new CopySink(direct, maxRows = maxRows, maxBytes = maxBytes,
-            onErrorStop = onErrorStop, rejectDir = rejectDir,
-            renderer = renderer, rejectRender = rejectRender).write(frame)
-      }
-    } finally opened.foreach(_.close())
+        } else
+          new CopySink(endpoints(kinds), maxRows = maxRows,
+            maxBytes = maxBytes, onErrorStop = onErrorStop,
+            rejectDir = rejectDir, renderer = renderer,
+            rejectRender = rejectRender).write(frame)
+    }
   }
 }
 
@@ -1368,15 +1387,20 @@ object Runner {
     val target = first.targetUri.getOrElse(
       throw new IllegalArgumentException(s"$file has no INTO target"))
     val wire = graft.sinks.PgWire.connParams(target, pctDecode)
-    // session creation starts NOW on a background thread and joins at
-    // the first Spark use — a database migration's introspection +
-    // custom-type closure + pre-DDL phase (its first ~second) overlaps
-    // the 2–3 s Spark boot instead of waiting behind it
-    val sparkFut = java.util.concurrent.CompletableFuture.supplyAsync(
-      () => {
+    // the session boots on a background thread. A file load needs it
+    // for its first plan, so its boot starts now, behind the target
+    // connection and the BEFORE LOAD DDL; a database load starts it
+    // only when one of its reads needs Spark (runDatabase), and a load
+    // of plain tables under a local master never builds one
+    @volatile var booted = false
+    lazy val boot = {
+      booted = true
+      java.util.concurrent.CompletableFuture.supplyAsync(() => {
         val b = Sessions.builder("graft-load", Sessions.cpus)
         sys.env.get("SPARK_MASTER").fold(b)(b.master).getOrCreate()
       })
+    }
+    if (first.loadType != "database") boot
     val t0 = System.nanoTime()
     // driver-free by default: DDL and COPY both speak the wire protocol
     // directly (no pgjdbc jar needed anywhere on the cluster). DDL
@@ -1401,15 +1425,14 @@ object Runner {
           sessionSql, binary = true),
       dryRun = dryRun)
     val stats =
-      try runner.runFileWith(() => sparkFut.get(), text, baseDir)
+      try runner.runFileWith(() => boot.get(), text, baseDir)
       finally {
         ddlExec.close() // never throws
-        // stop Spark only when boot actually succeeded: an
-        // all-small-table migration can finish without ever forcing
-        // the session, and a failed background boot must not mask the
+        // stop a session whose boot started, waiting for a boot still
+        // running; a failed background boot must not mask the
         // migration's own outcome from this finally
         try {
-          if (!sparkFut.isCompletedExceptionally) sparkFut.get().stop()
+          if (booted && !boot.isCompletedExceptionally) boot.get().stop()
         } catch {
           case scala.util.control.NonFatal(e) =>
             System.err.println(s"[graft] spark stop: ${e.getMessage}")

@@ -9,6 +9,13 @@ object Sessions {
   def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
+  /** Whether the CLI's session runs in this JVM: `SPARK_MASTER` (its
+    * override of `local[cpus]`) unset, `local` or `local[…]`. A Spark
+    * task is then a thread of this process, so a database load streams
+    * its tables on driver threads instead ([[graft.sinks.LocalCopy]]). */
+  def localMaster: Boolean =
+    sys.env.get("SPARK_MASTER").forall(_.matches("local(\\[[^\\]]*\\])?"))
+
   /** `local[cpus]` with `cpus` shuffle partitions, no web UI (a CLI or
     * batch main has no use for it, and skipping it saves ~0.5 s per
     * start), the session zone pinned to UTC (timestamp rendering —

@@ -81,8 +81,9 @@ final case class Table(
     /** PG source relkind 'p' — a partitioned PARENT. Parents own no
       * storage (relpages = 0 always) and have no ctid system column,
       * so every read route must go through the leaf partitions (or a
-      * predicate-free stream), never LocalCopy-by-relpages or a
-      * `WHERE ctid >= …` scan (pgsql.clj:206-208 has the same blind
+      * predicate-free stream), never a whole-table stream sized by
+      * relpages or a `WHERE ctid >= …` scan (pgsql.clj:206-208 has the
+      * same blind
       * spot — relpages-driven splits read a parent as one range). */
     partitioned: Boolean = false) {
 

@@ -77,8 +77,9 @@ final case class Summary(preDdl: Seq[String], tables: Seq[TableStats],
 }
 
 /** The migrate-database orchestrator (migrate-database.lisp:326-574;
-  * clojure core.clj:411-1104), Spark-adapted: per-table loads are
-  * independent Spark jobs submitted from a driver thread pool; index
+  * clojure core.clj:411-1104), Spark-adapted: per-table loads run on a
+  * driver thread pool (each streams its splits on driver threads or
+  * submits a Spark job, as `loadTable` decides); index
   * builds for a finished table overlap the remaining copies on a second
   * pool; PK attach / FKs / sequence resets run after everything.
   *

@@ -296,6 +296,46 @@ object Dedup {
     verifyJaccardRows(cand, rows, rows, threshold)
   }
 
+  /** One action counts AND collects the (id_a, id_b) pairs of `f`
+    * packed as [a0, b0, a1, b1, …] in partition order — or, when more
+    * than `cap` pairs exist, only the count (null array), for the
+    * distributed fallback. Each partition counts all its rows but packs
+    * at most `cap` pairs ([[packPartition]]), so the driver receives at
+    * most P × 16·cap bytes, and nothing from a partition that alone is
+    * past the cap. */
+  private[graft] def countAndPack(f: DataFrame,
+                                  cap: Long): (Long, Array[Long]) = {
+    val parts = f.select(col("id_a"), col("id_b")).rdd
+      .mapPartitions(it => Iterator.single(packPartition(it, cap)))
+      .collect()
+    val total = parts.iterator.map(_._1).sum
+    if (total > cap) (total, null)
+    else {
+      val out = new Array[Long](2 * total.toInt)
+      var off = 0
+      parts.foreach { case (_, a) =>
+        System.arraycopy(a, 0, out, off, a.length); off += a.length
+      }
+      (total, out)
+    }
+  }
+
+  /** One partition's half of [[countAndPack]]: (row count, the
+    * (id_a, id_b) pairs packed). A partition past `cap` makes the total
+    * past it too, so its pairs would be discarded: it lets go of what
+    * it packed and returns an empty array. */
+  private[graft] def packPartition(rows: Iterator[org.apache.spark.sql.Row],
+                                   cap: Long): (Long, Array[Long]) = {
+    var n = 0L
+    var b = new scala.collection.mutable.ArrayBuilder.ofLong
+    rows.foreach { r =>
+      n += 1L
+      if (n <= cap) { b += r.getLong(0); b += r.getLong(1) }
+      else b = null
+    }
+    (n, if (b == null) Array.emptyLongArray else b.result())
+  }
+
   /** MinHash+LSH dedup WITHOUT materializing the intra-group pair set —
     * the pair-capped mode for pathological duplication density.
     *
@@ -401,39 +441,6 @@ object Dedup {
         System.arraycopy(a, 0, out, off, a.length); off += a.length
       }
       out
-    }
-    // ONE action counts AND collects (round 22; was a count job + a
-    // separate packed-collect job over the same cached frame). Driver
-    // cap analysis: each partition counts ALL its rows but packs only
-    // the first `cap` pairs, so when the total is ≤ cap no partition
-    // can have truncated and the arrays are complete exactly when they
-    // are used; when the total overflows, the arrays are discarded for
-    // the distributed fallback and the transient worst case is
-    // P × 16·cap bytes (32 MB/partition at the 2M cap) — reached only
-    // when MANY partitions are individually past the cap, i.e. when
-    // the total is far past it. Same budget class as the broadcast
-    // sides this operator already holds.
-    def countAndPack(f: DataFrame, cap: Long): (Long, Array[Long]) = {
-      val parts = f.select(col("id_a"), col("id_b")).rdd.mapPartitions {
-        it =>
-          var n = 0L
-          val b = new scala.collection.mutable.ArrayBuilder.ofLong
-          it.foreach { r =>
-            n += 1L
-            if (n <= cap) { b += r.getLong(0); b += r.getLong(1) }
-          }
-          Iterator.single((n, b.result()))
-      }.collect()
-      val total = parts.iterator.map(_._1).sum
-      if (total > cap) (total, null)
-      else {
-        val out = new Array[Long](2 * total.toInt)
-        var off = 0
-        parts.foreach { case (_, a) =>
-          System.arraycopy(a, 0, out, off, a.length); off += a.length
-        }
-        (total, out)
-      }
     }
     // the packed driver path reads ids as primitive longs; any other
     // id type rides the type-agnostic distributed fallback

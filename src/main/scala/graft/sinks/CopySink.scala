@@ -190,7 +190,8 @@ final class CopySink(
 
 object CopySink {
   /** One partition's COPY — the loop both the distributed sink (per
-    * Spark partition) and [[LocalCopy]] (on the driver, pid 0) run:
+    * Spark partition) and [[LocalCopy]] (per split, on a driver
+    * thread) run:
     * rendered rows fill a [[Batch]], each full batch goes through
     * [[BatchRetry.sendWithRecovery]], and every rejected row lands in
     * `<rejectDir>/part-<pid>.dat` (replayable COPY TEXT) — or, for a

@@ -3,36 +3,33 @@ package graft.sinks
 import graft.sources.CopyText
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Driver-local COPY fast path for small tables — the per-table
-  * Spark-job floor amortization (reference: migrate-database.lisp:480-507
-  * schedules every table into one shared kernel, paying a millisecond
-  * per-table floor; a Spark job submit + task round per 9-row table
-  * pays ~0.1 s uncontended and whole seconds when the scheduler is
-  * saturated by a big table's partitions).
+/** The driver route of a database table: each split of its
+  * [[graft.sources.ScanPlan]] streams on a driver thread through the
+  * distributed sink's own partition loop, [[CopySink.writePartition]],
+  * with the split's index as partition id — the same opener, batching,
+  * per-row recovery, reject files (`part-<pid>.dat` and `.log`) and
+  * endpoint factories (text or COPY BINARY) as the Spark route, with
+  * no job, no task serialization and no session.
   *
-  * A table its source's `scan` plans as a single split
-  * ([[graft.sources.ScanPlan]]`.local`: one ctid chunk, below the
-  * key-range guard, one B-tree subtree) would run as ONE Spark task
-  * anyway — zero parallelism is lost by reading its stream on the
-  * driver (the Migrator's copy pool thread, so `workers` small tables
-  * still load concurrently), opened by the same opener a Spark task
-  * would use.
-  * The rows then run through the distributed sink's own partition
-  * loop, [[CopySink.writePartition]], as partition 0: the same
-  * batching, per-row recovery, reject files (`part-00000.dat` and
-  * `.log`) and endpoint factories (text or COPY BINARY).
+  * Under `local[n]` a Spark task is a thread of this JVM too, so the
+  * route gives up no parallelism: the reference likewise streams every
+  * table through one kernel of worker threads
+  * (migrate-database.lisp:480-507). At most [[graft.Sessions.cpus]]
+  * split streams run at once in the JVM, the slot count `local[cpus]`
+  * gives Spark tasks; the Migrator's copy threads wait for their
+  * table's streams.
   *
-  * What stays here is rendering, the scalar twin of the sink's codegen
-  * renderers, kept equal by LocalCopySpec: [[CopyText.formatRow]] is
-  * the scalar spec the codegen `lineColumn` is pinned to
+  * What else stays here is rendering, the scalar twin of the sink's
+  * codegen renderers, kept equal by LocalCopySpec: [[CopyText.formatRow]]
+  * is the scalar spec the codegen `lineColumn` is pinned to
   * (PgLiteralParitySpec), and the binary path composes the very same
   * [[PgBinary.encodeField]] the codegen expression calls.
   */
 object LocalCopy {
 
-  /** Tables loaded through the local path since JVM start — a
-    * diagnostic/test counter (the live fixture spec asserts the fast
-    * path actually ran; it is not part of any user-facing contract). */
+  /** Tables loaded through the driver route since JVM start — a
+    * diagnostic/test counter (specs assert the route actually ran; it
+    * is not part of any user-facing contract). */
   val loads = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** A scan row in catalyst form (one `UTF8String` or null per column)
@@ -84,28 +81,85 @@ object LocalCopy {
     }
   }
 
-  /** Load `rows` through one endpoint on the calling thread — the
-    * sink's partition loop with partition id 0, so reject files land
-    * as `part-00000.dat`, exactly where the distributed path would put
-    * a single partition's.
+  /** Where a table's streams go, chosen once its column count is known
+    * (a COPY BINARY load resolves its encoders against it).
     *
+    * @param endpointFactory the endpoint of one split, by partition id
     * @param rejectRender server-rejected SENT bytes → replayable COPY
     *   TEXT (binary frames need [[PgBinary.frameToTextLine]]; null =
-    *   the sent bytes are already text)
+    *   the sent bytes are already text) */
+  final case class Sink(endpointFactory: Int => CopyEndpoint,
+                        render: Render = textRender,
+                        rejectRender: Array[Byte] => Array[Byte] = null)
+
+  /** The driver's split-stream slots; idle threads exit. */
+  private lazy val slots: java.util.concurrent.ExecutorService = {
+    val n = graft.Sessions.cpus
+    val threads = new java.util.concurrent.atomic.AtomicInteger(0)
+    val pool = new java.util.concurrent.ThreadPoolExecutor(n, n,
+      30L, java.util.concurrent.TimeUnit.SECONDS,
+      new java.util.concurrent.LinkedBlockingQueue[Runnable](),
+      (r: Runnable) => {
+        val t = new Thread(r, s"graft-copy-stream-${threads.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+    pool.allowCoreThreadTimeOut(true)
+    pool
+  }
+
+  /** Load every split of `plan`, one stream per split on the driver's
+    * slots, and wait for all of them. The first stream to open decides
+    * the [[Sink]] from its column count. When a split fails, the
+    * splits not yet started are dropped, the running ones finish, and
+    * the first failure is rethrown.
+    *
     * @return (rowsSent, rowsRejected, bytesSent) — same accounting as
     *   the distributed sink */
-  def write(rows: Iterator[Array[Any]],
-            endpointFactory: Int => CopyEndpoint,
-            render: Render = textRender,
+  def write(plan: graft.sources.ScanPlan[_],
+            sink: Int => Sink,
             rejectDir: Option[String] = None,
-            rejectRender: Array[Byte] => Array[Byte] = null,
             maxRows: Int = 25000,
             maxBytes: Long = 20L << 20,
             onErrorStop: Boolean = false): (Long, Long, Long) = {
-    val result = CopySink.writePartition[(Array[Byte], Array[Byte])](
-      0, rows.map(render), _._1, _._2, _ => null, endpointFactory,
-      maxRows, maxBytes, onErrorStop, rejectDir, rejectRender)
+    val lock = new Object
+    var chosen: Sink = null
+    def sinkFor(width: Int): Sink = lock.synchronized {
+      if (chosen == null) chosen = sink(width)
+      chosen
+    }
+    val streams = plan.splits.indices.map { pid =>
+      slots.submit(new java.util.concurrent.Callable[(Long, Long, Long)] {
+        def call(): (Long, Long, Long) = {
+          val s = plan.stream(pid)
+          try {
+            val k = sinkFor(s.columns.length)
+            CopySink.writePartition[(Array[Byte], Array[Byte])](
+              pid, s.rows.map(k.render), _._1, _._2, _ => null,
+              k.endpointFactory, maxRows, maxBytes, onErrorStop, rejectDir,
+              k.rejectRender)
+          } finally s.close()
+        }
+      })
+    }
+    var failure: Throwable = null
+    val totals = streams.map { f =>
+      try f.get()
+      catch {
+        case e: java.util.concurrent.ExecutionException =>
+          if (failure == null) {
+            failure = e.getCause
+            streams.foreach(_.cancel(false))
+          }
+          (0L, 0L, 0L)
+        case _: java.util.concurrent.CancellationException => (0L, 0L, 0L)
+        case e: InterruptedException =>
+          streams.foreach(_.cancel(true))
+          throw e
+      }
+    }
+    if (failure != null) throw failure
     loads.incrementAndGet()
-    result
+    (totals.map(_._1).sum, totals.map(_._2).sum, totals.map(_._3).sum)
   }
 }

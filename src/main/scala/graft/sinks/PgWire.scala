@@ -240,6 +240,9 @@ final class PgWireConnection(params: PgWire.ConnParams)
     new BufferedInputStream(sock.getInputStream, 1 << 16))
   private val out = new DataOutputStream(
     new BufferedOutputStream(sock.getOutputStream, 1 << 16))
+  // ParameterStatus values the server reported during startup
+  private val serverParams =
+    scala.collection.mutable.Map.empty[String, String]
 
   // a failed startup (wrong password, unsupported auth, server error)
   // must not leak the connected socket — nobody can call close() on a
@@ -332,7 +335,11 @@ final class PgWireConnection(params: PgWire.ConnParams)
       val (tpe, payload) = readMsg()
       tpe match {
         case 'R' => handleAuth(payload)
-        case 'S' | 'K' | 'N' => () // parameter status / key data / notice
+        case 'S' =>
+          val nul = payload.indexOf(0.toByte)
+          serverParams(new String(payload, 0, nul, UTF_8)) = new String(
+            payload, nul + 1, payload.length - nul - 2, UTF_8)
+        case 'K' | 'N' => () // key data / notice
         case 'Z' => ready = true
         case 'E' => throw parseError(payload)
         case other =>
@@ -415,6 +422,10 @@ final class PgWireConnection(params: PgWire.ConnParams)
     require(serverFinal == expected, "server signature mismatch")
     // AuthenticationOk arrives as the next 'R' frame via the startup loop
   }
+
+  /** A setting the server reported at startup (`server_version`,
+    * `server_encoding`, …), if it did. */
+  def serverParameter(name: String): Option[String] = serverParams.get(name)
 
   // ---- queries ----
 

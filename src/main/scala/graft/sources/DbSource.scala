@@ -15,7 +15,10 @@ import graft.sinks.{PgWire, PgWireConnection}
   * table how its rows are read. The connection parameters are parsed
   * once, when the value is built.
   *
-  * @param spark the session distributed reads run in, made on first use
+  * @param spark the session distributed reads run in: views, DISTRIBUTE
+  *   backfills, exactly-once loads and reads under a cluster master.
+  *   It is called only when such a read starts, so a load whose tables
+  *   all stream on driver threads never builds a session
   */
 abstract class DbSource(protected val spark: () => SparkSession) {
 
@@ -54,9 +57,10 @@ abstract class DbSource(protected val spark: () => SparkSession) {
     * when a column cannot be read at all. */
   def preflight(tables: Seq[Table]): Unit = ()
 
-  /** Decides how `t` is read: its columns, its splits and, when the
-    * caller can stream a table on the driver (`local`), whether this
-    * one fits a single split and should. */
+  /** Decides how `t` is read: its columns and its splits. A `local`
+    * caller reads the plan on driver threads, so a table that fits one
+    * split may be planned as a bare stream whose columns the stream
+    * reports. */
   def scan(t: Table, isView: Boolean, local: Boolean): ScanPlan[_]
 
   /** `t`'s rows as a distributed frame. */
@@ -121,7 +125,7 @@ object DbSource {
     def scan(t: Table, isView: Boolean, local: Boolean): ScanPlan[_] = {
       val pk = t.fields.find(_.autoIncrement).map(_.name)
       // the table's one row-count probe: it sizes the key ranges and
-      // decides the driver-local read; a keyless table never splits
+      // decides the whole-table stream; a keyless table never splits
       val rows =
         if (pk.isEmpty) 0L
         else MySqlWireSource.rowCountOf(mp, mp.database, t.sourceName)
@@ -135,18 +139,26 @@ object DbSource {
   private final class Pg(sp: PgWire.ConnParams, createsSchema: Boolean,
                          spark: () => SparkSession)
       extends DbSource(spark) {
-    val tables: Seq[Table] = PgWireSource.introspect(sp)
-    def defaults: Seq[CastRule] = DefaultCastRules.pgsql
-    // standalone user sequences and the custom-type closure are objects
-    // only a schema-creating run recreates (nextval defaults reference
-    // the sequences verbatim); data-only and create-no-tables runs skip
+    // the whole catalog over one JIT-off connection. Standalone user
+    // sequences and the custom-type closure are objects only a
+    // schema-creating run recreates (nextval defaults reference the
+    // sequences verbatim); data-only and create-no-tables runs skip
     // both catalog queries
-    override val sequences: Seq[SequenceDef] =
-      if (createsSchema) PgWireSource.introspectSequences(sp) else Nil
-    override val customTypes: Seq[CustomType] =
-      if (createsSchema) PgWireSource.introspectCustomTypes(sp) else Nil
-    override lazy val searchPath: Seq[String] =
-      if (customTypes.isEmpty) Nil else PgWireSource.searchPathOf(sp)
+    private val (introspected, seqs, types, path) =
+      PgWireSource.catalog(sp) { c =>
+        val tables = PgWireSource.introspect(c)
+        val seqs =
+          if (createsSchema) PgWireSource.introspectSequences(c) else Nil
+        val types =
+          if (createsSchema) PgWireSource.introspectCustomTypes(c) else Nil
+        (tables, seqs, types,
+          if (types.isEmpty) Nil else PgWireSource.searchPathOf(c))
+      }
+    val tables: Seq[Table] = introspected
+    def defaults: Seq[CastRule] = DefaultCastRules.pgsql
+    override def sequences: Seq[SequenceDef] = seqs
+    override def customTypes: Seq[CustomType] = types
+    override def searchPath: Seq[String] = path
     override def pgNativeDefaults: Boolean = true
     def exec(sql: String): Unit = {
       val c = new PgWireConnection(sp)
@@ -221,7 +233,7 @@ object DbSource {
       "\"" + name.replace("\"", "\"\"") + "\""
     def scan(t: Table, isView: Boolean, local: Boolean): ScanPlan[_] = {
       require(!isView, s"view ${t.sourceName} evaluates through Spark SQL")
-      SqliteSource.scan(path, t.sourceName, local = local)
+      SqliteSource.scan(path, t.sourceName)
     }
     override def frame(t: Table, isView: Boolean): DataFrame =
       if (isView) {

@@ -164,11 +164,12 @@ object MssqlWireSource {
   /** Plan the read of `schema.table` over TDS. With an integer
     * `partitionKey` (identity / clustered integer PK from
     * introspection) and at least `2 * rowsPerRange` rows it splits into
-    * one [[RangeSplit.predicates]] WHERE-range per Spark partition —
+    * one [[RangeSplit.predicates]] WHERE-range per split —
     * BEYOND the reference, whose FreeTDS path is single-stream
     * (src/sources/mssql/mssql.lisp): at 100× the biggest table this is
     * the difference between one stream and N. Otherwise it is one full
-    * scan, which a `local` caller streams on the driver. `selectCols`
+    * scan, which a `local` caller (a driver read) sends with no WHERE
+    * clause. `selectCols`
     * is (server-side expression, output name) pairs —
     * [[ColumnSqlExpressions.mssqlPair]] output for type-stable
     * rendering; when empty, columns and their wire types are discovered
@@ -204,11 +205,11 @@ object MssqlWireSource {
       }
     if (local && !RangeSplit.splits(partitionKey, rowCountEstimate, rowsPerRange))
       ScanPlan(resolved.map(_._2), Seq(s"SELECT $select FROM $qtable"),
-        local = true, open)
+        open)
     else
       ScanPlan(resolved.map(_._2), RangeSplit.wheres(partitionKey,
         rowCountEstimate, rowsPerRange, quoteIdent)(
         integerBounds(params, schema, table, _)).map(pred =>
-        s"SELECT $select FROM $qtable WHERE $pred"), local = false, open)
+        s"SELECT $select FROM $qtable WHERE $pred"), open)
   }
 }

@@ -133,9 +133,9 @@ object MySqlWireSource {
   /** Plan the read of `schema.table`. With an integer `partitionKey`
     * and at least `2 * rowsPerRange` rows (the reference's guard,
     * mysql.lisp:44-47) it splits into [[RangeSplit.predicates]] key
-    * ranges, one Spark partition each; otherwise it is one full scan,
-    * which a `local` caller streams on the driver as `SELECT *` (no
-    * column probe). Distributed splits name the columns a `LIMIT 0`
+    * ranges, one split each; otherwise it is one full scan, which for
+    * a `local` caller (a driver read) is `SELECT *` with no column
+    * probe. Distributed splits name the columns a `LIMIT 0`
     * probe discovered. Every split decodes with `charsetName` (DECODING
     * TABLE NAMES MATCHING), straight to catalyst form. */
   def scan(params: MySqlWire.ConnParams, schema: String, table: String,
@@ -149,7 +149,7 @@ object MySqlWireSource {
       ScanPlan.opened(new MySqlWireConnection(params))(
         _.queryStreamData(sql, java.nio.charset.Charset.forName(charsetName)))
     if (local && !RangeSplit.splits(partitionKey, rowCountEstimate, rowsPerRange))
-      ScanPlan(Nil, Seq(s"SELECT * FROM $qtable"), local = true, open)
+      ScanPlan(Nil, Seq(s"SELECT * FROM $qtable"), open)
     else {
       val names = {
         val conn = new MySqlWireConnection(params)
@@ -161,7 +161,7 @@ object MySqlWireSource {
         rowsPerRange, quoteIdent)(integerBounds(params, schema, table, _))
       val select = names.map(quoteIdent).mkString(", ")
       ScanPlan(names, preds.map(pred =>
-        s"SELECT $select FROM $qtable WHERE $pred"), local = false, open)
+        s"SELECT $select FROM $qtable WHERE $pred"), open)
     }
   }
 }

@@ -23,6 +23,31 @@ import graft.sinks.{PgWire, PgWireConnection}
   */
 object PgWireSource {
 
+  /** Runs `read` over one catalog connection, with PostgreSQL's JIT
+    * switched off. The planner prices the catalog's recursive
+    * closures — [[IntrospectionSql.pgsqlCustomTypes]] above all — far
+    * past `jit_above_cost`, so a JIT-enabled server spends seconds
+    * compiling a query that runs in milliseconds. `jit` exists from
+    * PostgreSQL 11; older servers and Redshift (which reports
+    * `server_version` 8.0.2) get no SET, and a server that refuses the
+    * setting keeps its default. Data reads open their own connections
+    * and never see this session. */
+  def catalog[T](params: PgWire.ConnParams)(
+      read: PgWireConnection => T): T = {
+    val conn = new PgWireConnection(params)
+    try {
+      if (majorVersion(conn.serverParameter("server_version")).exists(_ >= 11))
+        try conn.simpleCommand("SET jit = off")
+        catch { case _: PgWire.PgServerError => () }
+      read(conn)
+    } finally conn.close()
+  }
+
+  /** The leading number of a `server_version` ("15.4 (Debian …)" → 15,
+    * "8.0.2" → 8). */
+  private[graft] def majorVersion(v: Option[String]): Option[Int] =
+    v.map(_.trim.takeWhile(_.isDigit)).filter(_.nonEmpty).map(_.toInt)
+
   /** Catalog introspection over the wire: runs the shared
     * [[IntrospectionSql.pgsqlColumns]] pg_catalog query through
     * [[PgWireConnection.query]] and maps the TEXT rows with
@@ -30,8 +55,10 @@ object PgWireSource {
     * migration chain: introspect + read here, DDL + COPY through
     * [[graft.sinks.PgWireCopyEndpoint]]/`simpleCommand`. */
   def introspect(params: PgWire.ConnParams)
-      : Seq[graft.catalog.Table] = {
-    val conn = new PgWireConnection(params)
+      : Seq[graft.catalog.Table] = catalog(params)(c => introspect(c))
+
+  /** [[introspect]] on an open catalog connection. */
+  def introspect(conn: PgWireConnection): Seq[graft.catalog.Table] = {
     // modern catalog columns (attgenerated PG 12+, indnullsnotdistinct
     // PG 15+) degrade per-query on older sources — the legacy shapes
     // keep identical column positions (constants), so mappers are
@@ -39,71 +66,63 @@ object PgWireSource {
     def queryOr(modern: String, legacy: String) =
       try conn.query(modern)._2
       catch { case _: PgWire.PgServerError => conn.query(legacy)._2 }
-    try {
-      val rows = queryOr(IntrospectionSql.pgsqlColumns,
-        IntrospectionSql.pgsqlColumnsLegacy)
-      val tables = IntrospectionRows.pgsqlTables(rows.map { r =>
-        IntrospectionRows.PgColumn(r(0), r(1), r(2), r(3),
-          Option(r(4)),
-          // boolean TEXT wire form is t/f
-          nullable = r(5) == "t" || r(5) == "true",
-          // tolerant of 6-column responses (test doubles serving the
-          // pre-enum-labels shape)
-          enumLabels = if (r.length > 6) Option(r(6)) else None,
-          identity = r.length > 7 && (r(7) == "a" || r(7) == "d"),
-          relkind = if (r.length > 8 && r(8) != null) r(8) else "r",
-          generated = r.length > 9 && r(9) == "s",
-          unlogged = r.length > 10 && r(10) == "u",
-          // absent column (test doubles) = legacy nextval→serial
-          ownedSeq = r.length <= 11 || r(11) == "t" || r(11) == "true")
-      })
-      val idxRows = queryOr(IntrospectionSql.pgsqlIndexes,
-        IntrospectionSql.pgsqlIndexesLegacy)
-      val (_, fkRows) = conn.query(IntrospectionSql.pgsqlFKeys)
-      val (_, tcRows) = conn.query(IntrospectionSql.pgsqlTableComments)
-      val (_, ccRows) = conn.query(IntrospectionSql.pgsqlColumnComments)
-      val (_, checkRows) = conn.query(IntrospectionSql.pgsqlChecks)
-      val (_, exclRows) = conn.query(IntrospectionSql.pgsqlExclusions)
-      IntrospectionRows.pgsqlAttachComments(
-        IntrospectionRows.pgsqlAttachConstraints(tables, idxRows, fkRows),
-        tcRows, ccRows, checkRows,
-        // tolerant of test doubles answering with null/short rows
-        exclRows.filter(r => r.length > 3 && r(1) != null && r(3) != null))
-    } finally conn.close()
+    val rows = queryOr(IntrospectionSql.pgsqlColumns,
+      IntrospectionSql.pgsqlColumnsLegacy)
+    val tables = IntrospectionRows.pgsqlTables(rows.map { r =>
+      IntrospectionRows.PgColumn(r(0), r(1), r(2), r(3),
+        Option(r(4)),
+        // boolean TEXT wire form is t/f
+        nullable = r(5) == "t" || r(5) == "true",
+        // tolerant of 6-column responses (test doubles serving the
+        // pre-enum-labels shape)
+        enumLabels = if (r.length > 6) Option(r(6)) else None,
+        identity = r.length > 7 && (r(7) == "a" || r(7) == "d"),
+        relkind = if (r.length > 8 && r(8) != null) r(8) else "r",
+        generated = r.length > 9 && r(9) == "s",
+        unlogged = r.length > 10 && r(10) == "u",
+        // absent column (test doubles) = legacy nextval→serial
+        ownedSeq = r.length <= 11 || r(11) == "t" || r(11) == "true")
+    })
+    val idxRows = queryOr(IntrospectionSql.pgsqlIndexes,
+      IntrospectionSql.pgsqlIndexesLegacy)
+    val (_, fkRows) = conn.query(IntrospectionSql.pgsqlFKeys)
+    val (_, tcRows) = conn.query(IntrospectionSql.pgsqlTableComments)
+    val (_, ccRows) = conn.query(IntrospectionSql.pgsqlColumnComments)
+    val (_, checkRows) = conn.query(IntrospectionSql.pgsqlChecks)
+    val (_, exclRows) = conn.query(IntrospectionSql.pgsqlExclusions)
+    IntrospectionRows.pgsqlAttachComments(
+      IntrospectionRows.pgsqlAttachConstraints(tables, idxRows, fkRows),
+      tcRows, ccRows, checkRows,
+      // tolerant of test doubles answering with null/short rows
+      exclRows.filter(r => r.length > 3 && r(1) != null && r(3) != null))
   }
 
   /** Standalone user sequences ([[IntrospectionSql.pgsqlSequences]])
     * — recreated on the target BEFORE the tables whose nextval
     * defaults reference them (Migrator pre phase). */
-  def introspectSequences(params: PgWire.ConnParams)
+  def introspectSequences(conn: PgWireConnection)
       : Seq[graft.catalog.SequenceDef] = {
-    val conn = new PgWireConnection(params)
-    try {
-      val (_, rows) = conn.query(IntrospectionSql.pgsqlSequences)
-      // tolerant of test doubles answering with null/short rows
-      rows.filter(r => r.length > 8 && r(2) != null && r(3) != null &&
-        r(4) != null && r(5) != null).map { r =>
-        graft.catalog.SequenceDef(
-          schema = r(0), name = r(1),
-          start = r(2).toLong, increment = r(3).toLong,
-          minValue = r(4).toLong, maxValue = r(5).toLong,
-          current = Option(r(6)).map(_.toLong),
-          cycling = r(7) == "t" || r(7) == "true",
-          cache = Option(r(8)).map(_.toLong).getOrElse(0L))
-      }.toSeq
-    } finally conn.close()
+    val (_, rows) = conn.query(IntrospectionSql.pgsqlSequences)
+    // tolerant of test doubles answering with null/short rows
+    rows.filter(r => r.length > 8 && r(2) != null && r(3) != null &&
+      r(4) != null && r(5) != null).map { r =>
+      graft.catalog.SequenceDef(
+        schema = r(0), name = r(1),
+        start = r(2).toLong, increment = r(3).toLong,
+        minValue = r(4).toLong, maxValue = r(5).toLong,
+        current = Option(r(6)).map(_.toLong),
+        cycling = r(7) == "t" || r(7) == "true",
+        cache = Option(r(8)).map(_.toLong).getOrElse(0L))
+    }.toSeq
   }
 
   /** User-defined types referenced (directly or nested) by source
     * columns, with target-ready DDL bodies — the Migrator recreates
     * the needed subset before CREATE TABLE. */
-  def introspectCustomTypes(params: PgWire.ConnParams)
-      : Seq[graft.catalog.CustomType] = {
-    val conn = new PgWireConnection(params)
-    try IntrospectionRows.pgsqlCustomTypes(
+  def introspectCustomTypes(conn: PgWireConnection)
+      : Seq[graft.catalog.CustomType] =
+    IntrospectionRows.pgsqlCustomTypes(
       conn.query(IntrospectionSql.pgsqlCustomTypes)._2)
-    finally conn.close()
-  }
 
   /** The session's effective schema search path —
     * `current_schemas(false)`: $user resolved and non-existent
@@ -112,12 +131,8 @@ object PgWireSource {
     * ([[graft.catalog.CustomTypes.resolver]]); a customized source
     * search_path or a percent-encoded login would mis-resolve under
     * any client-side guess. */
-  def searchPathOf(params: PgWire.ConnParams): Seq[String] = {
-    val conn = new PgWireConnection(params)
-    try conn.query(
-      "SELECT unnest(current_schemas(false))")._2.map(_(0)).toSeq
-    finally conn.close()
-  }
+  def searchPathOf(conn: PgWireConnection): Seq[String] =
+    conn.query("SELECT unnest(current_schemas(false))")._2.map(_(0)).toSeq
 
   /** View introspection for MATERIALIZE VIEWS — the same column query
     * over relkind v/m, restricted to `names` (None = ALL VIEWS). */
@@ -129,8 +144,7 @@ object PgWireSource {
         s"AND c.relname IN (${ns.map(PgWire.quoteLiteral).mkString(", ")})"
       case _ => ""
     }
-    val conn = new PgWireConnection(params)
-    try {
+    catalog(params) { conn =>
       val (_, rows) = conn.query(IntrospectionSql.pgsqlViewColumns(filter))
       IntrospectionRows.pgsqlTables(rows.map { r =>
         IntrospectionRows.PgColumn(r(0), r(1), r(2), r(3),
@@ -138,7 +152,7 @@ object PgWireSource {
           nullable = r(5) == "t" || r(5) == "true",
           enumLabels = if (r.length > 6) Option(r(6)) else None)
       })
-    } finally conn.close()
+    }
   }
 
   /** `pg_class.relpages` for `table` (schema-qualified names accepted) —
@@ -161,14 +175,11 @@ object PgWireSource {
     *
     * - A view (MATERIALIZE VIEWS) has no ctid to split on: one
     *   predicate-free stream (`WHERE true`, no ONLY — views reject it).
-    * - A `local` caller's table that fits ONE
-    *   [[IntrospectionSql.pgsqlCtidPredicates]] chunk streams on the
-    *   driver ([[graft.sinks.LocalCopy]]): it would run as a single
-    *   Spark task anyway, so reading its wire stream on the calling
-    *   thread loses no parallelism and skips the job-submit floor (and,
-    *   in a mixed migration, the scheduler queueing behind a big
-    *   table's partitions — measured at whole seconds for 9-row
-    *   tables).
+    * - For a `local` caller (one that reads the plan on driver
+    *   threads, [[graft.sinks.LocalCopy]]), a table that fits ONE
+    *   [[IntrospectionSql.pgsqlCtidPredicates]] chunk is one
+    *   whole-table stream: no ctid predicate and no LIMIT 0 column
+    *   probe, its stream reports the columns.
     * - A partitioned parent reads per leaf ([[partitionedPlan]]).
     * - Any other heap splits into ctid page ranges, `pagesPerChunk`
     *   blocks each, sized by its relpages.
@@ -235,7 +246,7 @@ object PgWireSource {
         else selectCols.map { case (e, n) =>
           s"$e AS ${PgWire.quoteIdent(n)}" }.mkString(", ")
       ScanPlan(selectCols.map(_._2), Seq(s"SELECT $sel FROM $from"),
-        local = true, opener(params))
+        opener(params))
     } else if (partitioned)
       partitionedPlan(params, table, pagesPerChunk, selectCols)
     else
@@ -367,7 +378,7 @@ object PgWireSource {
       else names.map(PgWire.quoteIdent).mkString(", ")
     ScanPlan(names, targets.map { case (qtable, pred) =>
       s"SELECT $select FROM ${if (only) "ONLY " else ""}$qtable WHERE $pred"
-    }, local = false, opener(params))
+    }, opener(params))
   }
 
   private def opener(params: PgWire.ConnParams): String => ScanPlan.Stream =

@@ -14,29 +14,25 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * catalyst-form rows: one `UTF8String` or null per column (fidelity
   * mode: the cast engine types the values downstream).
   *
-  * `open` ships to executors, so it must capture only serializable
-  * values (connection parameters, paths), never a source object.
+  * A plan is read one of two ways, with the same opener and the same
+  * split numbering: on driver threads, one stream per split
+  * ([[graft.sinks.LocalCopy]]), or as a Spark job, one partition per
+  * split ([[frame]]). `open` ships to executors, so it must capture
+  * only serializable values (connection parameters, paths), never a
+  * source object.
   *
-  * @param columns the frame's column names; a `local` plan may leave
-  *   them empty, its stream reports them
-  * @param splits one Spark partition each; the wire sources' split is
-  *   the full SELECT statement of its range
-  * @param local the table fits one split and may stream on the driver
-  *   ([[graft.sinks.LocalCopy]]) instead of running a Spark job
+  * @param columns the frame's column names; a plan made for a driver
+  *   read may leave them empty, its streams report them
+  * @param splits one stream or Spark partition each; the wire sources'
+  *   split is the full SELECT statement of its range
   */
 final case class ScanPlan[S](
     columns: Seq[String],
     splits: Seq[S],
-    local: Boolean,
     open: S => ScanPlan.Stream)(implicit tag: ClassTag[S]) {
-  require(!local || splits.length == 1,
-    s"a driver-local plan has one split, not ${splits.length}")
 
-  /** Opens the single split of a `local` plan on the calling thread. */
-  def stream(): ScanPlan.Stream = {
-    require(local, "only a driver-local plan streams on the driver")
-    open(splits.head)
-  }
+  /** Opens split `i` on the calling thread. */
+  def stream(i: Int): ScanPlan.Stream = open(splits(i))
 
   /** The distributed read: one Spark partition per split, each opened
     * executor-side and consumed as a stream, its rows entering the plan

@@ -279,10 +279,8 @@ object SqliteSource {
     * holds a disjoint rowid range). WITHOUT ROWID tables scan their
     * index b-tree whole (interior keys are entries, so page subtrees
     * don't partition cleanly) — one split, like the reference's single
-    * COPY stream. A single-subtree table streams on the driver for a
-    * `local` caller: a Spark job would give it one partition anyway. */
-  def scan(path: String, table: String,
-           local: Boolean = false): ScanPlan[Int] = {
+    * COPY stream. */
+  def scan(path: String, table: String): ScanPlan[Int] = {
     val db = SqliteFile.open(path)
     val (rootPage, sql, cols) =
       try {
@@ -300,6 +298,6 @@ object SqliteSource {
     val open = (subtree: Int) =>
       ScanPlan.opened(SqliteFile.open(path))(d =>
         (names, tableScan(d, subtree, sql, cols).map(ScanPlan.utf8)))
-    ScanPlan(names, roots, local = local && roots.length == 1, open)
+    ScanPlan(names, roots, open)
   }
 }

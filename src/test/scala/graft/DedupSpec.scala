@@ -255,6 +255,24 @@ class DedupSpec extends SparkSpec {
     assert(sets.contains(Set("a1", "a2")))
   }
 
+  test("countAndPack: a partition past the cap sends no pairs; an " +
+    "under-cap total returns every pair in partition order") {
+    import org.apache.spark.sql.Row
+    val pairs = (1L to 5L).map(i => Row(i, i + 100))
+    val (over, none) = Dedup.packPartition(pairs.iterator, 4L)
+    assert(over == 5L && none.isEmpty)
+    val (all, packed) = Dedup.packPartition(pairs.iterator, 5L)
+    assert(all == 5L &&
+      packed.toSeq == pairs.flatMap(r => Seq(r.getLong(0), r.getLong(1))))
+    // three partitions of ten pairs each
+    val df = spark.range(0L, 30L, 1L, 3)
+      .selectExpr("id AS id_a", "id * 2 AS id_b")
+    val (total, arr) = Dedup.countAndPack(df, 30L)
+    assert(total == 30L &&
+      arr.toSeq == (0L until 30L).flatMap(i => Seq(i, 2 * i)))
+    assert(Dedup.countAndPack(df, 29L) == ((30L, null)))
+  }
+
   test("bipartite minhash pairs cross-corpus near-dups only") {
     val bench = Seq(
       // identical to docs 1 and 2

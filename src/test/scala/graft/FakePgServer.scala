@@ -38,7 +38,9 @@ final class FakePgServer(
     // called with the row index before each DataRow is written (rows
     // already written are flushed) — lets a test block the server
     // mid-result to prove the client streams
-    onRow: Int => Unit = _ => ()) extends AutoCloseable {
+    onRow: Int => Unit = _ => (),
+    // the ParameterStatus `server_version` sent at startup
+    serverVersion: String = "16.0-fake") extends AutoCloseable {
 
   val accepted = new ArrayBuffer[String]()
   val executed = new ArrayBuffer[String]() // non-COPY statements
@@ -131,7 +133,7 @@ final class FakePgServer(
         return
       }
       authRequest(0) // AuthenticationOk
-      msg('S', cstring("server_version") ++ cstring("16.0-fake"))
+      msg('S', cstring("server_version") ++ cstring(serverVersion))
       readyForQuery()
 
       def handleCopy(sql: String): Unit = {

@@ -71,15 +71,17 @@ class LivePartitionSpec extends SparkSpec {
     // the gate no longer trusts it: a parent qualifies only through
     // the whole-tree capacity probe. At pagesPerChunk=1 (cap 300) the
     // 4000-row tree is refused...
-    assert(!graft.sources.PgWireSource.scan(sp, "public.m",
-      partitioned = true, pagesPerChunk = 1L, local = true).local,
-      "a beyond-capacity partitioned parent must not stream driver-local")
+    assert(graft.sources.PgWireSource.scan(sp, "public.m",
+      partitioned = true, pagesPerChunk = 1L, local = true)
+      .splits.length > 1,
+      "a beyond-capacity partitioned parent must not be one stream")
     // ...while a genuinely small parent keeps the ORM-scale fast path
     // and streams the WHOLE tree (plain FROM, all partitions)
     val local = graft.sources.PgWireSource.scan(sp, "public.m",
       partitioned = true, local = true)
-    assert(local.local, "small partitioned parent keeps LocalCopy")
-    val stream = local.stream()
+    assert(local.splits == Seq("SELECT * FROM \"public\".\"m\""),
+      "small partitioned parent streams the whole tree")
+    val stream = local.stream(0)
     try {
       assert(stream.columns == Seq("id", "bucket", "payload"))
       assert(stream.rows.size == 4000)
@@ -275,14 +277,15 @@ class LivePartitionSpec extends SparkSpec {
       "fixture must lie: relpages expected 0 pre-ANALYZE")
     // pagesPerChunk=1 → capacity cap 300 rows; the 400-row liar is
     // caught by the OFFSET probe and routed to the distributed read
-    assert(!graft.sources.PgWireSource.scan(p, "public.liar",
-      pagesPerChunk = 1L, local = true).local,
-      "stale relpages must not buy LocalCopy")
+    assert(graft.sources.PgWireSource.scan(p, "public.liar",
+      pagesPerChunk = 1L, local = true).splits.forall(_.contains("ctid")),
+      "stale relpages must not buy the whole-table stream")
     // the honest small table still gets the fast path, and it works
     val local = graft.sources.PgWireSource.scan(p,
       "public.honest_small", pagesPerChunk = 1L, local = true)
-    assert(local.local)
-    val stream = local.stream()
+    assert(local.splits ==
+      Seq("SELECT * FROM ONLY \"public\".\"honest_small\""))
+    val stream = local.stream(0)
     try {
       assert(stream.columns == Seq("id"))
       assert(stream.rows.map(_(0).toString.toInt).toSeq.sorted == (1 to 9))

@@ -72,6 +72,30 @@ class LiveServerSpec extends SparkSpec {
     info(s"live PG: read ${df.count()} rows from $qualified")
   }
 
+  test("live PG: the source's catalog session runs with JIT off, so the " +
+    "custom-type closure plans no JIT compile") {
+    assume(env("GRAFT_LIVE_PG_URI").isDefined,
+      "set GRAFT_LIVE_PG_URI to run")
+    import graft.sources.{IntrospectionSql, PgWireSource}
+    val sp = PgWire.connParams(env("GRAFT_LIVE_PG_URI").get, decode)
+    def jitLines(c: graft.sinks.PgWireConnection) =
+      c.query("EXPLAIN " + IntrospectionSql.pgsqlCustomTypes)._2
+        .map(_(0).trim).filter(_.startsWith("JIT:"))
+    PgWireSource.catalog(sp) { c =>
+      assert(c.query("SELECT current_setting('jit')")._2.head(0) == "off")
+      assert(jitLines(c).isEmpty)
+    }
+    // the control: where this server compiles JIT code by default, a
+    // plain session plans it for the same query
+    val c = new graft.sinks.PgWireConnection(sp)
+    try {
+      val Seq(available, jit) = c.query(
+        "SELECT pg_jit_available()::text, current_setting('jit')")._2
+        .head.toSeq
+      if (available == "true" && jit == "on") assert(jitLines(c).nonEmpty)
+    } finally c.close()
+  }
+
   test("live PG: queryStreamData decodes catalyst rows — UTF8String " +
     "payload slices with NULL / multibyte / empty / tab intact, " +
     "connection reusable after the stream and after a mid-stream error") {

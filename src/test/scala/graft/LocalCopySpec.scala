@@ -3,12 +3,17 @@ package graft
 import java.nio.file.Files
 import graft.sinks.{CopyEndpoint, CopyError, CopySink, LocalCopy, PgBinary}
 
-/** The driver-local small-table fast path ([[graft.sinks.LocalCopy]]):
+/** The driver route of database tables ([[graft.sinks.LocalCopy]]):
   * its scalar renderers must stay byte-identical to the distributed
-  * sink's codegen renderers (the fast path is a pure execution-venue
+  * sink's codegen renderers (the route is a pure execution-venue
   * change, never a format change), and its batch/reject machinery must
   * honor the same recovery contract. */
 class LocalCopySpec extends SparkSpec {
+
+  /** A one-split plan streaming `rows`. */
+  private def plan(rows: Iterator[Array[Any]]) =
+    graft.sources.ScanPlan[Int](Nil, Seq(0),
+      _ => graft.sources.ScanPlan.Stream(Nil, rows, () => ()))
 
   // tricky corpus: every COPY TEXT escape class, unicode, nulls, the
   // literal "\N" spelling that must NOT round-trip as NULL, plus a
@@ -94,8 +99,8 @@ class LocalCopySpec extends SparkSpec {
     val dir = Files.createTempDirectory("localcopy").toString
     val rows = Iterator(Array[String]("1", "a"), Array("2", "BAD"),
       Array("3", "c"), Array[String](null, "d")).map(utf8)
-    val (sent, rejected, bytes) = LocalCopy.write(rows, _ => endpoint,
-      rejectDir = Some(dir))
+    val (sent, rejected, bytes) = LocalCopy.write(plan(rows),
+      _ => LocalCopy.Sink(_ => endpoint), rejectDir = Some(dir))
     assert(sent == 3 && rejected == 1)
     assert(bytes > 0)
     assert(landed == Seq("1\ta", "3\tc", "\\N\td"))
@@ -114,8 +119,8 @@ class LocalCopySpec extends SparkSpec {
     }
     val dir = Files.createTempDirectory("localcopybin").toString
     val (sent, rejected, _) = LocalCopy.write(
-      Iterator(Array("41"), Array("nope"), Array("42")).map(utf8),
-      _ => endpoint, render = LocalCopy.binaryRender(kinds),
+      plan(Iterator(Array("41"), Array("nope"), Array("42")).map(utf8)),
+      _ => LocalCopy.Sink(_ => endpoint, LocalCopy.binaryRender(kinds)),
       rejectDir = Some(dir))
     assert(sent == 2 && rejected == 1)
     val content = new String(Files.readAllBytes(
@@ -129,8 +134,8 @@ class LocalCopySpec extends SparkSpec {
         throw CopyError(Some(1), "constraint")
     }
     intercept[CopyError] {
-      LocalCopy.write(Iterator(Array("x")).map(utf8), _ => endpoint,
-        onErrorStop = true)
+      LocalCopy.write(plan(Iterator(Array("x")).map(utf8)),
+        _ => LocalCopy.Sink(_ => endpoint), onErrorStop = true)
     }
   }
 }

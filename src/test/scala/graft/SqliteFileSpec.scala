@@ -558,10 +558,10 @@ class SqliteFileSpec extends SparkSpec {
     val big = byK1(50L).getString(2)
     assert(big != null && big.length == 1502 && big.endsWith("50"),
       s"overflowing index payload: ${Option(big).map(_.length)}")
-    // the local fast path agrees with the distributed read
-    val local = graft.sources.SqliteSource.scan(path, "wor", local = true)
-    assert(local.local)
-    val stream = local.stream()
+    // the driver stream agrees with the distributed read
+    val local = graft.sources.SqliteSource.scan(path, "wor")
+    assert(local.splits.length == 1)
+    val stream = local.stream(0)
     try {
       assert(stream.columns == Seq("val", "k1", "note", "k2", "score"))
       val l = stream.rows.toVector

@@ -26,8 +26,8 @@ if [ ! -f /tmp/employees/salaries4.csv ]; then
 fi
 
 mkdir -p /tmp/pg2pg_bench
-sed "s|{{PGURI}}|$BASE/empsrc|g" tools/bench_employees.load \
-  > /tmp/pg2pg_bench/seed.load
+sed -e "s|{{PGURI}}|$BASE/empsrc|g" -e "s|{{EXTRAOPTS}}||g" \
+  tools/bench_employees.load > /tmp/pg2pg_bench/seed.load
 # EXTRA_WITH adds WITH options to the migration (e.g.
 # EXTRA_WITH=", copy binary" for the COPY BINARY A/B)
 sed -e "s|{{SRCURI}}|$BASE/empsrc|g" -e "s|{{DSTURI}}|$BASE/empdst|g" \
