@@ -9,7 +9,8 @@ package graft
   * - Failures are NOT silently recorded as fast runs: the error goes to
   *   stderr and the query's time is reported negative (-elapsed) so a
   *   broken query is visible in the JSON.
-  * - SPARK_GRAFT_ONLY=name1,name2 restricts the run (local iteration).
+  * - SPARK_GRAFT_ONLY=name1,name2 restricts the run (local iteration);
+  *   a name no query carries exits 2 before any query runs.
   * - The same JSON line is also written to BENCH_SELF.json (rewritten
   *   after every query), so per-query timings survive stdout-tail
   *   truncation or a killed run.
@@ -100,6 +101,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val selected =
+      try SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY"))
+      catch { case e: IllegalArgumentException =>
+        System.err.println(s"[bench] SPARK_GRAFT_ONLY: ${e.getMessage}")
+        sys.exit(2)
+      }
     // driver heap: -Xmx from SPARK_DRIVER_MEM in build.sbt (a
     // spark.driver.memory setting cannot reach the running JVM)
     val builder0 = Sessions.builder("graft-bench", Sessions.cpus)
@@ -113,10 +120,6 @@ object Bench {
     }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = SparkEntry.queries.filter { case (n, _) =>
-      only.forall(_.contains(n)) }
     // warmup: session init + codegen paths, untimed — q1_agg (scan +
     // hash aggregate) since round 1; round 21 widens it to the other
     // SHARED engine paths the suite exercises (window exec, explode/

@@ -21,7 +21,7 @@ import graft.sinks.{CopyEndpoint, CopySink}
   * @param endpointFactory COPY endpoint per partition, given (COPY
   *   target — the quoted table plus any column list — and
   *   sessionSetup) ([[graft.sinks.PgWireCopyEndpoint]] in the CLI,
-  *   [[graft.sinks.JdbcInsertEndpoint]], or test doubles)
+  *   or test doubles)
   * @param rejectRoot when set, each table's rejected rows land under
   *   `<root>/<table>.dat/` (the reference's root-dir/<table>.dat): rows
   *   the server refused as replayable COPY TEXT in `part-*.dat`, source

@@ -30,6 +30,20 @@ object SparkEntry {
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map(q => q.name -> q.build).toMap
 
+  /** [[queries]] restricted to a comma-separated name list (all of
+    * them for None). Throws IllegalArgumentException naming every
+    * listed name no query carries, so a stale list fails instead of
+    * silently running a smaller set. */
+  def select(only: Option[String])
+      : Map[String, (SparkSession, String) => DataFrame] =
+    only.fold(queries) { list =>
+      val names = list.split(',').map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = names.filterNot(queries.contains).toSeq.sorted
+      if (unknown.nonEmpty) throw new IllegalArgumentException(
+        s"unknown queries: ${unknown.mkString(", ")}")
+      queries.filter { case (n, _) => names(n) }
+    }
+
   /** DuckDB oracle per query, over the same parquet tables. */
   lazy val oracleSql: Map[String, String] =
     all.map(q => q.name -> q.oracle).toMap

@@ -6,18 +6,22 @@ import java.nio.file.{Files, Paths}
   * oracle_sql.json, for the DuckDB compare (`tools/compare_oracle.py`).
   *
   * Usage: Verify <sfDir> <outDir> [name1,name2,...]
+  * (a name no query carries exits 2 before any query runs)
   */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query subset (local iteration)
-    val only = args.drop(2).headOption.map(_.split(',').toSet)
+    val selected =
+      try SparkEntry.select(args.drop(2).headOption)
+      catch { case e: IllegalArgumentException =>
+        System.err.println(s"[verify] ${e.getMessage}")
+        sys.exit(2)
+      }
     val spark = Sessions.builder("graft-verify", Sessions.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -138,7 +138,7 @@ object CastEngine {
         // implicit USING when a USER rule names none (cast.clj:342-363
         // implicit-using — v4 applies it in resolve-specs' user-rule
         // scan only; DEFAULT rules carry their own usings, and e.g.
-        // the ansi/sqlite boolean→boolean defaults must NOT gain a
+        // the sqlite boolean→boolean defaults must NOT gain a
         // tinyint conversion that would flip textual 'false' to 't'):
         // `to boolean` from an integer/bit source needs the 0→f
         // conversion and `to integer` from a NUMERIC source needs
@@ -508,34 +508,6 @@ object DefaultCastRules {
     r(RuleSource(Some("time")), RuleTarget("time", StringType)),
     r(RuleSource(Some("sql_variant")), RuleTarget("text", StringType)),
     r(RuleSource(Some("sysname")), RuleTarget("text", StringType))
-  )
-
-  /** Generic ANSI-typed JDBC sources (Derby, H2, …): standard type names
-    * as DatabaseMetaData reports them. */
-  val ansi: Seq[CastRule] = Seq(
-    r(RuleSource(Some("integer"), autoIncrement = Some(true)),
-      RuleTarget("serial", IntegerType)),
-    r(RuleSource(Some("bigint"), autoIncrement = Some(true)),
-      RuleTarget("bigserial", LongType)),
-    r(RuleSource(Some("smallint")), RuleTarget("smallint", ShortType)),
-    r(RuleSource(Some("integer")), RuleTarget("integer", IntegerType)),
-    r(RuleSource(Some("int")), RuleTarget("integer", IntegerType)),
-    r(RuleSource(Some("bigint")), RuleTarget("bigint", LongType)),
-    r(RuleSource(Some("real")), RuleTarget("real", FloatType)),
-    r(RuleSource(Some("float")), RuleTarget("double precision", DoubleType)),
-    r(RuleSource(Some("double")), RuleTarget("double precision", DoubleType)),
-    r(RuleSource(Some("decimal")), RuleTarget("numeric", keepTypemod = true)),
-    r(RuleSource(Some("numeric")), RuleTarget("numeric", keepTypemod = true)),
-    r(RuleSource(Some("char")), RuleTarget("text", StringType)),
-    r(RuleSource(Some("varchar")), RuleTarget("text", StringType)),
-    r(RuleSource(Some("character varying")), RuleTarget("text", StringType)),
-    r(RuleSource(Some("clob")), RuleTarget("text", StringType)),
-    r(RuleSource(Some("blob")), RuleTarget("bytea", BinaryType),
-      Some("byte-vector-to-bytea")),
-    r(RuleSource(Some("date")), RuleTarget("date", DateType)),
-    r(RuleSource(Some("time")), RuleTarget("time", StringType)),
-    r(RuleSource(Some("timestamp")), RuleTarget("timestamptz", TimestampType)),
-    r(RuleSource(Some("boolean")), RuleTarget("boolean", BooleanType))
   )
 
   val pgsql: Seq[CastRule] = Seq(

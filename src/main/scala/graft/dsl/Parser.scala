@@ -815,8 +815,8 @@ private final class Parser(in: String, baseDir: String = ".") {
     cmd = cmd.copy(targetUri = Some(tryQuoted().getOrElse(uriToken())))
     // `uri?table` / `uri?schema.table` names the target inline
     // (command-db-uri.lisp pgsql-uri table-name slot). The suffix is
-    // STRIPPED from the uri — left in place it would reach the JDBC
-    // url as a bogus connection property (jdbc:postgresql://…?tbl).
+    // STRIPPED from the uri — left in place it would be parsed as a
+    // bogus connection parameter (postgresql://…?tbl).
     cmd.targetUri.foreach { u =>
       val q = u.indexOf('?')
       if (q >= 0) {

@@ -665,117 +665,6 @@ object LoadPathQueries {
                   (SELECT count(*) FROM supplier WHERE s_suppkey % 7 = 3))
          ORDER BY table_name"""),
 
-    // §2.1 database source end-to-end against a REAL embedded database
-    // (Derby): load through the batched-INSERT sink endpoint, introspect
-    // the catalog over JDBC metadata, cast it, read back with a
-    // range-partitioned Spark JDBC scan (mysql.lisp:10-62 shape).
-    // The returned frame reads the fixed-name in-memory table lazily:
-    // consume it before building this query again in the same JVM,
-    // because the rebuild drops and refills that table.
-    Query("jdbc_migrate", (s, dir) => {
-      // every 5th order: the fixture DB stays small while the partitioned
-      // read still splits into multiple JDBC ranges
-      val o = t(s, dir, "orders").filter(col("o_orderkey") % 5 === 0)
-        .select(
-          col("o_orderkey").cast("int").as("k"),
-          col("o_orderstatus").as("st"),
-          col("o_totalprice").as("p"))
-      // in-memory Derby subname (round 21): the fixture DB is rebuilt
-      // from parquet on every invocation, so the disk store bought
-      // nothing but page-file creation + write-ahead-log fsyncs on
-      // every INSERT batch (~1.9 s of driver-side wall at sf0.1, by
-      // far the query's largest cost). Same real Derby engine, same
-      // JDBC surface, same introspection/cast/partitioned-read path.
-      // ONE db per query name, table dropped + recreated per invocation
-      // (round 22, ADVICE r21): memory DBs live for the JVM, so the
-      // old nanoTime-unique subnames leaked one full fixture per run in
-      // repeated-run harnesses; a fixed subname bounds driver heap at
-      // one fixture regardless of repetitions.
-      val url = "jdbc:derby:memory:jdbc_derby_fixture;create=true"
-      val props = new java.util.Properties
-      val conn = java.sql.DriverManager.getConnection(url, props)
-      try {
-        val st = conn.createStatement()
-        try st.executeUpdate("DROP TABLE ORDERS_SRC")
-        catch { case _: java.sql.SQLException => () } // first run: absent
-        st.executeUpdate(
-          """CREATE TABLE ORDERS_SRC (
-               O_ORDERKEY INT NOT NULL PRIMARY KEY,
-               O_ORDERSTATUS VARCHAR(4),
-               O_TOTALPRICE DOUBLE)""")
-        st.close()
-      } finally conn.close()
-      val sink = new graft.sinks.CopySink(endpointFactory = _ =>
-        new graft.sinks.JdbcInsertEndpoint(url, new java.util.Properties,
-          "INSERT INTO ORDERS_SRC (O_ORDERKEY, O_ORDERSTATUS, O_TOTALPRICE)" +
-            " VALUES (?, ?, ?)", 3))
-      sink.write(o.repartition(4))
-      val cat = graft.sources.JdbcSource.introspect(url, props, Some("APP"))
-        .cast(Nil, graft.casting.DefaultCastRules.ansi)
-      val tbl = cat.allTables.find(_.name == "ORDERS_SRC").get
-      // introspected + cast catalog drives the read: 15k rows over 4k-row
-      // ranges → 4 JDBC partitions
-      val df = graft.sources.JdbcSource.read(s, url, props, tbl,
-        partitionColumn = Some("O_ORDERKEY"), rowsPerRange = 1000)
-      df.select(col("O_ORDERKEY").cast("long").as("o_orderkey"),
-          col("O_ORDERSTATUS").as("o_orderstatus"),
-          col("O_TOTALPRICE").as("o_totalprice"))
-        .orderBy(col("o_orderkey"))
-    }, oracle =
-      """SELECT o_orderkey, o_orderstatus, o_totalprice
-         FROM orders WHERE o_orderkey % 5 = 0 ORDER BY o_orderkey"""),
-
-    // §2.1 PG ctid-style predicate-partitioned scan: the reference splits
-    // a PG heap into ctid block ranges (pgsql.clj:206-208, 313-345) and
-    // runs one COPY per range; Spark's execution path for that is
-    // spark.read.jdbc(url, table, predicates, props) — one partition per
-    // WHERE clause (JdbcSource.readWithPredicates). No live PG in this
-    // container, so the SAME API is exercised against embedded Derby with
-    // key-range predicates shaped exactly like pgsqlCtidPredicates
-    // (half-open ranges, unbounded last) — disjoint + covering, so the
-    // union of partitions is the table. Like jdbc_migrate, the returned
-    // frame reads its fixed-name in-memory table lazily: consume it
-    // before building this query again in the same JVM.
-    Query("jdbc_predicates_read", (s, dir) => {
-      val c = t(s, dir, "customer").filter(col("c_custkey") % 10 === 0)
-        .select(col("c_custkey").cast("int").as("k"),
-          col("c_name").as("nm"),
-          col("c_acctbal").cast("double").as("bal"))
-      // in-memory Derby, same rationale (and round-22 one-db-per-query
-      // heap bound) as jdbc_migrate above
-      val url = "jdbc:derby:memory:jdbc_pred_derby_fixture;create=true"
-      val props = new java.util.Properties
-      val conn = java.sql.DriverManager.getConnection(url, props)
-      try {
-        val st = conn.createStatement()
-        try st.executeUpdate("DROP TABLE CUST_SRC")
-        catch { case _: java.sql.SQLException => () } // first run: absent
-        st.executeUpdate(
-          """CREATE TABLE CUST_SRC (
-               K INT NOT NULL PRIMARY KEY,
-               NM VARCHAR(40),
-               BAL DOUBLE)""")
-        st.close()
-      } finally conn.close()
-      val sink = new graft.sinks.CopySink(endpointFactory = _ =>
-        new graft.sinks.JdbcInsertEndpoint(url, new java.util.Properties,
-          "INSERT INTO CUST_SRC (K, NM, BAL) VALUES (?, ?, ?)", 3))
-      sink.write(c.repartition(4))
-      val preds = Seq( // ctid-range shape: '(0,0)'≤ … <'(500,0)', etc.
-        "K < 500", "K >= 500 AND K < 1000", "K >= 1000")
-      val df = graft.sources.JdbcSource.readWithPredicates(
-        s, url, props, "CUST_SRC", preds)
-      require(df.rdd.getNumPartitions == preds.length,
-        s"predicate read must give one partition per range, got " +
-          s"${df.rdd.getNumPartitions}")
-      df.select(col("K").cast("long").as("k"), col("NM").as("nm"),
-          col("BAL").as("bal"))
-        .orderBy(col("k"))
-    }, oracle =
-      """SELECT c_custkey AS k, c_name AS nm,
-         CAST(c_acctbal AS DOUBLE) AS bal
-         FROM customer WHERE c_custkey % 10 = 0 ORDER BY k"""),
-
     // §2.1 IXF scan: the reference's own nsitra.test1.ixf fixture read
     // by the PC/IXF binary reader; the oracle is the reference's
     // regress/expected/ixf.out golden as a VALUES literal.

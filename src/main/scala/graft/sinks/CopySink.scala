@@ -15,26 +15,15 @@ final case class CopyError(lineInBatch: Option[Int], message: String)
 
 /** Where formatted COPY rows go. One endpoint per task/partition.
   * Implementations: the driver-free wire client ([[PgWireCopyEndpoint]],
-  * what the CLI uses), plain JDBC batched INSERT
-  * ([[JdbcInsertEndpoint]]), or in-memory test doubles. `send` is
-  * transactional: on [[CopyError]] NONE of the rows were kept. */
+  * what the CLI uses), a partition file ([[CopyEndpoint.file]]), or
+  * in-memory test doubles. `send` is transactional: on [[CopyError]]
+  * NONE of the rows were kept. */
 trait CopyEndpoint extends AutoCloseable {
   def send(rows: Seq[Array[Byte]]): Unit
   override def close(): Unit = ()
 }
 
 object CopyEndpoint {
-  /** Run session-setup statements (SET gucs, replica role) on a freshly
-    * opened endpoint connection — per-connection state must be applied on
-    * every connection that loads data, or triggers silently still fire. */
-  def applySessionSetup(conn: java.sql.Connection,
-                        sessionSetup: Seq[String]): Unit =
-    if (sessionSetup.nonEmpty) {
-      val st = conn.createStatement()
-      try sessionSetup.foreach(s => st.execute(s.stripSuffix(";")))
-      finally st.close()
-    }
-
   /** Endpoint writing partition `pid`'s COPY rows to
     * `<dir>/part-<pid>.dat` (`CopyText.read` reads the directory back).
     * The file is truncated on open, so a retried sink task REWRITES
@@ -328,63 +317,4 @@ object CopySink {
     (if (df.columns.contains(TaggedLines.Col)) col(TaggedLines.Col)
      else lit(null).cast(org.apache.spark.sql.types.StringType)).as("raw")
   }
-}
-
-/** Batched-INSERT endpoint over plain JDBC — the sink fallback for targets
-  * without COPY (SURVEY §2.2: `reWriteBatchedInserts` path). Consumes the
-  * same COPY TEXT row bytes as the PG endpoint (format-once applies to
-  * both), parsing them back to fields per batch. Transactional per send:
-  * a failed batch is rolled back and reported with its failing line when
-  * the driver identifies it.
-  */
-final class JdbcInsertEndpoint(url: String, props: java.util.Properties,
-                               insertSql: String, nCols: Int,
-                               sessionSetup: Seq[String] = Nil)
-    extends CopyEndpoint {
-  private val conn = java.sql.DriverManager.getConnection(url, props)
-  // GUCs / replica role are per-connection: apply them on THIS connection
-  // before any data flows (reference: set-session-gucs on every pgconn)
-  CopyEndpoint.applySessionSetup(conn, sessionSetup)
-  conn.setAutoCommit(false)
-  private val ps = conn.prepareStatement(insertSql)
-
-  override def send(rows: Seq[Array[Byte]]): Unit = {
-    try {
-      rows.foreach { bytes =>
-        val line = new String(bytes, "UTF-8").stripSuffix("\n")
-        val vals = graft.sources.CopyText.parseLine(line)
-        var i = 0
-        while (i < nCols) {
-          if (i < vals.length && vals(i) != null) ps.setString(i + 1, vals(i))
-          else ps.setNull(i + 1, java.sql.Types.VARCHAR)
-          i += 1
-        }
-        ps.addBatch()
-      }
-      ps.executeBatch()
-      conn.commit()
-    } catch {
-      case e: java.sql.BatchUpdateException =>
-        conn.rollback(); ps.clearBatch()
-        // update counts attribute a row ONLY when exactly one statement
-        // failed: under pgjdbc's reWriteBatchedInserts every row of the
-        // rewritten chunk is marked EXECUTE_FAILED, and blaming the
-        // first index would reject good row 1, then good row 2, …
-        // before reaching the bad one — fall back to bisect instead
-        val counts = e.getUpdateCounts
-        val failed = counts.zipWithIndex
-          .filter(_._1 == java.sql.Statement.EXECUTE_FAILED)
-        val line = failed match {
-          case Array((_, i)) => Some(i + 1)
-          case _ => None
-        }
-        throw CopyError(line,
-          Option(e.getCause).getOrElse(e).getMessage)
-      case e: Exception =>
-        conn.rollback(); ps.clearBatch()
-        throw CopyError(None, Option(e.getCause).getOrElse(e).getMessage)
-    }
-  }
-
-  override def close(): Unit = { ps.close(); conn.close() }
 }

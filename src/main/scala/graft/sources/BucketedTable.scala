@@ -15,7 +15,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Sizing: buckets are the unit of read parallelism AND the join
   * co-location grain — pick `numBuckets` so one bucket of the LARGEST
   * sf fits an executor's working memory (the same rows-per-range
-  * arithmetic as JdbcSource's partitioned reads), and use the same
+  * arithmetic as the database sources' range splits), and use the same
   * count on every table that joins on the key.
   */
 object BucketedTable {

@@ -1,203 +1,14 @@
 package graft.sources
 
-import java.sql.{Connection, DriverManager}
-import java.util.Properties
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.casting.SourceColumn
-import graft.catalog.{Catalog, CheckDef, Ddl, FKey, Index, Schema, Table}
+import graft.catalog.{CheckDef, Ddl, FKey, Index, Table}
+import graft.sinks.PgWire
 
-/** Database source: schema introspection + (partitioned) reads over JDBC.
-  *
-  * Introspection is driver-side, like the reference's per-source catalog
-  * queries (mysql-schema.lisp:54-212, sqlite-schema.lisp, mssql-schema.lisp,
-  * pgsql-schema.lisp:7-481). The portable layer uses JDBC
-  * `DatabaseMetaData` — the JVM-idiomatic equivalent covering tables,
-  * columns (type/typemod/nullable/default/auto-increment), primary keys,
-  * indexes and foreign keys for every JDBC source. The per-engine SQL the
-  * reference issues lives in [[IntrospectionSql]] for drivers where the
-  * metadata calls fall short.
-  *
-  * Reads are Spark JDBC relations; large tables split on an integer key
-  * into ranges of `rowsPerRange` (the reference's partitioned scan,
-  * mysql.lisp:10-62: 10k rows per range by default, only when the table is
-  * big enough).
-  */
-object JdbcSource {
-
-  /** Introspect every TABLE (and optionally VIEW — the MATERIALIZE VIEWS
-    * path loads views as tables, matviews.lisp) in `schemaPattern` into
-    * the catalog IR. */
-  def introspect(url: String, props: Properties = new Properties,
-                 schemaPattern: Option[String] = None,
-                 rowCounts: Boolean = true,
-                 tableTypes: Array[String] = Array("TABLE")): Catalog = {
-    val conn = DriverManager.getConnection(url, props)
-    try {
-      val md = conn.getMetaData
-      val tablesRs = md.getTables(null, schemaPattern.orNull, "%",
-        tableTypes)
-      val names = Iterator.continually(tablesRs)
-        .takeWhile(_.next())
-        .map(rs => (rs.getString("TABLE_SCHEM"), rs.getString("TABLE_NAME")))
-        .toSeq
-      val tables = names.map { case (schema, tname) =>
-        introspectTable(conn, schema, tname, rowCounts)
-      }
-      val bySchema = tables.groupBy(_.schema)
-      Catalog(url, bySchema.map { case (s, ts) =>
-        Schema(name = s, sourceName = s, tables = ts.sortBy(_.name))
-      }.toSeq.sortBy(_.name))
-    } finally conn.close()
-  }
-
-  private def introspectTable(conn: Connection, schema: String,
-                              tname: String, rowCounts: Boolean): Table = {
-    val md = conn.getMetaData
-
-    val colsRs = md.getColumns(null, schema, tname, "%")
-    val fields = Iterator.continually(colsRs).takeWhile(_.next()).map { rs =>
-      val typeName = rs.getString("TYPE_NAME")
-      val size = rs.getInt("COLUMN_SIZE")
-      val digits = Option(rs.getObject("DECIMAL_DIGITS"))
-        .map(_ => rs.getInt("DECIMAL_DIGITS"))
-      val base = typeName.toLowerCase
-      // reconstruct the source ctype with its typemod, as the cast-rule
-      // guards expect (`decimal(12,2)`, `varchar(25)`, …)
-      val ctype =
-        if (base.contains("char") && size > 0) s"$base($size)"
-        else if ((base == "decimal" || base == "numeric") && size > 0)
-          s"$base($size,${digits.getOrElse(0)})"
-        else base
-      SourceColumn(
-        table = tname,
-        name = rs.getString("COLUMN_NAME"),
-        ctype = ctype,
-        default = Option(rs.getString("COLUMN_DEF")).map(_.trim),
-        nullable =
-          rs.getInt("NULLABLE") != java.sql.DatabaseMetaData.columnNoNulls,
-        autoIncrement = "YES".equalsIgnoreCase(
-          Option(rs.getString("IS_AUTOINCREMENT")).getOrElse("NO")))
-    }.toSeq
-
-    val pkRs = md.getPrimaryKeys(null, schema, tname)
-    val pkCols = Iterator.continually(pkRs).takeWhile(_.next())
-      .map(rs => (rs.getShort("KEY_SEQ"), rs.getString("COLUMN_NAME"),
-        Option(rs.getString("PK_NAME"))))
-      .toSeq.sortBy(_._1)
-
-    val idxRs = md.getIndexInfo(null, schema, tname, false, true)
-    val idxRows = Iterator.continually(idxRs).takeWhile(_.next()).flatMap {
-      rs =>
-        Option(rs.getString("INDEX_NAME")).map { n =>
-          (n, !rs.getBoolean("NON_UNIQUE"),
-            rs.getShort("ORDINAL_POSITION"), rs.getString("COLUMN_NAME"))
-        }
-    }.toSeq
-    val pkIndexNames = pkCols.flatMap(_._3).toSet
-    val indexes = idxRows.groupBy(_._1).map { case (n, rows) =>
-      Index(name = n, table = tname,
-        primary = pkIndexNames.contains(n),
-        unique = rows.head._2,
-        columns = rows.sortBy(_._3).map(_._4))
-    }.toSeq.sortBy(_.name)
-    // a primary key with no visible index row still needs an Index entry
-    val withPk =
-      if (pkCols.nonEmpty && !indexes.exists(_.primary))
-        indexes :+ Index(
-          name = pkCols.head._3.getOrElse(s"${tname}_pkey"),
-          table = tname, primary = true, unique = true,
-          columns = pkCols.map(_._2))
-      else indexes
-
-    val fkRs = md.getImportedKeys(null, schema, tname)
-    val fkRows = Iterator.continually(fkRs).takeWhile(_.next()).map { rs =>
-      (Option(rs.getString("FK_NAME")).getOrElse(s"${tname}_fk"),
-        rs.getShort("KEY_SEQ"), rs.getString("FKCOLUMN_NAME"),
-        rs.getString("PKTABLE_NAME"), rs.getString("PKCOLUMN_NAME"))
-    }.toSeq
-    val fkeys = fkRows.groupBy(_._1).map { case (n, rows) =>
-      val sorted = rows.sortBy(_._2)
-      FKey(name = n, table = tname,
-        columns = sorted.map(_._3),
-        foreignTable = sorted.head._4,
-        foreignColumns = sorted.map(_._5))
-    }.toSeq.sortBy(_.name)
-
-    val count =
-      if (rowCounts) {
-        val st = conn.createStatement()
-        try {
-          val rs = st.executeQuery(
-            s"""SELECT COUNT(*) FROM "$schema"."$tname"""")
-          rs.next(); rs.getLong(1)
-        } finally st.close()
-      } else 0L
-
-    Table(name = tname, schema = schema, sourceName = tname,
-      rowCountEstimate = count, fields = fields, indexes = withPk,
-      fkeys = fkeys)
-  }
-
-  /** Execute one statement on a JDBC target on a fresh connection. */
-  def executeDdl(url: String, props: Properties)(sql: String): Unit = {
-    val conn = DriverManager.getConnection(url, props)
-    try {
-      val st = conn.createStatement()
-      try st.execute(sql.stripSuffix(";")) finally st.close()
-    } finally conn.close()
-  }
-
-  /** min/max of an integer partition key (mysql.lisp:35-43). */
-  def integerBounds(url: String, props: Properties, schema: String,
-                    table: String, column: String): (Long, Long) = {
-    val conn = DriverManager.getConnection(url, props)
-    try {
-      val st = conn.createStatement()
-      val rs = st.executeQuery(
-        s"""SELECT MIN("$column"), MAX("$column") FROM "$schema"."$table"""")
-      rs.next(); (rs.getLong(1), rs.getLong(2))
-    } finally conn.close()
-  }
-
-  /** Spark JDBC read, range-partitioned on `partitionColumn` when the
-    * table is big enough for it (>= 2 ranges of `rowsPerRange`, the
-    * reference's guard at mysql.lisp:47). */
-  def read(spark: SparkSession, url: String, props: Properties,
-           table: Table, partitionColumn: Option[String] = None,
-           rowsPerRange: Long = 10000L): DataFrame = {
-    val reader = spark.read.format("jdbc")
-      .option("url", url)
-      .option("dbtable", s""""${table.schema}"."${table.name}"""")
-    props.stringPropertyNames().forEach { k =>
-      reader.option(k, props.getProperty(k))
-    }
-    partitionColumn match {
-      case Some(pk) if table.rowCountEstimate >= 2 * rowsPerRange =>
-        val (lo, hi) = integerBounds(url, props, table.schema, table.name, pk)
-        val nParts = math.max(1,
-          math.ceil(table.rowCountEstimate.toDouble / rowsPerRange).toInt)
-        reader
-          .option("partitionColumn", pk)
-          .option("lowerBound", lo)
-          .option("upperBound", hi + 1)
-          .option("numPartitions", nParts)
-          .load()
-      case _ => reader.load()
-    }
-  }
-
-  /** Predicate-partitioned read — ONE JDBC partition per WHERE clause
-    * (`spark.read.jdbc(url, table, predicates, props)`). This is the
-    * execution path for scans that cannot split on an integer column:
-    * the reference's PG heap scan splits on ctid block ranges
-    * (clojure/src/pgloader/source/pgsql.clj:206-208, 313-345) and runs
-    * one COPY per range; here each range string becomes one Spark task.
-    * Predicates must be disjoint and cover the table, or rows duplicate
-    * or drop — [[IntrospectionSql.pgsqlCtidPredicates]] guarantees both. */
-  def readWithPredicates(spark: SparkSession, url: String, props: Properties,
-                         table: String, predicates: Seq[String]): DataFrame =
-    spark.read.jdbc(url, table, predicates.toArray, props)
-}
+// The catalog SQL of every database source and the row mappings that
+// turn its answers into catalog tables. The wire sources
+// ([[PgWireSource]], [[MySqlWireSource]], [[MssqlWireSource]]) send
+// these statements over their own connections; [[SqliteSource]] reads
+// the file format and feeds [[IntrospectionRows]] the same row shapes.
 
 /** Per-type SELECT expressions for the source query — some types must be
   * rendered server-side (mysql-schema.lisp:268-286 st_astext for
@@ -209,40 +20,44 @@ object ColumnSqlExpressions {
   /** (server-side expression, output column name) — the STRUCTURED form
     * the wire sources take. Carrying the alias separately means an
     * expression containing the text " as " inside a string literal or
-    * function argument can never mis-parse the output name. */
-  def mysqlPair(name: String, typeName: String): (String, String) =
+    * function argument can never mis-parse the output name. Column
+    * names are quoted with each engine's own escaping. */
+  def mysqlPair(name: String, typeName: String): (String, String) = {
+    val c = MySqlWire.quoteIdent(name)
     typeName.toLowerCase match {
-      case "geometry" | "point" | "linestring" =>
-        (s"st_astext(`$name`)", name)
-      case _ => (s"`$name`", name)
+      case "geometry" | "point" | "linestring" => (s"st_astext($c)", name)
+      case _ => (c, name)
     }
+  }
 
-  def mssqlPair(name: String, typeName: String): (String, String) =
+  def mssqlPair(name: String, typeName: String): (String, String) = {
+    val c = TdsWire.quoteIdent(name)
     typeName.toLowerCase match {
       // style 114 renders hh:mi:ss:mmm — a COLON before the millis,
       // which PG's time parser rejects; STUFF position 9 (1-based)
       // swaps it for the dot
       case "time" =>
-        (s"stuff(convert(varchar(30), [$name], 114), 9, 1, '.')", name)
+        (s"stuff(convert(varchar(30), $c, 114), 9, 1, '.')", name)
       case "datetime" | "datetime2" | "smalldatetime" | "date" =>
-        (s"convert(varchar(30), [$name], 126)", name)
-      case "datetimeoffset" => (s"convert(varchar(35), [$name], 127)", name)
-      case "bigint" => (s"cast([$name] as numeric(20))", name)
+        (s"convert(varchar(30), $c, 126)", name)
+      case "datetimeoffset" => (s"convert(varchar(35), $c, 127)", name)
+      case "bigint" => (s"cast($c as numeric(20))", name)
       // xml has no direct TDS 7.1 rendering — nvarchar(max) arrives as
       // the ntext token, which the client decodes (the reference lets
       // FreeTDS do the same downgrade; mssql-cast-rules.lisp:66)
-      case "xml" => (s"convert(nvarchar(max), [$name])", name)
+      case "xml" => (s"convert(nvarchar(max), $c)", name)
       // CLR UDTs (hierarchyid/geography/geometry) → their binary form →
       // the image token → bytea hex, matching the *-to-bytea cast rules
       case "hierarchyid" | "geography" | "geometry" =>
-        (s"convert(varbinary(max), [$name])", name)
-      case _ => (s"[$name]", name)
+        (s"convert(varbinary(max), $c)", name)
+      case _ => (c, name)
     }
+  }
 
   /** PG server-side text cast — values arrive as PG literals, the shape
     * the transform layer expects. */
   def pgsqlPair(name: String, typeName: String): (String, String) =
-    (s"""CAST("$name" AS text)""", name)
+    (s"CAST(${PgWire.quoteIdent(name)} AS text)", name)
 
   def selectPairs(kind: String,
                   cols: Seq[(String, String)]): Seq[(String, String)] =
@@ -250,53 +65,20 @@ object ColumnSqlExpressions {
       case "mysql" => cols.map { case (n, t) => mysqlPair(n, t) }
       case "mssql" => cols.map { case (n, t) => mssqlPair(n, t) }
       case "pgsql" => cols.map { case (n, t) => pgsqlPair(n, t) }
-      case _ => cols.map { case (n, _) => (s""""$n"""", n) }
+      case _ => cols.map { case (n, _) => (PgWire.quoteIdent(n), n) }
     }
 }
 
-/** The per-engine catalog SQL the reference issues, re-expressed. These are
-  * the queries to run where JDBC metadata is not enough (CHECK constraints,
-  * comments, exact auto_increment detection); they are exercised against
-  * live servers in integration environments, and kept here as the
-  * documented introspection contract per source kind.
+/** The per-engine catalog SQL the reference issues, re-expressed for the
+  * wire clients: columns, keys, indexes, CHECK constraints, comments,
+  * sequences and custom types. The text protocols have no placeholders,
+  * so a schema filter is inlined as an already-quoted literal.
   */
 object IntrospectionSql {
 
-  /** MySQL information_schema (mysql-schema.lisp:54-212;
-    * src/sources/mysql/sql/list-all-columns.sql). */
-  val mysqlColumns: String =
-    """SELECT c.table_name, c.column_name, c.column_type, c.column_default,
-       c.is_nullable, c.extra, c.column_comment
-       FROM information_schema.columns c
-       JOIN information_schema.tables t USING (table_schema, table_name)
-       WHERE c.table_schema = ? AND t.table_type = 'BASE TABLE'
-       ORDER BY c.table_name, c.ordinal_position"""
-
-  val mysqlIndexes: String =
-    """SELECT table_name, index_name, non_unique,
-       GROUP_CONCAT(column_name ORDER BY seq_in_index) AS columns
-       FROM information_schema.statistics
-       WHERE table_schema = ?
-       GROUP BY table_name, index_name, non_unique"""
-
-  val mysqlFKeys: String =
-    """SELECT k.constraint_name, k.table_name, k.column_name,
-       k.referenced_table_name, k.referenced_column_name,
-       k.ordinal_position, r.update_rule, r.delete_rule
-       FROM information_schema.key_column_usage k
-       JOIN information_schema.referential_constraints r
-         ON r.constraint_schema = k.table_schema
-        AND r.constraint_name = k.constraint_name
-        AND r.table_name = k.table_name
-       WHERE k.table_schema = ? AND k.referenced_table_name IS NOT NULL
-       ORDER BY k.constraint_name, k.ordinal_position"""
-
-  val mysqlRowCount: String =
-    """SELECT table_name, table_rows FROM information_schema.tables
-       WHERE table_schema = ?"""
-
-  /** [[mysqlIndexes]]/[[mysqlFKeys]] with the schema INLINED as a quoted
-    * literal — the text wire protocol has no placeholders. */
+  /** MySQL information_schema indexes and foreign keys
+    * (mysql-schema.lisp:54-212; src/sources/mysql/sql/), the schema
+    * inlined as a quoted literal. */
   def mysqlIndexesInline(schemaLiteral: String): String =
     s"""SELECT table_name, index_name, non_unique,
        GROUP_CONCAT(column_name ORDER BY seq_in_index) AS columns
@@ -346,15 +128,6 @@ object IntrospectionSql {
        WHERE tc.table_schema = $schemaLiteral
          AND tc.constraint_type = 'CHECK'
        ORDER BY tc.table_name, cc.constraint_name"""
-
-  /** SQLite PRAGMA-based introspection (sqlite-schema.lisp). */
-  val sqliteTableList: String =
-    """SELECT name FROM sqlite_master
-       WHERE type = 'table' AND name NOT LIKE 'sqlite_%'"""
-  def sqliteColumns(table: String): String = s"PRAGMA table_info($table)"
-  def sqliteIndexes(table: String): String = s"PRAGMA index_list($table)"
-  def sqliteIndexInfo(index: String): String = s"PRAGMA index_info($index)"
-  def sqliteFKeys(table: String): String = s"PRAGMA foreign_key_list($table)"
 
   /** MSSQL sys views (mssql-schema.lisp). */
   val mssqlColumns: String =
@@ -972,7 +745,8 @@ object IntrospectionRows {
     s
   }
 
-  /** One row of [[IntrospectionSql.mysqlColumns]] (information_schema):
+  /** One row of the information_schema column query
+    * ([[MySqlWireSource.introspect]]):
     * `columnType` is the typemod'd form the MySQL cast guards expect
     * (`int(11)`, `varchar(25)`, `tinyint(1)`, `decimal(12,2)`);
     * `extra` carries `auto_increment` (mysql-schema.lisp:54-212). */

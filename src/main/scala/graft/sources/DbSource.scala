@@ -132,7 +132,10 @@ object DbSource {
       MySqlWireSource.scan(mp, mp.database, t.sourceName,
         partitionKey = pk, rowCountEstimate = rows,
         rowsPerRange = rowsPerRange,
-        charsetName = charsetFor(t.sourceName), local = local)
+        charsetName = charsetFor(t.sourceName),
+        selectCols = ColumnSqlExpressions.selectPairs("mysql",
+          t.fields.map(f => (f.name, f.typeName))),
+        local = local)
     }
   }
 

@@ -134,7 +134,8 @@ object MssqlWireSource {
   /** Wire-token → [[ColumnSqlExpressions.mssqlPair]] rendering for the
     * TOP-0 discovery path. At TDS 7.1 only the datetime family (the
     * server's default text rendering is locale-dependent) and bigint
-    * (stabilized via numeric(20) on the JDBC twin) need server-side
+    * (stabilized via numeric(20), as [[ColumnSqlExpressions.mssqlPair]]
+    * renders it) need server-side
     * expressions; everything else the client decodes to stable text. */
   private def discoveredPair(ci: TdsWire.ColInfo): (String, String) =
     ci.tpe match {

@@ -7,18 +7,18 @@ package graft.sources
   *
   * Partitioning follows the reference's integer-key range split
   * (mysql.lisp:10-62: `rowsPerRange` rows per WHERE range, only when the
-  * table is big enough — the JDBC path's logic, re-expressed for the
-  * wire). One wire connection per partition task, opened executor-side,
-  * rows consumed as a STREAM (one packet decoded per iterator pull).
+  * table is big enough, [[RangeSplit]]). One wire connection per
+  * partition task, opened executor-side, rows consumed as a STREAM (one
+  * packet decoded per iterator pull).
   * Values arrive as TEXT (fidelity mode; the cast engine types them
   * downstream). Identifiers are back-quoted at every SQL build site.
   */
 object MySqlWireSource {
   import MySqlWire.{quoteIdent, quoteLiteral}
 
-  /** Catalog introspection over the wire: the
-    * [[IntrospectionSql.mysqlColumns]] information_schema query with the
-    * schema inlined (the text protocol has no placeholders), mapped by
+  /** Catalog introspection over the wire: an information_schema
+    * column query with the schema inlined (the text protocol has no
+    * placeholders), mapped by
     * [[IntrospectionRows.mysqlTables]]; secondary indexes and foreign
     * keys from information_schema statistics/key_column_usage so the
     * target gets them rebuilt (mysql-schema.lisp list-all-indexes /
@@ -133,9 +133,12 @@ object MySqlWireSource {
   /** Plan the read of `schema.table`. With an integer `partitionKey`
     * and at least `2 * rowsPerRange` rows (the reference's guard,
     * mysql.lisp:44-47) it splits into [[RangeSplit.predicates]] key
-    * ranges, one split each; otherwise it is one full scan, which for
-    * a `local` caller (a driver read) is `SELECT *` with no column
-    * probe. Distributed splits name the columns a `LIMIT 0`
+    * ranges, one split each; otherwise it is one full scan. `selectCols`
+    * is (server-side expression, output name) pairs —
+    * [[ColumnSqlExpressions.mysqlPair]] output, so geometry arrives as
+    * `st_astext` text — and every split selects them. When empty, a
+    * `local` caller's (a driver read's) full scan is `SELECT *` with no
+    * column probe, and distributed splits name the columns a `LIMIT 0`
     * probe discovered. Every split decodes with `charsetName` (DECODING
     * TABLE NAMES MATCHING), straight to catalyst form. */
   def scan(params: MySqlWire.ConnParams, schema: String, table: String,
@@ -143,25 +146,35 @@ object MySqlWireSource {
            rowCountEstimate: Long = 0L,
            rowsPerRange: Long = 10000L,
            charsetName: String = "UTF-8",
+           selectCols: Seq[(String, String)] = Nil,
            local: Boolean = false): ScanPlan[String] = {
     val qtable = s"${quoteIdent(schema)}.${quoteIdent(table)}"
     val open = (sql: String) =>
       ScanPlan.opened(new MySqlWireConnection(params))(
         _.queryStreamData(sql, java.nio.charset.Charset.forName(charsetName)))
-    if (local && !RangeSplit.splits(partitionKey, rowCountEstimate, rowsPerRange))
+    val whole =
+      local && !RangeSplit.splits(partitionKey, rowCountEstimate, rowsPerRange)
+    if (whole && selectCols.isEmpty)
       ScanPlan(Nil, Seq(s"SELECT * FROM $qtable"), open)
     else {
-      val names = {
-        val conn = new MySqlWireConnection(params)
-        try conn.query(s"SELECT * FROM $qtable LIMIT 0")._1
-        finally conn.close()
-      }
-      require(names.nonEmpty, s"no columns resolved for $schema.$table")
-      val preds = RangeSplit.wheres(partitionKey, rowCountEstimate,
-        rowsPerRange, quoteIdent)(integerBounds(params, schema, table, _))
-      val select = names.map(quoteIdent).mkString(", ")
-      ScanPlan(names, preds.map(pred =>
-        s"SELECT $select FROM $qtable WHERE $pred"), open)
+      val resolved =
+        if (selectCols.nonEmpty) selectCols
+        else {
+          val conn = new MySqlWireConnection(params)
+          try conn.query(s"SELECT * FROM $qtable LIMIT 0")._1
+            .map(n => (quoteIdent(n), n))
+          finally conn.close()
+        }
+      require(resolved.nonEmpty, s"no columns resolved for $schema.$table")
+      val select = resolved.map { case (e, a) =>
+        if (e == quoteIdent(a)) e else s"$e AS ${quoteIdent(a)}"
+      }.mkString(", ")
+      val splits =
+        if (whole) Seq(s"SELECT $select FROM $qtable")
+        else RangeSplit.wheres(partitionKey, rowCountEstimate, rowsPerRange,
+          quoteIdent)(integerBounds(params, schema, table, _)).map(pred =>
+          s"SELECT $select FROM $qtable WHERE $pred")
+      ScanPlan(resolved.map(_._2), splits, open)
     }
   }
 }

@@ -8,7 +8,7 @@ import graft.sinks.{PgWire, PgWireConnection}
   * no pgjdbc jar anywhere, matching the reference's own bundled protocol
   * client for its PG source (pgsql/pgsql.lisp map-rows).
   *
-  * Partitioning mirrors the JDBC path's ctid strategy
+  * Partitioning follows the reference's ctid strategy
   * ([[IntrospectionSql.pgsqlCtidPredicates]]): one block-range predicate
   * per Spark partition, one wire connection per partition task, opened
   * executor-side and consumed as a STREAM — DataRow frames decode one at
@@ -265,7 +265,7 @@ object PgWireSource {
   }
 
   /** Read `table` split into ctid page ranges, `pagesPerChunk` blocks
-    * per partition (relpages from pg_class, as the JDBC path does).
+    * per partition (relpages from pg_class, [[relpagesOf]]).
     * `selectCols` as in [[scan]]; defaults to the discovered column
     * list (quoted). */
   def readByCtid(spark: SparkSession, params: PgWire.ConnParams,

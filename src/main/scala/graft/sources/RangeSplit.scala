@@ -11,9 +11,8 @@ private[graft] object RangeSplit {
     * row-count estimate, not the key span: a sparse 64-bit key
     * (snowflake ids, lo≈0 hi≈10¹⁸) would otherwise materialize
     * ~(hi-lo)/rowsPerRange predicate strings on the driver before the
-    * first task launches. Capped, each range's stride widens — the same
-    * `numPartitions = ceil(rows / rowsPerRange)` sizing the JDBC path
-    * uses (JdbcSource.read).
+    * first task launches. Capped, each range's stride widens: there are
+    * at most `ceil(rows / rowsPerRange)` ranges.
     *
     * @param quotedCol the partition column ALREADY quoted for the
     *   target dialect (back-quotes for MySQL, brackets for MSSQL)

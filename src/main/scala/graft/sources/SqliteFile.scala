@@ -6,9 +6,8 @@ import java.nio.charset.{Charset, StandardCharsets}
 /** Driver-free SQLite source: a from-scratch reader of the public SQLite
   * database file format (https://www.sqlite.org/fileformat2.html) — the
   * same move as the PG/MySQL wire clients, applied to a FILE protocol:
-  * no sqlite-jdbc jar exists in the offline caches (COVERAGE "Known
-  * gaps"), but the format is stable, documented, and far smaller than a
-  * server protocol. The reference reads these same files through the
+  * no SQLite driver jar is on the classpath, but the format is stable,
+  * documented, and far smaller than a server protocol. The reference reads these same files through the
   * sqlite C library (src/sources/sqlite/sqlite.lisp); its regression
   * fixtures (the .db and .sqlite files under test/sqlite) are this
   * reader's golden inputs.

@@ -1,70 +1,47 @@
 package graft
 
-import java.sql.DriverManager
 import org.scalatest.funsuite.AnyFunSuite
 import graft.casting.DefaultCastRules
-import graft.catalog.Ddl
-import graft.sources.JdbcSource
+import graft.catalog.{Catalog, Ddl, FKey, Index, Schema}
+import graft.sources.IntrospectionRows.{MssqlColumn, mssqlTables}
 
-/** JDBC introspection against a real embedded database (Derby ships with
-  * Spark): tables, column types/typemods, auto-increment, PK/unique
-  * indexes, FKs, row counts — then the cast engine + DDL emission over
-  * the introspected catalog. */
-class JdbcSourceSpec extends AnyFunSuite {
+/** The catalog SQL's pure parts ([[graft.sources.ColumnSqlExpressions]],
+  * [[graft.sources.IntrospectionSql]], [[graft.sources.IntrospectionRows]])
+  * and the cast engine + DDL emission over a catalog built from
+  * introspection rows. */
+class CatalogSqlSpec extends AnyFunSuite {
 
-  private lazy val url: String = {
-    val dir = java.nio.file.Files.createTempDirectory("derbyspec").toFile
-    val u = s"jdbc:derby:${dir.getAbsolutePath}/db;create=true"
-    val conn = DriverManager.getConnection(u)
-    val st = conn.createStatement()
-    st.executeUpdate(
-      """CREATE TABLE REGIONS (
-           R_ID INT NOT NULL GENERATED ALWAYS AS IDENTITY PRIMARY KEY,
-           R_NAME VARCHAR(25) NOT NULL)""")
-    st.executeUpdate(
-      """CREATE TABLE NATIONS (
-           N_ID INT NOT NULL PRIMARY KEY,
-           N_NAME VARCHAR(25),
-           N_BUDGET DECIMAL(12,2),
-           N_REGION INT REFERENCES REGIONS (R_ID))""")
-    st.executeUpdate("CREATE INDEX NATIONS_NAME_IDX ON NATIONS (N_NAME)")
-    st.executeUpdate(
-      "INSERT INTO REGIONS (R_NAME) VALUES ('east'), ('west')")
-    st.executeUpdate(
-      "INSERT INTO NATIONS VALUES (1, 'a', 10.50, 1), (2, 'b', 20.25, 2)")
-    st.close(); conn.close()
-    u
+  /** Two upper-case tables as an MSSQL catalog reports them: an identity
+    * key, typemod'd columns, a plain index and a foreign key. */
+  private lazy val cat: Catalog = {
+    val tables = mssqlTables(Seq(
+      MssqlColumn("APP", "REGIONS", "R_ID", "int", 4, 10, 0,
+        nullable = false, identity = true, None),
+      MssqlColumn("APP", "REGIONS", "R_NAME", "varchar", 25, 0, 0,
+        nullable = false, identity = false, None),
+      MssqlColumn("APP", "NATIONS", "N_ID", "int", 4, 10, 0,
+        nullable = false, identity = false, None),
+      MssqlColumn("APP", "NATIONS", "N_NAME", "varchar", 25, 0, 0,
+        nullable = true, identity = false, None),
+      MssqlColumn("APP", "NATIONS", "N_BUDGET", "decimal", 9, 12, 2,
+        nullable = true, identity = false, None),
+      MssqlColumn("APP", "NATIONS", "N_REGION", "int", 4, 10, 0,
+        nullable = true, identity = false, None))).map {
+      case t if t.name == "NATIONS" => t.copy(
+        indexes = Seq(
+          Index("NATIONS_PK", "NATIONS", primary = true, unique = true,
+            columns = Seq("N_ID")),
+          Index("NATIONS_NAME_IDX", "NATIONS", columns = Seq("N_NAME"))),
+        fkeys = Seq(FKey("NATIONS_FK", "NATIONS", Seq("N_REGION"),
+          "REGIONS", Seq("R_ID"))))
+      case t => t
+    }
+    Catalog("mssql://u@h/db", Seq(Schema("APP", tables = tables)))
   }
 
-  private lazy val cat = JdbcSource.introspect(url,
-    schemaPattern = Some("APP"))
-
-  test("tables, columns, typemods, auto-increment") {
-    val nations = cat.allTables.find(_.name == "NATIONS").get
-    assert(nations.fields.map(_.name) ==
-      Seq("N_ID", "N_NAME", "N_BUDGET", "N_REGION"))
-    assert(nations.fields.map(_.ctype) ==
-      Seq("integer", "varchar(25)", "decimal(12,2)", "integer"))
-    assert(!nations.fields.head.nullable)
-    assert(nations.rowCountEstimate == 2)
-    val regions = cat.allTables.find(_.name == "REGIONS").get
-    assert(regions.fields.head.autoIncrement)
-    assert(regions.rowCountEstimate == 2)
-  }
-
-  test("primary keys, unique + plain indexes, foreign keys") {
-    val nations = cat.allTables.find(_.name == "NATIONS").get
-    assert(nations.indexes.exists(i => i.primary && i.columns == Seq("N_ID")))
-    assert(nations.indexes.exists(i =>
-      !i.unique && i.columns == Seq("N_NAME")))
-    val fk = nations.fkeys.head
-    assert(fk.columns == Seq("N_REGION"))
-    assert(fk.foreignTable == "REGIONS")
-    assert(fk.foreignColumns == Seq("R_ID"))
-  }
-
-  test("cast engine over the introspected catalog: ansi defaults") {
-    val cast = cat.cast(Nil, DefaultCastRules.ansi)
+  test("cast engine over an introspected catalog: identity → serial, " +
+    "typemods kept") {
+    val cast = cat.cast(Nil, DefaultCastRules.mssql)
     val regions = cast.allTables.find(_.name == "REGIONS").get
     assert(regions.columns.head.pgType == "serial") // identity → serial
     val nations = cast.allTables.find(_.name == "NATIONS").get
@@ -73,7 +50,7 @@ class JdbcSourceSpec extends AnyFunSuite {
   }
 
   test("DDL emission from the cast-and-cased catalog") {
-    // Derby reports uppercase identifiers; the TARGET casing steps
+    // the source reports uppercase identifiers; the TARGET casing steps
     // (the same ones Migrator.migrate runs — downcase default) fold
     // them, and the Ddl emitters then quote only what still needs it.
     // Emitting WITHOUT casing preserves the names quoted — that is the
@@ -81,7 +58,7 @@ class JdbcSourceSpec extends AnyFunSuite {
     import graft.catalog.{CatalogRewrite, Identifiers}
     val cased = CatalogRewrite.caseColumns(
       CatalogRewrite.caseTargets(cat, Identifiers.Case.Downcase)
-        .cast(Nil, DefaultCastRules.ansi),
+        .cast(Nil, DefaultCastRules.mssql),
       Identifiers.Case.Downcase)
     val nations = cased.allTables.find(_.name == "nations").get
     val ddl = Ddl.createTable(nations)
@@ -91,40 +68,9 @@ class JdbcSourceSpec extends AnyFunSuite {
     assert(Ddl.attachPrimaryKey(pk).contains("ADD PRIMARY KEY USING INDEX"))
     assert(Ddl.addFKey(nations.fkeys.head).contains("REFERENCES"))
     // quote mode: names pass through preserved and come out quoted
-    val quoted = Ddl.createTable(cat.cast(Nil, DefaultCastRules.ansi)
+    val quoted = Ddl.createTable(cat.cast(Nil, DefaultCastRules.mssql)
       .allTables.find(_.name == "NATIONS").get)
     assert(quoted.contains("\"N_ID\" integer NOT NULL"))
-  }
-
-  test("partitioned-read bounds query") {
-    val (lo, hi) = JdbcSource.integerBounds(url, new java.util.Properties,
-      "APP", "NATIONS", "N_ID")
-    assert(lo == 1 && hi == 2)
-  }
-
-  test("materialize-views path: view introspected and loaded via query") {
-    val conn = DriverManager.getConnection(url)
-    val st = conn.createStatement()
-    st.executeUpdate(
-      """CREATE VIEW RICH_NATIONS AS
-         SELECT N_ID, N_NAME FROM NATIONS WHERE N_BUDGET > 15""")
-    st.close(); conn.close()
-    val withViews = JdbcSource.introspect(url, schemaPattern = Some("APP"),
-      rowCounts = false, tableTypes = Array("TABLE", "VIEW"))
-    assert(withViews.allTables.exists(_.name == "RICH_NATIONS"))
-  }
-
-  test("executeDdl hook runs against the target") {
-    JdbcSource.executeDdl(url, new java.util.Properties)(
-      "CREATE TABLE DDL_HOOK_T (X INT);")
-    val (lo, hi) = try {
-      JdbcSource.executeDdl(url, new java.util.Properties)(
-        "INSERT INTO DDL_HOOK_T VALUES (7)")
-      JdbcSource.integerBounds(url, new java.util.Properties,
-        "APP", "DDL_HOOK_T", "X")
-    } finally JdbcSource.executeDdl(url, new java.util.Properties)(
-      "DROP TABLE DDL_HOOK_T")
-    assert(lo == 7 && hi == 7)
   }
 
   test("per-type SELECT expressions match the reference's renderings") {
@@ -144,6 +90,15 @@ class JdbcSourceSpec extends AnyFunSuite {
       Seq(("convert(varchar(30), [t], 126)", "t"), ("[n]", "n")))
     assert(selectPairs("pgsql", Seq(("c", "jsonb"))) ==
       Seq(("""CAST("c" AS text)""", "c")))
+  }
+
+  test("per-type SELECT expressions escape the quote character inside " +
+    "column names") {
+    import graft.sources.ColumnSqlExpressions._
+    assert(mysqlPair("a`b", "point") == (("st_astext(`a``b`)", "a`b")))
+    assert(mssqlPair("a]b", "bigint") ==
+      (("cast([a]]b] as numeric(20))", "a]b")))
+    assert(pgsqlPair("a\"b", "text") == (("CAST(\"a\"\"b\" AS text)", "a\"b")))
   }
 
   test("pg ctid predicates split the heap into block ranges") {
@@ -214,17 +169,6 @@ class JdbcSourceSpec extends AnyFunSuite {
     // through the cast engine: mssql defaults
     val cast = orders.cast(Nil, graft.casting.DefaultCastRules.mssql)
     assert(cast.columns.map(_.pgType) == Seq("serial", "boolean"))
-  }
-
-  test("predicate-partitioned read: one partition per range, full union") {
-    val spark = SparkSpec.session
-    val preds = Seq("N_ID < 2", "N_ID >= 2") // disjoint + covering
-    val df = JdbcSource.readWithPredicates(spark, url,
-      new java.util.Properties, "APP.NATIONS", preds)
-    assert(df.rdd.getNumPartitions == 2)
-    assert(df.count() == 2) // no dup, no drop
-    assert(df.select("N_ID").collect().map(_.getInt(0)).sorted.toSeq ==
-      Seq(1, 2))
   }
 
   test("mysqlCheckToPg rewrites delimiters only — literal content is " +

@@ -95,7 +95,7 @@ class DslParserSpec extends AnyFunSuite {
            INTO postgresql://host:5432/db?public.users
            WITH fields terminated by ',';""")
     assert(cmd.targetUri.contains("postgresql://host:5432/db"),
-      "?table suffix must not leak into the JDBC connection uri")
+      "?table suffix must not leak into the connection uri")
     assert(cmd.targetSchema.contains("public"))
     assert(cmd.targetTable.contains("users"))
   }

@@ -222,7 +222,8 @@ final class FakePgServer(
             val sql = new String(payload.dropRight(1), UTF_8)
             val up = sql.toUpperCase
             if (up.startsWith("COPY")) handleCopy(sql)
-            else if (up.startsWith("SELECT")) handleSelect(sql)
+            else if (up.startsWith("SELECT") || up.startsWith("WITH"))
+              handleSelect(sql)
             else {
               executed.synchronized(executed += sql)
               commandComplete(sql.trim.split("\\s+").head.toUpperCase)

@@ -606,7 +606,7 @@ class MigrateSpec extends AnyFunSuite {
     val m = new Migrator(
       executeDdl = (sql, _) => events.add(sql.replaceAll("\\s+", " ")),
       loadTable = (_, _) => (0L, 0L, 0L))
-    m.migrate(mkCat, defaults = DefaultCastRules.ansi, dropSchema = true)
+    m.migrate(mkCat, defaults = DefaultCastRules.mssql, dropSchema = true)
     val ev = events.asScala.toSeq
     val drop = ev.indexWhere(_ == "DROP SCHEMA IF EXISTS app CASCADE;")
     val create = ev.indexWhere(_ == "CREATE SCHEMA IF NOT EXISTS app;")
@@ -614,7 +614,7 @@ class MigrateSpec extends AnyFunSuite {
     // default: table-scoped source index names uniquify per schema
     assert(ev.exists(_.contains("same_name_1")))
     events.clear()
-    m.migrate(mkCat, defaults = DefaultCastRules.ansi,
+    m.migrate(mkCat, defaults = DefaultCastRules.mssql,
       preserveIndexNames = true)
     val ev2 = events.asScala.toSeq
     assert(ev2.count(_.contains("INDEX same_name ")) == 2,
