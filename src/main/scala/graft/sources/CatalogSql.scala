@@ -2,7 +2,6 @@ package graft.sources
 
 import graft.casting.SourceColumn
 import graft.catalog.{CheckDef, Ddl, FKey, Index, Table}
-import graft.sinks.PgWire
 
 // The catalog SQL of every database source and the row mappings that
 // turn its answers into catalog tables. The wire sources
@@ -10,11 +9,11 @@ import graft.sinks.PgWire
 // these statements over their own connections; [[SqliteSource]] reads
 // the file format and feeds [[IntrospectionRows]] the same row shapes.
 
-/** Per-type SELECT expressions for the source query — some types must be
-  * rendered server-side (mysql-schema.lisp:268-286 st_astext for
-  * geometry; mssql-schema.lisp:200-224 convert() for date/time, PG
-  * `CAST(col AS text)` pushdown pgsql.lisp:42-46), as (expression,
-  * output name) pairs the wire sources' `selectCols` take. */
+/** Per-type SELECT expressions for the MySQL and MSSQL source queries —
+  * some types must be rendered server-side (mysql-schema.lisp:268-286
+  * st_astext for geometry; mssql-schema.lisp:200-224 convert() for
+  * date/time), as (expression, output name) pairs the wire sources'
+  * `selectCols` take. */
 object ColumnSqlExpressions {
 
   /** (server-side expression, output column name) — the STRUCTURED form
@@ -54,19 +53,6 @@ object ColumnSqlExpressions {
     }
   }
 
-  /** PG server-side text cast — values arrive as PG literals, the shape
-    * the transform layer expects. */
-  def pgsqlPair(name: String, typeName: String): (String, String) =
-    (s"CAST(${PgWire.quoteIdent(name)} AS text)", name)
-
-  def selectPairs(kind: String,
-                  cols: Seq[(String, String)]): Seq[(String, String)] =
-    kind match {
-      case "mysql" => cols.map { case (n, t) => mysqlPair(n, t) }
-      case "mssql" => cols.map { case (n, t) => mssqlPair(n, t) }
-      case "pgsql" => cols.map { case (n, t) => pgsqlPair(n, t) }
-      case _ => cols.map { case (n, _) => (PgWire.quoteIdent(n), n) }
-    }
 }
 
 /** The per-engine catalog SQL the reference issues, re-expressed for the

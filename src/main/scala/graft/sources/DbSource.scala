@@ -130,11 +130,10 @@ object DbSource {
         if (pk.isEmpty) 0L
         else MySqlWireSource.rowCountOf(mp, mp.database, t.sourceName)
       MySqlWireSource.scan(mp, mp.database, t.sourceName,
+        t.fields.map(f => ColumnSqlExpressions.mysqlPair(f.name, f.typeName)),
         partitionKey = pk, rowCountEstimate = rows,
         rowsPerRange = rowsPerRange,
         charsetName = charsetFor(t.sourceName),
-        selectCols = ColumnSqlExpressions.selectPairs("mysql",
-          t.fields.map(f => (f.name, f.typeName))),
         local = local)
     }
   }
@@ -220,8 +219,8 @@ object DbSource {
       MssqlWireSource.scan(tp, t.sourceSchemaName, t.sourceName,
         partitionKey = pk, rowCountEstimate = rows,
         rowsPerRange = rowsPerRange,
-        selectCols = ColumnSqlExpressions.selectPairs("mssql",
-          t.fields.map(f => (f.name, f.typeName))),
+        selectCols = t.fields.map(f =>
+          ColumnSqlExpressions.mssqlPair(f.name, f.typeName)),
         local = local)
     }
   }

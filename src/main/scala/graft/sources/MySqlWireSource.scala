@@ -136,45 +136,30 @@ object MySqlWireSource {
     * ranges, one split each; otherwise it is one full scan. `selectCols`
     * is (server-side expression, output name) pairs —
     * [[ColumnSqlExpressions.mysqlPair]] output, so geometry arrives as
-    * `st_astext` text — and every split selects them. When empty, a
-    * `local` caller's (a driver read's) full scan is `SELECT *` with no
-    * column probe, and distributed splits name the columns a `LIMIT 0`
-    * probe discovered. Every split decodes with `charsetName` (DECODING
-    * TABLE NAMES MATCHING), straight to catalyst form. */
+    * `st_astext` text — and every split selects them. Every split
+    * decodes with `charsetName` (DECODING TABLE NAMES MATCHING),
+    * straight to catalyst form. */
   def scan(params: MySqlWire.ConnParams, schema: String, table: String,
+           selectCols: Seq[(String, String)],
            partitionKey: Option[String] = None,
            rowCountEstimate: Long = 0L,
            rowsPerRange: Long = 10000L,
            charsetName: String = "UTF-8",
-           selectCols: Seq[(String, String)] = Nil,
            local: Boolean = false): ScanPlan[String] = {
+    require(selectCols.nonEmpty, s"no columns selected for $schema.$table")
     val qtable = s"${quoteIdent(schema)}.${quoteIdent(table)}"
+    val select = selectCols.map { case (e, a) =>
+      if (e == quoteIdent(a)) e else s"$e AS ${quoteIdent(a)}"
+    }.mkString(", ")
     val open = (sql: String) =>
       ScanPlan.opened(new MySqlWireConnection(params))(
         _.queryStreamData(sql, java.nio.charset.Charset.forName(charsetName)))
-    val whole =
-      local && !RangeSplit.splits(partitionKey, rowCountEstimate, rowsPerRange)
-    if (whole && selectCols.isEmpty)
-      ScanPlan(Nil, Seq(s"SELECT * FROM $qtable"), open)
-    else {
-      val resolved =
-        if (selectCols.nonEmpty) selectCols
-        else {
-          val conn = new MySqlWireConnection(params)
-          try conn.query(s"SELECT * FROM $qtable LIMIT 0")._1
-            .map(n => (quoteIdent(n), n))
-          finally conn.close()
-        }
-      require(resolved.nonEmpty, s"no columns resolved for $schema.$table")
-      val select = resolved.map { case (e, a) =>
-        if (e == quoteIdent(a)) e else s"$e AS ${quoteIdent(a)}"
-      }.mkString(", ")
-      val splits =
-        if (whole) Seq(s"SELECT $select FROM $qtable")
-        else RangeSplit.wheres(partitionKey, rowCountEstimate, rowsPerRange,
-          quoteIdent)(integerBounds(params, schema, table, _)).map(pred =>
-          s"SELECT $select FROM $qtable WHERE $pred")
-      ScanPlan(resolved.map(_._2), splits, open)
-    }
+    val splits =
+      if (local && !RangeSplit.splits(partitionKey, rowCountEstimate,
+            rowsPerRange)) Seq(s"SELECT $select FROM $qtable")
+      else RangeSplit.wheres(partitionKey, rowCountEstimate, rowsPerRange,
+        quoteIdent)(integerBounds(params, schema, table, _)).map(pred =>
+        s"SELECT $select FROM $qtable WHERE $pred")
+    ScanPlan(selectCols.map(_._2), splits, open)
   }
 }

@@ -202,9 +202,8 @@ object PgWireSource {
     * The same row carries the relpages a big heap splits by.
     *
     * `selectCols` is (server-side expression, output name) pairs —
-    * [[ColumnSqlExpressions.pgsqlPair]] output for per-type source
-    * rewrites, or the non-generated columns (expressions used
-    * verbatim; quote identifiers yourself inside them); empty = every
+    * the non-generated columns (expressions used verbatim; quote
+    * identifiers yourself inside them); empty = every
     * column (`*` on the driver, a LIMIT 0 discovery for a split read). */
   def scan(params: PgWire.ConnParams, table: String,
            partitioned: Boolean = false, view: Boolean = false,

@@ -80,16 +80,8 @@ class CatalogSqlSpec extends AnyFunSuite {
     assert(mssqlPair("t", "datetime") ==
       (("convert(varchar(30), [t], 126)", "t")))
     assert(mssqlPair("n", "bigint") == (("cast([n] as numeric(20))", "n")))
-    assert(pgsqlPair("c", "jsonb") == (("""CAST("c" AS text)""", "c")))
-    assert(selectPairs("mysql",
-      Seq(("a", "int"), ("g", "geometry"))) ==
-      Seq(("`a`", "a"), ("st_astext(`g`)", "g")))
-    // the structured form the wire sources consume: alias carried
-    // separately, never re-parsed out of the expression string
-    assert(selectPairs("mssql", Seq(("t", "datetime"), ("n", "int"))) ==
-      Seq(("convert(varchar(30), [t], 126)", "t"), ("[n]", "n")))
-    assert(selectPairs("pgsql", Seq(("c", "jsonb"))) ==
-      Seq(("""CAST("c" AS text)""", "c")))
+    assert(mysqlPair("g", "geometry") == (("st_astext(`g`)", "g")))
+    assert(mssqlPair("n", "int") == (("[n]", "n")))
   }
 
   test("per-type SELECT expressions escape the quote character inside " +
@@ -98,7 +90,6 @@ class CatalogSqlSpec extends AnyFunSuite {
     assert(mysqlPair("a`b", "point") == (("st_astext(`a``b`)", "a`b")))
     assert(mssqlPair("a]b", "bigint") ==
       (("cast([a]]b] as numeric(20))", "a]b")))
-    assert(pgsqlPair("a\"b", "text") == (("CAST(\"a\"\"b\" AS text)", "a\"b")))
   }
 
   test("pg ctid predicates split the heap into block ranges") {

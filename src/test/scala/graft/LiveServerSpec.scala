@@ -1081,7 +1081,9 @@ class LiveServerSpec extends SparkSpec {
     val rows = graft.sources.MySqlWireSource.rowCountOf(
       mp, mp.database, t.sourceName)
     val df = graft.sources.MySqlWireSource.scan(mp, mp.database,
-      t.sourceName, partitionKey = pk, rowCountEstimate = rows).frame(spark)
+      t.sourceName, t.fields.map(f =>
+        graft.sources.ColumnSqlExpressions.mysqlPair(f.name, f.typeName)),
+      partitionKey = pk, rowCountEstimate = rows).frame(spark)
     assert(df.count() >= 0L)
     info(s"live MySQL: read ${df.count()} rows from ${t.sourceName} " +
       s"(estimate $rows, ${df.rdd.getNumPartitions} partitions)")
@@ -1101,8 +1103,8 @@ class LiveServerSpec extends SparkSpec {
       tp, t.schema, t.sourceName)
     val df = graft.sources.MssqlWireSource.scan(tp, t.schema,
       t.sourceName, partitionKey = pk, rowCountEstimate = rows,
-      selectCols = graft.sources.ColumnSqlExpressions.selectPairs(
-        "mssql", t.fields.map(f => (f.name, f.typeName)))).frame(spark)
+      selectCols = t.fields.map(f => graft.sources.ColumnSqlExpressions
+        .mssqlPair(f.name, f.typeName))).frame(spark)
     assert(df.count() >= 0L)
     info(s"live MSSQL: read ${df.count()} rows from ${t.sourceName}")
   }

@@ -472,9 +472,10 @@ class MssqlWireSpec extends SparkSpec {
       val discovered = MssqlWireSource.scan(params(srv.port),
         "dbo", "evts").frame(spark).collect().map(_.toSeq).toSeq
       val explicit = MssqlWireSource.scan(params(srv.port),
-        "dbo", "evts", selectCols =
-          graft.sources.ColumnSqlExpressions.selectPairs("mssql",
-            Seq(("id", "bigint"), ("at", "datetime")))).frame(spark).collect()
+        "dbo", "evts", selectCols = Seq(("id", "bigint"),
+          ("at", "datetime")).map { case (n, t) =>
+          graft.sources.ColumnSqlExpressions.mssqlPair(n, t)
+        }).frame(spark).collect()
         .map(_.toSeq).toSeq
       assert(discovered == explicit)
       // both paths issued the SAME select list: bigint stabilized via

@@ -229,14 +229,15 @@ class MySqlWireSpec extends SparkSpec {
         else None)
     try {
       val df = MySqlWireSource.scan(params(srv.port), "db", "t",
+        Seq(("`k`", "k"), ("`v`", "v")),
         partitionKey = Some("k"), rowCountEstimate = n.toLong,
         rowsPerRange = 10L).frame(spark)
       assert(df.rdd.getNumPartitions == 3) // [0,10) [10,20) [20,∞)
       val got = df.collect().map(r => (r.getString(0), r.getString(1)))
         .sortBy(_._1.toInt)
       assert(got.toSeq == rows.map(r => (r(0), r(1))))
-      // 1 LIMIT 0 discovery + 1 bounds + one connection per partition
-      assert(srv.connections.get == 5)
+      // 1 bounds + one connection per partition
+      assert(srv.connections.get == 4)
     } finally srv.close()
   }
 
@@ -273,7 +274,7 @@ class MySqlWireSpec extends SparkSpec {
       tableRows = Seq(Array("1"), Array("2")))
     try {
       val df = MySqlWireSource.scan(params(srv.port), "db", "t",
-        partitionKey = Some("k"), rowCountEstimate = 2L,
+        Seq(("`k`", "k")), partitionKey = Some("k"), rowCountEstimate = 2L,
         rowsPerRange = 10L).frame(spark)
       assert(df.rdd.getNumPartitions == 1)
       assert(df.collect().map(_.getString(0)).sorted.toSeq == Seq("1", "2"))
@@ -291,7 +292,7 @@ class MySqlWireSpec extends SparkSpec {
     })
     try {
       val df = MySqlWireSource.scan(params(srv.port), "db",
-        "weird `tbl").frame(spark)
+        "weird `tbl", Seq(("`a`", "a"))).frame(spark)
       assert(df.collect().map(_.getString(0)).sorted.toSeq == Seq("1", "2"))
       val sqls = seen.synchronized(seen.toList)
       assert(sqls.nonEmpty && sqls.forall(_.contains(quoted)))
@@ -449,6 +450,8 @@ class MySqlWireSpec extends SparkSpec {
           val pk = t.fields.find(_.autoIncrement).map(_.name)
           val rows = MySqlWireSource.rowCountOf(mp, "db", t.sourceName)
           val df = MySqlWireSource.scan(mp, "db", t.sourceName,
+            t.fields.map(f => graft.sources.ColumnSqlExpressions.mysqlPair(
+              f.name, f.typeName)),
             partitionKey = pk, rowCountEstimate = rows).frame(spark)
           new CopySink(endpointFactory = _ => new PgWireCopyEndpoint(dp,
             s"COPY ${PgWire.quoteIdent(t.schema)}.${PgWire.quoteIdent(t.name)}" +
@@ -668,8 +671,8 @@ class MySqlWireSpec extends SparkSpec {
     } == driverFiles)
   }
 
-  test("Runner: a point column is selected through st_astext and lands " +
-    "as WKT text, on the driver route and WITH exactly once") {
+  test("Runner: a point column is selected through st_astext (WKT), " +
+    "on the driver route and WITH exactly once") {
     val cols6 = Seq("table_name", "column_name", "column_type",
       "column_default", "is_nullable", "extra")
     /** (rows landed, data SELECTs sent) of one load. */
@@ -722,9 +725,13 @@ class MySqlWireSpec extends SparkSpec {
     assert(graft.sinks.LocalCopy.loads.get() - loadsBefore == 1)
     val (sparkRows, sparkSql) = load(", exactly once")
     for ((rows, sqls) <- Seq(driverRows -> driverSql, sparkRows -> sparkSql)) {
-      assert(rows == Seq("1\tPOINT(1 2)", "2\t\\N"), rows)
       assert(sqls.nonEmpty && sqls.forall(
         _.startsWith("SELECT `id`, st_astext(`loc`) AS `loc` FROM")), sqls)
+      // the WKT reaches COPY as the server rendered it. The mysql rules
+      // cast `point` to PG `point`, which rejects WKT: a real target
+      // needs `convert-mysql-point` to turn it into `(1,2)`, and
+      // LOAD DATABASE does not run cast-rule transforms yet
+      assert(rows == Seq("1\tPOINT(1 2)", "2\t\\N"), rows)
     }
   }
 
