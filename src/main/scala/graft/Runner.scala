@@ -97,8 +97,9 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
 
   /** [[runFile]] with the SparkSession supplied lazily. File loads call
     * `sparkF` at once. A database load calls it only for reads that
-    * need Spark — views, DISTRIBUTE backfills, `exactly once`, or a
-    * cluster master's multi-split tables — and then calls it first
+    * need Spark — views, DISTRIBUTE backfills, or a table's scan plan
+    * read as a frame (`exactly once`, a cluster master's multi-split
+    * tables) — and then calls it first
     * from a background thread before introspection, so a lazy boot
     * overlaps the catalog and DDL phases; under a local master a load
     * of plain tables never calls it. `sparkF` must be thread-safe and
@@ -199,17 +200,18 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
           case (Some(s), Some(tn)) => s"$s.$tn"
           case (_, tn) => tn.getOrElse("data")
         }
-        // `WITH create table` on DBF/IXF loads: the file format carries
-        // its own schema, so the target table is created from it
-        // (db3.lisp / ixf.lisp cast path; fixture dbf-31.load)
+        // DBF/IXF files carry their own schema, read once: `WITH create
+        // table` creates the target table from it (db3.lisp / ixf.lisp
+        // cast path; fixture dbf-31.load) and the COPY column list
+        // names the same columns
+        val fileCols = scala.util.Try(fileColumns(spark, cmd, baseDir))
         if (cmd.boolOption("create table") || cmd.boolOption("create tables"))
-          fileSchemaDdl(spark, cmd, baseDir).foreach { cols =>
+          fileCols.get.foreach { cols =>
             val qt = graft.sinks.PgWire.quoteQualified(table)
             if (cmd.boolOption("include drop"))
               ddl(s"DROP TABLE IF EXISTS $qt;", gucSql)
-            ddl(
-              s"CREATE TABLE IF NOT EXISTS $qt (${cols.mkString(", ")});",
-              gucSql)
+            ddl(s"CREATE TABLE IF NOT EXISTS $qt " +
+              s"(${fileSchemaDdl(cmd, cols).mkString(", ")});", gucSql)
           }
         // `WITH truncate` empties the target before loading (the
         // reference truncates in its before-copy hook) — without it a
@@ -236,9 +238,7 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
           nameColumns = cmd.fields.nonEmpty ||
             cmd.targetColumns.nonEmpty,
           fileNameCase = idModeOf(cmd),
-          rawFileNames =
-            try fileRawNames(spark, cmd, baseDir)
-            catch { case scala.util.control.NonFatal(_) => None }))
+          rawFileNames = fileCols.toOption.flatten.map(_.map(_.raw))))
         rebuildIndexesAsync(table, droppedIdx, gucSql,
           cmd.intOption("max parallel create index").getOrElse(0))
         stats
@@ -668,36 +668,64 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
     }
   }
 
-  /** Column DDL (name + PG type) from a self-describing file source's
-    * own schema — DBF field descriptors / IXF column records. None for
-    * formats that carry no schema (CSV/COPY/fixed rely on BEFORE LOAD
-    * DO or a pre-created table). */
-  /** RAW descriptor column spellings for schema-carrying file sources
-    * (DBF/IXF) — the basis the COPY column list cases by, so it always
-    * agrees with the DDL [[fileSchemaDdl]] emits. None for sources
-    * whose names are user-written (CSV fields) or synthetic. */
-  private def fileRawNames(spark: SparkSession, cmd: Ast.LoadCommand,
-                           baseDir: String): Option[Seq[String]] = {
+  /** The columns of a schema-carrying file source (DBF/IXF), read once
+    * per command from the first file's header. None for formats whose
+    * names are user-written (CSV fields) or synthetic. */
+  private def fileColumns(spark: SparkSession, cmd: Ast.LoadCommand,
+                          baseDir: String)
+      : Option[Seq[Runner.FileColumn]] = {
     def firstPath: String = {
       val p = PlanBuilder
         .resolvePath(spark, cmd.source.get, baseDir).split(',').head
+      // a zipped DBF source: the schema lives in the archive's .dbf
+      // member (tests/dbf/dbf-zip with `create table`); the member
+      // list is cached, so data read + DDL share ONE extraction
       if (!p.toLowerCase.endsWith(".zip")) p
       else graft.sources.Archive.dbfMembers(p).head
     }
     cmd.loadType match {
       case "dbf" =>
+        // header only — 32 + 32·nFields + 1 bytes; never the whole file
+        // on the driver (a dbf can be gigabytes)
         val in = new java.io.FileInputStream(firstPath)
         val bytes =
           try in.readNBytes(32 * 2049 + 1)
           finally in.close()
-        Some(graft.sources.DbfSource.parseHeader(bytes)
-          .fields.map(_.rawOrName))
+        Some(graft.sources.DbfSource.parseHeader(bytes).fields.map { f =>
+          // ctype = the PG-mapped type, the SAME spelling the data
+          // path feeds CastEngine (PlanBuilder's dbf branch) — a
+          // type-keyed user rule must fire for BOTH the DDL and the
+          // transform or they disagree
+          val t = graft.sources.DbfSource.pgType(f)
+          Runner.FileColumn(f.rawOrName, f.name, t, t)
+        })
       case "ixf" =>
         val in = new java.io.BufferedInputStream(
           new java.io.FileInputStream(firstPath))
-        try Some(graft.sources.IxfSource.readColumns(in).map(_.rawOrName))
+        try Some(graft.sources.IxfSource.readColumns(in).map(c =>
+          Runner.FileColumn(c.rawOrName, c.name, c.typeCode.toString,
+            graft.sources.IxfSource.pgType(c))))
         finally in.close()
       case _ => None
+    }
+  }
+
+  /** Column DDL (name + PG type) from a file's own [[Runner.FileColumn]]s.
+    * Names case by the command's identifier mode (downcase default;
+    * quote preserves the descriptor spelling, like the reference;
+    * snake_case splits it) — the COPY column list in load() cases the
+    * same way, so DDL and COPY always agree. A USER cast rule with a
+    * target overrides the file-derived column type (dbf-memo.load:
+    * normdocid to uuid, doctype to integer). */
+  private def fileSchemaDdl(cmd: Ast.LoadCommand,
+                            cols: Seq[Runner.FileColumn]): Seq[String] = {
+    val tbl = cmd.targetTable.getOrElse("data")
+    cols.map { c =>
+      val userType = cmd.castRules.find(r => r.target.nonEmpty &&
+        r.source.matches(graft.casting.SourceColumn(tbl, c.name, c.ctype)))
+      s"${graft.sinks.PgWire.quoteIdent(
+        graft.catalog.Identifiers(c.raw, idModeOf(cmd)))} " +
+        userType.fold(c.pgType)(_.target.get.pgType)
     }
   }
 
@@ -722,71 +750,14 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
       graft.catalog.Identifiers.Case.SnakeCase
     else graft.catalog.Identifiers.Case.Downcase
 
-  private def fileSchemaDdl(spark: SparkSession, cmd: Ast.LoadCommand,
-                            baseDir: String): Option[Seq[String]] = {
-    def firstPath: String = {
-      val p = PlanBuilder
-        .resolvePath(spark, cmd.source.get, baseDir).split(',').head
-      // a zipped DBF source: the schema lives in the archive's .dbf
-      // member (tests/dbf/dbf-zip with `create table`); the member
-      // list is cached, so data read + DDL share ONE extraction
-      if (!p.toLowerCase.endsWith(".zip")) p
-      else graft.sources.Archive.dbfMembers(p).head
-    }
-    // file-derived names case by the command's identifier mode
-    // (downcase default = the old unconditional fold; quote preserves
-    // the descriptor spelling; snake_case splits it) — the COPY column
-    // list in load() cases the same way, so DDL and COPY always agree
-    def q(n: String) = graft.sinks.PgWire.quoteIdent(
-      graft.catalog.Identifiers(n, idModeOf(cmd)))
-    // a USER cast rule with a target overrides the file-derived column
-    // type (dbf-memo.load: normdocid to uuid, doctype to integer)
-    def userType(tbl: String, name: String, ctype: String)
-        : Option[String] =
-      cmd.castRules.find(r => r.target.nonEmpty && r.source.matches(
-        graft.casting.SourceColumn(tbl, name, ctype)))
-        .map(_.target.get.pgType)
-    cmd.loadType match {
-      case "dbf" =>
-        // header only — 32 + 32·nFields + 1 bytes; never the whole file
-        // on the driver (a dbf can be gigabytes)
-        val in = new java.io.FileInputStream(firstPath)
-        val bytes =
-          try in.readNBytes(32 * 2049 + 1)
-          finally in.close()
-        val h = graft.sources.DbfSource.parseHeader(bytes)
-        val tbl = cmd.targetTable.getOrElse("data")
-        Some(h.fields.map(f =>
-          // ctype = the PG-mapped type, the SAME spelling the data
-          // path feeds CastEngine (PlanBuilder's dbf branch) — a
-          // type-keyed user rule must fire for BOTH the DDL and the
-          // transform or they disagree. q() cases the RAW descriptor
-          // spelling (quote mode preserves the file's uppercase, like
-          // the reference; downcase = the historical fold)
-          s"${q(f.rawOrName)} ${userType(tbl, f.name,
-            graft.sources.DbfSource.pgType(f))
-            .getOrElse(graft.sources.DbfSource.pgType(f))}"))
-      case "ixf" =>
-        val in = new java.io.BufferedInputStream(
-          new java.io.FileInputStream(firstPath))
-        try {
-          val cols = graft.sources.IxfSource.readColumns(in)
-          val tbl = cmd.targetTable.getOrElse("data")
-          Some(cols.map(c =>
-            s"${q(c.rawOrName)} ${userType(tbl, c.name, c.typeCode.toString)
-              .getOrElse(graft.sources.IxfSource.pgType(c))}"))
-        } finally in.close()
-      case _ => None
-    }
-  }
-
   /** `LOAD DATABASE FROM mysql://… | pgsql://…` — the reference's
     * headline command, end-to-end with no driver jars: the URI's
     * [[graft.sources.DbSource]] introspects the source catalog, which
     * runs through the cast engine and [[graft.orchestration.Migrator]];
-    * each table is read as its source's scan plans it — on driver
-    * threads, or as a Spark job for views, backfills, `exactly once`
-    * and a cluster master's multi-split tables — and COPYed through
+    * each table's source scan plans its read once — its splits stream
+    * on driver threads, or the same plan's frame runs as a Spark job
+    * for `exactly once` and a cluster master's multi-split tables;
+    * views and backfills read distributed frames — and is COPYed through
     * this Runner's endpoint factory. WITH options map to the Migrator's
     * surface; BEFORE LOAD DO ran already (runCommand), AFTER LOAD DO /
     * FINALLY run after this returns, AFTER CREATE SCHEMA DO is placed
@@ -917,15 +888,17 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
         loadTable = (t, setup) => {
           val isView = viewKeys((t.sourceSchemaName, t.sourceName))
           val rule = backfill.get(t.sourceName.toLowerCase)
-          // views, DISTRIBUTE backfills (the join dataflow) and
-          // exactly-once loads (their stages need Spark's task
-          // attempts) always read distributed; any other table streams
-          // its splits on driver threads under a local master, and
-          // under a cluster master when it has one split (a single
-          // Spark task would gain nothing)
+          // one plan per table, whichever route reads it. Views (a
+          // SQLite view evaluates through Spark SQL) and DISTRIBUTE
+          // backfills (the join dataflow) read distributed frames;
+          // any other table streams its plan's splits on driver threads
+          // under a local master, and under a cluster master when it
+          // has one split (a single Spark task would gain nothing).
+          // Exactly-once loads read the plan's frame: their stages need
+          // Spark's task attempts
           val plan =
-            if (isView || rule.isDefined || exactlyOnce) None
-            else Some(src.scan(t, isView = false, local = true))
+            if (isView || rule.isDefined) None
+            else Some(src.scan(t, isView = false))
           // generated columns recompute server-side: COPY lists the
           // others (the migrated table is otherwise positional,
           // created in frame order)
@@ -934,7 +907,8 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
             if (hasGen) t.columns.filter(_.generated.isEmpty).map(_.name)
             else Nil,
             generated = hasGen,
-            driver = plan.filter(p => localMaster || p.splits.length == 1),
+            driver = plan.filter(p =>
+              !exactlyOnce && (localMaster || p.splits.length == 1)),
             df = rule match {
               case Some(rule) =>
                 val chain = rule.table +: rule.from
@@ -1068,7 +1042,8 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
     *   and publishes carry `copyCols` only
     * @param driver a database table's [[graft.sources.ScanPlan]], its
     *   splits streamed on driver threads; never given with exactly
-    *   once, whose stages need Spark's task attempts
+    *   once, whose stages need Spark's task attempts (they read the
+    *   same plan's frame as `df`)
     * @param df the distributed rows, built only when no driver plan
     *   applies; a line reader's [[graft.sources.TaggedLines]] frame
     *   has its parse rejects filed and counted by the sink
@@ -1171,6 +1146,13 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
   * glue only.
   */
 object Runner {
+
+  /** One column of a self-describing file's own schema — a DBF field
+    * descriptor or an IXF column record: its raw spelling (what both
+    * the DDL and the COPY column list case), the name and type a user
+    * cast rule matches, and the PG type it maps to. */
+  private final case class FileColumn(raw: String, name: String,
+                                      ctype: String, pgType: String)
 
   /** Delete `path` and everything under it; a missing path is fine. */
   private def deleteTree(path: String): Unit = {

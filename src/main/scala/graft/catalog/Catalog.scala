@@ -1,13 +1,13 @@
 package graft.catalog
 
-import org.apache.spark.sql.types.{DataType, StructField, StructType, StringType}
+import org.apache.spark.sql.types.DataType
 import graft.casting.{CastEngine, CastRule, SourceColumn}
 import org.apache.spark.sql.Column
 
 /** Driver-side catalog ADT — the reference's central IR
   * (src/utils/catalog.lisp:45-114). A plain Scala tree, NOT forced into
-  * Spark's SessionCatalog: it emits (a) a read `StructType`, (b) transform
-  * `Column`s, (c) target DDL strings.
+  * Spark's SessionCatalog: it emits transform `Column`s and target DDL
+  * strings.
   *
   * A table carries BOTH the source shape (`fields`) and the target shape
   * (`columns`) — `cast` converts one to the other (catalog.lisp:371-388).
@@ -99,15 +99,6 @@ final case class Table(
       ColumnDef(f.name, r.pgType, r.sparkType, r.nullable, r.default,
         r.transform, comment = f.comment, generated = f.generated)
     })
-
-  /** Spark-side target schema. */
-  def structType: StructType =
-    StructType(columns.map(c => StructField(c.name, c.sparkType, c.nullable)))
-
-  /** Source-read schema: everything string-typed, matching the reference's
-    * text-typed row model (protocol.clj:16-21). */
-  def readStructType: StructType =
-    StructType(fields.map(f => StructField(f.name, StringType, nullable = true)))
 }
 
 final case class ColumnDef(

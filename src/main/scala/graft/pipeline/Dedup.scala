@@ -829,46 +829,6 @@ object Dedup {
       lit(0L), (acc, x) => acc.bitwiseOR(x))
   }
 
-  /** SimHash signatures for the pipeline: explode tokens → hash once →
-    * one hash-aggregate of 64 vote sums (codegen, map-side combine) →
-    * pack sign bits. */
-  private def simhashSigs(df: DataFrame, idCol: String,
-                          textCol: String): DataFrame = {
-    val toks = df
-      .select(col(idCol).as("id"),
-        explode(split(col(textCol), "\\s+")).as("t"))
-      .select(col("id"), xxhash64(col("t")).as("h"))
-    val aggs = (0 until 64).map(b =>
-      sum(when(shiftright(col("h"), b).bitwiseAND(1) === 1, 1L)
-        .otherwise(-1L)).as(s"__v$b"))
-    toks.groupBy(col("id")).agg(aggs.head, aggs.tail: _*)
-      .select(col("id"),
-        (0 until 64).map(b =>
-          when(col(s"__v$b") > 0, lit(1L << b)).otherwise(lit(0L)))
-          .reduce(_ bitwiseOR _).as("sig"))
-  }
-
-  /** SimHash near-dup candidates: band the 64 bits into 4×16-bit keys;
-    * pairs sharing a band and differing by <= hammingMax bits. Hamming
-    * distance is engine-hash-specific — for an oracle-checkable exact
-    * variant see [[simhashExactPairs]]. */
-  def simhashPairs(df: DataFrame, idCol: String, textCol: String,
-                   hammingMax: Int = 3): DataFrame = {
-    val sigs = simhashSigs(df, idCol, textCol)
-    val banded = sigs.select(col("id"), col("sig"),
-      explode(array((0 until 4).map(b => struct(lit(b).as("band"),
-        shiftright(col("sig"), b * 16).bitwiseAND(0xFFFFL).as("key"))): _*))
-        .as("bk"))
-      .select(col("id"), col("sig"), col("bk.band"), col("bk.key"))
-    banded.as("x").join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
-        col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"),
-        bit_count(col("x.sig").bitwiseXOR(col("y.sig"))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= hammingMax)
-  }
-
   /** SimHash candidate generation + exact verification: pairs whose
     * 64-bit simhash collides (hamming 0), confirmed as true duplicates.
     * The self-join carries only (id, sig, 2×64-bit content hash) — raw
@@ -1307,10 +1267,6 @@ object Dedup {
       java.lang.ref.WeakReference[
         org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]]]())
 
-  /** Test hook: live entries in the component cache (weak entries are
-    * expunged on access). */
-  private[graft] def componentCacheSize: Int = lastComponentRdd.size()
-
   /** Test hook: None = no entry for `spark`; Some(alive?) = whether the
     * weakly-held label RDD is still reachable. */
   private[graft] def componentCacheValueLive(
@@ -1451,14 +1407,6 @@ object Dedup {
         (col("n_tokens") - size(col("kept")).cast("long"))
           .as("n_removed"))
   }
-
-  // profiling shims (ProfMhc) — same visibility surface as the tests
-  private[graft] def bandBucketsPub(sig: DataFrame, numPerms: Int,
-      bands: Int): DataFrame = bandBuckets(sig, numPerms, bands)
-  private[graft] def signatureColsPub(rows: DataFrame, numPerms: Int,
-      seed: Long): DataFrame = signatureCols(rows, numPerms, seed)
-  private[graft] def verifyJaccardRowsPub(cand: DataFrame, a: DataFrame,
-      b: DataFrame, t: Double): DataFrame = verifyJaccardRows(cand, a, b, t)
 
   /** Pack the sign bits of `planes` random-hyperplane dot products —
     * one fused native expression over a seed-derived plane matrix (the

@@ -22,15 +22,6 @@ object Multimodal {
   // path. Safe to set process-wide (affects only scratch strategy).
   javax.imageio.ImageIO.setUseCache(false)
 
-  /** Canonical media schema: id + bytes + typed metadata. */
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("media_type", StringType, nullable = false),
-    StructField("content", BinaryType, nullable = true),
-    StructField("meta", StructType(Seq(
-      StructField("source", StringType, nullable = true),
-      StructField("n_bytes", LongType, nullable = true))), nullable = true)))
-
   /** Real image decode via `javax.imageio`: (width, height, channels),
     * or (0, 0, 0) when the bytes are not a decodable image — the
     * not-an-image marker rows stay in-band so a corrupted blob in a

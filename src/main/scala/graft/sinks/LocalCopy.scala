@@ -81,8 +81,8 @@ object LocalCopy {
     }
   }
 
-  /** Where a table's streams go, chosen once its column count is known
-    * (a COPY BINARY load resolves its encoders against it).
+  /** Where a table's streams go, chosen once per table from its plan's
+    * column count (a COPY BINARY load resolves its encoders against it).
     *
     * @param endpointFactory the endpoint of one split, by partition id
     * @param rejectRender server-rejected SENT bytes → replayable COPY
@@ -109,10 +109,10 @@ object LocalCopy {
   }
 
   /** Load every split of `plan`, one stream per split on the driver's
-    * slots, and wait for all of them. The first stream to open decides
-    * the [[Sink]] from its column count. When a split fails, the
-    * splits not yet started are dropped, the running ones finish, and
-    * the first failure is rethrown.
+    * slots, and wait for all of them. The [[Sink]] is chosen once, from
+    * the plan's column count, before any stream opens. When a split
+    * fails, the splits not yet started are dropped, the running ones
+    * finish, and the first failure is rethrown.
     *
     * @return (rowsSent, rowsRejected, bytesSent) — same accounting as
     *   the distributed sink */
@@ -122,23 +122,16 @@ object LocalCopy {
             maxRows: Int = 25000,
             maxBytes: Long = 20L << 20,
             onErrorStop: Boolean = false): (Long, Long, Long) = {
-    val lock = new Object
-    var chosen: Sink = null
-    def sinkFor(width: Int): Sink = lock.synchronized {
-      if (chosen == null) chosen = sink(width)
-      chosen
-    }
+    val k = sink(plan.columns.length)
     val streams = plan.splits.indices.map { pid =>
       slots.submit(new java.util.concurrent.Callable[(Long, Long, Long)] {
         def call(): (Long, Long, Long) = {
           val s = plan.stream(pid)
-          try {
-            val k = sinkFor(s.columns.length)
-            CopySink.writePartition[(Array[Byte], Array[Byte])](
-              pid, s.rows.map(k.render), _._1, _._2, _ => null,
-              k.endpointFactory, maxRows, maxBytes, onErrorStop, rejectDir,
-              k.rejectRender)
-          } finally s.close()
+          try CopySink.writePartition[(Array[Byte], Array[Byte])](
+            pid, s.rows.map(k.render), _._1, _._2, _ => null,
+            k.endpointFactory, maxRows, maxBytes, onErrorStop, rejectDir,
+            k.rejectRender)
+          finally s.close()
         }
       })
     }

@@ -13,7 +13,8 @@ import graft.catalog.{CheckDef, Ddl, FKey, Index, Table}
   * some types must be rendered server-side (mysql-schema.lisp:268-286
   * st_astext for geometry; mssql-schema.lisp:200-224 convert() for
   * date/time), as (expression, output name) pairs the wire sources'
-  * `selectCols` take. */
+  * `selectCols` take — and the SELECT list every wire source builds
+  * from such pairs. */
 object ColumnSqlExpressions {
 
   /** (server-side expression, output column name) — the STRUCTURED form
@@ -53,6 +54,13 @@ object ColumnSqlExpressions {
     }
   }
 
+  /** The SELECT list of (expression, output name) pairs: a bare quoted
+    * column stays bare, any other expression is aliased to its name. */
+  def selectList(cols: Seq[(String, String)],
+                 quote: String => String): String =
+    cols.map { case (e, a) =>
+      if (e == quote(a)) e else s"$e AS ${quote(a)}"
+    }.mkString(", ")
 }
 
 /** The per-engine catalog SQL the reference issues, re-expressed for the

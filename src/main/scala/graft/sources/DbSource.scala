@@ -57,15 +57,14 @@ abstract class DbSource(protected val spark: () => SparkSession) {
     * when a column cannot be read at all. */
   def preflight(tables: Seq[Table]): Unit = ()
 
-  /** Decides how `t` is read: its columns and its splits. A `local`
-    * caller reads the plan on driver threads, so a table that fits one
-    * split may be planned as a bare stream whose columns the stream
-    * reports. */
-  def scan(t: Table, isView: Boolean, local: Boolean): ScanPlan[_]
+  /** Decides how `t` is read: its columns and its splits. The one plan
+    * serves both routes: driver threads stream its splits, a Spark job
+    * reads its [[ScanPlan.frame]]. */
+  def scan(t: Table, isView: Boolean): ScanPlan[_]
 
   /** `t`'s rows as a distributed frame. */
   def frame(t: Table, isView: Boolean): DataFrame =
-    scan(t, isView, local = false).frame(spark())
+    scan(t, isView).frame(spark())
 }
 
 object DbSource {
@@ -122,7 +121,7 @@ object DbSource {
     def introspectViews(names: Option[Seq[String]]): Seq[Table] =
       MySqlWireSource.introspectViews(mp, mp.database, names)
     def quoteIdent(name: String): String = MySqlWire.quoteIdent(name)
-    def scan(t: Table, isView: Boolean, local: Boolean): ScanPlan[_] = {
+    def scan(t: Table, isView: Boolean): ScanPlan[_] = {
       val pk = t.fields.find(_.autoIncrement).map(_.name)
       // the table's one row-count probe: it sizes the key ranges and
       // decides the whole-table stream; a keyless table never splits
@@ -133,8 +132,7 @@ object DbSource {
         t.fields.map(f => ColumnSqlExpressions.mysqlPair(f.name, f.typeName)),
         partitionKey = pk, rowCountEstimate = rows,
         rowsPerRange = rowsPerRange,
-        charsetName = charsetFor(t.sourceName),
-        local = local)
+        charsetName = charsetFor(t.sourceName))
     }
   }
 
@@ -169,23 +167,18 @@ object DbSource {
     def introspectViews(names: Option[Seq[String]]): Seq[Table] =
       PgWireSource.introspectViews(sp, names)
     def quoteIdent(name: String): String = PgWire.quoteIdent(name)
-    def scan(t: Table, isView: Boolean, local: Boolean): ScanPlan[_] =
+    def scan(t: Table, isView: Boolean): ScanPlan[_] =
       PgWireSource.scan(sp,
         PgWire.joinQualified(t.sourceSchemaName, t.sourceName),
-        // partitioned parents have NO ctid column and relpages=0: they
-        // read per leaf on EVERY route (plain, exactly-once, DISTRIBUTE
-        // backfill), or stream whole when the capacity probe allows
-        partitioned = t.partitioned, view = isView,
         // GENERATED ALWAYS AS … STORED columns are excluded from the
         // read (and from the COPY column list downstream): the target
         // re-declares them GENERATED and recomputes — PG refuses
         // direct inserts into them
-        selectCols =
-          if (t.fields.exists(_.generated.isDefined))
-            t.fields.filter(_.generated.isEmpty).map(f =>
-              (PgWire.quoteIdent(f.name), f.name))
-          else Nil,
-        local = local)
+        t.fields.filter(_.generated.isEmpty).map(f =>
+          (PgWire.quoteIdent(f.name), f.name)),
+        // partitioned parents have NO ctid column and relpages=0: they
+        // read per leaf, or stream whole when the capacity probe allows
+        partitioned = t.partitioned, view = isView)
   }
 
   private final class Mssql(tp: TdsWire.ConnParams, rowsPerRange: Long,
@@ -209,7 +202,7 @@ object DbSource {
           bad.mkString(", ") +
           " — exclude these tables or drop the columns in the source")
     }
-    def scan(t: Table, isView: Boolean, local: Boolean): ScanPlan[_] = {
+    def scan(t: Table, isView: Boolean): ScanPlan[_] = {
       val pk =
         if (isView) None else t.fields.find(_.autoIncrement).map(_.name)
       // the table's one row-count probe, as for mysql
@@ -217,11 +210,9 @@ object DbSource {
         if (pk.isEmpty) 0L
         else MssqlWireSource.rowCountOf(tp, t.sourceSchemaName, t.sourceName)
       MssqlWireSource.scan(tp, t.sourceSchemaName, t.sourceName,
+        t.fields.map(f => ColumnSqlExpressions.mssqlPair(f.name, f.typeName)),
         partitionKey = pk, rowCountEstimate = rows,
-        rowsPerRange = rowsPerRange,
-        selectCols = t.fields.map(f =>
-          ColumnSqlExpressions.mssqlPair(f.name, f.typeName)),
-        local = local)
+        rowsPerRange = rowsPerRange)
     }
   }
 
@@ -233,7 +224,7 @@ object DbSource {
     def defaults: Seq[CastRule] = DefaultCastRules.sqlite
     def quoteIdent(name: String): String =
       "\"" + name.replace("\"", "\"\"") + "\""
-    def scan(t: Table, isView: Boolean, local: Boolean): ScanPlan[_] = {
+    def scan(t: Table, isView: Boolean): ScanPlan[_] = {
       require(!isView, s"view ${t.sourceName} evaluates through Spark SQL")
       SqliteSource.scan(path, t.sourceName)
     }

@@ -131,86 +131,30 @@ object MssqlWireSource {
       if unreadableTypeNames(f.typeName)
     } yield s"${t.schema}.${t.sourceName}.${f.name} (${f.typeName})"
 
-  /** Wire-token → [[ColumnSqlExpressions.mssqlPair]] rendering for the
-    * TOP-0 discovery path. At TDS 7.1 only the datetime family (the
-    * server's default text rendering is locale-dependent) and bigint
-    * (stabilized via numeric(20), as [[ColumnSqlExpressions.mssqlPair]]
-    * renders it) need server-side
-    * expressions; everything else the client decodes to stable text. */
-  private def discoveredPair(ci: TdsWire.ColInfo): (String, String) =
-    ci.tpe match {
-      case TdsWire.TDateTime | TdsWire.TDateTimeN =>
-        ColumnSqlExpressions.mssqlPair(ci.name, "datetime")
-      case TdsWire.TDateTim4 =>
-        ColumnSqlExpressions.mssqlPair(ci.name, "smalldatetime")
-      // the 7.3 family must route server-side too: the native token
-      // decoders render e.g. datetime2 as '… 12:34:56.1230000' while
-      // introspection-driven reads use convert style 126 — the two
-      // paths must stay byte-identical (queryMeta's contract)
-      case TdsWire.TDate =>
-        ColumnSqlExpressions.mssqlPair(ci.name, "date")
-      case TdsWire.TTime =>
-        ColumnSqlExpressions.mssqlPair(ci.name, "time")
-      case TdsWire.TDateTime2 =>
-        ColumnSqlExpressions.mssqlPair(ci.name, "datetime2")
-      case TdsWire.TDateTimeOffset =>
-        ColumnSqlExpressions.mssqlPair(ci.name, "datetimeoffset")
-      case TdsWire.TInt8 =>
-        ColumnSqlExpressions.mssqlPair(ci.name, "bigint")
-      case TdsWire.TIntN if ci.maxLen == 8 =>
-        ColumnSqlExpressions.mssqlPair(ci.name, "bigint")
-      case _ => (quoteIdent(ci.name), ci.name)
-    }
-
   /** Plan the read of `schema.table` over TDS. With an integer
     * `partitionKey` (identity / clustered integer PK from
     * introspection) and at least `2 * rowsPerRange` rows it splits into
     * one [[RangeSplit.predicates]] WHERE-range per split —
     * BEYOND the reference, whose FreeTDS path is single-stream
     * (src/sources/mssql/mssql.lisp): at 100× the biggest table this is
-    * the difference between one stream and N. Otherwise it is one full
-    * scan, which a `local` caller (a driver read) sends with no WHERE
-    * clause. `selectCols`
-    * is (server-side expression, output name) pairs —
+    * the difference between one stream and N. Otherwise it is one
+    * whole-table SELECT with no WHERE clause. `selectCols` is
+    * (server-side expression, output name) pairs —
     * [[ColumnSqlExpressions.mssqlPair]] output for type-stable
-    * rendering; when empty, columns and their wire types are discovered
-    * via a TOP-0 probe and routed through the same rendering
-    * ([[discoveredPair]]), so both venues and both column sources read
-    * identical text. TDS values arrive UTF-16 and transcode to
-    * catalyst form per value. */
+    * rendering — and every split selects them. TDS values arrive
+    * UTF-16 and transcode to catalyst form per value. */
   def scan(params: TdsWire.ConnParams, schema: String, table: String,
+           selectCols: Seq[(String, String)],
            partitionKey: Option[String] = None,
            rowCountEstimate: Long = 0L,
-           rowsPerRange: Long = 10000L,
-           selectCols: Seq[(String, String)] = Nil,
-           local: Boolean = false): ScanPlan[String] = {
-    val qtable = s"${quoteIdent(schema)}.${quoteIdent(table)}"
-    val resolved: Seq[(String, String)] =
-      if (selectCols.nonEmpty) selectCols
-      else {
-        // TOP 0 probe on its own connection: COLMETADATA tokens carry
-        // each column's wire type, and the data stream must start on a
-        // fresh single-use batch
-        val conn = new TdsWireConnection(params)
-        try conn.queryMeta(s"SELECT TOP 0 * FROM $qtable").map(discoveredPair)
-        finally conn.close()
-      }
-    require(resolved.nonEmpty, s"no columns resolved for $schema.$table")
-    val select = resolved.map { case (e, a) =>
-      if (e == quoteIdent(a)) e else s"$e AS ${quoteIdent(a)}"
-    }.mkString(", ")
+           rowsPerRange: Long = 10000L): ScanPlan[String] = {
     val open = (sql: String) =>
-      ScanPlan.opened(new TdsWireConnection(params)) { conn =>
-        val (cols, rows) = conn.queryStream(sql)
-        (cols, rows.map(ScanPlan.utf8))
-      }
-    if (local && !RangeSplit.splits(partitionKey, rowCountEstimate, rowsPerRange))
-      ScanPlan(resolved.map(_._2), Seq(s"SELECT $select FROM $qtable"),
-        open)
-    else
-      ScanPlan(resolved.map(_._2), RangeSplit.wheres(partitionKey,
-        rowCountEstimate, rowsPerRange, quoteIdent)(
-        integerBounds(params, schema, table, _)).map(pred =>
-        s"SELECT $select FROM $qtable WHERE $pred"), open)
+      ScanPlan.opened(new TdsWireConnection(params))(
+        _.queryStream(sql)._2.map(ScanPlan.utf8))
+    ScanPlan(selectCols.map(_._2), RangeSplit.selects(
+      ColumnSqlExpressions.selectList(selectCols, quoteIdent),
+      s"${quoteIdent(schema)}.${quoteIdent(table)}", partitionKey,
+      rowCountEstimate, rowsPerRange, quoteIdent)(
+      integerBounds(params, schema, table, _)), open)
   }
 }

@@ -133,33 +133,25 @@ object MySqlWireSource {
   /** Plan the read of `schema.table`. With an integer `partitionKey`
     * and at least `2 * rowsPerRange` rows (the reference's guard,
     * mysql.lisp:44-47) it splits into [[RangeSplit.predicates]] key
-    * ranges, one split each; otherwise it is one full scan. `selectCols`
-    * is (server-side expression, output name) pairs —
-    * [[ColumnSqlExpressions.mysqlPair]] output, so geometry arrives as
-    * `st_astext` text — and every split selects them. Every split
-    * decodes with `charsetName` (DECODING TABLE NAMES MATCHING),
-    * straight to catalyst form. */
+    * ranges, one split each; otherwise it is one whole-table SELECT
+    * with no WHERE clause. `selectCols` is (server-side expression,
+    * output name) pairs — [[ColumnSqlExpressions.mysqlPair]] output, so
+    * geometry arrives as `st_astext` text — and every split selects
+    * them. Every split decodes with `charsetName` (DECODING TABLE NAMES
+    * MATCHING), straight to catalyst form. */
   def scan(params: MySqlWire.ConnParams, schema: String, table: String,
            selectCols: Seq[(String, String)],
            partitionKey: Option[String] = None,
            rowCountEstimate: Long = 0L,
            rowsPerRange: Long = 10000L,
-           charsetName: String = "UTF-8",
-           local: Boolean = false): ScanPlan[String] = {
-    require(selectCols.nonEmpty, s"no columns selected for $schema.$table")
-    val qtable = s"${quoteIdent(schema)}.${quoteIdent(table)}"
-    val select = selectCols.map { case (e, a) =>
-      if (e == quoteIdent(a)) e else s"$e AS ${quoteIdent(a)}"
-    }.mkString(", ")
+           charsetName: String = "UTF-8"): ScanPlan[String] = {
     val open = (sql: String) =>
-      ScanPlan.opened(new MySqlWireConnection(params))(
-        _.queryStreamData(sql, java.nio.charset.Charset.forName(charsetName)))
-    val splits =
-      if (local && !RangeSplit.splits(partitionKey, rowCountEstimate,
-            rowsPerRange)) Seq(s"SELECT $select FROM $qtable")
-      else RangeSplit.wheres(partitionKey, rowCountEstimate, rowsPerRange,
-        quoteIdent)(integerBounds(params, schema, table, _)).map(pred =>
-        s"SELECT $select FROM $qtable WHERE $pred")
-    ScanPlan(selectCols.map(_._2), splits, open)
+      ScanPlan.opened(new MySqlWireConnection(params))(_.queryStreamData(
+        sql, java.nio.charset.Charset.forName(charsetName))._2)
+    ScanPlan(selectCols.map(_._2), RangeSplit.selects(
+      ColumnSqlExpressions.selectList(selectCols, quoteIdent),
+      s"${quoteIdent(schema)}.${quoteIdent(table)}", partitionKey,
+      rowCountEstimate, rowsPerRange, quoteIdent)(
+      integerBounds(params, schema, table, _)), open)
   }
 }

@@ -171,22 +171,20 @@ object PgWireSource {
     } finally conn.close()
   }
 
-  /** Plan the read of `table` (schema-qualified names accepted).
+  /** Plan the read of `table` (schema-qualified names accepted), the
+    * same plan whichever route reads it.
     *
     * - A view (MATERIALIZE VIEWS) has no ctid to split on: one
     *   predicate-free stream (`WHERE true`, no ONLY — views reject it).
-    * - For a `local` caller (one that reads the plan on driver
-    *   threads, [[graft.sinks.LocalCopy]]), a table that fits ONE
-    *   [[IntrospectionSql.pgsqlCtidPredicates]] chunk is one
-    *   whole-table stream: no ctid predicate and no LIMIT 0 column
-    *   probe, its stream reports the columns.
-    * - A partitioned parent reads per leaf ([[partitionedPlan]]).
+    * - A table that fits ONE [[IntrospectionSql.pgsqlCtidPredicates]]
+    *   chunk is one whole-table stream with no ctid predicate.
+    * - A bigger partitioned parent reads per leaf ([[partitionedPlan]]).
     * - Any other heap splits into ctid page ranges, `pagesPerChunk`
     *   blocks each, sized by its relpages.
     *
-    * A `local` caller's table pays ONE pg_class round trip for all of
-    * this. Two relpages=0 liars would otherwise stream an arbitrarily
-    * large table through one driver thread; both are capacity-probed
+    * A table pays ONE pg_class round trip for all of this. Two
+    * relpages=0 liars would otherwise stream an arbitrarily large table
+    * through one stream; both are capacity-probed
     * with a `LIMIT 1 OFFSET maxRowsPerChunk` scalar subquery (bounded
     * server-side scan, at most one row on the wire, CASE-guarded so it
     * rides the relpages lookup as a lazily-executed SubPlan — the
@@ -203,55 +201,55 @@ object PgWireSource {
     *
     * `selectCols` is (server-side expression, output name) pairs —
     * the non-generated columns (expressions used verbatim; quote
-    * identifiers yourself inside them); empty = every
-    * column (`*` on the driver, a LIMIT 0 discovery for a split read). */
+    * identifiers yourself inside them) — and every split selects them. */
   def scan(params: PgWire.ConnParams, table: String,
+           selectCols: Seq[(String, String)],
            partitioned: Boolean = false, view: Boolean = false,
-           selectCols: Seq[(String, String)] = Nil,
-           pagesPerChunk: Long = 1000L,
-           local: Boolean = false): ScanPlan[String] = {
+           pagesPerChunk: Long = 1000L): ScanPlan[String] = {
     val qtable = PgWire.quoteQualified(table)
-    // (relpages, relkind of a table small enough to stream)
-    lazy val probed: (Long, Option[String]) = {
-      val conn = new PgWireConnection(params)
-      try {
-        val regclass = PgWire.quoteLiteral(qtable)
-        val cap = pagesPerChunk * 300L
-        val (_, rows) = conn.query(
-          s"""SELECT relpages, relkind::text,
-             CASE WHEN relkind = 'r' AND relpages < $pagesPerChunk
-                  THEN (SELECT 1 FROM ONLY $qtable LIMIT 1 OFFSET $cap)
-                  WHEN relkind = 'p'
-                  THEN (SELECT 1 FROM $qtable LIMIT 1 OFFSET $cap)
-             END
-             FROM pg_class WHERE oid = $regclass::regclass""")
-        rows.headOption.fold((0L, Option.empty[String])) { r =>
-          (r(0).toLong, Some(r(1)).filter(kind => r(2) == null &&
-            (kind == "p" || (kind == "r" && r(0).toLong < pagesPerChunk))))
-        }
-      } finally conn.close()
-    }
     if (view)
-      distributed(params, table, Seq((qtable, "true")), selectCols,
-        only = false)
-    else if (local && probed._2.isDefined) {
-      // heaps read ONLY their own rows (an INHERITS parent's plain FROM
-      // would also stream every child's rows — children migrate as
-      // their own tables; see ctidPlan); partitioned parents NEED the
-      // plain FROM's whole-tree expansion
-      val from = if (probed._2.contains("p")) qtable else s"ONLY $qtable"
-      val sel =
-        if (selectCols.isEmpty) "*"
-        else selectCols.map { case (e, n) =>
-          s"$e AS ${PgWire.quoteIdent(n)}" }.mkString(", ")
-      ScanPlan(selectCols.map(_._2), Seq(s"SELECT $sel FROM $from"),
-        opener(params))
-    } else if (partitioned)
-      partitionedPlan(params, table, pagesPerChunk, selectCols)
-    else
-      ctidPlan(params, table,
-        if (local) probed._1 else relpagesOf(params, table),
-        pagesPerChunk, selectCols)
+      distributed(params, Seq((qtable, "true")), selectCols, only = false)
+    else {
+      val (relpages, whole) = probe(params, qtable, pagesPerChunk)
+      whole match {
+        case Some(kind) =>
+          // heaps read ONLY their own rows (an INHERITS parent's plain
+          // FROM would also stream every child's rows — children
+          // migrate as their own tables; see ctidPlan); partitioned
+          // parents NEED the plain FROM's whole-tree expansion
+          val from = if (kind == "p") qtable else s"ONLY $qtable"
+          ScanPlan(selectCols.map(_._2), Seq(s"SELECT ${ColumnSqlExpressions
+            .selectList(selectCols, PgWire.quoteIdent)} FROM $from"),
+            opener(params))
+        case None if partitioned =>
+          partitionedPlan(params, table, pagesPerChunk, selectCols)
+        case None =>
+          ctidPlan(params, table, relpages, pagesPerChunk, selectCols)
+      }
+    }
+  }
+
+  /** [[scan]]'s pg_class round trip: (relpages, relkind of a table
+    * small enough to stream whole). */
+  private def probe(params: PgWire.ConnParams, qtable: String,
+                    pagesPerChunk: Long): (Long, Option[String]) = {
+    val conn = new PgWireConnection(params)
+    try {
+      val regclass = PgWire.quoteLiteral(qtable)
+      val cap = pagesPerChunk * 300L
+      val (_, rows) = conn.query(
+        s"""SELECT relpages, relkind::text,
+           CASE WHEN relkind = 'r' AND relpages < $pagesPerChunk
+                THEN (SELECT 1 FROM ONLY $qtable LIMIT 1 OFFSET $cap)
+                WHEN relkind = 'p'
+                THEN (SELECT 1 FROM $qtable LIMIT 1 OFFSET $cap)
+           END
+           FROM pg_class WHERE oid = $regclass::regclass""")
+      rows.headOption.fold((0L, Option.empty[String])) { r =>
+        (r(0).toLong, Some(r(1)).filter(kind => r(2) == null &&
+          (kind == "p" || (kind == "r" && r(0).toLong < pagesPerChunk))))
+      }
+    } finally conn.close()
   }
 
   /** Column names of `table`, discovered driver-side from a LIMIT 0
@@ -265,13 +263,15 @@ object PgWireSource {
 
   /** Read `table` split into ctid page ranges, `pagesPerChunk` blocks
     * per partition (relpages from pg_class, [[relpagesOf]]).
-    * `selectCols` as in [[scan]]; defaults to the discovered column
-    * list (quoted). */
+    * `selectCols` as in [[scan]]; defaults to the [[columnsOf]] list
+    * (quoted). */
   def readByCtid(spark: SparkSession, params: PgWire.ConnParams,
                  table: String, relpages: Long,
                  pagesPerChunk: Long = 1000L,
                  selectCols: Seq[(String, String)] = Nil): DataFrame =
-    ctidPlan(params, table, relpages, pagesPerChunk, selectCols)
+    ctidPlan(params, table, relpages, pagesPerChunk,
+      if (selectCols.nonEmpty) selectCols
+      else columnsOf(params, table).map(n => (PgWire.quoteIdent(n), n)))
       .frame(spark)
 
   // FROM ONLY: every heap migrates as its own table, so each read
@@ -284,7 +284,7 @@ object PgWireSource {
                        relpages: Long, pagesPerChunk: Long,
                        selectCols: Seq[(String, String)]): ScanPlan[String] = {
     val q = PgWire.quoteQualified(table)
-    distributed(params, table,
+    distributed(params,
       IntrospectionSql.pgsqlCtidPredicates(relpages, pagesPerChunk)
         .map(pred => (q, pred)), selectCols, only = true)
   }
@@ -336,8 +336,7 @@ object PgWireSource {
     if (leaves.isEmpty)
       // no leaves yet (empty parent): one predicate-free stream over
       // the parent is trivially correct
-      distributed(params, table, Seq((q, "true")), selectCols,
-        only = false)
+      distributed(params, Seq((q, "true")), selectCols, only = false)
     else
       // heap leaves ctid-split by their own relpages; a non-heap leaf
       // (e.g. a postgres_fdw foreign-table partition — no ctid there)
@@ -346,7 +345,7 @@ object PgWireSource {
       // single stream. ONLY is safe: partitions cannot take part in
       // old-style inheritance (PG rejects INHERITS from/into partition
       // trees), so a leaf's ONLY rows ARE all its rows.
-      distributed(params, table, leaves.flatMap { case (leaf, relpages, kind) =>
+      distributed(params, leaves.flatMap { case (leaf, relpages, kind) =>
         val lq = PgWire.quoteQualified(leaf)
         if (kind == "r")
           IntrospectionSql.pgsqlCtidPredicates(relpages, pagesPerChunk)
@@ -355,31 +354,22 @@ object PgWireSource {
       }, selectCols, only = true)
   }
 
-  /** A split read: one Spark partition per (quoted relation,
-    * predicate) target — identical relation for the ctid/view reads,
-    * per-leaf relations for [[partitionedPlan]]. `columnsTable` names
-    * the relation whose LIMIT 0 row description defines the column list
-    * and output schema when `selectCols` is empty. Rows decode straight
-    * to catalyst form (UTF8String slices of the wire payload) — no
-    * per-field java-String round-trip. */
-  private def distributed(params: PgWire.ConnParams, columnsTable: String,
+  /** A split read: one split per (quoted relation, predicate) target —
+    * identical relation for the ctid/view reads, per-leaf relations for
+    * [[partitionedPlan]]. Rows decode straight to catalyst form
+    * (UTF8String slices of the wire payload) — no per-field
+    * java-String round-trip. */
+  private def distributed(params: PgWire.ConnParams,
                           targets: Seq[(String, String)],
                           selectCols: Seq[(String, String)],
                           only: Boolean): ScanPlan[String] = {
-    val names =
-      if (selectCols.nonEmpty) selectCols.map(_._2)
-      else columnsOf(params, columnsTable)
-    require(names.nonEmpty, s"no columns resolved for $columnsTable")
-    val select =
-      if (selectCols.nonEmpty) selectCols.map { case (e, a) =>
-        if (e == PgWire.quoteIdent(a)) e else s"$e AS ${PgWire.quoteIdent(a)}"
-      }.mkString(", ")
-      else names.map(PgWire.quoteIdent).mkString(", ")
-    ScanPlan(names, targets.map { case (qtable, pred) =>
+    val select = ColumnSqlExpressions.selectList(selectCols, PgWire.quoteIdent)
+    ScanPlan(selectCols.map(_._2), targets.map { case (qtable, pred) =>
       s"SELECT $select FROM ${if (only) "ONLY " else ""}$qtable WHERE $pred"
     }, opener(params))
   }
 
   private def opener(params: PgWire.ConnParams): String => ScanPlan.Stream =
-    sql => ScanPlan.opened(new PgWireConnection(params))(_.queryStreamData(sql))
+    sql => ScanPlan.opened(new PgWireConnection(params))(
+      _.queryStreamData(sql)._2)
 }

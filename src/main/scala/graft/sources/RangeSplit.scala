@@ -36,19 +36,21 @@ private[graft] object RangeSplit {
 
   /** The reference's big-enough guard (mysql.lisp:44-47): a read splits
     * only on an integer key and with at least `2 * rowsPerRange` rows. */
-  def splits(partitionKey: Option[String], rowCount: Long,
+  private def splits(partitionKey: Option[String], rowCount: Long,
              rowsPerRange: Long): Boolean =
     partitionKey.isDefined && rowCount >= 2 * rowsPerRange
 
-  /** The WHERE clauses of a key-range read: [[predicates]] over the
-    * key's `bounds` (min, max) when the read [[splits]], else one full
-    * scan. */
-  def wheres(partitionKey: Option[String], rowCount: Long,
-             rowsPerRange: Long, quote: String => String)(
+  /** The SELECT of each split of a key-range read of `from`: one
+    * `WHERE` range of [[predicates]] over the key's `bounds` (min, max)
+    * each when the read [[splits]], else the one whole-table SELECT. */
+  def selects(select: String, from: String, partitionKey: Option[String],
+              rowCount: Long, rowsPerRange: Long, quote: String => String)(
       bounds: String => (Long, Long)): Seq[String] =
-    if (!splits(partitionKey, rowCount, rowsPerRange)) Seq("1 = 1")
+    if (!splits(partitionKey, rowCount, rowsPerRange))
+      Seq(s"SELECT $select FROM $from")
     else {
       val (lo, hi) = bounds(partitionKey.get)
       predicates(quote(partitionKey.get), lo, hi, rowsPerRange, rowCount)
+        .map(pred => s"SELECT $select FROM $from WHERE $pred")
     }
 }

@@ -21,8 +21,8 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * only serializable values (connection parameters, paths), never a
   * source object.
   *
-  * @param columns the frame's column names; a plan made for a driver
-  *   read may leave them empty, its streams report them
+  * @param columns the column names every split yields, in order: the
+  *   frame's string schema and the driver route's row width
   * @param splits one stream or Spark partition each; the wire sources'
   *   split is the full SELECT statement of its range
   */
@@ -30,6 +30,7 @@ final case class ScanPlan[S](
     columns: Seq[String],
     splits: Seq[S],
     open: S => ScanPlan.Stream)(implicit tag: ClassTag[S]) {
+  require(columns.nonEmpty, "a scan plan needs its columns")
 
   /** Opens split `i` on the calling thread. */
   def stream(i: Int): ScanPlan.Stream = open(splits(i))
@@ -40,7 +41,6 @@ final case class ScanPlan[S](
     * The source closes when its stream drains and, as a backstop for a
     * task that stops early (limit, failure), when the task completes. */
   def frame(spark: SparkSession): DataFrame = {
-    require(columns.nonEmpty, "no columns resolved for the read")
     val open = this.open // capture the function, not the plan
     val rdd = spark.sparkContext
       .parallelize(splits, splits.length)
@@ -70,19 +70,16 @@ final case class ScanPlan[S](
 
 object ScanPlan {
 
-  /** One opened split: the column names its source reported, the rows
-    * in catalyst form, and the close (safe to call twice). */
-  final case class Stream(columns: Seq[String], rows: Iterator[Array[Any]],
-                          close: () => Unit)
+  /** One opened split: the rows in catalyst form, and the close (safe
+    * to call twice). */
+  final case class Stream(rows: Iterator[Array[Any]], close: () => Unit)
 
   /** Starts a stream on a freshly opened `resource` (a connection or a
     * file); a failing start closes the resource before rethrowing. */
   def opened[C <: AutoCloseable](resource: C)(
-      start: C => (Seq[String], Iterator[Array[Any]])): Stream =
-    try {
-      val (cols, rows) = start(resource)
-      Stream(cols, rows, () => resource.close())
-    } catch {
+      start: C => Iterator[Array[Any]]): Stream =
+    try Stream(start(resource), () => resource.close())
+    catch {
       case e: Throwable => resource.close(); throw e
     }
 

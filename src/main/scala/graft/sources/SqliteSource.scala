@@ -296,8 +296,8 @@ object SqliteSource {
       }
     val names = cols.map(_.name)
     val open = (subtree: Int) =>
-      ScanPlan.opened(SqliteFile.open(path))(d =>
-        (names, tableScan(d, subtree, sql, cols).map(ScanPlan.utf8)))
+      ScanPlan.opened(SqliteFile.open(path))(
+        tableScan(_, subtree, sql, cols).map(ScanPlan.utf8))
     ScanPlan(names, roots, open)
   }
 }

@@ -849,22 +849,6 @@ final class TdsWireConnection(params: TdsWire.ConnParams)
     * in heap, the same bounded-memory contract as the PG and MySQL
     * clients. Single-use until drained. */
   def queryStream(sql: String): (Seq[String], Iterator[Array[String]]) = {
-    val (cols, it) = queryStreamMeta(sql)
-    (cols.map(_.name), it)
-  }
-
-  /** COLMETADATA of a row-less probe (`SELECT TOP 0 …`), drained — the
-    * discovery path's type source: the read composes its per-type
-    * server-side rendering from these tokens so an explicit-selectCols
-    * read and a discovered read produce byte-identical values. */
-  private[graft] def queryMeta(sql: String): Seq[ColInfo] = {
-    val (cols, it) = queryStreamMeta(sql)
-    it.foreach(_ => ())
-    cols
-  }
-
-  private[graft] def queryStreamMeta(sql: String)
-      : (Seq[ColInfo], Iterator[Array[String]]) = {
     val sqlBytes = sql.getBytes(UTF_16LE)
     val payload =
       if (tdsVersion < 0x72) sqlBytes
@@ -930,7 +914,7 @@ final class TdsWireConnection(params: TdsWire.ConnParams)
         val r = nextRow; nextRow = null; r
       }
     }
-    (colInfos, it)
+    (colInfos.map(_.name), it)
   }
 
   def query(sql: String): (Seq[String], Seq[Array[String]]) = {

@@ -44,6 +44,7 @@ final class FakePgServer(
 
   val accepted = new ArrayBuffer[String]()
   val executed = new ArrayBuffer[String]() // non-COPY statements
+  val received = new ArrayBuffer[String]() // every simple query, in order
   val connections = new java.util.concurrent.atomic.AtomicInteger(0)
   @volatile private var running = true
   private val server = new ServerSocket(0, 50,
@@ -220,6 +221,7 @@ final class FakePgServer(
         tpe match {
           case 'Q' =>
             val sql = new String(payload.dropRight(1), UTF_8)
+            received.synchronized(received += sql)
             val up = sql.toUpperCase
             if (up.startsWith("COPY")) handleCopy(sql)
             else if (up.startsWith("SELECT") || up.startsWith("WITH"))

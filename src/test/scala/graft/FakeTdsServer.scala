@@ -26,10 +26,6 @@ final class FakeTdsServer(
     // TImage take `\x…` hex; TText ISO-8859-1; TNText UTF-16 — so tests
     // drive the client's legacy-LOB and money decoders over real tokens
     colTypes: Map[String, Int] = Map.empty,
-    // per-query override merged over colTypes — lets a TOP 0 discovery
-    // probe advertise typed columns while the subsequent convert()-ed
-    // read returns plain NVARCHAR, like a real server would
-    colTypesFor: String => Map[String, Int] = _ => Map.empty,
     // called with the row index before each ROW token is written (all
     // full frames so far are flushed) — lets a test park the server
     // mid-result to prove the client streams
@@ -243,8 +239,7 @@ final class FakeTdsServer(
           // decodes lazily sees early rows while later ones are unsent
           val w = new PacketWriter(out)
           val h = new java.io.ByteArrayOutputStream()
-          val ctMap = colTypes ++ colTypesFor(sql)
-          val types = cols.map(c => ctMap.getOrElse(c, TdsWire.TNVarChar))
+          val types = cols.map(c => colTypes.getOrElse(c, TdsWire.TNVarChar))
           h.write(TdsWire.TokColMetaData)
           le16(h, cols.size)
           cols.zip(types).foreach { case (c, t) =>

@@ -30,6 +30,10 @@ class LivePartitionSpec extends SparkSpec {
     try c.simpleCommand(sql) finally c.close()
   }
 
+  /** Plain quoted select pairs, as the PG source's scan passes them. */
+  private def sel(names: String*): Seq[(String, String)] =
+    names.map(n => (PgWire.quoteIdent(n), n))
+
   private def q(uri: String, sql: String): Seq[Seq[String]] = {
     val c = new PgWireConnection(PgWire.connParams(uri, decode))
     try c.query(sql)._2.map(_.toSeq) finally c.close()
@@ -71,19 +75,20 @@ class LivePartitionSpec extends SparkSpec {
     // the gate no longer trusts it: a parent qualifies only through
     // the whole-tree capacity probe. At pagesPerChunk=1 (cap 300) the
     // 4000-row tree is refused...
-    assert(graft.sources.PgWireSource.scan(sp, "public.m",
-      partitioned = true, pagesPerChunk = 1L, local = true)
-      .splits.length > 1,
+    val mCols = sel("id", "bucket", "payload")
+    assert(graft.sources.PgWireSource.scan(sp, "public.m", mCols,
+      partitioned = true, pagesPerChunk = 1L).splits.length > 1,
       "a beyond-capacity partitioned parent must not be one stream")
     // ...while a genuinely small parent keeps the ORM-scale fast path
     // and streams the WHOLE tree (plain FROM, all partitions)
-    val local = graft.sources.PgWireSource.scan(sp, "public.m",
-      partitioned = true, local = true)
-    assert(local.splits == Seq("SELECT * FROM \"public\".\"m\""),
+    val whole = graft.sources.PgWireSource.scan(sp, "public.m", mCols,
+      partitioned = true)
+    assert(whole.splits == Seq(
+      "SELECT \"id\", \"bucket\", \"payload\" FROM \"public\".\"m\""),
       "small partitioned parent streams the whole tree")
-    val stream = local.stream(0)
+    assert(whole.columns == Seq("id", "bucket", "payload"))
+    val stream = whole.stream(0)
     try {
-      assert(stream.columns == Seq("id", "bucket", "payload"))
       assert(stream.rows.size == 4000)
     } finally stream.close()
 
@@ -96,7 +101,7 @@ class LivePartitionSpec extends SparkSpec {
 
     // the distributed read: one Spark partition per (leaf, ctid range),
     // more than one range per leaf at pagesPerChunk=1
-    val df = graft.sources.PgWireSource.scan(sp, "public.m",
+    val df = graft.sources.PgWireSource.scan(sp, "public.m", mCols,
       partitioned = true, pagesPerChunk = 1L).frame(spark)
     val expectParts = leaves.map(_._2).sum
     assert(df.rdd.getNumPartitions == expectParts &&
@@ -153,7 +158,8 @@ class LivePartitionSpec extends SparkSpec {
       .map(_._2).sum
     assert(heapChunks > 2, s"ANALYZEd heap leaves must split: $leaves")
     val df = graft.sources.PgWireSource.scan(sp, "public.mx",
-      partitioned = true, pagesPerChunk = 1L).frame(spark)
+      sel("id", "bucket", "payload"), partitioned = true,
+      pagesPerChunk = 1L).frame(spark)
     // heap leaves ctid-split per their relpages; the FDW leaf adds ONE
     // predicate-free target — the whole read is NOT demoted
     assert(df.rdd.getNumPartitions > 3,
@@ -278,16 +284,16 @@ class LivePartitionSpec extends SparkSpec {
     // pagesPerChunk=1 → capacity cap 300 rows; the 400-row liar is
     // caught by the OFFSET probe and routed to the distributed read
     assert(graft.sources.PgWireSource.scan(p, "public.liar",
-      pagesPerChunk = 1L, local = true).splits.forall(_.contains("ctid")),
+      sel("id", "pad"), pagesPerChunk = 1L).splits.forall(_.contains("ctid")),
       "stale relpages must not buy the whole-table stream")
     // the honest small table still gets the fast path, and it works
-    val local = graft.sources.PgWireSource.scan(p,
-      "public.honest_small", pagesPerChunk = 1L, local = true)
-    assert(local.splits ==
-      Seq("SELECT * FROM ONLY \"public\".\"honest_small\""))
-    val stream = local.stream(0)
+    val whole = graft.sources.PgWireSource.scan(p,
+      "public.honest_small", sel("id"), pagesPerChunk = 1L)
+    assert(whole.splits ==
+      Seq("SELECT \"id\" FROM ONLY \"public\".\"honest_small\""))
+    assert(whole.columns == Seq("id"))
+    val stream = whole.stream(0)
     try {
-      assert(stream.columns == Seq("id"))
       assert(stream.rows.map(_(0).toString.toInt).toSeq.sorted == (1 to 9))
     } finally stream.close()
   }

@@ -1102,9 +1102,9 @@ class LiveServerSpec extends SparkSpec {
     val rows = graft.sources.MssqlWireSource.rowCountOf(
       tp, t.schema, t.sourceName)
     val df = graft.sources.MssqlWireSource.scan(tp, t.schema,
-      t.sourceName, partitionKey = pk, rowCountEstimate = rows,
-      selectCols = t.fields.map(f => graft.sources.ColumnSqlExpressions
-        .mssqlPair(f.name, f.typeName))).frame(spark)
+      t.sourceName, t.fields.map(f => graft.sources.ColumnSqlExpressions
+        .mssqlPair(f.name, f.typeName)),
+      partitionKey = pk, rowCountEstimate = rows).frame(spark)
     assert(df.count() >= 0L)
     info(s"live MSSQL: read ${df.count()} rows from ${t.sourceName}")
   }

@@ -10,10 +10,10 @@ import graft.sinks.{CopyEndpoint, CopyError, CopySink, LocalCopy, PgBinary}
   * honor the same recovery contract. */
 class LocalCopySpec extends SparkSpec {
 
-  /** A one-split plan streaming `rows`. */
-  private def plan(rows: Iterator[Array[Any]]) =
-    graft.sources.ScanPlan[Int](Nil, Seq(0),
-      _ => graft.sources.ScanPlan.Stream(Nil, rows, () => ()))
+  /** A plan over `columns` with one split per stream of `splits`. */
+  private def plan(columns: Seq[String], splits: Iterator[Array[Any]]*) =
+    graft.sources.ScanPlan[Int](columns, splits.indices,
+      i => graft.sources.ScanPlan.Stream(splits(i), () => ()))
 
   // tricky corpus: every COPY TEXT escape class, unicode, nulls, the
   // literal "\N" spelling that must NOT round-trip as NULL, plus a
@@ -99,7 +99,7 @@ class LocalCopySpec extends SparkSpec {
     val dir = Files.createTempDirectory("localcopy").toString
     val rows = Iterator(Array[String]("1", "a"), Array("2", "BAD"),
       Array("3", "c"), Array[String](null, "d")).map(utf8)
-    val (sent, rejected, bytes) = LocalCopy.write(plan(rows),
+    val (sent, rejected, bytes) = LocalCopy.write(plan(Seq("k", "v"), rows),
       _ => LocalCopy.Sink(_ => endpoint), rejectDir = Some(dir))
     assert(sent == 3 && rejected == 1)
     assert(bytes > 0)
@@ -119,7 +119,8 @@ class LocalCopySpec extends SparkSpec {
     }
     val dir = Files.createTempDirectory("localcopybin").toString
     val (sent, rejected, _) = LocalCopy.write(
-      plan(Iterator(Array("41"), Array("nope"), Array("42")).map(utf8)),
+      plan(Seq("n"), Iterator(Array("41"), Array("nope"), Array("42"))
+        .map(utf8)),
       _ => LocalCopy.Sink(_ => endpoint, LocalCopy.binaryRender(kinds)),
       rejectDir = Some(dir))
     assert(sent == 2 && rejected == 1)
@@ -134,8 +135,27 @@ class LocalCopySpec extends SparkSpec {
         throw CopyError(Some(1), "constraint")
     }
     intercept[CopyError] {
-      LocalCopy.write(plan(Iterator(Array("x")).map(utf8)),
+      LocalCopy.write(plan(Seq("x"), Iterator(Array("x")).map(utf8)),
         _ => LocalCopy.Sink(_ => endpoint), onErrorStop = true)
     }
+  }
+
+  test("write: the sink is chosen once per table, from the plan's " +
+    "column count, before any split streams") {
+    val widths = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val opened = new java.util.concurrent.atomic.AtomicInteger(0)
+    val endpoint = new CopyEndpoint {
+      def send(rows: Seq[Array[Byte]]): Unit = ()
+    }
+    val splits = (0 until 4).map(i => Iterator(Array(s"$i", "x"))
+      .map { r => opened.incrementAndGet(); utf8(r) })
+    val (sent, _, _) = LocalCopy.write(plan(Seq("k", "v"), splits: _*),
+      width => {
+        assert(opened.get == 0, "a split streamed before the sink")
+        widths.add(width)
+        LocalCopy.Sink(_ => endpoint)
+      })
+    assert(sent == 4)
+    assert(widths.toArray.toSeq == Seq(2))
   }
 }

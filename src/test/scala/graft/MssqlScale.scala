@@ -36,6 +36,7 @@ object MssqlScale {
           val p = TdsWire.ConnParams("127.0.0.1", srv.port, "corpus",
             "graft", "secret")
           val df = MssqlWireSource.scan(p, "dbo", "track",
+            cols.map(c => (TdsWire.quoteIdent(c), c)),
             partitionKey = Some("id"), rowCountEstimate = n.toLong,
             rowsPerRange = 5000L).frame(spark)
           val parts = df.rdd.getNumPartitions

@@ -438,55 +438,40 @@ class MssqlWireSpec extends SparkSpec {
             if (i == 4) null else s"n$i"))))
       else None)
     try {
-      val df = MssqlWireSource.scan(params(srv.port), "dbo",
-        "people").frame(spark)
+      val df = MssqlWireSource.scan(params(srv.port), "dbo", "people",
+        Seq(("id", "int"), ("name", "nvarchar")).map { case (n, t) =>
+          graft.sources.ColumnSqlExpressions.mssqlPair(n, t)
+        }).frame(spark)
       val got = df.collect().map(r => (r.getString(0), r.getString(1)))
         .sortBy(_._1.toInt)
       assert(got.length == 6 && got(3)._2 == null)
-      // TOP 0 discovery + one read connection
-      assert(srv.connections.get == 2)
+      // one read connection, no probe
+      assert(srv.connections.get == 1)
     } finally srv.close()
   }
 
-  test("read without selectCols discovers wire types via TOP 0 and " +
-    "renders datetime/bigint server-side — byte-identical to the " +
-    "introspection-driven selectCols path") {
+  test("selectCols render datetime/bigint server-side: bigint via " +
+    "numeric(20), datetime via convert(…, 126), in one whole-table " +
+    "SELECT") {
     val seen = new scala.collection.mutable.ArrayBuffer[String]()
     val dataCols = Seq("id", "at")
     val dataRows = Seq(Array("1", "2020-01-02T03:04:05"),
       Array("9007199254740993", null))
-    val srv = new FakeTdsServer(
-      // only the TOP 0 probe advertises typed columns (bigint IntN,
-      // datetime); the convert()-ed read is plain varchar, as a real
-      // server would answer it
-      colTypesFor = sql =>
-        if (sql.contains("TOP 0"))
-          Map("id" -> TdsWire.TIntN, "at" -> TdsWire.TDateTimeN)
-        else Map.empty,
-      onSelect = sql => {
-        seen.synchronized(seen += sql)
-        if (sql.contains("[dbo].[evts]")) Some((dataCols, dataRows))
-        else None
-      })
+    val srv = new FakeTdsServer(onSelect = sql => {
+      seen.synchronized(seen += sql)
+      if (sql.contains("[dbo].[evts]")) Some((dataCols, dataRows))
+      else None
+    })
     try {
-      val discovered = MssqlWireSource.scan(params(srv.port),
-        "dbo", "evts").frame(spark).collect().map(_.toSeq).toSeq
-      val explicit = MssqlWireSource.scan(params(srv.port),
-        "dbo", "evts", selectCols = Seq(("id", "bigint"),
-          ("at", "datetime")).map { case (n, t) =>
+      val got = MssqlWireSource.scan(params(srv.port), "dbo", "evts",
+        Seq(("id", "bigint"), ("at", "datetime")).map { case (n, t) =>
           graft.sources.ColumnSqlExpressions.mssqlPair(n, t)
-        }).frame(spark).collect()
-        .map(_.toSeq).toSeq
-      assert(discovered == explicit)
-      // both paths issued the SAME select list: bigint stabilized via
-      // numeric(20), datetime via convert(..., 126)
+        }).frame(spark).collect().map(_.toSeq).toSeq
+      assert(got == dataRows.map(_.toSeq))
       val reads = seen.synchronized(seen.toList)
-        .filter(s => s.contains("FROM [dbo].[evts]") &&
-          !s.contains("TOP 0"))
-      assert(reads.size == 2 && reads.distinct.size == 1, reads)
-      assert(reads.head.contains(
-        "cast([id] as numeric(20)) AS [id], " +
-          "convert(varchar(30), [at], 126) AS [at]"), reads.head)
+      assert(reads == Seq("SELECT cast([id] as numeric(20)) AS [id], " +
+        "convert(varchar(30), [at], 126) AS [at] FROM [dbo].[evts]"),
+        reads)
     } finally srv.close()
   }
 
@@ -501,7 +486,7 @@ class MssqlWireSpec extends SparkSpec {
     })
     try {
       val df = MssqlWireSource.scan(params(srv.port), "dbo", "t",
-        selectCols = Seq(("'x as y'", "lit"), ("[id]", "id"))).frame(spark)
+        Seq(("'x as y'", "lit"), ("[id]", "id"))).frame(spark)
       // the alias travels structurally — no string re-parsing of the
       // expression, so the literal's " as " cannot corrupt the name
       assert(df.columns.toSeq == Seq("lit", "id"))
@@ -790,15 +775,16 @@ class MssqlWireSpec extends SparkSpec {
     try {
       assert(MssqlWireSource.rowCountOf(params(srv.port), "dbo", "t") ==
         n.toLong)
-      val df = MssqlWireSource.scan(params(srv.port), "dbo", "t",
+      val cols = Seq(("[k]", "k"), ("[v]", "v"))
+      val df = MssqlWireSource.scan(params(srv.port), "dbo", "t", cols,
         partitionKey = Some("k"), rowCountEstimate = n.toLong,
         rowsPerRange = 10L).frame(spark)
       assert(df.rdd.getNumPartitions == 3)
       val got = df.collect().map(r => (r.getString(0), r.getString(1)))
         .sortBy(_._1.toInt)
       assert(got.toSeq == rows.map(r => (r(0), r(1))))
-      val single = MssqlWireSource.scan(params(srv.port), "dbo",
-        "t").frame(spark)
+      val single = MssqlWireSource.scan(params(srv.port), "dbo", "t",
+        cols).frame(spark)
       assert(single.rdd.getNumPartitions == 1)
       assert(single.collect().map(r => (r.getString(0), r.getString(1)))
         .sortBy(_._1.toInt).toSeq == got.toSeq)

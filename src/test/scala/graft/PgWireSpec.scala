@@ -223,7 +223,7 @@ class PgWireSpec extends SparkSpec {
       assert(seen.synchronized(
         seen.exists(_.contains("c.relname IN ('v1')"))))
       val df = graft.sources.PgWireSource.scan(params(srv.port),
-        "public.v1", view = true).frame(spark)
+        "public.v1", Seq(("\"n\"", "n")), view = true).frame(spark)
       assert(df.collect().map(_.getString(0)).sorted.toSeq == Seq("1", "2"))
       val readSql = seen.synchronized(
         seen.filter(s => s.contains(""""public"."v1"""") &&
@@ -294,9 +294,9 @@ class PgWireSpec extends SparkSpec {
         sqls.exists(_.startsWith("WITH RECURSIVE")))
       assert(executed.filter(_.startsWith("SET")) == List("SET jit = off"))
       assert(src.connections.get == 1 + 2 * 2)
-      assert(sqls.filter(_.startsWith("SELECT * FROM")).sorted == Seq(
-        "SELECT * FROM ONLY \"public\".\"tags\"",
-        "SELECT * FROM ONLY \"public\".\"users\""))
+      assert(sqls.filter(_.startsWith("SELECT \"")).sorted == Seq(
+        "SELECT \"id\", \"name\" FROM ONLY \"public\".\"users\"",
+        "SELECT \"tag\" FROM ONLY \"public\".\"tags\""))
     } finally { src.close(); dst.close() }
   }
 

@@ -576,4 +576,42 @@ class RunnerSpec extends SparkSpec {
     val rows = RunnerSpec.received.asScala.toSeq.map(_._2).sorted
     assert(rows == Seq("plip\tsecond line\tbar", "plop\tbar\tfoo"), rows)
   }
+
+  test("DBF create table: the DDL and the COPY column list case the " +
+    "same descriptors (quote identifiers keeps their raw spelling, a " +
+    "user cast rule retypes one column)") {
+    import graft.sources.DbfSource
+    val dir = Files.createTempDirectory("runnerdbf").toFile
+    val dbf = new java.io.File(dir, "people.dbf")
+    // the writer stores descriptor names uppercase, like dBase itself
+    // (a blank character field loads as an empty string, the
+    // reference's db3-trim-string)
+    DbfSource.write(dbf, Seq(
+      DbfSource.DbfField("prodid", 'N', 5, 0),
+      DbfSource.DbfField("label", 'C', 10, 0),
+      DbfSource.DbfField("price", 'N', 8, 2)),
+      Seq(Seq("1", "apple", "0.50"), Seq("2", null, "12.25")))
+    val ddl = new ConcurrentLinkedQueue[String]
+    val targets = new ConcurrentLinkedQueue[String]
+    val runner = new Runner((sql, _) => ddl.add(sql),
+      (table, setup) => {
+        targets.add(table)
+        RunnerSpec.endpoint(table, setup)
+      })
+    RunnerSpec.received.clear()
+    val stats = runner.runFile(spark,
+      s"""LOAD DBF FROM '${dbf.getAbsolutePath}'
+            INTO postgresql:///t TARGET TABLE people
+            WITH create table, quote identifiers
+            CAST column people.label to varchar;""")
+    assert(stats.map(s => (s.table, s.rows, s.rejected)) ==
+      Seq(("people", 2L, 0L)))
+    assert(ddl.asScala.toSeq == Seq("CREATE TABLE IF NOT EXISTS " +
+      "\"people\" (\"PRODID\" bigint, \"LABEL\" varchar, " +
+      "\"PRICE\" numeric(8,2));"))
+    assert(targets.asScala.toSeq ==
+      Seq("\"people\" (\"PRODID\", \"LABEL\", \"PRICE\")"))
+    assert(RunnerSpec.received.asScala.toSeq.map(_._2).sorted ==
+      Seq("1\tapple\t0.50", "2\t\t12.25"))
+  }
 }

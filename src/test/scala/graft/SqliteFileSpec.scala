@@ -561,9 +561,9 @@ class SqliteFileSpec extends SparkSpec {
     // the driver stream agrees with the distributed read
     val local = graft.sources.SqliteSource.scan(path, "wor")
     assert(local.splits.length == 1)
+    assert(local.columns == Seq("val", "k1", "note", "k2", "score"))
     val stream = local.stream(0)
     try {
-      assert(stream.columns == Seq("val", "k1", "note", "k2", "score"))
       val l = stream.rows.toVector
       assert(l.length == 500)
       assert(l.map(_(1).toString.toLong).toSet == (1L to 500L).toSet)
