@@ -151,8 +151,7 @@ object MssqlWireSource {
     val open = (sql: String) =>
       ScanPlan.opened(new TdsWireConnection(params))(
         _.queryStream(sql)._2.map(ScanPlan.utf8))
-    ScanPlan(selectCols.map(_._2), RangeSplit.selects(
-      ColumnSqlExpressions.selectList(selectCols, quoteIdent),
+    ScanPlan(selectCols.map(_._2), RangeSplit.selects(selectCols,
       s"${quoteIdent(schema)}.${quoteIdent(table)}", partitionKey,
       rowCountEstimate, rowsPerRange, quoteIdent)(
       integerBounds(params, schema, table, _)), open)

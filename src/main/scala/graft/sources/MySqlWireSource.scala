@@ -148,8 +148,7 @@ object MySqlWireSource {
     val open = (sql: String) =>
       ScanPlan.opened(new MySqlWireConnection(params))(_.queryStreamData(
         sql, java.nio.charset.Charset.forName(charsetName))._2)
-    ScanPlan(selectCols.map(_._2), RangeSplit.selects(
-      ColumnSqlExpressions.selectList(selectCols, quoteIdent),
+    ScanPlan(selectCols.map(_._2), RangeSplit.selects(selectCols,
       s"${quoteIdent(schema)}.${quoteIdent(table)}", partitionKey,
       rowCountEstimate, rowsPerRange, quoteIdent)(
       integerBounds(params, schema, table, _)), open)

@@ -254,7 +254,8 @@ object PgWireSource {
 
   /** Column names of `table`, discovered driver-side from a LIMIT 0
     * RowDescription — no catalog query needed. */
-  def columnsOf(params: PgWire.ConnParams, table: String): Seq[String] = {
+  private def columnsOf(params: PgWire.ConnParams,
+                        table: String): Seq[String] = {
     val conn = new PgWireConnection(params)
     try conn.query(
       s"SELECT * FROM ${PgWire.quoteQualified(table)} LIMIT 0")._1

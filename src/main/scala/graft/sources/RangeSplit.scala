@@ -37,15 +37,18 @@ private[graft] object RangeSplit {
   /** The reference's big-enough guard (mysql.lisp:44-47): a read splits
     * only on an integer key and with at least `2 * rowsPerRange` rows. */
   private def splits(partitionKey: Option[String], rowCount: Long,
-             rowsPerRange: Long): Boolean =
+                     rowsPerRange: Long): Boolean =
     partitionKey.isDefined && rowCount >= 2 * rowsPerRange
 
-  /** The SELECT of each split of a key-range read of `from`: one
-    * `WHERE` range of [[predicates]] over the key's `bounds` (min, max)
-    * each when the read [[splits]], else the one whole-table SELECT. */
-  def selects(select: String, from: String, partitionKey: Option[String],
-              rowCount: Long, rowsPerRange: Long, quote: String => String)(
-      bounds: String => (Long, Long)): Seq[String] =
+  /** The SELECT of each split of a key-range read of `selectCols`
+    * ([[ColumnSqlExpressions.selectList]]) from `from`: one `WHERE`
+    * range of [[predicates]] over the key's `bounds` (min, max) each
+    * when the read [[splits]], else the one whole-table SELECT. */
+  def selects(selectCols: Seq[(String, String)], from: String,
+              partitionKey: Option[String], rowCount: Long,
+              rowsPerRange: Long, quote: String => String)(
+      bounds: String => (Long, Long)): Seq[String] = {
+    val select = ColumnSqlExpressions.selectList(selectCols, quote)
     if (!splits(partitionKey, rowCount, rowsPerRange))
       Seq(s"SELECT $select FROM $from")
     else {
@@ -53,4 +56,5 @@ private[graft] object RangeSplit {
       predicates(quote(partitionKey.get), lo, hi, rowsPerRange, rowCount)
         .map(pred => s"SELECT $select FROM $from WHERE $pred")
     }
+  }
 }
