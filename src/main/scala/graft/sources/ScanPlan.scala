@@ -14,8 +14,8 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * catalyst-form rows: one `UTF8String` or null per column (fidelity
   * mode: the cast engine types the values downstream).
   *
-  * A plan is read one of two ways, with the same opener and the same
-  * split numbering: on driver threads, one stream per split
+  * A plan is read one of two ways, with the same columns, splits,
+  * opener and split numbering: on driver threads, one stream per split
   * ([[graft.sinks.LocalCopy]]), or as a Spark job, one partition per
   * split ([[frame]]). `open` ships to executors, so it must capture
   * only serializable values (connection parameters, paths), never a
