@@ -126,11 +126,6 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
   private def findInlineCut(text: String, inline: Option[String]): Int =
     inline.map(d => text.length - d.length).getOrElse(text.length)
 
-  def runCommand(spark: SparkSession, cmd: Ast.LoadCommand,
-                 baseDir: String = ".",
-                 inline: Option[String] = None): Seq[TableStats] =
-    runCommandWith(() => spark, cmd, baseDir, inline)
-
   private def runCommandWith(sparkF: () => SparkSession,
                              cmd: Ast.LoadCommand,
                              baseDir: String = ".",
@@ -479,16 +474,6 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
     }
   }
 
-  /** `WITH copy binary` cannot positional-match a table with generated
-    * columns (the COPY needs an explicit column list) — note the
-    * documented text fallback once per table. */
-  private def binaryGeneratedFallback(qualified: String,
-                                      mode: Option[String]): Unit =
-    if (mode.nonEmpty)
-      System.err.println("graft: WITH copy binary falls back to COPY " +
-        s"TEXT for $qualified (generated columns need a COPY column " +
-        "list)")
-
   /** `WITH copy binary`: resolve each frame column's target type from
     * the TARGET catalog and map it to a binary encoder
     * ([[graft.sinks.PgBinary.kindOf]]). None → the load falls back to
@@ -759,11 +744,11 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
     * for `exactly once` and a cluster master's multi-split tables;
     * views and backfills read distributed frames — and is COPYed through
     * this Runner's endpoint factory. WITH options map to the Migrator's
-    * surface; BEFORE LOAD DO ran already (runCommand), AFTER LOAD DO /
-    * FINALLY run after this returns, AFTER CREATE SCHEMA DO is placed
-    * by the Migrator between DDL and data. Here live only the Migrator
-    * wiring, the MATERIALIZE VIEWS lifecycle and the DISTRIBUTE
-    * backfill. */
+    * surface; BEFORE LOAD DO ran already (`runCommandWith`), AFTER LOAD
+    * DO / FINALLY run after this returns, AFTER CREATE SCHEMA DO is
+    * placed by the Migrator between DDL and data. Here live only the
+    * Migrator wiring, the MATERIALIZE VIEWS lifecycle and the
+    * DISTRIBUTE backfill. */
   private def runDatabase(sparkF: () => SparkSession,
                           cmd: Ast.LoadCommand): Seq[TableStats] = {
     import graft.catalog.{Catalog, Schema, Table}
@@ -906,7 +891,6 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
           writeTable(graft.sinks.PgWire.joinQualified(t.schema, t.name),
             if (hasGen) t.columns.filter(_.generated.isEmpty).map(_.name)
             else Nil,
-            generated = hasGen,
             driver = plan.filter(p =>
               !exactlyOnce && (localMaster || p.splits.length == 1)),
             df = rule match {
@@ -1015,7 +999,7 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
       else rawFileNames.getOrElse(cols)
         .map(graft.catalog.Identifiers(_, fileNameCase))
     val (sent, rejected, bytes) = writeTable(table, copyCols,
-      generated = false, driver = None, df = df, sessionSql,
+      driver = None, df = df, sessionSql,
       rejectName = table, cmd)
     // summary label: a qualified TARGET TABLE already carries its
     // schema — don't prefix "public." on top (public.public.t)
@@ -1029,17 +1013,18 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
 
   /** Copy one table's rows into PostgreSQL — the one place a table's
     * sink is chosen, from the command's `copy binary`, `exactly once`,
-    * `on error stop` and `batch rows / batch size` options: the
-    * driver route [[graft.sinks.LocalCopy]] for a database table's
-    * scan plan, the staged [[graft.sinks.ExactlyOnce]] publish, or the
+    * `on error stop` and `batch rows / batch size` options. Two values
+    * are worked out once per table — the COPY column list and the
+    * [[graft.sinks.CopyFormat]] — and go to whichever writer runs: the
+    * driver route [[graft.sinks.LocalCopy]] for a database table's scan
+    * plan, the staged [[graft.sinks.ExactlyOnce]] publish, or the
     * distributed [[CopySink]].
     *
     * @param table qualified target: binary type lookup, stage names
     * @param copyCols COPY column list, user-cased; empty = positional
-    *   (every target column, in attnum order)
-    * @param generated the target has generated columns, which
-    *   `copyCols` leaves out: COPY TEXT only, and exactly-once stages
-    *   and publishes carry `copyCols` only
+    *   (every target column, in attnum order). A table with generated
+    *   columns lists the others, and `copy binary` resolves its
+    *   encoders by those names
     * @param driver a database table's [[graft.sources.ScanPlan]], its
     *   splits streamed on driver threads; never given with exactly
     *   once, whose stages need Spark's task attempts (they read the
@@ -1051,87 +1036,53 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
     *   and `.log`, both cleared first so no earlier run's parts stay
     * @return (sent, rejected, bytes) */
   private def writeTable(
-      table: String, copyCols: Seq[String], generated: Boolean,
+      table: String, copyCols: Seq[String],
       driver: Option[graft.sources.ScanPlan[_]],
       df: => org.apache.spark.sql.DataFrame,
       sessionSql: Seq[String], rejectName: String,
       cmd: Ast.LoadCommand): (Long, Long, Long) = {
-    import graft.sinks.{ExactlyOnce, LocalCopy, PgBinKind, PgBinary, PgWire}
-    val exactlyOnce = cmd.boolOption("exactly once")
+    import graft.sinks.{CopyFormat, ExactlyOnce, LocalCopy, PgWire}
     val onErrorStop = cmd.boolOption("on error stop")
     val maxRows = batchRowsOf(cmd); val maxBytes = batchBytesOf(cmd)
     val rejectDir = rejectRoot.map(r => s"$r/$rejectName.dat")
     rejectDir.foreach { d =>
       Seq(d, CopySink.logDirFor(d)).foreach(Runner.deleteTree)
     }
-    val binaryMode = cmd.option("copy binary")
+    lazy val frame = df
     // `WITH copy binary`: the target's column encoders, resolved once
     // from the row width (a positional load must cover the whole table)
-    def kindsFor(width: Int) =
-      if (generated) { binaryGeneratedFallback(table, binaryMode); None }
-      else binaryKinds(table, copyCols, width, binaryMode)
-    // closures below ship to executors inside the sink's endpoint
-    // factory: they capture LOCALS only (a field would drag the
-    // non-serializable Runner, df.columns the DataFrame)
-    def endpoints(kinds: Option[Seq[PgBinKind]]) =
-      (if (kinds.isDefined) binaryEndpointFactory else endpointFactory)(
-        PgWire.copyTarget(table, copyCols), sessionSql)
-    def rejectRenderOf(kinds: Option[Seq[PgBinKind]]) =
-      kinds.map(k => PgBinary.frameToTextLine(_: Array[Byte], k)).orNull
+    val width = driver.fold(
+      graft.sources.TaggedLines.untagged(frame).columns.length)(_.columns.length)
+    val format = binaryKinds(table, copyCols, width, cmd.option("copy binary"))
+      .fold[CopyFormat](CopyFormat.Text)(CopyFormat.Binary)
+    // shipped to executors inside the sinks' endpoint factories: a
+    // LOCAL, so no closure drags the non-serializable Runner along
+    val ef = format match {
+      case CopyFormat.Text => endpointFactory
+      case _: CopyFormat.Binary => binaryEndpointFactory
+    }
     driver match {
       case Some(plan) =>
-        LocalCopy.write(plan, width => {
-          val kinds = kindsFor(width)
-          LocalCopy.Sink(endpoints(kinds),
-            kinds.map(LocalCopy.binaryRender).getOrElse(LocalCopy.textRender),
-            rejectRenderOf(kinds))
-        }, rejectDir = rejectDir, maxRows = maxRows, maxBytes = maxBytes,
-          onErrorStop = onErrorStop)
+        LocalCopy.write(plan, ef(PgWire.copyTarget(table, copyCols),
+          sessionSql), format, rejectDir = rejectDir, maxRows = maxRows,
+          maxBytes = maxBytes, onErrorStop = onErrorStop)
+      case None if cmd.boolOption("exactly once") =>
+        // per-attempt stage tables + one atomic publish, with the same
+        // COPY column list, format and reject files as the direct path
+        // (rejected rows never reach a stage, so nothing can
+        // double-publish)
+        ExactlyOnce.write(frame, table,
+          exec = sql => executeDdl(sql, sessionSql),
+          endpointFor = (stage, stageSetup, pid) =>
+            ef(PgWire.copyTarget(stage, copyCols),
+              sessionSql ++ stageSetup)(pid),
+          quote = PgWire.quoteQualified, columns = copyCols,
+          maxRows = maxRows, maxBytes = maxBytes,
+          onErrorStop = onErrorStop, format = format, rejectDir = rejectDir)
       case None =>
-        val frame = df
-        val kinds =
-          kindsFor(graft.sources.TaggedLines.untagged(frame).columns.length)
-        val rejectRender = rejectRenderOf(kinds)
-        val renderer =
-          kinds.map(PgBinary.renderer).getOrElse(CopySink.textRenderer)
-        if (exactlyOnce) {
-          // per-attempt stage tables + one atomic publish. The stage
-          // clones the target's layout (LIKE), so it takes the SAME
-          // COPY column list and binary frames; rejected rows get the
-          // same reject files (they never reach a stage, so nothing
-          // can double-publish). With generated columns, LIKE would
-          // copy their NOT NULL but not their expressions: stage and
-          // publish the real columns only — the target recomputes.
-          val ef =
-            if (kinds.isDefined) binaryEndpointFactory else endpointFactory
-          val colList = copyCols.map(PgWire.quoteIdent).mkString(", ")
-          ExactlyOnce.write(frame, table,
-            exec = sql => executeDdl(sql, sessionSql),
-            endpointFor = (stage, stageSetup, pid) =>
-              ef(PgWire.copyTarget(stage, copyCols),
-                sessionSql ++ stageSetup)(pid),
-            quote = PgWire.quoteQualified,
-            createStageSql =
-              if (!generated) null
-              else (stage, target) =>
-                s"CREATE TABLE IF NOT EXISTS " +
-                  s"${PgWire.quoteQualified(stage)} AS " +
-                  s"SELECT $colList FROM ${PgWire.quoteQualified(target)} " +
-                  "WITH NO DATA;",
-            publishSql =
-              if (!generated) null
-              else (stage, target) =>
-                s"INSERT INTO ${PgWire.quoteQualified(target)} " +
-                  s"($colList) SELECT $colList FROM " +
-                  s"${PgWire.quoteQualified(stage)};",
-            maxRows = maxRows, maxBytes = maxBytes,
-            onErrorStop = onErrorStop, renderer = renderer,
-            rejectDir = rejectDir, rejectRender = rejectRender)
-        } else
-          new CopySink(endpoints(kinds), maxRows = maxRows,
-            maxBytes = maxBytes, onErrorStop = onErrorStop,
-            rejectDir = rejectDir, renderer = renderer,
-            rejectRender = rejectRender).write(frame)
+        new CopySink(ef(PgWire.copyTarget(table, copyCols), sessionSql),
+          maxRows = maxRows, maxBytes = maxBytes, onErrorStop = onErrorStop,
+          rejectDir = rejectDir, format = format).write(frame)
     }
   }
 }

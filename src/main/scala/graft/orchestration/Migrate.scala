@@ -126,15 +126,10 @@ final class Migrator(
                 * PKs, FKs, sequences — but move NO data. */
               copyData: Boolean = true,
               resetSequences: Boolean = true,
-              beforeLoad: Seq[String] = Nil,
               /** AFTER CREATE SCHEMA DO — between target DDL and the
                 * data phase (command-sql-block.lisp:61;
                 * migrate-database.lisp:459-465). */
               afterSchema: Seq[String] = Nil,
-              afterLoad: Seq[String] = Nil,
-              /** FINALLY DO/EXECUTE — the very last statements, after
-                * AFTER LOAD DO (command-sql-block.lisp:52-55). */
-              finallyDo: Seq[String] = Nil,
               setParams: Seq[(String, String)] = Nil,
               disableTriggers: Boolean = false,
               /** target identifier casing for COLUMN names (table
@@ -162,8 +157,8 @@ final class Migrator(
     // (SET params, core.clj:518-545, 1061-1075) go to ALL connections;
     // the trigger-disabling replica role is scoped to the data-copy
     // connections ONLY (core.clj:821,909 sets replica around copy-table
-    // and resets to origin) — DDL and user BEFORE/AFTER LOAD DO must run
-    // with triggers and FK enforcement live.
+    // and resets to origin) — DDL must run with triggers and FK
+    // enforcement live.
     val gucSql: Seq[String] =
       setParams.map { case (k, v) => s"SET $k = '$v';" }
     val copySessionSql: Seq[String] =
@@ -176,11 +171,6 @@ final class Migrator(
     // hook is ever called and no data moves; the Summary carries every
     // statement that WOULD have run, as a reviewable plan
     def ddl(sql: String): Unit = if (!dryRun) executeDdl(sql, gucSql)
-
-    // (BEFORE LOAD DO runs below, after driver-side catalog validation
-    // — it mutates the TARGET, and a run the collision check is about
-    // to abort must not have executed the user's statements first; it
-    // is also recorded in Summary.preDdl so dry-run plans carry it)
 
     // ---- 1. process-catalog (migrate-database.lisp:253-302)
     var cat = CatalogRewrite.filter(cat0, including, excluding)
@@ -230,12 +220,13 @@ final class Migrator(
     // skip them: no work happens, so the times would be noise
     val phaseEntries = Seq.newBuilder[PhaseEntry]
 
-    // ---- 2. prepare target (prepare-pgsql-database :11-150)
+    // ---- 2. prepare target (prepare-pgsql-database :11-150). The
+    // command's BEFORE LOAD DO ran before the source was introspected,
+    // and its AFTER LOAD DO and FINALLY run after this returns — all
+    // three in graft.Runner, as for a file load
     val pre = Seq.newBuilder[String]
     val preT0 = System.nanoTime()
     def preDdl(sql: String): Unit = { ddl(sql); pre += sql }
-    // BEFORE LOAD DO, ahead of any schema DDL (and inside the plan)
-    beforeLoad.foreach(preDdl)
     // WITH drop schema: drop each target schema wholesale before
     // recreating (core.clj:672-684 — executed once per schema ahead
     // of per-table DDL; only sane when tables are being recreated)
@@ -572,9 +563,6 @@ final class Migrator(
     }
     // no replica-role restore needed: the role was per-connection session
     // setup, and every connection that carried it is closed by now
-    // AFTER LOAD DO, then FINALLY, last (core.clj:518-545)
-    afterLoad.foreach { sql => ddl(sql); post += sql }
-    finallyDo.foreach { sql => ddl(sql); post += sql }
 
     // ---- 5. summary
     val byName = ordered.map(t => (t.schema, t.name)).zipWithIndex.toMap

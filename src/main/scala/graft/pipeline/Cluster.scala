@@ -73,58 +73,6 @@ object Cluster {
         col("__best.d2").as("dist2"): _*)
   }
 
-  /** Lloyd's k-means with deterministic seeding (the k lowest-id
-    * vectors). Returns (centroids, assignments): centroids as a local
-    * k-row DataFrame (cluster_id, centroid), assignments as
-    * (idCol, cluster, dist2).
-    *
-    * Each iteration = one corpus scan (assignment) + one narrow
-    * (cluster, dim) aggregate (recomputation); nothing corpus-sized is
-    * cached, collected, or shuffled wider than 20 bytes/row. An empty
-    * cluster keeps its previous centroid (the standard fix).
-    *
-    * Contract: `idCol` must be LONG-CASTABLE — ids key the
-    * deterministic seeding order and the assignments output. A
-    * non-numeric id fails loudly under ANSI mode (the library's
-    * target); map string ids to a dense numeric key upstream (the
-    * Dedup/Similarity operators keep ids opaque; the k-means pair
-    * does not).
-    */
-  def kmeans(spark: SparkSession, df: DataFrame, idCol: String,
-             vecCol: String, k: Int, iters: Int = 5)
-      : (DataFrame, DataFrame) = {
-    require(k >= 1 && iters >= 0, s"need k>=1, iters>=0; got $k/$iters")
-    import spark.implicits._
-    val vecs = df.select(col(idCol).cast("long").as("id"),
-      transform(col(vecCol), _.cast("double")).as("v"))
-    var centroids: Seq[(Int, Seq[Double])] = vecs
-      .orderBy(col("id")).limit(k).collect()
-      .zipWithIndex
-      .map { case (r, i) => (i, r.getSeq[Double](1)) }.toSeq
-    for (_ <- 0 until iters) {
-      val cdf = centroids.toDF("cluster_id", "centroid")
-      val assigned = assign(vecs, "id", "v", cdf, carry = Seq("v"))
-      val means = assigned
-        .select(col("cluster"), posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy(col("cluster"), col("pos")).agg(avg(col("x")).as("m"))
-        .groupBy(col("cluster"))
-        .agg(map_from_arrays(collect_list(col("pos")),
-          collect_list(col("m"))).as("byPos"))
-        .collect()
-        .map { r =>
-          val m = r.getMap[Int, Double](1)
-          (r.getAs[Number](0).intValue,
-            (0 until m.size).map(m): Seq[Double])
-        }.toMap
-      centroids = centroids.map { case (cid, prev) =>
-        (cid, means.getOrElse(cid, prev))
-      }
-    }
-    val cdf = centroids.toDF("cluster_id", "centroid")
-    (cdf, assign(vecs, "id", "v", cdf)
-      .withColumnRenamed("id", idCol))
-  }
-
   /** Lloyd's k-means over INTEGER-quantized vectors with floor-division
     * centroid updates — every intermediate value is an integer that
     * doubles represent exactly (sums of |q|<=2^20 longs stay far under
@@ -136,11 +84,17 @@ object Cluster {
     * 100 TB it also means a re-run after a lost stage reproduces the
     * same model instead of drifting.
     *
-    * Same per-iteration shape as [[kmeans]]: one corpus scan to assign
-    * (centroids folded into a codegen'd projection, zero corpus
-    * shuffle) + one (cluster, dim) hash aggregate collected to the
-    * driver (k×dim rows). Seeding: the k lowest-id vectors. Empty
-    * clusters keep their previous centroid.
+    * Each iteration is one corpus scan to assign (centroids folded
+    * into a codegen'd projection, zero corpus shuffle) + one (cluster,
+    * dim) hash aggregate collected to the driver (k×dim rows); nothing
+    * corpus-sized is cached or collected. Seeding: the k lowest-id
+    * vectors. Empty clusters keep their previous centroid. Returns
+    * (centroids, assignments): centroids as a local k-row DataFrame
+    * (cluster_id, centroid), assignments as (idCol, cluster, dist2).
+    *
+    * Contract: `idCol` must be LONG-CASTABLE — ids key the
+    * deterministic seeding order and the assignments output; map
+    * string ids to a dense numeric key upstream.
     */
   def kmeansExact(spark: SparkSession, df: DataFrame, idCol: String,
                   vecCol: String, k: Int, iters: Int)

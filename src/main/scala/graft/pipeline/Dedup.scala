@@ -66,15 +66,6 @@ object Dedup {
       .select(col("keep_id"), col("batch_dup_count"))
   }
 
-  /** Word k-shingles of a text column: `["w1 w2 w3", "w2 w3 w4", …]`. */
-  def shingles(text: Column, k: Int): Column = {
-    val toks = split(text, "\\s+")
-    when(size(toks) < k, array(array_join(toks, " ")))
-      .otherwise(transform(
-        sequence(lit(0), size(toks) - k),
-        i => array_join(slice(toks, i + 1, lit(k)), " ")))
-  }
-
   /** Distinct 64-bit-hashed word k-shingles — the document's set
     * representation, hash-identical to [[shingleHashRows]] (the word
     * TUPLE is hashed, not the joined string), so the column and row
@@ -95,7 +86,7 @@ object Dedup {
   /** Distinct hashed k-shingles as (id, h) ROWS, fully codegen: tokenize
     * → explode the gram start-index range → xxhash64 of the word tuple,
     * with no shuffle at all before the consumer's own. Documents shorter
-    * than k hash their whole text (matching [[shingles]]). Every
+    * than k hash their whole text (matching [[hashedShingles]]). Every
     * downstream consumer (signature aggregate, prefix filter,
     * count-based verification) is a plain relational op over these
     * rows. */
@@ -119,7 +110,7 @@ object Dedup {
                                            k: Int): DataFrame = {
     // complete k-grams via the shared positioned-gram helper (documents
     // shorter than k words yield no rows there and are hashed whole
-    // below, matching [[shingles]]).
+    // below, matching [[hashedShingles]]).
     val full = Grams.positioned(df, idCol, textCol, k)
       .select(col("id"), xxhash64(Grams.wordCols(k): _*).as("h"))
     val short = df

@@ -102,10 +102,11 @@ object BatchRetry {
   }
 }
 
-/** The distributed COPY sink: each partition formats its rows to COPY TEXT
-  * bytes once, accumulates batches, and streams them to its own endpoint —
-  * the Spark realization of copy-rows-in-batch.lisp:6-31 where Spark tasks
-  * replace the reader/writer thread pairs.
+/** The distributed COPY sink: each partition formats its rows once in the
+  * table's [[CopyFormat]] (COPY TEXT lines or COPY BINARY tuple frames),
+  * accumulates batches, and streams them to its own endpoint — the Spark
+  * realization of copy-rows-in-batch.lisp:6-31 where Spark tasks replace
+  * the reader/writer thread pairs.
   *
   * @param endpointFactory built ON THE EXECUTOR per partition (must be a
   *   serializable closure); e.g. opens one PG connection per task.
@@ -124,16 +125,15 @@ final class CopySink(
     onErrorStop: Boolean = false,
     rejectDir: Option[String] = None,
     onPartitionSuccess: Int => Unit = null,
-    renderer: DataFrame => DataFrame = CopySink.textRenderer,
-    rejectRender: Array[Byte] => Array[Byte] = null)
+    format: CopyFormat = CopyFormat.Text)
   extends Serializable {
 
   /** Write `df`; returns (sent, rejected, bytes) via accumulators —
     * `bytes` counts the rendered row payload actually handed to
-    * endpoints in the ACTIVE format: COPY TEXT lines under the default
-    * renderer, COPY BINARY tuple frames under [[graft.sinks.PgBinary]]'s
-    * (so summary byte totals are not comparable across formats — binary
-    * frames of the same rows are usually smaller). This is the
+    * endpoints in the ACTIVE format: COPY TEXT lines, or COPY BINARY
+    * tuple frames under [[CopyFormat.Binary]] (so summary byte totals
+    * are not comparable across formats — binary frames of the same
+    * rows are usually smaller). This is the
     * reference's per-table bytes column in the load summary.
     *
     * Delivery contract: at-least-once per PARTITION — each COPY batch
@@ -152,7 +152,7 @@ final class CopySink(
     val bytesSent = spark.sparkContext.longAccumulator("bytesSent")
     val mr = maxRows; val mb = maxBytes; val stop = onErrorStop
     val rDir = rejectDir; val factory = endpointFactory
-    val successHook = onPartitionSuccess; val rr = rejectRender
+    val successHook = onPartitionSuccess; val fmt = format
     // rows are rendered by a codegen'd projection to (value, reject,
     // raw): COPY TEXT lines by default (typed PG literals + escaping,
     // newline-terminated, cast to BINARY inside codegen so the task
@@ -164,12 +164,12 @@ final class CopySink(
     // matching what the server itself would do to that row. A non-null
     // raw = a line reader's parse reject ([[TaggedLines]]), filed as
     // its source line.
-    val lines = renderer(df)
+    val lines = format.render(df)
     lines.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
       val pid = org.apache.spark.TaskContext.getPartitionId()
       val (s, r, b) = CopySink.writePartition[org.apache.spark.sql.Row](
         pid, it, _.getAs[Array[Byte]](0), _.getAs[Array[Byte]](1),
-        _.getString(2), factory, mr, mb, stop, rDir, rr)
+        _.getString(2), factory, mr, mb, stop, rDir, fmt)
       sent.add(s); rejected.add(r); bytesSent.add(b)
       if (successHook != null) successHook(pid)
     }
@@ -194,9 +194,8 @@ object CopySink {
     *   server-refused row
     * @param raw the row's source line when the reader could not decode
     *   or parse it (the row is then rejected unsent), else null
-    * @param rejectRender server-rejected SENT bytes → replayable COPY
-    *   TEXT (binary frames need [[PgBinary.frameToTextLine]]; null =
-    *   the sent bytes are already text)
+    * @param format turns server-rejected SENT bytes back into
+    *   replayable COPY TEXT ([[CopyFormat.rejectLine]])
     * @return (rowsSent, rowsRejected, bytesSent) — bytes = rendered
     *   payload handed to the endpoint in the active format */
   private[sinks] def writePartition[R](
@@ -206,7 +205,7 @@ object CopySink {
       endpointFactory: Int => CopyEndpoint,
       maxRows: Int, maxBytes: Long, onErrorStop: Boolean,
       rejectDir: Option[String],
-      rejectRender: Array[Byte] => Array[Byte]): (Long, Long, Long) = {
+      format: CopyFormat): (Long, Long, Long) = {
     var sent = 0L; var rejected = 0L; var bytes = 0L
     val endpoint = endpointFactory(pid)
     // a plain Writer, NOT PrintWriter: PrintWriter swallows
@@ -249,11 +248,10 @@ object CopySink {
         rawWriter.get.write("\n")
       }
     // SERVER-rejected rows reach BatchRetry as the bytes we SENT —
-    // binary tuple frames under the binary renderer; encode-failure
+    // binary tuple frames under the binary format; encode-failure
     // rejects below already carry text
     val sendReject: (Array[Byte], String) => Unit =
-      if (rejectRender == null) rejectFn
-      else (row, msg) => rejectFn(rejectRender(row), msg)
+      (row, msg) => rejectFn(format.rejectLine(row), msg)
     try {
       var batch = new Batch(maxRows, maxBytes, seed = pid)
       def flush(): Unit = if (batch.nonEmpty) {
@@ -295,10 +293,10 @@ object CopySink {
   /** The `.log` line of a source line the reader could not use. */
   val RawRejectMessage = "source line does not decode or parse"
 
-  /** Default renderer: (value = COPY TEXT line bytes, reject = null,
-    * raw = [[rawSlot]]). `value` is never null here — text rendering
-    * cannot fail; the reject column exists so both renderers share one
-    * row shape. */
+  /** [[CopyFormat.Text]]'s renderer: (value = COPY TEXT line bytes,
+    * reject = null, raw = [[rawSlot]]). `value` is never null here —
+    * text rendering cannot fail; the reject column exists so both
+    * formats share one row shape. */
   def textRenderer: DataFrame => DataFrame = { df =>
     import org.apache.spark.sql.functions.{concat, lit}
     df.select(

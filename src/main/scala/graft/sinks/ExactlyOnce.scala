@@ -14,21 +14,30 @@ import org.apache.spark.sql.DataFrame
   *      a previously crashed run left behind;
   *   2. executors: each task attempt COPYies into ITS OWN stage table,
   *      named by the attempt's globally-unique taskAttemptId — the
-  *      endpoint's session setup runs `CREATE TABLE IF NOT EXISTS
-  *      <stage> (LIKE <table>); TRUNCATE <stage>` on its own fresh
-  *      connection, so CONCURRENT speculative attempts write disjoint
-  *      tables and can never erase or interleave each other's batches
-  *      (a single per-partition stage truncated per attempt is only
-  *      sequential-retry safe: a slower concurrent attempt's TRUNCATE
-  *      would silently drop the winner's committed batches);
+  *      endpoint's session setup (`stageSetup`) runs `CREATE TABLE IF
+  *      NOT EXISTS <stage> (LIKE <table>); TRUNCATE <stage>` on its own
+  *      fresh connection, so CONCURRENT speculative attempts write
+  *      disjoint tables and can never erase or interleave each other's
+  *      batches (a single per-partition stage truncated per attempt is
+  *      only sequential-retry safe: a slower concurrent attempt's
+  *      TRUNCATE would silently drop the winner's committed batches).
+  *      With a COPY column list, one DO block between the two drops
+  *      NOT NULL from every stage column OUTSIDE the list: LIKE copies
+  *      NOT NULL but not defaults, identities or generation
+  *      expressions, so an unlisted serial, defaulted or generated
+  *      column would otherwise fail every staged row. Listed columns
+  *      keep their NOT NULL, so a NULL there rejects its row at
+  *      staging, as a plain COPY would;
   *   3. executors: the attempt that Spark accepts as the partition's
   *      completion records its stage name through an accumulator —
   *      Spark applies result-stage accumulator updates only for the
   *      FIRST successful completion of each partition, so exactly one
   *      winner is recorded per partition;
   *   4. driver: one transaction publishes every WINNING stage into the
-  *      target (`BEGIN; INSERT INTO t SELECT * FROM stage; …; COMMIT;`)
-  *      — the target sees all rows or none — then pattern-drops all
+  *      target (`BEGIN; INSERT INTO t SELECT * FROM stage; …; COMMIT;`,
+  *      or `INSERT INTO t (cols) SELECT cols FROM stage` with a column
+  *      list, so the target fills the rest from its own defaults) —
+  *      the target sees all rows or none — then pattern-drops all
   *      stages (winners and any losing attempts' leftovers).
   *
   * Guarantees: task-retry AND speculative-execution safe end to end —
@@ -36,9 +45,8 @@ import org.apache.spark.sql.DataFrame
   * Whole-RUN retry safe up to the publish transaction (a rerun
   * pre-cleans and re-stages). A rerun AFTER a successful publish
   * inserts again — run-level idempotence needs a key (`INSERT … ON
-  * CONFLICT DO NOTHING` via `publishSql`), exactly as any transactional
-  * loader. Default CopySink behavior is untouched; this is a wrapper,
-  * not a mode flag.
+  * CONFLICT DO NOTHING`), exactly as any transactional loader. Default
+  * CopySink behavior is untouched; this is a wrapper, not a mode flag.
   *
   * Scale shape: identical to the plain sink (the COPY work is the same
   * bytes into different tables); the publish is server-side
@@ -55,13 +63,11 @@ import org.apache.spark.sql.DataFrame
   *                    its sessionSetup — the connection opens once per
   *                    task attempt); the wrapper supplies the
   *                    CREATE-stage + TRUNCATE statements
-  * @param createStageSql stage DDL; default clones the target's column
-  *                    layout PG-style
-  * @param publishSql  per-stage publish statement inside the commit
-  *                    transaction; override for `ON CONFLICT` dedup keys
-  * @param dropStagesSql one statement dropping ALL of `table`'s stage
-  *                    tables by name pattern; default is a PG DO block
-  *                    over pg_tables — override for non-PG targets
+  * @param columns     the COPY column list, as the target spells them;
+  *                    empty = every column, positionally
+  * @param format      the rows' [[CopyFormat]]: the stage is `LIKE` the
+  *                    target, so binary frames stage the same datums
+  *                    the direct path sends
   */
 object ExactlyOnce extends Serializable {
 
@@ -148,7 +154,42 @@ object ExactlyOnce extends Serializable {
     schema.fold(rel)(s => PgWire.joinQualified(s, rel))
   }
 
-  /** Default stage cleanup (PostgreSQL): one DO block dropping every
+  /** A stage's session setup: create it `LIKE` the target, relax NOT
+    * NULL outside a non-empty column list (see the object doc), empty
+    * it. `quote` renders a qualified name. */
+  private def stageSetup(stage: String, table: String, columns: Seq[String],
+                         quote: String => String): Seq[String] = {
+    val relax =
+      if (columns.isEmpty) Nil
+      else {
+        val st = PgWire.quoteLiteral(quote(stage))
+        val listed = columns.map(PgWire.quoteLiteral).mkString(", ")
+        Seq("DO $$ DECLARE r record; BEGIN " +
+          "FOR r IN SELECT attname FROM pg_attribute " +
+          s"WHERE attrelid = $st::regclass AND attnum > 0 " +
+          "AND NOT attisdropped AND attnotnull " +
+          s"AND attname <> ALL (ARRAY[$listed]::name[]) LOOP " +
+          "EXECUTE format('ALTER TABLE %s ALTER COLUMN %I DROP NOT NULL', " +
+          s"$st, r.attname); " +
+          "END LOOP; END $$;")
+      }
+    s"CREATE TABLE IF NOT EXISTS ${quote(stage)} (LIKE ${quote(table)});" +:
+      relax :+ s"TRUNCATE ${quote(stage)};"
+  }
+
+  /** One winning stage's publish statement inside the commit
+    * transaction: the listed columns only when there is a list. */
+  private def publish(stage: String, table: String, columns: Seq[String],
+                      quote: String => String): String =
+    if (columns.isEmpty)
+      s"INSERT INTO ${quote(table)} SELECT * FROM ${quote(stage)};"
+    else {
+      val cols = columns.map(PgWire.quoteIdent).mkString(", ")
+      s"INSERT INTO ${quote(table)} ($cols) SELECT $cols FROM " +
+        s"${quote(stage)};"
+    }
+
+  /** Stage cleanup (PostgreSQL): one DO block dropping every
     * stage of `table`'s relname in `table`'s OWN schema. Qualified
     * names filter on `pg_tables.schemaname` and match the BARE relname
     * (pg_tables.tablename is never schema-qualified — a
@@ -159,7 +200,7 @@ object ExactlyOnce extends Serializable {
     * schema-qualified so `search_path` can never resolve it to a
     * same-named table in another schema.
     */
-  def defaultDropStagesSql(table: String): String = {
+  def dropStages(table: String): String = {
     val (schema, rel) = splitQualified(table)
     def lit(x: String) = x.replace("'", "''")
     val schemaFilter = schema match {
@@ -183,32 +224,19 @@ object ExactlyOnce extends Serializable {
             exec: String => Unit,
             endpointFor: (String, Seq[String], Int) => CopyEndpoint,
             quote: String => String = identity,
-            createStageSql: (String, String) => String = null,
-            publishSql: (String, String) => String = null,
-            dropStagesSql: String => String = null,
+            columns: Seq[String] = Nil,
             maxRows: Int = 25000,
             maxBytes: Long = 20L << 20,
             onErrorStop: Boolean = false,
             publishExtra: Seq[String] = Nil,
-            renderer: DataFrame => DataFrame = CopySink.textRenderer,
-            rejectDir: Option[String] = None,
-            rejectRender: Array[Byte] => Array[Byte] = null)
+            format: CopyFormat = CopyFormat.Text,
+            rejectDir: Option[String] = None)
       : (Long, Long, Long) = {
-    val mkStage: (String, String) => String =
-      if (createStageSql != null) createStageSql
-      else (stage, target) =>
-        s"CREATE TABLE IF NOT EXISTS ${quote(stage)} (LIKE ${quote(target)});"
-    val mkPublish: (String, String) => String =
-      if (publishSql != null) publishSql
-      else (stage, target) =>
-        s"INSERT INTO ${quote(target)} SELECT * FROM ${quote(stage)};"
-    val mkDrop: String => String =
-      if (dropStagesSql != null) dropStagesSql else defaultDropStagesSql
     // pre-clean: a previously crashed run's stages must not publish
-    exec(mkDrop(table))
+    exec(dropStages(table))
     val winners = df.sparkSession.sparkContext
       .collectionAccumulator[String]("graftStageWinners")
-    val tbl = table; val ef = endpointFor; val q = quote
+    val tbl = table; val ef = endpointFor; val q = quote; val cols = columns
     def attemptStage(pid: Int): String = {
       // taskAttemptId is unique across the application, so concurrent
       // speculative attempts — and resubmitted stages — get disjoint
@@ -220,31 +248,27 @@ object ExactlyOnce extends Serializable {
     val sink = new CopySink(
       endpointFactory = pid => {
         val stage = attemptStage(pid)
-        ef(stage, Seq(mkStage(stage, tbl), s"TRUNCATE ${q(stage)};"), pid)
+        ef(stage, stageSetup(stage, tbl, cols, q), pid)
       },
       maxRows = maxRows, maxBytes = maxBytes,
       onErrorStop = onErrorStop,
       // runs after the attempt's final flush: result-stage accumulator
       // semantics record exactly one completed attempt per partition
       onPartitionSuccess = pid => winners.add(attemptStage(pid)),
-      // COPY BINARY rides through unchanged: the stage clones the
-      // target's layout (LIKE), so the target-resolved renderer and a
-      // binary endpointFor stage the same datums the direct path sends
-      renderer = renderer,
+      format = format,
       // rejected rows never reach a stage table, so they can't
       // double-publish — reject FILES are pure diagnostics here and
       // carry the same replayable contract as the direct path
-      rejectDir = rejectDir,
-      rejectRender = rejectRender)
+      rejectDir = rejectDir)
     val result = sink.write(df)
     import scala.jdk.CollectionConverters._
     val stages = winners.value.asScala.toSeq.distinct.sorted
     // atomic publish: all partitions land or none; `publishExtra`
     // statements (e.g. the streaming epoch marker) commit atomically
     // WITH the data
-    exec((Seq("BEGIN;") ++ stages.map(mkPublish(_, table)) ++
+    exec((Seq("BEGIN;") ++ stages.map(publish(_, table, columns, quote)) ++
       publishExtra ++ Seq("COMMIT;")).mkString(" "))
-    exec(mkDrop(table))
+    exec(dropStages(table))
     result
   }
 
@@ -278,9 +302,6 @@ object ExactlyOnce extends Serializable {
     * key via a custom publish instead of the epoch ledger.
     *
     * @param query read-only SQL against the target (epoch lookup)
-    * @param dropStagesSql stage-cleanup override forwarded to [[write]]
-    *                      (e.g. for non-PG targets); default handles
-    *                      bare and schema-qualified `table` names
     * @return (sent, rejected, bytes); (0, 0, 0) for a replayed batch
     */
   def writeStreamBatch(df: DataFrame, table: String,
@@ -291,9 +312,8 @@ object ExactlyOnce extends Serializable {
                        quote: String => String = identity,
                        maxRows: Int = 25000,
                        maxBytes: Long = 20L << 20,
-                       dropStagesSql: String => String = null,
-                       rejectDir: Option[String] = None,
-                       rejectRender: Array[Byte] => Array[Byte] = null)
+                       format: CopyFormat = CopyFormat.Text,
+                       rejectDir: Option[String] = None)
       : (Long, Long, Long) = {
     // ledger name bounded the same way as stage names: two long-named
     // tables whose relnames differ only past NAMEDATALEN must not
@@ -313,10 +333,9 @@ object ExactlyOnce extends Serializable {
       s"WHERE query_id = $qlit AND batch_id = $batchId")
     if (seen.nonEmpty) (0L, 0L, 0L)
     else write(df, table, exec, endpointFor, quote,
-      dropStagesSql = dropStagesSql,
       maxRows = maxRows, maxBytes = maxBytes,
       publishExtra = Seq(s"INSERT INTO ${quote(epochs)} " +
         s"VALUES ($qlit, $batchId);"),
-      rejectDir = rejectDir, rejectRender = rejectRender)
+      format = format, rejectDir = rejectDir)
   }
 }

@@ -19,9 +19,7 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * VISIBLY (both fragments parse malformed and land in the reject
   * file, replayable) instead of loading — bounded by record-size /
   * split-size, zero for single-split files like the reference's own
-  * fixtures. [[CsvSource.readMultiLine]] remains the whole-file
-  * record-aware reader for callers that need boundary-exactness at
-  * the price of per-file parallelism.
+  * fixtures.
   */
 final case class CsvDialect(
     separator: Char = ',',
@@ -185,11 +183,10 @@ object CsvSource {
   }
 
   /** Quote state after scanning one LINE's bytes, given the state at
-    * its start — the byte-level twin of [[splitRecords]]' machine
-    * (quote opens only at a field start; doubled-quote / backslash
-    * escape modes; all transitions identical). Valid for
-    * ASCII-compatible charsets (the [[SkipLines]] contract — records
-    * split on `\n` bytes there for the same reason). An escape
+    * its start — the quote machine of [[parseFields]] (quote opens
+    * only at a field start; doubled-quote / backslash escape modes).
+    * Valid for ASCII-compatible charsets (the [[SkipLines]] contract —
+    * records split on `\n` bytes there for the same reason). An escape
     * lookahead that would cross the line end behaves exactly as if the
     * next byte were the `\n` the splitter consumed: a lone closing
     * quote at EOL closes, a doubled `""` at EOL stays open. */
@@ -287,87 +284,6 @@ object CsvSource {
         }
       }
     }
-  }
-
-  /** Split a file's full text into CSV RECORDS: newlines inside quoted
-    * fields are data, newlines outside them are record separators —
-    * the quote state machine mirrors [[parseFields]] (doubled-quote and
-    * backslash escape modes, NUL quote disabling). CRLF line ends drop
-    * their CR. Scalar spec for [[readMultiLine]]. */
-  def splitRecords(text: String, d: CsvDialect): Seq[String] = {
-    val q = d.quote
-    val sep = d.separator
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val sb = new StringBuilder
-    var inQuote = false
-    // quote state only opens at a FIELD START (record start, after a
-    // separator, or after leading blanks when trimUnquoted) — mirroring
-    // [[parseFields]]. A stray quote mid-field is data here and a parse
-    // error there, so the single malformed ROW is rejected instead of
-    // absorbing every following newline and cascade-dropping good rows.
-    var atFieldStart = true
-    def isBlank(c: Char) = (c == ' ' || c == '\t') && c != sep
-    var i = 0
-    val n = text.length
-    while (i < n) {
-      val c = text.charAt(i)
-      if (inQuote) {
-        if (c == q) {
-          if (d.doubledQuote && i + 1 < n && text.charAt(i + 1) == q) {
-            sb.append(q).append(q); i += 2
-          } else { sb.append(c); inQuote = false; i += 1 }
-        } else if (!d.doubledQuote && c == '\\' && i + 1 < n) {
-          sb.append(c).append(text.charAt(i + 1)); i += 2
-        } else { sb.append(c); i += 1 }
-      } else if (c == '\n') {
-        if (sb.nonEmpty && sb.last == '\r') sb.setLength(sb.length - 1)
-        out += sb.toString; sb.setLength(0); atFieldStart = true; i += 1
-      } else {
-        if (q != '\u0000' && c == q && atFieldStart) inQuote = true
-        // blanks keep the field-start state in BOTH trim modes: a
-        // quote after leading blanks opens the field either way
-        // (blanks before a quote are ignored, like the reference)
-        atFieldStart = c == sep || (atFieldStart && isBlank(c))
-        sb.append(c); i += 1
-      }
-    }
-    if (sb.nonEmpty && sb.last == '\r') sb.setLength(sb.length - 1)
-    if (sb.nonEmpty) out += sb.toString
-    out.toSeq
-  }
-
-  /** [[read]] for sources whose quoted fields may contain EMBEDDED
-    * NEWLINES — legal CSV the reference (cl-csv) accepts but the
-    * line-oriented [[read]] cannot (see the [[CsvDialect]] note). Each
-    * file is read WHOLE and split by the quote-aware [[splitRecords]],
-    * so parallelism is per-file, not per-block, and a file must fit in
-    * one task's memory — the inherent price of records without a
-    * splittable boundary (Spark's own multiLine CSV mode pays the
-    * same). Use [[read]] unless the data actually embeds newlines. */
-  def readMultiLine(spark: SparkSession, path: String,
-                    dialect: CsvDialect,
-                    fieldNames: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val skip = dialect.skipLines + (if (dialect.header) 1 else 0)
-    val cs = canonicalEncoding(dialect.encoding)
-    val d = dialect
-    val records = spark.sparkContext
-      .binaryFiles(path)
-      .flatMap { case (_, stream) =>
-        val text = new String(stream.toArray(),
-          java.nio.charset.Charset.forName(cs))
-        splitRecords(text, d).drop(skip)
-      }
-    import spark.implicits._
-    val parsed = spark.createDataset(records).toDF("value")
-      .filter(octet_length(col("value")) > 0)
-      .select(graft.functions.StringExpressions
-        .csvParseLine(col("value"), d).as("__fields"))
-    parsed
-      .filter(col("__fields").isNotNull)
-      .select(fieldNames.zipWithIndex.map { case (nm, i) =>
-        get(col("__fields"), lit(i)).as(nm)
-      }: _*)
   }
 
   /** Parse one CSV line into field values (null = SQL NULL) with the

@@ -128,7 +128,7 @@ object CopyBinAb {
           endpointFactory = _ => new graft.sinks.PgWireCopyEndpoint(
             wire, s"COPY $table FROM STDIN WITH (FORMAT binary)",
             binary = true),
-          renderer = graft.sinks.PgBinary.renderer(kinds))
+          format = graft.sinks.CopyFormat.Binary(kinds))
         else new graft.sinks.CopySink(
           endpointFactory = _ => new graft.sinks.PgWireCopyEndpoint(
             wire, s"COPY $table FROM STDIN"))

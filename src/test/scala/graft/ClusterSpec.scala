@@ -74,16 +74,21 @@ class ClusterSpec extends SparkSpec {
     assert(got.toSeq == Seq((1L, 0), (2L, 1), (3L, 0)))
   }
 
+  private def qvecsDF(rows: Seq[(Long, Seq[Long])]) = {
+    import spark.implicits._
+    rows.toDF("id", "v")
+  }
+
   test("kmeans recovers well-separated clusters and is deterministic") {
-    // two tight blobs around (0,0) and (100,100); seeds are the two
-    // lowest ids, one in each blob by construction
+    // two tight quantized blobs around (0,0) and (1000,1000); seeds are
+    // the two lowest ids, one in each blob by construction
     val rows = (0L until 20L).map { i =>
-      val base = if (i % 2 == 0) 0.0 else 100.0
-      (i, Seq(base + (i % 5) * 0.1, base - (i % 3) * 0.1))
+      val base = if (i % 2 == 0) 0L else 1000L
+      (i, Seq(base + i % 5, base - i % 3))
     }
-    val df = vecsDF(rows)
-    val (cents, assigned) = Cluster.kmeans(spark, df, "id", "v", k = 2,
-      iters = 4)
+    val df = qvecsDF(rows)
+    val (cents, assigned) = Cluster.kmeansExact(spark, df, "id", "v",
+      k = 2, iters = 4)
     val byCluster = assigned.collect()
       .map(r => (r.getLong(0), r.getInt(1))).groupBy(_._2)
       .map { case (c, xs) => c -> xs.map(_._1).toSet }
@@ -91,46 +96,51 @@ class ClusterSpec extends SparkSpec {
     // each blob lands wholly in one cluster
     val even = (0L until 20L by 2).toSet
     assert(byCluster.values.toSet == Set(even, (0L until 20L).toSet -- even))
-    // centroids are the blob means
+    // centroids are the floored blob means: x sums to 20 over 10
+    // points, y to -9
     val cmap = cents.collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1))).toMap
-    val c0 = cmap(0)
-    assert(math.abs(c0.head - 0.2) < 1e-9 && math.abs(c0(1) - (-0.09)) < 1e-9)
+      .map(r => (r.getInt(0), r.getSeq[Long](1))).toMap
+    assert(cmap(0) == Seq(2L, -1L))
     // rerun is bit-identical (deterministic seeding, no rand)
-    val (_, again) = Cluster.kmeans(spark, df, "id", "v", k = 2, iters = 4)
+    val (_, again) = Cluster.kmeansExact(spark, df, "id", "v",
+      k = 2, iters = 4)
     assert(again.collect().map(r => (r.getLong(0), r.getInt(1))).sorted
       .sameElements(assigned.collect()
         .map(r => (r.getLong(0), r.getInt(1))).sorted))
   }
 
   test("kmeans iterations do not increase inertia") {
+    // floor division moves a centroid less than one unit from its
+    // cluster mean, which cannot undo a Lloyd step on points spread
+    // hundreds of units apart
     val rows = (0L until 40L).map { i =>
-      (i, Seq((i * 37 % 11).toDouble, (i * 53 % 7).toDouble))
+      (i, Seq(i * 37 % 11 * 100, i * 53 % 7 * 100))
     }
-    val df = vecsDF(rows)
+    val df = qvecsDF(rows)
     def inertia(iters: Int): Double = {
-      val (_, a) = Cluster.kmeans(spark, df, "id", "v", k = 3, iters = iters)
+      val (_, a) = Cluster.kmeansExact(spark, df, "id", "v", k = 3,
+        iters = iters)
       a.agg(sum(col("dist2"))).head().getDouble(0)
     }
     val i0 = inertia(0); val i2 = inertia(2); val i5 = inertia(5)
-    assert(i2 <= i0 + 1e-9)
-    assert(i5 <= i2 + 1e-9)
+    assert(i2 <= i0)
+    assert(i5 <= i2)
   }
 
   test("kmeans-trained centroids drive ivfTopK at full recall on blobs") {
     import graft.pipeline.Similarity
-    // three well-separated blobs in 4-d; nprobe=1 must already find the
-    // true neighbors because k-means recovers the blob structure
+    // three well-separated quantized blobs in 4-d; nprobe=1 must
+    // already find the true neighbors because k-means recovers the
+    // blob structure
     val pts = (0L until 30L).map { i =>
       val c = i % 3
-      val base = Seq(Seq(10.0, 0.0, 0.0, 0.0), Seq(0.0, 10.0, 0.0, 0.0),
-        Seq(0.0, 0.0, 10.0, 0.0))(c.toInt)
-      (i, base.zipWithIndex.map { case (v, d) =>
-        v + ((i * 7 + d) % 5) * 0.01
-      })
+      val base = Seq(Seq(1000L, 0L, 0L, 0L), Seq(0L, 1000L, 0L, 0L),
+        Seq(0L, 0L, 1000L, 0L))(c.toInt)
+      (i, base.zipWithIndex.map { case (v, d) => v + (i * 7 + d) % 5 })
     }
-    val df = vecsDF(pts)
-    val (cents, _) = Cluster.kmeans(spark, df, "id", "v", k = 3, iters = 3)
+    val df = qvecsDF(pts)
+    val (cents, _) = Cluster.kmeansExact(spark, df, "id", "v", k = 3,
+      iters = 3)
     val ivfCents = cents.select(col("cluster_id").as("ct_id"),
       col("centroid").as("ct_vec"))
     val queries = df.filter(col("id") < 3)

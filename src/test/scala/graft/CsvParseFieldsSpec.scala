@@ -76,32 +76,38 @@ class CsvParseFieldsSpec extends SparkSpec {
     assert(p("""a,"unclosed value""", keepD) == null)
   }
 
-  test("splitRecords: newlines inside quotes are data, CRLF stripped") {
-    val text = "a,\"line1\nline2\",b\r\nc,d\n\"e\"\"f\n g\",h"
-    val recs = CsvSource.splitRecords(text, keepD)
-    assert(recs == Seq(
-      "a,\"line1\nline2\",b",
-      "c,d",
-      "\"e\"\"f\n g\",h"))
-    // and the records then parse with the embedded newline preserved
-    assert(CsvSource.parseFields(recs.head, keepD).toSeq ==
-      Seq("a", "line1\nline2", "b"))
-    assert(CsvSource.parseFields(recs(2), keepD).toSeq ==
-      Seq("e\"f\n g", "h"))
+  /** `text` written to a temp file, read back by the line reader. */
+  private def lineRead(text: String, d: CsvDialect, fields: Seq[String])
+      : (Seq[Seq[String]], Seq[String]) = {
+    val tmp = java.nio.file.Files.createTempFile("lines", ".csv")
+    java.nio.file.Files.writeString(tmp, text)
+    (CsvSource.read(spark, tmp.toString, d, fields).collect()
+      .map(r => fields.indices.map(r.getString)).toSeq.sortBy(_.head),
+      CsvSource.rejects(spark, tmp.toString, d).collect()
+        .map(_.getString(0)).toSeq.sorted)
   }
 
-  test("splitRecords: a stray mid-field quote does not absorb later rows") {
+  test("line reader: newlines inside quotes are data, CRLF stripped") {
+    val (good, bad) = lineRead(
+      "h1,h2,h3\r\na,\"line1\nline2\",b\r\nc,d,e\n\"f\"\"g\n h\",i,j",
+      keepD.copy(header = true), Seq("x", "y", "z"))
+    assert(good == Seq(Seq("a", "line1\nline2", "b"), Seq("c", "d", "e"),
+      Seq("f\"g\n h", "i", "j")))
+    assert(bad.isEmpty)
+  }
+
+  test("line reader: a stray mid-field quote does not absorb later rows") {
     // the quote in ab"cd is field data (not at a field start): only THAT
     // row is malformed; the following rows stay separate records
-    val text = "a,b\nab\"cd,x\ne,f\n"
-    val recs = CsvSource.splitRecords(text, keepD)
-    assert(recs == Seq("a,b", "ab\"cd,x", "e,f"))
-    assert(CsvSource.parseFields(recs(1), keepD) == null) // rejected alone
-    assert(CsvSource.parseFields(recs(2), keepD).toSeq == Seq("e", "f"))
+    val (good, bad) = lineRead("a,b\nab\"cd,x\ne,f\n", keepD, Seq("p", "q"))
+    assert(good == Seq(Seq("a", "b"), Seq("e", "f")))
+    assert(bad == Seq("ab\"cd,x")) // rejected alone
     // a quote after leading blanks still opens a field under trim mode
     val trimD = keepD.copy(trimUnquoted = true)
-    val recs2 = CsvSource.splitRecords("a,  \"x\ny\",b\n1,2\n", trimD)
-    assert(recs2 == Seq("a,  \"x\ny\",b", "1,2"))
+    val (good2, bad2) = lineRead("a,  \"x\ny\",b\n1,2,3\n", trimD,
+      Seq("p", "q", "r"))
+    assert(good2 == Seq(Seq("1", "2", "3"), Seq("a", "x\ny", "b")))
+    assert(bad2.isEmpty)
   }
 
   test("rejects() surfaces the rows read() drops") {
@@ -117,22 +123,6 @@ class CsvParseFieldsSpec extends SparkSpec {
     // blank line skipped silently; stray-quote and unterminated rows land
     assert(bad.toSeq == Seq("2,ba\"d", "4,\"open"))
     assert(good.length + bad.length == 4)
-  }
-
-  test("readMultiLine loads quoted embedded newlines end to end") {
-    val tmp = java.nio.file.Files.createTempFile("multiline", ".csv")
-    java.nio.file.Files.writeString(tmp,
-      "h1,h2\n1,\"alpha\nbeta\"\n2,plain\n")
-    val got = CsvSource.readMultiLine(spark, tmp.toString,
-        CsvDialect(header = true), Seq("id", "text"))
-      .collect().map(r => (r.getString(0), r.getString(1))).sortBy(_._1)
-    assert(got.toSeq == Seq(("1", "alpha\nbeta"), ("2", "plain")))
-    // the line-oriented reader STITCHES the record back together
-    // (partition-local reassembly) and loads it identically
-    val lineRead = CsvSource.read(spark, tmp.toString,
-        CsvDialect(header = true), Seq("id", "text"))
-      .collect().map(r => (r.getString(0), r.getString(1))).sortBy(_._1)
-    assert(lineRead.toSeq == got.toSeq)
   }
 
   test("line reader stitches quoted embedded newlines: multi-record, " +

@@ -451,8 +451,10 @@ class LiveSchemaFuzzSpec extends SparkSpec {
         (if (numRef.isDefined && (textRef.isEmpty || rnd.nextBoolean()))
           numRef.map { c =>
             // NOT NULL generated columns pin the exactly-once stage
-            // shape (LIKE would copy the NOT NULL without the
-            // generation expr); safe only when the input is NOT NULL
+            // shape: the stage is LIKE the target, which copies the
+            // NOT NULL without the generation expression, so the stage
+            // must drop it for columns outside the COPY list; safe
+            // only when the input is NOT NULL
             val nn = c.notNull && rnd.nextBoolean()
             Col(g.name("g"),
               s"${c.typ} GENERATED ALWAYS AS ((${qi(c.name)} / 2)) " +

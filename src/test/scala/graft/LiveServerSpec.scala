@@ -1,6 +1,7 @@
 package graft
 
 import graft.sinks.{PgWire, PgWireCopyEndpoint}
+import scala.jdk.CollectionConverters._
 
 /** Env-gated LIVE-server smoke tests. The fake-server e2es prove the
   * protocol slice byte-for-byte, but cannot surprise like a real peer
@@ -200,7 +201,7 @@ class LiveServerSpec extends SparkSpec {
         endpointFactory = _ => new PgWireCopyEndpoint(dp,
           "COPY bin_nulls FROM STDIN WITH (FORMAT binary)",
           binary = true),
-        renderer = graft.sinks.PgBinary.renderer(
+        format = graft.sinks.CopyFormat.Binary(
           Seq(graft.sinks.PgBinKind.I4, graft.sinks.PgBinKind.Text)))
         .write(df)
       assert((sent, rej) == (3L, 0L))
@@ -395,6 +396,84 @@ class LiveServerSpec extends SparkSpec {
       assert(c.query("SELECT count(*) FROM pg_tables WHERE tablename " +
         "LIKE 'eo\\_bin\\_\\_graft\\_stage%'")._2.head(0) == "0")
     } finally c.close()
+  }
+
+  test("live PG: exactly once with a COPY column list fills serial ids " +
+    "and defaults like the plain load, and rejects a NULL in a listed " +
+    "NOT NULL column on its own") {
+    assume(env("GRAFT_LIVE_PG_DEST_URI").isDefined,
+      "set GRAFT_LIVE_PG_DEST_URI to run")
+    val uri = env("GRAFT_LIVE_PG_DEST_URI").get
+    val dir = java.nio.file.Files.createTempDirectory("live-eocols").toFile
+    java.nio.file.Files.writeString(new java.io.File(dir, "ok.csv").toPath,
+      "1|alice\n2|bob\n3|carol\n")
+    java.nio.file.Files.writeString(new java.io.File(dir, "bad.csv").toPath,
+      "1|alice\n2|\n3|carol\n")
+    def cmd(file: String, table: String, opts: String) =
+      s"""LOAD CSV FROM '${dir.getAbsolutePath}/$file'
+          HAVING FIELDS (n, name)
+          INTO $uri TARGET TABLE $table (name)
+          WITH fields terminated by '|'$opts
+          BEFORE LOAD DO
+            $$$$ drop table if exists $table; $$$$,
+            $$$$ create table $table (id serial primary key,
+                   name text not null,
+                   made timestamptz default now()); $$$$;"""
+    val stats = pgRunner(uri).runFile(spark,
+      Seq(cmd("ok.csv", "eoc_plain", ""),
+        cmd("ok.csv", "eoc_once", ", exactly once"),
+        cmd("bad.csv", "eoc_rej", ", exactly once")).mkString("\n"))
+    assert(stats.map(s => (s.table, s.rows, s.rejected, s.error)) == Seq(
+      ("eoc_plain", 3L, 0L, None), ("eoc_once", 3L, 0L, None),
+      ("eoc_rej", 2L, 1L, None)))
+    val c = new graft.sinks.PgWireConnection(PgWire.connParams(uri, decode))
+    try {
+      def rows(t: String) = s"SELECT id, name, made IS NOT NULL FROM $t"
+      for ((a, b) <- Seq(("eoc_plain", "eoc_once"), ("eoc_once", "eoc_plain")))
+        assert(c.query(s"SELECT count(*) FROM (${rows(a)} EXCEPT ALL " +
+          s"${rows(b)}) x")._2.head(0) == "0", s"$a ⊄ $b")
+      assert(c.query("SELECT string_agg(id || ':' || name, ',' ORDER BY " +
+        "id), bool_and(made IS NOT NULL) FROM eoc_once")._2.head.toSeq ==
+        Seq("1:alice,2:bob,3:carol", "t"))
+      assert(c.query("SELECT string_agg(name, ',' ORDER BY id) " +
+        "FROM eoc_rej")._2.head(0) == "alice,carol")
+      assert(c.query("SELECT count(*) FROM pg_tables WHERE tablename " +
+        "LIKE 'eoc\\_%\\_\\_graft\\_stage%'")._2.head(0) == "0")
+    } finally c.close()
+  }
+
+  test("live pg→pg: exactly once into a table with a generated column " +
+    "rejects a NULL in a listed NOT NULL column on its own and publishes " +
+    "the rest") {
+    assume(env("GRAFT_LIVE_PG_URI").isDefined &&
+      env("GRAFT_LIVE_PG_DEST_URI").isDefined,
+      "set GRAFT_LIVE_PG_URI and GRAFT_LIVE_PG_DEST_URI to run")
+    val sp = PgWire.connParams(env("GRAFT_LIVE_PG_URI").get, decode)
+    val dp = PgWire.connParams(env("GRAFT_LIVE_PG_DEST_URI").get, decode)
+    def ex(p: PgWire.ConnParams)(sql: String): Unit = {
+      val c = new graft.sinks.PgWireConnection(p)
+      try c.simpleCommand(sql) finally c.close()
+    }
+    val gen = "g int GENERATED ALWAYS AS (id * 2) STORED"
+    ex(sp)("DROP TABLE IF EXISTS eo_gen_nn")
+    ex(sp)(s"CREATE TABLE eo_gen_nn (id int, name text, $gen)")
+    ex(sp)("INSERT INTO eo_gen_nn (id, name) VALUES " +
+      "(1, 'a'), (2, NULL), (3, 'c')")
+    ex(dp)("DROP TABLE IF EXISTS eo_gen_nn")
+    ex(dp)(s"CREATE TABLE eo_gen_nn (id int, name text NOT NULL, $gen)")
+    val stats = pgRunner(env("GRAFT_LIVE_PG_DEST_URI").get).runFile(spark,
+      s"""LOAD DATABASE FROM ${env("GRAFT_LIVE_PG_URI").get}
+            INTO ${env("GRAFT_LIVE_PG_DEST_URI").get}
+            WITH data only, exactly once
+            INCLUDING ONLY TABLE NAMES MATCHING 'eo_gen_nn';""")
+    assert(stats.map(s => (s.table, s.rows, s.rejected, s.error)) ==
+      Seq(("eo_gen_nn", 2L, 1L, None)), stats.mkString("; "))
+    val c = new graft.sinks.PgWireConnection(dp)
+    try assert(c.query("SELECT string_agg(id || name || g, ',' " +
+      "ORDER BY id) FROM eo_gen_nn")._2.head(0) == "1a2,3c6")
+    finally c.close()
+    ex(sp)("DROP TABLE eo_gen_nn")
+    ex(dp)("DROP TABLE eo_gen_nn")
   }
 
   test("live PG: COPY BINARY randomized cross-check — 600 seeded " +
@@ -606,7 +685,7 @@ class LiveServerSpec extends SparkSpec {
         endpointFactory = _ => new PgWireCopyEndpoint(dp,
           "COPY rnd_bin FROM STDIN WITH (FORMAT binary)",
           binary = true),
-        renderer = graft.sinks.PgBinary.renderer(kinds)).write(df)
+        format = graft.sinks.CopyFormat.Binary(kinds)).write(df)
       assert((s1, r1) == (nRows.toLong, 0L) &&
         (s2, r2) == (nRows.toLong, 0L),
         s"text sent=$s1 rej=$r1, binary sent=$s2 rej=$r2")
@@ -851,7 +930,7 @@ class LiveServerSpec extends SparkSpec {
     val (s2, r2, _) = new graft.sinks.CopySink(
       endpointFactory = _ => new PgWireCopyEndpoint(dp,
         "COPY dim_bin FROM STDIN WITH (FORMAT binary)", binary = true),
-      renderer = PgBinary.renderer(kinds)).write(df)
+      format = graft.sinks.CopyFormat.Binary(kinds)).write(df)
     assert((s1, r1) == (4L, 0L) && (s2, r2) == (4L, 0L),
       s"text sent=$s1 rej=$r1, binary sent=$s2 rej=$r2")
     // array_out's text (which spells [lo:hi]= when lb<>1) must agree
@@ -1179,6 +1258,71 @@ class LiveServerSpec extends SparkSpec {
     assert(diff.isEmpty, s"content diverged for: ${diff.mkString(", ")}")
     info(s"live pg→pg copy binary: ${binStats.map(_.rows).sum} rows / " +
       s"${binStats.size} tables digest-identical to the text path")
+  }
+
+  test("live pg→pg: WITH copy binary loads a table with a generated " +
+    "column through the binary endpoint, no text fallback") {
+    assume(env("GRAFT_LIVE_PG_URI").isDefined &&
+      env("GRAFT_LIVE_PG_DEST_URI").isDefined,
+      "set GRAFT_LIVE_PG_URI and GRAFT_LIVE_PG_DEST_URI to run")
+    val sp = PgWire.connParams(env("GRAFT_LIVE_PG_URI").get, decode)
+    val dp = PgWire.connParams(env("GRAFT_LIVE_PG_DEST_URI").get, decode)
+    def ex(p: PgWire.ConnParams)(sql: String): Unit = {
+      val c = new graft.sinks.PgWireConnection(p)
+      try c.simpleCommand(sql) finally c.close()
+    }
+    def q(p: PgWire.ConnParams)(sql: String): Seq[Seq[String]] = {
+      val c = new graft.sinks.PgWireConnection(p)
+      try c.query(sql)._2.map(_.toSeq) finally c.close()
+    }
+    ex(sp)("DROP TABLE IF EXISTS gen_bin")
+    ex(sp)("CREATE TABLE gen_bin (id int PRIMARY KEY, amt numeric(10,2), " +
+      "twice numeric GENERATED ALWAYS AS (amt * 2) STORED)")
+    ex(sp)("INSERT INTO gen_bin (id, amt) VALUES (1, 12.50), (2, NULL), " +
+      "(3, -0.01)")
+    // pgRunner's wiring, with the endpoint factories recording their
+    // targets (the driver route runs them on this JVM's threads)
+    val opened = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val runner = new Runner(
+      executeDdl = (sql, setup) => {
+        val c = new graft.sinks.PgWireConnection(dp)
+        try {
+          setup.foreach(s => c.simpleCommand(s.stripSuffix(";")))
+          c.simpleCommand(sql.stripSuffix(";"))
+        } finally c.close()
+      },
+      endpointFactory = (table, setup) => {
+        opened.add(s"text $table")
+        _ => new PgWireCopyEndpoint(dp,
+          s"COPY ${PgWire.quoteQualified(table)} FROM STDIN", setup)
+      },
+      queryTarget = sql => q(dp)(sql).map(_.toArray),
+      binaryEndpointFactory = (table, setup) => {
+        opened.add(s"binary $table")
+        _ => new PgWireCopyEndpoint(dp,
+          s"COPY ${PgWire.quoteQualified(table)} FROM STDIN " +
+            "WITH (FORMAT binary)", setup, binary = true)
+      })
+    val err = new java.io.ByteArrayOutputStream()
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+    val stats =
+      try runner.runFile(spark,
+        s"""LOAD DATABASE FROM ${env("GRAFT_LIVE_PG_URI").get}
+              INTO ${env("GRAFT_LIVE_PG_DEST_URI").get}
+              WITH include drop, create tables, copy binary
+              INCLUDING ONLY TABLE NAMES MATCHING 'gen_bin';""")
+      finally System.setErr(stderr)
+    assert(stats.map(s => (s.table, s.rows, s.rejected, s.error)) ==
+      Seq(("gen_bin", 3L, 0L, None)), stats.mkString("; "))
+    assert(opened.asScala.toSeq ==
+      Seq("binary \"public\".\"gen_bin\" (\"id\", \"amt\")"))
+    assert(!err.toString("UTF-8").contains("falls back"), err)
+    val sel = "SELECT id::text, amt::text, twice::text FROM gen_bin " +
+      "ORDER BY id"
+    assert(q(dp)(sel) == q(sp)(sel))
+    assert(q(dp)(sel).map(_(2)) == Seq("25.00", null, "-0.02"))
+    ex(sp)("DROP TABLE gen_bin")
   }
 
   test("live pg→pg: migration WITH copy binary over enum/array/jsonb/" +

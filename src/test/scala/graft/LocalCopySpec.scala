@@ -1,7 +1,8 @@
 package graft
 
 import java.nio.file.Files
-import graft.sinks.{CopyEndpoint, CopyError, CopySink, LocalCopy, PgBinary}
+import graft.sinks.{CopyEndpoint, CopyError, CopyFormat, CopySink, LocalCopy,
+  PgBinary}
 
 /** The driver route of database tables ([[graft.sinks.LocalCopy]]):
   * its scalar renderers must stay byte-identical to the distributed
@@ -51,7 +52,7 @@ class LocalCopySpec extends SparkSpec {
   test("textRender matches the codegen textRenderer byte-for-byte") {
     val codegen = CopySink.textRenderer(stringDf(rows3)).collect()
       .map(_.getAs[Array[Byte]](0).toSeq)
-    val local = rows3.map(r => LocalCopy.textRender(utf8(r))._1.toSeq)
+    val local = rows3.map(r => CopyFormat.Text.rowRenderer(utf8(r))._1.toSeq)
     assert(codegen.length == local.length)
     // a local relation of this size collects in input order
     codegen.zip(local).zipWithIndex.foreach { case ((c, l), i) =>
@@ -74,7 +75,7 @@ class LocalCopySpec extends SparkSpec {
         (Option(r.getAs[Array[Byte]](0)).map(_.toSeq),
           Option(r.getAs[Array[Byte]](1)).map(_.toSeq))
       }
-    val render = LocalCopy.binaryRender(kinds)
+    val render = CopyFormat.Binary(kinds).rowRenderer
     val local = rows.map { r =>
       val (v, j) = render(utf8(r))
       (Option(v).map(_.toSeq), Option(j).map(_.toSeq))
@@ -100,7 +101,7 @@ class LocalCopySpec extends SparkSpec {
     val rows = Iterator(Array[String]("1", "a"), Array("2", "BAD"),
       Array("3", "c"), Array[String](null, "d")).map(utf8)
     val (sent, rejected, bytes) = LocalCopy.write(plan(Seq("k", "v"), rows),
-      _ => LocalCopy.Sink(_ => endpoint), rejectDir = Some(dir))
+      _ => endpoint, rejectDir = Some(dir))
     assert(sent == 3 && rejected == 1)
     assert(bytes > 0)
     assert(landed == Seq("1\ta", "3\tc", "\\N\td"))
@@ -121,8 +122,7 @@ class LocalCopySpec extends SparkSpec {
     val (sent, rejected, _) = LocalCopy.write(
       plan(Seq("n"), Iterator(Array("41"), Array("nope"), Array("42"))
         .map(utf8)),
-      _ => LocalCopy.Sink(_ => endpoint, LocalCopy.binaryRender(kinds)),
-      rejectDir = Some(dir))
+      _ => endpoint, CopyFormat.Binary(kinds), rejectDir = Some(dir))
     assert(sent == 2 && rejected == 1)
     val content = new String(Files.readAllBytes(
       new java.io.File(dir, "part-00000.dat").toPath), "UTF-8")
@@ -136,26 +136,7 @@ class LocalCopySpec extends SparkSpec {
     }
     intercept[CopyError] {
       LocalCopy.write(plan(Seq("x"), Iterator(Array("x")).map(utf8)),
-        _ => LocalCopy.Sink(_ => endpoint), onErrorStop = true)
+        _ => endpoint, onErrorStop = true)
     }
-  }
-
-  test("write: the sink is chosen once per table, from the plan's " +
-    "column count, before any split streams") {
-    val widths = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    val opened = new java.util.concurrent.atomic.AtomicInteger(0)
-    val endpoint = new CopyEndpoint {
-      def send(rows: Seq[Array[Byte]]): Unit = ()
-    }
-    val splits = (0 until 4).map(i => Iterator(Array(s"$i", "x"))
-      .map { r => opened.incrementAndGet(); utf8(r) })
-    val (sent, _, _) = LocalCopy.write(plan(Seq("k", "v"), splits: _*),
-      width => {
-        assert(opened.get == 0, "a split streamed before the sink")
-        widths.add(width)
-        LocalCopy.Sink(_ => endpoint)
-      })
-    assert(sent == 4)
-    assert(widths.toArray.toSeq == Seq(2))
   }
 }

@@ -26,6 +26,15 @@ object RunnerSpec {
     }
   }
 
+  /** Every COPY target and session setup a Runner asked an endpoint
+    * for, as sent; the endpoints take rows and keep nothing. */
+  val copyTargets = new ConcurrentLinkedQueue[(String, Seq[String])]
+  def recordingEndpoint(target: String,
+                        sessionSetup: Seq[String]): Int => CopyEndpoint = {
+    copyTargets.add((target, sessionSetup))
+    _ => new CopyEndpoint { def send(rows: Seq[Array[Byte]]): Unit = () }
+  }
+
   /** [[endpoint]] refusing every batch with a `BAD` row in it, the way
     * the server does: nothing kept, the bad row's line number reported. */
   def rejectingEndpoint(table: String,
@@ -80,6 +89,68 @@ class RunnerSpec extends SparkSpec {
     val rows = RunnerSpec.received.asScala.toSeq.sorted
     assert(rows == Seq(("kv", "1\tone"), ("kv", "2\ttwo"),
       ("kv", "3\tthree")))
+  }
+
+  test("exactly once stages LIKE the target and publishes the COPY " +
+      "column list, relaxing NOT NULL outside it; with no list it " +
+      "stages and publishes every column") {
+    import graft.sinks.ExactlyOnce
+    val dir = Files.createTempDirectory("runnereo").toFile
+    Files.writeString(new java.io.File(dir, "kv.csv").toPath,
+      "1|one\n2|two\n")
+    def run(fields: String): (Seq[String], Seq[(String, Seq[String])]) = {
+      val ddl = new ConcurrentLinkedQueue[String]
+      RunnerSpec.copyTargets.clear()
+      new Runner((sql, _) => ddl.add(sql), RunnerSpec.recordingEndpoint)
+        .runFile(spark,
+          s"""LOAD CSV FROM '${dir.getAbsolutePath}/kv.csv' $fields
+              INTO postgresql:///t TARGET TABLE kv
+              WITH fields terminated by '|', exactly once;""")
+      (ddl.asScala.toSeq, RunnerSpec.copyTargets.asScala.toSeq)
+    }
+    def publishTx(stages: Seq[String], insert: String => String) =
+      (("BEGIN;" +: stages.distinct.sorted.map(insert)) :+ "COMMIT;")
+        .mkString(" ")
+    val stagePat = "\"kv__graft_stage_p\\d+_a\\d+\""
+
+    // a column list: every stage attempt gets the list, the stage
+    // relaxes NOT NULL on the columns outside it, the publish names it
+    val (ddl, targets) = run("HAVING FIELDS (k, v)")
+    val cols = " (\"k\", \"v\")"
+    assert(targets.nonEmpty && targets.forall(_._1.endsWith(cols)))
+    val stages = targets.map(_._1.stripSuffix(cols))
+    targets.zip(stages).foreach { case ((_, setup), stage) =>
+      assert(stage.matches(stagePat), stage)
+      val lit = s"'$stage'"
+      assert(setup == Seq(
+        s"CREATE TABLE IF NOT EXISTS $stage (LIKE \"kv\");",
+        "DO $$ DECLARE r record; BEGIN FOR r IN SELECT attname FROM " +
+          s"pg_attribute WHERE attrelid = $lit::regclass AND attnum > 0 " +
+          "AND NOT attisdropped AND attnotnull AND attname <> ALL " +
+          "(ARRAY['k', 'v']::name[]) LOOP EXECUTE format('ALTER TABLE " +
+          s"%s ALTER COLUMN %I DROP NOT NULL', $lit, r.attname); " +
+          "END LOOP; END $$;",
+        s"TRUNCATE $stage;"))
+    }
+    // pre-clean, one publish transaction, cleanup
+    assert(ddl == Seq(ExactlyOnce.dropStages("kv"),
+      publishTx(stages, st =>
+        s"INSERT INTO \"kv\" (\"k\", \"v\") SELECT \"k\", \"v\" FROM $st;"),
+      ExactlyOnce.dropStages("kv")))
+
+    // no list (positional names): LIKE stage, every column published
+    val (ddl2, targets2) = run("")
+    assert(targets2.nonEmpty)
+    targets2.foreach { case (stage, setup) =>
+      assert(stage.matches(stagePat), stage)
+      assert(setup == Seq(
+        s"CREATE TABLE IF NOT EXISTS $stage (LIKE \"kv\");",
+        s"TRUNCATE $stage;"))
+    }
+    assert(ddl2 == Seq(ExactlyOnce.dropStages("kv"),
+      publishTx(targets2.map(_._1),
+        st => s"INSERT INTO \"kv\" SELECT * FROM $st;"),
+      ExactlyOnce.dropStages("kv")))
   }
 
   test("qualified TARGET TABLE splits into schema+table stats, not " +

@@ -220,7 +220,7 @@ class SinkModesSpec extends SparkSpec {
 
   test("default stage drop is schema-aware and schema-qualified") {
     import graft.sinks.ExactlyOnce
-    val q = ExactlyOnce.defaultDropStagesSql("myschema.rel")
+    val q = ExactlyOnce.dropStages("myschema.rel")
     // filter on the table's OWN schema, pattern on the BARE relname
     // (pg_tables.tablename is never qualified — a 'schema.rel%' pattern
     // matches nothing and leaks one stage per attempt forever)
@@ -231,7 +231,7 @@ class SinkModesSpec extends SparkSpec {
     // alone resolves through search_path and can hit the wrong schema
     assert(q.contains("quote_ident(r.schemaname) || '.' || " +
       "quote_ident(r.tablename)"), q)
-    val u = ExactlyOnce.defaultDropStagesSql("rel")
+    val u = ExactlyOnce.dropStages("rel")
     assert(u.contains("schemaname = current_schema()"), u)
     assert(u.contains("'rel\\_\\_graft\\_stage\\_p%'"), u)
   }
