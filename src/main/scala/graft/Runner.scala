@@ -32,13 +32,10 @@ import graft.sinks.{CopyEndpoint, CopySink}
   *   the COPY job's own scan finds them
   * @param queryTarget read-only SQL against the target, rows as string
   *   arrays (used by `WITH drop indexes` to list the target table's
-  *   index definitions and by `WITH copy binary` to resolve the
-  *   target's column types); null disables the option with a clear
-  *   error
-  * @param binaryEndpointFactory like `endpointFactory` but issuing
-  *   `COPY … WITH (FORMAT binary)` with binary framing
-  *   ([[graft.sinks.PgBinary]]) — used by `WITH copy binary`; null
-  *   disables the option with a clear error
+  *   index definitions); null disables the option with a clear error
+  * @param binaryEndpointFactory ignored: every table loads through
+  *   `endpointFactory`'s COPY TEXT. Kept so callers built against the
+  *   retired COPY BINARY sink still compile; never called
   */
 final class Runner(executeDdl: (String, Seq[String]) => Unit,
                    endpointFactory: (String, Seq[String]) => Int => CopyEndpoint,
@@ -369,10 +366,10 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
     // and the drops could interleave with in-flight CREATEs. Scoped to
     // THIS table: other tables' rebuilds overlap this command's load.
     drainIndexRebuilds(table)
-    // first-dot split — the same convention as PgWire.quoteQualified
-    // and ExactlyOnce.splitQualified, so index handling, sink naming
-    // and summary stats all agree on which relation a dotted string
-    // targets
+    // first-dot split — the same PgWire.splitQualified the sinks name
+    // their stage tables with, and the convention of
+    // PgWire.quoteQualified, so index handling, sink naming and summary
+    // stats all agree on which relation a dotted string targets
     val (schemaOpt, rel) = graft.sinks.PgWire.splitQualified(table)
     val schema = schemaOpt.getOrElse("public")
     def lit(s: String) = "'" + s.replace("'", "''") + "'"
@@ -471,185 +468,6 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
             executeDdl(s"$idef;", gucSql)
         }
       })))
-    }
-  }
-
-  /** `WITH copy binary`: resolve each frame column's target type from
-    * the TARGET catalog and map it to a binary encoder
-    * ([[graft.sinks.PgBinary.kindOf]]). None → the load falls back to
-    * COPY TEXT, with a stderr note naming the first unsupported
-    * column — the option is a performance hint, not a new failure
-    * mode. A COPY column list maps frame columns to attributes by the
-    * exact spelling `PgWire.copyTarget` sends — any other folding
-    * could resolve kinds from a DIFFERENT column than the COPY list
-    * targets. Positional loads (no list) require the frame's `width`
-    * columns to cover the table's full column list in attnum order,
-    * exactly like a list-less COPY statement. */
-  private def binaryKinds(table: String, copyCols: Seq[String],
-                          width: Int, mode: Option[String])
-      : Option[Seq[graft.sinks.PgBinKind]] = {
-    if (mode.isEmpty) return None
-    require(queryTarget != null,
-      "WITH copy binary needs the Runner's queryTarget channel")
-    require(binaryEndpointFactory != null,
-      "WITH copy binary needs the Runner's binaryEndpointFactory")
-    def note(why: String): Option[Seq[graft.sinks.PgBinKind]] = {
-      System.err.println(
-        s"graft: WITH copy binary falls back to COPY TEXT for $table" +
-          s" ($why)")
-      None
-    }
-    val (schemaOpt, rel) = graft.sinks.PgWire.splitQualified(table)
-    val schema = schemaOpt.getOrElse("public")
-    def lit(s: String) = "'" + s.replace("'", "''") + "'"
-    val attrs = queryTarget(
-      "SELECT a.attname, t.typname, t.typtype::text, " +
-        "t.typbasetype::text, t.typcategory::text, t.typelem::text, " +
-        "t.oid::text " +
-        "FROM pg_attribute a " +
-        "JOIN pg_class c ON c.oid = a.attrelid " +
-        "JOIN pg_namespace n ON n.oid = c.relnamespace " +
-        "JOIN pg_type t ON t.oid = a.atttypid " +
-        s"WHERE c.relname = ${lit(rel)} AND n.nspname = ${lit(schema)} " +
-        "AND a.attnum > 0 AND NOT a.attisdropped ORDER BY a.attnum")
-    if (attrs.isEmpty) return note("target table not found in catalog")
-    val byName = attrs.map(r => r(0) -> r).toMap
-    val typnames: Seq[Option[(String, Array[String])]] =
-      if (copyCols.nonEmpty) copyCols.map(c => byName.get(c).map(t => (c, t)))
-      else if (attrs.length == width)
-        attrs.toSeq.map(r => Some((r(0), r)))
-      else return note(s"positional load of $width columns " +
-        s"into a ${attrs.length}-column table")
-    if (typnames.exists(_.isEmpty)) {
-      val missing = copyCols(typnames.indexWhere(_.isEmpty))
-      return note(s"column $missing not found on target")
-    }
-    // enum columns encode as TEXT payloads (enum_recv reads the label
-    // string); domain columns encode as their BASE type (the domain's
-    // recv is the base type's recv + the domain checks), chasing
-    // nested domains through pg_type.typbasetype; 1-D ARRAY columns
-    // (typcategory 'A') encode as Arr of the resolved ELEMENT kind
-    // with the element's pg_type.oid in the payload (array_recv
-    // validates it). MySQL enum → PG enum is a DEFAULT cast in every
-    // migration, so without this the whole table silently fell back
-    // to COPY TEXT.
-    def typeRow(oid: String): Option[Array[String]] = {
-      val r = queryTarget(
-        "SELECT typname, typtype::text, typbasetype::text, " +
-          "typcategory::text, typelem::text, typrelid::text " +
-          s"FROM pg_type WHERE oid = $oid")
-      r.headOption
-    }
-    def resolveKind(oid: String, typname: String, typtype: String,
-                    baseOid: String, typcat: String, elemOid: String,
-                    depth: Int): Option[graft.sinks.PgBinKind] =
-      typtype match {
-        case "e" => Some(graft.sinks.PgBinKind.Text)
-        case "d" if depth < 10 && baseOid != null && baseOid != "0" =>
-          typeRow(baseOid).flatMap(r =>
-            resolveKind(baseOid, r(0), r(1), r(2), r(3), r(4),
-              depth + 1))
-        case "r" if depth < 10 =>
-          // custom (and built-in) RANGE types: pg_range carries the
-          // subtype; the bound datums ship as that kind's payloads.
-          // Multiranges (typtype 'm') stay unresolved → COPY TEXT.
-          queryTarget("SELECT rngsubtype::text FROM pg_range " +
-              s"WHERE rngtypid = $oid").headOption.map(_(0))
-            .filter(s => s != null && s != "0")
-            .flatMap(sub => typeRow(sub).flatMap(r =>
-              resolveKind(sub, r(0), r(1), r(2), r(3), r(4),
-                depth + 1))) match {
-            // a range's subtype can be any orderable scalar (or even
-            // an array), but never another range — guard regardless
-            case Some(ek)
-                if !ek.isInstanceOf[graft.sinks.PgBinKind.Rng] =>
-              Some(graft.sinks.PgBinKind.Rng(ek, typname))
-            case _ => None
-          }
-        case "m" if depth < 10 =>
-          // MULTIRANGE types: pg_range maps rngmultitypid back to the
-          // member range type; members ship as that range's payloads.
-          queryTarget("SELECT rngtypid::text FROM pg_range " +
-              s"WHERE rngmultitypid = $oid").headOption.map(_(0))
-            .filter(s => s != null && s != "0")
-            .flatMap(rt => typeRow(rt).flatMap(r =>
-              resolveKind(rt, r(0), r(1), r(2), r(3), r(4),
-                depth + 1))) match {
-            case Some(rk: graft.sinks.PgBinKind.Rng) =>
-              Some(graft.sinks.PgBinKind.Mrng(rk, typname))
-            case _ => None
-          }
-        case "c" if depth < 10 =>
-          // COMPOSITE types: the attribute list lives in pg_attribute
-          // under pg_type.typrelid; record_recv validates field count
-          // AND every per-field type OID, so both ride in the kind.
-          // DROPPED attributes are skipped by BOTH grammars — record_in
-          // consumes no text position for them and record_send emits
-          // count + (oid, datum) for the NON-dropped fields only in
-          // attnum order (live-pinned hexdump: a 3-attnum composite
-          // with attnum 2 dropped ships count 2, oids of attnums 1,3)
-          // — so filtering them here keeps text and wire aligned 1:1.
-          val relOid = typeRow(oid).map(_(5)).getOrElse("0")
-          if (relOid == null || relOid == "0") None
-          else {
-            val fields = queryTarget(
-              "SELECT t.oid::text, t.typname, t.typtype::text, " +
-                "t.typbasetype::text, t.typcategory::text, " +
-                "t.typelem::text FROM pg_attribute a " +
-                "JOIN pg_type t ON t.oid = a.atttypid " +
-                s"WHERE a.attrelid = $relOid AND a.attnum > 0 " +
-                "AND NOT a.attisdropped ORDER BY a.attnum")
-            if (fields.isEmpty) None
-            else {
-              val resolved = fields.map(f =>
-                resolveKind(f(0), f(1), f(2), f(3), f(4), f(5),
-                  depth + 1).map(k =>
-                  (k, java.lang.Long.parseLong(f(0)).toInt)))
-              if (resolved.exists(_.isEmpty)) None
-              else Some(graft.sinks.PgBinKind.Comp(
-                resolved.map(_.get), typname))
-            }
-          }
-        case _ if typcat == "A" && elemOid != null && elemOid != "0" &&
-            typname != null && typname.startsWith("_") && depth < 10 =>
-          // typcategory 'A' alone also matches int2vector/oidvector,
-          // whose recv functions demand lower bound 0 — encodeArray
-          // writes 1, so every row would be server-rejected. True
-          // array types are exactly the '_elem'-named ones; vectors
-          // fall through to kindOf => None => COPY TEXT fallback.
-          typeRow(elemOid).flatMap(r =>
-            resolveKind(elemOid, r(0), r(1), r(2), r(3), r(4),
-              depth + 1)) match {
-            // no nested arrays: array-of-array doesn't exist in PG
-            // (multi-dim is one array type), but a domain chain could
-            // in principle loop back — guard on the kind
-            case Some(ek) if !ek.isInstanceOf[graft.sinks.PgBinKind.Arr] =>
-              Some(graft.sinks.PgBinKind.Arr(ek,
-                java.lang.Long.parseLong(elemOid).toInt))
-            case _ => None
-          }
-        case _ => graft.sinks.PgBinary.kindOf(typname)
-      }
-    val kinds = typnames.flatten.map { case (c, r) =>
-      (c, r(1), resolveKind(r(6), r(1), r(2), r(3), r(4), r(5), 0))
-    }
-    kinds.find(_._3.isEmpty) match {
-      case Some((c, t, _)) =>
-        note(s"column $c has type $t, no binary encoder")
-      case None =>
-        val resolved = kinds.map(_._3.get)
-        // `copy binary auto`: binary pays off where the server's text
-        // input routine is expensive (numeric_in's base-10⁴ build,
-        // timestamptz_in's datetime parse, uuid_in, byteain's hex
-        // re-parse — CopyBinAb measured −13–25% server CPU on those);
-        // int/date/varchar-only tables measured ~0, so auto keeps them
-        // on COPY TEXT and skips the executor-side encode entirely
-        if (mode.contains("auto") && !resolved.exists(Runner.expensiveKind)) {
-          System.err.println(
-            s"graft: WITH copy binary auto keeps COPY TEXT for $table " +
-              "(no expensive-input column types)")
-          None
-        } else Some(resolved)
     }
   }
 
@@ -1011,20 +829,19 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
       (System.nanoTime() - t0) / 1000000, bytes = bytes)
   }
 
-  /** Copy one table's rows into PostgreSQL — the one place a table's
-    * sink is chosen, from the command's `copy binary`, `exactly once`,
-    * `on error stop` and `batch rows / batch size` options. Two values
-    * are worked out once per table — the COPY column list and the
-    * [[graft.sinks.CopyFormat]] — and go to whichever writer runs: the
-    * driver route [[graft.sinks.LocalCopy]] for a database table's scan
-    * plan, the staged [[graft.sinks.ExactlyOnce]] publish, or the
-    * distributed [[CopySink]].
+  /** Copy one table's rows into PostgreSQL as COPY TEXT — the one place
+    * a table's sink is chosen, from the command's `exactly once`,
+    * `on error stop` and `batch rows / batch size` options. The COPY
+    * column list goes to whichever writer runs: the driver route
+    * [[graft.sinks.LocalCopy]] for a database table's scan plan, the
+    * staged [[graft.sinks.ExactlyOnce]] publish, or the distributed
+    * [[CopySink]]. `WITH copy binary [auto]` still parses and only
+    * earns a stderr note: the table loads through COPY TEXT.
     *
-    * @param table qualified target: binary type lookup, stage names
+    * @param table qualified target: COPY statement, stage names
     * @param copyCols COPY column list, user-cased; empty = positional
     *   (every target column, in attnum order). A table with generated
-    *   columns lists the others, and `copy binary` resolves its
-    *   encoders by those names
+    *   columns lists the others
     * @param driver a database table's [[graft.sources.ScanPlan]], its
     *   splits streamed on driver threads; never given with exactly
     *   once, whose stages need Spark's task attempts (they read the
@@ -1041,48 +858,40 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
       df: => org.apache.spark.sql.DataFrame,
       sessionSql: Seq[String], rejectName: String,
       cmd: Ast.LoadCommand): (Long, Long, Long) = {
-    import graft.sinks.{CopyFormat, ExactlyOnce, LocalCopy, PgWire}
+    import graft.sinks.{ExactlyOnce, LocalCopy, PgWire}
     val onErrorStop = cmd.boolOption("on error stop")
     val maxRows = batchRowsOf(cmd); val maxBytes = batchBytesOf(cmd)
     val rejectDir = rejectRoot.map(r => s"$r/$rejectName.dat")
     rejectDir.foreach { d =>
       Seq(d, CopySink.logDirFor(d)).foreach(Runner.deleteTree)
     }
-    lazy val frame = df
-    // `WITH copy binary`: the target's column encoders, resolved once
-    // from the row width (a positional load must cover the whole table)
-    val width = driver.fold(
-      graft.sources.TaggedLines.untagged(frame).columns.length)(_.columns.length)
-    val format = binaryKinds(table, copyCols, width, cmd.option("copy binary"))
-      .fold[CopyFormat](CopyFormat.Text)(CopyFormat.Binary)
+    cmd.option("copy binary").foreach(_ => System.err.println(
+      s"graft: WITH copy binary is accepted; $table loads through COPY TEXT"))
     // shipped to executors inside the sinks' endpoint factories: a
     // LOCAL, so no closure drags the non-serializable Runner along
-    val ef = format match {
-      case CopyFormat.Text => endpointFactory
-      case _: CopyFormat.Binary => binaryEndpointFactory
-    }
+    val ef = endpointFactory
     driver match {
       case Some(plan) =>
         LocalCopy.write(plan, ef(PgWire.copyTarget(table, copyCols),
-          sessionSql), format, rejectDir = rejectDir, maxRows = maxRows,
+          sessionSql), rejectDir = rejectDir, maxRows = maxRows,
           maxBytes = maxBytes, onErrorStop = onErrorStop)
       case None if cmd.boolOption("exactly once") =>
         // per-attempt stage tables + one atomic publish, with the same
-        // COPY column list, format and reject files as the direct path
+        // COPY column list and reject files as the direct path
         // (rejected rows never reach a stage, so nothing can
         // double-publish)
-        ExactlyOnce.write(frame, table,
+        ExactlyOnce.write(df, table,
           exec = sql => executeDdl(sql, sessionSql),
           endpointFor = (stage, stageSetup, pid) =>
             ef(PgWire.copyTarget(stage, copyCols),
               sessionSql ++ stageSetup)(pid),
           quote = PgWire.quoteQualified, columns = copyCols,
           maxRows = maxRows, maxBytes = maxBytes,
-          onErrorStop = onErrorStop, format = format, rejectDir = rejectDir)
+          onErrorStop = onErrorStop, rejectDir = rejectDir)
       case None =>
         new CopySink(ef(PgWire.copyTarget(table, copyCols), sessionSql),
           maxRows = maxRows, maxBytes = maxBytes, onErrorStop = onErrorStop,
-          rejectDir = rejectDir, format = format).write(frame)
+          rejectDir = rejectDir).write(df)
     }
   }
 }
@@ -1115,29 +924,6 @@ object Runner {
       finally all.close()
     }
   }
-
-  /** The kinds whose server-side TEXT input routine is expensive
-    * enough for COPY BINARY to pay (CopyBinAb A/B: −13–25% server CPU
-    * on numeric/timestamptz/uuid-heavy loads; byteain shares the
-    * re-parse shape). `copy binary auto` enables binary per table
-    * exactly when one of these resolves. */
-  private[graft] def expensiveKind(k: graft.sinks.PgBinKind): Boolean =
-    k match {
-      case graft.sinks.PgBinKind.Num | graft.sinks.PgBinKind.TsTz |
-           graft.sinks.PgBinKind.Uuid | graft.sinks.PgBinKind.Bytea |
-           graft.sinks.PgBinKind.Ival => true
-      // array_in pays a per-element quote/escape scan plus the element
-      // input routine — expensive regardless of the element kind
-      case _: graft.sinks.PgBinKind.Arr => true
-      // range_in parses both bounds through the subtype input routine
-      // plus a canonicalization call — expensive like arrays
-      case _: graft.sinks.PgBinKind.Rng => true
-      // record_in runs every field through its attribute's input
-      // routine plus the quote/escape scan
-      case _: graft.sinks.PgBinKind.Comp => true
-      case _: graft.sinks.PgBinKind.Mrng => true
-      case _ => false
-    }
 
   /** Percent-decode exactly once, splitting done beforehand on the RAW
     * (still percent-encoded) string so an encoded ':' in a password
@@ -1351,11 +1137,6 @@ object Runner {
       // rejected rows land under <root>/<table>.dat)
       rejectRoot = rootDir.orElse(sys.env.get("GRAFT_REJECT_ROOT")),
       queryTarget = ddlExec.query,
-      binaryEndpointFactory = (table, sessionSql) => _ =>
-        new graft.sinks.PgWireCopyEndpoint(wire,
-          s"COPY ${graft.sinks.PgWire.quoteQualified(table)} " +
-            "FROM STDIN WITH (FORMAT binary)",
-          sessionSql, binary = true),
       dryRun = dryRun)
     val stats =
       try runner.runFileWith(() => boot.get(), text, baseDir)

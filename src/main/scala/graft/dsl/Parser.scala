@@ -426,13 +426,9 @@ private final class Parser(in: String, baseDir: String = ".") {
     // slot): opt-in exactly-once delivery via per-attempt stage tables
     // + one atomic publish ([[graft.sinks.ExactlyOnce]])
     Seq("exactly", "once") -> "flag",
-    // extension: encode rows to COPY BINARY on the executors when the
-    // target's column types all have binary encoders (PgBinary) — the
-    // server skips its per-field text input routines. `copy binary
-    // auto` enables it per table only when an expensive-input column
-    // type is present (numeric/timestamptz/uuid/bytea — where the A/B
-    // measured the server-CPU win; int/date/varchar-only tables stay
-    // on COPY TEXT, where binary measured ~0)
+    // accepted for command files written for graft's retired COPY
+    // BINARY sink (`copy binary` or `copy binary auto`); the Runner
+    // notes it per table and loads through COPY TEXT
     Seq("copy", "binary") -> "binmode",
     Seq("multiple", "readers", "per", "thread") -> "flag",
     Seq("single", "reader") -> "flag",

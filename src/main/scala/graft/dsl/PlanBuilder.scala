@@ -260,24 +260,19 @@ object PlanBuilder {
       // (csv-guess.load; csv-guess.lisp:40-77). Names are positional —
       // the target table's DDL provides the real ones server-side.
       val sample = CsvSource.sample(spark, path)
+      val d = dialect(effectiveEncoding(cmd, path, "UTF-8"))
+      // the guess only picks separator/quote/doubling — every other
+      // option (head lines, trim, workers, record terminator) still
+      // comes from the command (a guessed dialect must not silently
+      // load the header as a data row)
       val d0 =
-        if (cmd.option("fields terminated by").nonEmpty)
-          dialect(effectiveEncoding(cmd, path, "UTF-8"))
-        else CsvSource.guessDialect(sample).getOrElse(
+        if (cmd.option("fields terminated by").nonEmpty) d
+        else CsvSource.guessDialect(sample).map(g => d.copy(
+          separator = g.separator, quote = g.quote,
+          doubledQuote = g.doubledQuote)).getOrElse(
           throw new IllegalArgumentException(
             s"cannot guess a CSV dialect for $path — add HAVING FIELDS " +
               "or WITH fields terminated by"))
-          // the guess only picks separator/quote/doubling — head-line
-          // and trim options still come from the command (a guessed
-          // dialect must not silently load the header as a data row)
-          .copy(encoding = effectiveEncoding(cmd, path, "UTF-8"),
-            skipLines = cmd.intOption("skip header").getOrElse(0),
-            header = cmd.boolOption("csv header"),
-            trimUnquoted =
-        // trimming unquoted blanks IS the reference default; `keep
-        // unquoted blanks` opts out ("trim unquoted blanks" merely
-        // restates the default) — pgloader.1.md, csv-parser.lisp
-        !cmd.boolOption("keep unquoted blanks"))
       val nCols = CsvSource.parseLine(sample.head, d0.separator,
         d0.quote, d0.doubledQuote).getOrElse(
         throw new IllegalStateException("dialect failed to parse sample"))

@@ -102,11 +102,10 @@ object BatchRetry {
   }
 }
 
-/** The distributed COPY sink: each partition formats its rows once in the
-  * table's [[CopyFormat]] (COPY TEXT lines or COPY BINARY tuple frames),
-  * accumulates batches, and streams them to its own endpoint — the Spark
-  * realization of copy-rows-in-batch.lisp:6-31 where Spark tasks replace
-  * the reader/writer thread pairs.
+/** The distributed COPY sink: each partition formats its rows once as
+  * COPY TEXT lines, accumulates batches, and streams them to its own
+  * endpoint — the Spark realization of copy-rows-in-batch.lisp:6-31
+  * where Spark tasks replace the reader/writer thread pairs.
   *
   * @param endpointFactory built ON THE EXECUTOR per partition (must be a
   *   serializable closure); e.g. opens one PG connection per task.
@@ -124,17 +123,13 @@ final class CopySink(
     maxBytes: Long = 20L << 20,
     onErrorStop: Boolean = false,
     rejectDir: Option[String] = None,
-    onPartitionSuccess: Int => Unit = null,
-    format: CopyFormat = CopyFormat.Text)
+    onPartitionSuccess: Int => Unit = null)
   extends Serializable {
 
   /** Write `df`; returns (sent, rejected, bytes) via accumulators —
-    * `bytes` counts the rendered row payload actually handed to
-    * endpoints in the ACTIVE format: COPY TEXT lines, or COPY BINARY
-    * tuple frames under [[CopyFormat.Binary]] (so summary byte totals
-    * are not comparable across formats — binary frames of the same
-    * rows are usually smaller). This is the
-    * reference's per-table bytes column in the load summary.
+    * `bytes` counts the COPY TEXT line bytes actually handed to
+    * endpoints, the reference's per-table bytes column in the load
+    * summary.
     *
     * Delivery contract: at-least-once per PARTITION — each COPY batch
     * commits atomically, but a Spark task retry (or a speculative
@@ -152,24 +147,19 @@ final class CopySink(
     val bytesSent = spark.sparkContext.longAccumulator("bytesSent")
     val mr = maxRows; val mb = maxBytes; val stop = onErrorStop
     val rDir = rejectDir; val factory = endpointFactory
-    val successHook = onPartitionSuccess; val fmt = format
-    // rows are rendered by a codegen'd projection to (value, reject,
-    // raw): COPY TEXT lines by default (typed PG literals + escaping,
-    // newline-terminated, cast to BINARY inside codegen so the task
-    // receives UTF-8 bytes without a UTF8String→String round-trip —
-    // profiled as a top-5 sink cost at reference-bench scale), or
-    // COPY BINARY tuple frames ([[PgBinary.renderer]]). A null value
-    // = the renderer could not encode the row (binary path only) —
-    // routed to rejects with the `reject` column's text rendering,
-    // matching what the server itself would do to that row. A non-null
-    // raw = a line reader's parse reject ([[TaggedLines]]), filed as
-    // its source line.
-    val lines = format.render(df)
+    val successHook = onPartitionSuccess
+    // rows are rendered by a codegen'd projection to (value, raw):
+    // COPY TEXT lines (typed PG literals + escaping, newline-terminated,
+    // cast to BINARY inside codegen so the task receives UTF-8 bytes
+    // without a UTF8String→String round-trip — profiled as a top-5 sink
+    // cost at reference-bench scale). A non-null raw = a line reader's
+    // parse reject ([[TaggedLines]]), filed as its source line.
+    val lines = CopySink.textRenderer(df)
     lines.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
       val pid = org.apache.spark.TaskContext.getPartitionId()
       val (s, r, b) = CopySink.writePartition[org.apache.spark.sql.Row](
-        pid, it, _.getAs[Array[Byte]](0), _.getAs[Array[Byte]](1),
-        _.getString(2), factory, mr, mb, stop, rDir, fmt)
+        pid, it, _.getAs[Array[Byte]](0), _.getString(1), factory,
+        mr, mb, stop, rDir)
       sent.add(s); rejected.add(r); bytesSent.add(b)
       if (successHook != null) successHook(pid)
     }
@@ -188,24 +178,18 @@ object CopySink {
     * `<rejectDir>/part-<pid>.txt` as it was read — with one error
     * message per reject, in reject order, in `<logDir>/part-<pid>.log`.
     *
-    * @param value the row's rendered bytes, or null when the renderer
-    *   could not encode it (binary path only) — the row is then
-    *   rejected with its `rejectText` rendering, exactly like a
-    *   server-refused row
+    * @param value the row's COPY TEXT line bytes; a server-refused row
+    *   is filed as the bytes that were sent
     * @param raw the row's source line when the reader could not decode
     *   or parse it (the row is then rejected unsent), else null
-    * @param format turns server-rejected SENT bytes back into
-    *   replayable COPY TEXT ([[CopyFormat.rejectLine]])
-    * @return (rowsSent, rowsRejected, bytesSent) — bytes = rendered
-    *   payload handed to the endpoint in the active format */
+    * @return (rowsSent, rowsRejected, bytesSent) — bytes = COPY TEXT
+    *   payload handed to the endpoint */
   private[sinks] def writePartition[R](
       pid: Int, rows: Iterator[R],
-      value: R => Array[Byte], rejectText: R => Array[Byte],
-      raw: R => String,
+      value: R => Array[Byte], raw: R => String,
       endpointFactory: Int => CopyEndpoint,
       maxRows: Int, maxBytes: Long, onErrorStop: Boolean,
-      rejectDir: Option[String],
-      format: CopyFormat): (Long, Long, Long) = {
+      rejectDir: Option[String]): (Long, Long, Long) = {
     var sent = 0L; var rejected = 0L; var bytes = 0L
     val endpoint = endpointFactory(pid)
     // a plain Writer, NOT PrintWriter: PrintWriter swallows
@@ -247,26 +231,18 @@ object CopySink {
         rawWriter.get.write(line)
         rawWriter.get.write("\n")
       }
-    // SERVER-rejected rows reach BatchRetry as the bytes we SENT —
-    // binary tuple frames under the binary format; encode-failure
-    // rejects below already carry text
-    val sendReject: (Array[Byte], String) => Unit =
-      (row, msg) => rejectFn(format.rejectLine(row), msg)
     try {
       var batch = new Batch(maxRows, maxBytes, seed = pid)
       def flush(): Unit = if (batch.nonEmpty) {
         sent += BatchRetry.sendWithRecovery(
-          endpoint, batch.rows.toIndexedSeq, sendReject)._1
+          endpoint, batch.rows.toIndexedSeq, rejectFn)._1
         batch = new Batch(maxRows, maxBytes, seed = pid)
       }
       rows.foreach { row =>
-        val line = value(row)
         val source = raw(row)
         if (source != null) rawReject(source)
-        else if (line == null)
-          rejectFn(rejectText(row),
-            "value does not parse as its target type (COPY BINARY)")
         else {
+          val line = value(row)
           batch.add(line)
           bytes += line.length
           if (batch.isFull) flush()
@@ -293,19 +269,24 @@ object CopySink {
   /** The `.log` line of a source line the reader could not use. */
   val RawRejectMessage = "source line does not decode or parse"
 
-  /** [[CopyFormat.Text]]'s renderer: (value = COPY TEXT line bytes,
-    * reject = null, raw = [[rawSlot]]). `value` is never null here —
-    * text rendering cannot fail; the reject column exists so both
-    * formats share one row shape. */
+  /** The sink's renderer: (value = COPY TEXT line bytes, raw =
+    * [[rawSlot]]). [[CopyText.formatRow]] is the scalar spec the
+    * codegen `lineColumn` is pinned to (PgLiteralParitySpec), and
+    * [[textLine]] its driver-route twin (LocalCopySpec). */
   def textRenderer: DataFrame => DataFrame = { df =>
     import org.apache.spark.sql.functions.{concat, lit}
     df.select(
       concat(CopyText.lineColumn(TaggedLines.untagged(df)), lit("\n"))
         .cast(org.apache.spark.sql.types.BinaryType).as("value"),
-      lit(null).cast(org.apache.spark.sql.types.BinaryType)
-        .as("reject"),
       rawSlot(df))
   }
+
+  /** A scan row in catalyst form (one `UTF8String` or null per column)
+    * → its COPY TEXT line bytes: the driver route's scalar twin of
+    * [[textRenderer]]. */
+  def textLine(values: Array[Any]): Array[Byte] =
+    (CopyText.formatRow(values.map(v => if (v == null) null else v.toString)) +
+      "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)
 
   /** A rendered row's raw slot: the source line of a row the reader
     * could not decode or parse ([[TaggedLines]]), NULL for a good row

@@ -65,21 +65,8 @@ import org.apache.spark.sql.DataFrame
   *                    CREATE-stage + TRUNCATE statements
   * @param columns     the COPY column list, as the target spells them;
   *                    empty = every column, positionally
-  * @param format      the rows' [[CopyFormat]]: the stage is `LIKE` the
-  *                    target, so binary frames stage the same datums
-  *                    the direct path sends
   */
 object ExactlyOnce extends Serializable {
-
-  /** `"schema.rel"` → `(Some(schema), rel)`; bare `"rel"` → `(None, rel)`.
-    * Split on the FIRST dot, matching the Runner's own qualified-name
-    * convention (`t.schema + "." + t.name`).
-    */
-  /** Quote-aware: accepts both the bare `schema.rel` convention and
-    * the pre-quoted `"schema"."rel"` form [[PgWire.joinQualified]]
-    * emits for names containing dots or quotes. */
-  private[sinks] def splitQualified(t: String): (Option[String], String) =
-    PgWire.splitQualified(t)
 
   /** Bare-relname base bounded so every stage name fits PostgreSQL's
     * NAMEDATALEN (63 bytes). Worst-case suffix is
@@ -146,10 +133,10 @@ object ExactlyOnce extends Serializable {
     * bare relname); [[stageName]] re-attaches it.
     */
   def stagePrefix(table: String): String =
-    s"${boundBase(splitQualified(table)._2)}__graft_stage_p"
+    s"${boundBase(PgWire.splitQualified(table)._2)}__graft_stage_p"
 
   def stageName(table: String, pid: Int, attemptId: Long): String = {
-    val (schema, _) = splitQualified(table)
+    val (schema, _) = PgWire.splitQualified(table)
     val rel = s"${stagePrefix(table)}${pid}_a$attemptId"
     schema.fold(rel)(s => PgWire.joinQualified(s, rel))
   }
@@ -201,7 +188,7 @@ object ExactlyOnce extends Serializable {
     * same-named table in another schema.
     */
   def dropStages(table: String): String = {
-    val (schema, rel) = splitQualified(table)
+    val (schema, rel) = PgWire.splitQualified(table)
     def lit(x: String) = x.replace("'", "''")
     val schemaFilter = schema match {
       case Some(s) => s"schemaname = '${lit(s)}'"
@@ -229,7 +216,6 @@ object ExactlyOnce extends Serializable {
             maxBytes: Long = 20L << 20,
             onErrorStop: Boolean = false,
             publishExtra: Seq[String] = Nil,
-            format: CopyFormat = CopyFormat.Text,
             rejectDir: Option[String] = None)
       : (Long, Long, Long) = {
     // pre-clean: a previously crashed run's stages must not publish
@@ -255,7 +241,6 @@ object ExactlyOnce extends Serializable {
       // runs after the attempt's final flush: result-stage accumulator
       // semantics record exactly one completed attempt per partition
       onPartitionSuccess = pid => winners.add(attemptStage(pid)),
-      format = format,
       // rejected rows never reach a stage table, so they can't
       // double-publish — reject FILES are pure diagnostics here and
       // carry the same replayable contract as the direct path
@@ -312,14 +297,13 @@ object ExactlyOnce extends Serializable {
                        quote: String => String = identity,
                        maxRows: Int = 25000,
                        maxBytes: Long = 20L << 20,
-                       format: CopyFormat = CopyFormat.Text,
-                       rejectDir: Option[String] = None)
+                                  rejectDir: Option[String] = None)
       : (Long, Long, Long) = {
     // ledger name bounded the same way as stage names: two long-named
     // tables whose relnames differ only past NAMEDATALEN must not
     // truncate onto ONE ledger (same (queryId, batchId) key space —
     // a collision would silently no-op the other table's batches)
-    val (tschema, trel) = splitQualified(table)
+    val (tschema, trel) = PgWire.splitQualified(table)
     val erel = s"${boundBase(trel, 63 - "__graft_epochs".length)}__graft_epochs"
     // joinQualified, not bare concat: a dotted/quoted schema must
     // re-render pre-quoted or quoteQualified splits at the wrong dot
@@ -336,6 +320,6 @@ object ExactlyOnce extends Serializable {
       maxRows = maxRows, maxBytes = maxBytes,
       publishExtra = Seq(s"INSERT INTO ${quote(epochs)} " +
         s"VALUES ($qlit, $batchId);"),
-      format = format, rejectDir = rejectDir)
+      rejectDir = rejectDir)
   }
 }

@@ -5,7 +5,7 @@ package graft.sinks
   * distributed sink's own partition loop, [[CopySink.writePartition]],
   * with the split's index as partition id — the same opener, batching,
   * per-row recovery, reject files (`part-<pid>.dat` and `.log`) and
-  * [[CopyFormat]] as the Spark route, with no job, no task
+  * COPY TEXT lines as the Spark route, with no job, no task
   * serialization and no session.
   *
   * Under `local[n]` a Spark task is a thread of this JVM too, so the
@@ -16,9 +16,8 @@ package graft.sinks
   * gives Spark tasks; the Migrator's copy threads wait for their
   * table's streams.
   *
-  * Rows render through the format's [[CopyFormat.rowRenderer]], the
-  * scalar twin of the sink's codegen renderer, kept equal by
-  * LocalCopySpec.
+  * Rows render through [[CopySink.textLine]], the scalar twin of the
+  * sink's codegen renderer, kept equal by LocalCopySpec.
   */
 object LocalCopy {
 
@@ -44,8 +43,7 @@ object LocalCopy {
   }
 
   /** Load every split of `plan`, one stream per split on the driver's
-    * slots, and wait for all of them. The format's row renderer is
-    * resolved once, before any stream opens. When a split fails, the
+    * slots, and wait for all of them. When a split fails, the
     * splits not yet started are dropped, the running ones finish, and
     * the first failure is rethrown.
     *
@@ -54,20 +52,17 @@ object LocalCopy {
     *   the distributed sink */
   def write(plan: graft.sources.ScanPlan[_],
             endpointFactory: Int => CopyEndpoint,
-            format: CopyFormat = CopyFormat.Text,
             rejectDir: Option[String] = None,
             maxRows: Int = 25000,
             maxBytes: Long = 20L << 20,
             onErrorStop: Boolean = false): (Long, Long, Long) = {
-    val render = format.rowRenderer
     val streams = plan.splits.indices.map { pid =>
       slots.submit(new java.util.concurrent.Callable[(Long, Long, Long)] {
         def call(): (Long, Long, Long) = {
           val s = plan.stream(pid)
-          try CopySink.writePartition[(Array[Byte], Array[Byte])](
-            pid, s.rows.map(render), _._1, _._2, _ => null,
-            endpointFactory, maxRows, maxBytes, onErrorStop, rejectDir,
-            format)
+          try CopySink.writePartition[Array[Byte]](
+            pid, s.rows.map(CopySink.textLine), identity, _ => null,
+            endpointFactory, maxRows, maxBytes, onErrorStop, rejectDir)
           finally s.close()
         }
       })

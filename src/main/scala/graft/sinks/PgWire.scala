@@ -598,20 +598,6 @@ final class PgWireConnection(params: PgWire.ConnParams)
   def copyInRows(sql: String, rows: scala.collection.IndexedSeq[Array[Byte]])
       : Long = copyInStreaming(sql, () => writeRowFrames(rows))
 
-  /** COPY BINARY variant of [[copyInRows]]: same row-frame streaming,
-    * wrapped in the binary stream header and int16 −1 trailer — each
-    * send is one self-contained `COPY … WITH (FORMAT binary)`
-    * statement, so [[BatchRetry]]'s prefix/bisect resends re-wrap
-    * naturally. Rows are pre-encoded tuple frames
-    * ([[PgBinary.rowColumn]]). */
-  def copyInRowsBinary(sql: String,
-                       rows: scala.collection.IndexedSeq[Array[Byte]])
-      : Long = copyInStreaming(sql, { () =>
-    writeFrame(PgBinary.Header)
-    writeRowFrames(rows)
-    writeFrame(PgBinary.Trailer)
-  })
-
   // 5-byte CopyData frame header written as ONE buffered write —
   // writeByte + writeInt is five per-byte stream calls per row
   private val frameHdr: Array[Byte] = { val h = new Array[Byte](5)
@@ -683,11 +669,17 @@ final class PgWireConnection(params: PgWire.ConnParams)
   * protocol directly. Error line positions come from the server's
   * CONTEXT field, feeding [[BatchRetry]]'s prefix-resend path exactly as
   * the reference parses `CONTEXT: COPY …, line N`
-  * (copy-retry-batch.lisp:47-52). */
+  * (copy-retry-batch.lisp:47-52).
+  *
+  * @param binary kept for source compatibility with callers built
+  *   against the retired COPY BINARY sink; rows are always COPY TEXT
+  *   lines, so `true` fails here, before any connection opens */
 final class PgWireCopyEndpoint(params: PgWire.ConnParams, copySql: String,
                                sessionSetup: Seq[String] = Nil,
                                binary: Boolean = false)
     extends CopyEndpoint {
+  require(!binary, "PgWireCopyEndpoint sends COPY TEXT only; " +
+    "the COPY BINARY endpoint is gone (WITH copy binary loads through COPY TEXT)")
   private val conn = new PgWireConnection(params)
   sessionSetup.foreach(s => conn.simpleCommand(s.stripSuffix(";")))
 
@@ -699,10 +691,8 @@ final class PgWireCopyEndpoint(params: PgWire.ConnParams, copySql: String,
       case is: scala.collection.IndexedSeq[Array[Byte]] => is
       case other => other.toIndexedSeq
     }
-    try {
-      if (binary) conn.copyInRowsBinary(copySql, idx)
-      else conn.copyInRows(copySql, idx)
-    } catch {
+    try conn.copyInRows(copySql, idx)
+    catch {
       case e: PgWire.PgServerError =>
         throw CopyError(e.copyLine, e.contextMessage)
     }

@@ -92,8 +92,8 @@ final class PgWireDdlExecutor(params: PgWire.ConnParams)
       conn.simpleCommand(sql.stripSuffix(";"))
     }
 
-  /** Pooled catalog query — the CLI's `queryTarget` channel (one
-    * query per table under `WITH copy binary` resolution). */
+  /** Pooled catalog query — the CLI's `queryTarget` channel (the
+    * target's index list under `WITH drop indexes`). */
   def query(sql: String): Seq[Array[String]] =
     withConn(conn => conn.query(sql)._2)
 

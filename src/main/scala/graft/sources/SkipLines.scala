@@ -103,12 +103,6 @@ object SkipLines {
     }
   }
 
-  /** Like [[linesDF]], but keeping each line's provenance: (file, off,
-    * value, __bad) where `off` is the record's native byte offset.
-    * (file, off) is a total order over the input in FILE ORDER — the
-    * load order the reference gets implicitly from sequential reads,
-    * and the basis for serial-column assignment. Costs nothing extra:
-    * the offsets are the TextInputFormat record keys either way. */
   /** Floor on bytes-per-split when `splitHint` asks for parallelism:
     * a task under ~4 MB of COPY payload finishes before its scheduling
     * cost amortizes, and splitting tiny files breaks the file-order
@@ -122,6 +116,12 @@ object SkipLines {
   type Stitch = Iterator[(String, Long, Array[Byte], Boolean)] =>
     Iterator[(String, Long, Array[Byte], Boolean)]
 
+  /** Like [[linesDF]], but keeping each line's provenance: (file, off,
+    * value, __bad) where `off` is the record's native byte offset.
+    * (file, off) is a total order over the input in FILE ORDER — the
+    * load order the reference gets implicitly from sequential reads,
+    * and the basis for serial-column assignment. Costs nothing extra:
+    * the offsets are the TextInputFormat record keys either way. */
   def linesWithPosition(spark: SparkSession, path: String, skip: Int,
                         charset: String = "UTF-8", splitHint: Int = 1,
                         stitch: Stitch = null,

@@ -41,11 +41,7 @@ class LiveManyTablesSpec extends SparkSpec {
       executeDdl = ddlExec,
       endpointFactory = (table, setup) => _ => new PgWireCopyEndpoint(
         dp, s"COPY ${PgWire.quoteQualified(table)} FROM STDIN", setup),
-      queryTarget = ddlExec.query,
-      binaryEndpointFactory = (table, setup) => _ =>
-        new PgWireCopyEndpoint(dp,
-          s"COPY ${PgWire.quoteQualified(table)} FROM STDIN " +
-            "WITH (FORMAT binary)", setup, binary = true)), ddlExec)
+      queryTarget = ddlExec.query), ddlExec)
   }
 
   test("live pg→pg: 60-table fixture migrates whole — per-table stats, " +

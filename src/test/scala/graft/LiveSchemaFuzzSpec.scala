@@ -62,11 +62,7 @@ class LiveSchemaFuzzSpec extends SparkSpec {
       queryTarget = sql => {
         val c = new PgWireConnection(dp)
         try c.query(sql)._2 finally c.close()
-      },
-      binaryEndpointFactory = (table, setup) => _ =>
-        new PgWireCopyEndpoint(dp,
-          s"COPY ${PgWire.quoteQualified(table)} FROM STDIN " +
-            "WITH (FORMAT binary)", setup, binary = true))
+      })
   }
 
   private def qi(s: String) = "\"" + s.replace("\"", "\"\"") + "\""
@@ -1034,8 +1030,10 @@ class LiveSchemaFuzzSpec extends SparkSpec {
         s"${ddl.count(_.startsWith("CREATE UNLOGGED"))} unlogged")
       ddl.foreach(stmt => exec(src, stmt))
 
-      // route coverage: the staged exactly-once publish and the binary
-      // COPY sink face the same hostile schemas as the default path
+      // route coverage: the staged exactly-once publish faces the same
+      // hostile schemas as the default path. `copy binary` loads through
+      // COPY TEXT like the default; its draw stays so every seed keeps
+      // generating the same cases
       val optRnd = new Random(seed * 31 + 7)
       val opts = Seq(
         if (optRnd.nextInt(3) == 0) ", exactly once" else "",

@@ -1,12 +1,11 @@
 package graft
 
 import java.nio.file.Files
-import graft.sinks.{CopyEndpoint, CopyError, CopyFormat, CopySink, LocalCopy,
-  PgBinary}
+import graft.sinks.{CopyEndpoint, CopyError, CopySink, LocalCopy}
 
 /** The driver route of database tables ([[graft.sinks.LocalCopy]]):
-  * its scalar renderers must stay byte-identical to the distributed
-  * sink's codegen renderers (the route is a pure execution-venue
+  * its scalar renderer must stay byte-identical to the distributed
+  * sink's codegen renderer (the route is a pure execution-venue
   * change, never a format change), and its batch/reject machinery must
   * honor the same recovery contract. */
 class LocalCopySpec extends SparkSpec {
@@ -52,39 +51,12 @@ class LocalCopySpec extends SparkSpec {
   test("textRender matches the codegen textRenderer byte-for-byte") {
     val codegen = CopySink.textRenderer(stringDf(rows3)).collect()
       .map(_.getAs[Array[Byte]](0).toSeq)
-    val local = rows3.map(r => CopyFormat.Text.rowRenderer(utf8(r))._1.toSeq)
+    val local = rows3.map(r => CopySink.textLine(utf8(r)).toSeq)
     assert(codegen.length == local.length)
     // a local relation of this size collects in input order
     codegen.zip(local).zipWithIndex.foreach { case ((c, l), i) =>
       assert(c == l, s"row $i diverged")
     }
-  }
-
-  test("binaryRender matches the codegen rowColumn frames, including " +
-    "the reject contract for unparseable values") {
-    val kinds = Seq("int4", "text", "numeric").map(PgBinary.kindOf(_).get)
-    val rows: Seq[Array[String]] = Seq(
-      Array("1", "plain", "3.14"),
-      Array(null, "x\ty", "0"),
-      Array("not-an-int", "t", "1"), // int4 encode failure → reject
-      Array("-42", null, "NaN"),
-      Array("2147483647", "", "bogus"), // numeric failure → reject
-      Array("7", "héllo", "-999999.99"))
-    val codegen = PgBinary.renderer(kinds)(stringDf(rows)).collect()
-      .map { r =>
-        (Option(r.getAs[Array[Byte]](0)).map(_.toSeq),
-          Option(r.getAs[Array[Byte]](1)).map(_.toSeq))
-      }
-    val render = CopyFormat.Binary(kinds).rowRenderer
-    val local = rows.map { r =>
-      val (v, j) = render(utf8(r))
-      (Option(v).map(_.toSeq), Option(j).map(_.toSeq))
-    }
-    codegen.zip(local).zipWithIndex.foreach { case ((c, l), i) =>
-      assert(c == l, s"row $i diverged")
-    }
-    // the two failure rows rejected in both paths
-    assert(local.count(_._1.isEmpty) == 2)
   }
 
   test("write: batches flow through BatchRetry with the line-numbered " +
@@ -109,24 +81,6 @@ class LocalCopySpec extends SparkSpec {
     assert(rf.exists())
     val content = new String(Files.readAllBytes(rf.toPath), "UTF-8")
     assert(content == "2\tBAD\n")
-  }
-
-  test("write: binary encode failures reject with the row's COPY TEXT " +
-    "line, like the distributed renderer's reject column") {
-    val kinds = Seq(PgBinary.kindOf("int4").get)
-    val landed = scala.collection.mutable.ArrayBuffer.empty[Int]
-    val endpoint = new CopyEndpoint {
-      def send(rows: Seq[Array[Byte]]): Unit = landed += rows.length
-    }
-    val dir = Files.createTempDirectory("localcopybin").toString
-    val (sent, rejected, _) = LocalCopy.write(
-      plan(Seq("n"), Iterator(Array("41"), Array("nope"), Array("42"))
-        .map(utf8)),
-      _ => endpoint, CopyFormat.Binary(kinds), rejectDir = Some(dir))
-    assert(sent == 2 && rejected == 1)
-    val content = new String(Files.readAllBytes(
-      new java.io.File(dir, "part-00000.dat").toPath), "UTF-8")
-    assert(content == "nope\n")
   }
 
   test("write: onErrorStop fails fast instead of rejecting") {

@@ -685,4 +685,45 @@ class RunnerSpec extends SparkSpec {
     assert(RunnerSpec.received.asScala.toSeq.map(_._2).sorted ==
       Seq("1\tapple\t0.50", "2\t\t12.25"))
   }
+
+  test("WITH copy binary and copy binary auto are accepted: the same " +
+    "rows reach the text endpoints, with one note per table") {
+    val dir = Files.createTempDirectory("runner-copybin").toFile
+    Files.writeString(new java.io.File(dir, "t.csv").toPath,
+      "1|3.14|2024-01-02 03:04:05+00|\\x00ff|héllo\tworld\n" +
+        "2||||\n-3|NaN|infinity|\\x|{1,2}\n")
+    val binaryCalls = new java.util.concurrent.atomic.AtomicInteger
+    def load(withs: String): (Seq[String], String) = {
+      RunnerSpec.received.clear()
+      val runner = new Runner((_, _) => (), RunnerSpec.endpoint,
+        binaryEndpointFactory = (_, _) => {
+          binaryCalls.incrementAndGet()
+          _ => sys.error("the binary endpoint factory was called")
+        })
+      val err = new java.io.ByteArrayOutputStream
+      val saved = System.err
+      System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+      val stats =
+        try runner.runFile(spark,
+          s"""LOAD CSV FROM '${dir.getAbsolutePath}/t.csv'
+              HAVING FIELDS (i, n, ts, b, s)
+              INTO postgresql:///t TARGET TABLE t
+              WITH fields terminated by '|'$withs;""")
+        finally System.setErr(saved)
+      assert(stats.map(s => (s.table, s.rows, s.rejected)) ==
+        Seq(("t", 3L, 0L)))
+      (RunnerSpec.received.asScala.toSeq.map(_._2), err.toString("UTF-8"))
+    }
+    val note = "graft: WITH copy binary is accepted; t loads through COPY TEXT"
+    val (plain, plainErr) = load("")
+    val (binary, binaryErr) = load(", copy binary")
+    val (auto, autoErr) = load(", copy binary auto")
+    assert(plain.length == 3)
+    assert(binary == plain)
+    assert(auto == plain)
+    assert(binaryCalls.get == 0)
+    assert(!plainErr.contains("copy binary"))
+    assert(binaryErr.linesIterator.count(_ == note) == 1, binaryErr)
+    assert(autoErr.linesIterator.count(_ == note) == 1, autoErr)
+  }
 }

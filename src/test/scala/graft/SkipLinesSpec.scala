@@ -111,6 +111,24 @@ class SkipLinesSpec extends SparkSpec {
     assert(SkipLines.lines(spark, big, 0, "UTF-8", 8).count() == 90000L)
   }
 
+  test("a guessed CSV dialect keeps the command's workers: 9 MB at " +
+    "workers = 2 reads 2 splits") {
+    // no HAVING FIELDS and no `fields terminated by`: the separator,
+    // quote and doubling are guessed, every other option comes from
+    // the command — the guess used to drop `workers` (one split)
+    val line = (1 to 3).map(i => s"field$i" + "y" * 28).mkString(";")
+    val dir = tmpDir("g.csv" -> Seq.fill(90000)(line).mkString("\n"))
+    val cmd = graft.dsl.Parser.parse(
+      s"""LOAD CSV FROM '$dir/g.csv'
+          INTO postgresql:///g TARGET TABLE t
+          WITH workers = 2;""")
+    val df = graft.dsl.PlanBuilder.build(spark, cmd)
+    assert(df.columns.length == 3, df.columns.mkString(","))
+    val parts = df.rdd.getNumPartitions
+    assert(parts == 2, s"guessed dialect at workers = 2 read $parts splits")
+    assert(df.count() == 90000L)
+  }
+
   test("isWellFormedUtf8 equals the strict JDK UTF-8 decoder " +
       "(randomized + exhaustive short sequences)") {
     import graft.sources.SkipLines

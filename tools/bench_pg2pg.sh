@@ -29,7 +29,7 @@ mkdir -p /tmp/pg2pg_bench
 sed -e "s|{{PGURI}}|$BASE/empsrc|g" -e "s|{{EXTRAOPTS}}||g" \
   tools/bench_employees.load > /tmp/pg2pg_bench/seed.load
 # EXTRA_WITH adds WITH options to the migration (e.g.
-# EXTRA_WITH=", copy binary" for the COPY BINARY A/B)
+# EXTRA_WITH=", exactly once" to time the staged publish)
 sed -e "s|{{SRCURI}}|$BASE/empsrc|g" -e "s|{{DSTURI}}|$BASE/empdst|g" \
   -e "s|{{EXTRAOPTS}}|${EXTRA_WITH:-}|g" \
   tools/bench_pg2pg.load > /tmp/pg2pg_bench/pg2pg.load
