@@ -145,10 +145,7 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
     // loads — it still runs under dryRun and records the full plan).
     // User DO hooks are part of "nothing executes".
     if (dryRun && cmd.loadType != "database") {
-      val table = (cmd.targetSchema, cmd.targetTable) match {
-        case (Some(s), Some(tn)) => s"$s.$tn"
-        case (_, tn) => tn.getOrElse("data")
-      }
+      val table = targetName(cmd)
       System.err.println(s"graft: dry run — skipping ${cmd.loadType} " +
         s"load into $table")
       return Seq(TableStats("", table, 0L, 0L, 0L))
@@ -167,10 +164,7 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
         // the session here (the overlap window is the database path's)
         PlanBuilder.buildArchive(sparkF(), cmd, baseDir).map {
           case (sc, df) =>
-            val table = (sc.targetSchema, sc.targetTable) match {
-              case (Some(s), Some(tn)) => s"$s.$tn"
-              case (_, tn) => tn.getOrElse("data")
-            }
+            val table = targetName(sc)
             // the SUB-command's own lists decide the COPY column list
             // (census-places: quoted "LocationName" must reach the
             // server as written), and its own WITH clause the sink
@@ -185,13 +179,7 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
         // the tagged frame: parse rejects ride the COPY job's own scan
         // and are counted and filed by the sink
         val df = PlanBuilder.buildTagged(spark, cmd, baseDir, inline)
-        // schema-qualified targets (INTO pg:///db?schema.table / TARGET
-        // TABLE schema.table) must keep their schema — an unqualified
-        // COPY lands in the wrong relation (live golden csv.partial)
-        val table = (cmd.targetSchema, cmd.targetTable) match {
-          case (Some(s), Some(tn)) => s"$s.$tn"
-          case (_, tn) => tn.getOrElse("data")
-        }
+        val table = targetName(cmd)
         // DBF/IXF files carry their own schema, read once: `WITH create
         // table` creates the target table from it (db3.lisp / ixf.lisp
         // cast path; fixture dbf-31.load) and the COPY column list
@@ -531,6 +519,17 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
         userType.fold(c.pgType)(_.target.get.pgType)
     }
   }
+
+  /** A file load's target as COPY names it, `data` when the command
+    * names no table. Schema-qualified targets (INTO
+    * pg:///db?schema.table / TARGET TABLE schema.table) keep their
+    * schema — an unqualified COPY lands in the wrong relation (live
+    * golden csv.partial). */
+  private def targetName(cmd: Ast.LoadCommand): String =
+    (cmd.targetSchema, cmd.targetTable) match {
+      case (Some(s), Some(tn)) => s"$s.$tn"
+      case (_, tn) => tn.getOrElse("data")
+    }
 
   /** `WITH batch rows / batch size` — the sink batch bounds
     * (copy-batch rows/bytes caps, src/params.lisp *copy-batch-rows*

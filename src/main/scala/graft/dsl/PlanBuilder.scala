@@ -261,15 +261,19 @@ object PlanBuilder {
       // the target table's DDL provides the real ones server-side.
       val sample = CsvSource.sample(spark, path)
       val d = dialect(effectiveEncoding(cmd, path, "UTF-8"))
-      // the guess only picks separator/quote/doubling — every other
-      // option (head lines, trim, workers, record terminator) still
-      // comes from the command (a guessed dialect must not silently
-      // load the header as a data row)
+      // the guess only picks the separator, and the doubling when the
+      // command names no escape — it guesses under the command's quote
+      // (`fields not enclosed` included), and every other option (head
+      // lines, trim, workers, record terminator) still comes from the
+      // command (a guessed dialect must not silently load the header
+      // as a data row)
       val d0 =
         if (cmd.option("fields terminated by").nonEmpty) d
-        else CsvSource.guessDialect(sample).map(g => d.copy(
-          separator = g.separator, quote = g.quote,
-          doubledQuote = g.doubledQuote)).getOrElse(
+        else CsvSource.guessDialect(sample, quote = d.quote).map(g =>
+          d.copy(separator = g.separator,
+            doubledQuote =
+              if (cmd.option("fields escaped by").nonEmpty) d.doubledQuote
+              else g.doubledQuote)).getOrElse(
           throw new IllegalArgumentException(
             s"cannot guess a CSV dialect for $path — add HAVING FIELDS " +
               "or WITH fields terminated by"))

@@ -74,21 +74,17 @@ object Classifier {
     * The threshold is ONE exact SQL-standard percentile_disc aggregate
     * (engine-exact over the integer margins) broadcast back as a scalar
     * — the corpus is scanned twice (threshold + filter), shuffled
-    * never. `checkpointScored` materializes the scored frame once so
-    * both passes read it instead of re-running the upstream scoring
-    * projection (md5 per token) twice — measured 2.3× faster warm at
-    * sf0.1 and 2.7× at a 10× corpus (ProfileScale, round 10). Opt-in
-    * per the library's no-hidden-caching convention (localCheckpoint =
-    * executor-local blocks; swap for `checkpoint()` + a reliable dir on
-    * a shared cluster, and consider `percentile_approx` at 100 TB). */
+    * never. Both passes read the scored frame through [[Reuse.shared]]
+    * instead of re-running the upstream scoring projection (md5 per
+    * token) twice — measured 2.3× faster warm at sf0.1 and 2.7× at a
+    * 10× corpus (ProfileScale, round 10). Consider `percentile_approx`
+    * at 100 TB. */
   def filterByMarginPercentile(scored: DataFrame, marginCol: String,
-                               p: Double,
-                               checkpointScored: Boolean = false)
-      : DataFrame = {
+                               p: Double): DataFrame = {
     require(p > 0.0 && p < 1.0, s"p must be in (0, 1), got $p")
     require(!scored.columns.contains("__thr"),
       "input column __thr collides with internals")
-    val s = if (checkpointScored) scored.localCheckpoint() else scored
+    val s = Reuse.shared(scored)
     val thr = s.agg(
       expr(s"percentile_disc($p) WITHIN GROUP (ORDER BY `$marginCol`)")
         .as("__thr"))
@@ -139,17 +135,15 @@ object Classifier {
                  labelCol: String, buckets: Int = 1024): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    // localCheckpoint: the distinct-score count table feeds THREE
-    // consumers (range probe, bucket totals, windowed final pass) and
-    // its upstream — for hashed classifiers a hash per token over the
-    // whole corpus — would otherwise run three times (round 21; RDD
-    // blocks, not persist: the columnar-cache spelling measured slower)
-    val g = scored
+    // shared: the distinct-score count table feeds THREE consumers
+    // (range probe, bucket totals, windowed final pass) and its
+    // upstream — for hashed classifiers a hash per token over the whole
+    // corpus — would otherwise run three times
+    val g = Reuse.shared(scored
       .filter(col(labelCol).isNotNull && col(scoreCol).isNotNull)
       .groupBy(col(scoreCol).as("s"))
       .agg(sum(when(col(labelCol), 1L).otherwise(0L)).as("p"),
-        sum(when(col(labelCol), 0L).otherwise(1L)).as("q"))
-      .localCheckpoint()
+        sum(when(col(labelCol), 0L).otherwise(1L)).as("q")))
     // the bucket function must be MONOTONE in the score's own ordering.
     // Each bucketable type gets its own monotone double map — a plain
     // double cast is only legal for numerics and TIMESTAMP (dates and

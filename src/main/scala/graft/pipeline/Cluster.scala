@@ -142,23 +142,21 @@ object Cluster {
     * Output: the KEPT (id, cluster) rows.
     */
   def semanticDedup(df: DataFrame, idCol: String, vecCol: String,
-                    centroids: DataFrame, threshold: Double,
-                    checkpointAssigned: Boolean = false)
+                    centroids: DataFrame, threshold: Double)
       : DataFrame = {
     // Pair-predicate cost dominates (it runs once per within-cluster
     // candidate pair, and higher-order aggregates are interpreted, not
     // codegen'd): precompute each vector's norm ONCE so the pair test
     // is a single dot-product HOF — `dot(x,y) >= t·|x|·|y|` — instead
     // of cosine's three aggregates per pair. The assigned frame feeds
-    // THREE consumers (both self-join sides + the anti-join left);
-    // `checkpointAssigned` materializes it once instead of re-running
-    // the k-distance assignment scan per consumer — the same opt-in
-    // convention as checkpointTf/checkpointScored elsewhere.
-    val a0 = assign(df, idCol, vecCol, centroids, carry = Seq(vecCol))
-      .select(col(idCol).as("id"), col("cluster"),
-        col(vecCol).as("v"))
-      .withColumn("nrm", Similarity.norm(col("v")))
-    val a = if (checkpointAssigned) a0.localCheckpoint() else a0
+    // THREE consumers (both self-join sides + the anti-join left), so
+    // it is shared rather than re-running the k-distance assignment
+    // scan per consumer.
+    val a = Reuse.shared(
+      assign(df, idCol, vecCol, centroids, carry = Seq(vecCol))
+        .select(col(idCol).as("id"), col("cluster"),
+          col(vecCol).as("v"))
+        .withColumn("nrm", Similarity.norm(col("v"))))
     // left_anti tolerates duplicate right-side ids, so the dropped set
     // needs no distinct (saves a shuffle + aggregate).
     val dropped = a.as("x").join(a.as("y"),

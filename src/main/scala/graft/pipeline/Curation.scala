@@ -340,26 +340,22 @@ object Curation {
     * exact in practice); the pair counts come from one equi-join on the
     * hash pair (fan-out per gram = #strata containing it, bounded by
     * stratum cardinality, not corpus size) and the output is
-    * strata²-sized. Set sizes broadcast back in. `checkpointGrams`
-    * materializes the distinct gram set once for its three consumers
-    * (same opt-in convention as [[Terms]]; executor-local blocks —
-    * swap for `checkpoint()` on a shared cluster).
+    * strata²-sized. Set sizes broadcast back in. The distinct gram set
+    * feeds its three consumers through [[Reuse.shared]].
     *
     * Output: (src_a, src_b, n_a, n_b, inter_n, jaccard), src_a < src_b,
     * pairs with empty intersections omitted. `jaccard` is one division
     * of exact integers — engine-exact.
     */
   def sourceOverlap(df: DataFrame, stratumCol: String, idCol: String,
-                    textCol: String, n: Int = 3,
-                    checkpointGrams: Boolean = false): DataFrame = {
+                    textCol: String, n: Int = 3): DataFrame = {
     val words = Grams.wordCols(n)
-    val g0 = Grams.positioned(df, idCol, textCol, n,
+    val g = Reuse.shared(Grams.positioned(df, idCol, textCol, n,
         extra = Seq(stratumCol))
       .select(col(stratumCol).as("src"),
         xxhash64(words: _*).as("h1"),
         xxhash64((lit("graft-overlap") +: words): _*).as("h2"))
-      .distinct()
-    val g = if (checkpointGrams) g0.localCheckpoint() else g0
+      .distinct())
     val sizes = g.groupBy(col("src")).agg(count(lit(1)).as("ng"))
     val inter = g.select(col("src").as("src_a"), col("h1"), col("h2"))
       .join(g.select(col("src").as("src_b"), col("h1"), col("h2")),

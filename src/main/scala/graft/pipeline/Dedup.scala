@@ -246,25 +246,11 @@ object Dedup {
     */
   def minhashLsh(df: DataFrame, idCol: String, textCol: String,
                  numPerms: Int = 128, bands: Int = 32, k: Int = 3,
-                 threshold: Double = 0.5, seed: Long = 42L,
-                 checkpointShingles: Boolean = true): DataFrame = {
+                 threshold: Double = 0.5, seed: Long = 42L): DataFrame = {
     // the shingle rows feed THREE consumers (signature aggregate + both
-    // verify sides), so without materialization the tokenize/explode/
-    // distinct lineage runs three times. localCheckpoint (round 21):
-    // RDD-block materialization, re-measured warm 2.1-2.5 s → 1.4-1.6 s
-    // at sf0.1 — unlike the MEMORY_AND_DISK persist an earlier round
-    // measured 2.2× SLOWER (columnar cache build + codegen break), RDD
-    // blocks of the post-distinct narrow (id, h) rows are cheap to
-    // write and every consumer reads them directly (same trade
-    // ngramJaccard has carried since round ~8). `checkpointShingles`
-    // (round 22, default keeps the measured win): the blocks are
-    // shingle-table-sized — the operator's own working set — pinned
-    // executor-local with TRUNCATED lineage, so on a shared cluster
-    // where executor loss must recompute rather than fail the job,
-    // pass false (recompute) or swap for checkpoint() + a reliable
-    // dir. Opting out also restores call-time laziness.
-    val rows0 = shingleHashRows(df, idCol, textCol, k)
-    val rows = if (checkpointShingles) rows0.localCheckpoint() else rows0
+    // verify sides), so without reuse the tokenize/explode/distinct
+    // lineage runs three times
+    val rows = Reuse.shared(shingleHashRows(df, idCol, textCol, k))
     val buckets = bandBuckets(signatureCols(rows, numPerms, seed),
       numPerms, bands)
     // set sizes ride the bucket rows straight out of the signature
@@ -490,7 +476,7 @@ object Dedup {
               }
               b.result()
             }
-            // NOT localCheckpoint'd: measured cold (the shape the
+            // NOT shared ([[Reuse]]): measured cold (the shape the
             // bench pays — each query runs once per JVM) the eager
             // materialization job + its codegen cost ~2-3 s more than
             // the two endpoint-filtered recomputes it saves; the
@@ -615,9 +601,8 @@ object Dedup {
       if (escPairs == null) {
         // fallback: the round-14 distributed spelling — anti-join
         // stragglers, self-join buckets on (band, bucket), distributed
-        // verify; localCheckpoint so the component step's edge union
-        // reads the materialized result instead of re-running the
-        // verify lineage
+        // verify; shared so the component step's edge union reads the
+        // verified rows instead of re-running the verify lineage
         val candIds = cand0.select(col("id_a").as("id"))
           .unionAll(cand0.select(col("id_b").as("id"))).distinct()
         val pairedIds = pairs.select(col("id_a").as("id"))
@@ -638,8 +623,8 @@ object Dedup {
               .otherwise(col("z.sz")).as("sz_b"))
           .distinct()
           .join(cand0, Seq("id_a", "id_b"), "left_anti")
-        Some(verifyJaccardRows(escalated, rows, rows,
-          threshold).localCheckpoint())
+        Some(Reuse.shared(verifyJaccardRows(escalated, rows, rows,
+          threshold)))
       }
       else if (escPairs.isEmpty) None
       else {
@@ -715,19 +700,12 @@ object Dedup {
                           idCol: String, textCol: String,
                           numPerms: Int = 128, bands: Int = 32,
                           k: Int = 3, threshold: Double = 0.5,
-                          seed: Long = 42L,
-                          checkpointShingles: Boolean = false): DataFrame = {
-    // the left (corpus) shingle rows feed THREE consumers here
-    // (signature, size count, verify intersection) vs the self-join's
-    // four-with-a-wash — opt-in materialization of the narrow hashed
-    // rows, same convention as [[Terms.termStats]]. Measured at sf0.1
-    // (round 12, best-of-3): checkpoint 4.43 s vs recompute 3.92 s —
-    // recompute wins here too (the corpus-sized row materialization
-    // costs more than re-running the codegen'd lineage), so the
-    // flagship query keeps the default; the flag stays for corpora
-    // whose text:shingle ratio differs.
-    val rowsL0 = shingleHashRows(left, idCol, textCol, k)
-    val rowsL = if (checkpointShingles) rowsL0.localCheckpoint() else rowsL0
+                          seed: Long = 42L): DataFrame = {
+    // the left (corpus) shingle rows are recomputed per consumer, not
+    // shared: measured at sf0.1 (round 12, best-of-3), materializing
+    // them took 4.43 s vs 3.92 s recomputing — the corpus-sized row
+    // materialization costs more than re-running the codegen'd lineage
+    val rowsL = shingleHashRows(left, idCol, textCol, k)
     val rowsR = shingleHashRows(right, idCol, textCol, k)
     val bL = bandBuckets(signatureCols(rowsL, numPerms, seed),
       numPerms, bands)
@@ -892,23 +870,12 @@ object Dedup {
     * stop-word-like shingles are pushed out of every prefix. Survivor
     * pairs are verified with exact jaccard on the hashed sets. */
   def ngramJaccard(df: DataFrame, idCol: String, textCol: String,
-                   n: Int = 3, threshold: Double = 0.3,
-                   checkpointShingles: Boolean = true): DataFrame = {
+                   n: Int = 3, threshold: Double = 0.3): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // Unlike [[minhashLsh]] (2 consumers, columnar persist measured 2.2×
-    // SLOWER), the shingle rows here feed FOUR plan subtrees (doc-freq,
-    // prefix, both verify sides), each re-running the posexplode →
-    // window → distinct lineage with its two shuffles. localCheckpoint
-    // materializes the post-distinct narrow (id, h) rows as plain RDD
-    // blocks — none of the columnar-cache build cost — and was measured
-    // 40% faster end-to-end at sf0.1 (7.2 s → 4.2 s warm). Blocks are
-    // executor-local and lineage is truncated, so a lost executor fails
-    // the query instead of recomputing: `checkpointShingles = false`
-    // (round 22 opt-out; default keeps the measured win) restores
-    // recompute + call-time laziness, or swap for `checkpoint()` + a
-    // reliable dir for identical semantics with durable storage.
-    val rows0 = shingleHashRows(df, idCol, textCol, n)
-    val rows = if (checkpointShingles) rows0.localCheckpoint() else rows0
+    // the shingle rows feed FOUR plan subtrees (doc-freq, prefix, both
+    // verify sides), each re-running the posexplode → window → distinct
+    // lineage with its two shuffles unless shared
+    val rows = Reuse.shared(shingleHashRows(df, idCol, textCol, n))
     // global document frequency per shingle (one hash-aggregate on h)
     val docFreq = rows.groupBy(col("h")).agg(count(lit(1)).as("df"))
     // prefix = each set's first hashes under the (df asc, h) order.

@@ -268,16 +268,14 @@ object Drift {
       df.select(col(valueCol).cast("double").as("v"))
         .filter(col("v").isNotNull)
         .groupBy(col("v")).agg(count(lit(1)).as(cName))
-    // localCheckpoint: the distinct-value count table feeds FOUR
-    // consumers (range, bucket totals, the windowed final pass, cohort
-    // totals) — materialize the aggregate-compressed rows once as RDD
-    // blocks instead of re-running both cohort scans + the full-outer
-    // join per consumer (round 21; the persist+collect spelling
-    // measured slower, see OPTIMIZATION_r21.md)
-    val g0 = counted(a, "ca").join(counted(b, "cb"), Seq("v"), "full_outer")
-      .select(col("v"), coalesce(col("ca"), lit(0L)).as("ca"),
-        coalesce(col("cb"), lit(0L)).as("cb"))
-      .localCheckpoint()
+    // shared: the distinct-value count table feeds FOUR consumers
+    // (range, bucket totals, the windowed final pass, cohort totals),
+    // each of which would otherwise re-run both cohort scans + the
+    // full-outer join
+    val g0 = Reuse.shared(
+      counted(a, "ca").join(counted(b, "cb"), Seq("v"), "full_outer")
+        .select(col("v"), coalesce(col("ca"), lit(0L)).as("ca"),
+          coalesce(col("cb"), lit(0L)).as("cb")))
     val range = g0.agg(min(col("v")).as("lo"), max(col("v")).as("hi"))
     // bucket index: monotone in v; any non-finite span (constant range,
     // infinite endpoints, NaN present — NaN sorts greatest into hi)

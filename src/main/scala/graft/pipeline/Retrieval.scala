@@ -51,8 +51,7 @@ object Retrieval {
     */
   def bm25TopK(docs: DataFrame, idCol: String, textCol: String,
                queries: DataFrame, qidCol: String, qtextCol: String,
-               k: Int = 10, k1: Double = 1.2, b: Double = 0.75,
-               checkpointTf: Boolean = false): DataFrame = {
+               k: Int = 10, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val toks = split(lower(col(textCol)), Terms.SeparatorClass)
     // narrow per-doc token count — no explode, zero-token docs included
@@ -76,21 +75,16 @@ object Retrieval {
     // fused into one select, ExtractGenerator leaves the O(tokens)
     // size(filter(split(...))) expression in the projection ABOVE the
     // Generate, re-evaluating it per TOKEN row — O(len²) per document
-    // (measured 33 s vs 1.5 s at sf0.1).
-    val tf0 = docs.select(col(idCol).as("id"),
+    // (measured 33 s vs 1.5 s at sf0.1). tf feeds both the score join
+    // and the df aggregate, hence shared.
+    val tf = Reuse.shared(docs.select(col(idCol).as("id"),
         size(filter(toks, w => w =!= "")).cast("long").as("dl"),
         col(textCol).as("__text"))
       .select(col("id"), col("dl"),
         explode(split(lower(col("__text")), Terms.SeparatorClass)).as("w"))
       .join(termSet, Seq("w"), "left_semi")
       .groupBy(col("id"), col("dl"), col("w"))
-      .agg(count(lit(1)).as("tf"))
-    // tf feeds both the score join and the df aggregate — Catalyst
-    // plans two corpus tokenize passes; materializing the (tiny,
-    // query-matching) posting frame once halves the corpus work. Same
-    // opt-in convention as [[Terms.termStats]] (executor-local blocks;
-    // swap for checkpoint() + a reliable dir on a shared cluster).
-    val tf = if (checkpointTf) tf0.localCheckpoint() else tf0
+      .agg(count(lit(1)).as("tf")))
     // df per query term — computed on the restricted postings (df of a
     // term not in any query is never needed)
     val dfq = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))

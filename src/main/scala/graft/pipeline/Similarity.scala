@@ -75,11 +75,9 @@ object Similarity {
     * sort LAST in both orderings, so an unscoreable row can never
     * displace a real pair from the top-k.
     *
-    * The scored cross product feeds both kinds; `checkpointScored`
-    * materializes it once ((anchor, candidate, score) — anchors ×
+    * The scored cross product ((anchor, candidate, score) — anchors ×
     * corpus rows, far narrower than the corpus when anchors are the
-    * documented small set) instead of re-running the corpus scan + dot
-    * products per kind — the same opt-in convention as `checkpointTf`.
+    * documented small set) feeds both kinds through [[Reuse.shared]].
     *
     * Output: (aId, kind, rank, cId, score), rank 1..k per (anchor,
     * kind), ties broken by candidate id.
@@ -89,14 +87,11 @@ object Similarity {
                 aLabel: String = "a_label",
                 cId: String = "c_id", cVec: String = "c_vec",
                 cLabel: String = "c_label",
-                score: (Column, Column) => Column = dot,
-                checkpointScored: Boolean = false): DataFrame = {
+                score: (Column, Column) => Column = dot): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val scored0 = corpus.crossJoin(broadcast(anchors))
+    val scored = Reuse.shared(corpus.crossJoin(broadcast(anchors))
       .select(col(aId), col(cId), col(aLabel), col(cLabel),
-        score(col(aVec), col(cVec)).as("score"))
-    val scored = if (checkpointScored) scored0.localCheckpoint()
-                 else scored0
+        score(col(aVec), col(cVec)).as("score")))
     val wNeg = Window.partitionBy(col(aId))
       .orderBy(col("score").desc_nulls_last, col(cId).asc)
     val neg = scored.filter(col(aLabel) =!= col(cLabel))

@@ -33,16 +33,13 @@ object Terms {
         explode(split(lower(col(textCol)), SeparatorClass)).as("w"))
       .filter(col("w") =!= "")
 
-  /** (id, w, tf) postings with the opt-in narrow materialization every
-    * consumer shares — [[tokenRarity]], [[unigramSurprisal]] and
+  /** (id, w, tf) postings, [[Reuse.shared]]: every consumer reads them
+    * at least twice — [[tokenRarity]], [[unigramSurprisal]] and
     * [[termStats]] differ only in what they join/score on top. */
   private[pipeline] def postings(df: DataFrame, idCol: String,
-                                 textCol: String,
-                                 checkpointTf: Boolean): DataFrame = {
-    val tf0 = termRows(df, idCol, textCol)
-      .groupBy(col("id"), col("w")).agg(count(lit(1)).as("tf"))
-    if (checkpointTf) tf0.localCheckpoint() else tf0
-  }
+                                 textCol: String): DataFrame =
+    Reuse.shared(termRows(df, idCol, textCol)
+      .groupBy(col("id"), col("w")).agg(count(lit(1)).as("tf")))
 
   /** Term frequency per (doc, term) and document frequency per term,
     * joined: (id, w, tf, df). The doc-frequency table derives from the
@@ -54,18 +51,13 @@ object Terms {
     * sort-merge join on a 3-column row, not a blow-up.
     *
     * The tf lineage feeds both the output and the doc-frequency branch,
-    * which Catalyst plans as two corpus scans; `checkpointTf`
-    * materializes `tf` once ((id, term, tf) is far smaller than the raw
-    * corpus) so both consumers read the materialization — opt-in, per
-    * the library's no-hidden-caching convention (localCheckpoint =
-    * executor-local blocks; swap for `checkpoint()` + a reliable dir on
-    * a shared cluster, as in [[Dedup.ngramJaccard]]). Measured 1.4×
-    * faster warm at sf0.1 and 1.6× at a 10× corpus (tokenize dominates;
-    * ProfileScale, round 10) — the headline query opts in. */
+    * which Catalyst plans as two corpus scans; sharing `tf` ((id, term,
+    * tf) is far smaller than the raw corpus) lets both consumers read
+    * one materialization — measured 1.4× faster warm at sf0.1 and 1.6×
+    * at a 10× corpus (tokenize dominates; ProfileScale, round 10). */
   private[pipeline] def termStats(df: DataFrame, idCol: String,
-                                  textCol: String,
-                                  checkpointTf: Boolean = false): DataFrame = {
-    val tf = postings(df, idCol, textCol, checkpointTf)
+                                  textCol: String): DataFrame = {
+    val tf = postings(df, idCol, textCol)
     val docFreq = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
     tf.join(docFreq, "w")
   }
@@ -83,11 +75,11 @@ object Terms {
     * Output: (id, term, tf, df, rank).
     */
   def topTerms(df: DataFrame, idCol: String, textCol: String,
-               k: Int = 3, checkpointTf: Boolean = false): DataFrame = {
+               k: Int = 3): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val w = Window.partitionBy(col("id"))
       .orderBy(col("tf").desc, col("df").asc, col("w").asc)
-    termStats(df, idCol, textCol, checkpointTf)
+    termStats(df, idCol, textCol)
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("id"), col("w").as("term"), col("tf"), col("df"),
@@ -152,17 +144,16 @@ object Terms {
     * doc-local (id, w, tf) counts — map-side combined, one row per
     * posting; corpus counts fall out of a second vocabulary-sized
     * aggregate that AQE broadcasts back onto the postings. Per-doc
-    * totals then reduce postings, not occurrences. `checkpointTf`
-    * materializes the posting frame once for its two consumers (same
-    * opt-in convention as [[termStats]]).
+    * totals then reduce postings, not occurrences. The posting frame
+    * is shared by its two consumers ([[postings]]).
     *
     * Output: (id, n_toks, freq_sum, min_freq, mean_freq) with
     * `freq_sum = Σ_tokens corpusCount(token)` and
     * `mean_freq = freq_sum / n_toks`.
     */
-  def tokenRarity(df: DataFrame, idCol: String, textCol: String,
-                  checkpointTf: Boolean = false): DataFrame = {
-    val tf = postings(df, idCol, textCol, checkpointTf)
+  def tokenRarity(df: DataFrame, idCol: String, textCol: String)
+      : DataFrame = {
+    val tf = postings(df, idCol, textCol)
     val corpus = tf.groupBy(col("w")).agg(sum(col("tf")).as("c"))
     tf.join(corpus, "w")
       .groupBy(col("id"))
@@ -191,14 +182,14 @@ object Terms {
     *
     * Scale shape: identical to [[tokenRarity]] — postings aggregate
     * doc-locally first, the corpus-count table is vocabulary-sized and
-    * broadcasts back on. `checkpointTf` materializes the narrow posting
-    * frame once for its two consumers (same opt-in convention).
+    * broadcasts back on; the posting frame is shared by its two
+    * consumers.
     *
     * Output: (id, n_toks, sum_nats_micro, mean_nats_micro).
     */
-  def unigramSurprisal(df: DataFrame, idCol: String, textCol: String,
-                       checkpointTf: Boolean = false): DataFrame = {
-    val tf = postings(df, idCol, textCol, checkpointTf)
+  def unigramSurprisal(df: DataFrame, idCol: String, textCol: String)
+      : DataFrame = {
+    val tf = postings(df, idCol, textCol)
     val corpus = tf.groupBy(col("w")).agg(sum(col("tf")).as("c"))
     val total = corpus.agg(sum(col("c")).as("total"))
     val natsMicro = floor(-log(col("c").cast("double") /
@@ -250,8 +241,7 @@ object Terms {
     * Output: (id, n_bigrams, sum_nats_micro, mean_nats_micro).
     */
   def bigramSurprisal(df: DataFrame, idCol: String, textCol: String,
-                      lambda: Double = 0.9,
-                      checkpointGrams: Boolean = false): DataFrame = {
+                      lambda: Double = 0.9): DataFrame = {
     require(lambda > 0.0 && lambda < 1.0,
       s"lambda must be in (0, 1), got $lambda")
     val ws = filter(split(lower(col(textCol)), SeparatorClass),
@@ -264,25 +254,24 @@ object Terms {
     val idxs = when(size(col("ws")) >= 2, sequence(lit(0),
       size(col("ws")) - 2)).otherwise(array().cast("array<int>"))
     // hash at the explode site: only (id, 4 hashes) rows ever shuffle
-    val bg = base.select(col("id"), col("ws"), explode(idxs).as("pos"))
-      .select(col("id"), element_at(col("ws"), col("pos") + 1).as("v"),
-        element_at(col("ws"), col("pos") + 2).as("w"))
-      .select(col("id"), xxhash64(col("v")).as("hv"),
-        xxhash64(col("w")).as("hw"),
-        xxhash64(col("v"), col("w")).as("h1"),
-        xxhash64(lit("graft-bigram-2"), col("v"), col("w")).as("h2"))
+    val bgm = Reuse.shared(
+      base.select(col("id"), col("ws"), explode(idxs).as("pos"))
+        .select(col("id"),
+          element_at(col("ws"), col("pos") + 1).as("v"),
+          element_at(col("ws"), col("pos") + 2).as("w"))
+        .select(col("id"), xxhash64(col("v")).as("hv"),
+          xxhash64(col("w")).as("hw"),
+          xxhash64(col("v"), col("w")).as("h1"),
+          xxhash64(lit("graft-bigram-2"), col("v"), col("w")).as("h2")))
     // the narrow hashed gram rows feed BOTH the corpus count table and
-    // the scoring join — `checkpointGrams` materializes them once
-    // instead of re-running the tokenize+explode lineage per consumer
-    // (same opt-in convention as `checkpointTf` elsewhere in this
-    // file). Rounds 9-13 first compressed per-doc repeats through a
-    // corpus-sized (id, h1, h2, hv, hw) groupBy; typical documents
-    // rarely repeat a bigram, so that exchange shuffled the whole gram
-    // set for ~no compression — scoring the rows directly removes one
-    // full corpus exchange (the count tables still aggregate map-side;
-    // measured round 14: 2.10 → 1.38 s at sf0.1 in-suite, a wash
-    // within host noise at the 10× corpus, identical oracle hashes).
-    val bgm = if (checkpointGrams) bg.localCheckpoint() else bg
+    // the scoring join, hence shared. Rounds 9-13 first compressed
+    // per-doc repeats through a corpus-sized (id, h1, h2, hv, hw)
+    // groupBy; typical documents rarely repeat a bigram, so that
+    // exchange shuffled the whole gram set for ~no compression —
+    // scoring the rows directly removes one full corpus exchange (the
+    // count tables still aggregate map-side; measured round 14: 2.10 →
+    // 1.38 s at sf0.1 in-suite, a wash within host noise at the 10×
+    // corpus, identical oracle hashes).
     val c2 = bgm.groupBy(col("h1"), col("h2"))
       .agg(count(lit(1)).as("c2"))
     val p = lit(lambda) *
@@ -352,15 +341,12 @@ object Terms {
     // tokenizer for every term-level operator, per the file header)
     val toks = termRows(df, stratumCol, textCol)
       .select(col("id").as("stratum"), col("w"))
-    // localCheckpoint: the (stratum, term) count table feeds THREE
-    // consumers (c_w, n_s, the scoring join) — materialize the
-    // aggregate-compressed rows once as RDD blocks so the corpus
-    // tokenize lineage runs once, not three times (round 21: warm
-    // 1.4-1.7 s -> 0.87-0.99 s at sf0.1; the persist+collect spelling
-    // of the same idea measured SLOWER — columnar cache build +
-    // eager collect cost more than RDD block reuse)
-    val cs = toks.groupBy(col("stratum"), col("w"))
-      .agg(count(lit(1)).as("c_sw")).localCheckpoint()
+    // shared: the (stratum, term) count table feeds THREE consumers
+    // (c_w, n_s, the scoring join), so the corpus tokenize lineage runs
+    // once, not three times (round 21: warm 1.4-1.7 s -> 0.87-0.99 s
+    // at sf0.1)
+    val cs = Reuse.shared(toks.groupBy(col("stratum"), col("w"))
+      .agg(count(lit(1)).as("c_sw")))
     val cw = cs.groupBy(col("w")).agg(sum(col("c_sw")).as("c_w"))
     val ns = cs.groupBy(col("stratum")).agg(sum(col("c_sw")).as("n_s"))
     val total = cw.agg(sum(col("c_w")).as("n_tot"))
@@ -429,23 +415,15 @@ object Terms {
     * pmi desc then (v, w) asc.
     */
   def collocations(df: DataFrame, textCol: String,
-                   topN: Int = 20, minCount: Long = 5L,
-                   checkpointTokens: Boolean = true): DataFrame = {
+                   topN: Int = 20, minCount: Long = 5L): DataFrame = {
     require(topN >= 1, s"topN must be >= 1, got $topN")
     // no id column: bigram adjacency is row-local to each document's
     // token array, and the output is corpus-level pairs
     val ws = filter(split(lower(col(textCol)), SeparatorClass),
       w => w =!= "")
-    // localCheckpoint: the tokenized arrays feed FOUR lineages (c1,
-    // n_tok via c1, the bigram explode, n_bg) — materialize once
-    // (round 21; same 3+-consumer rule as minhashLsh/sourceDivergence).
-    // The blocks are corpus-sized (every token array) and executor-
-    // local with truncated lineage: `checkpointTokens = false` (round
-    // 22 opt-out; default keeps the measured win) restores recompute +
-    // call-time laziness for clusters where executor loss must not
-    // fail the job.
-    val base0 = df.select(ws.as("ws"))
-    val base = if (checkpointTokens) base0.localCheckpoint() else base0
+    // shared: the tokenized arrays feed FOUR lineages (c1, n_tok via
+    // c1, the bigram explode, n_bg)
+    val base = Reuse.shared(df.select(ws.as("ws")))
     val c1 = base.select(explode(col("ws")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c1"))
     val nTok = c1.agg(sum(col("c1")).as("n_tok"))

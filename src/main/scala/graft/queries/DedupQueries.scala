@@ -557,7 +557,7 @@ object DedupQueries {
       val cents = e.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cluster_id"), col("v").as("centroid"))
       Cluster.semanticDedup(inflated, "vec_id", "v", cents,
-          threshold = 0.95, checkpointAssigned = true)
+          threshold = 0.95)
         .select(col("vec_id"), col("cluster").cast("long").as("cluster"))
         .orderBy(col("vec_id"))
     }, oracle =

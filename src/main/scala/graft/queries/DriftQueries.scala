@@ -71,8 +71,7 @@ object DriftQueries {
     // cross-source 3-gram Jaccard overlap matrix (contamination audit)
     Query("source_overlap", (s, dir) => {
       val d = t(s, dir, "documents")
-      Curation.sourceOverlap(d, "source", "doc_id", "text", n = 3,
-          checkpointGrams = true)
+      Curation.sourceOverlap(d, "source", "doc_id", "text", n = 3)
         .orderBy(col("src_a"), col("src_b"))
     }, oracle =
       """WITH w AS (SELECT doc_id, source,

@@ -64,8 +64,7 @@ object SimilarityQueries {
       val corpus = e.filter(col("vec_id") >= 5)
         .select(col("vec_id").as("c_id"), qe(col("embedding")).as("c_vec"),
           col("label").as("c_label"))
-      graft.pipeline.Similarity.hardPairs(anchors, corpus, k = 3,
-          checkpointScored = true)
+      graft.pipeline.Similarity.hardPairs(anchors, corpus, k = 3)
         .select(col("a_id"), col("kind"), col("rank"), col("c_id"),
           col("score").cast("long").as("score"))
         .orderBy(col("a_id"), col("kind"), col("rank"))
@@ -249,7 +248,7 @@ object SimilarityQueries {
         (2, "customer order join merge"),
         (3, "hash table scan fast")).toDF("qid", "qtext")
       Retrieval.bm25TopK(t(s, dir, "documents"), "doc_id", "text",
-          probes, "qid", "qtext", k = 5, checkpointTf = true)
+          probes, "qid", "qtext", k = 5)
         .select(col("qid"), col("id").as("doc_id"), col("score_micro"),
           col("rank"))
         .orderBy(col("qid"), col("rank"))

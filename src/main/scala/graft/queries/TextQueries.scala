@@ -89,11 +89,7 @@ object TextQueries {
       val scored = Classifier.scoreHashed(t(s, dir, "documents"),
         "doc_id", "text", Classifier.scrambledWeightsMilli(1024),
         biasMilli = 250L)
-      // materialize the narrow (id, margin) frame once: the threshold
-      // and filter passes otherwise re-run md5-per-token scoring twice
-      // (2.3× warm at sf0.1, 2.7× at 10× — ProfileScale round 10)
-      Classifier.filterByMarginPercentile(scored, "margin_milli", 0.5,
-          checkpointScored = true)
+      Classifier.filterByMarginPercentile(scored, "margin_milli", 0.5)
         .select(col("doc_id"), col("margin_milli"))
         .orderBy(col("doc_id"))
     }, oracle =
@@ -245,7 +241,7 @@ object TextQueries {
     // their own tokens, exact integer arithmetic + one division
     Query("token_rarity", (s, dir) => {
       val d = t(s, dir, "documents")
-      Terms.tokenRarity(d, "doc_id", "text", checkpointTf = true)
+      Terms.tokenRarity(d, "doc_id", "text")
         .select(col("id").as("doc_id"), col("n_toks"), col("freq_sum"),
           col("min_freq"), col("mean_freq"))
         .orderBy(col("doc_id"))
@@ -569,8 +565,7 @@ object TextQueries {
     // unigram-LM surprisal scoring (CCNet-shaped perplexity filter):
     // per-token -ln p rounds to integer micros, docs sum longs
     Query("unigram_surprisal", (s, dir) => {
-      Terms.unigramSurprisal(t(s, dir, "documents"), "doc_id", "text",
-          checkpointTf = true)
+      Terms.unigramSurprisal(t(s, dir, "documents"), "doc_id", "text")
         .select(col("id").as("doc_id"), col("n_toks"),
           col("sum_nats_micro"), col("mean_nats_micro"))
         .orderBy(col("doc_id"))
@@ -598,8 +593,7 @@ object TextQueries {
     // filter conditioned on context): per-bigram -ln p in integer
     // micros, doc-level long sums; counts aggregate-compressed first
     Query("bigram_surprisal", (s, dir) => {
-      Terms.bigramSurprisal(t(s, dir, "documents"), "doc_id", "text",
-          checkpointGrams = true)
+      Terms.bigramSurprisal(t(s, dir, "documents"), "doc_id", "text")
         .select(col("id").as("doc_id"), col("n_bigrams"),
           col("sum_nats_micro"), col("mean_nats_micro"))
         .orderBy(col("doc_id"))
@@ -806,11 +800,7 @@ object TextQueries {
     // top-3 distinctive terms per doc, ranked (tf desc, df asc, term) —
     // the tf-idf idea with an integer-only, engine-exact comparator
     Query("top_terms", (s, dir) => {
-      // checkpointTf: tf feeds both the output and the doc-frequency
-      // branch — materializing it saves the second tokenize pass over
-      // the corpus (1.4× warm at sf0.1, 1.6× at 10× — ProfileScale r10)
-      Terms.topTerms(t(s, dir, "documents"), "doc_id", "text", k = 3,
-          checkpointTf = true)
+      Terms.topTerms(t(s, dir, "documents"), "doc_id", "text", k = 3)
         .select(col("id").as("doc_id"), col("term"), col("tf"), col("df"),
           col("rank"))
         .orderBy(col("doc_id"), col("rank"))

@@ -247,7 +247,7 @@ class ClusterSpec extends SparkSpec {
       (5L, Some(Seq(7L)), None))      // null label: neither kind
       .toDF("c_id", "c_vec", "c_label")
     val got = graft.pipeline.Similarity
-      .hardPairs(anchors, corpus, k = 1, checkpointScored = true)
+      .hardPairs(anchors, corpus, k = 1)
       .collect().map(r => (r.getString(1), r.getLong(3))).sorted.toSeq
     assert(got == Seq(("neg", 4L), ("pos", 2L)))
   }

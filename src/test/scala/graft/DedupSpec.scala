@@ -151,23 +151,6 @@ class DedupSpec extends SparkSpec {
     assert(pairs.forall { case (a, b, _) => Set(a, b).subsetOf(Set(1L, 2L, 3L)) })
   }
 
-  test("checkpointShingles opt-out returns identical pairs (minhash + " +
-    "ngram) and keeps the plan lazy") {
-    // round 22: the corpus-sized shingle localCheckpoints became
-    // caller-controllable — the opt-OUT path must be a pure recompute
-    // with byte-identical output
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("id_a", "id_b").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    assert(canon(Dedup.minhashLsh(docs, "id", "text", threshold = 0.5,
-        checkpointShingles = false)) ==
-      canon(Dedup.minhashLsh(docs, "id", "text", threshold = 0.5)))
-    assert(canon(Dedup.ngramJaccard(docs, "id", "text", n = 3,
-        threshold = 0.3, checkpointShingles = false)) ==
-      canon(Dedup.ngramJaccard(docs, "id", "text", n = 3,
-        threshold = 0.3)))
-  }
-
   test("pair-capped minhashComponents matches components over the " +
     "full pair set, at a fraction of the edges") {
     // 3 duplicate groups of different sizes (8, 5, 2 copies with small

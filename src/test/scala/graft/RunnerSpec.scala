@@ -686,6 +686,30 @@ class RunnerSpec extends SparkSpec {
       Seq("1\tapple\t0.50", "2\t\t12.25"))
   }
 
+  test("a guessed CSV dialect keeps the command's quote and escape") {
+    // no HAVING FIELDS and no `fields terminated by`: only the separator
+    // (and the doubling, when no escape is named) comes from the guess
+    val dir = Files.createTempDirectory("runner-guess").toFile
+    Files.writeString(new java.io.File(dir, "q.csv").toPath,
+      "1;\"a;b\"\n2;\"c;d\"\n")
+    Files.writeString(new java.io.File(dir, "e.csv").toPath,
+      "1;\"a\\\\\"\n2;\"c\"\n")
+    def load(file: String, withs: String): Seq[String] = {
+      RunnerSpec.received.clear()
+      val runner = new Runner((_, _) => (), RunnerSpec.endpoint)
+      val stats = runner.runFile(spark,
+        s"""LOAD CSV FROM '${dir.getAbsolutePath}/$file'
+            INTO postgresql:///t TARGET TABLE q
+            WITH $withs;""")
+      assert(stats.map(s => (s.rows, s.rejected)) == Seq((2L, 0L)))
+      RunnerSpec.received.asScala.toSeq.map(_._2).sorted
+    }
+    assert(load("q.csv", "fields not enclosed") ==
+      Seq("1\t\"a\tb\"", "2\t\"c\td\""))
+    assert(load("e.csv", "fields escaped by backslash-quote") ==
+      Seq("1\ta\\\\", "2\tc"))
+  }
+
   test("WITH copy binary and copy binary auto are accepted: the same " +
     "rows reach the text endpoints, with one note per table") {
     val dir = Files.createTempDirectory("runner-copybin").toFile

@@ -23,35 +23,6 @@ class TermsFunnelSpec extends SparkSpec {
     assert(got(3) == ((2L, "cherry", 2L, 2L, 2)))
   }
 
-  test("topTerms with checkpointTf matches the recompute path") {
-    import spark.implicits._
-    val docs = Seq(
-      (1L, "apple apple banana cherry"),
-      (2L, "banana banana cherry cherry date")
-    ).toDF("doc_id", "text")
-    def run(ckpt: Boolean) =
-      Terms.topTerms(docs, "doc_id", "text", k = 2, checkpointTf = ckpt)
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-          r.getLong(3), r.getInt(4))).sortBy(t => (t._1, t._5)).toSeq
-    assert(run(ckpt = true) == run(ckpt = false))
-  }
-
-  test("collocations checkpointTokens opt-out matches the recompute path") {
-    import spark.implicits._
-    val docs = Seq(
-      (1L, "san francisco fog rolls over san francisco bay every day"),
-      (2L, "san francisco housing and san francisco transit dominate"),
-      (3L, "new york and san francisco trade fog stories all day"),
-      (4L, "the bay fog and the day fog differ in san francisco")
-    ).toDF("doc_id", "text")
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2),
-        r.getLong(3), r.getInt(4))).toSeq
-    assert(canon(Terms.collocations(docs, "text", topN = 5, minCount = 2L,
-        checkpointTokens = false)) ==
-      canon(Terms.collocations(docs, "text", topN = 5, minCount = 2L)))
-  }
-
   test("topTerms tokenizes case-insensitively on non-alphanumerics") {
     import spark.implicits._
     val docs = Seq((1L, "Hello, HELLO! world")).toDF("doc_id", "text")
@@ -84,8 +55,8 @@ class TermsFunnelSpec extends SparkSpec {
         r.getLong(3), r.getDouble(4))).sortBy(_._1)
     assert(got(0) == ((1L, 3L, 6L, 2L, 2.0)))
     assert(got(1) == ((2L, 2L, 3L, 1L, 1.5)))
-    // checkpointed path identical
-    val ck = Terms.tokenRarity(df, "doc_id", "text", checkpointTf = true)
+    // a second call over the same frame returns the same sums
+    val ck = Terms.tokenRarity(df, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(2))).sorted
     assert(ck.toSeq == Seq((1L, 6L), (2L, 3L)))
   }
