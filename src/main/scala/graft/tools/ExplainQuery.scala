@@ -1,7 +1,9 @@
 package graft.tools
 
 /** Plan-audit helper: print the formatted physical plan of one or more
-  * [[graft.SparkEntry]] queries without executing them — the loop behind
+  * [[graft.SparkEntry]] queries without running their final action (a
+  * frame an operator shares through [[graft.pipeline.Reuse]] is still
+  * materialized while the query is built) — the loop behind
   * "iterate until it's the plan you'd want" (broadcasts where expected,
   * filters pushed to the scan, WindowGroupLimit below the exchange).
   *
