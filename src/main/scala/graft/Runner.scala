@@ -178,21 +178,27 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
         val spark = sparkF()
         // the tagged frame: parse rejects ride the COPY job's own scan
         // and are counted and filed by the sink
-        val df = PlanBuilder.buildTagged(spark, cmd, baseDir, inline)
+        val flow = PlanBuilder.dataflow(spark, cmd, baseDir, inline)
+        val df = flow.frame
         val table = targetName(cmd)
-        // DBF/IXF files carry their own schema, read once: `WITH create
-        // table` creates the target table from it (db3.lisp / ixf.lisp
-        // cast path; fixture dbf-31.load) and the COPY column list
-        // names the same columns
-        val fileCols = scala.util.Try(fileColumns(spark, cmd, baseDir))
-        if (cmd.boolOption("create table") || cmd.boolOption("create tables"))
-          fileCols.get.foreach { cols =>
-            val qt = graft.sinks.PgWire.quoteQualified(table)
-            if (cmd.boolOption("include drop"))
-              ddl(s"DROP TABLE IF EXISTS $qt;", gucSql)
-            ddl(s"CREATE TABLE IF NOT EXISTS $qt " +
-              s"(${fileSchemaDdl(cmd, cols).mkString(", ")});", gucSql)
-          }
+        // DBF/IXF files carry their own schema, resolved once by the
+        // dataflow: `WITH create table` creates the target table from it
+        // (db3.lisp / ixf.lisp cast path; fixture dbf-31.load) and the
+        // COPY column list names the same columns. Names case by the
+        // command's identifier mode (downcase default; quote preserves
+        // the descriptor spelling, like the reference; snake_case splits
+        // it), as load() cases the COPY column list.
+        if (flow.fileColumns.nonEmpty &&
+            (cmd.boolOption("create table") ||
+              cmd.boolOption("create tables"))) {
+          val qt = graft.sinks.PgWire.quoteQualified(table)
+          if (cmd.boolOption("include drop"))
+            ddl(s"DROP TABLE IF EXISTS $qt;", gucSql)
+          ddl(s"CREATE TABLE IF NOT EXISTS $qt (" +
+            flow.fileColumns.map(c => graft.sinks.PgWire.quoteIdent(
+              graft.catalog.Identifiers(c.raw, idModeOf(cmd))) +
+              s" ${c.pgType}").mkString(", ") + ");", gucSql)
+        }
         // `WITH truncate` empties the target before loading (the
         // reference truncates in its before-copy hook) — without it a
         // re-run silently doubles the table (live golden dbf-31)
@@ -218,7 +224,7 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
           nameColumns = cmd.fields.nonEmpty ||
             cmd.targetColumns.nonEmpty,
           fileNameCase = idModeOf(cmd),
-          rawFileNames = fileCols.toOption.flatten.map(_.map(_.raw))))
+          rawFileNames = flow.fileColumns.map(_.raw)))
         rebuildIndexesAsync(table, droppedIdx, gucSql,
           cmd.intOption("max parallel create index").getOrElse(0))
         stats
@@ -456,67 +462,6 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
             executeDdl(s"$idef;", gucSql)
         }
       })))
-    }
-  }
-
-  /** The columns of a schema-carrying file source (DBF/IXF), read once
-    * per command from the first file's header. None for formats whose
-    * names are user-written (CSV fields) or synthetic. */
-  private def fileColumns(spark: SparkSession, cmd: Ast.LoadCommand,
-                          baseDir: String)
-      : Option[Seq[Runner.FileColumn]] = {
-    def firstPath: String = {
-      val p = PlanBuilder
-        .resolvePath(spark, cmd.source.get, baseDir).split(',').head
-      // a zipped DBF source: the schema lives in the archive's .dbf
-      // member (tests/dbf/dbf-zip with `create table`); the member
-      // list is cached, so data read + DDL share ONE extraction
-      if (!p.toLowerCase.endsWith(".zip")) p
-      else graft.sources.Archive.dbfMembers(p).head
-    }
-    cmd.loadType match {
-      case "dbf" =>
-        // header only — 32 + 32·nFields + 1 bytes; never the whole file
-        // on the driver (a dbf can be gigabytes)
-        val in = new java.io.FileInputStream(firstPath)
-        val bytes =
-          try in.readNBytes(32 * 2049 + 1)
-          finally in.close()
-        Some(graft.sources.DbfSource.parseHeader(bytes).fields.map { f =>
-          // ctype = the PG-mapped type, the SAME spelling the data
-          // path feeds CastEngine (PlanBuilder's dbf branch) — a
-          // type-keyed user rule must fire for BOTH the DDL and the
-          // transform or they disagree
-          val t = graft.sources.DbfSource.pgType(f)
-          Runner.FileColumn(f.rawOrName, f.name, t, t)
-        })
-      case "ixf" =>
-        val in = new java.io.BufferedInputStream(
-          new java.io.FileInputStream(firstPath))
-        try Some(graft.sources.IxfSource.readColumns(in).map(c =>
-          Runner.FileColumn(c.rawOrName, c.name, c.typeCode.toString,
-            graft.sources.IxfSource.pgType(c))))
-        finally in.close()
-      case _ => None
-    }
-  }
-
-  /** Column DDL (name + PG type) from a file's own [[Runner.FileColumn]]s.
-    * Names case by the command's identifier mode (downcase default;
-    * quote preserves the descriptor spelling, like the reference;
-    * snake_case splits it) — the COPY column list in load() cases the
-    * same way, so DDL and COPY always agree. A USER cast rule with a
-    * target overrides the file-derived column type (dbf-memo.load:
-    * normdocid to uuid, doctype to integer). */
-  private def fileSchemaDdl(cmd: Ast.LoadCommand,
-                            cols: Seq[Runner.FileColumn]): Seq[String] = {
-    val tbl = cmd.targetTable.getOrElse("data")
-    cols.map { c =>
-      val userType = cmd.castRules.find(r => r.target.nonEmpty &&
-        r.source.matches(graft.casting.SourceColumn(tbl, c.name, c.ctype)))
-      s"${graft.sinks.PgWire.quoteIdent(
-        graft.catalog.Identifiers(c.raw, idModeOf(cmd)))} " +
-        userType.fold(c.pgType)(_.target.get.pgType)
     }
   }
 
@@ -791,8 +736,8 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
                    fileNameCase: graft.catalog.Identifiers.Case =
                      graft.catalog.Identifiers.Case.Downcase,
                    /** RAW descriptor spellings (DBF/IXF) — the casing
-                     * basis; None = case the frame's column names. */
-                   rawFileNames: Option[Seq[String]] = None): TableStats = {
+                     * basis; empty = case the frame's column names. */
+                   rawFileNames: Seq[String] = Nil): TableStats = {
     val t0 = System.nanoTime()
     // loads with REAL column names — an explicit field/column list, or
     // csv-header-derived names — send a COPY column list: the user's
@@ -808,12 +753,12 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
     val synthetic = cols.forall(_.matches("c(ol)?\\d+"))
     // nameColumns ⇔ the names were written by the user (or a csv
     // header): quoted as-written. File-schema names (DBF/IXF) case by
-    // the command's identifier mode, matching the DDL that created
-    // the table (fileSchemaDdl uses the same function).
+    // the command's identifier mode, matching the `create table` DDL
+    // of the file-load branch.
     val copyCols: Seq[String] =
       if (nameColumns) cols
       else if (synthetic) Nil
-      else rawFileNames.getOrElse(cols)
+      else (if (rawFileNames.nonEmpty) rawFileNames else cols)
         .map(graft.catalog.Identifiers(_, fileNameCase))
     val (sent, rejected, bytes) = writeTable(table, copyCols,
       driver = None, df = df, sessionSql,
@@ -905,13 +850,6 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
   * glue only.
   */
 object Runner {
-
-  /** One column of a self-describing file's own schema — a DBF field
-    * descriptor or an IXF column record: its raw spelling (what both
-    * the DDL and the COPY column list case), the name and type a user
-    * cast rule matches, and the PG type it maps to. */
-  private final case class FileColumn(raw: String, name: String,
-                                      ctype: String, pgType: String)
 
   /** Delete `path` and everything under it; a missing path is fine. */
   private def deleteTree(path: String): Unit = {

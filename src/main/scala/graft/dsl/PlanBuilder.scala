@@ -1,6 +1,6 @@
 package graft.dsl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import graft.dsl.Ast._
 import graft.operators.ProjectFields
 import graft.operators.ProjectFields.{FieldSpec, NullIf, TargetColumn, TrimMode}
@@ -61,8 +61,8 @@ object PlanBuilder {
 
   /** Expand an archive and run its ordered sub-commands against the
     * extracted files (archive.lisp; core.clj:328-399).
-    * @return (sub-command, [[buildTagged]] dataflow) per sub-command,
-    *   in order */
+    * @return (sub-command, [[dataflow]] frame) per sub-command, in
+    *   order */
   def buildArchive(spark: SparkSession, cmd: LoadCommand,
                    baseDir: String = "."): Seq[(LoadCommand, DataFrame)] = {
     require(cmd.loadType == "archive", "not an archive command")
@@ -72,25 +72,37 @@ object PlanBuilder {
     // lists (COPY column list with the user's exact case —
     // census-places' "LocationName") and its schema/table, not just a
     // bare table name
-    cmd.subCommands.map(sc => (sc, buildTagged(spark, sc, dir)))
+    cmd.subCommands.map(sc => (sc, dataflow(spark, sc, dir).frame))
   }
 
   /** Build the dataflow for a file-based load command: the good rows
-    * of [[buildTagged]]. `inlineData` is the payload following the
+    * of [[dataflow]]'s frame. `inlineData` is the payload following the
     * command text for `FROM inline` (Parser.parseWithInline). */
   def build(spark: SparkSession, cmd: LoadCommand,
             baseDir: String = ".",
             inlineData: Option[String] = None): DataFrame =
-    TaggedLines.clean(buildTagged(spark, cmd, baseDir, inlineData))
+    TaggedLines.clean(dataflow(spark, cmd, baseDir, inlineData).frame)
 
-  /** [[build]] before the clean filter: line formats (CSV, COPY,
-    * fixed-width) yield a [[TaggedLines]] frame whose raw-line column
-    * carries each line that failed to decode or parse, so the loader
-    * counts and files parse rejects during the load's own scan. DBF
-    * and IXF decode per field with charset fallback and carry no tag. */
-  def buildTagged(spark: SparkSession, cmd: LoadCommand,
-                  baseDir: String = ".",
-                  inlineData: Option[String] = None): DataFrame = {
+  /** A DBF or IXF column as one command loads it, worked out once: the
+    * descriptor's spelling as stored (what `WITH create table` and the
+    * COPY column list case) and the PG type the command's CAST rules
+    * give it. */
+  final case class FileColumn(raw: String, pgType: String)
+
+  /** A file command's dataflow: its frame before [[build]]'s clean
+    * filter, and the file's own columns for DBF and IXF (empty for the
+    * line formats, whose names the command writes). Line formats (CSV,
+    * COPY, fixed-width) yield a [[TaggedLines]] frame whose raw-line
+    * column carries each line that failed to decode or parse, so the
+    * loader counts and files parse rejects during the load's own scan.
+    * DBF and IXF decode per field with charset fallback and carry no
+    * tag. */
+  final case class Dataflow(frame: DataFrame, fileColumns: Seq[FileColumn])
+
+  /** The [[Dataflow]] of a file-based load command. */
+  def dataflow(spark: SparkSession, cmd: LoadCommand,
+               baseDir: String = ".",
+               inlineData: Option[String] = None): Dataflow = {
     val src = cmd.source.getOrElse(
       throw new IllegalArgumentException("command has no source"))
     val path = src match {
@@ -111,65 +123,56 @@ object PlanBuilder {
         f.toAbsolutePath.toString
       case other => resolvePath(spark, other, baseDir)
     }
-    val raw = cmd.loadType match {
-      case "csv" => readCsv(spark, cmd, path)
-      case "fixed" => readFixed(spark, cmd, path)
-      case "copy" => readCopy(spark, cmd, path)
-      case "dbf" =>
-        // a zipped DBF source expands first and loads the archive's
-        // .dbf member (v4 fetches http://…-dbf.zip sources this way —
-        // tests/dbf/dbf-zip; the sibling .dbt/.fpt memo lands next to
-        // it in the same temp dir, so memo resolution still works)
-        val dbfPath =
-          if (!path.toLowerCase.endsWith(".zip")) path
-          else graft.sources.Archive.dbfMembers(path).mkString(",")
-        // per-FILE encoding: DECODING rules may match only some of a
-        // glob's files
-        val raw = encodingGroups(cmd, dbfPath, "ISO-8859-1").map {
-          case (enc, ps) =>
-            graft.sources.DbfSource.read(spark, ps.mkString(","), enc)
-        }.reduce(_ unionAll _)
-        // the db3 DEFAULT cast transforms (trim char padding, numeric
-        // cleanup, YYYYMMDD→ISO dates, T/F→t/f booleans) apply to every
-        // dbf load, like the reference's db3-cast-rules defaults — raw
-        // field text would type-fail on a real target (live golden
-        // dbf-8b: logical blanks must become NULL)
-        // header only (32 + 32·nFields + 1 bytes) — never the whole
-        // file on the driver
-        val headerBytes = {
-          val in = new java.io.FileInputStream(dbfPath.split(',').head)
-          try in.readNBytes(32 * 2049 + 1) finally in.close()
-        }
-        val header = graft.sources.DbfSource.parseHeader(headerBytes)
-        val defaulted = header.fields.foldLeft(raw) { (d, f) =>
-          d.withColumn(f.name,
-            graft.sources.DbfSource.defaultTransform(f)(
-              org.apache.spark.sql.functions.col(s"`${f.name}`")))
-        }
-        // the command's USER cast rules layer on top of the defaults
-        // (dbf-memo.load: `column dnordoc.normdocid to uuid using
-        // (lambda …)` — the reference resolves user casts over the
-        // db3 defaults the same way, cast.clj resolve-specs)
-        val tbl = cmd.targetTable.getOrElse("data")
-        header.fields.foldLeft(defaulted) { (d, f) =>
-          // ctype = the PG-mapped type, like v4's field->col feeds
-          // matches-rule? (dbf.clj:41-46) — so `to integer` over a
-          // NUMERIC dbf field gets the implicit decimal-truncating
-          // using (cast.clj implicit-using; dbf-memo's doctype)
-          graft.casting.CastEngine.cast(
-              graft.casting.SourceColumn(tbl, f.name,
-                graft.sources.DbfSource.pgType(f)),
-              cmd.castRules, Nil).transform match {
-            case Some(fn) => d.withColumn(f.name,
-              fn(org.apache.spark.sql.functions.col(s"`${f.name}`")))
-            case None => d
-          }
-        }
-      case "ixf" => graft.sources.IxfSource.read(spark, path)
+    val (raw, fileColumns) = cmd.loadType match {
+      case "csv" => (readCsv(spark, cmd, path), Nil)
+      case "fixed" => (readFixed(spark, cmd, path), Nil)
+      case "copy" => (readCopy(spark, cmd, path), Nil)
+      case "dbf" | "ixf" => readSelfDescribing(spark, cmd, path)
       case t => throw new UnsupportedOperationException(
         s"load type '$t' is not a file dataflow")
     }
-    project(raw, cmd)
+    Dataflow(project(raw, cmd), fileColumns)
+  }
+
+  /** DBF and IXF: one [[graft.sources.ScanPlan]] over the files, and one
+    * cast per column. The cast's PG type feeds the DDL; its transform
+    * layers over the format's default (the db3 family for DBF: trim
+    * char padding, numeric cleanup, YYYYMMDD→ISO dates, T/F→t/f, like
+    * the reference's db3-cast-rules) in the frame. Rules match the
+    * PG-mapped type, as v4's field->col feeds matches-rule?
+    * (dbf.clj:41-46), so `to integer` over a NUMERIC dbf field gets the
+    * implicit decimal-truncating using (cast.clj implicit-using;
+    * dbf-memo's doctype). */
+  private def readSelfDescribing(spark: SparkSession, cmd: LoadCommand,
+                                 path: String)
+      : (DataFrame, Seq[FileColumn]) = {
+    import graft.sources.{Archive, DbfSource, IxfSource}
+    // (raw spelling, folded name, PG type, default transform) per column
+    val (described, files) = cmd.loadType match {
+      case "dbf" =>
+        // a zipped DBF source loads the archive's .dbf members (v4
+        // fetches http://…-dbf.zip sources this way — tests/dbf/dbf-zip;
+        // the sibling .dbt/.fpt memo lands next to them, so memo
+        // resolution still works)
+        val (fields, plan) = DbfSource.scan(spark,
+          if (!path.toLowerCase.endsWith(".zip")) path
+          else Archive.dbfMembers(path).mkString(","),
+          effectiveEncoding(cmd, _, "ISO-8859-1"))
+        (fields.map(f => (f.rawOrName, f.name, DbfSource.pgType(f),
+          DbfSource.defaultTransform(f))), plan.frame(spark))
+      case _ =>
+        val (cols, plan) = IxfSource.scan(spark, path)
+        (cols.map(c => (c.rawOrName, c.name, IxfSource.pgType(c),
+          identity[Column] _)), plan.frame(spark))
+    }
+    val tbl = cmd.targetTable.getOrElse("data")
+    val cast = described.map { case (raw, name, pgType, default) =>
+      val r = graft.casting.CastEngine.cast(
+        graft.casting.SourceColumn(tbl, name, pgType), cmd.castRules, Nil)
+      val v = default(org.apache.spark.sql.functions.col(s"`$name`"))
+      (FileColumn(raw, r.pgType), r.transform.fold(v)(_(v)).as(name))
+    }
+    (files.select(cast.map(_._2): _*), cast.map(_._1))
   }
 
   /** `DECODING TABLE NAMES MATCHING ~/re/ AS charset` (Parser:792;

@@ -10,22 +10,15 @@ import java.util.zip.{GZIPInputStream, ZipInputStream}
   * packaging convenience, the data inside them is what scales. */
 object Archive {
 
-  /** The `.dbf` members of a zip, expanded ONCE per (path, mtime) —
-    * `LOAD DBF FROM x.zip` needs the member list for the data read
-    * AND (under `create table`) for the header DDL; without the cache
-    * each caller would re-extract the whole archive. */
-  private val dbfCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), Seq[String]]
+  /** The `.dbf` members of a zip, expanded into a fresh temp directory
+    * (`LOAD DBF FROM x.zip`; a memo file lands next to its member). */
   def dbfMembers(zipPath: String): Seq[String] = {
-    val key = (zipPath, new File(zipPath).lastModified)
-    dbfCache.computeIfAbsent(key, _ => {
-      val dir = expand(zipPath)
-      val members = Option(dir.listFiles()).getOrElse(Array.empty[File])
-        .filter(_.getName.toLowerCase.endsWith(".dbf"))
-        .map(_.getAbsolutePath).sorted.toSeq
-      require(members.nonEmpty, s"no .dbf member inside $zipPath")
-      members
-    })
+    val members = Option(expand(zipPath).listFiles())
+      .getOrElse(Array.empty[File])
+      .filter(_.getName.toLowerCase.endsWith(".dbf"))
+      .map(_.getAbsolutePath).sorted.toSeq
+    require(members.nonEmpty, s"no .dbf member inside $zipPath")
+    members
   }
 
   /** Expand a .zip (or single-file .gz) into a fresh temp directory. */

@@ -1,9 +1,8 @@
 package graft.sources
 
 import java.nio.charset.Charset
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import graft.functions.Transforms
 
 /** dBase III (DBF) source — binary header + fixed-width text records with
@@ -13,12 +12,12 @@ import graft.functions.Transforms
   * size), 32-byte field descriptors terminated by 0x0D, records prefixed
   * by 0x20 (live) / 0x2A (deleted), 0x1A EOF.
   *
-  * Scale shape: each FILE's bytes are one `binaryFile` row; record
-  * slicing happens on executors, so a directory of DBF files reads in
-  * parallel (the reference is strictly sequential). A single file is
-  * bounded by the 2 GB byte-array limit — acceptable for a format whose
-  * own header caps record count at 2^32 and which in practice ships as
-  * many small files.
+  * Scale shape: each FILE is one split of a [[ScanPlan]], its bytes read
+  * and sliced into records where the split runs, so a directory of DBF
+  * files reads in parallel (the reference is strictly sequential). A
+  * single file is bounded by the 2 GB byte-array limit — acceptable for
+  * a format whose own header caps record count at 2^32 and which in
+  * practice ships as many small files.
   */
 object DbfSource {
 
@@ -175,82 +174,99 @@ object DbfSource {
       bc
     }
 
-  /** Distributed read: every matched file becomes one binaryFile row;
-    * records are sliced on executors. All columns StringType (fidelity
-    * mode — type conversion happens via the db3 transform family). Memo
-    * (M) columns resolve through the sibling .dbt file when present. */
-  def read(spark: SparkSession, path: String,
-           encoding: String = "ISO-8859-1"): DataFrame = {
-    val files = spark.read.format("binaryFile").load(path)
-      .select(col("path"), col("content"))
-    val first = files.limit(1).collect()
-    require(first.nonEmpty, s"no DBF files at $path")
-    val header = parseHeader(first(0).getAs[Array[Byte]]("content"))
-    val schema = StructType(header.fields.map(f =>
-      StructField(f.name, StringType, nullable = true)))
-    val enc = encoding
-    // ship the session's Hadoop conf to executors — the memo-file lookup
-    // must see the same FS settings (s3a credentials, custom schemes) the
-    // .dbf binaryFile scan used, not a default Configuration()
-    val hadoopConfBc = hadoopConfBroadcast(spark)
-    val rows = files.rdd.flatMap { r =>
-      val bytes = r.getAs[Array[Byte]]("content")
+  /** A whole file's bytes through its Hadoop FileSystem. Record and memo
+    * offsets are in-memory Ints, so a file over 2 GiB is refused loudly
+    * rather than overflowing one. */
+  private[sources] def fileBytes(fs: FileSystem, p: Path): Array[Byte] = {
+    val len = fs.getFileStatus(p).getLen
+    require(len <= Int.MaxValue,
+      s"$p is $len bytes; files over 2 GiB are not supported")
+    val buf = new Array[Byte](len.toInt)
+    val in = fs.open(p)
+    try in.readFully(0, buf) finally in.close()
+    buf
+  }
+
+  /** One .dbf file of a load and the charset its text decodes with (a
+    * DECODING rule may match only some of a glob's files). */
+  final case class DbfFile(path: String, encoding: String)
+
+  /** The read of every file `path` names (a comma list of files, globs
+    * or directories, [[SkipLines.enumerateFiles]]): one split per file,
+    * whose bytes are read and sliced into records where the split runs.
+    * The fields come from the first file's header bytes alone; every
+    * other file must carry as many. All columns are strings (fidelity
+    * mode: the db3 transforms and the cast engine type them downstream).
+    * Memo (M) columns resolve through the sibling .dbt/.fpt file. */
+  def scan(spark: SparkSession, path: String,
+           encoding: String => String = _ => "ISO-8859-1")
+      : (Seq[DbfField], ScanPlan[DbfFile]) = {
+    val files = SkipLines.enumerateFiles(spark, path)
+    require(files.nonEmpty, s"no DBF files at $path")
+    val first = new Path(files.head)
+    val in = first.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .open(first)
+    val fields =
+      try {
+        // 32 fixed bytes, then the descriptors up to the header size
+        val head = in.readNBytes(32)
+        require(head.length == 32, s"truncated DBF header in $first")
+        parseHeader(head ++ in.readNBytes(math.max(0, u16le(head, 8) - 32)))
+          .fields
+      } finally in.close()
+    val n = fields.length
+    // the session's Hadoop conf on executors: the .dbf and its memo file
+    // open with the same FS settings (s3a credentials, custom schemes)
+    val conf = hadoopConfBroadcast(spark)
+    val open: DbfFile => ScanPlan.Stream = { file =>
+      val dbfPath = new Path(file.path)
+      val fs = dbfPath.getFileSystem(conf.value.value)
+      val bytes = fileBytes(fs, dbfPath)
       val h = parseHeader(bytes) // every file reparses its own header
-      val cs = Charset.forName(enc)
+      require(h.fields.length == n,
+        s"$dbfPath has ${h.fields.length} fields; the first file has $n")
+      val cs = Charset.forName(file.encoding)
       val memoIdx = h.fields.zipWithIndex.collect {
         case (f, i) if f.ftype == 'M' => i
       }
+      // a missing sibling memo file degrades every memo value to NULL
+      // rather than failing the load — the reference's v4 fixture ships
+      // dbase_8b.dbf WITHOUT its .dbt and expects 10 rows with NULL
+      // memos (clojure tests/dbf/dbf-8b). Yielding the raw block
+      // NUMBERS would corrupt the load, so the pointers are dropped,
+      // never passed through.
       val dbt: Option[Array[Byte]] =
         if (memoIdx.isEmpty) None
         else {
-          // resolve the sibling memo file through the Hadoop FileSystem of
-          // the source path, so non-local filesystems (hdfs://, s3a://)
-          // work the same as file://
-          val dbfPath = new org.apache.hadoop.fs.Path(r.getString(0))
-          val fs = dbfPath.getFileSystem(hadoopConfBc.value.value)
           val base = dbfPath.getName.replaceAll("(?i)\\.dbf$", "")
-          val cand = Seq(".dbt", ".DBT", ".fpt", ".FPT").map(ext =>
-            new org.apache.hadoop.fs.Path(dbfPath.getParent, base + ext))
-          val found = cand.find(fs.exists).map { p =>
-            val lenL = fs.getFileStatus(p).getLen
-            // memo blocks are addressed by in-memory offset below; a
-            // >2 GiB memo file cannot be buffered — reject loudly rather
-            // than overflow the Int
-            require(lenL <= Int.MaxValue,
-              s"memo file $p is $lenL bytes; memo files over 2 GiB " +
-                "are not supported")
-            val len = lenL.toInt
-            val buf = new Array[Byte](len)
-            val in = fs.open(p)
-            try in.readFully(0, buf) finally in.close()
-            buf
-          }
-          // a missing sibling memo file degrades every memo value to
-          // NULL rather than failing the load — the reference's v4
-          // fixture ships dbase_8b.dbf WITHOUT its .dbt and expects 10
-          // rows with NULL memos (clojure tests/dbf/dbf-8b). Yielding
-          // the raw block NUMBERS would corrupt the load, so the
-          // pointers are dropped, never passed through.
-          found
+          Seq(".dbt", ".DBT", ".fpt", ".FPT")
+            .map(ext => new Path(dbfPath.getParent, base + ext))
+            .find(fs.exists).map(fileBytes(fs, _))
         }
-      parseRecords(bytes, h, cs).map { vs =>
+      val rows = parseRecords(bytes, h, cs).map { vs =>
         memoIdx.foreach { i =>
-          dbt match {
+          vs(i) = dbt match {
             case Some(mem) =>
               val blockStr = Option(vs(i)).map(_.trim).getOrElse("")
               // malformed block pointers reject the value, not the task
-              vs(i) =
-                if (blockStr.isEmpty) null
-                else blockStr.toIntOption
-                  .map(b => memoText(mem, b, cs)).orNull
-            case None => vs(i) = null // no memo file: see above
+              if (blockStr.isEmpty) null
+              else blockStr.toIntOption.map(b => memoText(mem, b, cs)).orNull
+            case None => null // no memo file: see above
           }
         }
-        Row.fromSeq(vs.toSeq)
+        ScanPlan.utf8(vs)
       }
+      ScanPlan.Stream(rows, () => ())
     }
-    spark.createDataFrame(rows, schema)
+    (fields, ScanPlan(fields.map(_.name),
+      files.map(f => DbfFile(f, encoding(f))), open))
   }
+
+  /** The [[scan]]'s distributed read of files in one `encoding`, as a
+    * frame. */
+  def read(spark: SparkSession, path: String,
+           encoding: String = "ISO-8859-1"): DataFrame =
+    scan(spark, path, _ => encoding)._2.frame(spark)
 
   /** Per-type default transform, as the reference's DBF cast rules attach
     * (db3 family, transforms.lisp:588-618): C → right-trim, N → numeric

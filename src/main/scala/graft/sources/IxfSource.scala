@@ -1,9 +1,8 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** IBM PC/IXF source (DB2 export format) — the reference loads it through
   * the external qitab/ixf Lisp library (src/sources/ixf/; its own v4
@@ -19,8 +18,8 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * the row's data area). Nullable columns are preceded at POSN by a
   * 2-byte indicator (0xFFFF = NULL).
   *
-  * Scale shape: like [[DbfSource]], each FILE is one `binaryFile` row and
-  * records are sliced on executors, so a directory of IXF files reads in
+  * Scale shape: like [[DbfSource]], each FILE is one [[ScanPlan]] split,
+  * parsed where the split runs, so a directory of IXF files reads in
   * parallel. Values land as STRINGS in the reference's text fidelity
   * mode (PG literal shapes: ints as decimal text, `yyyy-mm-dd` dates,
   * `HH:MM:SS` times, `yyyy-mm-dd HH:MM:SS[.ffffff]` timestamps).
@@ -232,33 +231,35 @@ object IxfSource {
     case _ => "text"
   }
 
-  /** Distributed read, one binaryFile row per .ixf file (see DbfSource
-    * for the shape rationale). All columns StringType fidelity mode.
-    * The schema comes from a STREAMING header read of the first file
-    * (smallest path, for determinism) — C records precede all row data,
-    * so an arbitrarily large file never reaches the driver. Every file
-    * in a directory must share the first file's schema. */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val files = spark.read.format("binaryFile").load(path)
-      .select(col("path"), col("content"))
-    val firstPath = files.select(col("path")).orderBy(col("path"))
-      .limit(1).collect()
-    require(firstPath.nonEmpty, s"no IXF files at $path")
-    val hp = new org.apache.hadoop.fs.Path(firstPath(0).getString(0))
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(hp)
+  /** The read of every file `path` names (see [[DbfSource.scan]]): one
+    * split per .ixf file, parsed where it runs. The columns come from a
+    * STREAMING header read of the first file — C records precede all
+    * row data, so the read stops at the first D record and no row
+    * reaches the driver. Every other file must carry as many columns.
+    * All columns are strings (fidelity mode). */
+  def scan(spark: SparkSession, path: String)
+      : (Seq[IxfColumn], ScanPlan[String]) = {
+    val files = SkipLines.enumerateFiles(spark, path)
+    require(files.nonEmpty, s"no IXF files at $path")
+    val first = new Path(files.head)
+    val in = first.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .open(first)
     val columns = try readColumns(in) finally in.close()
-    require(columns.nonEmpty, s"no C records in ${hp}")
-    val schema = StructType(columns.map(c =>
-      StructField(c.name, StringType, nullable = true)))
-    val nCols = columns.length
-    val rows = files.rdd.flatMap { r =>
-      val parsed = parse(r.getAs[Array[Byte]]("content"))
-      require(parsed.columns.length == nCols,
-        s"${r.getString(0)} has ${parsed.columns.length} columns; " +
-          s"the directory's schema has $nCols")
-      parsed.rows.map(vs => Row.fromSeq(vs.toSeq))
+    require(columns.nonEmpty, s"no C records in $first")
+    val n = columns.length
+    val conf = DbfSource.hadoopConfBroadcast(spark)
+    val open: String => ScanPlan.Stream = { file =>
+      val p = new Path(file)
+      val parsed =
+        parse(DbfSource.fileBytes(p.getFileSystem(conf.value.value), p))
+      require(parsed.columns.length == n,
+        s"$file has ${parsed.columns.length} columns; the first file has $n")
+      ScanPlan.Stream(parsed.rows.iterator.map(ScanPlan.utf8), () => ())
     }
-    spark.createDataFrame(rows, schema)
+    (columns, ScanPlan(columns.map(_.name), files, open))
   }
+
+  /** The [[scan]]'s distributed read, as a frame. */
+  def read(spark: SparkSession, path: String): DataFrame =
+    scan(spark, path)._2.frame(spark)
 }

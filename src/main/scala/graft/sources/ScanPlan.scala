@@ -7,12 +7,14 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-/** How one database table is read, decided once by its source's `scan`
-  * (the ctid or leaf ranges of [[PgWireSource]], the key ranges of
-  * [[MySqlWireSource]] and [[MssqlWireSource]], the B-tree subtrees of
-  * [[SqliteSource]]). Each split is opened by `open` into a stream of
-  * catalyst-form rows: one `UTF8String` or null per column (fidelity
-  * mode: the cast engine types the values downstream).
+/** How one database table or set of self-describing files is read,
+  * decided once by its source's `scan` (the ctid or leaf ranges of
+  * [[PgWireSource]], the key ranges of [[MySqlWireSource]] and
+  * [[MssqlWireSource]], the B-tree subtrees of [[SqliteSource]], one
+  * file each for [[DbfSource]] and [[IxfSource]]). Each split is opened
+  * by `open` into a stream of catalyst-form rows: one `UTF8String` or
+  * null per column (fidelity mode: the cast engine types the values
+  * downstream).
   *
   * A plan is read one of two ways, with the same columns, splits,
   * opener and split numbering: on driver threads, one stream per split

@@ -1,14 +1,30 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import graft.sources.DbfSource
 import graft.sources.DbfSource.DbfField
 
 /** DBF reader: header parse validated against the reference's real dBase
   * fixture (test/data/dbase_8b.dbf, whose layout is documented in
   * dbase_8b_summary.txt), plus a write/read round-trip with deleted-row
-  * skip. */
+  * skip and multi-file loads through the Runner. */
 class DbfSpec extends SparkSpec {
+
+  private val fields = Seq(
+    DbfField("prodid", 'N', 5, 0),
+    DbfField("label", 'C', 10, 0))
+
+  /** Runs `load` through a Runner whose endpoints record the rows. */
+  private def loadRows(load: String): Seq[String] = {
+    RunnerSpec.received.clear()
+    val runner = new Runner((_, _) => (), RunnerSpec.endpoint)
+    val stats = runner.runFile(spark, load)
+    val rows = RunnerSpec.received.asScala.toSeq.map(_._2).sorted
+    assert(stats.map(s => (s.rows, s.rejected)) ==
+      Seq((rows.size.toLong, 0L)))
+    rows
+  }
 
   test("header of the reference's dbase_8b.dbf matches its summary") {
     val bytes = Files.readAllBytes(java.nio.file.Paths.get(
@@ -88,5 +104,38 @@ class DbfSpec extends SparkSpec {
     val b2 = DbfSource.hadoopConfBroadcast(spark)
     assert(b1 eq b2, "each read must reuse the session's one broadcast")
     assert(b1.id == b2.id)
+  }
+
+  test("LOAD DBF over a glob of two files loads both files' rows") {
+    val dir = Files.createTempDirectory("dbf-glob").toFile
+    DbfSource.write(new java.io.File(dir, "a.dbf"), fields,
+      Seq(Seq("1", "apple"), Seq("2", "pear")))
+    DbfSource.write(new java.io.File(dir, "b.dbf"), fields,
+      Seq(Seq("3", "plum")))
+    assert(loadRows(
+      s"""LOAD DBF FROM ALL FILENAMES MATCHING ~/[.]dbf$$/
+            IN DIRECTORY '${dir.getAbsolutePath}'
+          INTO postgresql:///t TARGET TABLE fruit;""") ==
+      Seq("1\tapple", "2\tpear", "3\tplum"))
+  }
+
+  test("LOAD DBF from a zip with two .dbf members loads both") {
+    val dir = Files.createTempDirectory("dbf-zip").toFile
+    val zip = new java.io.File(dir, "fruit.zip")
+    val out = new java.util.zip.ZipOutputStream(
+      new java.io.FileOutputStream(zip))
+    try Seq("a.dbf" -> Seq(Seq("1", "apple")),
+            "b.dbf" -> Seq(Seq("2", "pear"), Seq("3", "plum"))).foreach {
+      case (name, rows) =>
+        val f = new java.io.File(dir, name)
+        DbfSource.write(f, fields, rows)
+        out.putNextEntry(new java.util.zip.ZipEntry(name))
+        out.write(Files.readAllBytes(f.toPath))
+        out.closeEntry()
+    } finally out.close()
+    assert(loadRows(
+      s"""LOAD DBF FROM '${zip.getAbsolutePath}'
+          INTO postgresql:///t TARGET TABLE fruit;""") ==
+      Seq("1\tapple", "2\tpear", "3\tplum"))
   }
 }

@@ -6,11 +6,50 @@ import graft.sources.IxfSource.IxfColumn
 object IxfSpec {
   /** shared with local-mode executor tasks (closures are serialized) */
   val rows = new java.util.concurrent.ConcurrentLinkedQueue[String]
+
+  /** A minimal PC/IXF file: H and T records, one C record each for a
+    * non-null INTEGER `ID` and a nullable VARCHAR(16) `NAME`, and one D
+    * record per row (a None name is NULL). Records are `LLLLLL` (the
+    * length of what follows) + type char + content; a C record's content
+    * is name length (3), name (256), null flag, 5 reserved, type code
+    * (3), code pages (10), length (5), D-record id (3), POSN (6). */
+  def write(file: java.io.File, rows: Seq[(Int, Option[String])]): Unit = {
+    val out = new java.io.ByteArrayOutputStream
+    def ascii(s: String): Array[Byte] = s.getBytes("US-ASCII")
+    def record(typ: Char, content: Array[Byte]): Unit = {
+      out.write(ascii(f"${content.length + 1}%06d$typ"))
+      out.write(content)
+    }
+    def column(name: String, nullable: Boolean, typeCode: Int,
+               length: Int, posn: Int): Unit =
+      record('C', ascii(f"${name.length}%03d" + name.padTo(256, ' ') +
+        (if (nullable) "Y" else "N") + " " * 5 + f"$typeCode%03d" +
+        " " * 10 + f"$length%05d" + "001" + f"$posn%06d"))
+    record('H', ascii("IXF0002"))
+    record('T', ascii("IXF"))
+    column("ID", nullable = false, 496, 4, posn = 1)
+    column("NAME", nullable = true, 448, 16, posn = 5)
+    rows.foreach { case (id, name) =>
+      val area = java.nio.ByteBuffer.allocate(4 + 2 + 2 + 16)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      area.putInt(id)
+      name match {
+        case None => area.putShort(-1.toShort) // 0xFFFF: NULL
+        case Some(v) =>
+          val b = v.getBytes("ISO-8859-1")
+          area.putShort(0.toShort).putShort(b.length.toShort).put(b)
+      }
+      // DRID 001 + 4 reserved, then the data area
+      record('D', ascii("001    ") ++ area.array.take(area.position()))
+    }
+    java.nio.file.Files.write(file.toPath, out.toByteArray)
+  }
 }
 
 /** PC/IXF reader against the reference's OWN fixtures
   * (test/data/nsitra.test*.ixf) and its regress golden
-  * (test/regress/expected/ixf.out). */
+  * (test/regress/expected/ixf.out), and against files written by
+  * [[IxfSpec.write]]. */
 class IxfSpec extends SparkSpec {
 
   private def fixture(n: Int): Array[Byte] =
@@ -105,5 +144,69 @@ class IxfSpec extends SparkSpec {
     val df = graft.dsl.PlanBuilder.build(spark, cmd)
     assert(df.columns.head == "test1_id")
     assert(df.count() == 4)
+  }
+
+  private def tempIxf(dir: java.io.File, name: String,
+                      rows: Seq[(Int, Option[String])]): java.io.File = {
+    val f = new java.io.File(dir, name)
+    IxfSpec.write(f, rows)
+    f
+  }
+
+  test("a written PC/IXF file round-trips through parse") {
+    val dir = java.nio.file.Files.createTempDirectory("ixf-write").toFile
+    val f = tempIxf(dir, "t.ixf",
+      Seq((1, Some("alpha")), (-7, None), (3, Some(""))))
+    val parsed = IxfSource.parse(
+      java.nio.file.Files.readAllBytes(f.toPath))
+    assert(parsed.columns.map(c =>
+      (c.name, c.rawName, c.nullable, c.typeCode, c.drid, c.posn)) ==
+      Seq(("id", "ID", false, 496, 1, 1), ("name", "NAME", true, 448, 1, 5)))
+    assert(parsed.rows.map(_.toSeq) ==
+      Seq(Seq("1", "alpha"), Seq("-7", null), Seq("3", "")))
+    val in = new java.io.FileInputStream(f)
+    try assert(IxfSource.readColumns(in) == parsed.columns)
+    finally in.close()
+  }
+
+  /** Runs `load`; returns its DDL and the rows its endpoints got. */
+  private def runLoad(load: String): (Seq[String], Seq[String]) = {
+    import scala.jdk.CollectionConverters._
+    val ddl = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    RunnerSpec.received.clear()
+    val runner = new Runner((sql, _) => ddl.add(sql), RunnerSpec.endpoint)
+    val stats = runner.runFile(spark, load)
+    val rows = RunnerSpec.received.asScala.toSeq.map(_._2).sorted
+    assert(stats.map(s => (s.rows, s.rejected)) ==
+      Seq((rows.size.toLong, 0L)))
+    (ddl.asScala.toSeq, rows)
+  }
+
+  test("LOAD IXF over a glob of two files loads both through the Runner") {
+    val dir = java.nio.file.Files.createTempDirectory("ixf-glob").toFile
+    tempIxf(dir, "a.ixf", Seq((1, Some("alpha")), (2, None)))
+    tempIxf(dir, "b.ixf", Seq((3, Some("gamma"))))
+    val (ddl, rows) = runLoad(
+      s"""LOAD IXF FROM ALL FILENAMES MATCHING ~/[.]ixf$$/
+            IN DIRECTORY '${dir.getAbsolutePath}'
+          INTO postgresql:///t TARGET TABLE things
+          WITH create table;""")
+    assert(ddl == Seq("CREATE TABLE IF NOT EXISTS \"things\" " +
+      "(\"id\" integer, \"name\" varchar(16));"))
+    assert(rows == Seq("1\talpha", "2\t\\N", "3\tgamma"))
+  }
+
+  test("an IXF CAST column … using transforms the values it retypes") {
+    val dir = java.nio.file.Files.createTempDirectory("ixf-cast").toFile
+    val f = tempIxf(dir, "t.ixf",
+      Seq((1, Some("ff")), (2, Some("0x10")), (3, None)))
+    val (ddl, rows) = runLoad(
+      s"""LOAD IXF FROM '${f.getAbsolutePath}'
+          INTO postgresql:///t TARGET TABLE things
+          WITH create table
+          CAST column things.name to bigint using hex-to-dec;""")
+    assert(ddl == Seq("CREATE TABLE IF NOT EXISTS \"things\" " +
+      "(\"id\" integer, \"name\" bigint);"))
+    assert(rows == Seq("1\t255", "2\t16", "3\t\\N"))
   }
 }

@@ -11,6 +11,17 @@ object LivePg {
   private def env(k: String): Option[String] =
     sys.env.get(k).filter(_.nonEmpty)
 
+  /** `pg_ctl <action>` on the cluster `tools/live_pg.sh` runs, as its
+    * server user (pg_ctl refuses root); the exit code. */
+  private def pgCtl(action: String): Int =
+    new ProcessBuilder("su", "pguser", "-c",
+        s"cd /tmp && pg_ctl -D /tmp/pgdata $action")
+      .redirectErrorStream(true)
+      .redirectOutput(ProcessBuilder.Redirect.DISCARD)
+      .start().waitFor()
+
+  /** A server this suite starts is stopped when the test JVM exits; one
+    * that was already up stays up. */
   private lazy val autoStarted: Map[String, String] = {
     val script = new java.io.File("tools/live_pg.sh")
     val havePg = new ProcessBuilder("sh", "-c", "command -v postgres")
@@ -18,6 +29,7 @@ object LivePg {
     if (!script.isFile || !havePg) Map.empty
     else
       try {
+        if (pgCtl("status") != 0) sys.addShutdownHook(pgCtl("stop"))
         val p = new ProcessBuilder("sh", script.getPath)
           .redirectErrorStream(true).start()
         val out = new String(p.getInputStream.readAllBytes, "UTF-8")

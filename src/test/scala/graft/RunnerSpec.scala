@@ -437,6 +437,48 @@ class RunnerSpec extends SparkSpec {
       Seq("invalid input syntax", graft.sinks.CopySink.RawRejectMessage))
   }
 
+  test("a DBF load and an IXF load each run one Spark job") {
+    import graft.sources.DbfSource
+    val dir = Files.createTempDirectory("runner-onejob-files").toFile
+    DbfSource.write(new java.io.File(dir, "p.dbf"),
+      Seq(DbfSource.DbfField("id", 'N', 5, 0),
+        DbfSource.DbfField("label", 'C', 10, 0)),
+      Seq(Seq("1", "apple"), Seq("2", "pear")))
+    IxfSpec.write(new java.io.File(dir, "t.ixf"),
+      Seq((1, Some("alpha")), (2, None)))
+    val sc = spark.sparkContext
+    val group = "runner-onejob-files"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    // jobs and rows of one load, its DDL included (`create table`
+    // resolves the columns from the same header read)
+    def run(kind: String, file: String): (Int, Seq[Long]) = {
+      jobs.set(0)
+      val runner = new Runner((_, _) => (), RunnerSpec.endpoint)
+      sc.addSparkListener(listener)
+      sc.setJobGroup(group, s"one scan per $kind load")
+      val stats =
+        try runner.runFile(spark,
+          s"""LOAD $kind FROM '${dir.getAbsolutePath}/$file'
+              INTO postgresql:///t TARGET TABLE t
+              WITH create table;""")
+        finally {
+          sc.clearJobGroup()
+          org.apache.spark.graft.BusDrain(sc)
+          sc.removeSparkListener(listener)
+        }
+      (jobs.get, stats.map(_.rows))
+    }
+    assert(run("DBF", "p.dbf") == (1, Seq(2L)))
+    assert(run("IXF", "t.ixf") == (1, Seq(2L)))
+  }
+
   test("COPY loads count undecodable rows as rejects, not silent drops") {
     val dir = Files.createTempDirectory("runner-copyrej").toFile
     val f = new java.io.File(dir, "cp.dat")
