@@ -160,74 +160,74 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
       cmd.afterSchema.foreach(ddl(_, gucSql))
     val results = cmd.loadType match {
       case "archive" =>
-        // file loads build their plan through Spark up front — force
-        // the session here (the overlap window is the database path's)
-        PlanBuilder.buildArchive(sparkF(), cmd, baseDir).map {
-          case (sc, df) =>
-            val table = targetName(sc)
-            // the SUB-command's own lists decide the COPY column list
-            // (census-places: quoted "LocationName" must reach the
-            // server as written), and its own WITH clause the sink
-            // options — the outer archive command parses none
-            stopOnMalformed(df, sc)
-            load(table, df, copySessionSql, sc,
-              nameColumns = sc.fields.nonEmpty || sc.targetColumns.nonEmpty)
-        }
+        // the archive expands once; each sub-command then runs as a
+        // command of its own against the extracted files — its SETs,
+        // DDL options and hooks included — and the directory goes after
+        // the last one (archive.lisp; core.clj:328-399)
+        val dir = graft.sources.Archive.expand(
+          PlanBuilder.resolvePath(sparkF(), cmd.source.get, baseDir))
+        try cmd.subCommands.flatMap(
+          runCommandWith(sparkF, _, dir.getAbsolutePath))
+        finally Runner.deleteTree(dir.getAbsolutePath)
       case "database" => runDatabase(sparkF, cmd)
       case _ =>
         val spark = sparkF()
         // the tagged frame: parse rejects ride the COPY job's own scan
         // and are counted and filed by the sink
         val flow = PlanBuilder.dataflow(spark, cmd, baseDir, inline)
-        val df = flow.frame
-        val table = targetName(cmd)
-        // DBF/IXF files carry their own schema, resolved once by the
-        // dataflow: `WITH create table` creates the target table from it
-        // (db3.lisp / ixf.lisp cast path; fixture dbf-31.load) and the
-        // COPY column list names the same columns. Names case by the
-        // command's identifier mode (downcase default; quote preserves
-        // the descriptor spelling, like the reference; snake_case splits
-        // it), as load() cases the COPY column list.
-        if (flow.fileColumns.nonEmpty &&
-            (cmd.boolOption("create table") ||
-              cmd.boolOption("create tables"))) {
-          val qt = graft.sinks.PgWire.quoteQualified(table)
-          if (cmd.boolOption("include drop"))
-            ddl(s"DROP TABLE IF EXISTS $qt;", gucSql)
-          ddl(s"CREATE TABLE IF NOT EXISTS $qt (" +
-            flow.fileColumns.map(c => graft.sinks.PgWire.quoteIdent(
-              graft.catalog.Identifiers(c.raw, idModeOf(cmd))) +
-              s" ${c.pgType}").mkString(", ") + ");", gucSql)
-        }
-        // `WITH truncate` empties the target before loading (the
-        // reference truncates in its before-copy hook) — without it a
-        // re-run silently doubles the table (live golden dbf-31)
-        if (cmd.boolOption("truncate") &&
-            !cmd.boolOption("no truncate"))
-          ddl("TRUNCATE " +
-            s"${graft.sinks.PgWire.quoteQualified(table)};", gucSql)
-        stopOnMalformed(df, cmd)
-        // `WITH drop indexes` (csv.lisp option; copy-format drops the
-        // target's indexes before COPY and recreates them after — index
-        // maintenance during bulk load costs more than one rebuild):
-        // constraint-backed indexes drop via their constraint, plain
-        // ones via DROP INDEX; the rebuild is submitted ASYNC so it
-        // overlaps the NEXT command's data load (the reference's
-        // create-indexes-again runs in its parallel index pool), and
-        // drains before any later DDL or at end of run
-        val droppedIdx =
-          if (cmd.boolOption("drop indexes") &&
-              !cmd.boolOption("drop no indexes"))
-            dropTargetIndexes(table, gucSql)
-          else Nil
-        val stats = Seq(load(table, df, copySessionSql, cmd,
-          nameColumns = cmd.fields.nonEmpty ||
-            cmd.targetColumns.nonEmpty,
-          fileNameCase = idModeOf(cmd),
-          rawFileNames = flow.fileColumns.map(_.raw)))
-        rebuildIndexesAsync(table, droppedIdx, gucSql,
-          cmd.intOption("max parallel create index").getOrElse(0))
-        stats
+        // a zipped DBF source's extracted members go once the load has
+        // read them
+        try {
+          val df = flow.frame
+          val table = targetName(cmd)
+          // DBF/IXF files carry their own schema, resolved once by the
+          // dataflow: `WITH create table` creates the target table from it
+          // (db3.lisp / ixf.lisp cast path; fixture dbf-31.load) and the
+          // COPY column list names the same columns. Names case by the
+          // command's identifier mode (downcase default; quote preserves
+          // the descriptor spelling, like the reference; snake_case splits
+          // it), as load() cases the COPY column list.
+          if (flow.fileColumns.nonEmpty &&
+              (cmd.boolOption("create table") ||
+                cmd.boolOption("create tables"))) {
+            val qt = graft.sinks.PgWire.quoteQualified(table)
+            if (cmd.boolOption("include drop"))
+              ddl(s"DROP TABLE IF EXISTS $qt;", gucSql)
+            ddl(s"CREATE TABLE IF NOT EXISTS $qt (" +
+              flow.fileColumns.map(c => graft.sinks.PgWire.quoteIdent(
+                graft.catalog.Identifiers(c.raw, idModeOf(cmd))) +
+                s" ${c.pgType}").mkString(", ") + ");", gucSql)
+          }
+          // `WITH truncate` empties the target before loading (the
+          // reference truncates in its before-copy hook) — without it a
+          // re-run silently doubles the table (live golden dbf-31)
+          if (cmd.boolOption("truncate") &&
+              !cmd.boolOption("no truncate"))
+            ddl("TRUNCATE " +
+              s"${graft.sinks.PgWire.quoteQualified(table)};", gucSql)
+          stopOnMalformed(df, cmd)
+          // `WITH drop indexes` (csv.lisp option; copy-format drops the
+          // target's indexes before COPY and recreates them after — index
+          // maintenance during bulk load costs more than one rebuild):
+          // constraint-backed indexes drop via their constraint, plain
+          // ones via DROP INDEX; the rebuild is submitted ASYNC so it
+          // overlaps the NEXT command's data load (the reference's
+          // create-indexes-again runs in its parallel index pool), and
+          // drains before any later DDL or at end of run
+          val droppedIdx =
+            if (cmd.boolOption("drop indexes") &&
+                !cmd.boolOption("drop no indexes"))
+              dropTargetIndexes(table, gucSql)
+            else Nil
+          val stats = Seq(load(table, df, copySessionSql, cmd,
+            nameColumns = cmd.fields.nonEmpty ||
+              cmd.targetColumns.nonEmpty,
+            fileNameCase = idModeOf(cmd),
+            rawFileNames = flow.fileColumns.map(_.raw)))
+          rebuildIndexesAsync(table, droppedIdx, gucSql,
+            cmd.intOption("max parallel create index").getOrElse(0))
+          stats
+        } finally flow.extracted.foreach(d => Runner.deleteTree(d.getPath))
     }
     if (!dryRun) {
       timedDdl("post", "after load", cmd.afterLoad, gucSql)
@@ -726,18 +726,16 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
   private def load(table: String, df: org.apache.spark.sql.DataFrame,
                    sessionSql: Seq[String],
                    /** the command whose WITH clause sets the sink
-                     * options (an archive's sub-command, not the
-                     * archive itself) */
+                     * options */
                    cmd: Ast.LoadCommand,
-                   nameColumns: Boolean = false,
+                   nameColumns: Boolean,
                    /** casing for FILE-DERIVED column names (DBF/IXF
                      * descriptors) — user-written names stay as
                      * written; Downcase = the historical fold. */
-                   fileNameCase: graft.catalog.Identifiers.Case =
-                     graft.catalog.Identifiers.Case.Downcase,
+                   fileNameCase: graft.catalog.Identifiers.Case,
                    /** RAW descriptor spellings (DBF/IXF) — the casing
                      * basis; empty = case the frame's column names. */
-                   rawFileNames: Seq[String] = Nil): TableStats = {
+                   rawFileNames: Seq[String]): TableStats = {
     val t0 = System.nanoTime()
     // loads with REAL column names — an explicit field/column list, or
     // csv-header-derived names — send a COPY column list: the user's

@@ -59,22 +59,6 @@ object PlanBuilder {
       throw new UnsupportedOperationException(s"source not wired: $other")
   }
 
-  /** Expand an archive and run its ordered sub-commands against the
-    * extracted files (archive.lisp; core.clj:328-399).
-    * @return (sub-command, [[dataflow]] frame) per sub-command, in
-    *   order */
-  def buildArchive(spark: SparkSession, cmd: LoadCommand,
-                   baseDir: String = "."): Seq[(LoadCommand, DataFrame)] = {
-    require(cmd.loadType == "archive", "not an archive command")
-    val path = resolvePath(spark, cmd.source.get, baseDir)
-    val dir = graft.sources.Archive.expand(path).getAbsolutePath
-    // the SUB-command rides along: the loader needs its field/target
-    // lists (COPY column list with the user's exact case —
-    // census-places' "LocationName") and its schema/table, not just a
-    // bare table name
-    cmd.subCommands.map(sc => (sc, dataflow(spark, sc, dir).frame))
-  }
-
   /** Build the dataflow for a file-based load command: the good rows
     * of [[dataflow]]'s frame. `inlineData` is the payload following the
     * command text for `FROM inline` (Parser.parseWithInline). */
@@ -96,8 +80,11 @@ object PlanBuilder {
     * column carries each line that failed to decode or parse, so the
     * loader counts and files parse rejects during the load's own scan.
     * DBF and IXF decode per field with charset fallback and carry no
-    * tag. */
-  final case class Dataflow(frame: DataFrame, fileColumns: Seq[FileColumn])
+    * tag. `extracted` is the directory a zipped DBF source expanded
+    * into: the frame reads it lazily, so the caller deletes it once
+    * the load has run. */
+  final case class Dataflow(frame: DataFrame, fileColumns: Seq[FileColumn],
+                            extracted: Option[java.io.File] = None)
 
   /** The [[Dataflow]] of a file-based load command. */
   def dataflow(spark: SparkSession, cmd: LoadCommand,
@@ -123,15 +110,24 @@ object PlanBuilder {
         f.toAbsolutePath.toString
       case other => resolvePath(spark, other, baseDir)
     }
+    // a zipped DBF source loads the archive's .dbf members (v4 fetches
+    // http://…-dbf.zip sources this way — tests/dbf/dbf-zip; the sibling
+    // .dbt/.fpt memo lands next to them, so memo resolution still works)
+    val extracted =
+      if (cmd.loadType == "dbf" && path.toLowerCase.endsWith(".zip"))
+        Some(graft.sources.Archive.expand(path))
+      else None
     val (raw, fileColumns) = cmd.loadType match {
       case "csv" => (readCsv(spark, cmd, path), Nil)
       case "fixed" => (readFixed(spark, cmd, path), Nil)
       case "copy" => (readCopy(spark, cmd, path), Nil)
-      case "dbf" | "ixf" => readSelfDescribing(spark, cmd, path)
+      case "dbf" | "ixf" => readSelfDescribing(spark, cmd,
+        extracted.fold(path)(
+          graft.sources.Archive.dbfMembers(_).mkString(",")))
       case t => throw new UnsupportedOperationException(
         s"load type '$t' is not a file dataflow")
     }
-    Dataflow(project(raw, cmd), fileColumns)
+    Dataflow(project(raw, cmd), fileColumns, extracted)
   }
 
   /** DBF and IXF: one [[graft.sources.ScanPlan]] over the files, and one
@@ -146,17 +142,11 @@ object PlanBuilder {
   private def readSelfDescribing(spark: SparkSession, cmd: LoadCommand,
                                  path: String)
       : (DataFrame, Seq[FileColumn]) = {
-    import graft.sources.{Archive, DbfSource, IxfSource}
+    import graft.sources.{DbfSource, IxfSource}
     // (raw spelling, folded name, PG type, default transform) per column
     val (described, files) = cmd.loadType match {
       case "dbf" =>
-        // a zipped DBF source loads the archive's .dbf members (v4
-        // fetches http://…-dbf.zip sources this way — tests/dbf/dbf-zip;
-        // the sibling .dbt/.fpt memo lands next to them, so memo
-        // resolution still works)
-        val (fields, plan) = DbfSource.scan(spark,
-          if (!path.toLowerCase.endsWith(".zip")) path
-          else Archive.dbfMembers(path).mkString(","),
+        val (fields, plan) = DbfSource.scan(spark, path,
           effectiveEncoding(cmd, _, "ISO-8859-1"))
         (fields.map(f => (f.rawOrName, f.name, DbfSource.pgType(f),
           DbfSource.defaultTransform(f))), plan.frame(spark))
@@ -190,16 +180,6 @@ object PlanBuilder {
         cmd.targetTable.exists(pat.matches) => cs
     }.getOrElse(cmd.encoding.getOrElse(default))
   }
-
-  /** Group a (possibly comma-joined glob) path by per-file effective
-    * encoding — a DECODING rule matching one file of a glob must not
-    * change how its siblings are decoded. */
-  private[dsl] def encodingGroups(cmd: LoadCommand, path: String,
-                                  default: String)
-      : Seq[(String, Seq[String])] =
-    path.split(",").toSeq
-      .groupBy(p => effectiveEncoding(cmd, p, default))
-      .toSeq.sortBy(_._1)
 
   private def fieldNames(cmd: LoadCommand): Seq[String] =
     if (cmd.fields.nonEmpty) cmd.fields.map(_.name)
@@ -248,22 +228,33 @@ object PlanBuilder {
       // enough for ≥4 MB per split, so fixtures stay single-task.
       splitHint = cmd.intOption("workers").getOrElse(4))
 
+  /** A line-format command's files, listed once and read on the driver
+    * ([[SkipLines.heads]]): each file's cut after its `skip header`
+    * lines and `header` more, its charset (the first DECODING rule
+    * matching it, else the command's ENCODING, else UTF-8), and the
+    * first `sample` records after the skip. */
+  private def lineFiles(spark: SparkSession, cmd: LoadCommand, path: String,
+                        header: Int = 0, sample: Int = 0,
+                        delimiter: Option[String] = None): SkipLines.Heads =
+    SkipLines.heads(spark, path, cmd.intOption("skip header").getOrElse(0),
+      header, f => CsvSource.canonicalEncoding(
+        effectiveEncoding(cmd, f, "UTF-8")), delimiter, sample)
+
   private def readCsv(spark: SparkSession, cmd: LoadCommand,
                       path: String): DataFrame = {
-    def dialect(enc: String) = csvDialect(cmd, enc)
+    val d = csvDialect(cmd, cmd.encoding.getOrElse("UTF-8"))
     val names = fieldNames(cmd)
-    if (names.nonEmpty)
-      encodingGroups(cmd, path, "UTF-8").map { case (enc, ps) =>
-        CsvSource.tagged(spark, ps.mkString(","), dialect(enc), names)
-      }.reduce(_ unionAll _)
+    val files = lineFiles(spark, cmd, path, if (d.header) 1 else 0,
+      if (names.nonEmpty) 0 else 1000, d.lineTerminator)
+    if (names.nonEmpty) CsvSource.tagged(spark, files, d, names)
     else {
       // no HAVING FIELDS and no target columns: the column count comes
-      // from a sample — with explicit dialect options the sample is
-      // parsed with them; otherwise the dialect itself is guessed too
-      // (csv-guess.load; csv-guess.lisp:40-77). Names are positional —
-      // the target table's DDL provides the real ones server-side.
-      val sample = CsvSource.sample(spark, path)
-      val d = dialect(effectiveEncoding(cmd, path, "UTF-8"))
+      // from the head records after `skip header` — with explicit
+      // dialect options they are parsed with them; otherwise the
+      // dialect itself is guessed too (csv-guess.load;
+      // csv-guess.lisp:40-77). Names are positional — the target
+      // table's DDL provides the real ones server-side.
+      val sample = files.records.filter(_.nonEmpty)
       // the guess only picks the separator, and the doubling when the
       // command names no escape — it guesses under the command's quote
       // (`fields not enclosed` included), and every other option (head
@@ -280,46 +271,44 @@ object PlanBuilder {
           throw new IllegalArgumentException(
             s"cannot guess a CSV dialect for $path — add HAVING FIELDS " +
               "or WITH fields terminated by"))
-      val nCols = CsvSource.parseLine(sample.head, d0.separator,
+      // the first record: the header line under `csv header`, else the
+      // first data line
+      val first = sample.headOption.getOrElse(
+        throw new IllegalArgumentException(
+          s"$path has no line to count columns in — add HAVING FIELDS"))
+      val fields = CsvSource.parseLineFields(first, d0.separator,
         d0.quote, d0.doubledQuote).getOrElse(
         throw new IllegalStateException("dialect failed to parse sample"))
       // `csv header` without HAVING FIELDS: the header line NAMES the
       // columns (the reference matches them against the target catalog
       // by name) — so downstream COPY can send a column list instead of
-      // relying on positional order. Fall back to col1..colN otherwise.
-      val headerNames =
-        if (d0.header)
-          sample.drop(d0.skipLines).headOption.flatMap(h =>
-            CsvSource.parseLineFields(h, d0.separator, d0.quote,
-              d0.doubledQuote))
-        else None
-      val cols = headerNames.filter(_.length == nCols)
-        .getOrElse((1 to nCols).map(i => s"col$i"))
-      CsvSource.tagged(spark, path, d0, cols)
+      // relying on positional order. Without it they are col1..colN.
+      val cols =
+        if (d0.header) fields
+        else fields.indices.map(i => s"col${i + 1}")
+      CsvSource.tagged(spark, files, d0, cols)
     }
   }
 
   private def readFixed(spark: SparkSession, cmd: LoadCommand,
                         path: String): DataFrame = {
+    val workers = cmd.intOption("workers").getOrElse(4)
     if (cmd.fields.isEmpty && cmd.boolOption("fixed header")) {
-      // `WITH fixed header`, no field list: the FIRST line names the
-      // columns and its token start positions set the widths — each
-      // column runs to the next token's start (fixed.clj
+      // `WITH fixed header`, no field list: the first line after `skip
+      // header` names the columns and its token start positions set the
+      // widths — each column runs to the next token's start (fixed.clj
       // infer-fields-from-header; fixed-guess.lisp:29-74). Names fold
       // to lowercase and every guessed field right-trims, exactly the
       // reference's guessed-field defaults (trim-right, no
       // null-if-blanks) — tests/fixed/fixed-guess pins the behavior.
       import org.apache.spark.sql.functions.{col, rtrim}
-      val enc = cmd.encoding.getOrElse("UTF-8")
-      val header = SkipLines.lines(spark, path, 0,
-          CsvSource.canonicalEncoding(enc)).head(1).headOption
+      val files = lineFiles(spark, cmd, path, header = 1, sample = 1)
+      val header = files.records.headOption
         .getOrElse(throw new IllegalArgumentException(
           s"fixed header: $path has no header line"))
       val specs = FixedWidth.guessSpecs(header)
         .map(s => s.copy(name = s.name.toLowerCase))
-      val df = FixedWidth.tagged(spark, path, specs, skipLines = 1,
-        splitHint = cmd.intOption("workers").getOrElse(4),
-        encoding = enc)
+      val df = FixedWidth.tagged(spark, files, specs, workers)
       return specs.foldLeft(df)((d, s) =>
         d.withColumn(s.name, rtrim(col(s.name))))
     }
@@ -330,30 +319,26 @@ object PlanBuilder {
         f.length.getOrElse(throw new IllegalArgumentException(
           s"fixed field ${f.name} lacks 'for'")))
     }
-    FixedWidth.tagged(spark, path, specs,
-      skipLines = cmd.intOption("skip header").getOrElse(0),
-      splitHint = cmd.intOption("workers").getOrElse(4),
-      encoding = cmd.encoding.getOrElse("UTF-8"))
+    FixedWidth.tagged(spark, lineFiles(spark, cmd, path), specs, workers)
   }
 
   private def readCopy(spark: SparkSession, cmd: LoadCommand,
                        path: String): DataFrame = {
     val delim = cmd.option("delimiter").map(_.charAt(0)).getOrElse('\t')
-    val names = fieldNames(cmd) match {
-      case ns if ns.nonEmpty => ns
-      // no field list and no target column list: the reference takes
-      // the TARGET TABLE's columns from the PG catalog (copy.lisp); a
-      // file dataflow has no catalog, so synthesize positional names
-      // (c1..cN) from the first line's arity
-      case _ =>
-        // comma-joined multi-file paths split like every other reader;
-        // an empty source still loads (zero rows, one synthetic column)
-        val first = spark.read.textFile(path.split(","): _*).head(1)
-        val n = first.headOption
-          .map(l => CopyText.parseLine(l, delim).length).getOrElse(1)
-        (1 to n).map(i => s"c$i")
-    }
-    CopyText.tagged(spark, path, names, delimiter = delim,
+    val declared = fieldNames(cmd)
+    val files = lineFiles(spark, cmd, path,
+      sample = if (declared.nonEmpty) 0 else 1)
+    // no field list and no target column list: the reference takes the
+    // TARGET TABLE's columns from the PG catalog (copy.lisp); a file
+    // dataflow has no catalog, so synthesize positional names (c1..cN)
+    // from the first record's arity — an empty source still loads (zero
+    // rows, one synthetic column)
+    val names =
+      if (declared.nonEmpty) declared
+      else (1 to files.records.headOption
+        .map(l => CopyText.parseLine(l, delim).length).getOrElse(1))
+        .map(i => s"c$i")
+    CopyText.tagged(spark, files, names, delimiter = delim,
       nullAs = cmd.option("null").getOrElse("\\N"),
       splitHint = cmd.intOption("workers").getOrElse(4))
   }

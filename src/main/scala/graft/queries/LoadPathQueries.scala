@@ -8,7 +8,7 @@ import graft.functions.Transforms
 import graft.operators.ProjectFields
 import graft.operators.ProjectFields.{FieldSpec, NullIf, TargetColumn, TrimMode}
 import graft.sinks.{BatchRetry, CopyEndpoint, CopyError}
-import graft.sources.{CopyText, CsvDialect, CsvSource, FixedWidth}
+import graft.sources.{CopyText, CsvDialect, CsvSource, FixedWidth, SkipLines}
 
 import QuerySupport.{t, scratch}
 
@@ -534,7 +534,8 @@ object LoadPathQueries {
         col("n_nationkey"), col("n_name"), col("n_regionkey"))
       val path = scratch("csv_guess")
       n.coalesce(1).write.option("sep", ";").mode("overwrite").csv(path)
-      val dialect = CsvSource.guessDialect(CsvSource.sample(s, path))
+      val dialect = CsvSource.guessDialect(
+          SkipLines.heads(s, path, sample = 1000).records)
         .getOrElse(CsvDialect(separator = ';'))
       CsvSource.read(s, path, dialect,
           Seq("n_nationkey", "n_name", "n_regionkey"))

@@ -10,18 +10,18 @@ import java.util.zip.{GZIPInputStream, ZipInputStream}
   * packaging convenience, the data inside them is what scales. */
 object Archive {
 
-  /** The `.dbf` members of a zip, expanded into a fresh temp directory
-    * (`LOAD DBF FROM x.zip`; a memo file lands next to its member). */
-  def dbfMembers(zipPath: String): Seq[String] = {
-    val members = Option(expand(zipPath).listFiles())
-      .getOrElse(Array.empty[File])
+  /** The `.dbf` members of an expanded zip (`LOAD DBF FROM x.zip`; a
+    * memo file lands next to its member). */
+  def dbfMembers(dir: File): Seq[String] = {
+    val members = Option(dir.listFiles()).getOrElse(Array.empty[File])
       .filter(_.getName.toLowerCase.endsWith(".dbf"))
       .map(_.getAbsolutePath).sorted.toSeq
-    require(members.nonEmpty, s"no .dbf member inside $zipPath")
+    require(members.nonEmpty, s"no .dbf member inside $dir")
     members
   }
 
-  /** Expand a .zip (or single-file .gz) into a fresh temp directory. */
+  /** Expand a .zip (or single-file .gz) into a fresh temp directory,
+    * which the caller deletes once its load has read the files. */
   def expand(archivePath: String): File = {
     val dst = Files.createTempDirectory("graft-archive").toFile
     val lower = archivePath.toLowerCase

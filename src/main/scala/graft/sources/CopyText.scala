@@ -40,10 +40,11 @@ object CopyText {
     * consecutive byte escapes is collected and UTF-8-decoded as one
     * sequence, so `\xC3\xA9` yields `é`, not the U+00C3/U+00A9 mojibake
     * a per-escape `toChar` would produce. (The engine's COPY reader
-    * decodes files as UTF-8, so UTF-8 is the byte-run charset; an
-    * invalid run decodes to U+FFFD where PG would raise an encoding
-    * error, and `\000` yields a NUL that PG itself would reject — the
-    * preflight validator's encoding check is the engine-side guard.)
+    * hands every line over as UTF-8, whatever the file's charset, so
+    * UTF-8 is the byte-run charset; an invalid run decodes to U+FFFD
+    * where PG would raise an encoding error, and `\000` yields a NUL
+    * that PG itself would reject — the preflight validator's encoding
+    * check is the engine-side guard.)
     * `\N` keeps its backslash — the null marker is matched at field
     * level BEFORE unescaping, so a `\N` that survives to here is
     * literal data, and the reference loads it as the two characters
@@ -214,21 +215,22 @@ object CopyText {
     concat_ws(delimiter.toString, cols.toIndexedSeq: _*)
   }
 
-  /** Distributed read of a COPY TEXT file → all-string
+  /** Distributed read of COPY TEXT files → all-string
     * [[TaggedLines]] frame; the split/unescape runs as Column
     * expressions (codegen), and the text source splits large files by
     * line, so this scales with input size. Decoding is the STRICT
-    * per-line path ([[SkipLines.linesDF]]) — same reject contract as
-    * the CSV source (a lenient textFile would load U+FFFD mojibake for
-    * bytes UTF-8 cannot decode; PG's own COPY errors on them), so an
-    * undecodable line is tagged with its (replacement-decoded) text,
-    * and a loader counts it and lands it in the table's reject file.
-    * A COPY line always splits, so nothing else is tagged. `splitHint`
-    * maps the DSL `workers` option to input splits (>=4 MB each), one
-    * COPY connection per split. */
-  def tagged(spark: SparkSession, path: String, fieldNames: Seq[String],
-             delimiter: Char = '\t', nullAs: String = "\\N",
-             splitHint: Int = 1): DataFrame = {
+    * per-line path ([[SkipLines.linesDF]], each file from its cut and
+    * with its charset) — same reject contract as the CSV source (a
+    * lenient textFile would load U+FFFD mojibake for bytes the charset
+    * cannot decode; PG's own COPY errors on them), so an undecodable
+    * line is tagged with its (replacement-decoded) text, and a loader
+    * counts it and lands it in the table's reject file. A COPY line
+    * always splits, so nothing else is tagged. `splitHint` maps the DSL
+    * `workers` option to input splits (>=4 MB each), one COPY
+    * connection per split. */
+  def tagged(spark: SparkSession, files: SkipLines.Heads,
+             fieldNames: Seq[String], delimiter: Char = '\t',
+             nullAs: String = "\\N", splitHint: Int = 1): DataFrame = {
     val parts = split(col("value"),
       java.util.regex.Pattern.quote(delimiter.toString), -1)
     val fields = fieldNames.zipWithIndex.map { case (n, i) =>
@@ -236,22 +238,16 @@ object CopyText {
       when(raw.isNull || raw === nullAs, lit(null: String))
         .otherwise(unescapeColumn(raw)).as(n)
     }
-    SkipLines.linesDF(spark, path, 0, "UTF-8", splitHint)
+    SkipLines.linesDF(spark, files, splitHint)
       .select(fields :+ TaggedLines.tag(col("__bad"), col("value")): _*)
   }
 
-  /** The good rows of [[tagged]]. */
+  /** The good rows of [[tagged]] over the UTF-8 files of `path`. */
   def read(spark: SparkSession, path: String, fieldNames: Seq[String],
            delimiter: Char = '\t', nullAs: String = "\\N",
            splitHint: Int = 1): DataFrame =
-    TaggedLines.clean(
-      tagged(spark, path, fieldNames, delimiter, nullAs, splitHint))
-
-  /** The lines [[read]] drops: those whose bytes UTF-8 cannot decode
-    * strictly, as their replacement-decoded text. */
-  def rejects(spark: SparkSession, path: String,
-              splitHint: Int = 1): DataFrame =
-    TaggedLines.rejects(tagged(spark, path, Nil, splitHint = splitHint))
+    TaggedLines.clean(tagged(spark, SkipLines.heads(spark, path),
+      fieldNames, delimiter, nullAs, splitHint))
 
   /** Distributed write: one codegen'd projection to the line column, then
     * the text writer (the reject-file / golden-file format). */

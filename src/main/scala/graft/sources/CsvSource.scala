@@ -73,22 +73,19 @@ object CsvSource {
     * with `requireFullArity`, short rows are tagged too. Blank lines
     * are skipped, never tagged (the reference skips them silently).
     *
-    * `skipLines`/`header` are PER-FILE head-line drops (csv.lisp:84-127
-    * semantics): implemented via [[SkipLines.lines]] — Spark's CSV reader
-    * has no preamble-skip option, and monotonically_increasing_id tricks
-    * are wrong for multi-file/multi-split reads. */
-  def tagged(spark: SparkSession, path: String, dialect: CsvDialect,
-             fieldNames: Seq[String],
+    * `files` are the dialect's files as [[heads]] lists them: each
+    * file's cut already drops its `skipLines` and header line
+    * (csv.lisp:84-127 per-FILE semantics — Spark's CSV reader has no
+    * preamble-skip option, and monotonically_increasing_id tricks are
+    * wrong for multi-file/multi-split reads), and each carries its
+    * charset. Field names come from the declared list, matching the
+    * reference's HAVING FIELDS. */
+  def tagged(spark: SparkSession, files: SkipLines.Heads,
+             dialect: CsvDialect, fieldNames: Seq[String],
              requireFullArity: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions._
-    // a header line is just one more per-file line to drop — field names
-    // come from the declared list, matching the reference's HAVING FIELDS
-    val skip = dialect.skipLines + (if (dialect.header) 1 else 0)
-    val lines = SkipLines.linesDF(spark, path, skip,
-      canonicalEncoding(dialect.encoding), dialect.splitHint,
-      if (dialect.lineTerminator.isEmpty) stitchRecords(dialect)
-      else null,
-      delimiter = dialect.lineTerminator)
+    val lines = SkipLines.linesDF(spark, files, dialect.splitHint,
+      if (files.delimiter.isEmpty) stitchRecords(dialect) else null)
     // one native-expression parse per line ([[parseFields]] is the
     // scalar spec), then positional field extraction; `get` is
     // out-of-bounds-NULL, so ragged short lines pad with NULLs and
@@ -112,12 +109,21 @@ object CsvSource {
     } :+ TaggedLines.tag(malformed, col("value")): _*)
   }
 
-  /** The good rows of [[tagged]]. */
+  /** The files of `path` as a read under `dialect` sees them: cut after
+    * each file's `skipLines` and header line, decoded with the dialect's
+    * encoding. */
+  def heads(spark: SparkSession, path: String,
+            dialect: CsvDialect): SkipLines.Heads =
+    SkipLines.heads(spark, path, dialect.skipLines,
+      if (dialect.header) 1 else 0,
+      _ => canonicalEncoding(dialect.encoding), dialect.lineTerminator)
+
+  /** The good rows of [[tagged]] over the files of `path`. */
   def read(spark: SparkSession, path: String, dialect: CsvDialect,
            fieldNames: Seq[String],
            requireFullArity: Boolean = false): DataFrame =
-    TaggedLines.clean(
-      tagged(spark, path, dialect, fieldNames, requireFullArity))
+    TaggedLines.clean(tagged(spark, heads(spark, path, dialect), dialect,
+      fieldNames, requireFullArity))
 
   /** The rows [[read]] drops, as their raw source lines — what a loader
     * counts and lands in the reject file instead of losing the signal
@@ -127,8 +133,8 @@ object CsvSource {
   def rejects(spark: SparkSession, path: String, dialect: CsvDialect,
               fieldNames: Seq[String] = Nil,
               requireFullArity: Boolean = false): DataFrame =
-    TaggedLines.rejects(
-      tagged(spark, path, dialect, fieldNames, requireFullArity))
+    TaggedLines.rejects(tagged(spark, heads(spark, path, dialect),
+      dialect, fieldNames, requireFullArity))
 
   /** [[read]] plus a `__serial` column numbering rows 1..N in LOAD
     * ORDER — the reference's implicit serial-column assignment, made
@@ -148,15 +154,11 @@ object CsvSource {
     import org.apache.spark.sql.functions._
     require(!fieldNames.contains(serialCol),
       s"field list already contains $serialCol")
-    val skip = dialect.skipLines + (if (dialect.header) 1 else 0)
-    val fileIdx = SkipLines.enumerateFiles(spark, path)
-      .zipWithIndex.map { case (f, i) => f -> i }.toMap
+    val files = heads(spark, path, dialect)
+    val fileIdx = files.files.map(_.path).zipWithIndex.toMap
     require(fileIdx.nonEmpty, s"no files match $path")
-    val lines = SkipLines.linesWithPosition(spark, path, skip,
-      canonicalEncoding(dialect.encoding),
-      stitch = if (dialect.lineTerminator.isEmpty)
-        stitchRecords(dialect) else null,
-      delimiter = dialect.lineTerminator)
+    val lines = SkipLines.linesWithPosition(spark, files,
+      stitch = if (files.delimiter.isEmpty) stitchRecords(dialect) else null)
     val parsed = lines
       .filter(octet_length(col("value")) > 0)
       .filter(!col("__bad")) // undecodable rows are rejects, not data
@@ -164,17 +166,11 @@ object CsvSource {
         graft.functions.StringExpressions
           .csvParseLine(col("value"), dialect).as("__fields"))
       .filter(col("__fields").isNotNull)
-    // fail FAST on a file-name mismatch between the enumerated list and
-    // the Hadoop split paths (scheme-less inputs resolving differently,
-    // hidden-file filters, …): a silent NULL index under nulls_last
-    // would scramble the load order instead of erroring
-    val idx = try_element_at(typedlit(fileIdx), col("__file"))
-    val checkedIdx = when(idx.isNull,
-      raise_error(concat(
-        lit("readWithSerial: split file missing from source list: "),
-        col("__file")))).otherwise(idx)
+    // the scan reads exactly the listed files (a split outside the
+    // listing fails the scan), so every row has its file's index
     val w = org.apache.spark.sql.expressions.Window
-      .orderBy(checkedIdx.asc, col("__off"))
+      .orderBy(element_at(typedlit(fileIdx), col("__file")).asc,
+        col("__off"))
     parsed
       .withColumn(serialCol, row_number().over(w).cast("long"))
       .select(fieldNames.zipWithIndex.map { case (nm, i) =>
@@ -518,35 +514,11 @@ object CsvSource {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out.toArray)
   }
 
-  /** Tiny driver-side CSV line parser used only by the guesser. Returns
-    * None on unbalanced quotes. */
-  private[graft] def parseLine(line: String, sep: Char, quote: Char,
-                               doubled: Boolean): Option[Int] = {
-    var i = 0
-    var fields = 1
-    var inQuote = false
-    while (i < line.length) {
-      val c = line.charAt(i)
-      if (inQuote) {
-        if (c == '\\' && !doubled && i + 1 < line.length) i += 1
-        else if (c == quote) {
-          if (doubled && i + 1 < line.length && line.charAt(i + 1) == quote)
-            i += 1
-          else inQuote = false
-        }
-      } else {
-        if (c == quote) inQuote = true
-        else if (c == sep) fields += 1
-      }
-      i += 1
-    }
-    if (inQuote) None else Some(fields)
-  }
-
   /** Split one line into field VALUES with the dialect's quote rules —
-    * driver-side only (header-name extraction); the distributed path
-    * stays on the codegen'd CsvParseLine. None on an unterminated
-    * quote. */
+    * driver-side only (the dialect guess's field counts, the column
+    * count and header names of a load without HAVING FIELDS); the
+    * distributed path stays on the codegen'd CsvParseLine. None on an
+    * unterminated quote. */
   private[graft] def parseLineFields(line: String, sep: Char, quote: Char,
                                      doubled: Boolean)
       : Option[Seq[String]] = {
@@ -597,16 +569,13 @@ object CsvSource {
 
   private def consistent(lines: Seq[String], sep: Char, quote: Char,
                          doubled: Boolean, nbCols: Option[Int]): Boolean = {
-    val counts = lines.map(parseLine(_, sep, quote, doubled))
+    val counts = lines.map(parseLineFields(_, sep, quote, doubled)
+      .map(_.length))
     counts.forall(_.nonEmpty) && {
       val cs = counts.flatten.distinct
       cs.size == 1 && cs.head > 1 && nbCols.forall(cs.head == _)
     }
   }
-
-  /** Driver-side sample for guessing (first `n` lines of the file). */
-  def sample(spark: SparkSession, path: String, n: Int = 1000): Seq[String] =
-    spark.read.textFile(path.split(","): _*).limit(n).collect().toSeq
 }
 
 /** Fixed-width source (src/sources/fixed/fixed.lisp:51-78): substring
@@ -618,35 +587,19 @@ object FixedWidth {
 
   /** Read fixed-width lines into a [[TaggedLines]] frame: a row is
     * tagged with its line when its bytes do not decode strictly with
-    * `encoding` (the command's WITH ENCODING — census-places is latin1,
-    * its 52 accented rows must decode, not reject). Ragged lines are
-    * never tagged: they pad with NULLs. Always the strict decode path,
-    * so the reject contract does not depend on `skip header` (the CSV
-    * source's round-13 ADVICE finding, fixed here the same way). */
-  def tagged(spark: SparkSession, path: String, specs: Seq[FieldPos],
-             skipLines: Int = 0, splitHint: Int = 1,
-             encoding: String = "UTF-8"): DataFrame = {
+    * its file's charset (the command's WITH ENCODING — census-places is
+    * latin1, its 52 accented rows must decode, not reject). Ragged lines
+    * are never tagged: they pad with NULLs. Always the strict decode
+    * path, so the reject contract does not depend on `skip header` (the
+    * CSV source's round-13 ADVICE finding, fixed here the same way). */
+  def tagged(spark: SparkSession, files: SkipLines.Heads,
+             specs: Seq[FieldPos], splitHint: Int = 1): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val text = SkipLines.linesDF(spark, path, skipLines,
-        CsvSource.canonicalEncoding(encoding), splitHint)
+    val text = SkipLines.linesDF(spark, files, splitHint)
       .withColumnRenamed("value", "__line")
     project(text, "__line", specs).select(specs.map(s => col(s.name)) :+
       TaggedLines.tag(col("__bad"), col("__line")): _*)
   }
-
-  /** The good rows of [[tagged]]. */
-  def read(spark: SparkSession, path: String, specs: Seq[FieldPos],
-           skipLines: Int = 0, splitHint: Int = 1,
-           encoding: String = "UTF-8"): DataFrame =
-    TaggedLines.clean(
-      tagged(spark, path, specs, skipLines, splitHint, encoding))
-
-  /** The lines [[read]] drops: those whose bytes do not decode. */
-  def rejects(spark: SparkSession, path: String, skipLines: Int = 0,
-              splitHint: Int = 1,
-              encoding: String = "UTF-8"): DataFrame =
-    TaggedLines.rejects(
-      tagged(spark, path, Nil, skipLines, splitHint, encoding))
 
   /** Columnize an existing single-string column (used by both the file
     * reader and tests). */

@@ -201,7 +201,7 @@ object DbfSource {
   def scan(spark: SparkSession, path: String,
            encoding: String => String = _ => "ISO-8859-1")
       : (Seq[DbfField], ScanPlan[DbfFile]) = {
-    val files = SkipLines.enumerateFiles(spark, path)
+    val files = SkipLines.enumerateFiles(spark, path).map(_.getPath.toString)
     require(files.nonEmpty, s"no DBF files at $path")
     val first = new Path(files.head)
     val in = first.getFileSystem(spark.sparkContext.hadoopConfiguration)

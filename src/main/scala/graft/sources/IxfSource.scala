@@ -239,7 +239,7 @@ object IxfSource {
     * All columns are strings (fidelity mode). */
   def scan(spark: SparkSession, path: String)
       : (Seq[IxfColumn], ScanPlan[String]) = {
-    val files = SkipLines.enumerateFiles(spark, path)
+    val files = SkipLines.enumerateFiles(spark, path).map(_.getPath.toString)
     require(files.nonEmpty, s"no IXF files at $path")
     val first = new Path(files.head)
     val in = first.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -8,6 +8,13 @@ import graft.sinks.{CopyEndpoint, CopyError}
 object ArchiveInlineSpec {
   // static: the endpoint runs inside serialized executor closures
   val batchSizes = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+
+  /** The archive extraction directories under the temp dir that hold
+    * `member`. */
+  def extractedHolding(member: String): Seq[File] =
+    Option(new File(System.getProperty("java.io.tmpdir")).listFiles())
+      .toSeq.flatten.filter(d => d.getName.startsWith("graft-archive") &&
+        new File(d, member).exists)
 }
 
 /** LOAD ARCHIVE (zip expansion + ordered sub-commands) and FROM inline
@@ -27,26 +34,90 @@ class ArchiveInlineSpec extends SparkSpec {
   }
 
   test("archive with two ordered csv sub-commands") {
+    // a member name no other run extracts, to find this run's directory
+    val regions = s"regions-${java.util.UUID.randomUUID}.csv"
     val zip = mkZip(
-      "regions.csv" -> "1,east\n2,west\n",
+      regions -> "1,east\n2,west\n",
       "cities.csv" -> "10,1,springfield\n20,2,shelbyville\n")
-    val cmd = Parser.parse(
+    val text =
       s"""LOAD ARCHIVE FROM '$zip' INTO postgresql:///t
-          LOAD CSV FROM FILENAME MATCHING ~/regions[.]csv/
+          LOAD CSV FROM FILENAME MATCHING ~/regions-.*[.]csv/
             HAVING FIELDS (r_id, r_name)
-            INTO postgresql:///t TARGET TABLE regions;
+            INTO postgresql:///t TARGET TABLE regions
+            BEFORE LOAD DO $$$$ create table regions (r_id int); $$$$;
           LOAD CSV FROM FILENAME MATCHING ~/cities[.]csv/
             HAVING FIELDS (c_id, c_region, c_name)
             INTO postgresql:///t TARGET TABLE cities;
-          ;""")
+          ;"""
+    val cmd = Parser.parse(text)
     assert(cmd.loadType == "archive" && cmd.subCommands.length == 2)
-    val results = PlanBuilder.buildArchive(spark, cmd)
-    assert(results.map(_._1.targetTable) ==
-      Seq(Some("regions"), Some("cities")))
-    val regions = results(0)._2.collect()
-      .map(r => (r.getString(0), r.getString(1))).sortBy(_._1)
-    assert(regions.toSeq == Seq(("1", "east"), ("2", "west")))
-    assert(results(1)._2.count() == 2)
+    // the sub-command's BEFORE LOAD DO runs while the files are out
+    val during = new java.util.concurrent.ConcurrentLinkedQueue[File]
+    RunnerSpec.received.clear()
+    val runner = new Runner(
+      (_, _) => ArchiveInlineSpec.extractedHolding(regions)
+        .foreach(during.add),
+      RunnerSpec.endpoint)
+    val stats = runner.runFile(spark, text)
+    assert(stats.map(s => (s.table, s.rows)) ==
+      Seq(("regions", 2L), ("cities", 2L)))
+    val byTable = RunnerSpec.received.toArray
+      .map(_.asInstanceOf[(String, String)]).toSeq.groupBy(_._1)
+    assert(byTable("regions").map(_._2).sorted == Seq("1\teast", "2\twest"))
+    assert(byTable("cities").size == 2)
+    // the extracted directory existed during the load and is gone after
+    assert(during.size == 1, during)
+    assert(!during.peek().exists, s"${during.peek()} left behind")
+  }
+
+  test("archive sub-commands run their own truncate and drop indexes") {
+    val zip = mkZip("n.csv" -> "1,a\n2,b\n")
+    val ddl = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val runner = new Runner((sql, _) => ddl.add(sql.trim),
+      RunnerSpec.endpoint,
+      queryTarget = _ => Seq(Array[String](
+        "n_idx", "CREATE INDEX n_idx ON public.n (k)",
+        null, null, null, "false")))
+    val stats = runner.runFile(spark,
+      s"""LOAD ARCHIVE FROM '$zip' INTO postgresql:///t
+          LOAD CSV FROM FILENAME MATCHING ~/n[.]csv/
+            HAVING FIELDS (k, v)
+            INTO postgresql:///t TARGET TABLE n
+            WITH fields terminated by ',', truncate, drop indexes;
+          ;""")
+    assert(stats.map(s => (s.table, s.rows)) == Seq(("n", 2L)))
+    val sent = ddl.toArray.map(_.toString).toSeq
+    assert(sent.exists(_.startsWith("TRUNCATE")), sent)
+    assert(sent.exists(_.startsWith("DROP INDEX")), sent)
+    assert(sent.contains("CREATE INDEX n_idx ON public.n (k);"), sent)
+  }
+
+  test("LOAD DBF from a zip deletes its extracted members after the " +
+    "load's COPY") {
+    import graft.sources.DbfSource
+    val member = s"fruit-${java.util.UUID.randomUUID}.dbf"
+    val f = File.createTempFile("graft-arch-member", ".dbf")
+    DbfSource.write(f, Seq(DbfSource.DbfField("id", 'N', 5, 0)),
+      Seq(Seq("1"), Seq("2")))
+    val zip = File.createTempFile("graft-arch", ".zip")
+    val z = new ZipOutputStream(new FileOutputStream(zip))
+    z.putNextEntry(new ZipEntry(member))
+    z.write(java.nio.file.Files.readAllBytes(f.toPath))
+    z.closeEntry()
+    z.close()
+    // `create table` runs before the COPY, while the members are out
+    val during = new java.util.concurrent.ConcurrentLinkedQueue[File]
+    val runner = new Runner(
+      (_, _) => ArchiveInlineSpec.extractedHolding(member)
+        .foreach(during.add),
+      RunnerSpec.endpoint)
+    val stats = runner.runFile(spark,
+      s"""LOAD DBF FROM '${zip.getAbsolutePath}'
+          INTO postgresql:///t TARGET TABLE fruit
+          WITH create table;""")
+    assert(stats.map(_.rows) == Seq(2L))
+    assert(during.size == 1, during)
+    assert(!during.peek().exists, s"${during.peek()} left behind")
   }
 
   test("archive sub-loads take their sink options from their own " +

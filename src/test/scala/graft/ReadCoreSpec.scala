@@ -6,10 +6,16 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Every source that is not line-based reads through
   * [[graft.sources.ScanPlan]], and a self-describing file's header is
-  * read once, by its source's `scan`. */
+  * read once, by its source's `scan`. The line formats list their files
+  * once ([[graft.sources.SkipLines.enumerateFiles]]) and read their
+  * heads on the driver ([[graft.sources.SkipLines.heads]]). */
 class ReadCoreSpec extends AnyFunSuite {
 
   private def text(p: Path) = new String(Files.readAllBytes(p), "UTF-8")
+
+  private def scalaFiles(dir: String): Seq[Path] =
+    Files.walk(Paths.get(dir)).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
 
   test("graft.sources has no binaryFile reader and no createDataFrame") {
     val root = Paths.get("src/main/scala/graft/sources")
@@ -32,5 +38,34 @@ class ReadCoreSpec extends AnyFunSuite {
       .map(Paths.get(_))
       .filter(p => text(p).contains("FileInputStream("))
     assert(hits.isEmpty, s"a second header read in $hits")
+  }
+
+  test("no Spark job reads a line format's head: no textFile or " +
+    "CsvSource.sample in graft.dsl or graft.sources") {
+    val files = scalaFiles("src/main/scala/graft/dsl") ++
+      scalaFiles("src/main/scala/graft/sources")
+    assert(files.exists(_.endsWith("PlanBuilder.scala")), files)
+    val hits = for {
+      p <- files
+      needle <- Seq("textFile(", "CsvSource.sample(", "def sample(")
+      if text(p).contains(needle)
+    } yield s"$p: $needle"
+    assert(hits.isEmpty, s"a second head read: $hits")
+  }
+
+  test("graft.sources lists files only in SkipLines.enumerateFiles") {
+    def count(t: String) = Seq("globStatus(", "listStatus(").map(n =>
+      t.split(java.util.regex.Pattern.quote(n), -1).length - 1).sum
+    val skipLines = text(Paths.get(
+      "src/main/scala/graft/sources/SkipLines.scala"))
+    val start = skipLines.indexOf("def enumerateFiles(")
+    assert(start >= 0, "SkipLines.enumerateFiles is gone")
+    // up to the method's closing brace at member indentation
+    val body = skipLines.substring(start,
+      skipLines.indexOf("\n  }\n", start))
+    val total = scalaFiles("src/main/scala/graft/sources")
+      .map(p => count(text(p))).sum
+    assert(count(body) > 0 && total == count(body),
+      s"$total globStatus/listStatus calls, ${count(body)} in enumerateFiles")
   }
 }

@@ -387,6 +387,30 @@ class RunnerSpec extends SparkSpec {
     assert(lines(logDir) == Seq(graft.sinks.CopySink.RawRejectMessage))
   }
 
+  /** The Spark jobs `body` starts, and its result. */
+  private def jobsOf[T](body: => T): (Int, T) = {
+    val sc = spark.sparkContext
+    val group = s"runner-jobs-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "jobs of one load")
+    val out =
+      try body
+      finally {
+        sc.clearJobGroup()
+        org.apache.spark.graft.BusDrain(sc)
+        sc.removeSparkListener(listener)
+      }
+    (jobs.get, out)
+  }
+
   test("a csv load runs one Spark job and files parse and server " +
     "rejects apart") {
     val dir = Files.createTempDirectory("runner-onejob").toFile
@@ -397,33 +421,15 @@ class RunnerSpec extends SparkSpec {
     val root = Files.createTempDirectory("runner-onejob-root").toFile
     val runner = new Runner((_, _) => (), RunnerSpec.rejectingEndpoint,
       rejectRoot = Some(root.getAbsolutePath))
-    val sc = spark.sparkContext
-    val group = "runner-onejob"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
-    }
     RunnerSpec.received.clear()
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "one scan per file load")
-    val stats =
-      try runner.runFile(spark,
-        s"""LOAD CSV FROM '${dir.getAbsolutePath}/kv.csv'
-            HAVING FIELDS (k, v)
-            INTO postgresql:///t TARGET TABLE kv
-            WITH fields terminated by '|';""")
-      finally {
-        sc.clearJobGroup()
-        org.apache.spark.graft.BusDrain(sc)
-        sc.removeSparkListener(listener)
-      }
+    val (jobs, stats) = jobsOf(runner.runFile(spark,
+      s"""LOAD CSV FROM '${dir.getAbsolutePath}/kv.csv'
+          HAVING FIELDS (k, v)
+          INTO postgresql:///t TARGET TABLE kv
+          WITH fields terminated by '|';"""))
     assert(stats.map(s => (s.table, s.rows, s.rejected)) ==
       Seq(("kv", 2L, 2L)))
-    assert(jobs.get == 1, s"${jobs.get} Spark jobs")
+    assert(jobs == 1, s"$jobs Spark jobs")
     assert(RunnerSpec.received.asScala.toSeq.sorted ==
       Seq(("kv", "1\tone"), ("kv", "4\tfour")))
     def read(d: String, ext: String): Seq[String] =
@@ -446,37 +452,98 @@ class RunnerSpec extends SparkSpec {
       Seq(Seq("1", "apple"), Seq("2", "pear")))
     IxfSpec.write(new java.io.File(dir, "t.ixf"),
       Seq((1, Some("alpha")), (2, None)))
-    val sc = spark.sparkContext
-    val group = "runner-onejob-files"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
-    }
     // jobs and rows of one load, its DDL included (`create table`
     // resolves the columns from the same header read)
     def run(kind: String, file: String): (Int, Seq[Long]) = {
-      jobs.set(0)
       val runner = new Runner((_, _) => (), RunnerSpec.endpoint)
-      sc.addSparkListener(listener)
-      sc.setJobGroup(group, s"one scan per $kind load")
-      val stats =
-        try runner.runFile(spark,
-          s"""LOAD $kind FROM '${dir.getAbsolutePath}/$file'
-              INTO postgresql:///t TARGET TABLE t
-              WITH create table;""")
-        finally {
-          sc.clearJobGroup()
-          org.apache.spark.graft.BusDrain(sc)
-          sc.removeSparkListener(listener)
-        }
-      (jobs.get, stats.map(_.rows))
+      val (jobs, stats) = jobsOf(runner.runFile(spark,
+        s"""LOAD $kind FROM '${dir.getAbsolutePath}/$file'
+            INTO postgresql:///t TARGET TABLE t
+            WITH create table;"""))
+      (jobs, stats.map(_.rows))
     }
     assert(run("DBF", "p.dbf") == (1, Seq(2L)))
     assert(run("IXF", "t.ixf") == (1, Seq(2L)))
+  }
+
+  test("a line-format load without a field list runs one Spark job: " +
+    "guessed CSV, csv header, COPY and fixed header") {
+    val dir = Files.createTempDirectory("runner-onejob-lines").toFile
+    def file(name: String, text: String): String = {
+      Files.writeString(new java.io.File(dir, name).toPath, text)
+      new java.io.File(dir, name).getAbsolutePath
+    }
+    // jobs and rows sent of one load
+    def run(load: String): (Int, Seq[String]) = {
+      RunnerSpec.received.clear()
+      val runner = new Runner((_, _) => (), RunnerSpec.endpoint)
+      val (jobs, stats) = jobsOf(runner.runFile(spark, load))
+      val rows = RunnerSpec.received.asScala.toSeq.map(_._2).sorted
+      assert(stats.map(_.rows) == Seq(rows.size.toLong))
+      (jobs, rows)
+    }
+    assert(run(
+      s"""LOAD CSV FROM '${file("g.csv", "1;a\n2;b\n")}'
+          INTO postgresql:///t TARGET TABLE t;""") ==
+      (1, Seq("1\ta", "2\tb")))
+    assert(run(
+      s"""LOAD CSV FROM '${file("h.csv", "id,name\n1,a\n2,b\n")}'
+          INTO postgresql:///t TARGET TABLE t
+          WITH csv header, fields terminated by ',';""") ==
+      (1, Seq("1\ta", "2\tb")))
+    assert(run(
+      s"""LOAD COPY FROM '${file("c.dat", "1\ta\n2\tb\n")}'
+          INTO postgresql:///t TARGET TABLE t;""") ==
+      (1, Seq("1\ta", "2\tb")))
+    assert(run(
+      s"""LOAD FIXED FROM '${file("f.txt", "id  name\n1   ab\n2   cd\n")}'
+          INTO postgresql:///t TARGET TABLE t
+          WITH fixed header;""") ==
+      (1, Seq("1\tab", "2\tcd")))
+  }
+
+  test("the column count comes from the lines after skip header") {
+    val dir = Files.createTempDirectory("runner-heads").toFile
+    // a one-field preamble two lines long, then three-field rows
+    Files.writeString(new java.io.File(dir, "p.csv").toPath,
+      "exported rows\nby a tool\n1,a,x\n2,b,y\n")
+    def load(withs: String): Seq[String] = {
+      RunnerSpec.received.clear()
+      val runner = new Runner((_, _) => (), RunnerSpec.endpoint)
+      runner.runFile(spark,
+        s"""LOAD CSV FROM '${dir.getAbsolutePath}/p.csv'
+            INTO postgresql:///t TARGET TABLE p
+            WITH skip header = 2$withs;""")
+      RunnerSpec.received.asScala.toSeq.map(_._2).sorted
+    }
+    assert(load(", fields terminated by ','") == Seq("1\ta\tx", "2\tb\ty"))
+    assert(load("") == Seq("1\ta\tx", "2\tb\ty"))
+  }
+
+  test("a latin1 csv header names the COPY columns as written") {
+    val dir = Files.createTempDirectory("runner-latin-header").toFile
+    val latin = new java.io.File(dir, "l.csv")
+    Files.write(latin.toPath, "numéro,nom\n1,Léa\n".getBytes("ISO-8859-1"))
+    RunnerSpec.copyTargets.clear()
+    new Runner((_, _) => (), RunnerSpec.recordingEndpoint).runFile(spark,
+      s"""LOAD CSV FROM '${latin.getAbsolutePath}' WITH ENCODING latin1
+          INTO postgresql:///t TARGET TABLE l
+          WITH csv header, fields terminated by ',';""")
+    assert(RunnerSpec.copyTargets.asScala.toSeq.map(_._1) ==
+      Seq("\"l\" (\"numéro\", \"nom\")"))
+  }
+
+  test("LOAD COPY honours WITH ENCODING and skip header") {
+    val f = Files.createTempFile("runner-copyenc", ".dat")
+    Files.write(f, "k\tv\n1\tcafé\n2\tthé\n".getBytes("ISO-8859-1"))
+    RunnerSpec.received.clear()
+    val stats = new Runner((_, _) => (), RunnerSpec.endpoint).runFile(spark,
+      s"""LOAD COPY FROM '$f' WITH ENCODING latin1 (k, v)
+          INTO postgresql:///t TARGET TABLE cp
+          WITH skip header = 1;""")
+    assert(stats.map(s => (s.rows, s.rejected)) == Seq((2L, 0L)))
+    assert(RunnerSpec.received.asScala.toSeq.map(_._2).sorted ==
+      Seq("1\tcafé", "2\tthé"))
   }
 
   test("COPY loads count undecodable rows as rejects, not silent drops") {

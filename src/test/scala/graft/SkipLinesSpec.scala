@@ -16,23 +16,31 @@ class SkipLinesSpec extends SparkSpec {
     dir.getAbsolutePath
   }
 
+  /** The decodable lines of `path` after each file's first `skip`. */
+  private def lines(path: String, skip: Int, splitHint: Int = 1) = {
+    import spark.implicits._
+    SkipLines.linesDF(spark, SkipLines.heads(spark, path, skip), splitHint)
+      .filter(!org.apache.spark.sql.functions.col("__bad"))
+      .select("value").as[String]
+  }
+
   test("each file drops its own head lines") {
     val dir = tmpDir(
       "a.txt" -> "pre1\npre2\na1\na2\n",
       "b.txt" -> "pre1\npre2\nb1\n")
-    val got = SkipLines.lines(spark, dir, 2).collect().toSeq.sorted
+    val got = lines(dir, 2).collect().toSeq.sorted
     assert(got == Seq("a1", "a2", "b1"))
   }
 
   test("skip longer than the file drops the whole file") {
     val dir = tmpDir("short.txt" -> "only\n", "ok.txt" -> "p\nkeep\n")
-    val got = SkipLines.lines(spark, dir, 1).collect().toSeq.sorted
+    val got = lines(dir, 1).collect().toSeq.sorted
     assert(got == Seq("keep"))
   }
 
   test("zero skip is the plain text read") {
     val dir = tmpDir("a.txt" -> "x\ny\n")
-    assert(SkipLines.lines(spark, dir, 0).collect().toSeq.sorted ==
+    assert(lines(dir, 0).collect().toSeq.sorted ==
       Seq("x", "y"))
   }
 
@@ -72,21 +80,23 @@ class SkipLinesSpec extends SparkSpec {
     out.write("hé\t2\n".getBytes("ISO-8859-1")) // bad UTF-8
     out.write("fine\t3\n".getBytes("UTF-8"))
     out.close()
-    val copied = graft.sources.CopyText
-      .read(spark, f.getAbsolutePath, Seq("a", "b"))
+    import graft.sources.{CopyText, FixedWidth, TaggedLines}
+    val files = SkipLines.heads(spark, f.getAbsolutePath)
+    val copy = CopyText.tagged(spark, files, Seq("a", "b"))
+    val copied = TaggedLines.clean(copy)
       .collect().map(_.getString(0)).toSeq.sorted
     assert(copied == Seq("fine", "ok"))
-    val copyRej = graft.sources.CopyText.rejects(spark, f.getAbsolutePath)
+    val copyRej = TaggedLines.rejects(copy)
       .collect().map(_.getString(0)).toSeq
     assert(copyRej.length == 1 && copyRej.head.endsWith("\t2"),
       s"undecodable COPY row must surface in rejects: $copyRej")
-    import graft.sources.FixedWidth
     val specs = Seq(FixedWidth.FieldPos("a", 0, 4),
       FixedWidth.FieldPos("b", 4, 2))
-    val fixed = FixedWidth.read(spark, f.getAbsolutePath, specs)
+    val fixedTagged = FixedWidth.tagged(spark, files, specs)
+    val fixed = TaggedLines.clean(fixedTagged)
       .collect().map(_.getString(0)).toSeq.sorted
     assert(fixed.length == 2, s"bad row excluded from fixed data: $fixed")
-    val fixedRej = FixedWidth.rejects(spark, f.getAbsolutePath)
+    val fixedRej = TaggedLines.rejects(fixedTagged)
       .collect().map(_.getString(0)).toSeq
     assert(fixedRej.length == 1,
       s"undecodable fixed row must surface in rejects: $fixedRej")
@@ -96,19 +106,19 @@ class SkipLinesSpec extends SparkSpec {
     // tiny file: splitHint must NOT shatter it — file-order serial
     // semantics depend on sub-4MB inputs staying one task
     val small = tmpDir("s.txt" -> (1 to 100).map(i => s"row$i").mkString("\n"))
-    assert(SkipLines.lines(spark, small, 0, "UTF-8", splitHint = 8)
+    assert(lines(small, 0, splitHint = 8)
       .rdd.getNumPartitions == 1)
     // ~9 MB file: splitHint=8 is size-capped to 2 splits (9MB/4MB)
     val line = "x" * 99
     val big = tmpDir("b.txt" ->
       Seq.fill(90000)(line).mkString("\n"))
-    val parts = SkipLines.lines(spark, big, 0, "UTF-8", splitHint = 8)
+    val parts = lines(big, 0, splitHint = 8)
       .rdd.getNumPartitions
     assert(parts == 2, s"9 MB at hint 8 must size-cap to 2 splits, got $parts")
     // no hint: one split regardless (sub-block file)
-    assert(SkipLines.lines(spark, big, 0).rdd.getNumPartitions == 1)
+    assert(lines(big, 0).rdd.getNumPartitions == 1)
     // rows identical across split settings
-    assert(SkipLines.lines(spark, big, 0, "UTF-8", 8).count() == 90000L)
+    assert(lines(big, 0, 8).count() == 90000L)
   }
 
   test("a guessed CSV dialect keeps the command's workers: 9 MB at " +
@@ -177,7 +187,8 @@ class SkipLinesSpec extends SparkSpec {
     out.write(Array[Byte]('2', ',', 0xC3.toByte, 0x28, '\n')) // bad cont.
     out.write("3,fine\n".getBytes("UTF-8"))
     out.close()
-    val rows = SkipLines.linesDF(spark, f.getAbsolutePath, 0, "UTF-8")
+    val rows = SkipLines.linesDF(spark,
+        SkipLines.heads(spark, f.getAbsolutePath))
       .collect().map(r => (r.getString(0), r.getBoolean(1))).toSeq
     assert(rows.count(_._2) == 1)
     assert(rows.filter(!_._2).map(_._1).sorted == Seq("1,ok", "3,fine"))
@@ -194,5 +205,32 @@ class SkipLinesSpec extends SparkSpec {
         Seq("k", "v"))
       .collect().map(r => (r.getString(0), r.getString(1))).toSeq.sorted
     assert(got == Seq(("1", "one"), ("2", "two"), ("3", "three")))
+  }
+
+  test("the listing skips _ and . names, as Hadoop's FileInputFormat") {
+    val dir = tmpDir("a.txt" -> "x\n", ".a.txt.crc" -> "junk\n",
+      "_SUCCESS" -> "")
+    assert(SkipLines.enumerateFiles(spark, dir).map(_.getPath.getName) ==
+      Seq("a.txt"))
+    assert(lines(dir, 0).collect().toSeq == Seq("x"))
+  }
+
+  test("the head read returns each file's cut and its first records " +
+    "after the skip, in the file's charset") {
+    val dir = Files.createTempDirectory("heads").toFile
+    Files.write(new java.io.File(dir, "a.csv").toPath,
+      "# pre\r\nnom|ville\r\n1|Orléans\r\n".getBytes("ISO-8859-1"))
+    Files.write(new java.io.File(dir, "b.csv").toPath,
+      "# pre\nnom|ville\n2|Zürich\n".getBytes("UTF-8"))
+    val h = SkipLines.heads(spark, dir.getAbsolutePath, skip = 1,
+      header = 1, charset = f => if (f.endsWith("a.csv")) "ISO-8859-1"
+        else "UTF-8", sample = 3)
+    assert(h.files.map(f => (f.cut, f.records)) == Seq(
+      (18L, Seq("nom|ville", "1|Orléans")),
+      (16L, Seq("nom|ville"))))
+    assert(h.records.length == 3)
+    // the scan starts at each cut and decodes with the same charsets
+    assert(SkipLines.linesDF(spark, h).collect().map(_.getString(0))
+      .toSeq.sorted == Seq("1|Orléans", "2|Zürich"))
   }
 }
