@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import graft.dsl.{Ast, Parser, PlanBuilder}
 import graft.orchestration.TableStats
 import graft.sinks.{CopyEndpoint, CopySink}
+import graft.sources.Archive
 
 /** The engine's top-level entry point: run a `.load` command end-to-end —
   * parse → plan → BEFORE LOAD DO → sink → AFTER LOAD DO — the Spark
@@ -164,11 +165,11 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
         // command of its own against the extracted files — its SETs,
         // DDL options and hooks included — and the directory goes after
         // the last one (archive.lisp; core.clj:328-399)
-        val dir = graft.sources.Archive.expand(
+        val dir = Archive.expand(
           PlanBuilder.resolvePath(sparkF(), cmd.source.get, baseDir))
         try cmd.subCommands.flatMap(
           runCommandWith(sparkF, _, dir.getAbsolutePath))
-        finally Runner.deleteTree(dir.getAbsolutePath)
+        finally Archive.deleteTree(dir.getAbsolutePath)
       case "database" => runDatabase(sparkF, cmd)
       case _ =>
         val spark = sparkF()
@@ -227,7 +228,7 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
           rebuildIndexesAsync(table, droppedIdx, gucSql,
             cmd.intOption("max parallel create index").getOrElse(0))
           stats
-        } finally flow.extracted.foreach(d => Runner.deleteTree(d.getPath))
+        } finally flow.extracted.foreach(d => Archive.deleteTree(d.getPath))
     }
     if (!dryRun) {
       timedDdl("post", "after load", cmd.afterLoad, gucSql)
@@ -805,7 +806,7 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
     val maxRows = batchRowsOf(cmd); val maxBytes = batchBytesOf(cmd)
     val rejectDir = rejectRoot.map(r => s"$r/$rejectName.dat")
     rejectDir.foreach { d =>
-      Seq(d, CopySink.logDirFor(d)).foreach(Runner.deleteTree)
+      Seq(d, CopySink.logDirFor(d)).foreach(Archive.deleteTree)
     }
     cmd.option("copy binary").foreach(_ => System.err.println(
       s"graft: WITH copy binary is accepted; $table loads through COPY TEXT"))
@@ -848,17 +849,6 @@ final class Runner(executeDdl: (String, Seq[String]) => Unit,
   * glue only.
   */
 object Runner {
-
-  /** Delete `path` and everything under it; a missing path is fine. */
-  private def deleteTree(path: String): Unit = {
-    val root = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.exists(root)) {
-      val all = java.nio.file.Files.walk(root)
-      try all.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => java.nio.file.Files.delete(p))
-      finally all.close()
-    }
-  }
 
   /** Percent-decode exactly once, splitting done beforehand on the RAW
     * (still percent-encoded) string so an encoded ':' in a password

@@ -65,7 +65,12 @@ final case class Table(
     sourceSchema: String = "",
     sourceName: String = "",
     comment: Option[String] = None,
-    rowCountEstimate: Long = 0L,
+    /** The table's size in its source's own unit, read once by the
+      * source's catalog query: rows for MySQL, MSSQL and SQLite, heap
+      * pages for PostgreSQL (a partitioned parent's is the sum over
+      * its leaves). The Migrator copies one source's tables biggest
+      * first by it, and the source's `scan` plans its splits by it. */
+    size: Long = 0L,
     fields: Seq[SourceColumn] = Nil,     // SOURCE shape
     columns: Seq[ColumnDef] = Nil,       // TARGET shape (after cast)
     indexes: Seq[Index] = Nil,
@@ -79,12 +84,10 @@ final case class Table(
     /** pg_class.relpersistence 'u' — recreate UNLOGGED. */
     unlogged: Boolean = false,
     /** PG source relkind 'p' — a partitioned PARENT. Parents own no
-      * storage (relpages = 0 always) and have no ctid system column,
-      * so every read route must go through the leaf partitions (or a
-      * predicate-free stream), never a whole-table stream sized by
-      * relpages or a `WHERE ctid >= …` scan (pgsql.clj:206-208 has the
-      * same blind
-      * spot — relpages-driven splits read a parent as one range). */
+      * storage and have no ctid system column, so a read goes through
+      * the leaf partitions (or one predicate-free stream), never a
+      * `WHERE ctid >= …` scan (pgsql.clj:206-208 has the blind spot:
+      * relpages-driven splits read a parent as one range). */
     partitioned: Boolean = false) {
 
   /** The schema qualifying SOURCE reads: [[sourceSchema]] when a

@@ -117,17 +117,25 @@ object PlanBuilder {
       if (cmd.loadType == "dbf" && path.toLowerCase.endsWith(".zip"))
         Some(graft.sources.Archive.expand(path))
       else None
-    val (raw, fileColumns) = cmd.loadType match {
-      case "csv" => (readCsv(spark, cmd, path), Nil)
-      case "fixed" => (readFixed(spark, cmd, path), Nil)
-      case "copy" => (readCopy(spark, cmd, path), Nil)
-      case "dbf" | "ixf" => readSelfDescribing(spark, cmd,
-        extracted.fold(path)(
-          graft.sources.Archive.dbfMembers(_).mkString(",")))
-      case t => throw new UnsupportedOperationException(
-        s"load type '$t' is not a file dataflow")
+    // the caller deletes the extracted directory once it holds the
+    // Dataflow; a scan that throws first deletes it here
+    try {
+      val (raw, fileColumns) = cmd.loadType match {
+        case "csv" => (readCsv(spark, cmd, path), Nil)
+        case "fixed" => (readFixed(spark, cmd, path), Nil)
+        case "copy" => (readCopy(spark, cmd, path), Nil)
+        case "dbf" | "ixf" => readSelfDescribing(spark, cmd,
+          extracted.fold(path)(
+            graft.sources.Archive.dbfMembers(_).mkString(",")))
+        case t => throw new UnsupportedOperationException(
+          s"load type '$t' is not a file dataflow")
+      }
+      Dataflow(project(raw, cmd), fileColumns, extracted)
+    } catch {
+      case e: Throwable =>
+        extracted.foreach(d => graft.sources.Archive.deleteTree(d.getPath))
+        throw e
     }
-    Dataflow(project(raw, cmd), fileColumns, extracted)
   }
 
   /** DBF and IXF: one [[graft.sources.ScanPlan]] over the files, and one
@@ -276,15 +284,15 @@ object PlanBuilder {
       val first = sample.headOption.getOrElse(
         throw new IllegalArgumentException(
           s"$path has no line to count columns in — add HAVING FIELDS"))
-      val fields = CsvSource.parseLineFields(first, d0.separator,
-        d0.quote, d0.doubledQuote).getOrElse(
-        throw new IllegalStateException("dialect failed to parse sample"))
+      val fields = Option(CsvSource.parseFields(first, d0)).getOrElse(
+        throw new IllegalArgumentException(s"the first record of $path " +
+          "does not parse as CSV — add HAVING FIELDS")).toSeq
       // `csv header` without HAVING FIELDS: the header line NAMES the
       // columns (the reference matches them against the target catalog
       // by name) — so downstream COPY can send a column list instead of
       // relying on positional order. Without it they are col1..colN.
       val cols =
-        if (d0.header) fields
+        if (d0.header) fields.map(Option(_).getOrElse(""))
         else fields.indices.map(i => s"col${i + 1}")
       CsvSource.tagged(spark, files, d0, cols)
     }

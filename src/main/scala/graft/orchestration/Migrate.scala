@@ -371,7 +371,7 @@ final class Migrator(
     // ---- 3. data phase: biggest tables first
     // (optimize-table-copy-ordering :304-320), index builds overlapping
     // remaining copies (:511-559)
-    val ordered = cat.allTables.sortBy(-_.rowCountEstimate)
+    val ordered = cat.allTables.sortBy(-_.size)
     val copyPool = Executors.newFixedThreadPool(math.max(1, workers))
     val indexPoolSize =
       if (maxParallelIndexes > 0) maxParallelIndexes

@@ -624,7 +624,7 @@ object LoadPathQueries {
       val names = Seq("region", "nation", "supplier")
       val cat = GCatalog("sf", Seq(GSchema("public",
         tables = names.map(n => GTable(name = n, schema = "public",
-          rowCountEstimate = t(s, dir, n).count())))))
+          size = t(s, dir, n).count())))))
       val migrator = new graft.orchestration.Migrator(
         executeDdl = (_, _) => (),
         loadTable = (tbl, _) => {

@@ -52,8 +52,4 @@ object PgLiteral {
     // which PG accepts as float literals (transforms.lisp:299-311).
     case _ => _.toString
   }
-
-  /** Formatters for a whole row schema. */
-  def formatters(schema: StructType): Array[Any => String] =
-    schema.fields.map(f => formatter(f.dataType))
 }

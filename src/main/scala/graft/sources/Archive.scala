@@ -21,9 +21,17 @@ object Archive {
   }
 
   /** Expand a .zip (or single-file .gz) into a fresh temp directory,
-    * which the caller deletes once its load has read the files. */
+    * which the caller deletes once its load has read the files. An
+    * expansion that fails (a zip-slip entry, a read error, an
+    * unsupported format) deletes the directory before it throws. */
   def expand(archivePath: String): File = {
     val dst = Files.createTempDirectory("graft-archive").toFile
+    try extract(archivePath, dst)
+    catch { case e: Throwable => deleteTree(dst.getPath); throw e }
+    dst
+  }
+
+  private def extract(archivePath: String, dst: File): Unit = {
     val lower = archivePath.toLowerCase
     if (lower.endsWith(".zip")) {
       val zin = new ZipInputStream(
@@ -55,6 +63,16 @@ object Archive {
       throw new IllegalArgumentException(
         s"unsupported archive format: $archivePath (zip/gz)")
     }
-    dst
+  }
+
+  /** Delete `path` and everything under it; a missing path is fine. */
+  private[graft] def deleteTree(path: String): Unit = {
+    val root = java.nio.file.Paths.get(path)
+    if (Files.exists(root)) {
+      val all = Files.walk(root)
+      try all.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => Files.delete(p))
+      finally all.close()
+    }
   }
 }

@@ -123,11 +123,17 @@ object IntrospectionSql {
          AND tc.constraint_type = 'CHECK'
        ORDER BY tc.table_name, cc.constraint_name"""
 
-  /** MSSQL sys views (mssql-schema.lisp). */
+  /** MSSQL sys views (mssql-schema.lisp). `table_rows` is the table's
+    * sys.partitions row count (heap or clustered index partitions),
+    * the same on every column row of the table. */
   val mssqlColumns: String =
     """SELECT s.name AS schema_name, t.name AS table_name, c.name,
        ty.name AS type_name, c.max_length, c.precision, c.scale,
-       c.is_nullable, c.is_identity, d.definition AS default_def
+       c.is_nullable, c.is_identity, d.definition AS default_def,
+       (SELECT cast(coalesce(sum(p.rows), 0) as bigint)
+        FROM sys.partitions p
+        WHERE p.object_id = t.object_id
+          AND p.index_id IN (0, 1)) AS table_rows
        FROM sys.columns c
        JOIN sys.tables t ON t.object_id = c.object_id
        JOIN sys.schemas s ON s.schema_id = t.schema_id
@@ -157,9 +163,15 @@ object IntrospectionSql {
     * pgsql source recreates enums on the target the same way its
     * MySQL source does, and without the labels a pg→pg migration of
     * an enum table fails the target CREATE TABLE on the missing
-    * type. */
+    * type.
+    *
+    * `pages` is the relation's actual size in blocks — a partitioned
+    * parent's is the sum over its partition tree — worked out once per
+    * relation in the `OFFSET 0` subquery, not once per column row. An
+    * actual size cannot lag the way `relpages` does on a table that
+    * was never VACUUMed or ANALYZEd. */
   val pgsqlColumns: String =
-    """SELECT n.nspname, c.relname, a.attname,
+    """SELECT c.nspname, c.relname, a.attname,
        format_type(a.atttypid, a.atttypmod) AS data_type,
        pg_get_expr(d.adbin, d.adrelid) AS default_expr,
        NOT a.attnotnull AS nullable,
@@ -179,18 +191,31 @@ object IntrospectionSql {
                WHERE dep.classid = 'pg_class'::regclass
                  AND dep.refobjid = c.oid AND dep.refobjsubid = a.attnum
                  AND dep.deptype IN ('a', 'i')
-                 AND sc.relkind = 'S')::text AS owned_seq
-       FROM pg_class c
-       JOIN pg_namespace n ON n.oid = c.relnamespace
+                 AND sc.relkind = 'S')::text AS owned_seq,
+       c.pages
+       FROM (SELECT c.oid, n.nspname, c.relname, c.relkind,
+               c.relpersistence,
+               (WITH RECURSIVE tree(oid, relkind) AS (
+                  SELECT c.oid, c.relkind
+                  UNION ALL
+                  SELECT i.inhrelid, k.relkind FROM tree t
+                  JOIN pg_inherits i ON i.inhparent = t.oid
+                  JOIN pg_class k ON k.oid = i.inhrelid
+                  WHERE t.relkind = 'p')
+                SELECT sum(pg_relation_size(tree.oid)) FROM tree)::bigint
+                 / current_setting('block_size')::int AS pages
+             FROM pg_class c
+             JOIN pg_namespace n ON n.oid = c.relnamespace
+             WHERE c.relkind IN ('r', 'p') AND NOT c.relispartition
+               AND n.nspname NOT IN ('pg_catalog', 'information_schema')
+             OFFSET 0) c
        JOIN pg_attribute a ON a.attrelid = c.oid AND a.attnum > 0
        JOIN pg_type ty ON ty.oid = a.atttypid
        LEFT JOIN pg_type et ON et.oid = ty.typelem
        LEFT JOIN pg_attrdef d
          ON d.adrelid = c.oid AND d.adnum = a.attnum
-       WHERE c.relkind IN ('r', 'p') AND NOT c.relispartition
-         AND NOT a.attisdropped
-         AND n.nspname NOT IN ('pg_catalog', 'information_schema')
-       ORDER BY n.nspname, c.relname, a.attnum"""
+       WHERE NOT a.attisdropped
+       ORDER BY c.nspname, c.relname, a.attnum"""
 
   /** [[pgsqlColumns]] over VIEWS (plain + materialized) — the
     * MATERIALIZE VIEWS introspection path; `nameFilter` is an extra
@@ -697,7 +722,7 @@ object IntrospectionRows {
     // (sqlite.clj:172 matches the CL v3 behavior) — an ALTER SCHEMA
     // 'public' RENAME TO ... then applies, tests/sqlite/test-pk
     Table(name = name, schema = "public", sourceName = name,
-      rowCountEstimate = rowCount, fields = fields,
+      size = rowCount, fields = fields,
       indexes = pkIndex ++ others, fkeys = fkeys)
   }
 
@@ -707,7 +732,9 @@ object IntrospectionRows {
                                typeName: String, maxLength: Int,
                                precision: Int, scale: Int,
                                nullable: Boolean, identity: Boolean,
-                               default: Option[String])
+                               default: Option[String],
+                               /** the table's row count (sys.partitions) */
+                               tableRows: Long = 0L)
 
   /** Reconstruct the typemod'd ctype the cast guards expect
     * (mssql-schema.lisp:54-132): n(var)char lengths are in UTF-16 code
@@ -746,7 +773,10 @@ object IntrospectionRows {
     * `extra` carries `auto_increment` (mysql-schema.lisp:54-212). */
   final case class MySqlColumn(table: String, name: String,
                                columnType: String, default: Option[String],
-                               nullable: Boolean, extra: String)
+                               nullable: Boolean, extra: String,
+                               /** information_schema.tables.table_rows,
+                                 * the table's row-count estimate */
+                               tableRows: Long = 0L)
 
 
   /** FK referential action → the Option the DDL emitter renders:
@@ -762,6 +792,7 @@ object IntrospectionRows {
   def mysqlTables(schema: String, rows: Seq[MySqlColumn]): Seq[Table] =
     rows.groupBy(_.table).toSeq.sortBy(_._1).map { case (tbl, cols) =>
       Table(name = tbl, schema = schema, sourceName = tbl,
+        size = cols.head.tableRows,
         fields = cols.map(c => SourceColumn(tbl, c.name, c.columnType,
           default = c.default, nullable = c.nullable,
           autoIncrement = c.extra.toLowerCase.contains("auto_increment"),
@@ -1113,7 +1144,9 @@ object IntrospectionRows {
                               * (crash-truncation is a property the
                               * owner chose; silently upgrading it to
                               * logged changes write costs). */
-                            unlogged: Boolean = false)
+                            unlogged: Boolean = false,
+                            /** the relation's size in heap pages */
+                            pages: Long = 0L)
 
   /** Group the flat pg_attribute rows into catalog tables, ordered like
     * the query (nspname, relname, attnum). Serial/identity detection =
@@ -1122,6 +1155,7 @@ object IntrospectionRows {
     rows.groupBy(r => (r.schema, r.table)).toSeq.sortBy(_._1).map {
       case ((sch, tbl), cols) =>
         Table(name = tbl, schema = sch, sourceName = tbl,
+          size = cols.head.pages,
           partitioned = cols.head.relkind == "p",
           unlogged = cols.head.unlogged,
           fields = cols.map { c =>
@@ -1169,6 +1203,7 @@ object IntrospectionRows {
     rows.groupBy(r => (r.schema, r.table)).toSeq.sortBy(_._1).map {
       case ((sch, tbl), cols) =>
         Table(name = tbl, schema = sch, sourceName = tbl,
+          size = cols.head.tableRows,
           fields = cols.map(c => SourceColumn(tbl, c.name, mssqlCtype(c),
             default = c.default.map(stripMssqlDefault),
             nullable = c.nullable, autoIncrement = c.identity)))

@@ -514,44 +514,13 @@ object CsvSource {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out.toArray)
   }
 
-  /** Split one line into field VALUES with the dialect's quote rules —
-    * driver-side only (the dialect guess's field counts, the column
-    * count and header names of a load without HAVING FIELDS); the
-    * distributed path stays on the codegen'd CsvParseLine. None on an
-    * unterminated quote. */
-  private[graft] def parseLineFields(line: String, sep: Char, quote: Char,
-                                     doubled: Boolean)
-      : Option[Seq[String]] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val sb = new StringBuilder
-    var i = 0
-    var inQuote = false
-    while (i < line.length) {
-      val c = line.charAt(i)
-      if (inQuote) {
-        if (c == '\\' && !doubled && i + 1 < line.length) {
-          sb.append(line.charAt(i + 1)); i += 1
-        } else if (c == quote) {
-          if (doubled && i + 1 < line.length && line.charAt(i + 1) == quote) {
-            sb.append(quote); i += 1
-          } else inQuote = false
-        } else sb.append(c)
-      } else {
-        if (c == quote) inQuote = true
-        else if (c == sep) { out += sb.toString; sb.clear() }
-        else sb.append(c)
-      }
-      i += 1
-    }
-    out += sb.toString
-    if (inQuote) None else Some(out.toSeq.map(_.trim))
-  }
-
   private val separators = Seq('\t', ',', ';', '|', '%', '^', '!', '$')
 
   /** Guess separator + escape mode from a sample: try each candidate until
     * every sampled row parses to the same column count (>= `nbCols` when
-    * known) — csv-guess.lisp:40-77. */
+    * known) — csv-guess.lisp:40-77. Each candidate parses with
+    * [[parseFields]], the grammar the load itself reads with, so a
+    * guessed dialect never rejects the rows it was guessed from. */
   def guessDialect(sample: Seq[String], nbCols: Option[Int] = None,
                    quote: Char = '"'): Option[CsvDialect] = {
     val lines = sample.filter(_.nonEmpty)
@@ -559,18 +528,13 @@ object CsvSource {
     val candidates = for {
       doubled <- Seq(true, false)
       sep <- separators
-    } yield (sep, doubled)
-    candidates.collectFirst {
-      case (sep, doubled)
-        if consistent(lines, sep, quote, doubled, nbCols) =>
-        CsvDialect(separator = sep, quote = quote, doubledQuote = doubled)
-    }
+    } yield CsvDialect(separator = sep, quote = quote, doubledQuote = doubled)
+    candidates.find(consistent(lines, _, nbCols))
   }
 
-  private def consistent(lines: Seq[String], sep: Char, quote: Char,
-                         doubled: Boolean, nbCols: Option[Int]): Boolean = {
-    val counts = lines.map(parseLineFields(_, sep, quote, doubled)
-      .map(_.length))
+  private def consistent(lines: Seq[String], d: CsvDialect,
+                         nbCols: Option[Int]): Boolean = {
+    val counts = lines.map(l => Option(parseFields(l, d)).map(_.length))
     counts.forall(_.nonEmpty) && {
       val cs = counts.flatten.distinct
       cs.size == 1 && cs.head > 1 && nbCols.forall(cs.head == _)

@@ -57,9 +57,10 @@ abstract class DbSource(protected val spark: () => SparkSession) {
     * when a column cannot be read at all. */
   def preflight(tables: Seq[Table]): Unit = ()
 
-  /** Decides how `t` is read: its columns and its splits. The one plan
-    * serves both routes: driver threads stream its splits, a Spark job
-    * reads its [[ScanPlan.frame]]. */
+  /** Decides how `t` is read: its columns and its splits, planned from
+    * its catalog [[Table.size]] with no further query about its size.
+    * The one plan serves both routes: driver threads stream its
+    * splits, a Spark job reads its [[ScanPlan.frame]]. */
   def scan(t: Table, isView: Boolean): ScanPlan[_]
 
   /** `t`'s rows as a distributed frame. */
@@ -121,19 +122,12 @@ object DbSource {
     def introspectViews(names: Option[Seq[String]]): Seq[Table] =
       MySqlWireSource.introspectViews(mp, mp.database, names)
     def quoteIdent(name: String): String = MySqlWire.quoteIdent(name)
-    def scan(t: Table, isView: Boolean): ScanPlan[_] = {
-      val pk = t.fields.find(_.autoIncrement).map(_.name)
-      // the table's one row-count probe: it sizes the key ranges and
-      // decides the whole-table stream; a keyless table never splits
-      val rows =
-        if (pk.isEmpty) 0L
-        else MySqlWireSource.rowCountOf(mp, mp.database, t.sourceName)
+    def scan(t: Table, isView: Boolean): ScanPlan[_] =
       MySqlWireSource.scan(mp, mp.database, t.sourceName,
         t.fields.map(f => ColumnSqlExpressions.mysqlPair(f.name, f.typeName)),
-        partitionKey = pk, rowCountEstimate = rows,
-        rowsPerRange = rowsPerRange,
+        partitionKey = t.fields.find(_.autoIncrement).map(_.name),
+        rowCountEstimate = t.size, rowsPerRange = rowsPerRange,
         charsetName = charsetFor(t.sourceName))
-    }
   }
 
   private final class Pg(sp: PgWire.ConnParams, createsSchema: Boolean,
@@ -176,9 +170,7 @@ object DbSource {
         // direct inserts into them
         t.fields.filter(_.generated.isEmpty).map(f =>
           (PgWire.quoteIdent(f.name), f.name)),
-        // partitioned parents have NO ctid column and relpages=0: they
-        // read per leaf, or stream whole when the capacity probe allows
-        partitioned = t.partitioned, view = isView)
+        pages = t.size, partitioned = t.partitioned, view = isView)
   }
 
   private final class Mssql(tp: TdsWire.ConnParams, rowsPerRange: Long,
@@ -202,18 +194,12 @@ object DbSource {
           bad.mkString(", ") +
           " — exclude these tables or drop the columns in the source")
     }
-    def scan(t: Table, isView: Boolean): ScanPlan[_] = {
-      val pk =
-        if (isView) None else t.fields.find(_.autoIncrement).map(_.name)
-      // the table's one row-count probe, as for mysql
-      val rows =
-        if (pk.isEmpty) 0L
-        else MssqlWireSource.rowCountOf(tp, t.sourceSchemaName, t.sourceName)
+    def scan(t: Table, isView: Boolean): ScanPlan[_] =
       MssqlWireSource.scan(tp, t.sourceSchemaName, t.sourceName,
         t.fields.map(f => ColumnSqlExpressions.mssqlPair(f.name, f.typeName)),
-        partitionKey = pk, rowCountEstimate = rows,
-        rowsPerRange = rowsPerRange)
-    }
+        partitionKey =
+          if (isView) None else t.fields.find(_.autoIncrement).map(_.name),
+        rowCountEstimate = t.size, rowsPerRange = rowsPerRange)
   }
 
   /** sqlite:///path/to/file.db — the native file-format reader (no

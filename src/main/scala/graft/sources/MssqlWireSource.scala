@@ -14,7 +14,8 @@ object MssqlWireSource {
 
   /** Catalog introspection over the wire:
     * [[IntrospectionSql.mssqlColumns]] through the TDS client, mapped by
-    * [[IntrospectionRows.mssqlTables]]. */
+    * [[IntrospectionRows.mssqlTables]]; each table's row count rides
+    * its column rows. */
   def introspect(params: TdsWire.ConnParams): Seq[graft.catalog.Table] = {
     val conn = new TdsWireConnection(params)
     try {
@@ -25,7 +26,7 @@ object MssqlWireSource {
           scale = r(6).toInt,
           nullable = r(7) == "t" || r(7) == "1",
           identity = r(8) == "t" || r(8) == "1",
-          default = Option(r(9)))
+          default = Option(r(9)), tableRows = r(10).toLong)
       })
       val (_, idxRows) = conn.query(IntrospectionSql.mssqlIndexes)
       val (_, fkRows) = conn.query(IntrospectionSql.mssqlFKeys)
@@ -76,23 +77,6 @@ object MssqlWireSource {
           identity = r(8) == "t" || r(8) == "1",
           default = Option(r(9)))
       })
-    } finally conn.close()
-  }
-
-  /** sys.partitions row-count ESTIMATE for the range-split guard and
-    * load ordering (heap or clustered index partitions only). */
-  def rowCountOf(params: TdsWire.ConnParams, schema: String,
-                 table: String): Long = {
-    val conn = new TdsWireConnection(params)
-    try {
-      val (_, rows) = conn.query(
-        s"""SELECT cast(sum(p.rows) as bigint) FROM sys.partitions p
-            JOIN sys.objects o ON p.object_id = o.object_id
-            JOIN sys.schemas s ON o.schema_id = s.schema_id
-            WHERE s.name = '${schema.replace("'", "''")}'
-              AND o.name = '${table.replace("'", "''")}'
-              AND p.index_id IN (0, 1)""")
-      rows.headOption.flatMap(r => Option(r(0))).map(_.toLong).getOrElse(0L)
     } finally conn.close()
   }
 

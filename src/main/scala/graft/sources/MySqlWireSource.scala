@@ -18,18 +18,19 @@ object MySqlWireSource {
 
   /** Catalog introspection over the wire: an information_schema
     * column query with the schema inlined (the text protocol has no
-    * placeholders), mapped by
-    * [[IntrospectionRows.mysqlTables]]; secondary indexes and foreign
-    * keys from information_schema statistics/key_column_usage so the
-    * target gets them rebuilt (mysql-schema.lisp list-all-indexes /
-    * list-all-fkeys). */
+    * placeholders), carrying each table's `table_rows` estimate (the
+    * reference's sizing input for range splits and load ordering),
+    * mapped by [[IntrospectionRows.mysqlTables]]; secondary indexes and
+    * foreign keys from information_schema statistics/key_column_usage
+    * so the target gets them rebuilt (mysql-schema.lisp
+    * list-all-indexes / list-all-fkeys). */
   def introspect(params: MySqlWire.ConnParams,
                  schema: String): Seq[graft.catalog.Table] = {
     val conn = new MySqlWireConnection(params)
     try {
       val sql =
         s"""SELECT c.table_name, c.column_name, c.column_type,
-            c.column_default, c.is_nullable, c.extra
+            c.column_default, c.is_nullable, c.extra, t.table_rows
             FROM information_schema.columns c
             JOIN information_schema.tables t
               USING (table_schema, table_name)
@@ -39,7 +40,8 @@ object MySqlWireSource {
       val (_, rows) = conn.query(sql)
       val tables = IntrospectionRows.mysqlTables(schema, rows.map { r =>
         IntrospectionRows.MySqlColumn(r(0), r(1), r(2), Option(r(3)),
-          nullable = r(4) == "YES", extra = Option(r(5)).getOrElse(""))
+          nullable = r(4) == "YES", extra = Option(r(5)).getOrElse(""),
+          tableRows = Option(r(6)).fold(0L)(_.toLong))
       })
       // the server-default group_concat_max_len (1024) silently
       // TRUNCATES the index column list on wide composite indexes,
@@ -99,20 +101,6 @@ object MySqlWireSource {
         IntrospectionRows.MySqlColumn(r(0), r(1), r(2), Option(r(3)),
           nullable = r(4) == "YES", extra = Option(r(5)).getOrElse(""))
       })
-    } finally conn.close()
-  }
-
-  /** information_schema.tables row-count ESTIMATE (the reference's
-    * sizing input for range splits and load ordering). */
-  def rowCountOf(params: MySqlWire.ConnParams, schema: String,
-                 table: String): Long = {
-    val conn = new MySqlWireConnection(params)
-    try {
-      val (_, rows) = conn.query(
-        s"""SELECT table_rows FROM information_schema.tables
-            WHERE table_schema = ${quoteLiteral(schema)}
-              AND table_name = ${quoteLiteral(table)}""")
-      rows.headOption.flatMap(r => Option(r(0))).map(_.toLong).getOrElse(0L)
     } finally conn.close()
   }
 

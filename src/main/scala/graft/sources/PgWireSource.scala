@@ -68,20 +68,15 @@ object PgWireSource {
       catch { case _: PgWire.PgServerError => conn.query(legacy)._2 }
     val rows = queryOr(IntrospectionSql.pgsqlColumns,
       IntrospectionSql.pgsqlColumnsLegacy)
+    // boolean TEXT wire form is t/f
+    def truthy(v: String) = v == "t" || v == "true"
     val tables = IntrospectionRows.pgsqlTables(rows.map { r =>
       IntrospectionRows.PgColumn(r(0), r(1), r(2), r(3),
-        Option(r(4)),
-        // boolean TEXT wire form is t/f
-        nullable = r(5) == "t" || r(5) == "true",
-        // tolerant of 6-column responses (test doubles serving the
-        // pre-enum-labels shape)
-        enumLabels = if (r.length > 6) Option(r(6)) else None,
-        identity = r.length > 7 && (r(7) == "a" || r(7) == "d"),
-        relkind = if (r.length > 8 && r(8) != null) r(8) else "r",
-        generated = r.length > 9 && r(9) == "s",
-        unlogged = r.length > 10 && r(10) == "u",
-        // absent column (test doubles) = legacy nextval→serial
-        ownedSeq = r.length <= 11 || r(11) == "t" || r(11) == "true")
+        Option(r(4)), nullable = truthy(r(5)),
+        enumLabels = Option(r(6)),
+        identity = r(7) == "a" || r(7) == "d",
+        relkind = r(8), generated = r(9) == "s", unlogged = r(10) == "u",
+        ownedSeq = truthy(r(11)), pages = r(12).toLong)
     })
     val idxRows = queryOr(IntrospectionSql.pgsqlIndexes,
       IntrospectionSql.pgsqlIndexesLegacy)
@@ -150,7 +145,7 @@ object PgWireSource {
         IntrospectionRows.PgColumn(r(0), r(1), r(2), r(3),
           Option(r(4)),
           nullable = r(5) == "t" || r(5) == "true",
-          enumLabels = if (r.length > 6) Option(r(6)) else None)
+          enumLabels = Option(r(6)))
       })
     }
   }
@@ -172,84 +167,37 @@ object PgWireSource {
   }
 
   /** Plan the read of `table` (schema-qualified names accepted), the
-    * same plan whichever route reads it.
+    * same plan whichever route reads it, from its `pages` as the
+    * catalog read them ([[graft.catalog.Table.size]]).
     *
     * - A view (MATERIALIZE VIEWS) has no ctid to split on: one
     *   predicate-free stream (`WHERE true`, no ONLY — views reject it).
-    * - A table that fits ONE [[IntrospectionSql.pgsqlCtidPredicates]]
-    *   chunk is one whole-table stream with no ctid predicate.
+    * - A table of at most `pagesPerChunk` pages is one whole-table
+    *   stream: ONLY for a heap (an INHERITS parent's plain FROM would
+    *   also stream every child's rows — children migrate as their own
+    *   tables; see ctidPlan), plain FROM for a partitioned parent,
+    *   whose rows live in its partitions.
     * - A bigger partitioned parent reads per leaf ([[partitionedPlan]]).
     * - Any other heap splits into ctid page ranges, `pagesPerChunk`
-    *   blocks each, sized by its relpages.
-    *
-    * A table pays ONE pg_class round trip for all of this. Two
-    * relpages=0 liars would otherwise stream an arbitrarily large table
-    * through one stream; both are capacity-probed
-    * with a `LIMIT 1 OFFSET maxRowsPerChunk` scalar subquery (bounded
-    * server-side scan, at most one row on the wire, CASE-guarded so it
-    * rides the relpages lookup as a lazily-executed SubPlan — the
-    * manytables fixture pins that cost):
-    * - relkind 'p' partitioned parents, whose relpages is 0 by
-    *   construction (parents own no storage): probed over the WHOLE
-    *   tree (plain FROM expands every partition) — a genuinely small
-    *   parent keeps the ORM-scale fast path, a big one reads per leaf;
-    * - never-ANALYZEd heaps, whose relpages lags VACUUM/ANALYZE:
-    *   probed over the table's OWN rows (FROM ONLY) against what
-    *   `pagesPerChunk` 8 KiB pages can physically hold (~290 28-byte
-    *   rows/page).
-    * The same row carries the relpages a big heap splits by.
+    *   blocks each.
     *
     * `selectCols` is (server-side expression, output name) pairs —
     * the non-generated columns (expressions used verbatim; quote
     * identifiers yourself inside them) — and every split selects them. */
   def scan(params: PgWire.ConnParams, table: String,
-           selectCols: Seq[(String, String)],
+           selectCols: Seq[(String, String)], pages: Long,
            partitioned: Boolean = false, view: Boolean = false,
            pagesPerChunk: Long = 1000L): ScanPlan[String] = {
     val qtable = PgWire.quoteQualified(table)
     if (view)
       distributed(params, Seq((qtable, "true")), selectCols, only = false)
-    else {
-      val (relpages, whole) = probe(params, qtable, pagesPerChunk)
-      whole match {
-        case Some(kind) =>
-          // heaps read ONLY their own rows (an INHERITS parent's plain
-          // FROM would also stream every child's rows — children
-          // migrate as their own tables; see ctidPlan); partitioned
-          // parents NEED the plain FROM's whole-tree expansion
-          val from = if (kind == "p") qtable else s"ONLY $qtable"
-          ScanPlan(selectCols.map(_._2), Seq(s"SELECT ${ColumnSqlExpressions
-            .selectList(selectCols, PgWire.quoteIdent)} FROM $from"),
-            opener(params))
-        case None if partitioned =>
-          partitionedPlan(params, table, pagesPerChunk, selectCols)
-        case None =>
-          ctidPlan(params, table, relpages, pagesPerChunk, selectCols)
-      }
-    }
-  }
-
-  /** [[scan]]'s pg_class round trip: (relpages, relkind of a table
-    * small enough to stream whole). */
-  private def probe(params: PgWire.ConnParams, qtable: String,
-                    pagesPerChunk: Long): (Long, Option[String]) = {
-    val conn = new PgWireConnection(params)
-    try {
-      val regclass = PgWire.quoteLiteral(qtable)
-      val cap = pagesPerChunk * 300L
-      val (_, rows) = conn.query(
-        s"""SELECT relpages, relkind::text,
-           CASE WHEN relkind = 'r' AND relpages < $pagesPerChunk
-                THEN (SELECT 1 FROM ONLY $qtable LIMIT 1 OFFSET $cap)
-                WHEN relkind = 'p'
-                THEN (SELECT 1 FROM $qtable LIMIT 1 OFFSET $cap)
-           END
-           FROM pg_class WHERE oid = $regclass::regclass""")
-      rows.headOption.fold((0L, Option.empty[String])) { r =>
-        (r(0).toLong, Some(r(1)).filter(kind => r(2) == null &&
-          (kind == "p" || (kind == "r" && r(0).toLong < pagesPerChunk))))
-      }
-    } finally conn.close()
+    else if (pages <= pagesPerChunk)
+      ScanPlan(selectCols.map(_._2), Seq(s"SELECT ${ColumnSqlExpressions
+        .selectList(selectCols, PgWire.quoteIdent)} FROM " +
+        (if (partitioned) qtable else s"ONLY $qtable")), opener(params))
+    else if (partitioned)
+      partitionedPlan(params, table, pagesPerChunk, selectCols)
+    else ctidPlan(params, table, pages, pagesPerChunk, selectCols)
   }
 
   /** Column names of `table`, discovered driver-side from a LIMIT 0
@@ -292,9 +240,10 @@ object PgWireSource {
 
   /** Leaf relations under a partitioned parent — the recursive
     * pg_inherits closure (multi-level partitioning walks through
-    * intermediate relkind 'p' nodes), each with its OWN relpages and
-    * relkind. Ordered by (schema, name) so the partition layout is
-    * deterministic across runs. */
+    * intermediate relkind 'p' nodes), each with its OWN size in pages
+    * (`pg_relation_size`, as [[IntrospectionSql.pgsqlColumns]] sizes a
+    * table) and relkind. Ordered by (schema, name) so the partition
+    * layout is deterministic across runs. */
   def leafPartitionsOf(params: PgWire.ConnParams, table: String)
       : Seq[(String, Long, String)] = {
     val regclass = PgWire.quoteLiteral(PgWire.quoteQualified(table))
@@ -307,7 +256,9 @@ object PgWireSource {
            SELECT i.inhrelid FROM pg_inherits i
            JOIN parts p ON i.inhparent = p.oid
          )
-         SELECT n.nspname, c.relname, c.relpages, c.relkind::text
+         SELECT n.nspname, c.relname,
+           pg_relation_size(c.oid) / current_setting('block_size')::int,
+           c.relkind::text
          FROM parts p
          JOIN pg_class c ON c.oid = p.oid
          JOIN pg_namespace n ON n.oid = c.relnamespace
@@ -318,13 +269,12 @@ object PgWireSource {
   }
 
   /** Read a partitioned PARENT by enumerating its leaf partitions and
-    * ctid-splitting EACH leaf by its own relpages — the scale path a
-    * parent's relpages=0 would otherwise deny it (a parent has no ctid
-    * system column at all, so `WHERE ctid >= …` on the parent ERRORS;
-    * and relpages-driven planning would read terabytes through one
-    * stream). Column list and output names come from the PARENT (leaf
-    * attnum order can differ after ATTACH PARTITION of an older table;
-    * selecting parent columns by name per leaf is order-safe). The
+    * ctid-splitting EACH leaf by its own pages — a parent has no ctid
+    * system column at all, so `WHERE ctid >= …` on the parent ERRORS,
+    * and one stream would read every partition in turn. Column list
+    * and output names come from the PARENT (leaf attnum order can
+    * differ after ATTACH PARTITION of an older table; selecting parent
+    * columns by name per leaf is order-safe). The
     * reference reads parents through the same relpages machinery as
     * heaps (pgsql.clj:206-208) and so single-streams them — this path
     * beats it instead of matching it. */
@@ -339,17 +289,17 @@ object PgWireSource {
       // the parent is trivially correct
       distributed(params, Seq((q, "true")), selectCols, only = false)
     else
-      // heap leaves ctid-split by their own relpages; a non-heap leaf
+      // heap leaves ctid-split by their own pages; a non-heap leaf
       // (e.g. a postgres_fdw foreign-table partition — no ctid there)
       // gets ONE predicate-free target of its own, so a single archive
       // FDW partition does NOT demote the hot heap partitions to a
       // single stream. ONLY is safe: partitions cannot take part in
       // old-style inheritance (PG rejects INHERITS from/into partition
       // trees), so a leaf's ONLY rows ARE all its rows.
-      distributed(params, leaves.flatMap { case (leaf, relpages, kind) =>
+      distributed(params, leaves.flatMap { case (leaf, pages, kind) =>
         val lq = PgWire.quoteQualified(leaf)
         if (kind == "r")
-          IntrospectionSql.pgsqlCtidPredicates(relpages, pagesPerChunk)
+          IntrospectionSql.pgsqlCtidPredicates(pages, pagesPerChunk)
             .map(pred => (lq, pred))
         else Seq((lq, "true"))
       }, selectCols, only = true)

@@ -151,9 +151,22 @@ class ArchiveInlineSpec extends SparkSpec {
   }
 
   test("zip-slip entries are rejected") {
-    val zip = mkZip("../evil.txt" -> "boom")
+    // a member extracted before the bad entry finds the directory
+    val member = s"ok-${java.util.UUID.randomUUID}.txt"
+    val zip = mkZip(member -> "fine", "../evil.txt" -> "boom")
     val e = intercept[Exception](graft.sources.Archive.expand(zip))
     assert(e.getMessage.contains("escapes"))
+    assert(ArchiveInlineSpec.extractedHolding(member).isEmpty,
+      "the failed expansion left its directory behind")
+  }
+
+  test("a zipped DBF whose scan fails leaves no extracted directory") {
+    val member = s"broken-${java.util.UUID.randomUUID}.dbf"
+    val zip = mkZip(member -> "not a dbf header")
+    intercept[Exception](PlanBuilder.dataflow(spark, Parser.parse(
+      s"""LOAD DBF FROM '$zip' INTO postgresql:///t TARGET TABLE b""")))
+    assert(ArchiveInlineSpec.extractedHolding(member).isEmpty,
+      "the failed scan left the extracted members behind")
   }
 
   test("http source downloads from a real (local) server and loads") {

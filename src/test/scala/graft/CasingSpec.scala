@@ -44,7 +44,7 @@ class CasingSpec extends AnyFunSuite {
   private def mkCat(schema: String) = {
     val t = Table(
       name = "MyTable", schema = schema, sourceName = "MyTable",
-      rowCountEstimate = 10,
+      size = 10,
       fields = Seq(
         SourceColumn("MyTable", "Id", "int(10)", autoIncrement = true,
           nullable = false),

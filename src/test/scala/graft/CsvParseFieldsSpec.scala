@@ -268,4 +268,15 @@ class CsvParseFieldsSpec extends SparkSpec {
         s"row ${exp(0)}: expected $exp got $act")
     }
   }
+
+  test("the dialect guess parses with parseFields: a sample the load " +
+    "would reject does not guess its separator") {
+    // junk after a closing quote is a parse error under the load's
+    // grammar, so `,` would reject every row it was guessed from
+    assert(!CsvSource.guessDialect(Seq("1,\"a\"b,2", "3,\"c\"d,4"))
+      .exists(_.separator == ','))
+    // a quoted separator stays data, so a well-formed sample guesses
+    assert(CsvSource.guessDialect(Seq("1;\"a;b\";2", "3;\"c\";4"))
+      .map(_.separator).contains(';'))
+  }
 }

@@ -62,17 +62,14 @@ class DbSourceSpec extends SparkSpec {
     "once, with no LIMIT 0 discovery and no WHERE 1 = 1") {
     val pgRows = Seq(Array("1", "alice"), Array("2", null), Array("3", "c"))
     val pg = new FakePgServer(onSelect = sql =>
-      if (Seq("WITH RECURSIVE", "pg_sequence", "pg_index", "contype",
-          "_description").exists(sql.contains)) Some((Nil, Nil))
-      else if (sql.contains("pg_attribute"))
-        Some((Seq("nspname", "relname", "attname", "data_type",
-          "default_expr", "nullable"), Seq(
-          Array("public", "users", "id", "integer", null, "f"),
-          Array("public", "users", "name", "text", null, "t"))))
       // 2,500 pages: three ctid splits of 1,000 pages
-      else if (sql.contains("pg_class"))
-        Some((Seq("relpages", "relkind", "over"),
-          Seq(Array("2500", "r", null))))
+      if (FakePgServer.isColumnQuery(sql)) FakePgServer.columns(Seq(
+        FakePgServer.column("public", "users", "id", "integer",
+          nullable = false, pages = 2500),
+        FakePgServer.column("public", "users", "name", "text",
+          pages = 2500)))
+      else if (Seq("WITH RECURSIVE", "pg_sequence", "pg_index", "contype",
+          "_description").exists(sql.contains)) Some((Nil, Nil))
       else if (sql.contains("\"public\".\"users\""))
         Some((Seq("id", "name"), pgRows))
       else None)
@@ -83,12 +80,9 @@ class DbSourceSpec extends SparkSpec {
           sql.contains("information_schema.statistics") ||
           sql.contains("key_column_usage")) Some((Nil, Nil))
       else if (sql.contains("information_schema.columns"))
-        Some((Seq("table_name", "column_name", "column_type",
-          "column_default", "is_nullable", "extra"), Seq(
+        FakeMySqlServer.columns(Seq(
           Array("t", "k", "int(11)", null, "NO", "auto_increment"),
-          Array("t", "v", "varchar(10)", null, "YES", ""))))
-      else if (sql.contains("information_schema.tables"))
-        Some((Seq("table_rows"), Seq(Array("2"))))
+          Array("t", "v", "varchar(10)", null, "YES", "")), Map("t" -> 2L))
       else if (sql.contains("`db`.`t`"))
         Some((Seq("k", "v"), Seq(Array("1", "x"), Array("2", "y"))))
       else None)

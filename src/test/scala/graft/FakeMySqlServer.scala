@@ -353,4 +353,14 @@ object FakeMySqlServer {
     s"-----BEGIN PUBLIC KEY-----\n$b64\n-----END PUBLIC KEY-----\n"
       .getBytes(UTF_8)
   }
+
+  /** The answer to [[graft.sources.MySqlWireSource.introspect]]'s
+    * column query: each (table, column, type, default, nullable, extra)
+    * row with its table's `table_rows` from `sizes` appended (0 for a
+    * table not named there). */
+  def columns(rows: Seq[Array[String]], sizes: Map[String, Long] = Map.empty)
+      : Option[(Seq[String], Seq[Array[String]])] =
+    Some((Seq("table_name", "column_name", "column_type", "column_default",
+      "is_nullable", "extra", "table_rows"),
+      rows.map(r => r :+ sizes.getOrElse(r(0), 0L).toString)))
 }

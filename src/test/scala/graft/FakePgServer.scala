@@ -316,3 +316,29 @@ final class FakePgServer(
     true
   }
 }
+
+object FakePgServer {
+
+  /** The columns of [[graft.sources.IntrospectionSql.pgsqlColumns]], in
+    * order. */
+  val catalogColumns: Seq[String] = Seq("nspname", "relname", "attname",
+    "data_type", "default_expr", "nullable", "enum_labels", "identity",
+    "relkind", "generated", "persistence", "owned_seq", "pages")
+
+  /** One full row of the column catalog query: a column of a logged
+    * heap of `pages` pages, neither identity nor generated, whose
+    * nextval default (if any) owns its sequence. */
+  def column(schema: String, table: String, name: String, dataType: String,
+             default: String = null, nullable: Boolean = true,
+             enumLabels: String = null, pages: Long = 1L): Array[String] =
+    Array(schema, table, name, dataType, default, if (nullable) "t" else "f",
+      enumLabels, "", "r", "", "p", "t", pages.toString)
+
+  /** Whether `sql` is the column catalog query. */
+  def isColumnQuery(sql: String): Boolean = sql.contains("AS owned_seq")
+
+  /** `rows` ([[column]]s) as the answer to the column catalog query. */
+  def columns(rows: Seq[Array[String]])
+      : Option[(Seq[String], Seq[Array[String]])] =
+    Some((catalogColumns, rows))
+}

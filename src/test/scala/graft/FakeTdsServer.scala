@@ -653,3 +653,18 @@ final class FakeTdsServer(
     done(b, 3)
   }
 }
+
+object FakeTdsServer {
+
+  /** The answer to [[graft.sources.IntrospectionSql.mssqlColumns]]: each
+    * sys.columns row (schema, table, column, type, max_length,
+    * precision, scale, is_nullable, is_identity, default) with its
+    * table's row count from `sizes` appended (0 for a table not named
+    * there). */
+  def columns(rows: Seq[Array[String]], sizes: Map[String, Long] = Map.empty)
+      : Option[(Seq[String], Seq[Array[String]])] =
+    Some((Seq("schema_name", "table_name", "name", "type_name",
+      "max_length", "precision", "scale", "is_nullable", "is_identity",
+      "default_def", "table_rows"),
+      rows.map(r => r :+ sizes.getOrElse(r(1), 0L).toString)))
+}

@@ -15,8 +15,9 @@ import graft.sinks.{PgWire, PgWireCopyEndpoint, PgWireConnection}
   *
   * Also pins the partitioned edge matrix (multi-level partitioning,
   * DEFAULT partitions, an FK referencing a partitioned parent, an
-  * expression index ON the parent) and the stale-relpages LocalCopy
-  * guard (a never-ANALYZEd heap reports relpages=0 too). */
+  * expression index ON the parent) and the stale-relpages case: a
+  * never-ANALYZEd heap reports relpages=0 too, but the catalog sizes
+  * every table by its actual pages. */
 class LivePartitionSpec extends SparkSpec {
 
   private val decode =
@@ -72,17 +73,20 @@ class LivePartitionSpec extends SparkSpec {
     // relpages on the PARENT is 0 no matter the volume — the lie the
     // old LocalCopy gate trusted
     assert(graft.sources.PgWireSource.relpagesOf(sp, "public.m") == 0L)
-    // the gate no longer trusts it: a parent qualifies only through
-    // the whole-tree capacity probe. At pagesPerChunk=1 (cap 300) the
-    // 4000-row tree is refused...
+    // the catalog sizes a parent by its partition tree's pages
+    val leaves = graft.sources.PgWireSource.leafPartitionsOf(sp, "public.m")
+    val pages = graft.sources.PgWireSource.introspect(sp)
+      .find(_.name == "m").get.size
+    assert(pages == leaves.map(_._2).sum && pages > 1L, (pages, leaves))
+    // at pagesPerChunk=1 the 4000-row tree is not one stream...
     val mCols = sel("id", "bucket", "payload")
-    assert(graft.sources.PgWireSource.scan(sp, "public.m", mCols,
+    assert(graft.sources.PgWireSource.scan(sp, "public.m", mCols, pages,
       partitioned = true, pagesPerChunk = 1L).splits.length > 1,
-      "a beyond-capacity partitioned parent must not be one stream")
-    // ...while a genuinely small parent keeps the ORM-scale fast path
-    // and streams the WHOLE tree (plain FROM, all partitions)
+      "a big partitioned parent must not be one stream")
+    // ...while at the default chunk it is small, and streams the WHOLE
+    // tree (plain FROM, all partitions)
     val whole = graft.sources.PgWireSource.scan(sp, "public.m", mCols,
-      partitioned = true)
+      pages, partitioned = true)
     assert(whole.splits == Seq(
       "SELECT \"id\", \"bucket\", \"payload\" FROM \"public\".\"m\""),
       "small partitioned parent streams the whole tree")
@@ -92,8 +96,7 @@ class LivePartitionSpec extends SparkSpec {
       assert(stream.rows.size == 4000)
     } finally stream.close()
 
-    // leaf enumeration carries each leaf's OWN relpages
-    val leaves = graft.sources.PgWireSource.leafPartitionsOf(sp, "public.m")
+    // leaf enumeration carries each leaf's OWN pages
     assert(leaves.map(_._1) == Seq("public.m_p0", "public.m_p1"), leaves)
     assert(leaves.forall(_._2 > 1L),
       s"ANALYZEd leaves must report pages: $leaves")
@@ -101,7 +104,7 @@ class LivePartitionSpec extends SparkSpec {
 
     // the distributed read: one Spark partition per (leaf, ctid range),
     // more than one range per leaf at pagesPerChunk=1
-    val df = graft.sources.PgWireSource.scan(sp, "public.m", mCols,
+    val df = graft.sources.PgWireSource.scan(sp, "public.m", mCols, pages,
       partitioned = true, pagesPerChunk = 1L).frame(spark)
     val expectParts = leaves.map(_._2).sum
     assert(df.rdd.getNumPartitions == expectParts &&
@@ -157,8 +160,10 @@ class LivePartitionSpec extends SparkSpec {
       .filter(l => l._3 == "r" && l._1.startsWith("public.mx_hot"))
       .map(_._2).sum
     assert(heapChunks > 2, s"ANALYZEd heap leaves must split: $leaves")
+    val pages = graft.sources.PgWireSource.introspect(sp)
+      .find(_.name == "mx").get.size
     val df = graft.sources.PgWireSource.scan(sp, "public.mx",
-      sel("id", "bucket", "payload"), partitioned = true,
+      sel("id", "bucket", "payload"), pages, partitioned = true,
       pagesPerChunk = 1L).frame(spark)
     // heap leaves ctid-split per their relpages; the FDW leaf adds ONE
     // predicate-free target — the whole read is NOT demoted
@@ -281,14 +286,20 @@ class LivePartitionSpec extends SparkSpec {
     val p = PgWire.connParams(uri, decode)
     assert(graft.sources.PgWireSource.relpagesOf(p, "public.liar") == 0L,
       "fixture must lie: relpages expected 0 pre-ANALYZE")
-    // pagesPerChunk=1 → capacity cap 300 rows; the 400-row liar is
-    // caught by the OFFSET probe and routed to the distributed read
-    assert(graft.sources.PgWireSource.scan(p, "public.liar",
-      sel("id", "pad"), pagesPerChunk = 1L).splits.forall(_.contains("ctid")),
+    // the catalog reads each table's actual pages, which do not lag:
+    // at pagesPerChunk=1 the 400-row liar splits by ctid
+    val size = graft.sources.PgWireSource.introspect(p)
+      .map(t => t.name -> t.size).toMap
+    assert(size("liar") > 1L, size("liar"))
+    val liar = graft.sources.PgWireSource.scan(p, "public.liar",
+      sel("id", "pad"), size("liar"), pagesPerChunk = 1L)
+    assert(liar.splits.length > 1 && liar.splits.forall(_.contains("ctid")),
       "stale relpages must not buy the whole-table stream")
     // the honest small table still gets the fast path, and it works
+    assert(size("honest_small") == 1L)
     val whole = graft.sources.PgWireSource.scan(p,
-      "public.honest_small", sel("id"), pagesPerChunk = 1L)
+      "public.honest_small", sel("id"), size("honest_small"),
+      pagesPerChunk = 1L)
     assert(whole.splits ==
       Seq("SELECT \"id\" FROM ONLY \"public\".\"honest_small\""))
     assert(whole.columns == Seq("id"))

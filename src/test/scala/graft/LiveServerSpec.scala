@@ -341,15 +341,15 @@ class LiveServerSpec extends SparkSpec {
     assert(tables.nonEmpty, "live MySQL schema has no tables to smoke on")
     val t = tables.head
     val pk = t.fields.find(_.autoIncrement).map(_.name)
-    val rows = graft.sources.MySqlWireSource.rowCountOf(
-      mp, mp.database, t.sourceName)
+    // the introspected table_rows estimate sizes the key ranges
+    assert(t.size >= 0L)
     val df = graft.sources.MySqlWireSource.scan(mp, mp.database,
       t.sourceName, t.fields.map(f =>
         graft.sources.ColumnSqlExpressions.mysqlPair(f.name, f.typeName)),
-      partitionKey = pk, rowCountEstimate = rows).frame(spark)
+      partitionKey = pk, rowCountEstimate = t.size).frame(spark)
     assert(df.count() >= 0L)
     info(s"live MySQL: read ${df.count()} rows from ${t.sourceName} " +
-      s"(estimate $rows, ${df.rdd.getNumPartitions} partitions)")
+      s"(estimate ${t.size}, ${df.rdd.getNumPartitions} partitions)")
   }
 
   test("live MSSQL: introspect and read over TDS " +
@@ -362,13 +362,12 @@ class LiveServerSpec extends SparkSpec {
     assert(tables.nonEmpty, "live MSSQL database has no tables to smoke on")
     val t = tables.head
     val pk = t.fields.find(_.autoIncrement).map(_.name)
-    val rows = graft.sources.MssqlWireSource.rowCountOf(
-      tp, t.schema, t.sourceName)
     val df = graft.sources.MssqlWireSource.scan(tp, t.schema,
       t.sourceName, t.fields.map(f => graft.sources.ColumnSqlExpressions
         .mssqlPair(f.name, f.typeName)),
-      partitionKey = pk, rowCountEstimate = rows).frame(spark)
-    assert(df.count() >= 0L)
+      partitionKey = pk, rowCountEstimate = t.size).frame(spark)
+    // the introspected sys.partitions count is the table's row count
+    assert(df.count() == t.size)
     info(s"live MSSQL: read ${df.count()} rows from ${t.sourceName}")
   }
 

@@ -16,7 +16,7 @@ class MigrateSpec extends AnyFunSuite {
 
   private def mkCatalog: Catalog = {
     def tbl(name: String, rows: Long, withFk: Boolean = false) = Table(
-      name = name, schema = "public", rowCountEstimate = rows,
+      name = name, schema = "public", size = rows,
       fields = Seq(
         SourceColumn(name, "id", "int(10)", autoIncrement = true,
           nullable = false),
@@ -41,7 +41,7 @@ class MigrateSpec extends AnyFunSuite {
         loading.add(t.name)
         Thread.sleep(if (t.name == "big") 150 else 10)
         loading.remove(t.name)
-        (t.rowCountEstimate, 0L, 0L)
+        (t.size, 0L, 0L)
       },
       workers = 4, maxParallelIndexes = 2)
     val summary = migrator.migrate(mkCatalog,
@@ -197,7 +197,7 @@ class MigrateSpec extends AnyFunSuite {
   test("before/after DO, SET params, enum types, checks and comments") {
     val events = new ConcurrentLinkedQueue[String]
     val cat = Catalog("c", Seq(Schema("public", tables = Seq(Table(
-      name = "shirts", schema = "public", rowCountEstimate = 1,
+      name = "shirts", schema = "public", size = 1,
       comment = Some("a table"),
       fields = Seq(
         SourceColumn("shirts", "id", "int(10)"),
@@ -249,7 +249,7 @@ class MigrateSpec extends AnyFunSuite {
         else (),
       loadTable = (t, _) =>
         if (t.name == "mid") throw new RuntimeException("disk full")
-        else (t.rowCountEstimate, 0L, 0L))
+        else (t.size, 0L, 0L))
     val summary = m.migrate(mkCatalog,
       defaults = DefaultCastRules.mysql,
       withFKeys = false, resetSequences = false)
@@ -271,7 +271,7 @@ class MigrateSpec extends AnyFunSuite {
         if (sql.startsWith("ALTER TABLE") && sql.contains("FOREIGN KEY"))
           throw new RuntimeException("fkey violation")
         else (),
-      loadTable = (t, _) => (t.rowCountEstimate, 0L, 0L))
+      loadTable = (t, _) => (t.size, 0L, 0L))
     val summary = m.migrate(mkCatalog,
       defaults = DefaultCastRules.mysql, resetSequences = false)
     assert(summary.failedTables.isEmpty)
@@ -289,7 +289,7 @@ class MigrateSpec extends AnyFunSuite {
         else (),
       loadTable = (t, _) =>
         if (t.name == "mid") throw new RuntimeException("disk full")
-        else (t.rowCountEstimate, 0L, 0L))
+        else (t.size, 0L, 0L))
     val summary = m.migrate(mkCatalog,
       defaults = DefaultCastRules.mysql,
       withFKeys = false, resetSequences = false)
@@ -302,7 +302,7 @@ class MigrateSpec extends AnyFunSuite {
     assert(summary.exitCode == 1)
 
     val clean = new Migrator((_, _) => (),
-      (t, _) => (t.rowCountEstimate, 0L, 0L))
+      (t, _) => (t.size, 0L, 0L))
     val ok = clean.migrate(mkCatalog, defaults = DefaultCastRules.mysql)
     assert(!ok.render.contains("Failed tables:"))
     assert(ok.exitCode == 0)
@@ -339,7 +339,7 @@ class MigrateSpec extends AnyFunSuite {
     val events = new ConcurrentLinkedQueue[String]
     val migrator = new Migrator(
       executeDdl = (sql, _) => events.add(sql.replaceAll("\\s+", " ")),
-      loadTable = (t, _) => (t.rowCountEstimate, 0L, 0L), workers = 2)
+      loadTable = (t, _) => (t.size, 0L, 0L), workers = 2)
     migrator.migrate(
       mkCatalog.copy(sequences = Seq(SequenceDef(
         schema = "seqs", name = "order_seq", start = 5, increment = 1,
@@ -379,7 +379,7 @@ class MigrateSpec extends AnyFunSuite {
       executeDdl = (sql, _) => events.add(sql.replaceAll("\\s+", " ")),
       loadTable = (t, _) =>
         if (t.name == "big") throw new RuntimeException("copy died")
-        else (t.rowCountEstimate, 0L, 0L))
+        else (t.size, 0L, 0L))
     val summary = m.migrate(mkCatalog, defaults = DefaultCastRules.mysql)
     assert(summary.failedTables.map(_.table) == Seq("big"))
     // no post-phase DDL touches the failed table
@@ -399,7 +399,7 @@ class MigrateSpec extends AnyFunSuite {
     val events = new ConcurrentLinkedQueue[String]
     val cat = Catalog("c",
       schemas = Seq(Schema("public", tables = Seq(Table(
-        name = "posts", schema = "public", rowCountEstimate = 1,
+        name = "posts", schema = "public", size = 1,
         fields = Seq(
           SourceColumn("posts", "id", "int(10)"),
           SourceColumn("posts", "updated_at", "timestamp",
@@ -453,7 +453,7 @@ class MigrateSpec extends AnyFunSuite {
 
   test("duplicate index names across tables are uniquified") {
     def tbl(name: String, schema: String = "public") = Table(
-      name = name, schema = schema, rowCountEstimate = 1,
+      name = name, schema = schema, size = 1,
       fields = Seq(SourceColumn(name, "id", "int(10)")),
       indexes = Seq(Index("idx_common", name, columns = Seq("id"))))
     val cat = Catalog("c", Seq(
@@ -550,7 +550,7 @@ class MigrateSpec extends AnyFunSuite {
     val events = new ConcurrentLinkedQueue[String]
     val cat = Catalog("postgresql://u@h/db", Seq(Schema("public",
       tables = Seq(Table(
-        name = "t", schema = "public", rowCountEstimate = 1,
+        name = "t", schema = "public", size = 1,
         fields = Seq(
           SourceColumn("t", "m", "mood",
             enumLabels = Some(Seq("'a'", "'b'"))),
@@ -625,7 +625,7 @@ class MigrateSpec extends AnyFunSuite {
       executeDdl = (_, _) => (),
       loadTable = (t, _) =>
         if (t.name == "big") sys.error("disk full")
-        else { Thread.sleep(30); (t.rowCountEstimate, 0L, 0L) },
+        else { Thread.sleep(30); (t.size, 0L, 0L) },
       workers = 1) // serial: big (largest) fails first, rest must skip
     val summary = m.migrate(mkCatalog,
       defaults = graft.casting.DefaultCastRules.mysql,

@@ -8,7 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[graft.sources.ScanPlan]], and a self-describing file's header is
   * read once, by its source's `scan`. The line formats list their files
   * once ([[graft.sources.SkipLines.enumerateFiles]]) and read their
-  * heads on the driver ([[graft.sources.SkipLines.heads]]). */
+  * heads on the driver ([[graft.sources.SkipLines.heads]]). A database
+  * table's size comes with its catalog read, never from a query of its
+  * own. */
 class ReadCoreSpec extends AnyFunSuite {
 
   private def text(p: Path) = new String(Files.readAllBytes(p), "UTF-8")
@@ -67,5 +69,17 @@ class ReadCoreSpec extends AnyFunSuite {
       .map(p => count(text(p))).sum
     assert(count(body) > 0 && total == count(body),
       s"$total globStatus/listStatus calls, ${count(body)} in enumerateFiles")
+  }
+
+  test("graft.sources sizes a table only in its catalog read: no " +
+    "rowCountOf, no PG probe and no capacity OFFSET subquery") {
+    val files = scalaFiles("src/main/scala/graft/sources")
+    assert(files.exists(_.endsWith("PgWireSource.scala")), files)
+    val hits = for {
+      p <- files
+      needle <- Seq("rowCountOf", "LIMIT 1 OFFSET", "probe(")
+      if text(p).contains(needle)
+    } yield s"$p: $needle"
+    assert(hits.isEmpty, s"a per-table size query: $hits")
   }
 }

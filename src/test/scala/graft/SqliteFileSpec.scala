@@ -122,7 +122,7 @@ class SqliteFileSpec extends SparkSpec {
     val cat = SqliteSource.introspect(fixture("test_pk.db"),
       rowCounts = true)
     assert(cat.map(_.name).sorted == Seq("division", "division_kind"))
-    assert(cat.forall(_.rowCountEstimate == 0L))
+    assert(cat.forall(_.size == 0L))
     // column-level REFERENCES stops the type at the keyword
     val division = cat.find(_.name == "division").get
     assert(division.fields(1).ctype == "integer")
@@ -450,6 +450,18 @@ class SqliteFileSpec extends SparkSpec {
     assert(got(9)(1) == Long.MaxValue.toString)
   }
 
+  test("LOAD DATABASE from SQLite copies the biggest table first") {
+    val p = tmpDb("sizes")
+    val w = new SqliteGen.Writer()
+    for ((t, n) <- Seq(("a_small", 2), ("b_big", 9), ("c_mid", 4)))
+      w.table(t, s"CREATE TABLE $t (id INTEGER PRIMARY KEY, v TEXT)",
+        (1 to n).iterator.map(i =>
+          (i.toLong, Seq[SqliteGen.V](VNull, VText(s"v$i")))))
+    w.save(p)
+    assert(CopyOrder.of(s"sqlite://$p", Seq("a_small", "b_big", "c_mid"),
+      () => spark) == Seq("b_big", "c_mid", "a_small"))
+  }
+
   test("writer: a 60k-row table builds multi-level interior pages and " +
     "the distributed read partitions by root subtree") {
     val p = tmpDb("multilevel")
@@ -571,7 +583,7 @@ class SqliteFileSpec extends SparkSpec {
     // introspection: the composite PK comes through for target DDL
     val tbl = graft.sources.SqliteSource.introspect(path,
       rowCounts = true).find(_.name == "wor").get
-    assert(tbl.rowCountEstimate == 500L)
+    assert(tbl.size == 500L)
     val pkIdx = tbl.indexes.find(_.primary)
     assert(pkIdx.exists(_.columns == Seq("k2", "k1")),
       s"composite PK: ${tbl.indexes}")
