@@ -16,8 +16,9 @@ import graft.functions.Transforms
   */
 object PlanBuilder {
 
-  /** Resolve the source into path(s) readable by Spark (comma-joined for
-    * multi-file globs, which both text and csv readers accept). */
+  /** Resolve the source into the path(s) a file source reads
+    * (comma-joined for multi-file globs, which
+    * [[graft.sources.SkipLines.enumerateFiles]] splits in order). */
   def resolvePath(spark: SparkSession, src: Source,
                   baseDir: String): String = src match {
     case FilePath(p) =>

@@ -219,7 +219,7 @@ object CopyText {
     * [[TaggedLines]] frame; the split/unescape runs as Column
     * expressions (codegen), and the text source splits large files by
     * line, so this scales with input size. Decoding is the STRICT
-    * per-line path ([[SkipLines.linesDF]], each file from its cut and
+    * per-line path ([[SkipLines.scan]], each file from its cut and
     * with its charset) — same reject contract as the CSV source (a
     * lenient textFile would load U+FFFD mojibake for bytes the charset
     * cannot decode; PG's own COPY errors on them), so an undecodable
@@ -238,8 +238,9 @@ object CopyText {
       when(raw.isNull || raw === nullAs, lit(null: String))
         .otherwise(unescapeColumn(raw)).as(n)
     }
-    SkipLines.linesDF(spark, files, splitHint)
-      .select(fields :+ TaggedLines.tag(col("__bad"), col("value")): _*)
+    SkipLines.scan(spark, files, splitHint).frame(spark)
+      .select(fields :+ TaggedLines.tag(col("__bad").isNotNull,
+        col("value")): _*)
   }
 
   /** The good rows of [[tagged]] over the UTF-8 files of `path`. */

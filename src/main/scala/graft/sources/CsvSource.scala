@@ -9,9 +9,9 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * (csv-guess.lisp:40-55).
   *
   * The default reader ([[CsvSource.read]]) is LINE-oriented — that is
-  * what makes the read splittable at 100 TB (block-parallel
-  * TextInputFormat). Quoted fields with embedded newlines (legal CSV,
-  * the reference loads them) are handled by partition-local record
+  * what makes the read splittable at 100 TB (the byte-range splits of
+  * [[SkipLines.scan]]). Quoted fields with embedded newlines (legal CSV,
+  * the reference loads them) are handled by split-local record
   * STITCHING ([[CsvSource.stitchRecords]]): a line that ends inside an
   * open quote absorbs following lines until the quote closes, so such
   * records load without giving up split parallelism. The one residue:
@@ -41,9 +41,10 @@ final case class CsvDialect(
     splitHint: Int = 1,
     /** `lines terminated by` (csv.lisp:22 csv-newline): a custom
       * RECORD terminator — records split on it instead of newlines
-      * (Hadoop record.delimiter keeps the scan splittable), embedded
-      * newlines become plain data and the quote-stitch is off (the
-      * terminator, not a quote state, defines record ends). */
+      * (the scan's line reader splits on it, so the read stays
+      * splittable), embedded newlines become plain data and the
+      * quote-stitch is off (the terminator, not a quote state, defines
+      * record ends). */
     lineTerminator: Option[String] = None)
 
 object CsvSource {
@@ -84,8 +85,7 @@ object CsvSource {
              dialect: CsvDialect, fieldNames: Seq[String],
              requireFullArity: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions._
-    val lines = SkipLines.linesDF(spark, files, dialect.splitHint,
-      if (files.delimiter.isEmpty) stitchRecords(dialect) else null)
+    val lines = scan(spark, files, dialect).frame(spark)
     // one native-expression parse per line ([[parseFields]] is the
     // scalar spec), then positional field extraction; `get` is
     // out-of-bounds-NULL, so ragged short lines pad with NULLs and
@@ -100,7 +100,7 @@ object CsvSource {
       .filter(octet_length(col("value")) > 0) // blank lines skipped (octet_length: O(1), no char scan)
       .select(col("value"), col("__bad"), graft.functions.StringExpressions
         .csvParseLine(col("value"), dialect).as("__fields"))
-    val malformed = col("__bad") || col("__fields").isNull ||
+    val malformed = col("__bad").isNotNull || col("__fields").isNull ||
       (if (requireFullArity) size(col("__fields")) < fieldNames.length
        else lit(false))
     // the reject file carries the (replacement-decoded) row text
@@ -108,6 +108,15 @@ object CsvSource {
       get(col("__fields"), lit(i)).as(nm)
     } :+ TaggedLines.tag(malformed, col("value")): _*)
   }
+
+  /** The read of `files` under `dialect`: its splits, and the quote
+    * stitch unless a custom record terminator defines the record ends. */
+  private def scan(spark: SparkSession, files: SkipLines.Heads,
+                   dialect: CsvDialect): ScanPlan[SkipLines.LineSplit] =
+    if (files.delimiter.nonEmpty)
+      SkipLines.scan(spark, files, dialect.splitHint)
+    else SkipLines.scan(spark, files, dialect.splitHint,
+      stitchRecords(dialect))
 
   /** The files of `path` as a read under `dialect` sees them: cut after
     * each file's `skipLines` and header line, decoded with the dialect's
@@ -140,14 +149,14 @@ object CsvSource {
     * ORDER — the reference's implicit serial-column assignment, made
     * explicit. Load order = the SOURCE order of the path list (listed
     * entries in order, glob matches name-sorted within their entry —
-    * [[SkipLines.enumerateFiles]]), then byte offset within each file.
-    * The ordering columns are free (TextInputFormat record keys); the
-    * numbering itself is a row_number over an un-partitioned window,
-    * i.e. a single-reducer sort of NARROW rows — inherent to any total
-    * sequence assignment (PG's serial is just as sequential). For wide
-    * corpora prefer per-file sequences or zipWithIndex; for the
-    * reference's use case (serial PKs on file loads) this is the exact
-    * semantics. */
+    * [[SkipLines.enumerateFiles]]), then record order within each file:
+    * the scan's splits are in that order, so a row's (split, position)
+    * id orders it. The numbering itself is a row_number over an
+    * un-partitioned window, i.e. a single-reducer sort of NARROW rows —
+    * inherent to any total sequence assignment (PG's serial is just as
+    * sequential). For wide corpora prefer per-file sequences or
+    * zipWithIndex; for the reference's use case (serial PKs on file
+    * loads) this is the exact semantics. */
   def readWithSerial(spark: SparkSession, path: String,
                      dialect: CsvDialect, fieldNames: Seq[String],
                      serialCol: String = "__serial"): DataFrame = {
@@ -155,22 +164,18 @@ object CsvSource {
     require(!fieldNames.contains(serialCol),
       s"field list already contains $serialCol")
     val files = heads(spark, path, dialect)
-    val fileIdx = files.files.map(_.path).zipWithIndex.toMap
-    require(fileIdx.nonEmpty, s"no files match $path")
-    val lines = SkipLines.linesWithPosition(spark, files,
-      stitch = if (files.delimiter.isEmpty) stitchRecords(dialect) else null)
-    val parsed = lines
+    require(files.files.nonEmpty, s"no files match $path")
+    // each split is one partition, in source order: the id orders rows
+    // by split, then by position within it
+    val parsed = scan(spark, files, dialect.copy(splitHint = 1))
+      .frame(spark)
+      .withColumn("__pos", monotonically_increasing_id())
       .filter(octet_length(col("value")) > 0)
-      .filter(!col("__bad")) // undecodable rows are rejects, not data
-      .select(col("__file"), col("__off"),
-        graft.functions.StringExpressions
-          .csvParseLine(col("value"), dialect).as("__fields"))
+      .filter(col("__bad").isNull) // undecodable rows are rejects, not data
+      .select(col("__pos"), graft.functions.StringExpressions
+        .csvParseLine(col("value"), dialect).as("__fields"))
       .filter(col("__fields").isNotNull)
-    // the scan reads exactly the listed files (a split outside the
-    // listing fails the scan), so every row has its file's index
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(element_at(typedlit(fileIdx), col("__file")).asc,
-        col("__off"))
+    val w = org.apache.spark.sql.expressions.Window.orderBy(col("__pos"))
     parsed
       .withColumn(serialCol, row_number().over(w).cast("long"))
       .select(fieldNames.zipWithIndex.map { case (nm, i) =>
@@ -241,42 +246,40 @@ object CsvSource {
     inQuote
   }
 
-  /** Partition-local record reassembly for the line-oriented scan: a
+  /** Split-local record reassembly for the line-oriented scan: a
     * line ending inside an open quote absorbs following lines (newlines
     * restored as data) until the quote closes — quoted embedded
     * newlines load (tests/csv/embedded-newline) WITHOUT giving up the
-    * splittable line reader. A record left open at the partition end
+    * splittable line reader. A record left open at the split end
     * (it straddled a split boundary, or the file ended mid-quote) is
     * emitted as-is: it parses malformed and lands in the reject file,
     * visible and replayable, never silently dropped. The joined record
-    * keeps the FIRST line's offset, so [[readWithSerial]] ordering and
-    * the skip-lines cut are unaffected. Plugged into
-    * [[SkipLines.linesWithPosition]] per partition by every CSV entry
-    * point ([[tagged]] and [[readWithSerial]] use the same function, so
-    * every scan sees identical records). */
-  private[sources] def stitchRecords(d: CsvDialect)
-      : Iterator[(String, Long, Array[Byte], Boolean)] =>
-        Iterator[(String, Long, Array[Byte], Boolean)] = {
+    * takes the first line's place, so [[readWithSerial]] ordering and
+    * the skip-lines cut are unaffected. Passed to [[SkipLines.scan]],
+    * which runs it over each split's records, by every CSV entry point
+    * ([[tagged]] and [[readWithSerial]] share [[scan]], so every read
+    * sees identical records). */
+  private[sources] def stitchRecords(d: CsvDialect): SkipLines.Stitch = {
     if (d.quote == '\u0000' || d.quote >= 0x80) identity
-    else it => new Iterator[(String, Long, Array[Byte], Boolean)] {
+    else it => new Iterator[(Array[Byte], Boolean)] {
       def hasNext: Boolean = it.hasNext
-      def next(): (String, Long, Array[Byte], Boolean) = {
+      def next(): (Array[Byte], Boolean) = {
         val first = it.next()
-        if (!quoteOpenAfter(first._3, first._3.length, d, false)) first
+        if (!quoteOpenAfter(first._1, first._1.length, d, false)) first
         else {
           val buf = new java.io.ByteArrayOutputStream(
-            first._3.length + 64)
-          buf.write(first._3, 0, first._3.length)
-          var bad = first._4
+            first._1.length + 64)
+          buf.write(first._1, 0, first._1.length)
+          var bad = first._2
           var open = true
           while (open && it.hasNext) {
-            val (_, _, nb, nbBad) = it.next()
+            val (nb, nbBad) = it.next()
             buf.write('\n')
             buf.write(nb, 0, nb.length)
             bad ||= nbBad
             open = quoteOpenAfter(nb, nb.length, d, true)
           }
-          (first._1, first._2, buf.toByteArray, bad)
+          (buf.toByteArray, bad)
         }
       }
     }
@@ -559,10 +562,10 @@ object FixedWidth {
   def tagged(spark: SparkSession, files: SkipLines.Heads,
              specs: Seq[FieldPos], splitHint: Int = 1): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val text = SkipLines.linesDF(spark, files, splitHint)
+    val text = SkipLines.scan(spark, files, splitHint).frame(spark)
       .withColumnRenamed("value", "__line")
     project(text, "__line", specs).select(specs.map(s => col(s.name)) :+
-      TaggedLines.tag(col("__bad"), col("__line")): _*)
+      TaggedLines.tag(col("__bad").isNotNull, col("__line")): _*)
   }
 
   /** Columnize an existing single-string column (used by both the file

@@ -7,11 +7,12 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-/** How one database table or set of self-describing files is read,
-  * decided once by its source's `scan` (the ctid or leaf ranges of
-  * [[PgWireSource]], the key ranges of [[MySqlWireSource]] and
-  * [[MssqlWireSource]], the B-tree subtrees of [[SqliteSource]], one
-  * file each for [[DbfSource]] and [[IxfSource]]). Each split is opened
+/** How one database table or set of files is read, decided once by its
+  * source's `scan` (the ctid or leaf ranges of [[PgWireSource]], the key
+  * ranges of [[MySqlWireSource]] and [[MssqlWireSource]], the B-tree
+  * subtrees of [[SqliteSource]], one file each for [[DbfSource]] and
+  * [[IxfSource]], byte ranges of the files for the line formats'
+  * [[SkipLines]]). Each split is opened
   * by `open` into a stream of catalyst-form rows: one `UTF8String` or
   * null per column (fidelity mode: the cast engine types the values
   * downstream).
@@ -41,28 +42,30 @@ final case class ScanPlan[S](
     * executor-side and consumed as a stream, its rows entering the plan
     * through the internal-row scan (no `Row` or encoder pass per row).
     * The source closes when its stream drains and, as a backstop for a
-    * task that stops early (limit, failure), when the task completes. */
+    * task that stops early (limit, failure), when the task completes.
+    * No split (an empty directory) reads no row. */
   def frame(spark: SparkSession): DataFrame = {
     val open = this.open // capture the function, not the plan
-    val rdd = spark.sparkContext
-      .parallelize(splits, splits.length)
-      .mapPartitions { it =>
-        it.flatMap { split =>
-          val s = open(split)
-          val tc = org.apache.spark.TaskContext.get()
-          if (tc != null) tc.addTaskCompletionListener[Unit](_ => s.close())
-          new Iterator[InternalRow] {
-            private var closed = false
-            override def hasNext: Boolean = {
-              val h = s.rows.hasNext
-              if (!h && !closed) { closed = true; s.close() }
-              h
+    val rdd =
+      if (splits.isEmpty) spark.sparkContext.emptyRDD[InternalRow]
+      else spark.sparkContext.parallelize(splits, splits.length)
+        .mapPartitions { it =>
+          it.flatMap { split =>
+            val s = open(split)
+            val tc = org.apache.spark.TaskContext.get()
+            if (tc != null) tc.addTaskCompletionListener[Unit](_ => s.close())
+            new Iterator[InternalRow] {
+              private var closed = false
+              override def hasNext: Boolean = {
+                val h = s.rows.hasNext
+                if (!h && !closed) { closed = true; s.close() }
+                h
+              }
+              override def next(): InternalRow =
+                new GenericInternalRow(s.rows.next())
             }
-            override def next(): InternalRow =
-              new GenericInternalRow(s.rows.next())
           }
         }
-      }
     val schema = StructType(columns.map(n =>
       StructField(n, StringType, nullable = true)))
     org.apache.spark.sql.graft.FunctionInstaller

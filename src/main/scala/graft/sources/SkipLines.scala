@@ -1,37 +1,40 @@
 package graft.sources
 
+import java.nio.charset.{CharacterCodingException, Charset}
 import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.hadoop.io.{LongWritable, Text}
-import org.apache.hadoop.mapred.{FileInputFormat, FileSplit, JobConf,
-  TextInputFormat}
-import org.apache.spark.rdd.{HadoopRDD, RDD}
+import org.apache.hadoop.io.compress.CompressionCodecFactory
+import org.apache.hadoop.mapred.{FileSplit, LineRecordReader}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.unsafe.types.UTF8String
 
-/** Per-FILE head-line skipping for line-oriented sources — the reference's
-  * `skip lines`/`skip header` semantics (src/sources/csv/csv.lisp:84-127:
-  * each file of a multi-file source drops its own preamble).
+/** The read core of the line formats (CSV, COPY TEXT, fixed-width), with
+  * the reference's per-FILE head-line skipping (`skip lines`/`skip
+  * header`, src/sources/csv/csv.lisp:84-127: each file of a multi-file
+  * source drops its own preamble).
   *
-  * Scale-correct implementation: the driver lists the input files once
-  * ([[enumerateFiles]]) and opens each at most once ([[heads]]), reading
-  * only its first lines: the byte offset where real data starts (cheap:
-  * preambles are short, file counts are bounded) and the first records
-  * after the skip — the sample a reader guesses a dialect from or takes
-  * its column names from (the reference's csv-guess.lisp sample). Then a
-  * single distributed TextInputFormat pass over the listed files filters
-  * records by their native byte-offset keys and decodes each file with
-  * its own charset. No global ordering assumptions — works for files
-  * larger than one split, any partition packing order, and thousands of
-  * files. (Not applicable to compressed inputs, whose record keys are not
-  * byte offsets.)
+  * The driver lists the input files once ([[enumerateFiles]]) and opens
+  * each at most once ([[heads]]), reading only its first lines: the byte
+  * offset where real data starts (cheap: preambles are short, file counts
+  * are bounded) and the first records after the skip — the sample a
+  * reader guesses a dialect from or takes its column names from (the
+  * reference's csv-guess.lisp sample). [[scan]] then plans the read of
+  * the listed files as a [[ScanPlan]] of byte-range splits, each keeping
+  * the records at or past its file's cut and decoding them with the
+  * file's charset. No global ordering assumptions — works for files
+  * larger than one split and for thousands of files. (Not applicable to
+  * compressed inputs, whose cuts are not byte offsets of the records.)
   */
 object SkipLines {
 
-  /** One listed input file as the driver read it: its qualified path and
-    * byte length, the charset its lines decode with, the byte offset the
-    * scan keeps records from, and its first records after the skip. */
-  final case class HeadFile(path: String, length: Long, charset: String,
-                            cut: Long, records: Seq[String])
+  /** One listed input file as the driver read it: its qualified path,
+    * byte length and block size, the charset its lines decode with, the
+    * byte offset the scan keeps records from, and its first records
+    * after the skip. */
+  final case class HeadFile(path: String, length: Long, blockSize: Long,
+                            charset: String, cut: Long,
+                            records: Seq[String])
 
   /** The files of one line-format read, in source order, and the record
     * terminator their cuts and records were found with (`lines
@@ -151,7 +154,8 @@ object SkipLines {
           }
         } finally in.close()
       }
-      HeadFile(p.toString, st.getLen, cs, cut, records.result())
+      HeadFile(p.toString, st.getLen, st.getBlockSize, cs, cut,
+        records.result())
     }
     Heads(files, delimiter)
   }
@@ -162,142 +166,120 @@ object SkipLines {
     * serial-id contract the regress goldens check. */
   private val MinSplitBytes = 4L << 20
 
-  /** Per-partition record-reassembly hook: receives the split's
-    * (file, offset, utf8-bytes, bad) line tuples in order and may join
-    * lines into records (CSV quoted embedded newlines —
-    * [[CsvSource.stitchRecords]]). Identity when null. */
-  type Stitch = Iterator[(String, Long, Array[Byte], Boolean)] =>
-    Iterator[(String, Long, Array[Byte], Boolean)]
+  /** Per-split record-reassembly hook: receives the split's (utf8-bytes,
+    * bad) records in order and may join lines into records (CSV quoted
+    * embedded newlines — [[CsvSource.stitchRecords]]). */
+  type Stitch = Iterator[(Array[Byte], Boolean)] =>
+    Iterator[(Array[Byte], Boolean)]
 
-  /** Like [[linesDF]], but keeping each line's provenance: (file, off,
-    * value, __bad) where `off` is the record's native byte offset.
-    * (file, off) is a total order over the input in FILE ORDER — the
-    * load order the reference gets implicitly from sequential reads,
-    * and the basis for serial-column assignment. Costs nothing extra:
-    * the offsets are the TextInputFormat record keys either way.
+  /** One byte range of a listed file, read from `start` for `length`
+    * bytes; records before the file's `cut` are dropped, the rest decode
+    * with `charset`. */
+  final case class LineSplit(path: String, start: Long, length: Long,
+                             cut: Long, charset: String)
+
+  /** Marks a record whose bytes its charset could not decode. */
+  private val BadMark = UTF8String.fromString("t")
+
+  /** The read of `heads`' files: two string columns, `value` (the
+    * record) and `__bad` (null for a line that decodes strictly with
+    * its file's charset). The splits are byte ranges of the listed
+    * files in source order, so the split index is the load order.
     *
-    * Reads exactly `files`' listed files, each from its cut and with its
-    * charset, splitting records on `files.delimiter` — Hadoop's
-    * record.delimiter keeps the scan splittable; the conf string reaches
-    * the reader as UTF-8 bytes, so non-ASCII terminators require a UTF-8
-    * source. */
-  def linesWithPosition(spark: SparkSession, files: Heads,
-                        splitHint: Int = 1, stitch: Stitch = null)
-      : org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(
-      files.files.map(f => f.path -> (f.cut, f.charset)).toMap)
-    // minPartitions governs FileInputFormat's goalSize (= total/min):
-    // the hadoopRDD DEFAULT of 2 splits even a 300-byte inline file
-    // into two concurrent tasks — and two COPY tasks interleave PG
-    // serial-default assignment, breaking the reference's file-order
-    // ids (csv-trim-extra-blanks golden). So: 1 unless the caller asks
-    // for write parallelism (the DSL `workers` option — the
-    // reference's concurrent COPY writers), and even then never below
-    // [[MinSplitBytes]] per split, so sub-4MB fixtures stay one
-    // in-order task. Files beyond the 32 MB block size still split at
-    // block boundaries regardless; scan parallelism at scale is
-    // unchanged.
+    * Splits follow Hadoop FileInputFormat's rule over the listing:
+    * goal = total / minParts, a file splits at the smaller of the goal
+    * and its block size, a remainder up to 1.1× a split stays whole, a
+    * compressed file is one split and an empty one none (Spark's
+    * `spark.hadoopRDD.ignoreEmptySplits`). minParts is 1 unless the
+    * caller asks for write parallelism (the DSL `workers` option — the
+    * reference's concurrent COPY writers), and even then never below
+    * [[MinSplitBytes]] per split: two COPY tasks over a 300-byte inline
+    * file would interleave PG serial-default assignment and break the
+    * reference's file-order ids (csv-trim-extra-blanks golden).
+    *
+    * Each split opens a Hadoop `LineRecordReader` over its range, with
+    * the UTF-8 bytes of `heads.delimiter` as the record terminator (so
+    * non-ASCII terminators require a UTF-8 source): a split leaves the
+    * record its start falls in to the split before it, and finishes the
+    * record its end falls in.
+    * Per record, in order:
+    *  - records before the file's cut (its skipped and header lines)
+    *    are dropped;
+    *  - under a custom terminator a record of only CR/LF bytes is
+    *    dropped: a file whose records end "data¶\n" leaves a newline-only
+    *    remainder between the last terminator and EOF, formatting exactly
+    *    as blank lines are under the default terminator (COVERAGE.md
+    *    "lines terminated by": quote a bare-newline field to load it);
+    *  - STRICT decode: bytes the charset cannot represent make the row
+    *    bad (the reference's decoder errors and routes the row to
+    *    rejects — csv-error.load's 'héhé' line under encoding 'ascii');
+    *    silent replacement would load mojibake. A UTF-8 line is only
+    *    checked byte-wise ([[isWellFormedUtf8]]) and travels as its own
+    *    bytes; a bad one reads back replacement-decoded. Other charsets
+    *    transcode with one decoder per split;
+    *  - `stitch` joins the split's records (a split never spans files).
+    */
+  def scan(spark: SparkSession, heads: Heads, splitHint: Int = 1,
+           stitch: Stitch = identity): ScanPlan[LineSplit] = {
+    val total = heads.files.map(_.length).sum
     val minParts =
-      if (splitHint <= 1) 1
-      else math.min(splitHint.toLong,
-        math.max(1L, files.files.map(_.length).sum / MinSplitBytes)).toInt
-    // no file (an empty directory) reads no line; otherwise one per-read
-    // JobConf over the listed files (setting the delimiter on the
-    // session's shared hadoopConfiguration would race concurrent scans)
-    val kept: RDD[(String, Long, Array[Byte], Boolean)] =
-      if (files.files.isEmpty) spark.sparkContext.emptyRDD
+      if (splitHint <= 1) 1L
+      else math.min(splitHint.toLong, math.max(1L, total / MinSplitBytes))
+    val goal = total / minParts
+    val codecs = new CompressionCodecFactory(
+      spark.sparkContext.hadoopConfiguration)
+    val splits = heads.files.flatMap { f =>
+      def split(start: Long, length: Long) =
+        LineSplit(f.path, start, length, f.cut, f.charset)
+      if (f.length == 0) Nil
+      else if (codecs.getCodec(new Path(f.path)) != null)
+        Seq(split(0, f.length))
       else {
-        val jc = new JobConf(spark.sparkContext.hadoopConfiguration)
-        files.delimiter.foreach(
-          jc.set("textinputformat.record.delimiter", _))
-        FileInputFormat.setInputPaths(jc,
-          files.files.map(f => new Path(f.path)): _*)
-        spark.sparkContext.hadoopRDD(jc, classOf[TextInputFormat],
-          classOf[LongWritable], classOf[Text], minParts)
-          .asInstanceOf[HadoopRDD[LongWritable, Text]]
-          .mapPartitionsWithInputSplit { (split, it) =>
-          val file = split.asInstanceOf[FileSplit].getPath.toString
-          val (cut, cs) = bc.value.getOrElse(file,
-            throw new IllegalStateException(
-              s"split file missing from the listing: $file"))
-          // STRICT per-line decode: bytes the declared charset cannot
-          // represent make the ROW malformed (the reference's decoder
-          // errors and routes the row to rejects — csv-error.load's
-          // 'héhé' line under encoding 'ascii'); silent replacement
-          // would load mojibake. Failed lines are flagged with an
-          // out-of-band `__bad` boolean (an in-band string sentinel would
-          // misclassify a legitimate line starting with that character —
-          // even noncharacters like U+FFFF are encodable in valid UTF-8),
-          // and `value` carries the replacement-decoded text so the reject
-          // scan can still surface the original-ish row.
-          //
-          // `value` travels as UTF-8 BYTES (binary, cast to string below —
-          // a zero-copy wrap): for UTF-8 input the strict check is a pure
-          // byte-level well-formedness scan ([[isWellFormedUtf8]], pinned
-          // to the JDK decoder's judgments by SkipLinesSpec), so the line
-          // is never decoded to a java String at all; other charsets pay
-          // the unavoidable transcode. A bad UTF-8 row keeps its raw
-          // bytes — reading them back as a string replacement-decodes,
-          // exactly what the reject file carried before.
-          if (cs.equalsIgnoreCase("UTF-8") || cs.equalsIgnoreCase("utf8")) {
-            it.collect {
-              case (off, line) if off.get() >= cut =>
-                val bytes = java.util.Arrays.copyOfRange(
-                  line.getBytes, 0, line.getLength)
-                (file, off.get(), bytes,
-                  !isWellFormedUtf8(bytes, 0, bytes.length))
-            }
-          } else {
-            val charset = java.nio.charset.Charset.forName(cs)
-            // ONE decoder per partition (the convenience decode() resets
-            // it each call) — per-line construction would allocate on the
-            // scan's hottest path.
-            val decoder = charset.newDecoder()
-            it.collect {
-              case (off, line) if off.get() >= cut =>
-                val (decoded, bad) =
-                  try (decoder.decode(java.nio.ByteBuffer.wrap(line.getBytes,
-                    0, line.getLength)).toString, false)
-                  catch {
-                    case _: java.nio.charset.CharacterCodingException =>
-                      (new String(line.getBytes, 0,
-                        line.getLength, charset), true)
-                  }
-                (file, off.get(), decoded.getBytes(UTF_8), bad)
-            }
+        val size = math.max(1L, math.min(goal, f.blockSize))
+        val out = Seq.newBuilder[LineSplit]
+        var left = f.length
+        while (left.toDouble / size > 1.1) {
+          out += split(f.length - left, size)
+          left -= size
+        }
+        (out += split(f.length - left, left)).result()
+      }
+    }
+    val conf = DbfSource.hadoopConfBroadcast(spark)
+    val delim = heads.delimiter.map(_.getBytes(UTF_8)).orNull
+    val open: LineSplit => ScanPlan.Stream = { s =>
+      ScanPlan.opened(new LineRecordReader(conf.value.value,
+          new FileSplit(new Path(s.path), s.start, s.length,
+            Array.empty[String]), delim)) { reader =>
+        val utf8 = s.charset.equalsIgnoreCase("UTF-8") ||
+          s.charset.equalsIgnoreCase("utf8")
+        val charset = Charset.forName(s.charset)
+        val decoder = charset.newDecoder()
+        // the reader fills key and line in place: each stage reads them
+        // before the next record is fetched
+        val key = new LongWritable
+        val line = new Text
+        val records = Iterator.continually(reader.next(key, line))
+          .takeWhile(identity)
+          .filter(_ => key.get >= s.cut && (delim == null || line.getBytes
+            .iterator.take(line.getLength).exists(b => b != '\n' && b != '\r')))
+          .map { _ =>
+            val bytes = java.util.Arrays.copyOf(line.getBytes, line.getLength)
+            if (utf8) (bytes, !isWellFormedUtf8(bytes, 0, bytes.length))
+            else
+              try (decoder.decode(java.nio.ByteBuffer.wrap(bytes)).toString
+                .getBytes(UTF_8), false)
+              catch {
+                case _: CharacterCodingException =>
+                  (new String(bytes, charset).getBytes(UTF_8), true)
+              }
           }
+        stitch(records).map { case (bytes, bad) =>
+          Array[Any](UTF8String.fromBytes(bytes), if (bad) BadMark else null)
         }
       }
-    // custom-terminator artifact records: a file whose records end
-    // "data¶\n" leaves a newline-only remainder between the last
-    // terminator and EOF (or between records when the author also
-    // breaks lines visually) — it is formatting, not data, exactly as
-    // blank lines are under the default terminator. DOCUMENTED RULE
-    // (COVERAGE.md "lines terminated by"): a record consisting SOLELY
-    // of \r/\n bytes is always formatting and never loads — a
-    // legitimate record whose only field is bare newline data cannot
-    // be distinguished from visual formatting at the record-splitter
-    // level (quote it to load it; the quoted form is not newline-only)
-    val cleaned =
-      if (files.delimiter.isEmpty) kept
-      else kept.filter { case (_, _, bytes, _) =>
-        var i = 0
-        var data = false
-        while (i < bytes.length && !data) {
-          data = bytes(i) != '\n'.toByte && bytes(i) != '\r'.toByte
-          i += 1
-        }
-        data
-      }
-    val stitched =
-      if (stitch == null) cleaned
-      // TextInputFormat splits never span files, so a partition's
-      // lines all belong to one file and in-order reassembly is sound
-      else cleaned.mapPartitions(stitch(_), preservesPartitioning = true)
-    stitched.toDF("__file", "__off", "value", "__bad")
-      .withColumn("value", org.apache.spark.sql.functions.col("value")
-        .cast(org.apache.spark.sql.types.StringType))
+    }
+    ScanPlan(Seq("value", "__bad"), splits, open)
   }
 
   /** RFC 3629 UTF-8 well-formedness (no overlongs, no surrogates,
@@ -336,18 +318,6 @@ object SkipLines {
     }
     true
   }
-
-  /** The lines of `files` from each file's cut, as (value, __bad),
-    * decoded STRICTLY with each file's charset (any ASCII-compatible
-    * charset: records still split on `\n` bytes). `__bad` marks rows
-    * whose bytes the charset could not decode \u2014 the SAME reject
-    * contract with or without skip lines, UTF-8 included (a
-    * spark.read.textFile fast path would decode leniently and silently
-    * load U+FFFD mojibake). */
-  def linesDF(spark: SparkSession, files: Heads, splitHint: Int = 1,
-              stitch: Stitch = null): org.apache.spark.sql.DataFrame =
-    linesWithPosition(spark, files, splitHint, stitch)
-      .select("value", "__bad")
 }
 
 /** The tagged frame every line reader ([[CsvSource]], [[CopyText]],

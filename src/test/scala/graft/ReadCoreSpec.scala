@@ -4,11 +4,12 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Every source that is not line-based reads through
-  * [[graft.sources.ScanPlan]], and a self-describing file's header is
-  * read once, by its source's `scan`. The line formats list their files
-  * once ([[graft.sources.SkipLines.enumerateFiles]]) and read their
-  * heads on the driver ([[graft.sources.SkipLines.heads]]). A database
+/** Every source reads through [[graft.sources.ScanPlan]], and a
+  * self-describing file's header is read once, by its source's `scan`.
+  * The line formats list their files once
+  * ([[graft.sources.SkipLines.enumerateFiles]]), read their heads on the
+  * driver ([[graft.sources.SkipLines.heads]]) and their lines through
+  * [[graft.sources.SkipLines.scan]]. A database
   * table's size comes with its catalog read, never from a query of its
   * own. */
 class ReadCoreSpec extends AnyFunSuite {
@@ -28,6 +29,18 @@ class ReadCoreSpec extends AnyFunSuite {
     val hits = for {
       p <- files
       needle <- Seq("format(\"binaryFile\")", "createDataFrame(")
+      if text(p).contains(needle)
+    } yield s"$p: $needle"
+    assert(hits.isEmpty, s"a second read core: $hits")
+  }
+
+  test("graft.sources has no Hadoop RDD read: no hadoopRDD, JobConf or " +
+    "mapPartitionsWithInputSplit") {
+    val files = scalaFiles("src/main/scala/graft/sources")
+    assert(files.exists(_.endsWith("SkipLines.scala")), files)
+    val hits = for {
+      p <- files
+      needle <- Seq("hadoopRDD(", "JobConf", "mapPartitionsWithInputSplit")
       if text(p).contains(needle)
     } yield s"$p: $needle"
     assert(hits.isEmpty, s"a second read core: $hits")

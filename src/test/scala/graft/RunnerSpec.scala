@@ -502,6 +502,20 @@ class RunnerSpec extends SparkSpec {
       (1, Seq("1\tab", "2\tcd")))
   }
 
+  test("LOAD CSV HAVING FIELDS and LOAD COPY over an empty directory " +
+    "load 0 rows") {
+    val dir = Files.createTempDirectory("runner-empty").toFile
+    def rows(load: String): Seq[Long] =
+      new Runner((_, _) => (), RunnerSpec.endpoint).runFile(spark, load)
+        .map(_.rows)
+    assert(rows(
+      s"""LOAD CSV FROM '${dir.getAbsolutePath}' HAVING FIELDS (k, v)
+          INTO postgresql:///t TARGET TABLE e;""") == Seq(0L))
+    assert(rows(
+      s"""LOAD COPY FROM '${dir.getAbsolutePath}'
+          INTO postgresql:///t TARGET TABLE e;""") == Seq(0L))
+  }
+
   test("the column count comes from the lines after skip header") {
     val dir = Files.createTempDirectory("runner-heads").toFile
     // a one-field preamble two lines long, then three-field rows

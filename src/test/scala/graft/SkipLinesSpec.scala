@@ -19,8 +19,8 @@ class SkipLinesSpec extends SparkSpec {
   /** The decodable lines of `path` after each file's first `skip`. */
   private def lines(path: String, skip: Int, splitHint: Int = 1) = {
     import spark.implicits._
-    SkipLines.linesDF(spark, SkipLines.heads(spark, path, skip), splitHint)
-      .filter(!org.apache.spark.sql.functions.col("__bad"))
+    SkipLines.scan(spark, SkipLines.heads(spark, path, skip), splitHint)
+      .frame(spark).filter(org.apache.spark.sql.functions.col("__bad").isNull)
       .select("value").as[String]
   }
 
@@ -117,8 +117,39 @@ class SkipLinesSpec extends SparkSpec {
     assert(parts == 2, s"9 MB at hint 8 must size-cap to 2 splits, got $parts")
     // no hint: one split regardless (sub-block file)
     assert(lines(big, 0).rdd.getNumPartitions == 1)
+    // an empty file: no split, no task
+    val empty = tmpDir("e.txt" -> "")
+    assert(SkipLines.scan(spark, SkipLines.heads(spark, empty)).splits.isEmpty)
     // rows identical across split settings
     assert(lines(big, 0, 8).count() == 90000L)
+  }
+
+  test("a file read as two splits yields the one-split read's records, " +
+    "in order: CRLF lines, a multi-byte terminator and skip header") {
+    // ~8.8 MB of equal records after a first record two bytes longer:
+    // without a header line the two-split boundary (half the file)
+    // falls between the last two bytes of a record's terminator
+    def check(name: String, header: String, end: String,
+              delimiter: Option[String], skipHeader: Int): Unit = {
+      val recs = (0 until 90000).map(i =>
+        (if (i == 0) "xy" else "") + f"$i%08d" + "z" * 88)
+      val dir = tmpDir(name -> (header + recs.map(_ + end).mkString))
+      val h = SkipLines.heads(spark, s"$dir/$name", header = skipHeader,
+        delimiter = delimiter)
+      def read(hint: Int) = {
+        val plan = SkipLines.scan(spark, h, hint)
+        (plan.splits.length,
+          plan.frame(spark).collect().map(_.getString(0)).toSeq)
+      }
+      val (oneSplit, one) = read(1)
+      val (twoSplits, two) = read(2)
+      assert(oneSplit == 1 && twoSplits == 2, s"$name: $oneSplit, $twoSplits")
+      assert(one == recs, s"$name: the one-split read")
+      assert(two == one, s"$name: the two-split read")
+    }
+    check("crlf.txt", "", "\r\n", None, 0)
+    check("pilcrow.txt", "", "\u00b6\n", Some("\u00b6\n"), 0)
+    check("header.txt", "id,name\n", "\n", None, 1)
   }
 
   test("a guessed CSV dialect keeps the command's workers: 9 MB at " +
@@ -187,9 +218,9 @@ class SkipLinesSpec extends SparkSpec {
     out.write(Array[Byte]('2', ',', 0xC3.toByte, 0x28, '\n')) // bad cont.
     out.write("3,fine\n".getBytes("UTF-8"))
     out.close()
-    val rows = SkipLines.linesDF(spark,
-        SkipLines.heads(spark, f.getAbsolutePath))
-      .collect().map(r => (r.getString(0), r.getBoolean(1))).toSeq
+    val rows = SkipLines.scan(spark,
+        SkipLines.heads(spark, f.getAbsolutePath)).frame(spark)
+      .collect().map(r => (r.getString(0), !r.isNullAt(1))).toSeq
     assert(rows.count(_._2) == 1)
     assert(rows.filter(!_._2).map(_._1).sorted == Seq("1,ok", "3,fine"))
     // the bad row's string form replacement-decodes
@@ -230,7 +261,7 @@ class SkipLinesSpec extends SparkSpec {
       (16L, Seq("nom|ville"))))
     assert(h.records.length == 3)
     // the scan starts at each cut and decodes with the same charsets
-    assert(SkipLines.linesDF(spark, h).collect().map(_.getString(0))
+    assert(SkipLines.scan(spark, h).frame(spark).collect().map(_.getString(0))
       .toSeq.sorted == Seq("1|Orléans", "2|Zürich"))
   }
 }

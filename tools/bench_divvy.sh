@@ -24,7 +24,7 @@ sed "s|{{PGURI}}|$PGURI|g" tools/bench_divvy.load \
   > /tmp/divvy_bench/divvy.load
 
 sbt -batch "package" >/dev/null
-JAR="$(ls target/scala-2.13/*.jar | head -1)"
+JAR="$(ls target/scala-2.13/pgloaderspark_2.13-*.jar | grep -v -- '-tests\.jar$' | head -1)"
 CLASSPATH="$JAR:$(sbt -batch --error 'print Runtime/fullClasspath' \
   | sed -n 's/^\* Attributed(\(.*\))$/\1/p' | grep -v 'scala-2.13/classes' \
   | paste -sd: -)"

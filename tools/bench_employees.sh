@@ -28,7 +28,7 @@ sed -e "s|{{PGURI}}|$PGURI|g" -e "s|{{EXTRAOPTS}}|${EXTRA_WITH:-}|g" \
 # build + warm the assembly classpath once, outside the timed runs:
 # the reference times `java -jar pgloader.jar`, not its build
 sbt -batch "package" >/dev/null
-JAR="$(ls target/scala-2.13/*.jar | head -1)"
+JAR="$(ls target/scala-2.13/pgloaderspark_2.13-*.jar | grep -v -- '-tests\.jar$' | head -1)"
 # AppCDS refuses directory classpath entries — use the packaged jar
 CLASSPATH="$JAR:$(sbt -batch --error 'print Runtime/fullClasspath' \
   | sed -n 's/^\* Attributed(\(.*\))$/\1/p' | grep -v 'scala-2.13/classes' \

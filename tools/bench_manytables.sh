@@ -52,7 +52,7 @@ LOAD DATABASE FROM $BASE/manysrc
 EOF
 
 sbt -batch "package" >/dev/null
-JAR="$(ls target/scala-2.13/*.jar | head -1)"
+JAR="$(ls target/scala-2.13/pgloaderspark_2.13-*.jar | grep -v -- '-tests\.jar$' | head -1)"
 CLASSPATH="$JAR:$(sbt -batch --error 'print Runtime/fullClasspath' \
   | sed -n 's/^\* Attributed(\(.*\))$/\1/p' | grep -v 'scala-2.13/classes' \
   | paste -sd: -)"

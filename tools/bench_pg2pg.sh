@@ -35,7 +35,7 @@ sed -e "s|{{SRCURI}}|$BASE/empsrc|g" -e "s|{{DSTURI}}|$BASE/empdst|g" \
   tools/bench_pg2pg.load > /tmp/pg2pg_bench/pg2pg.load
 
 sbt -batch "package" >/dev/null
-JAR="$(ls target/scala-2.13/*.jar | head -1)"
+JAR="$(ls target/scala-2.13/pgloaderspark_2.13-*.jar | grep -v -- '-tests\.jar$' | head -1)"
 CLASSPATH="$JAR:$(sbt -batch --error 'print Runtime/fullClasspath' \
   | sed -n 's/^\* Attributed(\(.*\))$/\1/p' | grep -v 'scala-2.13/classes' \
   | paste -sd: -)"
